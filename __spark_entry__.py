@@ -33,14 +33,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from adk_noui_vectordb_spark.operators import ann as _ann
-from adk_noui_vectordb_spark.operators import bloom as _bloom
-from adk_noui_vectordb_spark.operators import cagg as _cagg
-from adk_noui_vectordb_spark.operators import graph as _graph
 from adk_noui_vectordb_spark.operators import graph_ann as _gann
-from adk_noui_vectordb_spark.operators import layout as _layout
 from adk_noui_vectordb_spark.operators import dedup as _dedup
 from adk_noui_vectordb_spark.operators import embed as _embed
-from adk_noui_vectordb_spark.operators import multimodal as _mm
 from adk_noui_vectordb_spark.operators import hybrid as _hyb
 from adk_noui_vectordb_spark.operators import indexing as _idx
 from adk_noui_vectordb_spark.operators import invindex as _inv
@@ -48,7 +43,6 @@ from adk_noui_vectordb_spark.operators import knn as _knn
 from adk_noui_vectordb_spark.operators import quantize as _quant
 from adk_noui_vectordb_spark.operators import relational as _rel
 from adk_noui_vectordb_spark.operators import rollups as _roll
-from adk_noui_vectordb_spark.operators import sketches as _sketch
 from adk_noui_vectordb_spark.operators import temporal as _temporal
 from adk_noui_vectordb_spark.operators import textops as _text
 from adk_noui_vectordb_spark.operators.chunking import (
@@ -134,198 +128,6 @@ def _q_score_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING query under the batch oracle: run the watermarked tumbling
-    aggregation as a real Structured Streaming job (availableNow drains all
-    input, complete-mode memory sink), then return the sink table. The
-    DuckDB oracle is the identical batch SQL — streaming/batch equivalence
-    is part of the checked contract, not just a unit test."""
-    import tempfile
-    import uuid
-
-    from adk_noui_vectordb_spark.streaming.pipeline import stream_events_tumbling
-
-    name = f"tumbling_{uuid.uuid4().hex[:8]}"
-    q = stream_events_tumbling(spark, sf_dir, tempfile.mkdtemp(), name)
-    # availableNow drains all input and terminates; if it has not finished
-    # inside the bound, FAIL LOUDLY instead of returning a partially
-    # populated sink as if it were the answer.
-    if not q.awaitTermination(120):
-        q.stop()
-        raise TimeoutError(
-            "stream_events_tumbling did not drain within 120s; "
-            "refusing to read a partial memory sink"
-        )
-    return spark.sql(
-        f"SELECT window_start, event_type, n_events, total_value FROM {name}"
-    )
-
-
-def _q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING dedup under the batch oracle: drain the events table
-    through ``dropDuplicatesWithinWatermark`` (bounded per-key state) and
-    return the per-type deduplicated counts from the memory sink. The
-    testdata's event_ids are unique, so the result is deterministic and
-    the DuckDB twin is a plain COUNT(DISTINCT event_id) — the streaming
-    machinery (watermark, keyed state, availableNow drain) is what's
-    under test, same contract style as ``stream_tumbling_counts``."""
-    import tempfile
-    import uuid
-
-    from adk_noui_vectordb_spark.streaming.pipeline import stream_dedup_events
-
-    name = f"dedup_{uuid.uuid4().hex[:8]}"
-    q = stream_dedup_events(spark, sf_dir, tempfile.mkdtemp(), name)
-    if not q.awaitTermination(120):
-        q.stop()
-        raise TimeoutError(
-            "stream_dedup_events did not drain within 120s; "
-            "refusing to read a partial memory sink"
-        )
-    return spark.sql(f"SELECT event_type, n_events FROM {name}")
-
-
-def _q_stream_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUSTOM STATEFUL streaming operator under the batch oracle: drain
-    events through the ``applyInPandasWithState`` per-user running-total
-    operator and return each user's FINAL state (last update per user —
-    the update-mode sink may hold one row per micro-batch). Equivalent to
-    the batch per-user aggregate, which is the DuckDB twin; event values
-    are exact 2-dp decimals so the rounded sum is tie-free."""
-    import tempfile
-    import uuid
-
-    from pyspark.sql.window import Window
-
-    from adk_noui_vectordb_spark.streaming.pipeline import (
-        stream_user_running_totals,
-    )
-
-    name = f"totals_{uuid.uuid4().hex[:8]}"
-    q = stream_user_running_totals(spark, sf_dir, tempfile.mkdtemp(), name)
-    if not q.awaitTermination(120):
-        q.stop()
-        raise TimeoutError(
-            "stream_user_running_totals did not drain within 120s; "
-            "refusing to read a partial memory sink"
-        )
-    sink = spark.sql(f"SELECT user_id, n_events, total_value FROM {name}")
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    return (
-        sink.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("user_id", "n_events", "total_value")
-    )
-
-
-def _q_stream_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAM-STREAM time-range join under the batch oracle: purchases
-    joined to same-user clicks from the preceding hour, both sides
-    watermarked so buffered state is bounded. With a single availableNow
-    batch the watermark never evicts a valid match, so the sink equals
-    the batch join — the DuckDB twin. Timestamps compare at the us
-    truncation both engines share (see load_table's ts contract)."""
-    import tempfile
-    import uuid
-
-    from adk_noui_vectordb_spark.streaming.pipeline import (
-        stream_purchase_click_join,
-    )
-
-    name = f"rjoin_{uuid.uuid4().hex[:8]}"
-    q = stream_purchase_click_join(spark, sf_dir, tempfile.mkdtemp(), name)
-    if not q.awaitTermination(120):
-        q.stop()
-        raise TimeoutError(
-            "stream_purchase_click_join did not drain within 120s; "
-            "refusing to read a partial memory sink"
-        )
-    return spark.sql(f"SELECT p_id, c_id, p_user FROM {name}")
-
-
-def _q_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING funnel under the batch oracle: drain the per-user
-    applyInPandasWithState state machine (20th mode,
-    stream_funnel_progress), keep each user's LATEST emission, and roll
-    the sink up to the batch key's exact (stage, users, total_gap_s)
-    shape. The DuckDB twin is the identical batch funnel SQL
-    (_FUNNEL_SQL) — the streaming/batch-equivalence contract."""
-    import tempfile
-    import uuid
-
-    from adk_noui_vectordb_spark.streaming.pipeline import (
-        stream_funnel_progress,
-    )
-
-    name = f"funl_{uuid.uuid4().hex[:8]}"
-    q = stream_funnel_progress(spark, sf_dir, tempfile.mkdtemp(), name)
-    if not q.awaitTermination(120):
-        q.stop()
-        raise TimeoutError(
-            "stream_funnel_progress did not drain within 120s; "
-            "refusing to read a partial memory sink"
-        )
-    return spark.sql(
-        f"""
-        WITH latest AS (
-            -- fold update-mode re-emissions to the furthest state per
-            -- user: stage only advances, gap2/gap3 are write-once (max
-            -- ignores the NULLs of earlier-stage rows)
-            SELECT user_id, max(stage) AS stage, max(gap2_s) AS gap2_s,
-                   max(gap3_s) AS gap3_s
-            FROM {name} GROUP BY user_id
-        )
-        SELECT '1_view' AS stage, CAST(count(*) AS BIGINT) AS users,
-               CAST(0 AS BIGINT) AS total_gap_s FROM latest
-        UNION ALL
-        SELECT '2_click', CAST(count(*) AS BIGINT),
-               CAST(coalesce(sum(gap2_s), 0) AS BIGINT)
-        FROM latest WHERE stage >= 2
-        UNION ALL
-        SELECT '3_purchase', CAST(count(*) AS BIGINT),
-               CAST(coalesce(sum(gap3_s), 0) AS BIGINT)
-        FROM latest WHERE stage = 3
-        """
-    )
-
-
-def _q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING sessionization under the batch oracle: drain events
-    through the built-in ``session_window`` (30-min gap, calibrated to the
-    batch predicate — see stream_sessionize_events), then number each
-    user's sessions by start time so the output matches the batch
-    gaps-and-islands ordinal exactly. The DuckDB twin is the identical
-    batch sessionize SQL — the fifth streaming mode under the checked
-    streaming/batch-equivalence contract."""
-    import tempfile
-    import uuid
-
-    from pyspark.sql.window import Window
-
-    from adk_noui_vectordb_spark.streaming.pipeline import (
-        stream_sessionize_events,
-    )
-
-    name = f"sess_{uuid.uuid4().hex[:8]}"
-    q = stream_sessionize_events(spark, sf_dir, tempfile.mkdtemp(), name)
-    if not q.awaitTermination(120):
-        q.stop()
-        raise TimeoutError(
-            "stream_sessionize_events did not drain within 120s; "
-            "refusing to read a partial memory sink"
-        )
-    sink = spark.sql(
-        f"SELECT win_start, user_id, n_events, session_value FROM {name}"
-    )
-    w = Window.partitionBy("user_id").orderBy("win_start")
-    return sink.select(
-        "user_id",
-        F.row_number().over(w).cast("bigint").alias("session_id"),
-        "n_events",
-        "session_value",
-    )
-
-
 def _q_chunk_ast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real ``ast.parse`` extraction over the valid-Python derived corpus;
     the oracle predicts the exact rows arithmetically from the corpus
@@ -384,14 +186,13 @@ _CHECKED_R2 = frozenset({
     "diag_python_flakes", "knn_text_query", "knn_file_summary_query",
     "file_context", "ann_ivf_topk", "ann_lsh_topk", "bm25_topk",
     "hybrid_rrf_topk", "knn_int8_topk", "knn_int8_rerank",
-    "sketch_distinct_users", "multimodal_features", "multimodal_resize",
-    "multimodal_frames", "q1_pricing_summary", "q3_top_orders",
+    "q1_pricing_summary", "q3_top_orders",
     "q5_region_revenue", "q6_revenue_forecast", "q9_brand_profit",
     "q4_order_priority", "q14_promo_revenue", "q16_supplier_part_counts",
     "q18_large_orders", "q19_disjunctive_revenue", "window_topn_orders",
     "window_running_revenue", "customers_without_orders",
     "customers_with_high_value_orders", "events_tumbling_counts",
-    "events_sessionize", "events_sliding_counts", "stream_tumbling_counts",
+    "events_sessionize", "events_sliding_counts",
     "window_moving_avg", "rollup_segment_status", "salted_event_totals",
     "salted_skew_join", "pivot_event_matrix", "agg_correlation",
     "orders_above_avg", "events_by_dow", "agg_percentiles",
@@ -408,14 +209,14 @@ _CHECKED_R4 = frozenset({
     "embed_quantize_int8", "chunk_js_elements", "line_dedup_corpus",
     "pack_sequences", "redact_pii", "lm_perplexity_score", "mixture_sample",
     "bpe_pair_counts", "curate_corpus_full", "orc_roundtrip", "cluster_kmeans",
-    "pq_encode_rows", "knn_pq_topk", "knn_pq_rerank", "pagerank_trade_graph",
+    "pq_encode_rows", "knn_pq_topk", "knn_pq_rerank",
     "dedup_canonical_selection", "dedup_simhash_pairs", "ngram_jaccard_pairs",
     "simhash_signatures", "semdedup_prune", "index_pipeline",
     "q10_returned_revenue", "q12_ship_delay_priority",
     "q13_customer_distribution", "q17_small_qty_revenue",
     "q22_idle_customer_balance", "q2_min_cost_supplier", "q7_volume_shipping",
     "q8_market_share", "q11_important_stock", "q15_top_supplier",
-    "q20_excess_suppliers", "q21_waiting_suppliers", "stream_running_totals",
+    "q20_excess_suppliers", "q21_waiting_suppliers",
     "knn_topk", "knn_topk_filtered", "knn_batch_topk", "score_similarity_pairs",
     "filter_by_lang", "point_lookup", "agg_source_summary", "agg_docs_by_lang",
 })
@@ -424,12 +225,12 @@ _CHECKED_R4 = frozenset({
 # window entry except the retired no-oracle ann_lsh_topk).
 _CHECKED_R5 = frozenset({
     "asof_join_purchase_click", "range_join_bursts", "funnel_signup_purchase",
-    "retention_day_over_day", "sketch_value_quantiles", "stream_dedup_counts",
-    "stream_range_join", "stream_sessionize", "events_by_dow",
+    "retention_day_over_day",
+    "events_by_dow",
     "events_sessionize", "events_sliding_counts", "events_tumbling_counts",
     "pivot_event_matrix", "json_props_rollup", "salted_event_totals",
     "salted_skew_join", "setop_active_noncustomers", "upsert_latest_events",
-    "agg_collection_count", "stream_tumbling_counts", "sketch_distinct_users",
+    "agg_collection_count",
     "diag_python_syntax", "agg_job_totals", "filter_by_element_type",
     "filter_by_file", "filter_ext_dispatch", "chunk_fixed_words",
     "chunk_fixed_lines", "chunk_markdown_sections", "text_stats",
@@ -456,8 +257,8 @@ _CHECKED_R6 = frozenset({
     "knn_file_summary_query", "knn_int8_rerank", "knn_int8_topk",
     "knn_pq_rerank", "knn_pq_topk", "knn_text_query", "lang_id_ngram",
     "minhash_band_rows", "minhash_jaccard_estimate",
-    "minhash_signature_rows", "multimodal_features", "multimodal_frames",
-    "multimodal_resize", "pq_encode_rows", "project_element_ids",
+    "minhash_signature_rows",
+    "pq_encode_rows", "project_element_ids",
     "project_searchable_text", "project_truncate", "q1_pricing_summary",
     "q3_top_orders", "q5_region_revenue", "quality_repetition",
     "rp_lsh_band_rows", "semdedup_prune", "simhash_signatures",
@@ -470,22 +271,22 @@ _CHECKED_R6 = frozenset({
 _CHECKED_R7 = frozenset({
     "agg_correlation", "agg_percentiles", "ann_ivf_trained_topk",
     "ann_rp_lsh_multiprobe_topk", "ann_rp_lsh_topk", "basket_brand_lift",
-    "bloom_filter_orders", "bm25_topk_served", "chunk_js_elements",
+    "bm25_topk_served", "chunk_js_elements",
     "customers_with_high_value_orders", "customers_without_orders",
     "dedup_repeated_ngrams", "doc_token_entropy",
     "dup_cluster_size_histogram", "embed_dim_stats", "events_anomaly_zscore",
     "events_gap_stats", "events_rate_limited_sample",
     "histogram_order_totals", "hybrid_rrf_served_topk",
     "inverted_postings_rows", "knn_join_topk", "lm_bigram_score",
-    "multimodal_features", "normalize_text_corpus", "orders_above_avg",
+    "normalize_text_corpus", "orders_above_avg",
     "q14_promo_revenue", "q16_supplier_part_counts", "q18_large_orders",
     "q19_disjunctive_revenue", "q4_order_priority", "q6_revenue_forecast",
     "q9_brand_profit", "rollup_segment_status", "scd2_user_state_history",
-    "sketch_heavy_hitters", "sketch_user_overlap", "skew_key_profile",
-    "stream_dedup_counts", "stream_tumbling_counts", "trend_event_values",
-    "triangle_count_nations", "unpivot_event_matrix",
+    "skew_key_profile",
+    "trend_event_values",
+    "unpivot_event_matrix",
     "user_activity_profile", "window_moving_avg", "window_running_revenue",
-    "window_topn_orders", "window_trailing_value_sum", "zorder_events",
+    "window_topn_orders", "window_trailing_value_sum",
 })
 
 # Green (rows+schema+hash) in CORRECTNESS_r08.json — all 50 window keys,
@@ -501,14 +302,14 @@ _CHECKED_R8 = frozenset({
     "knn_batch_topk", "knn_join_topk", "knn_topk", "knn_topk_filtered",
     "line_dedup_corpus", "lm_perplexity_score", "mixture_sample",
     "ngram_jaccard_pairs", "orc_roundtrip", "pack_sequences",
-    "pagerank_trade_graph", "point_lookup", "q10_returned_revenue",
+    "point_lookup", "q10_returned_revenue",
     "q11_important_stock", "q12_ship_delay_priority",
     "q13_customer_distribution", "q15_top_supplier",
     "q17_small_qty_revenue", "q20_excess_suppliers",
     "q21_waiting_suppliers", "q22_idle_customer_balance",
     "q2_min_cost_supplier", "q7_volume_shipping", "q8_market_share",
     "quality_score", "redact_pii", "score_similarity_pairs",
-    "sketch_value_quantiles", "stream_running_totals", "text_stats",
+    "text_stats",
     "tfidf_top_terms", "token_count",
 })
 
@@ -532,8 +333,8 @@ _CHECKED_R9 = frozenset({
     "minhash_signature_rows", "pivot_event_matrix", "pq_encode_rows",
     "range_join_bursts", "retention_day_over_day", "rp_index_vec_rows",
     "salted_event_totals", "salted_skew_join", "setop_active_noncustomers",
-    "sketch_distinct_users", "split_assignment", "stratified_sample",
-    "stream_range_join", "stream_sessionize", "text_index_doc_map",
+    "split_assignment", "stratified_sample",
+    "text_index_doc_map",
     "upsert_latest_events", "winnow_fingerprints",
 })
 
@@ -551,14 +352,14 @@ _CHECKED_R10 = frozenset({
     "collection_query_topk", "corpus_diagnostics", "csv_roundtrip",
     "decontaminate_corpus", "dedup_gate_against_index",
     "dedup_gate_intra_batch", "dedup_simhash_pairs", "diag_python_flakes",
-    "docs_where_dsl_filter", "events_rollup_daily",
-    "events_rollup_type_daily", "fuzzy_topk_served",
+    "docs_where_dsl_filter",
+    "fuzzy_topk_served",
     "hybrid_rrf_served_topk", "inverted_postings_rows", "jsonl_roundtrip",
     "knn_join_ivf_topk", "knn_join_topk", "knn_truncated_rerank",
     "knn_where_dsl_topk", "phrase_topk_served", "prefix_topk_served",
     "project_element_ids", "project_searchable_text", "project_truncate",
     "proximity_topk_served", "quality_repetition", "search_facet_counts",
-    "search_highlight_served", "semdedup_prune", "shard_manifest_counts",
+    "search_highlight_served", "semdedup_prune",
     "simhash_signatures", "text_index_doc_map", "tokenize_bpe_encode",
 })
 
@@ -566,7 +367,7 @@ _CHECKED_R10 = frozenset({
 # whole r11 new-key cohort, and the rotated r6/r7 staleness cohorts).
 _CHECKED_R11 = frozenset({
     "ann_ivf_sampled_topk", "ann_ivf_topk", "ann_ivf_trained_topk",
-    "ann_ivfpq_sampled_topk", "ann_ivfpq_topk", "bloom_filter_orders",
+    "ann_ivfpq_sampled_topk", "ann_ivfpq_topk",
     "bm25_topk", "cap_docs_per_source", "chunk_js_elements",
     "collection_get_page2", "collection_get_where",
     "collection_query_ip_topk", "collection_query_topk",
@@ -577,12 +378,10 @@ _CHECKED_R11 = frozenset({
     "knn_int8_rerank", "knn_int8_topk", "knn_join_ivf_topk",
     "knn_join_topk", "knn_mmr_topk", "knn_text_query",
     "knn_where_dsl_topk", "lm_bigram_score", "msm_topk_served",
-    "multimodal_features", "multimodal_frames", "multimodal_resize",
     "normalize_text_corpus", "q14_promo_revenue",
     "q16_supplier_part_counts", "q18_large_orders", "q1_pricing_summary",
     "q3_top_orders", "q4_order_priority", "q5_region_revenue",
     "q6_revenue_forecast", "q9_brand_profit", "rp_lsh_band_rows",
-    "sketch_heavy_hitters", "sketch_user_overlap", "zorder_events",
 })
 
 # CORRECTNESS_r12.json: 50/50 green — the whole r12 new-key cohort
@@ -607,8 +406,8 @@ _CHECKED_R12 = frozenset({
     'hybrid_weighted_topk', 'knn_join_ivf_topk', 'msm_topk_served',
     'orders_above_avg', 'q19_disjunctive_revenue',
     'rollup_segment_status', 'scd2_user_state_history',
-    'skew_key_profile', 'stream_dedup_counts', 'stream_tumbling_counts',
-    'trend_event_values', 'triangle_count_nations',
+    'skew_key_profile',
+    'trend_event_values',
     'unpivot_event_matrix', 'window_moving_avg',
     'window_running_revenue', 'window_topn_orders',
     'window_trailing_value_sum',
@@ -633,9 +432,9 @@ _CHECKED_R13 = frozenset({
     "filter_by_lang", "filter_ext_dispatch", "hybrid_weighted_graph_topk",
     "knn_batch_topk", "knn_classify", "knn_topk", "knn_topk_filtered",
     "line_dedup_corpus", "lm_perplexity_score", "mixture_sample",
-    "orc_roundtrip", "pack_sequences", "pagerank_trade_graph",
+    "orc_roundtrip", "pack_sequences",
     "point_lookup", "quality_score", "redact_pii",
-    "score_similarity_pairs", "sketch_value_quantiles",
+    "score_similarity_pairs",
     "split_train_holdout", "text_stats", "tfidf_top_terms",
     "token_count", "user_activity_profile",
 })
@@ -663,7 +462,7 @@ _CHECKED_R14 = frozenset({
     "q15_top_supplier", "q17_small_qty_revenue", "q20_excess_suppliers",
     "q21_waiting_suppliers", "q22_idle_customer_balance",
     "q2_min_cost_supplier", "q7_volume_shipping", "q8_market_share",
-    "split_assignment", "stratified_sample", "stream_running_totals",
+    "split_assignment", "stratified_sample",
     "winnow_fingerprints",
 })
 
@@ -693,14 +492,16 @@ _CHECKED_R15 = frozenset({
     "minhash_jaccard_estimate", "pivot_event_matrix",
     "quality_repetition", "range_join_bursts", "retention_day_over_day",
     "rp_index_vec_rows", "salted_event_totals", "salted_skew_join",
-    "setop_active_noncustomers", "sketch_distinct_users",
-    "stream_range_join", "stream_sessionize", "tokenize_bpe_encode",
+    "setop_active_noncustomers",
+    "tokenize_bpe_encode",
     "upsert_latest_events",
 })
 
 # Latest green driver round per key — the freshness ranking queries()
 # sorts by (older green = more valuable re-check). Derived from the
-# _CHECKED sets; a key in several sets takes its newest round.
+# _CHECKED sets; a key in several sets takes its newest round. The sets
+# hold only keys still in the catalogue, so their per-round counts in the
+# comments above are the counts of the round, not of the set.
 _LATEST_GREEN: dict[str, int] = {}
 for _rnd, _s in (
     (1, _CHECKED_R1),
@@ -849,20 +650,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pq_encode_rows": _ann.pq_encode_rows,
         "knn_pq_topk": _ann.knn_pq_topk,
         "knn_pq_rerank": _ann.knn_pq_rerank,
-        "sketch_value_quantiles": _sketch.sketch_value_quantiles,
-        # r7: Misra-Gries mergeable heavy hitters (exact below capacity,
-        # like the HLL/GK sketches' contract)
-        "sketch_heavy_hitters": _sketch.sketch_heavy_hitters,
-        # r7: explicit Bloom runtime-filter join (no false negatives ->
-        # result equals the plain semi join the oracle runs)
-        "bloom_filter_orders": _bloom.bloom_filter_orders,
-        # r7: Z-order (Morton) clustering kernel — the multi-dimensional
-        # layout key behind ZORDER BY; exact integer bit interleave
-        "zorder_events": _layout.zorder_events,
-        # r10c: training-shard export manifest — salted-md5 balanced
-        # shard assignment, one map-side-combined aggregate
-        "shard_manifest_counts": _layout.shard_manifest_counts,
-        "pagerank_trade_graph": _graph.pagerank_customer_supplier,
         "stratified_sample": _text.stratified_sample,
         "split_assignment": _text.split_assignment,
         "diag_generic": _text.diag_generic,
@@ -1184,17 +971,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # r11: MMR diversified retrieval — greedy relevance/novelty
         # trade over the exact top-pool, unrolled-CTE oracle twin
         "knn_mmr_topk": _knn.knn_mmr_topk,
-        # mergeable sketches — exact (and oracle-checked) at test-SF
-        # cardinalities, approximate with pinned error bounds at scale
-        # (tests/test_sketches.py)
-        "sketch_distinct_users": _sketch.sketch_distinct_users,
-        # r7: pairwise audience overlap from MERGED sketches
-        # (inclusion-exclusion over hll_union) — no fact-table re-scan
-        "sketch_user_overlap": _sketch.sketch_user_overlap,
-        # multimodal plumbing (north star; mapInPandas over binary payloads)
-        "multimodal_features": _mm.multimodal_features,
-        "multimodal_resize": _mm.resize_images,
-        "multimodal_frames": _mm.sample_frames,
         # relational surface (extended engine)
         "q1_pricing_summary": _rel.q1_pricing_summary,
         "q3_top_orders": _rel.q3_top_orders,
@@ -1232,14 +1008,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_retention_cohorts": _rel.events_retention_cohorts,
         # r16: the revenue companion — cohort LTV curve in exact cents
         "events_cohort_revenue": _rel.events_cohort_revenue,
-        "stream_tumbling_counts": _q_stream_tumbling,
-        "stream_dedup_counts": _q_stream_dedup,
-        "stream_running_totals": _q_stream_running_totals,
-        "stream_range_join": _q_stream_range_join,
-        "stream_sessionize": _q_stream_sessionize,
-        # r16: the stateful per-user funnel state machine (20th
-        # mode) rolled up to the batch funnel's exact shape
-        "stream_funnel": _q_stream_funnel,
         "window_moving_avg": _rel.window_moving_avg,
         "rollup_segment_status": _rel.rollup_segment_status,
         "cube_status_priority": _rel.cube_status_priority,
@@ -1259,10 +1027,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "range_join_bursts": _temporal.range_join_bursts,
         "funnel_signup_purchase": _temporal.funnel_signup_purchase,
         "retention_day_over_day": _temporal.retention_day_over_day,
-        # r10: incrementally-maintained events rollup (the continuous-
-        # aggregate primitive) served from its versioned store
-        "events_rollup_daily": _cagg.events_rollup_daily,
-        "events_rollup_type_daily": _cagg.events_rollup_type_daily,
         # r7: per-series OLS drift trend from the closed-form moment
         # aggregates (regr_slope/intercept/r2), day-conditioned abscissa
         "trend_event_values": _temporal.trend_event_values,
@@ -1277,9 +1041,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "histogram_order_totals": _rel.histogram_order_totals,
         "events_anomaly_zscore": _rel.events_anomaly_zscore,
         # r7: skew detection (the measurement behind the salted_* ops)
-        # and the ordered-edge triangle kernel on the nation co-trade graph
         "skew_key_profile": _rel.skew_key_profile,
-        "triangle_count_nations": _graph.triangle_count_nations,
         # r7: reshape dual (UNPIVOT/melt) and the time-RANGE window frame
         "unpivot_event_matrix": _rel.unpivot_event_matrix,
         "window_trailing_value_sum": _rel.window_trailing_value_sum,
@@ -3274,8 +3036,7 @@ LIMIT 5
 """
 
 
-# Gaps-and-islands sessionization: shared verbatim by the batch
-# events_sessionize and streaming stream_sessionize oracles.
+# View -> click -> purchase funnel, each step within 24 h of the last.
 _FUNNEL_SQL = """
 WITH e AS (
     SELECT user_id, event_type, epoch_us(ts) * 1000 AS tn FROM events
@@ -3305,6 +3066,7 @@ SELECT '3_purchase', CAST(count(*) AS BIGINT),
        CAST(coalesce(sum((t3 - t1) // 1000000000), 0) AS BIGINT) FROM p
 """
 
+# Gaps-and-islands sessionization for the events_sessionize oracle.
 _SESSIONIZE_SQL = """
 WITH b AS (
     SELECT user_id, event_id, value, ts,
@@ -4247,39 +4009,6 @@ SELECT doc_id, CAST(n_words AS INTEGER) AS n_words,
        md5(enc) AS encoded_hash
 FROM bpe_rec WHERE step = 8
 """,
-        "pagerank_trade_graph": """
-WITH e0 AS (
-    SELECT DISTINCT 'c' || o_custkey AS src, 's' || l_suppkey AS dst
-    FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-),
-edges AS (
-    SELECT src, dst FROM e0 UNION ALL SELECT dst AS src, src AS dst FROM e0
-),
-deg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg FROM edges GROUP BY 1),
-nodes AS (SELECT DISTINCT src AS node FROM edges),
-p0 AS (SELECT node, CAST(1000000000 AS BIGINT) AS p FROM nodes),
-s1 AS (
-    SELECT e.dst AS node, CAST(sum(p.p // d.deg) AS BIGINT) AS sc
-    FROM edges e JOIN p0 p ON e.src = p.node JOIN deg d ON e.src = d.src
-    GROUP BY 1
-),
-p1 AS (
-    SELECT n.node,
-           CAST(150000000 + (85 * coalesce(s.sc, 0)) // 100 AS BIGINT) AS p
-    FROM nodes n LEFT JOIN s1 s USING (node)
-),
-s2 AS (
-    SELECT e.dst AS node, CAST(sum(p.p // d.deg) AS BIGINT) AS sc
-    FROM edges e JOIN p1 p ON e.src = p.node JOIN deg d ON e.src = d.src
-    GROUP BY 1
-),
-p2 AS (
-    SELECT n.node,
-           CAST(150000000 + (85 * coalesce(s.sc, 0)) // 100 AS BIGINT) AS p
-    FROM nodes n LEFT JOIN s2 s USING (node)
-)
-SELECT node, p FROM p2
-""",
         "curate_corpus_full": f"""
 WITH words AS (
     SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
@@ -4330,34 +4059,6 @@ WHERE d.doc_id IN (SELECT doc_id FROM keep)
         "jsonl_roundtrip": _ROUNDTRIP_SQL,
         "csv_roundtrip": _ROUNDTRIP_SQL,
         "orc_roundtrip": _ROUNDTRIP_SQL,
-        "stream_dedup_counts": """
-SELECT event_type, CAST(count(DISTINCT event_id) AS BIGINT) AS n_events
-FROM events GROUP BY 1
-""",
-        "stream_running_totals": """
-SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
-       round(sum(value), 2) AS total_value
-FROM events GROUP BY 1
-""",
-        "stream_range_join": """
-WITH p AS (
-    SELECT user_id, event_id AS p_id, ts AS p_ts FROM events
-    WHERE event_type = 'purchase'
-),
-c AS (
-    SELECT user_id, event_id AS c_id, ts AS c_ts FROM events
-    WHERE event_type = 'click'
-)
-SELECT p.p_id, c.c_id, p.user_id AS p_user
-FROM p JOIN c ON p.user_id = c.user_id
- AND c.c_ts <= p.p_ts
- AND c.c_ts >= p.p_ts - INTERVAL 1 HOUR
-""",
-        # streaming sessionization checks against the IDENTICAL batch
-        # gaps-and-islands SQL as events_sessionize (the equivalence
-        # contract; gap calibration in stream_sessionize_events).
-        "stream_sessionize": _SESSIONIZE_SQL,
-        "stream_funnel": _FUNNEL_SQL,
         "cluster_kmeans": _kmeans_sql(),
         "semdedup_prune": _semdedup_sql(),
         "pq_encode_rows": _pq_encode_sql(),
@@ -6752,24 +6453,6 @@ SELECT query_id, doc_id, score, rank FROM (
     FROM sc
 ) WHERE rank <= 5
 """,
-        "multimodal_features": """
--- image payloads are real PNGs (decoded pixels == the document's utf-8
--- bytes, one grayscale scanline) and audio payloads are real WAVs (PCM8
--- samples == the same bytes at 8 kHz), so every decoded feature is
--- arithmetically predictable from the text; video takes the byte-level
--- stub (digest of the raw payload == the same text bytes)
-SELECT doc_id AS asset_id,
-       CASE WHEN doc_id % 3 = 0 THEN 'image'
-            WHEN doc_id % 3 = 1 THEN 'audio'
-            ELSE 'video' END AS modality,
-       CAST(strlen(text) AS INTEGER) AS n_bytes,
-       md5(text) AS content_digest,
-       CASE WHEN doc_id % 3 = 0 THEN CAST(strlen(text) AS INTEGER) END AS width,
-       CASE WHEN doc_id % 3 = 0 THEN CAST(1 AS INTEGER) END AS height,
-       CASE WHEN doc_id % 3 = 1 THEN CAST(strlen(text) AS INTEGER) END AS n_samples,
-       CASE WHEN doc_id % 3 = 1 THEN CAST(8000 AS INTEGER) END AS sample_rate
-FROM documents
-""",
         "knn_file_summary_query": f"""
 WITH {_ELEMENTS_CTE},
 summaries AS (
@@ -6828,23 +6511,6 @@ summary AS (
 SELECT g.path, g.element_type, g.members, g.n_members,
        s.file_type, s.line_count, s.element_count
 FROM grouped g JOIN summary s ON g.path = s.path
-""",
-        "multimodal_resize": """
-SELECT doc_id AS asset_id,
-       CAST(length(text) AS INTEGER) AS orig_chars,
-       md5(substr(text, 1, 32)) AS thumb_digest,
-       round(CASE WHEN length(text) = 0 THEN 1.0
-                  ELSE least(32, length(text)) / CAST(length(text) AS DOUBLE)
-             END, 4) AS scale
-FROM documents WHERE doc_id % 3 = 0
-""",
-        "multimodal_frames": """
-SELECT doc_id AS asset_id, CAST(t.i AS INTEGER) AS frame_idx,
-       CAST((t.i + 1) * n // 4 - t.i * n // 4 AS INTEGER) AS frame_chars,
-       md5(substr(text, t.i * n // 4 + 1, (t.i + 1) * n // 4 - t.i * n // 4))
-           AS frame_digest
-FROM (SELECT doc_id, text, length(text) AS n FROM documents WHERE doc_id % 3 = 2),
-     LATERAL (SELECT unnest(generate_series(0, 3)) AS i) t
 """,
         "embed_projection_rows": """
 WITH tok AS (
@@ -7304,11 +6970,6 @@ SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
        event_type, count(*) AS n_events, round(sum(value), 2) AS total_value
 FROM events GROUP BY 1, 2
 """,
-        "stream_tumbling_counts": """
-SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-       event_type, count(*) AS n_events, round(sum(value), 2) AS total_value
-FROM events GROUP BY 1, 2
-""",
         "orders_above_avg": """
 SELECT c_mktsegment, count(*) AS n_orders,
        round(sum(o_totalprice), 2) AS revenue
@@ -7380,110 +7041,6 @@ SELECT l_returnflag,
        max(CASE WHEN rn = CAST(ceil(0.9 * n) AS BIGINT) THEN l_extendedprice END) AS p90,
        max(CASE WHEN rn = CAST(ceil(0.99 * n) AS BIGINT) THEN l_extendedprice END) AS p99
 FROM r GROUP BY l_returnflag
-""",
-        # HLL in coupon mode is an exact distinct-hash set and its rounded
-        # estimator equals n at test-SF cardinalities (150/1500 ≪ the
-        # lgK-21 coupon capacity) — operators/sketches.py.
-        "sketch_distinct_users": """
-SELECT event_type, CAST(count(DISTINCT user_id) AS BIGINT) AS approx_users
-FROM events GROUP BY event_type
-UNION ALL
-SELECT '__all__', CAST(count(DISTINCT user_id) AS BIGINT) FROM events
-""",
-        # Same coupon-mode exactness contract, pairwise: every estimate
-        # is the exact distinct count at test cardinalities, so
-        # inclusion-exclusion yields exact union/overlap/jaccard.
-        "sketch_user_overlap": """
-WITH u AS (SELECT DISTINCT event_type, user_id FROM events),
-t AS (SELECT DISTINCT event_type FROM events),
-pairs AS (
-    SELECT a.event_type AS type_a, b.event_type AS type_b
-    FROM t a JOIN t b ON a.event_type < b.event_type
-),
-uni AS (
-    SELECT p.type_a, p.type_b,
-           CAST(count(DISTINCT u.user_id) AS BIGINT) AS approx_union
-    FROM pairs p JOIN u ON u.event_type IN (p.type_a, p.type_b)
-    GROUP BY 1, 2
-),
-ov AS (
-    SELECT x.event_type AS type_a, y.event_type AS type_b,
-           CAST(count(*) AS BIGINT) AS c
-    FROM u x JOIN u y
-      ON x.user_id = y.user_id AND x.event_type < y.event_type
-    GROUP BY 1, 2
-)
-SELECT p.type_a, p.type_b, uni.approx_union,
-       CAST(coalesce(ov.c, 0) AS BIGINT) AS approx_overlap,
-       CAST(coalesce(ov.c, 0) * 1000000 // uni.approx_union AS BIGINT)
-           AS jaccard_micro
-FROM pairs p
-JOIN uni USING (type_a, type_b)
-LEFT JOIN ov USING (type_a, type_b)
-""",
-        # Salted-md5 shard assignment replayed in DuckDB hex arithmetic
-        # (n_shards interpolated from the layout module constant).
-        "shard_manifest_counts": f"""
-SELECT CAST(CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':shard'), 1, 8)) AS BIGINT)
-            % {_layout.N_TRAINING_SHARDS} AS INTEGER) AS shard,
-       count(*) AS doc_count,
-       CAST(sum(n_chars) AS BIGINT) AS total_chars
-FROM documents
-GROUP BY 1
-ORDER BY shard
-""",
-        # Morton interleave (operators/layout.py:z_interleave) replayed
-        # as pure integer arithmetic; the time bucket derives from
-        # epoch_us (the loader's µs-truncated contract).
-        "zorder_events": f"""
-WITH b AS (
-    SELECT event_id,
-           CAST(user_id % 65536 AS BIGINT) AS ux,
-           CAST((epoch_us(ts) // 60000000) % 65536 AS BIGINT) AS tx
-    FROM events
-)
-SELECT event_id, ux, tx,
-       CAST({" + ".join(
-           f"((ux // {1 << b}) % 2) * {1 << (2 * b)}"
-           f" + ((tx // {1 << b}) % 2) * {1 << (2 * b + 1)}"
-           for b in range(16)
-       )} AS BIGINT) AS zval
-FROM b
-""",
-        # The Bloom pre-filter has no false negatives and the exact semi
-        # join removes false positives, so the operator's result equals
-        # the plain semi join at ANY filter sizing
-        # (operators/bloom.py:bloom_filter_orders).
-        "bloom_filter_orders": """
-SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS n_orders,
-       round(sum(o_totalprice), 2) AS revenue
-FROM orders
-WHERE o_custkey IN (
-    SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
-)
-GROUP BY o_orderstatus
-""",
-        # Misra-Gries with capacity > per-partition vocabulary never
-        # compresses, so at test SFs counts are exact and err_bound = 0
-        # (operators/sketches.py:sketch_heavy_hitters; drift-guarded).
-        "sketch_heavy_hitters": """
-WITH t AS (
-    SELECT unnest(string_split(text, ' ')) AS token FROM documents
-)
-SELECT token, CAST(count(*) AS BIGINT) AS est_count,
-       CAST(0 AS BIGINT) AS err_bound
-FROM t GROUP BY token
-ORDER BY est_count DESC, token LIMIT 20
-""",
-        # GK sketch with accuracy > group row count retains every value, so
-        # at test SFs the Spark side is exact discrete percentiles =
-        # quantile_disc (operators/sketches.py:sketch_value_quantiles).
-        "sketch_value_quantiles": """
-SELECT event_type,
-       round(quantile_disc(value, 0.5), 2) AS p50,
-       round(quantile_disc(value, 0.95), 2) AS p95,
-       round(quantile_disc(value, 0.99), 2) AS p99
-FROM events GROUP BY event_type
 """,
         "setop_active_noncustomers": """
 SELECT CAST(user_id AS BIGINT) AS uid FROM events
@@ -7640,32 +7197,6 @@ SELECT user_id, CAST(cnt AS BIGINT) AS cnt,
 FROM c CROSS JOIN t
 ORDER BY cnt DESC, user_id LIMIT 10
 """,
-        # Ordered-edge join-join: every triangle {a<b<c} found once.
-        "triangle_count_nations": """
-WITH pairs AS (
-    SELECT DISTINCT least(cn.n_name, sn.n_name) AS u,
-                    greatest(cn.n_name, sn.n_name) AS v
-    FROM orders o
-    JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    JOIN supplier s ON l.l_suppkey = s.s_suppkey
-    JOIN nation cn ON c.c_nationkey = cn.n_nationkey
-    JOIN nation sn ON s.s_nationkey = sn.n_nationkey
-    WHERE cn.n_name <> sn.n_name
-),
-tri AS (
-    SELECT e1.u AS a, e1.v AS b, e2.v AS c
-    FROM pairs e1 JOIN pairs e2 ON e1.v = e2.u
-    WHERE EXISTS (SELECT 1 FROM pairs e3 WHERE e3.u = e1.u AND e3.v = e2.v)
-),
-corners AS (
-    SELECT a AS n_name FROM tri
-    UNION ALL SELECT b FROM tri
-    UNION ALL SELECT c FROM tri
-)
-SELECT n_name, CAST(count(*) AS BIGINT) AS n_triangles
-FROM corners GROUP BY 1
-""",
         # Bucket index is ONE IEEE expression over identical stored
         # doubles — bit-identical cross-engine; mass in exact cents.
         "histogram_order_totals": """
@@ -7690,23 +7221,6 @@ z AS (
 )
 SELECT event_type, event_id, value, z_micro
 FROM z WHERE z_micro >= 2000000 OR z_micro < -2000000
-""",
-        "events_rollup_daily": """
-SELECT strftime(ts, '%Y-%m-%d') AS day,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
-       CAST(count(DISTINCT event_type) AS BIGINT) AS n_types,
-       CAST(sum(CAST(floor(value * 1000000.0 + 0.5) AS BIGINT)) AS BIGINT)
-           AS sum_value_micro
-FROM events GROUP BY 1
-""",
-        "events_rollup_type_daily": """
-SELECT strftime(ts, '%Y-%m-%d') AS day, event_type,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
-       CAST(sum(CAST(floor(value * 1000000.0 + 0.5) AS BIGINT)) AS BIGINT)
-           AS sum_value_micro
-FROM events GROUP BY 1, 2
 """,
         "retention_day_over_day": """
 WITH user_days AS (

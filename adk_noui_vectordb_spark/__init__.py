@@ -5,15 +5,15 @@ The reference (see SURVEY.md) is a chunk -> embed -> store -> k-NN-retrieve
 pipeline over a document corpus plus rule-based text diagnostics. This package
 re-expresses that surface Spark-first (DataFrame/SQL, Catalyst-optimizable),
 and extends it with the LLM-data-pipeline operators (dedup, similarity
-search, text analysis, multimodal plumbing) the same data model needs at
-100 TB scale.
+search, text analysis) the same data model needs at 100 TB scale.
+``api.Client``/``api.Collection`` is the ChromaDB-compatible surface.
 
 Layout:
     session.py    -- tuned SparkSession builder
-    sources/      -- table registry, corpus scan, upsert sinks
+    api/          -- Client/Collection: the ChromaDB-compatible facade
+    sources/      -- table registry, corpus scan, upsert sinks, versioned roots
     functions/    -- scalar/array expression helpers (vector math, text)
     operators/    -- the operator inventory from SURVEY.md section 2
-    streaming/    -- incremental re-index + watermarked event aggregation
     plans/        -- plan-inspection helpers (pushdown / broadcast asserts)
 """
 

@@ -3578,29 +3578,6 @@ def delete_from_ivfpq_index(
     )
 
 
-def compact_ivfpq_index(
-    spark: SparkSession,
-    sf_dir: str,
-    n_centroids: int = 8,
-    ivf_iters: int = 2,
-    m: int = PQ_M,
-    k: int = PQ_K,
-    pq_iters: int = 2,
-    threshold: int = 4,
-) -> str:
-    """Small-file compaction for the composed index (plist/vecs; frozen
-    cents/pqcents link through). Returns the current version dir."""
-    from ..sources import versioning as vn
-
-    build_ivfpq_index(spark, sf_dir, n_centroids, ivf_iters, m, k, pq_iters)
-    return vn.compact_index(
-        spark,
-        ivfpq_index_root(sf_dir, n_centroids, ivf_iters, m, k, pq_iters),
-        IVFPQ_COMPONENTS,
-        threshold,
-    )
-
-
 def _ivfpq_stats_of(
     resid: DataFrame, plist: DataFrame, pqcents: DataFrame, m: int
 ) -> dict:

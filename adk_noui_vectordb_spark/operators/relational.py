@@ -203,9 +203,8 @@ def customers_with_high_value_orders(spark: SparkSession, sf_dir: str) -> DataFr
 def events_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour event-time windows, batch form.
 
-    The streaming twin (watermarked) lives in streaming/pipeline.py; this
-    batch expression is the oracle-checkable version. Window start is
-    returned as a formatted string (ns-precision parity, module docstring).
+    Window start is returned as a formatted string (ns-precision parity,
+    module docstring).
     """
     e = load_table(spark, sf_dir, "events")
     return (

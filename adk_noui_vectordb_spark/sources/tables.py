@@ -29,9 +29,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at any scale factor.
-BROADCAST_TABLES = frozenset({"region", "nation", "supplier"})
-
 
 def events_time_exprs(schema):
     """Schema-adaptive ``(ts, ts_ns)`` projection columns for ``events``.
@@ -137,18 +134,6 @@ def maybe_broadcast(
     if size_bytes <= max_bytes:
         return F.broadcast(df)
     return df
-
-
-def load_dim(
-    spark: SparkSession,
-    sf_dir: str,
-    name: str,
-    max_bytes: int = BROADCAST_MAX_BYTES,
-) -> DataFrame:
-    """Load a dimension table with a size-gated broadcast hint."""
-    return maybe_broadcast(
-        load_table(spark, sf_dir, name), parquet_size_bytes(sf_dir, name), max_bytes
-    )
 
 
 def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

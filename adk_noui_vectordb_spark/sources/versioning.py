@@ -1,12 +1,13 @@
 """Versioned on-disk index roots with atomic pointer commits.
 
-Shared by every build-once/serve-many index in the repo (the lexical
-inverted index, the RP-LSH band table, the trained-IVF assignment —
-operators/invindex.py and operators/ann.py): an index whose update
-rewrites SEVERAL parquet components (postings + termstats + stats;
-bands + vecs; assign + vecs) must never let a reader observe them out
-of sync. POSIX offers no multi-directory transaction, so the commit is
-made single-file:
+Shared by the Collection (api/collection.py) and every build-once/
+serve-many index in the repo (the lexical inverted index, the MinHash
+and containment indexes, the RP-LSH band table, the IVF/PQ/IVFPQ and
+binary-IVF indexes, the late-interaction index and the navigable graph
+in operators/): an index whose update rewrites SEVERAL parquet
+components (postings + termstats + stats; bands + vecs; assign + vecs)
+must never let a reader observe them out of sync. POSIX offers no
+multi-directory transaction, so the commit is made single-file:
 
     root/
       v_000000/<components...>     immutable once published
@@ -34,8 +35,8 @@ a commit whose plan was derived from a version that is no longer
 ``_CURRENT`` raises ``ConcurrentWriterError`` instead of silently
 destroying the interleaved committer's work, and the loser retries
 from the new current version. The reference's indexing agent is one
-process (indexing_agent.py) and never needed this; our streaming
-ingest modes write these roots concurrently in production shapes.
+process (indexing_agent.py) and never needed this; several clients
+writing one Collection or index root do.
 """
 
 from __future__ import annotations
@@ -295,10 +296,10 @@ def rollback_index(root: str, to: "str | None" = None) -> str:
     The abandoned newer version becomes an orphan: readers already on
     it finish their scans (its files are untouched), and the next
     commit's ``publish_version`` sweeps it when the version counter
-    re-reaches its name. Streaming idempotence markers are purged —
-    a replayed batch whose effect was rolled back must RE-apply, and
-    over-application is harmless under the indexes' replace semantics
-    (the marker-key contract, streaming/pipeline.py). Runs under the
+    re-reaches its name. Ingest idempotence markers under ``applied/``
+    are purged — a replayed batch whose effect was rolled back must
+    RE-apply, and over-application is harmless under the indexes'
+    replace semantics (marker keys: see ``gc_versions``). Runs under the
     writer lock: a rollback is a commit like any other, serialized
     against live writers."""
     with writer_lock(root):
@@ -332,7 +333,7 @@ def rollback_index(root: str, to: "str | None" = None) -> str:
 def gc_versions(root: str, keep: int = 2) -> None:
     """Delete versions older than the previous one, plus stale tmp dirs
     from crashed writers (they never held the ``_CURRENT`` name), plus
-    expired streaming idempotence markers: markers under ``applied/``
+    expired ingest idempotence markers: markers under ``applied/``
     are keyed ``<prefix>.<version>.<digest>`` on the version that
     observed/wrote them and can only ever match again while that version
     is still current — so any marker keyed to another version is dead

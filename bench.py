@@ -64,7 +64,6 @@ BENCH_KEYS = [
     "rollup_segment_status",
     "agg_percentiles",
     "curate_corpus",
-    "multimodal_features",
     "pivot_event_matrix",
     "q9_brand_profit",
     "retention_day_over_day",
@@ -84,7 +83,6 @@ BENCH_KEYS = [
     "lm_perplexity_score",
     "q2_min_cost_supplier",
     "q21_waiting_suppliers",
-    "pagerank_trade_graph",
     "cluster_kmeans",
     "semdedup_prune",
     "knn_pq_rerank",
@@ -117,13 +115,9 @@ BENCH_KEYS = [
     "dedup_containment_pairs",
     "dedup_containment_gate",
     "dedup_containment_gate_ingested",
-    "events_rollup_daily",
     "tokenize_bpe_encode",
     # r7 additions
     "dedup_repeated_ngrams",
-    "sketch_heavy_hitters",
-    "bloom_filter_orders",
-    "zorder_events",
     "scd2_user_state_history",
     "bm25_topk_served",
     # r10: boolean / phrase / truncated-dim serving layer
@@ -134,7 +128,6 @@ BENCH_KEYS = [
     "bm25_batch_topk_served",
     "ann_rp_lsh_batch_topk",
     "lm_bigram_score",
-    "sketch_user_overlap",
     "embed_topvar_project",
     "normalize_text_corpus",
     "trend_event_values",
@@ -142,7 +135,6 @@ BENCH_KEYS = [
     "events_anomaly_zscore",
     "hybrid_rrf_served_topk",
     "skew_key_profile",
-    "triangle_count_nations",
     "knn_join_topk",
     # r10c: ChromaDB-compatible Collection facade + full where DSL
     "collection_query_topk",

@@ -55,23 +55,12 @@ SLOW_TESTS = {
     "test_rp_index_lifecycle_matches_model",
     "test_rp_update_crash_before_commit_preserves_served_results",
     "test_sampled_ivfpq_recall_on_tight_clusters",
-    "test_stream_collection_ingest_serves_next_query",
-    "test_stream_containment_index_ingest_gates_next_probe",
-    "test_stream_gated_collection_ingest_curates_the_facade",
-    "test_stream_gated_ingest_intra_batch_gate",
-    "test_stream_gated_ingest_rejects_dups_and_admits_fresh",
-    "test_stream_gated_ingest_replay_after_partial_apply",
-    "test_stream_graph_index_deletes_stop_surfacing",
-    "test_stream_graph_index_ingest_serves_next_beam",
-    "test_stream_ivfpq_index_ingest_serves_next_probe",
-    "test_stream_text_index_ingest_equals_fresh_build",
     "test_text_index_lifecycle_matches_model",
     "test_update_ivf_index_equals_frozen_reassignment",
     "test_update_pq_index_equals_frozen_encoding",
     "test_update_rp_index_equals_fresh_rebuild",
     "test_upsert_replaces_everything",
     "test_version_gc_keeps_current_and_previous",
-    "test_z_interleave_property_roundtrip",
 }
 
 

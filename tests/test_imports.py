@@ -1,0 +1,146 @@
+"""Every import of the package resolves to a module and name that exist.
+
+A normal ``import`` never runs the function-level lazy imports inside
+``dedup``, ``embed``, ``invindex`` or ``ann`` (``from .x import y`` in a
+function body), so a dangling name there fails only when some caller
+reaches it. This check parses every source file instead of importing it
+(no Spark needed) and resolves, statically:
+
+- each ``import``/``from ... import`` of the package or of
+  ``__spark_entry__`` (absolute or relative, module level or lazy): the
+  module must exist and every imported name must be bound at the top
+  level of that module or be one of its submodules;
+- each ``alias.name`` read through a module alias bound by one of those
+  imports (``from ...operators import ann as _ann`` then ``_ann.x``).
+"""
+
+from __future__ import annotations
+
+import ast
+from functools import cache
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parents[1]
+PKG = "adk_noui_vectordb_spark"
+INTERNAL = {PKG, "__spark_entry__"}
+
+SOURCES = sorted(
+    [
+        *(REPO / PKG).rglob("*.py"),
+        REPO / "__spark_entry__.py",
+        REPO / "bench.py",
+        *(REPO / "tools").glob("*.py"),
+        *(REPO / "tests").glob("*.py"),
+    ]
+)
+
+
+def _module_file(dotted: str) -> Path | None:
+    base = REPO.joinpath(*dotted.split("."))
+    if (base / "__init__.py").is_file():
+        return base / "__init__.py"
+    if base.with_suffix(".py").is_file():
+        return base.with_suffix(".py")
+    return None
+
+
+def _bound_names(body: list[ast.stmt]) -> set[str]:
+    """Names a module body binds at top level, descending into if/try/
+    with/for blocks but not into functions or classes."""
+    out: set[str] = set()
+    for node in body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            out.add(node.name)
+            continue
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            out |= {a.asname or a.name.split(".")[0] for a in node.names}
+        elif isinstance(node, (ast.Assign, ast.AnnAssign, ast.AugAssign, ast.For)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for t in targets:
+                out |= {n.id for n in ast.walk(t) if isinstance(n, ast.Name)}
+        for field in ("body", "orelse", "finalbody", "handlers"):
+            out |= _bound_names(getattr(node, field, []))
+    return out
+
+
+@cache
+def _exports(dotted: str) -> frozenset[str]:
+    path = _module_file(dotted)
+    return frozenset(_bound_names(ast.parse(path.read_text()).body))
+
+
+def _has(dotted: str, name: str) -> bool:
+    return (
+        name.startswith("__")
+        or name in _exports(dotted)
+        or _module_file(f"{dotted}.{name}") is not None
+    )
+
+
+def _resolve_from(path: Path, node: ast.ImportFrom) -> str:
+    if not node.level:
+        return node.module or ""
+    pkg = list(path.relative_to(REPO).parent.parts)  # the importer's package
+    base = pkg[: len(pkg) - (node.level - 1)]
+    return ".".join(base + ([node.module] if node.module else []))
+
+
+def _check_file(path: Path) -> tuple[list[str], int]:
+    tree = ast.parse(path.read_text())
+    rel = path.relative_to(REPO)
+    errors: list[str] = []
+    checked = 0
+    aliases: dict[str, set[str]] = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                if a.name.split(".")[0] not in INTERNAL:
+                    continue
+                checked += 1
+                if _module_file(a.name) is None:
+                    errors.append(f"{rel}:{node.lineno}: no module {a.name}")
+                elif a.asname:
+                    aliases.setdefault(a.asname, set()).add(a.name)
+        elif isinstance(node, ast.ImportFrom):
+            mod = _resolve_from(path, node)
+            if mod.split(".")[0] not in INTERNAL:
+                continue
+            checked += 1
+            if _module_file(mod) is None:
+                errors.append(f"{rel}:{node.lineno}: no module {mod}")
+                continue
+            for a in node.names:
+                if a.name == "*":
+                    continue
+                if not _has(mod, a.name):
+                    errors.append(f"{rel}:{node.lineno}: {mod} has no {a.name}")
+                elif _module_file(f"{mod}.{a.name}") is not None:
+                    aliases.setdefault(a.asname or a.name, set()).add(
+                        f"{mod}.{a.name}"
+                    )
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Attribute)
+            and isinstance(node.value, ast.Name)
+            and node.value.id in aliases
+        ):
+            mods = aliases[node.value.id]
+            checked += 1
+            if not any(_has(m, node.attr) for m in mods):
+                errors.append(
+                    f"{rel}:{node.lineno}: {'/'.join(sorted(mods))} "
+                    f"has no {node.attr}"
+                )
+    return errors, checked
+
+
+def test_package_imports_resolve():
+    errors: list[str] = []
+    checked = 0
+    for path in SOURCES:
+        errs, n = _check_file(path)
+        errors += errs
+        checked += n
+    assert not errors, "\n".join(errors)
+    # guard against a vacuous pass (a broken glob checks nothing)
+    assert checked > 500, checked

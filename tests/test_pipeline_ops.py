@@ -450,41 +450,6 @@ def test_q21_single_fact_join(spark, sf_dir):
     assert plan.count("Scan parquet") <= 6, plan
 
 
-# ------------------------------------------------------------------ pagerank
-
-def test_pagerank_mass_and_bounds(spark, sf_dir):
-    """Every node gets the damping floor; supplier hubs (degree-rich)
-    outrank leaf customers; total nodes = customers-with-orders +
-    suppliers-with-lineitems."""
-    from adk_noui_vectordb_spark.operators.graph import (
-        pagerank_customer_supplier,
-    )
-
-    rows = pagerank_customer_supplier(spark, sf_dir).collect()
-    assert rows
-    base = 15 * 10**9 // 100
-    assert all(r["p"] >= base for r in rows)
-    supp = [r["p"] for r in rows if r["node"].startswith("s")]
-    cust = [r["p"] for r in rows if r["node"].startswith("c")]
-    assert supp and cust
-    # ~100 suppliers absorb mass from ~1000+ customers: mean supplier
-    # rank must exceed mean customer rank
-    assert sum(supp) / len(supp) > sum(cust) / len(cust)
-
-
-def test_pagerank_is_integer_exact(spark, sf_dir):
-    """Two runs produce identical assignments (no float anywhere)."""
-    from adk_noui_vectordb_spark.operators.graph import (
-        pagerank_customer_supplier,
-    )
-
-    a = {r["node"]: r["p"] for r in
-         pagerank_customer_supplier(spark, sf_dir).collect()}
-    b = {r["node"]: r["p"] for r in
-         pagerank_customer_supplier(spark, sf_dir).collect()}
-    assert a == b
-
-
 # -------------------------------------------------------- canonical selection
 
 def test_canonical_selection_covers_all_docs(spark, sf_dir):
@@ -613,20 +578,7 @@ def test_anomaly_zscore_tail_and_broadcast(spark, sf_dir):
     assert "BroadcastHashJoin" in plan, plan
 
 
-# ------------------------------------------------- triangles / skew profile
-
-def test_triangle_participation_invariants(spark, sf_dir):
-    """Sum of per-node participation is exactly 3x the triangle total
-    (each triangle has three corners), and no node can exceed C(24,2)
-    (25 nations, complete-graph bound)."""
-    from adk_noui_vectordb_spark.operators.graph import triangle_count_nations
-
-    rows = triangle_count_nations(spark, sf_dir).collect()
-    assert rows
-    total = sum(r["n_triangles"] for r in rows)
-    assert total % 3 == 0
-    assert all(0 < r["n_triangles"] <= 24 * 23 // 2 for r in rows)
-
+# ------------------------------------------------------------ skew profile
 
 def test_skew_profile_matches_exact_counts(spark, sf_dir):
     """Top keys and shares equal an exact recomputation; counts are

@@ -315,6 +315,20 @@ def test_fsck_gated_pair_detects_lockstep_and_drift(spark, sf_dir, tmp_path):
     assert checks2.get("doc_sets_in_lockstep") is False
 
 
+def _retry_cas(fn, attempts: int = 3) -> None:
+    """The documented loser protocol: every ``update_*`` re-derives its
+    plan from the new current version on each call, so a plain re-invoke
+    after a lost CAS race is the whole retry."""
+    last = None
+    for _ in range(attempts):
+        try:
+            fn()
+            return
+        except vn.ConcurrentWriterError as e:
+            last = e
+    raise last
+
+
 def test_two_concurrent_text_index_writers_both_land(spark, sf_dir, tmp_path):
     """END-TO-END concurrency: two threads upsert DIFFERENT batches into
     the same text index root simultaneously. The writer lock serializes
@@ -323,8 +337,6 @@ def test_two_concurrent_text_index_writers_both_land(spark, sf_dir, tmp_path):
     lands it, and the final index equals a fresh build over base + both
     batches."""
     import threading
-
-    from adk_noui_vectordb_spark.streaming.pipeline import _retry_cas
 
     base, alldir = str(tmp_path / "ccbase"), str(tmp_path / "ccall")
     os.makedirs(base), os.makedirs(alldir)
@@ -454,3 +466,125 @@ def test_fork_index_is_generic_and_independent(spark, tmp_path):
     # refuse to fork onto a root that already has versions
     with pytest.raises(FileExistsError):
         vn.fork_index(src, dst)
+
+
+def test_gc_and_rollback_sweep_ingest_markers(spark, tmp_path):
+    """Idempotence markers under ``applied/`` are keyed
+    ``<prefix>.<version>.<digest>`` and only ever match while that
+    version is current: a commit's gc sweeps markers of other versions
+    and keeps the current version's, and a rollback purges them all so a
+    rolled-back batch re-applies."""
+    root = str(tmp_path / "markers")
+    _commit_kv(spark, root, [(0, "a")], expected=None)
+    v0 = vn.current_name(root)
+    applied = os.path.join(root, "applied")
+    os.makedirs(applied)
+    open(os.path.join(applied, f"c.{v0}.d0"), "w").close()
+
+    _commit_kv(spark, root, [(1, "b")], expected=v0)
+    v1 = vn.current_name(root)
+    open(os.path.join(applied, f"c.{v1}.d1"), "w").close()
+    vn.gc_versions(root)
+    assert os.listdir(applied) == [f"c.{v1}.d1"]
+
+    vn.rollback_index(root)
+    assert vn.current_name(root) == v0
+    assert os.listdir(applied) == []
+
+
+def test_text_doc_reapplies_after_delete(spark, tmp_path):
+    """A doc deleted from the text index comes back when the same content
+    is upserted again: the delete bumps the version, so nothing keyed to
+    the older version can skip the re-apply."""
+    base = str(tmp_path / "resur")
+    os.makedirs(base)
+    spark.createDataFrame(
+        [(1, "alpha beta gamma"), (2, "delta epsilon")],
+        "doc_id bigint, text string",
+    ).write.parquet(os.path.join(base, "documents.parquet"))
+    invindex.build_text_index(spark, base)
+    doc = spark.createDataFrame(
+        [(6_200_001, "resurrect this document whiskey xray yankee")],
+        "doc_id bigint, text string",
+    )
+
+    def doc_ids():
+        ver = invindex.build_text_index(spark, base)
+        return {
+            r["doc_id"]
+            for r in spark.read.schema(invindex.DOCS_SCHEMA)
+            .parquet(os.path.join(ver, "docs"))
+            .collect()
+        }
+
+    invindex.update_text_index(spark, base, doc)
+    assert 6_200_001 in doc_ids()
+    invindex.delete_from_text_index(
+        spark, base, spark.createDataFrame([(6_200_001,)], "doc_id bigint")
+    )
+    assert 6_200_001 not in doc_ids()
+    invindex.update_text_index(spark, base, doc)
+    assert doc_ids() == {1, 2, 6_200_001}
+
+
+def test_gated_batch_replay_after_partial_apply_converges(
+    spark, sf_dir, tmp_path
+):
+    """A gated ingest that crashed after the MinHash update but before the
+    text update converges on replay. Once the batch's own ids are excluded
+    from the gate's candidates, the replayed gate decides exactly as the
+    first attempt did, although the MinHash index already holds the batch.
+    Re-applying the MinHash update is a content no-op under doc-level
+    replace, and the text update then lands every admitted doc."""
+    from adk_noui_vectordb_spark.operators import dedup
+
+    base = str(tmp_path / "gcrash")
+    os.makedirs(base)
+    spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).write.parquet(
+        os.path.join(base, "documents.parquet")
+    )
+    dedup.build_minhash_index(spark, base)
+    invindex.build_text_index(spark, base)
+    twin = "crash recovery twin sentence kilo lima mike november oscar"
+    batch = spark.createDataFrame(
+        [
+            (9_000_001, twin),
+            (9_000_002, twin),
+            (9_000_003, "wholly distinct crash recovery paragraph papa"),
+        ],
+        "doc_id bigint, text string",
+    ).localCheckpoint(eager=True)
+    batch_ids = {9_000_001, 9_000_002, 9_000_003}
+
+    def gate(exclude_batch=True):
+        return {
+            (r["new_doc_id"], r["dup_of"])
+            for r in dedup.dedup_gate_for(spark, base, batch).collect()
+            if not (exclude_batch and r["dup_of"] in batch_ids)
+        }
+
+    def content(ver):
+        read = spark.read.schema
+        return (
+            {tuple(r) for r in read(dedup.MINHASH_SIGS_SCHEMA).parquet(
+                os.path.join(ver, "sigs")).collect()},
+            {tuple(r) for r in read(dedup.MINHASH_BANDS_SCHEMA).parquet(
+                os.path.join(ver, "bands")).collect()},
+        )
+
+    first = gate()
+    v1 = dedup.update_minhash_index(spark, base, batch)  # then the crash
+    # unfiltered, the replayed gate matches the batch against itself
+    assert {(9_000_001, 9_000_001), (9_000_001, 9_000_002)} <= gate(False)
+    assert gate() == first
+    v2 = dedup.update_minhash_index(spark, base, batch)  # the replay
+    assert content(v2) == content(v1)
+    invindex.update_text_index(spark, base, batch)
+    ver = invindex.build_text_index(spark, base)
+    text_ids = {
+        r["doc_id"]
+        for r in spark.read.schema(invindex.DOCS_SCHEMA)
+        .parquet(os.path.join(ver, "docs"))
+        .collect()
+    }
+    assert batch_ids <= text_ids

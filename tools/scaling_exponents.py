@@ -52,7 +52,6 @@ KEYS = {
     "events_tumbling_counts": "events",
     "asof_join_purchase_click": "events",
     "range_join_bursts": "events",
-    "pagerank_trade_graph": "lineitem",
     "lang_id_ngram": "documents",
     "tokenize_bpe_encode": "documents",
     "ann_ivf_trained_topk": "embeddings",
@@ -63,15 +62,11 @@ KEYS = {
     "bm25_folded_topk_served": "documents",
     "lm_bigram_score": "documents",
     "embed_topvar_project": "embeddings",
-    "sketch_user_overlap": "events",
     "normalize_text_corpus": "documents",
     "trend_event_values": "events",
     "histogram_order_totals": "orders",
     "events_anomaly_zscore": "events",
     "dedup_repeated_ngrams": "documents",
-    "sketch_heavy_hitters": "documents",
-    "bloom_filter_orders": "orders",
-    "zorder_events": "events",
     "scd2_user_state_history": "events",
     # r7c additions
     "knn_join_topk": "embeddings",
@@ -81,7 +76,6 @@ KEYS = {
     "events_rate_limited_sample": "events",
     "dup_cluster_size_histogram": "documents",
     "skew_key_profile": "events",
-    "triangle_count_nations": "lineitem",
     "hybrid_rrf_served_topk": "documents",
     "basket_brand_lift": "lineitem",
     "user_activity_profile": "events",
@@ -116,8 +110,6 @@ KEYS = {
     "hybrid_weighted_topk": "documents",
     "hybrid_weighted_served_topk": "documents",
     "hybrid_weighted_graph_topk": "documents",
-    "events_rollup_daily": "events",
-    "events_rollup_type_daily": "events",
     # r10b additions (query-language + filtered-ANN serving layer)
     "boolean_and_topk": "documents",
     "boolean_or_not_topk": "documents",
@@ -134,7 +126,6 @@ KEYS = {
     "collection_query_graph_batch_topk": "embeddings",
     "collection_get_where": "documents",
     "fuzzy_topk_served": "documents",
-    "shard_manifest_counts": "documents",
     "chunked_maxsim_topk": "documents",
     "late_interaction_topk": "documents",
     "late_interaction_topk_served": "documents",
