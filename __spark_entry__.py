@@ -60,7 +60,6 @@ from adk_noui_vectordb_spark.sources.corpus import (
 )
 from adk_noui_vectordb_spark.api import collection as _coll
 from adk_noui_vectordb_spark.functions import where_dsl as _wdsl
-from adk_noui_vectordb_spark.sources import formats as _fmt
 from adk_noui_vectordb_spark.sources.tables import load_table
 
 SF0001 = "/root/testdata/sf0.001"
@@ -182,21 +181,16 @@ _CHECKED_R1 = frozenset({
 # rows-only-by-design keys — their rows-only driver row is their contract.
 _CHECKED_R2 = frozenset({
     "chunk_ast_python", "quality_repetition", "decontaminate_corpus",
-    "jsonl_roundtrip", "csv_roundtrip", "diag_python_syntax",
-    "diag_python_flakes", "knn_text_query", "knn_file_summary_query",
-    "file_context", "ann_ivf_topk", "ann_lsh_topk", "bm25_topk",
-    "hybrid_rrf_topk", "knn_int8_topk", "knn_int8_rerank",
-    "q1_pricing_summary", "q3_top_orders",
-    "q5_region_revenue", "q6_revenue_forecast", "q9_brand_profit",
-    "q4_order_priority", "q14_promo_revenue", "q16_supplier_part_counts",
-    "q18_large_orders", "q19_disjunctive_revenue", "window_topn_orders",
-    "window_running_revenue", "customers_without_orders",
+    "diag_python_syntax", "diag_python_flakes", "knn_text_query",
+    "knn_file_summary_query", "file_context", "ann_ivf_topk", "ann_lsh_topk",
+    "bm25_topk", "hybrid_rrf_topk", "knn_int8_topk", "knn_int8_rerank",
+    "window_topn_orders", "window_running_revenue", "customers_without_orders",
     "customers_with_high_value_orders", "events_tumbling_counts",
-    "events_sessionize", "events_sliding_counts",
-    "window_moving_avg", "rollup_segment_status", "salted_event_totals",
-    "salted_skew_join", "pivot_event_matrix", "agg_correlation",
-    "orders_above_avg", "events_by_dow", "agg_percentiles",
-    "setop_active_noncustomers", "json_props_rollup",
+    "events_sessionize", "events_sliding_counts", "window_moving_avg",
+    "rollup_segment_status", "salted_event_totals", "salted_skew_join",
+    "pivot_event_matrix", "agg_correlation", "orders_above_avg",
+    "events_by_dow", "agg_percentiles", "setop_active_noncustomers",
+    "json_props_rollup",
 })
 
 # (The round-2 _STALE_R1 set is gone: the rank ordering below derives
@@ -208,16 +202,11 @@ _CHECKED_R2 = frozenset({
 _CHECKED_R4 = frozenset({
     "embed_quantize_int8", "chunk_js_elements", "line_dedup_corpus",
     "pack_sequences", "redact_pii", "lm_perplexity_score", "mixture_sample",
-    "bpe_pair_counts", "curate_corpus_full", "orc_roundtrip", "cluster_kmeans",
+    "bpe_pair_counts", "curate_corpus_full", "cluster_kmeans",
     "pq_encode_rows", "knn_pq_topk", "knn_pq_rerank",
     "dedup_canonical_selection", "dedup_simhash_pairs", "ngram_jaccard_pairs",
-    "simhash_signatures", "semdedup_prune", "index_pipeline",
-    "q10_returned_revenue", "q12_ship_delay_priority",
-    "q13_customer_distribution", "q17_small_qty_revenue",
-    "q22_idle_customer_balance", "q2_min_cost_supplier", "q7_volume_shipping",
-    "q8_market_share", "q11_important_stock", "q15_top_supplier",
-    "q20_excess_suppliers", "q21_waiting_suppliers",
-    "knn_topk", "knn_topk_filtered", "knn_batch_topk", "score_similarity_pairs",
+    "simhash_signatures", "semdedup_prune", "index_pipeline", "knn_topk",
+    "knn_topk_filtered", "knn_batch_topk", "score_similarity_pairs",
     "filter_by_lang", "point_lookup", "agg_source_summary", "agg_docs_by_lang",
 })
 
@@ -249,18 +238,15 @@ _CHECKED_R6 = frozenset({
     "agg_diag_counts", "agg_elements_by_type", "agg_file_summary",
     "agg_group_structure", "ann_ivf_topk", "ann_ivf_trained_topk",
     "ann_rp_lsh_topk", "bm25_topk", "chunk_ast_python", "chunk_js_elements",
-    "cluster_kmeans", "corpus_diagnostics", "csv_roundtrip",
-    "cube_status_priority", "decontaminate_corpus",
-    "dedup_connected_components", "dedup_minhash_pairs",
-    "dedup_simhash_pairs", "diag_python_flakes", "embed_projection_rows",
-    "file_context", "hybrid_rrf_topk", "index_pipeline", "jsonl_roundtrip",
-    "knn_file_summary_query", "knn_int8_rerank", "knn_int8_topk",
-    "knn_pq_rerank", "knn_pq_topk", "knn_text_query", "lang_id_ngram",
-    "minhash_band_rows", "minhash_jaccard_estimate",
-    "minhash_signature_rows",
-    "pq_encode_rows", "project_element_ids",
-    "project_searchable_text", "project_truncate", "q1_pricing_summary",
-    "q3_top_orders", "q5_region_revenue", "quality_repetition",
+    "cluster_kmeans", "corpus_diagnostics", "cube_status_priority",
+    "decontaminate_corpus", "dedup_connected_components",
+    "dedup_minhash_pairs", "dedup_simhash_pairs", "diag_python_flakes",
+    "embed_projection_rows", "file_context", "hybrid_rrf_topk",
+    "index_pipeline", "knn_file_summary_query", "knn_int8_rerank",
+    "knn_int8_topk", "knn_pq_rerank", "knn_pq_topk", "knn_text_query",
+    "lang_id_ngram", "minhash_band_rows", "minhash_jaccard_estimate",
+    "minhash_signature_rows", "pq_encode_rows", "project_element_ids",
+    "project_searchable_text", "project_truncate", "quality_repetition",
     "rp_lsh_band_rows", "semdedup_prune", "simhash_signatures",
     "tokenize_bpe_encode", "winnow_fingerprints",
 })
@@ -273,20 +259,15 @@ _CHECKED_R7 = frozenset({
     "ann_rp_lsh_multiprobe_topk", "ann_rp_lsh_topk", "basket_brand_lift",
     "bm25_topk_served", "chunk_js_elements",
     "customers_with_high_value_orders", "customers_without_orders",
-    "dedup_repeated_ngrams", "doc_token_entropy",
-    "dup_cluster_size_histogram", "embed_dim_stats", "events_anomaly_zscore",
-    "events_gap_stats", "events_rate_limited_sample",
-    "histogram_order_totals", "hybrid_rrf_served_topk",
-    "inverted_postings_rows", "knn_join_topk", "lm_bigram_score",
-    "normalize_text_corpus", "orders_above_avg",
-    "q14_promo_revenue", "q16_supplier_part_counts", "q18_large_orders",
-    "q19_disjunctive_revenue", "q4_order_priority", "q6_revenue_forecast",
-    "q9_brand_profit", "rollup_segment_status", "scd2_user_state_history",
-    "skew_key_profile",
-    "trend_event_values",
-    "unpivot_event_matrix",
-    "user_activity_profile", "window_moving_avg", "window_running_revenue",
-    "window_topn_orders", "window_trailing_value_sum",
+    "dedup_repeated_ngrams", "doc_token_entropy", "dup_cluster_size_histogram",
+    "embed_dim_stats", "events_anomaly_zscore", "events_gap_stats",
+    "events_rate_limited_sample", "histogram_order_totals",
+    "hybrid_rrf_served_topk", "inverted_postings_rows", "knn_join_topk",
+    "lm_bigram_score", "normalize_text_corpus", "orders_above_avg",
+    "rollup_segment_status", "scd2_user_state_history", "skew_key_profile",
+    "trend_event_values", "unpivot_event_matrix", "user_activity_profile",
+    "window_moving_avg", "window_running_revenue", "window_topn_orders",
+    "window_trailing_value_sum",
 })
 
 # Green (rows+schema+hash) in CORRECTNESS_r08.json — all 50 window keys,
@@ -301,16 +282,9 @@ _CHECKED_R8 = frozenset({
     "filter_by_lang", "filter_ext_dispatch", "hybrid_rrf_served_topk",
     "knn_batch_topk", "knn_join_topk", "knn_topk", "knn_topk_filtered",
     "line_dedup_corpus", "lm_perplexity_score", "mixture_sample",
-    "ngram_jaccard_pairs", "orc_roundtrip", "pack_sequences",
-    "point_lookup", "q10_returned_revenue",
-    "q11_important_stock", "q12_ship_delay_priority",
-    "q13_customer_distribution", "q15_top_supplier",
-    "q17_small_qty_revenue", "q20_excess_suppliers",
-    "q21_waiting_suppliers", "q22_idle_customer_balance",
-    "q2_min_cost_supplier", "q7_volume_shipping", "q8_market_share",
-    "quality_score", "redact_pii", "score_similarity_pairs",
-    "text_stats",
-    "tfidf_top_terms", "token_count",
+    "ngram_jaccard_pairs", "pack_sequences", "point_lookup", "quality_score",
+    "redact_pii", "score_similarity_pairs", "text_stats", "tfidf_top_terms",
+    "token_count",
 })
 
 # Green (rows+schema+hash) in CORRECTNESS_r09.json — all 50 window keys:
@@ -341,7 +315,7 @@ _CHECKED_R9 = frozenset({
 # Green (rows+schema+hash) in CORRECTNESS_r10.json — all 50 window keys:
 # the 20 new r10 keys (facade, query language, IVFPQ, rollup, shards), the
 # 6 r10 rewrites (gate broadcasts + text-index v3 cohort), and the rotated
-# r6 cohort (indexing projections/aggregations, roundtrips, diagnostics).
+# r6 cohort (indexing projections/aggregations, diagnostics).
 _CHECKED_R10 = frozenset({
     "agg_diag_counts", "agg_elements_by_type", "agg_file_summary",
     "agg_group_structure", "ann_grouped_topk", "ann_ivfpq_topk",
@@ -349,39 +323,33 @@ _CHECKED_R10 = frozenset({
     "bm25_batch_topk_served", "bm25_explain_served", "bm25_page2_served",
     "bm25_topk_served", "boolean_and_topk", "boolean_or_not_topk",
     "chunked_maxsim_topk", "cluster_kmeans", "collection_get_where",
-    "collection_query_topk", "corpus_diagnostics", "csv_roundtrip",
-    "decontaminate_corpus", "dedup_gate_against_index",
-    "dedup_gate_intra_batch", "dedup_simhash_pairs", "diag_python_flakes",
-    "docs_where_dsl_filter",
-    "fuzzy_topk_served",
-    "hybrid_rrf_served_topk", "inverted_postings_rows", "jsonl_roundtrip",
+    "collection_query_topk", "corpus_diagnostics", "decontaminate_corpus",
+    "dedup_gate_against_index", "dedup_gate_intra_batch",
+    "dedup_simhash_pairs", "diag_python_flakes", "docs_where_dsl_filter",
+    "fuzzy_topk_served", "hybrid_rrf_served_topk", "inverted_postings_rows",
     "knn_join_ivf_topk", "knn_join_topk", "knn_truncated_rerank",
     "knn_where_dsl_topk", "phrase_topk_served", "prefix_topk_served",
     "project_element_ids", "project_searchable_text", "project_truncate",
     "proximity_topk_served", "quality_repetition", "search_facet_counts",
-    "search_highlight_served", "semdedup_prune",
-    "simhash_signatures", "text_index_doc_map", "tokenize_bpe_encode",
+    "search_highlight_served", "semdedup_prune", "simhash_signatures",
+    "text_index_doc_map", "tokenize_bpe_encode",
 })
 
 # CORRECTNESS_r11.json: 50/50 green (every r11 rewrite re-verified, the
 # whole r11 new-key cohort, and the rotated r6/r7 staleness cohorts).
 _CHECKED_R11 = frozenset({
     "ann_ivf_sampled_topk", "ann_ivf_topk", "ann_ivf_trained_topk",
-    "ann_ivfpq_sampled_topk", "ann_ivfpq_topk",
-    "bm25_topk", "cap_docs_per_source", "chunk_js_elements",
-    "collection_get_page2", "collection_get_where",
-    "collection_query_ip_topk", "collection_query_topk",
-    "cube_status_priority", "dedup_gate_against_index",
-    "dedup_repeated_ngrams", "doc_token_entropy", "docs_where_dsl_filter",
-    "embed_dim_stats", "embed_projection_rows", "file_context",
-    "hybrid_rrf_topk", "index_pipeline", "knn_file_summary_query",
-    "knn_int8_rerank", "knn_int8_topk", "knn_join_ivf_topk",
-    "knn_join_topk", "knn_mmr_topk", "knn_text_query",
+    "ann_ivfpq_sampled_topk", "ann_ivfpq_topk", "bm25_topk",
+    "cap_docs_per_source", "chunk_js_elements", "collection_get_page2",
+    "collection_get_where", "collection_query_ip_topk",
+    "collection_query_topk", "cube_status_priority",
+    "dedup_gate_against_index", "dedup_repeated_ngrams", "doc_token_entropy",
+    "docs_where_dsl_filter", "embed_dim_stats", "embed_projection_rows",
+    "file_context", "hybrid_rrf_topk", "index_pipeline",
+    "knn_file_summary_query", "knn_int8_rerank", "knn_int8_topk",
+    "knn_join_ivf_topk", "knn_join_topk", "knn_mmr_topk", "knn_text_query",
     "knn_where_dsl_topk", "lm_bigram_score", "msm_topk_served",
-    "normalize_text_corpus", "q14_promo_revenue",
-    "q16_supplier_part_counts", "q18_large_orders", "q1_pricing_summary",
-    "q3_top_orders", "q4_order_priority", "q5_region_revenue",
-    "q6_revenue_forecast", "q9_brand_profit", "rp_lsh_band_rows",
+    "normalize_text_corpus", "rp_lsh_band_rows",
 })
 
 # CORRECTNESS_r12.json: 50/50 green — the whole r12 new-key cohort
@@ -389,27 +357,23 @@ _CHECKED_R11 = frozenset({
 # facade graph serving), every r12 rewrite (the former _REWRITTEN
 # members below), and the rotated oldest cohorts.
 _CHECKED_R12 = frozenset({
-    'agg_correlation', 'agg_percentiles', 'ann_binq_ivf_topk',
-    'ann_binq_topk', 'ann_graph_batch_topk', 'ann_graph_filtered_topk',
-    'ann_graph_tombstone_topk', 'ann_graph_topk',
-    'ann_graph_vacuumed_topk', 'ann_ivf_sampled_topk',
-    'ann_ivf_trained_topk', 'ann_ivfpq_sampled_topk', 'ann_ivfpq_topk',
-    'basket_brand_lift', 'binq_hamming_topk', 'bm25_folded_topk_served',
-    'bm25_page2_served', 'bm25_topk_served', 'collection_get_page2',
-    'collection_get_where', 'collection_query_graph_batch_topk',
-    'collection_query_graph_topk', 'collection_query_ip_topk',
-    'collection_query_topk', 'customers_with_high_value_orders',
-    'customers_without_orders', 'dedup_gate_against_index',
-    'dedup_gate_intra_batch', 'events_anomaly_zscore',
-    'events_gap_stats', 'events_rate_limited_sample',
+    'agg_correlation', 'agg_percentiles', 'ann_binq_ivf_topk', 'ann_binq_topk',
+    'ann_graph_batch_topk', 'ann_graph_filtered_topk',
+    'ann_graph_tombstone_topk', 'ann_graph_topk', 'ann_graph_vacuumed_topk',
+    'ann_ivf_sampled_topk', 'ann_ivf_trained_topk', 'ann_ivfpq_sampled_topk',
+    'ann_ivfpq_topk', 'basket_brand_lift', 'binq_hamming_topk',
+    'bm25_folded_topk_served', 'bm25_page2_served', 'bm25_topk_served',
+    'collection_get_page2', 'collection_get_where',
+    'collection_query_graph_batch_topk', 'collection_query_graph_topk',
+    'collection_query_ip_topk', 'collection_query_topk',
+    'customers_with_high_value_orders', 'customers_without_orders',
+    'dedup_gate_against_index', 'dedup_gate_intra_batch',
+    'events_anomaly_zscore', 'events_gap_stats', 'events_rate_limited_sample',
     'histogram_order_totals', 'hybrid_weighted_served_topk',
     'hybrid_weighted_topk', 'knn_join_ivf_topk', 'msm_topk_served',
-    'orders_above_avg', 'q19_disjunctive_revenue',
-    'rollup_segment_status', 'scd2_user_state_history',
-    'skew_key_profile',
-    'trend_event_values',
-    'unpivot_event_matrix', 'window_moving_avg',
-    'window_running_revenue', 'window_topn_orders',
+    'orders_above_avg', 'rollup_segment_status', 'scd2_user_state_history',
+    'skew_key_profile', 'trend_event_values', 'unpivot_event_matrix',
+    'window_moving_avg', 'window_running_revenue', 'window_topn_orders',
     'window_trailing_value_sum',
 })
 
@@ -421,22 +385,19 @@ _CHECKED_R13 = frozenset({
     "agg_docs_by_lang", "agg_job_totals", "agg_source_summary",
     "ann_graph_acorn_batch_topk", "ann_graph_acorn_topk",
     "ann_graph_batch_topk", "ann_graph_filtered_topk",
-    "ann_graph_recursive_topk", "ann_graph_tombstone_topk",
-    "ann_graph_topk", "ann_graph_vacuumed_topk", "bpe_pair_counts",
-    "chunk_fixed_lines", "chunk_fixed_words", "chunk_markdown_sections",
-    "collection_get_snapshot", "collection_query_graph_acorn_topk",
-    "collection_query_graph_batch_topk", "collection_query_graph_topk",
-    "collection_rollback_get", "curate_corpus", "curate_corpus_full",
-    "dedup_canonical_selection", "dedup_substring_rewrite",
-    "doc_fingerprint", "filter_by_element_type", "filter_by_file",
-    "filter_by_lang", "filter_ext_dispatch", "hybrid_weighted_graph_topk",
-    "knn_batch_topk", "knn_classify", "knn_topk", "knn_topk_filtered",
-    "line_dedup_corpus", "lm_perplexity_score", "mixture_sample",
-    "orc_roundtrip", "pack_sequences",
-    "point_lookup", "quality_score", "redact_pii",
-    "score_similarity_pairs",
-    "split_train_holdout", "text_stats", "tfidf_top_terms",
-    "token_count", "user_activity_profile",
+    "ann_graph_recursive_topk", "ann_graph_tombstone_topk", "ann_graph_topk",
+    "ann_graph_vacuumed_topk", "bpe_pair_counts", "chunk_fixed_lines",
+    "chunk_fixed_words", "chunk_markdown_sections", "collection_get_snapshot",
+    "collection_query_graph_acorn_topk", "collection_query_graph_batch_topk",
+    "collection_query_graph_topk", "collection_rollback_get", "curate_corpus",
+    "curate_corpus_full", "dedup_canonical_selection",
+    "dedup_substring_rewrite", "doc_fingerprint", "filter_by_element_type",
+    "filter_by_file", "filter_by_lang", "filter_ext_dispatch",
+    "hybrid_weighted_graph_topk", "knn_batch_topk", "knn_classify", "knn_topk",
+    "knn_topk_filtered", "line_dedup_corpus", "lm_perplexity_score",
+    "mixture_sample", "pack_sequences", "point_lookup", "quality_score",
+    "redact_pii", "score_similarity_pairs", "split_train_holdout",
+    "text_stats", "tfidf_top_terms", "token_count", "user_activity_profile",
 })
 
 # Green (rows+schema+hash) in CORRECTNESS_r14.json — all 50 window keys:
@@ -446,24 +407,17 @@ _CHECKED_R13 = frozenset({
 _CHECKED_R14 = frozenset({
     "ann_graph_acorn_batch_topk", "ann_graph_acorn_topk",
     "ann_graph_batch_topk", "ann_graph_filtered_topk",
-    "ann_graph_recursive_topk", "ann_graph_tombstone_topk",
-    "ann_graph_topk", "ann_graph_vacuumed_topk", "c4_line_filter",
-    "chunk_ast_python", "collection_query_graph_acorn_topk",
-    "collection_query_graph_batch_topk", "collection_query_graph_topk",
-    "collection_replace_graph_topk", "dedup_containment_gate",
-    "dedup_containment_pairs", "dedup_exact", "diag_generic",
-    "diag_js_ts", "diag_python", "diag_python_syntax",
+    "ann_graph_recursive_topk", "ann_graph_tombstone_topk", "ann_graph_topk",
+    "ann_graph_vacuumed_topk", "c4_line_filter", "chunk_ast_python",
+    "collection_query_graph_acorn_topk", "collection_query_graph_batch_topk",
+    "collection_query_graph_topk", "collection_replace_graph_topk",
+    "dedup_containment_gate", "dedup_containment_pairs", "dedup_exact",
+    "diag_generic", "diag_js_ts", "diag_python", "diag_python_syntax",
     "embed_quantize_int8", "embed_topvar_project", "gopher_quality_flags",
     "hybrid_weighted_graph_topk", "knn_join_ivf_topk", "knn_pq_rerank",
-    "knn_pq_topk", "knn_regress", "lang_id_ngram",
-    "minhash_band_rows", "minhash_signature_rows", "ngram_jaccard_pairs",
-    "pq_encode_rows", "q10_returned_revenue", "q11_important_stock",
-    "q12_ship_delay_priority", "q13_customer_distribution",
-    "q15_top_supplier", "q17_small_qty_revenue", "q20_excess_suppliers",
-    "q21_waiting_suppliers", "q22_idle_customer_balance",
-    "q2_min_cost_supplier", "q7_volume_shipping", "q8_market_share",
-    "split_assignment", "stratified_sample",
-    "winnow_fingerprints",
+    "knn_pq_topk", "knn_regress", "lang_id_ngram", "minhash_band_rows",
+    "minhash_signature_rows", "ngram_jaccard_pairs", "pq_encode_rows",
+    "split_assignment", "stratified_sample", "winnow_fingerprints",
 })
 
 # Green (rows+schema+hash) in CORRECTNESS_r15.json — all 50 window keys:
@@ -473,27 +427,22 @@ _CHECKED_R14 = frozenset({
 # the rotated r7/r8 cohort.
 _CHECKED_R15 = frozenset({
     "agg_collection_count", "ann_graph_acorn_batch_topk",
-    "ann_graph_acorn_topk", "ann_graph_batch_topk",
-    "ann_graph_filtered_topk", "ann_graph_recursive_topk",
-    "ann_graph_tombstone_topk", "ann_graph_topk",
-    "ann_graph_vacuumed_topk", "ann_rp_lsh_multiprobe_topk",
-    "ann_rp_lsh_topk", "asof_join_purchase_click", "cluster_kmeans",
-    "collection_query_graph_acorn_topk",
-    "collection_query_graph_batch_topk", "collection_query_graph_topk",
-    "collection_replace_graph_topk", "csv_roundtrip",
+    "ann_graph_acorn_topk", "ann_graph_batch_topk", "ann_graph_filtered_topk",
+    "ann_graph_recursive_topk", "ann_graph_tombstone_topk", "ann_graph_topk",
+    "ann_graph_vacuumed_topk", "ann_rp_lsh_multiprobe_topk", "ann_rp_lsh_topk",
+    "asof_join_purchase_click", "cluster_kmeans",
+    "collection_query_graph_acorn_topk", "collection_query_graph_batch_topk",
+    "collection_query_graph_topk", "collection_replace_graph_topk",
     "decontaminate_corpus", "dedup_connected_components",
     "dedup_containment_gate", "dedup_containment_gate_ingested",
-    "dedup_containment_pairs", "dedup_embedding_cosine",
-    "dedup_minhash_pairs", "dsir_importance_select",
-    "dup_cluster_size_histogram", "events_by_dow", "events_sessionize",
-    "events_sliding_counts", "events_tumbling_counts",
+    "dedup_containment_pairs", "dedup_embedding_cosine", "dedup_minhash_pairs",
+    "dsir_importance_select", "dup_cluster_size_histogram", "events_by_dow",
+    "events_sessionize", "events_sliding_counts", "events_tumbling_counts",
     "funnel_signup_purchase", "hybrid_weighted_graph_topk",
-    "json_props_rollup", "jsonl_roundtrip", "late_interaction_topk",
-    "minhash_jaccard_estimate", "pivot_event_matrix",
-    "quality_repetition", "range_join_bursts", "retention_day_over_day",
-    "rp_index_vec_rows", "salted_event_totals", "salted_skew_join",
-    "setop_active_noncustomers",
-    "tokenize_bpe_encode",
+    "json_props_rollup", "late_interaction_topk", "minhash_jaccard_estimate",
+    "pivot_event_matrix", "quality_repetition", "range_join_bursts",
+    "retention_day_over_day", "rp_index_vec_rows", "salted_event_totals",
+    "salted_skew_join", "setop_active_noncustomers", "tokenize_bpe_encode",
     "upsert_latest_events",
 })
 
@@ -641,11 +590,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bpe_pair_counts": _text.bpe_pair_counts,
         "tokenize_bpe_encode": _text.tokenize_bpe_encode,
         "curate_corpus_full": _text.curate_corpus_full,
-        # multi-format IO fidelity (sources/formats.py): write->read round
-        # trips; the oracle aggregates the ORIGINAL parquet
-        "jsonl_roundtrip": _fmt.jsonl_roundtrip,
-        "csv_roundtrip": _fmt.csv_roundtrip,
-        "orc_roundtrip": _fmt.orc_roundtrip,
         "cluster_kmeans": _ann.cluster_kmeans,
         "pq_encode_rows": _ann.pq_encode_rows,
         "knn_pq_topk": _ann.knn_pq_topk,
@@ -972,28 +916,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # trade over the exact top-pool, unrolled-CTE oracle twin
         "knn_mmr_topk": _knn.knn_mmr_topk,
         # relational surface (extended engine)
-        "q1_pricing_summary": _rel.q1_pricing_summary,
-        "q3_top_orders": _rel.q3_top_orders,
-        "q5_region_revenue": _rel.q5_region_revenue,
-        "q6_revenue_forecast": _rel.q6_revenue_forecast,
-        "q9_brand_profit": _rel.q9_brand_profit,
-        "q4_order_priority": _rel.q4_order_priority,
-        "q14_promo_revenue": _rel.q14_promo_revenue,
-        "q16_supplier_part_counts": _rel.q16_supplier_part_counts,
-        "q18_large_orders": _rel.q18_large_orders,
-        "q19_disjunctive_revenue": _rel.q19_disjunctive_revenue,
-        "q10_returned_revenue": _rel.q10_returned_revenue,
-        "q12_ship_delay_priority": _rel.q12_ship_delay_priority,
-        "q13_customer_distribution": _rel.q13_customer_distribution,
-        "q17_small_qty_revenue": _rel.q17_small_qty_revenue,
-        "q22_idle_customer_balance": _rel.q22_idle_customer_balance,
-        "q2_min_cost_supplier": _rel.q2_min_cost_supplier,
-        "q7_volume_shipping": _rel.q7_volume_shipping,
-        "q8_market_share": _rel.q8_market_share,
-        "q11_important_stock": _rel.q11_important_stock,
-        "q15_top_supplier": _rel.q15_top_supplier,
-        "q20_excess_suppliers": _rel.q20_excess_suppliers,
-        "q21_waiting_suppliers": _rel.q21_waiting_suppliers,
         "window_topn_orders": _rel.window_topn_orders,
         "window_running_revenue": _rel.window_running_revenue,
         "customers_without_orders": _rel.customers_without_orders,
@@ -3012,17 +2934,6 @@ FROM v LEFT JOIN pruned p ON v.vec_id = p.vec_id
 """
     )
 
-# Fidelity oracle for the format round trips: aggregates the ORIGINAL
-# parquet — the Spark side aggregates what came back from JSONL/CSV, so
-# any value bent in transit breaks the checksum hash-match.
-_ROUNDTRIP_SQL = """
-SELECT source, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS total_chars,
-       count(DISTINCT lang) AS n_langs,
-       min(doc_id) AS min_doc, max(doc_id) AS max_doc,
-       CAST(sum(CAST(('0x' || substr(md5(doc_id || '|' || lang || '|' || n_chars || '|' || text), 1, 15)) AS BIGINT) % 1000000007) AS BIGINT) AS checksum
-FROM documents GROUP BY source
-"""
-
 
 def _knn_sql(extra_where: str = "") -> str:
     cos = _COS.format(a="e.embedding", b="q.q_emb")
@@ -4056,9 +3967,6 @@ WHERE d.doc_id IN (SELECT doc_id FROM keep)
   AND q.quality >= 0.5
   AND pplx.nll_micro <= 9000000
 """,
-        "jsonl_roundtrip": _ROUNDTRIP_SQL,
-        "csv_roundtrip": _ROUNDTRIP_SQL,
-        "orc_roundtrip": _ROUNDTRIP_SQL,
         "cluster_kmeans": _kmeans_sql(),
         "semdedup_prune": _semdedup_sql(),
         "pq_encode_rows": _pq_encode_sql(),
@@ -6566,303 +6474,6 @@ SELECT e.vec_id,
        CAST(top.rank AS INTEGER) AS rank,
        CAST(e.embedding[top.pos + 1] AS DOUBLE) AS component
 FROM embeddings e CROSS JOIN top
-""",
-        "q1_pricing_summary": """
-SELECT l_returnflag, l_linestatus,
-       round(sum(l_quantity), 2) AS sum_qty,
-       round(sum(l_extendedprice), 2) AS sum_base_price,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-       round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2) AS sum_charge,
-       round(avg(l_quantity), 4) AS avg_qty,
-       round(avg(l_extendedprice), 4) AS avg_price,
-       round(avg(l_discount), 4) AS avg_disc,
-       count(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-GROUP BY l_returnflag, l_linestatus
-ORDER BY l_returnflag, l_linestatus
-""",
-        "q3_top_orders": """
-SELECT o_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-WHERE c_mktsegment = 'BUILDING' AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-GROUP BY 1, 2
-ORDER BY revenue DESC, o_orderkey
-LIMIT 10
-""",
-        "q5_region_revenue": """
-SELECT r_name, n_name,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-       count(*) AS n_items
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-GROUP BY r_name, n_name
-ORDER BY r_name, n_name
-""",
-        "q6_revenue_forecast": """
-SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue,
-       count(*) AS n_items
-FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-  AND l_discount >= 0.03 AND l_discount <= 0.07
-  AND l_quantity < 24
-""",
-        "q9_brand_profit": """
-SELECT n_name, p_brand,
-       round(sum(l_extendedprice * (1 - l_discount)
-                 - p_retailprice * l_quantity * 0.1), 2) AS profit,
-       count(*) AS n_items
-FROM lineitem
-JOIN part ON l_partkey = p_partkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation ON s_nationkey = n_nationkey
-GROUP BY n_name, p_brand
-""",
-        "q4_order_priority": """
-SELECT o_orderpriority, count(*) AS order_count
-FROM orders o
-WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-  AND o_orderdate < TIMESTAMP '1996-07-01 00:00:00'
-  AND EXISTS (SELECT 1 FROM lineitem l
-              WHERE l.l_orderkey = o.o_orderkey
-                AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
-GROUP BY o_orderpriority
-ORDER BY o_orderpriority
-""",
-        "q14_promo_revenue": """
-WITH agg AS (
-    SELECT round(sum(CASE WHEN p_type = 'PROMO'
-                          THEN l_extendedprice * (1 - l_discount)
-                          ELSE 0.0 END), 2) AS promo_revenue,
-           round(sum(l_extendedprice * (1 - l_discount)), 2) AS total_revenue
-    FROM lineitem JOIN part ON l_partkey = p_partkey
-    WHERE l_shipdate >= TIMESTAMP '1997-03-01 00:00:00'
-      AND l_shipdate < TIMESTAMP '1997-04-01 00:00:00'
-)
-SELECT promo_revenue, total_revenue,
-       round(100.0::DOUBLE * promo_revenue / total_revenue, 4) AS promo_pct
-FROM agg
-""",
-        "q16_supplier_part_counts": """
-SELECT p_brand, p_type, p_size, count(DISTINCT l_suppkey) AS supplier_cnt
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE p_size IN (1, 14, 23, 45)
-  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-GROUP BY p_brand, p_type, p_size
-ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
-""",
-        "q18_large_orders": """
-WITH big AS (
-    SELECT l_orderkey, round(sum(l_quantity), 2) AS total_qty
-    FROM lineitem GROUP BY l_orderkey
-    HAVING round(sum(l_quantity), 2) > 300.0
-)
-SELECT c_name, c_custkey, o_orderkey,
-       strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate,
-       round(o_totalprice, 2) AS o_totalprice, total_qty
-FROM big
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-ORDER BY o_totalprice DESC, o_orderkey
-LIMIT 100
-""",
-        "q19_disjunctive_revenue": """
-SELECT round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-       count(*) AS n_items
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 1 AND 11)
-   OR (p_brand = 'Brand#23' AND p_size BETWEEN 16 AND 30 AND l_quantity BETWEEN 10 AND 20)
-   OR (p_brand = 'Brand#34' AND p_size BETWEEN 31 AND 50 AND l_quantity BETWEEN 20 AND 30)
-""",
-        "q10_returned_revenue": """
-SELECT c_custkey, c_name, c_acctbal, n_name,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-FROM orders
-JOIN lineitem ON o_orderkey = l_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-WHERE o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
-  AND o_orderdate < TIMESTAMP '1997-04-01 00:00:00'
-  AND l_returnflag = 'R'
-GROUP BY c_custkey, c_name, c_acctbal, n_name
-ORDER BY revenue DESC, c_custkey
-LIMIT 20
-""",
-        "q12_ship_delay_priority": """
-SELECT CASE WHEN date_diff('day', o_orderdate, l_shipdate) > 90 THEN 'slow'
-            WHEN date_diff('day', o_orderdate, l_shipdate) > 30 THEN 'medium'
-            ELSE 'fast' END AS delay_bucket,
-       CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-       CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-GROUP BY delay_bucket
-ORDER BY delay_bucket
-""",
-        "q13_customer_distribution": """
-WITH per_cust AS (
-    SELECT c_custkey, count(o_orderkey) AS c_count
-    FROM customer
-    LEFT OUTER JOIN orders
-      ON o_custkey = c_custkey AND o_orderpriority <> '1-URGENT'
-    GROUP BY c_custkey
-)
-SELECT c_count, count(*) AS custdist
-FROM per_cust GROUP BY c_count
-ORDER BY custdist DESC, c_count DESC
-""",
-        "q17_small_qty_revenue": """
-WITH sel AS (
-    SELECT l.l_quantity, l.l_extendedprice,
-           avg(l.l_quantity) OVER (PARTITION BY l.l_partkey) AS part_avg
-    FROM lineitem l
-    JOIN part p ON l.l_partkey = p.p_partkey
-    WHERE p.p_brand = 'Brand#23' AND p.p_size < 10
-)
-SELECT round(sum(l_extendedprice) / 7.0, 2) AS avg_yearly
-FROM sel WHERE l_quantity < 0.2 * part_avg
-""",
-        "q22_idle_customer_balance": """
-WITH pos_avg AS (
-    SELECT avg(c_acctbal) AS avg_bal FROM customer WHERE c_acctbal > 0.0
-)
-SELECT n_name, count(*) AS numcust,
-       round(sum(c_acctbal), 2) AS totacctbal
-FROM customer, pos_avg
-JOIN nation ON c_nationkey = n_nationkey
-WHERE c_acctbal > avg_bal
-  AND NOT EXISTS (SELECT 1 FROM orders
-                  WHERE o_custkey = c_custkey
-                    AND o_orderpriority = '1-URGENT')
-GROUP BY n_name
-ORDER BY n_name
-""",
-        "q2_min_cost_supplier": """
-WITH ps AS (
-    SELECT l_partkey, l_suppkey,
-           min(l_extendedprice / l_quantity) AS supply_cost
-    FROM lineitem GROUP BY 1, 2
-),
-j AS (
-    SELECT s.s_acctbal, s.s_name, n.n_name, p.p_partkey, p.p_name,
-           ps.supply_cost,
-           min(ps.supply_cost) OVER (PARTITION BY p.p_partkey) AS min_cost
-    FROM ps
-    JOIN supplier s ON ps.l_suppkey = s.s_suppkey
-    JOIN nation n ON s.s_nationkey = n.n_nationkey
-    JOIN region r ON n.n_regionkey = r.r_regionkey AND r.r_name = 'EUROPE'
-    JOIN part p ON ps.l_partkey = p.p_partkey
-    WHERE p.p_type = 'LARGE' AND p.p_size < 10
-)
-SELECT round(s_acctbal, 2) AS s_acctbal, s_name, n_name, p_partkey, p_name,
-       CAST(floor(supply_cost * 10000) AS BIGINT) AS supply_cost_e4
-FROM j WHERE supply_cost = min_cost
-ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
-LIMIT 100
-""",
-        "q7_volume_shipping": """
-SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
-       CAST(year(l_shipdate) AS INTEGER) AS l_year,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation sn ON s_nationkey = sn.n_nationkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation cn ON c_nationkey = cn.n_nationkey
-WHERE (sn.n_name = 'NATION_1' AND cn.n_name = 'NATION_2')
-   OR (sn.n_name = 'NATION_2' AND cn.n_name = 'NATION_1')
-GROUP BY 1, 2, 3
-ORDER BY 1, 2, 3
-""",
-        "q8_market_share": """
-SELECT CAST(year(o_orderdate) AS INTEGER) AS o_year,
-       round(round(sum(CASE WHEN sn.n_name = 'NATION_3'
-                            THEN l_extendedprice * (1 - l_discount)
-                            ELSE 0.0 END), 2)
-             / round(sum(l_extendedprice * (1 - l_discount)), 2), 6) AS mkt_share
-FROM lineitem
-JOIN part ON l_partkey = p_partkey AND p_type = 'ECONOMY'
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation cn ON c_nationkey = cn.n_nationkey
-JOIN region ON cn.n_regionkey = r_regionkey AND r_name = 'AMERICA'
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation sn ON s_nationkey = sn.n_nationkey
-GROUP BY 1
-ORDER BY 1
-""",
-        "q11_important_stock": """
-WITH sn AS (
-    SELECT s_suppkey FROM supplier
-    JOIN nation ON s_nationkey = n_nationkey WHERE n_name = 'NATION_5'
-),
-per_part AS (
-    SELECT l_partkey AS p_partkey, round(sum(l_extendedprice), 2) AS part_value
-    FROM lineitem JOIN sn ON l_suppkey = s_suppkey
-    GROUP BY 1
-),
-tot AS (SELECT round(sum(part_value), 2) AS total_value FROM per_part)
-SELECT p_partkey, part_value
-FROM per_part CROSS JOIN tot
-WHERE part_value > total_value * 0.001
-ORDER BY part_value DESC, p_partkey
-""",
-        "q15_top_supplier": """
-WITH rev AS (
-    SELECT l_suppkey,
-           round(sum(l_extendedprice * (1 - l_discount)), 2) AS total_revenue
-    FROM lineitem
-    WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-      AND l_shipdate < TIMESTAMP '1997-04-01 00:00:00'
-    GROUP BY 1
-),
-mx AS (SELECT max(total_revenue) AS m FROM rev)
-SELECT s_suppkey, s_name, total_revenue
-FROM rev CROSS JOIN mx
-JOIN supplier ON l_suppkey = s_suppkey
-WHERE total_revenue = m
-ORDER BY s_suppkey
-""",
-        "q20_excess_suppliers": """
-WITH good AS (
-    SELECT l_suppkey FROM lineitem
-    WHERE year(l_shipdate) = 1997
-      AND l_partkey IN (SELECT p_partkey FROM part WHERE p_name LIKE 'small%')
-    GROUP BY l_suppkey HAVING sum(l_quantity) > 200.0
-)
-SELECT s_name, round(s_acctbal, 2) AS s_acctbal
-FROM supplier JOIN nation ON s_nationkey = n_nationkey
-WHERE n_name = 'NATION_7'
-  AND s_suppkey IN (SELECT l_suppkey FROM good)
-ORDER BY s_name
-""",
-        "q21_waiting_suppliers": """
-WITH lo AS (
-    SELECT l_orderkey, l_suppkey,
-           date_diff('day', o_orderdate, l_shipdate) > 90 AS is_late
-    FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    WHERE o_orderstatus = 'F'
-),
-sole AS (
-    SELECT l_orderkey, count(DISTINCT l_suppkey) AS n_supp,
-           count(DISTINCT CASE WHEN is_late THEN l_suppkey END) AS n_late_supp,
-           max(CASE WHEN is_late THEN l_suppkey END) AS l_suppkey
-    FROM lo GROUP BY 1
-)
-SELECT s_name, CAST(count(*) AS BIGINT) AS numwait
-FROM sole
-JOIN supplier ON sole.l_suppkey = s_suppkey
-WHERE n_supp >= 2 AND n_late_supp = 1
-GROUP BY s_name
-ORDER BY numwait DESC, s_name
-LIMIT 100
 """,
         "window_topn_orders": """
 SELECT o_custkey, o_orderkey, o_totalprice, CAST(rn AS INTEGER) AS rn FROM (

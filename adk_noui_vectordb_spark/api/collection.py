@@ -1764,6 +1764,9 @@ class Collection:
         cur, info = self._require()
         if offset is not None and after_id is not None:
             raise ValueError("pass offset OR after_id, not both")
+        for name, val in (("limit", limit), ("offset", offset)):
+            if val is not None and val < 0:
+                raise ValueError(f"{name} must be >= 0, got {val}")
         inc = {"documents", "metadatas"} if include is None else set(include)
         unknown = inc - {"documents", "metadatas", "embeddings"}
         if unknown:
@@ -1882,6 +1885,8 @@ class Collection:
         unknown = inc - {"documents", "metadatas", "embeddings", "distances"}
         if unknown:
             raise ValueError(f"include: unknown items {sorted(unknown)}")
+        if n_results < 1:
+            raise ValueError(f"n_results must be >= 1, got {n_results}")
         if (query_embeddings is None) == (query_texts is None):
             raise ValueError(
                 "pass exactly one of query_embeddings / query_texts"

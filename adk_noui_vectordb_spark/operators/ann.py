@@ -185,8 +185,8 @@ def _pair_eq(pairs):
 IVF_ASSIGN_SCHEMA = "vec_id bigint, cluster int"
 PQ_CODES_SCHEMA = "vec_id bigint, subspace int, code int, vbucket int"
 
-# compact_index component specs — shared by explicit compaction and the
-# update/delete auto-compaction hook (VERDICT r9 next #7).
+# compact_index component specs — used by the update/delete
+# auto-compaction hook (VERDICT r9 next #7) and ``compact_rp_index``.
 RP_COMPONENTS = [("bands", ["band", "band_key"]), ("vecs", ["vbucket"])]
 IVF_COMPONENTS = [("assign", ["cluster"]), ("vecs", ["vbucket"]), ("cents", [])]
 PQ_COMPONENTS = [("codes", ["vbucket"]), ("vecs", ["vbucket"]), ("cents", [])]
@@ -1111,9 +1111,9 @@ def update_ivf_index(
     re-submitted vec_ids rewrite their OLD cells — recovered by
     re-assigning their OLD vectors from the index's ``vecs/`` store
     (assignment is a pure function of the stored vector under frozen
-    centroids — ``vecs/`` doubles as the reverse map).
-    ``compact_ivf_index`` folds the accumulated append files back.
-    Periodic full retrains (``build_ivf_index`` on a fresh root) remain
+    centroids — ``vecs/`` doubles as the reverse map). Auto-compaction
+    past ``auto_compact_threshold`` folds the accumulated append files
+    back. Periodic full retrains (``build_ivf_index`` on a fresh root) remain
     the answer to centroid drift, exactly as in any production IVF.
 
     Atomic versioned commit (sources/versioning.py): untouched cells
@@ -2157,7 +2157,7 @@ def update_pq_index(
     vbucket partitions — found DIRECTLY (vbucket is a pure function of
     vec_id, so stale codes/vecs prune to the batch's literal buckets —
     no reverse derivation needed). Atomic ``_CURRENT`` commit;
-    ``compact_pq_index`` folds append files back. Codebook drift is
+    auto-compaction folds append files back. Codebook drift is
     answered by periodic retrains, as everywhere in this family.
     """
     from ..sources import versioning as vn
@@ -2258,24 +2258,6 @@ def update_pq_index(
         compact_threshold=auto_compact_threshold,
     )
     return os.path.join(new_cur, "codes"), os.path.join(new_cur, "cents")
-
-
-def compact_pq_index(
-    spark: SparkSession,
-    sf_dir: str,
-    m: int = PQ_M,
-    k: int = PQ_K,
-    iters: int = 2,
-    threshold: int = 4,
-) -> str:
-    """Small-file compaction for the PQ index (codes/vecs; frozen cents
-    link through). Returns the current version dir."""
-    from ..sources import versioning as vn
-
-    build_pq_index(spark, sf_dir, m, k, iters)
-    return vn.compact_index(
-        spark, _pq_index_root(sf_dir, m, k, iters), PQ_COMPONENTS, threshold
-    )
 
 
 def pq_encode_rows(
@@ -2617,23 +2599,6 @@ def compact_rp_index(
     return vn.compact_index(spark, rp_index_root(sf_dir), RP_COMPONENTS, threshold)
 
 
-def compact_ivf_index(
-    spark: SparkSession,
-    sf_dir: str,
-    n_centroids: int = 8,
-    iters: int = 2,
-    threshold: int = 4,
-) -> str:
-    """Small-file compaction for the trained-IVF index (assign/vecs;
-    frozen cents link through). Returns the current version dir."""
-    from ..sources import versioning as vn
-
-    build_ivf_index(spark, sf_dir, n_centroids, iters)
-    return vn.compact_index(
-        spark, ivf_index_root(sf_dir, n_centroids, iters), IVF_COMPONENTS, threshold
-    )
-
-
 def rp_index_vec_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The RP index's ``vecs/`` store as driver-checkable rows
     (vec_id, vbucket) — validates the r9 index-resident vector store
@@ -2927,8 +2892,8 @@ def delete_from_pq_index(
 
 IVFPQ_PLIST_SCHEMA = "vec_id bigint, subspace int, code int, cluster int"
 
-# compact_index component spec — shared by explicit compaction and the
-# update/delete auto-compaction hook.
+# compact_index component spec — used by the update/delete
+# auto-compaction hook.
 IVFPQ_COMPONENTS = [
     ("plist", ["cluster"]),
     ("vecs", ["vbucket"]),

@@ -8,9 +8,11 @@ fixed-50-line fallback (reference: coding_agent/tools/indexing_agent.py:
 Spark-first: the line/word chunkers and the markdown sectioner are PURE SQL
 (posexplode + window + groupBy) — no Python in the row path, fully
 parallel, and the groupBy shuffles on (doc, chunk) which is perfectly
-balanced at any scale. The tree-sitter parser (native lib) is the one
-genuinely imperative piece and is gated behind availability in
-``chunk_tree_sitter`` with the fixed chunker as fallback.
+balanced at any scale. The reference's tree-sitter walk is the one
+genuinely imperative piece; it is reimplemented without native deps as
+``chunk_python_ast`` (stdlib ``ast``) and ``chunk_js_elements`` (heuristic
+js/ts extractor). ``indexing.build_index`` routes each file to one of
+them, to the markdown sectioner or to the fixed-line chunker.
 """
 
 from __future__ import annotations
@@ -611,27 +613,3 @@ def chunk_js_elements(source_df: DataFrame) -> DataFrame:
 
     return source_df.select("path", "content").mapInPandas(extract, JS_SCHEMA)
 
-
-def chunk_tree_sitter(source_df: DataFrame) -> DataFrame:
-    """Multi-language element chunking (indexing_agent.py:150-240): .py
-    routes through the stdlib-``ast`` extractor (real
-    functions/classes/imports), .js/.ts/.tsx/.jsx through the heuristic
-    js/ts element extractor — both zero-native-dep reimplementations of
-    the reference's tree-sitter walk — and everything else through
-    ``chunk_fixed_lines`` (the reference's fallback,
-    indexing_agent.py:140-142)."""
-    is_js = (
-        F.col("path").endswith(".js")
-        | F.col("path").endswith(".ts")
-        | F.col("path").endswith(".tsx")
-        | F.col("path").endswith(".jsx")
-    )
-    py = source_df.filter(F.col("path").endswith(".py"))
-    js = source_df.filter(is_js)
-    rest = source_df.filter(~F.col("path").endswith(".py") & ~is_js)
-    return (
-        chunk_python_ast(py)
-        .drop("docstring")
-        .unionByName(chunk_js_elements(js))
-        .unionByName(chunk_fixed_lines(rest))
-    )

@@ -2021,8 +2021,8 @@ GATE_MIN_MATCHES = 8
 MINHASH_BANDS_SCHEMA = "doc_id bigint, band_hash string, band int, kbucket int"
 MINHASH_SIGS_SCHEMA = _WIDE_SCHEMA + ", sbucket int"
 
-# compact_index component spec — shared by explicit compaction and the
-# update auto-compaction hook (VERDICT r9 next #7).
+# compact_index component spec — used by the update/delete
+# auto-compaction hook (VERDICT r9 next #7).
 MINHASH_COMPONENTS = [("bands", ["band", "kbucket"]), ("sigs", ["sbucket"])]
 
 
@@ -2140,7 +2140,8 @@ def update_minhash_index(
     from its STORED signature (banding is a pure function of the
     signature — ``sigs/`` doubles as the reverse map, pruned by the
     batch's literal sbucket set) and only those partitions rewrite.
-    Atomic versioned commit; compaction via ``compact_minhash_index``.
+    Atomic versioned commit; auto-compaction past
+    ``auto_compact_threshold``.
     """
     import os
 
@@ -2236,20 +2237,6 @@ def update_minhash_index(
         expected=os.path.basename(cur),
         compact=MINHASH_COMPONENTS,
         compact_threshold=auto_compact_threshold,
-    )
-
-
-def compact_minhash_index(
-    spark: SparkSession, sf_dir: str, threshold: int = 4
-) -> str:
-    from ..sources import versioning as vn
-
-    build_minhash_index(spark, sf_dir)
-    return vn.compact_index(
-        spark,
-        minhash_index_root(sf_dir),
-        MINHASH_COMPONENTS,
-        threshold,
     )
 
 

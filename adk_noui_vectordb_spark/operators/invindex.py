@@ -185,7 +185,7 @@ def doc_positions(docs: DataFrame, analyzer: str = "raw") -> DataFrame:
 
 def text_index_root(sf_dir: str, analyzer: str = "raw") -> str:
     """The fingerprint-tagged VERSIONED root (holds version dirs, the
-    ``_CURRENT`` pointer and the streaming ``applied/`` markers).
+    ``_CURRENT`` pointer).
     v3: the positions component joined the layout — the tag bump keeps
     any pre-positions root from serving phrase queries. Non-raw
     analyzers get their OWN root (different token universe = a

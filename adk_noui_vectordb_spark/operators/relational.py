@@ -1,20 +1,20 @@
-"""Standard relational surface over the star schema (extended engine).
+"""Windowed, grouped and set-based analytics over the star schema and the
+event log (extended engine).
 
-The reference has no SQL layer (SURVEY.md top matter), but the driver's
-north star extends the engine with a standard analytic surface. These are
-TPC-H-shaped queries expressed declaratively so Catalyst supplies predicate
-pushdown, column pruning, join reordering and AQE for free.
+The reference has no SQL layer (SURVEY.md top matter); these operators
+exercise the analytic surface Catalyst plans for free: ranking, running and
+bounded-frame windows, event-time tumbling/sliding windows and
+sessionization, ROLLUP/CUBE grouping sets, percentiles, pivot/unpivot,
+anti/semi joins and EXCEPT, salted aggregation and joins for skewed keys,
+and product-analytics funnels, retention and cohort revenue.
 
-Scale notes baked into each query:
-- fixed-size dimensions (region: 5 rows, nation: 25 rows at ANY scale
-  factor) are unconditionally ``broadcast()``; SF-proportional dimensions
-  (customer, part, supplier) get a SIZE-GATED hint via
-  ``sources.tables.maybe_broadcast`` — an explicit hint is honored by Spark
-  regardless of size (AQE demotes auto-planned broadcasts, never hinted
-  ones), so hinting a growing table unconditionally would OOM at 100x
-  scale instead of demoting to a shuffle join;
-- fact-fact joins (orders |x| lineitem) shuffle on the join key once; AQE
-  splits skewed keys at runtime;
+Scale notes:
+- SF-proportional dimensions (customer, part) joined to a fact table get a
+  SIZE-GATED hint via ``sources.tables.maybe_broadcast`` — an explicit hint
+  is honored by Spark regardless of size (AQE demotes auto-planned
+  broadcasts, never hinted ones), so hinting a growing table
+  unconditionally would OOM at 100x scale instead of demoting to a shuffle
+  join; one-row aggregates are broadcast unconditionally;
 - aggregates are partial (map-side combine) automatically via hash-agg;
 - money sums are rounded to 2 dp and averages to 4 dp IN THE QUERY so the
   DuckDB oracle value-hash is float-order insensitive.
@@ -36,113 +36,6 @@ from ..sources.tables import (
     maybe_broadcast,
     parquet_size_bytes,
 )
-
-
-def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1 shape: scan-heavy grouped aggregation over lineitem."""
-    l = load_table(spark, sf_dir, "lineitem")
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    charge = disc_price * (1 + F.col("l_tax"))
-    return (
-        l.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(disc_price), 2).alias("sum_disc_price"),
-            F.round(F.sum(charge), 2).alias("sum_charge"),
-            F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-            F.round(F.avg("l_extendedprice"), 4).alias("avg_price"),
-            F.round(F.avg("l_discount"), 4).alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
-
-
-def q3_top_orders(
-    spark: SparkSession, sf_dir: str, dim_broadcast_bytes: int = BROADCAST_MAX_BYTES
-) -> DataFrame:
-    """TPC-H Q3 shape: dim-filter -> fact join -> group -> top-k.
-
-    customer grows with SF, so its broadcast hint is size-gated (the
-    filtered side is at most the table; the gate uses the table's on-disk
-    size as the safe upper bound). orders |x| lineitem shuffles on
-    l_orderkey once. Top-10 by revenue plans as TakeOrderedAndProject.
-    """
-    c = load_table(spark, sf_dir, "customer").filter(
-        F.col("c_mktsegment") == "BUILDING"
-    )
-    c = maybe_broadcast(
-        c, parquet_size_bytes(sf_dir, "customer"), dim_broadcast_bytes
-    )
-    o = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < F.lit("1998-01-01")
-    )
-    l = load_table(spark, sf_dir, "lineitem")
-    revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .groupBy("o_orderkey", F.date_format("o_orderdate", "yyyy-MM-dd").alias("o_orderdate"))
-        .agg(F.round(F.sum(revenue), 2).alias("revenue"))
-        .orderBy(F.desc("revenue"), F.asc("o_orderkey"))
-        .limit(10)
-    )
-
-
-def q5_region_revenue(
-    spark: SparkSession, sf_dir: str, dim_broadcast_bytes: int = BROADCAST_MAX_BYTES
-) -> DataFrame:
-    """TPC-H Q5 shape: snowflake join through region->nation->customer.
-
-    region (5 rows) and nation (25 rows) are fixed-size at any SF and
-    broadcast unconditionally; customer grows with SF and gets the
-    size-gated hint — above the gate it joins by shuffle, which at 100 TB
-    is correct (a hinted broadcast is never demoted; it OOMs). The only
-    large shuffles are the orders|x|lineitem key exchange and the final
-    group-by: one pass over the fact table.
-    """
-    region = load_table(spark, sf_dir, "region")
-    nation = load_table(spark, sf_dir, "nation")
-    customer = maybe_broadcast(
-        load_table(spark, sf_dir, "customer"),
-        parquet_size_bytes(sf_dir, "customer"),
-        dim_broadcast_bytes,
-    )
-    orders = load_table(spark, sf_dir, "orders")
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey)
-        .join(customer, orders.o_custkey == customer.c_custkey)
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .groupBy("r_name", "n_name")
-        .agg(F.round(F.sum(revenue), 2).alias("revenue"),
-             F.count(F.lit(1)).alias("n_items"))
-        .orderBy("r_name", "n_name")
-    )
-
-
-def q6_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 shape: pure filter+sum; every predicate pushes to the scan."""
-    l = load_table(spark, sf_dir, "lineitem")
-    return (
-        l.filter(
-            (F.col("l_shipdate") >= F.lit("1996-01-01"))
-            & (F.col("l_shipdate") < F.lit("1997-01-01"))
-            & (F.col("l_discount") >= 0.03)
-            & (F.col("l_discount") <= 0.07)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(
-            F.round(F.sum(F.col("l_extendedprice") * F.col("l_discount")), 2).alias(
-                "revenue"
-            ),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-    )
 
 
 def window_topn_orders(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFrame:
@@ -546,729 +439,6 @@ def orders_above_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_orders"),
             F.round(F.sum("o_totalprice"), 2).alias("revenue"),
         )
-    )
-
-
-def q9_brand_profit(
-    spark: SparkSession, sf_dir: str, dim_broadcast_bytes: int = BROADCAST_MAX_BYTES
-) -> DataFrame:
-    """TPC-H Q9 shape: profit per (supplier nation, part brand).
-
-    Exercises the two remaining dimension tables: part and supplier are
-    SF-proportional, so their broadcast hints are size-gated (above the
-    gate the join demotes to shuffle instead of OOMing on a forced
-    broadcast); nation is 25 rows at any SF and broadcasts
-    unconditionally. One pass over lineitem; profit = discounted revenue
-    minus a retail-price cost proxy per unit.
-    """
-    l = load_table(spark, sf_dir, "lineitem")
-    p = maybe_broadcast(
-        load_table(spark, sf_dir, "part"),
-        parquet_size_bytes(sf_dir, "part"),
-        dim_broadcast_bytes,
-    )
-    s = maybe_broadcast(
-        load_table(spark, sf_dir, "supplier"),
-        parquet_size_bytes(sf_dir, "supplier"),
-        dim_broadcast_bytes,
-    )
-    n = load_table(spark, sf_dir, "nation")
-    profit = F.col("l_extendedprice") * (1 - F.col("l_discount")) - F.col(
-        "p_retailprice"
-    ) * F.col("l_quantity") * 0.1
-    return (
-        l.join(p, l.l_partkey == p.p_partkey)
-        .join(s, l.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .groupBy("n_name", "p_brand")
-        .agg(
-            F.round(F.sum(profit), 2).alias("profit"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-    )
-
-
-def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 shape: EXISTS semi-join — priority counts for orders in a
-    window having at least one late-shipped line item.
-
-    The testdata has no commit/receipt dates, so "late" is l_shipdate more
-    than 60 days after o_orderdate (same correlated-EXISTS shape). Spark
-    plans the leftsemi join with the non-equi clause attached to the
-    equi-key join — lineitem is scanned once, never materialized per
-    order, and the date filter is pushed into the orders scan.
-    """
-    o = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01"))
-        & (F.col("o_orderdate") < F.lit("1996-07-01"))
-    )
-    l = load_table(spark, sf_dir, "lineitem")
-    late = (F.col("l_orderkey") == F.col("o_orderkey")) & (
-        F.col("l_shipdate")
-        > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")
-    )
-    return (
-        o.join(l, late, "leftsemi")
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("order_count"))
-        .orderBy("o_orderpriority")
-    )
-
-
-def q14_promo_revenue(
-    spark: SparkSession, sf_dir: str, dim_broadcast_bytes: int = BROADCAST_MAX_BYTES
-) -> DataFrame:
-    """TPC-H Q14 shape: promo revenue share in one ship month.
-
-    part is SF-proportional -> size-gated broadcast. The percentage is
-    computed from the two ALREADY-ROUNDED sums (exact 2-dp doubles on both
-    engines), so the division sees deterministic inputs — dividing the
-    raw float sums would expose cross-engine accumulation-order ulps
-    (SURVEY.md section 5 rounding rules).
-    """
-    l = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-03-01"))
-        & (F.col("l_shipdate") < F.lit("1997-04-01"))
-    )
-    p = maybe_broadcast(
-        load_table(spark, sf_dir, "part"),
-        parquet_size_bytes(sf_dir, "part"),
-        dim_broadcast_bytes,
-    )
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    agg = (
-        l.join(p, l.l_partkey == p.p_partkey)
-        .agg(
-            F.round(
-                F.sum(F.when(F.col("p_type") == "PROMO", disc_price).otherwise(0.0)), 2
-            ).alias("promo_revenue"),
-            F.round(F.sum(disc_price), 2).alias("total_revenue"),
-        )
-    )
-    return agg.select(
-        "promo_revenue",
-        "total_revenue",
-        F.round(
-            100.0 * F.col("promo_revenue") / F.col("total_revenue"), 4
-        ).alias("promo_pct"),
-    )
-
-
-def q16_supplier_part_counts(
-    spark: SparkSession, sf_dir: str, dim_broadcast_bytes: int = BROADCAST_MAX_BYTES
-) -> DataFrame:
-    """TPC-H Q16 shape: distinct-supplier counts per part group with an
-    anti-joined supplier blacklist.
-
-    Blacklist = suppliers with negative account balance (the testdata has
-    no comment column; same NOT-IN shape as the spec's complaint filter).
-    The blacklist is tiny -> broadcast anti-join, no shuffle added; the
-    count-distinct expands to a two-level aggregate (partial dedup
-    map-side) which is the scale-correct plan for high-cardinality
-    distincts.
-    """
-    l = load_table(spark, sf_dir, "lineitem")
-    p = maybe_broadcast(
-        load_table(spark, sf_dir, "part"),
-        parquet_size_bytes(sf_dir, "part"),
-        dim_broadcast_bytes,
-    )
-    bad = (
-        load_table(spark, sf_dir, "supplier")
-        .filter(F.col("s_acctbal") < 0)
-        .select(F.col("s_suppkey").alias("l_suppkey"))
-    )
-    return (
-        l.join(p, l.l_partkey == p.p_partkey)
-        .join(F.broadcast(bad), "l_suppkey", "left_anti")
-        .filter(F.col("p_size").isin(1, 14, 23, 45))
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.count_distinct(F.col("l_suppkey")).alias("supplier_cnt"))
-        .orderBy(
-            F.desc("supplier_cnt"), "p_brand", "p_type", "p_size"
-        )
-    )
-
-
-def q18_large_orders(
-    spark: SparkSession, sf_dir: str, dim_broadcast_bytes: int = BROADCAST_MAX_BYTES
-) -> DataFrame:
-    """TPC-H Q18 shape: large-volume orders (group -> HAVING -> join back).
-
-    The HAVING side aggregates lineitem by order key FIRST (map-side
-    partial sums), so only the ~0.5% of keys above the threshold flow into
-    the joins — the group-then-join order is the 100 TB-correct shape
-    (joining first would shuffle the whole fact table twice). l_quantity
-    values are integral doubles, so the sums and the >300 cut are exact.
-    """
-    l = load_table(spark, sf_dir, "lineitem")
-    big = (
-        l.groupBy("l_orderkey")
-        .agg(F.round(F.sum("l_quantity"), 2).alias("total_qty"))
-        .filter(F.col("total_qty") > 300.0)
-    )
-    o = load_table(spark, sf_dir, "orders")
-    c = maybe_broadcast(
-        load_table(spark, sf_dir, "customer"),
-        parquet_size_bytes(sf_dir, "customer"),
-        dim_broadcast_bytes,
-    )
-    return (
-        big.join(o, big.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .select(
-            "c_name",
-            "c_custkey",
-            "o_orderkey",
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("o_orderdate"),
-            F.round(F.col("o_totalprice"), 2).alias("o_totalprice"),
-            "total_qty",
-        )
-        .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-        .limit(100)
-    )
-
-
-def q19_disjunctive_revenue(
-    spark: SparkSession, sf_dir: str, dim_broadcast_bytes: int = BROADCAST_MAX_BYTES
-) -> DataFrame:
-    """TPC-H Q19 shape: revenue under a 3-branch disjunctive predicate
-    mixing part and lineitem columns.
-
-    The classic optimizer stress test: no single-table residual can be cut
-    from the OR across tables, so the join must stay a (broadcast) hash
-    join with the disjunction as a post-join filter — what must NOT happen
-    is a cartesian/nested-loop plan. Asserted in tests/test_plans.py.
-    """
-    l = load_table(spark, sf_dir, "lineitem")
-    p = maybe_broadcast(
-        load_table(spark, sf_dir, "part"),
-        parquet_size_bytes(sf_dir, "part"),
-        dim_broadcast_bytes,
-    )
-    q = F.col("l_quantity")
-    sz = F.col("p_size")
-    cond = (
-        ((F.col("p_brand") == "Brand#12") & sz.between(1, 15) & q.between(1, 11))
-        | ((F.col("p_brand") == "Brand#23") & sz.between(16, 30) & q.between(10, 20))
-        | ((F.col("p_brand") == "Brand#34") & sz.between(31, 50) & q.between(20, 30))
-    )
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        l.join(p, l.l_partkey == p.p_partkey)
-        .filter(cond)
-        .agg(
-            F.round(F.sum(disc_price), 2).alias("revenue"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-    )
-
-
-def q10_returned_revenue(
-    spark: SparkSession, sf_dir: str, dim_broadcast_bytes: int = BROADCAST_MAX_BYTES
-) -> DataFrame:
-    """TPC-H Q10 shape: revenue lost to returned items per customer.
-
-    orders |x| lineitem is the fact-fact shuffle on orderkey; customer is
-    a size-gated broadcast, nation (25 rows at ANY SF) unconditional.
-    Top-20 by the ROUNDED revenue with custkey tie-break so the cut set
-    matches the oracle bit-for-bit; plans as TakeOrderedAndProject.
-    """
-    c = load_table(spark, sf_dir, "customer")
-    c = maybe_broadcast(
-        c, parquet_size_bytes(sf_dir, "customer"), dim_broadcast_bytes
-    )
-    n = F.broadcast(load_table(spark, sf_dir, "nation"))
-    o = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1997-01-01"))
-        & (F.col("o_orderdate") < F.lit("1997-04-01"))
-    )
-    l = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_returnflag") == "R"
-    )
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        o.join(l, F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(c, F.col("o_custkey") == F.col("c_custkey"))
-        .join(n, F.col("c_nationkey") == F.col("n_nationkey"))
-        .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(F.round(F.sum(rev), 2).alias("revenue"))
-        .orderBy(F.desc("revenue"), F.asc("c_custkey"))
-        .limit(20)
-    )
-
-
-def q12_ship_delay_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q12 shape: order-priority counts per shipping bucket.
-
-    The testdata has no shipmode/commit/receipt dates, so the bucket is
-    the ship DELAY (days between order and ship date) — same
-    conditional-sum-over-a-fact-join shape. One shuffle on orderkey; the
-    CASE sums partial-aggregate map-side.
-    """
-    o = load_table(spark, sf_dir, "orders")
-    l = load_table(spark, sf_dir, "lineitem")
-    delay = F.datediff(F.col("l_shipdate"), F.col("o_orderdate"))
-    bucket = (
-        F.when(delay > 90, "slow")
-        .when(delay > 30, "medium")
-        .otherwise("fast")
-    )
-    is_high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        l.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .select(bucket.alias("delay_bucket"), is_high.alias("hi"))
-        .groupBy("delay_bucket")
-        .agg(
-            F.sum(F.col("hi").cast("bigint")).alias("high_line_count"),
-            F.sum((~F.col("hi")).cast("bigint")).alias("low_line_count"),
-        )
-        .orderBy("delay_bucket")
-    )
-
-
-def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q13 shape: distribution of customers by order count.
-
-    LEFT OUTER join keeps zero-order customers (their count is 0), then a
-    second aggregation builds the histogram. Both shuffles are on keys
-    with bounded skew (custkey, then the small count domain); the
-    predicate (the comment-filter stand-in: exclude URGENT orders) is
-    part of the JOIN condition, not a WHERE — the Q13 subtlety that makes
-    excluded-order customers count 0 instead of disappearing.
-    """
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders")
-    cond = (F.col("o_custkey") == F.col("c_custkey")) & (
-        F.col("o_orderpriority") != "1-URGENT"
-    )
-    per_cust = (
-        c.join(o, cond, "left_outer")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return (
-        per_cust.groupBy("c_count")
-        .agg(F.count(F.lit(1)).alias("custdist"))
-        .orderBy(F.desc("custdist"), F.desc("c_count"))
-    )
-
-
-def q17_small_qty_revenue(
-    spark: SparkSession, sf_dir: str, dim_broadcast_bytes: int = BROADCAST_MAX_BYTES
-) -> DataFrame:
-    """TPC-H Q17 shape: revenue from orders far below a part's typical
-    quantity (the correlated-average filter).
-
-    part filters to one brand + small sizes (container stand-in) and
-    broadcasts size-gated; the per-part average is a WINDOW over the
-    part-restricted lineitem slice — one shuffle on partkey, balanced
-    keys, no self-join re-scan of lineitem. The threshold 0.2*avg is
-    exact cross-engine: quantities are integral doubles, so the sum (and
-    thus the average) is exact in IEEE double.
-    """
-    p = load_table(spark, sf_dir, "part").filter(
-        (F.col("p_brand") == "Brand#23") & (F.col("p_size") < 10)
-    )
-    p = maybe_broadcast(
-        p.select("p_partkey"),
-        parquet_size_bytes(sf_dir, "part"),
-        dim_broadcast_bytes,
-    )
-    l = load_table(spark, sf_dir, "lineitem")
-    joined = l.join(p, F.col("l_partkey") == F.col("p_partkey"))
-    w = Window.partitionBy("l_partkey")
-    thresh = 0.2 * F.avg("l_quantity").over(w)
-    return (
-        joined.withColumn("_thresh", thresh)
-        .filter(F.col("l_quantity") < F.col("_thresh"))
-        .agg(
-            F.round(F.sum("l_extendedprice") / 7.0, 2).alias("avg_yearly")
-        )
-    )
-
-
-def q22_idle_customer_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q22 shape: well-funded customers who never ordered, by nation.
-
-    The scalar positive-balance average enters as a broadcast 1-row cross
-    join (same division on both engines); the anti-join predicate is "no
-    URGENT orders" (every synthetic customer has SOME order, so the
-    literal no-orders form of Q22 is empty here) — a LEFT ANTI join on
-    custkey against the priority-filtered orders slice, never a NOT IN
-    shuffle of the full key set; nation (fixed 25 rows) broadcasts. The
-    phone-country-code grouping of real Q22 maps to the nation dimension.
-    """
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderpriority") == "1-URGENT"
-    )
-    n = F.broadcast(load_table(spark, sf_dir, "nation"))
-    pos_avg = c.filter(F.col("c_acctbal") > 0.0).agg(
-        F.avg("c_acctbal").alias("_avg_bal")
-    )
-    return (
-        c.crossJoin(F.broadcast(pos_avg))
-        .filter(F.col("c_acctbal") > F.col("_avg_bal"))
-        .join(o, F.col("c_custkey") == F.col("o_custkey"), "left_anti")
-        .join(n, F.col("c_nationkey") == F.col("n_nationkey"))
-        .groupBy("n_name")
-        .agg(
-            F.count(F.lit(1)).alias("numcust"),
-            F.round(F.sum("c_acctbal"), 2).alias("totacctbal"),
-        )
-        .orderBy("n_name")
-    )
-
-
-def q2_min_cost_supplier(
-    spark: SparkSession, sf_dir: str, dim_broadcast_bytes: int = BROADCAST_MAX_BYTES
-) -> DataFrame:
-    """TPC-H Q2 shape: minimum-cost supplier per part within a region.
-
-    The testdata has no partsupp table, so the (part, supplier) supply
-    cost is derived from lineitem as min unit price — one aggregation
-    that at 100 TB is a map-side-combined shuffle on (partkey, suppkey).
-    The spec's correlated MIN subquery becomes a window MIN over
-    p_partkey on the already-joined frame: ONE extra shuffle on partkey,
-    never a second scan + self-join. supplier/part broadcasts are
-    size-gated; nation/region are fixed-size and always broadcast.
-    Output order is on the ROUNDED balance so the top-100 cut is
-    cross-engine deterministic.
-    """
-    l = load_table(spark, sf_dir, "lineitem")
-    unit_cost = F.col("l_extendedprice") / F.col("l_quantity")
-    ps = l.groupBy("l_partkey", "l_suppkey").agg(
-        F.min(unit_cost).alias("supply_cost")
-    )
-    s = maybe_broadcast(
-        load_table(spark, sf_dir, "supplier"),
-        parquet_size_bytes(sf_dir, "supplier"),
-        dim_broadcast_bytes,
-    )
-    n = F.broadcast(load_table(spark, sf_dir, "nation"))
-    r = F.broadcast(
-        load_table(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
-    )
-    p = maybe_broadcast(
-        load_table(spark, sf_dir, "part").filter(
-            (F.col("p_type") == "LARGE") & (F.col("p_size") < 10)
-        ),
-        parquet_size_bytes(sf_dir, "part"),
-        dim_broadcast_bytes,
-    )
-    joined = (
-        ps.join(s, ps.l_suppkey == s.s_suppkey)
-        .join(n, F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(r, F.col("n_regionkey") == F.col("r_regionkey"))
-        .join(p, ps.l_partkey == p.p_partkey)
-    )
-    w = Window.partitionBy("p_partkey")
-    return (
-        joined.withColumn("min_cost", F.min("supply_cost").over(w))
-        .filter(F.col("supply_cost") == F.col("min_cost"))
-        .select(
-            F.round("s_acctbal", 2).alias("s_acctbal"),
-            "s_name",
-            "n_name",
-            "p_partkey",
-            "p_name",
-            # FLOOR-scaled integer, not round(x, 4): a 2-dp price over an
-            # integral quantity lands EXACTLY on 4-dp .xxxx5 ties (x/8 ->
-            # ...375, found by the sf0.1 sweep) where Spark's exact
-            # HALF_UP and DuckDB's float-path round() disagree; floor of
-            # identical doubles is tie-free.
-            F.floor(F.col("supply_cost") * 1e4)
-            .cast("bigint")
-            .alias("supply_cost_e4"),
-        )
-        .orderBy(F.desc("s_acctbal"), "n_name", "s_name", "p_partkey")
-        .limit(100)
-    )
-
-
-def q7_volume_shipping(
-    spark: SparkSession, sf_dir: str, dim_broadcast_bytes: int = BROADCAST_MAX_BYTES
-) -> DataFrame:
-    """TPC-H Q7 shape: bilateral shipping volume between two nations by
-    ship year.
-
-    lineitem |x| orders is the one fact-fact shuffle; supplier and
-    customer enter through size-gated broadcasts, each carrying its
-    nation name from a pre-joined (broadcast) nation copy. The
-    disjunctive nation-pair filter applies AFTER both joins (it spans
-    both sides) but each side is pre-filtered to the two nations, so
-    the broadcast hash tables stay 2/25ths of the dimension.
-    """
-    n = load_table(spark, sf_dir, "nation").filter(
-        F.col("n_name").isin("NATION_1", "NATION_2")
-    )
-    s = (
-        load_table(spark, sf_dir, "supplier")
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-        .select(
-            F.col("s_suppkey").alias("l_suppkey"),
-            F.col("n_name").alias("supp_nation"),
-        )
-    )
-    c = (
-        load_table(spark, sf_dir, "customer")
-        .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
-        .select("c_custkey", F.col("n_name").alias("cust_nation"))
-    )
-    s = maybe_broadcast(s, parquet_size_bytes(sf_dir, "supplier"), dim_broadcast_bytes)
-    c = maybe_broadcast(c, parquet_size_bytes(sf_dir, "customer"), dim_broadcast_bytes)
-    l = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    pair = (
-        (F.col("supp_nation") == "NATION_1") & (F.col("cust_nation") == "NATION_2")
-    ) | ((F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1"))
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        l.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(s, "l_suppkey")
-        .join(c, F.col("o_custkey") == F.col("c_custkey"))
-        .filter(pair)
-        .groupBy(
-            "supp_nation",
-            "cust_nation",
-            F.year("l_shipdate").alias("l_year"),
-        )
-        .agg(F.round(F.sum(disc_price), 2).alias("revenue"))
-        .orderBy("supp_nation", "cust_nation", "l_year")
-    )
-
-
-def q8_market_share(
-    spark: SparkSession, sf_dir: str, dim_broadcast_bytes: int = BROADCAST_MAX_BYTES
-) -> DataFrame:
-    """TPC-H Q8 shape: one nation's market share of a part type inside a
-    region, by order year.
-
-    Share = conditional-sum / total-sum in a SINGLE grouped aggregate
-    (never two scans). Both operands are rounded to 2 dp BEFORE the
-    division so the ratio is a quotient of identical exact decimals on
-    any engine — raw double-sum ratios differ in the last ulp and flip
-    a 6-dp rounding. Part is pre-filtered then size-gate broadcast;
-    customer region filter flows through broadcast nation+region.
-    """
-    p = maybe_broadcast(
-        load_table(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY"),
-        parquet_size_bytes(sf_dir, "part"),
-        dim_broadcast_bytes,
-    )
-    n = load_table(spark, sf_dir, "nation")
-    r = F.broadcast(
-        load_table(spark, sf_dir, "region").filter(F.col("r_name") == "AMERICA")
-    )
-    cn = (
-        load_table(spark, sf_dir, "customer")
-        .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(r, F.col("n_regionkey") == F.col("r_regionkey"))
-        .select("c_custkey")
-    )
-    cn = maybe_broadcast(
-        cn, parquet_size_bytes(sf_dir, "customer"), dim_broadcast_bytes
-    )
-    sn = (
-        load_table(spark, sf_dir, "supplier")
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-        .select(
-            F.col("s_suppkey").alias("l_suppkey"),
-            F.col("n_name").alias("supp_nation"),
-        )
-    )
-    sn = maybe_broadcast(
-        sn, parquet_size_bytes(sf_dir, "supplier"), dim_broadcast_bytes
-    )
-    l = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    volume = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    target = F.when(F.col("supp_nation") == "NATION_3", volume).otherwise(F.lit(0.0))
-    return (
-        l.join(p, F.col("l_partkey") == F.col("p_partkey"))
-        .join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cn, F.col("o_custkey") == F.col("c_custkey"))
-        .join(sn, "l_suppkey")
-        .groupBy(F.year("o_orderdate").alias("o_year"))
-        .agg(
-            F.round(
-                F.round(F.sum(target), 2) / F.round(F.sum(volume), 2), 6
-            ).alias("mkt_share")
-        )
-        .orderBy("o_year")
-    )
-
-
-def q11_important_stock(
-    spark: SparkSession, sf_dir: str, fraction: float = 0.001,
-    dim_broadcast_bytes: int = BROADCAST_MAX_BYTES,
-) -> DataFrame:
-    """TPC-H Q11 shape: parts whose stock value from one nation's
-    suppliers exceeds a fraction of the total.
-
-    Stock value is derived from lineitem (no partsupp in the testdata):
-    sum of extended price per part over NATION_5 suppliers. The scalar
-    total re-enters as a 1-row broadcast (cross join of an aggregate,
-    the q22 pattern) — never a self-join of the grouped frame. The
-    HAVING compares ROUNDED 2-dp decimals on both sides so the cut is
-    cross-engine exact.
-    """
-    sn = (
-        load_table(spark, sf_dir, "supplier")
-        .join(
-            F.broadcast(
-                load_table(spark, sf_dir, "nation").filter(
-                    F.col("n_name") == "NATION_5"
-                )
-            ),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .select(F.col("s_suppkey").alias("l_suppkey"))
-    )
-    l = load_table(spark, sf_dir, "lineitem")
-    per_part = (
-        l.join(F.broadcast(sn), "l_suppkey")
-        .groupBy("l_partkey")
-        .agg(F.round(F.sum("l_extendedprice"), 2).alias("part_value"))
-    )
-    total = per_part.agg(
-        F.round(F.sum("part_value"), 2).alias("total_value")
-    )
-    return (
-        per_part.crossJoin(F.broadcast(total))
-        .filter(F.col("part_value") > F.col("total_value") * fraction)
-        .select(
-            F.col("l_partkey").alias("p_partkey"),
-            "part_value",
-        )
-        .orderBy(F.desc("part_value"), "p_partkey")
-    )
-
-
-def q15_top_supplier(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """TPC-H Q15 shape: the supplier(s) with maximum revenue in a
-    quarter.
-
-    Revenue aggregates per supplier FIRST (map-side combined; 100
-    suppliers per 25 nations means a tiny grouped frame at any SF), the
-    scalar max re-enters as a 1-row broadcast, and the equality filter
-    runs on ROUNDED revenue so ties resolve identically on any engine.
-    Supplier join happens after the max cut — only the winners join.
-    """
-    l = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-01-01"))
-        & (F.col("l_shipdate") < F.lit("1997-04-01"))
-    )
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    rev = l.groupBy("l_suppkey").agg(
-        F.round(F.sum(disc_price), 2).alias("total_revenue")
-    )
-    mx = rev.agg(F.max("total_revenue").alias("max_revenue"))
-    s = F.broadcast(load_table(spark, sf_dir, "supplier"))
-    return (
-        rev.crossJoin(F.broadcast(mx))
-        .filter(F.col("total_revenue") == F.col("max_revenue"))
-        .join(s, F.col("l_suppkey") == F.col("s_suppkey"))
-        .select("s_suppkey", "s_name", "total_revenue")
-        .orderBy("s_suppkey")
-    )
-
-
-def q20_excess_suppliers(
-    spark: SparkSession, sf_dir: str, min_qty: float = 200.0,
-    dim_broadcast_bytes: int = BROADCAST_MAX_BYTES,
-) -> DataFrame:
-    """TPC-H Q20 shape: suppliers of one nation who moved significant
-    volume of a named part class in a year — the nested-semi-join query.
-
-    Chain: part name-prefix filter -> broadcast SEMI join onto lineitem
-    (no part columns survive, so semi not inner: no row multiplication),
-    per-supplier quantity aggregate with HAVING (quantities are integral
-    doubles, the > cut is exact), then the qualifying-supplier set —
-    tiny by construction — broadcast-SEMI-joins supplier|x|nation.
-    Three joins, zero shuffles beyond the one supplier aggregate.
-    """
-    p = (
-        load_table(spark, sf_dir, "part")
-        .filter(F.col("p_name").startswith("small"))
-        .select("p_partkey")
-    )
-    l = load_table(spark, sf_dir, "lineitem").filter(
-        F.year("l_shipdate") == 1997
-    )
-    good = (
-        l.join(
-            F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"), "left_semi"
-        )
-        .groupBy("l_suppkey")
-        .agg(F.sum("l_quantity").alias("qty"))
-        .filter(F.col("qty") > min_qty)
-        .select("l_suppkey")
-    )
-    s = (
-        load_table(spark, sf_dir, "supplier")
-        .join(
-            F.broadcast(
-                load_table(spark, sf_dir, "nation").filter(
-                    F.col("n_name") == "NATION_7"
-                )
-            ),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-    )
-    return (
-        s.join(
-            F.broadcast(good), F.col("s_suppkey") == F.col("l_suppkey"), "left_semi"
-        )
-        .select("s_name", F.round("s_acctbal", 2).alias("s_acctbal"))
-        .orderBy("s_name")
-    )
-
-
-def q21_waiting_suppliers(
-    spark: SparkSession, sf_dir: str, late_days: int = 90
-) -> DataFrame:
-    """TPC-H Q21 shape: suppliers who were the SOLE late supplier on
-    multi-supplier finalized orders.
-
-    The testdata has no commit/receipt dates, so "late" is shipping more
-    than ``late_days`` after the order date (the q12 delay definition).
-    The spec's EXISTS + NOT EXISTS double self-correlation collapses to
-    ONE grouped pass over lineitem|x|orders: per order, count distinct
-    suppliers and distinct LATE suppliers, and recover the culprit as
-    ``max(late supplier)`` — exact precisely when the late-distinct
-    count is 1, which the filter requires. One fact-fact join + one
-    aggregate on l_orderkey, where the literal double self-join would
-    shuffle the fact table four times and the join-back variant scans
-    the fact join twice.
-    """
-    l = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    lo = l.join(o, F.col("l_orderkey") == F.col("o_orderkey")).select(
-        "l_orderkey",
-        "l_suppkey",
-        (F.datediff("l_shipdate", "o_orderdate") > late_days).alias("is_late"),
-    )
-    late_supp = F.when(F.col("is_late"), F.col("l_suppkey"))
-    sole_late = (
-        lo.groupBy("l_orderkey")
-        .agg(
-            F.count_distinct("l_suppkey").alias("n_supp"),
-            F.count_distinct(late_supp).alias("n_late_supp"),
-            F.max(late_supp).alias("l_suppkey"),
-        )
-        .filter((F.col("n_supp") >= 2) & (F.col("n_late_supp") == 1))
-    )
-    s = F.broadcast(load_table(spark, sf_dir, "supplier"))
-    return (
-        sole_late.join(s, F.col("l_suppkey") == F.col("s_suppkey"))
-        .groupBy("s_name")
-        .agg(F.count(F.lit(1)).alias("numwait"))
-        .orderBy(F.desc("numwait"), "s_name")
-        .limit(100)
     )
 
 

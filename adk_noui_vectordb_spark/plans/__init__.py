@@ -1,3 +1,3 @@
-from .explain import explain_str, assert_pushed_filters, assert_broadcast_join
+from .explain import explain_str, assert_pushed_filters
 
-__all__ = ["explain_str", "assert_pushed_filters", "assert_broadcast_join"]
+__all__ = ["explain_str", "assert_pushed_filters"]

@@ -34,8 +34,3 @@ def assert_pushed_filters(df: DataFrame, *fragments: str) -> None:
             f"full plan:\n{plan}"
         )
 
-
-def assert_broadcast_join(df: DataFrame, min_count: int = 1) -> None:
-    plan = explain_str(df)
-    n = plan.count("BroadcastHashJoin") + plan.count("BroadcastNestedLoopJoin")
-    assert n >= min_count, f"expected >= {min_count} broadcast joins, got {n}:\n{plan}"

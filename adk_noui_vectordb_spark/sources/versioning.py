@@ -296,12 +296,8 @@ def rollback_index(root: str, to: "str | None" = None) -> str:
     The abandoned newer version becomes an orphan: readers already on
     it finish their scans (its files are untouched), and the next
     commit's ``publish_version`` sweeps it when the version counter
-    re-reaches its name. Ingest idempotence markers under ``applied/``
-    are purged — a replayed batch whose effect was rolled back must
-    RE-apply, and over-application is harmless under the indexes'
-    replace semantics (marker keys: see ``gc_versions``). Runs under the
-    writer lock: a rollback is a commit like any other, serialized
-    against live writers."""
+    re-reaches its name. Runs under the writer lock: a rollback is a
+    commit like any other, serialized against live writers."""
     with writer_lock(root):
         cur = current_name(root)
         if cur is None:
@@ -320,25 +316,12 @@ def rollback_index(root: str, to: "str | None" = None) -> str:
         if not os.path.isdir(os.path.join(root, to)):
             raise ValueError(f"{root}: version {to} is not on disk (gc'd?)")
         point_current(root, to)
-        applied = os.path.join(root, "applied")
-        if os.path.isdir(applied):
-            for f in os.listdir(applied):
-                try:
-                    os.unlink(os.path.join(applied, f))
-                except OSError:
-                    pass
     return os.path.join(root, to)
 
 
 def gc_versions(root: str, keep: int = 2) -> None:
     """Delete versions older than the previous one, plus stale tmp dirs
-    from crashed writers (they never held the ``_CURRENT`` name), plus
-    expired ingest idempotence markers: markers under ``applied/``
-    are keyed ``<prefix>.<version>.<digest>`` on the version that
-    observed/wrote them and can only ever match again while that version
-    is still current — so any marker keyed to another version is dead
-    weight and is swept here, bounding ``applied/`` at O(batches since
-    the last commit) instead of growing forever (ADVICE r9)."""
+    from crashed writers (they never held the ``_CURRENT`` name)."""
     cur = current_name(root)
     if cur is None:
         return
@@ -350,15 +333,6 @@ def gc_versions(root: str, keep: int = 2) -> None:
             shutil.rmtree(full, ignore_errors=True)
         elif d.startswith(".__tmp_") and os.path.isdir(full):
             shutil.rmtree(full, ignore_errors=True)
-    applied = os.path.join(root, "applied")
-    if os.path.isdir(applied):
-        for f in os.listdir(applied):
-            parts = f.split(".")
-            if len(parts) == 3 and parts[1] != cur:
-                try:
-                    os.unlink(os.path.join(applied, f))
-                except OSError:
-                    pass
 
 
 def link_partitions(src: str, dst: str, skip: frozenset = frozenset()) -> None:

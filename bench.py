@@ -49,10 +49,6 @@ BENCH_KEYS = [
     "late_interaction_where_topk_served",
     "late_interaction_explain_served",
     "dsir_importance_select",
-    "q1_pricing_summary",
-    "q3_top_orders",
-    "q5_region_revenue",
-    "q6_revenue_forecast",
     "window_topn_orders",
     "events_sessionize",
     "events_funnel_conversion",
@@ -65,13 +61,11 @@ BENCH_KEYS = [
     "agg_percentiles",
     "curate_corpus",
     "pivot_event_matrix",
-    "q9_brand_profit",
     "retention_day_over_day",
     "chunk_ast_python",
     "quality_repetition",
     "hybrid_rrf_topk",
     "knn_int8_rerank",
-    "q18_large_orders",
     "decontaminate_corpus",
     "bm25_topk",
     "bm25_folded_topk_served",
@@ -79,10 +73,7 @@ BENCH_KEYS = [
     "line_dedup_corpus",
     "pack_sequences",
     "redact_pii",
-    "q10_returned_revenue",
     "lm_perplexity_score",
-    "q2_min_cost_supplier",
-    "q21_waiting_suppliers",
     "cluster_kmeans",
     "semdedup_prune",
     "knn_pq_rerank",

@@ -148,6 +148,12 @@ def test_query_batch_is_per_query_topk(spark, coll):
     assert set(by_q) == {0, 1}
     assert by_q[0][0]["id"] == "v3" and by_q[0][0]["distance"] == 0.0
     assert by_q[1][0]["id"] == "v11" and by_q[1][0]["distance"] == 0.0
+    # a non-positive n_results fails at call time, single and batch alike
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="n_results"):
+            coll.query(qs[0], n_results=bad)
+        with pytest.raises(ValueError, match="n_results"):
+            coll.query(qs, n_results=bad)
 
 
 def test_get_where_document_and_limit(spark, coll):
@@ -516,6 +522,12 @@ def test_get_offset_and_after_id_paginate(spark, coll):
     assert page2_key == page2_off  # keyset page == positional page
     with pytest.raises(ValueError, match="offset OR after_id"):
         coll.get(offset=1, after_id="p0")
+    # negative bounds fail at call time, not when the result is collected
+    with pytest.raises(ValueError, match="limit"):
+        coll.get(limit=-1)
+    with pytest.raises(ValueError, match="offset"):
+        coll.get(offset=-1)
+    assert coll.get(limit=0).count() == 0
 
 
 def test_get_include_switches(spark, coll):

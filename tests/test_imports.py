@@ -144,3 +144,42 @@ def test_package_imports_resolve():
     assert not errors, "\n".join(errors)
     # guard against a vacuous pass (a broken glob checks nothing)
     assert checked > 500, checked
+
+
+def _assigned(path: Path, name: str) -> ast.expr:
+    """The value of the top-level ``name = ...`` assignment in ``path``."""
+    for node in ast.parse(path.read_text()).body:
+        if isinstance(node, ast.Assign) and any(
+            isinstance(t, ast.Name) and t.id == name for t in node.targets
+        ):
+            return node.value
+    raise AssertionError(f"{path.relative_to(REPO)}: no top-level {name}")
+
+
+def _string_keys(node: ast.expr) -> list[str]:
+    """String keys of a dict literal, or string items of a list literal."""
+    items = node.keys if isinstance(node, ast.Dict) else node.elts
+    return [i.value for i in items if isinstance(i, ast.Constant)]
+
+
+def test_catalogue_key_lists_name_registered_keys():
+    """Every key the timing tools iterate is a key ``_all_queries()``
+    registers, so deleting an operator cannot leave a stale name behind
+    that fails only when the tool runs."""
+    registry = next(
+        node
+        for node in ast.parse((REPO / "__spark_entry__.py").read_text()).body
+        if isinstance(node, ast.FunctionDef) and node.name == "_all_queries"
+    )
+    returned = next(n.value for n in ast.walk(registry) if isinstance(n, ast.Return))
+    known = set(_string_keys(returned))
+    assert len(known) > 100, len(known)
+    for path, name in (
+        (REPO / "bench.py", "BENCH_KEYS"),
+        (REPO / "tools" / "scaling_exponents.py", "KEYS"),
+        (REPO / "tools" / "third_decade.py", "DEFAULT_KEYS"),
+    ):
+        keys = _string_keys(_assigned(path, name))
+        assert keys, f"{path.name}: {name} lists no keys"
+        stale = sorted(set(keys) - known)
+        assert not stale, f"{path.name}: {name} names unregistered keys {stale}"

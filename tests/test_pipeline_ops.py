@@ -1,5 +1,6 @@
 """Unit + plan tests for the round-3 training-pipeline operators
-(line dedup, sequence packing, PII redaction) and the new TPC-H shapes.
+(line dedup, sequence packing, PII redaction) and the analytics
+operators that rode along with them.
 
 Invariant style mirrors test_properties.py: check conservation laws and
 boundary behavior, not golden values (those are the oracle's job).
@@ -187,83 +188,6 @@ def test_redact_pii_is_shuffle_free(spark, sf_dir):
     assert "Exchange" not in plan, plan
 
 
-# ------------------------------------------------------------- TPC-H shapes
-
-def test_q10_is_take_ordered(spark, sf_dir):
-    """Top-20 customers must plan as TakeOrderedAndProject, not a global
-    sort of the aggregated frame."""
-    plan = explain_str(rel.q10_returned_revenue(spark, sf_dir), mode="simple")
-    assert "TakeOrderedAndProject" in plan, plan
-
-
-def test_q10_pushes_date_and_returnflag(spark, sf_dir):
-    from adk_noui_vectordb_spark.plans import assert_pushed_filters
-
-    df = rel.q10_returned_revenue(spark, sf_dir)
-    assert_pushed_filters(df, "l_returnflag")
-    assert_pushed_filters(df, "o_orderdate")
-
-
-def test_q13_left_join_preserves_all_customers(spark, sf_dir):
-    """Every customer lands in exactly one bucket (sum of custdist ==
-    customer count) and the plan keeps the LEFT OUTER join — an inner
-    join would drop customers whose orders are all filtered out."""
-    rows = rel.q13_customer_distribution(spark, sf_dir).collect()
-    n_cust = load_table(spark, sf_dir, "customer").count()
-    assert sum(r["custdist"] for r in rows) == n_cust
-    plan = explain_str(rel.q13_customer_distribution(spark, sf_dir), mode="simple")
-    assert "LeftOuter" in plan, plan
-
-
-def test_q17_avg_via_window_single_pass(spark, sf_dir):
-    """The per-part average must come from a window over the joined frame
-    (one shuffle on l_partkey), not a second scan + self-join."""
-    plan = explain_str(rel.q17_small_qty_revenue(spark, sf_dir), mode="extended")
-    assert "windowspecdefinition(l_partkey" in plan, plan
-
-
-def test_q22_anti_join_not_cartesian(spark, sf_dir):
-    """The NOT EXISTS must plan as an anti join, and the scalar average
-    must enter as a 1-row broadcast — never a CartesianProduct."""
-    plan = explain_str(rel.q22_idle_customer_balance(spark, sf_dir), mode="simple")
-    assert "LeftAnti" in plan, plan
-    assert "CartesianProduct" not in plan, plan
-
-
-# ----------------------------------------------------- TPC-H completion set
-
-def test_q2_min_cost_via_single_window(spark, sf_dir):
-    """The correlated MIN must be a window over p_partkey on the joined
-    frame — one shuffle, never a second lineitem scan + self-join."""
-    plan = explain_str(rel.q2_min_cost_supplier(spark, sf_dir), mode="extended")
-    assert "windowspecdefinition(p_partkey" in plan, plan
-
-
-def test_q15_max_revenue_no_cartesian(spark, sf_dir):
-    """The scalar max re-enters as a 1-row broadcast, never a cartesian,
-    and supplier joins only after the max cut."""
-    plan = explain_str(rel.q15_top_supplier(spark, sf_dir), mode="simple")
-    assert "CartesianProduct" not in plan, plan
-
-
-def test_q20_nested_semi_joins(spark, sf_dir):
-    """Both the part filter and the qualifying-supplier set must enter
-    as SEMI joins (no row multiplication, no inner-join fanout)."""
-    plan = explain_str(rel.q20_excess_suppliers(spark, sf_dir), mode="simple")
-    assert plan.count("LeftSemi") >= 2, plan
-
-
-def test_q21_sole_late_supplier_invariant(spark, sf_dir):
-    """Every counted wait event is an order with >= 2 suppliers where
-    exactly one shipped late — re-derive one row end-to-end."""
-    rows = rel.q21_waiting_suppliers(spark, sf_dir).collect()
-    assert rows, "expected at least one waiting supplier"
-    assert all(r["numwait"] >= 1 for r in rows)
-    # ranked descending with name tie-break
-    vals = [(-(r["numwait"]), r["s_name"]) for r in rows]
-    assert vals == sorted(vals)
-
-
 # ----------------------------------------------------------- LM perplexity
 
 def test_lm_perplexity_oov_path_exercised(spark, sf_dir):
@@ -438,16 +362,6 @@ def test_bpe_encode_plan_is_shuffle_free_scan(spark, sf_dir):
 
     plan = explain_str(tx.tokenize_bpe_encode(spark, sf_dir), mode="simple")
     assert "Exchange" not in plan, plan
-
-
-def test_q21_single_fact_join(spark, sf_dir):
-    """The sole-late-supplier recovery must not scan the lineitem-orders
-    join twice: exactly one join of the two fact tables in the plan."""
-    # formatted mode lists each scan twice (tree node + detail block):
-    # 3 scans (lineitem, orders, supplier) -> 6 mentions; a doubled fact
-    # join would add 4 more
-    plan = explain_str(rel.q21_waiting_suppliers(spark, sf_dir), mode="formatted")
-    assert plan.count("Scan parquet") <= 6, plan
 
 
 # -------------------------------------------------------- canonical selection

@@ -8,12 +8,12 @@ Regressions here mean a query silently became a full-scan/shuffle plan.
 from adk_noui_vectordb_spark.operators import relational as rel
 from adk_noui_vectordb_spark.operators import rollups as roll
 from adk_noui_vectordb_spark.operators.knn import knn_topk, make_query_from_vec
-from adk_noui_vectordb_spark.plans import (
-    assert_broadcast_join,
-    assert_pushed_filters,
-    explain_str,
+from adk_noui_vectordb_spark.plans import assert_pushed_filters, explain_str
+from adk_noui_vectordb_spark.sources.tables import (
+    load_table,
+    maybe_broadcast,
+    parquet_size_bytes,
 )
-from adk_noui_vectordb_spark.sources.tables import load_table
 
 
 def test_point_lookup_pushes_filter(spark, sf_dir):
@@ -26,41 +26,31 @@ def test_metadata_filter_pushes_to_scan(spark, sf_dir):
     assert_pushed_filters(df, "lang")
 
 
-def test_q5_broadcasts_dimensions(spark, sf_dir):
-    df = rel.q5_region_revenue(spark, sf_dir)
-    # customer, nation, region all broadcast: >= 3 broadcast joins
-    assert_broadcast_join(df, min_count=3)
-
-
-def test_q5_gate_demotes_customer_broadcast(spark, sf_dir):
-    """With the size gate at 0 bytes, customer must NOT be broadcast-hinted:
-    the c_custkey join plans as a shuffle join (sort-merge or shuffle-hash),
-    while the fixed-size nation/region dims stay broadcast. This is the
-    100 TB demotion path — a hinted broadcast is never demoted by AQE.
-    Auto-broadcast is disabled to simulate customer being too big for the
-    stats-based planner too (at test SF the file is tiny; stats-based
-    broadcast is fine because AQE CAN demote that one)."""
+def test_maybe_broadcast_hints_only_under_the_gate(spark, sf_dir):
+    """A dimension at or under the size gate is broadcast-hinted; above it
+    the join is left unhinted and plans as a shuffle join. Auto-broadcast
+    is off so only the hint can produce a broadcast: a hinted broadcast is
+    never demoted by AQE, which is why a dimension that grew with the data
+    must not get one."""
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        df = rel.q5_region_revenue(spark, sf_dir, dim_broadcast_bytes=0)
-        plan = explain_str(df, mode="simple")
-        # exactly nation + region still broadcast; customer is not
-        assert plan.count("BroadcastHashJoin") == 2, plan
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        c = load_table(spark, sf_dir, "customer")
+        o = load_table(spark, sf_dir, "orders")
+        size = parquet_size_bytes(sf_dir, "customer")
+        assert size > 0
 
+        def plan_with_gate(max_bytes):
+            dim = maybe_broadcast(c, size, max_bytes)
+            df = o.join(dim, o.o_custkey == dim.c_custkey)
+            return explain_str(df, mode="simple")
 
-def test_q9_gate_demotes_part_supplier_broadcast(spark, sf_dir):
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        df = rel.q9_brand_profit(spark, sf_dir, dim_broadcast_bytes=0)
-        plan = explain_str(df, mode="simple")
-        # only nation (fixed-size) still broadcast; part and supplier demoted
-        assert plan.count("BroadcastHashJoin") == 1, plan
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
+        under = plan_with_gate(size)
+        assert "BroadcastHashJoin" in under, under
+
+        over = plan_with_gate(size - 1)
+        assert "BroadcastHashJoin" not in over, over
+        assert "SortMergeJoin" in over or "ShuffledHashJoin" in over, over
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
@@ -81,19 +71,6 @@ def test_knn_filter_pushes_to_scan(spark, sf_dir):
         candidate_filter=F.col("label") == 3,
     )
     assert_pushed_filters(df, "label")
-
-
-def test_q6_predicates_push_to_scan(spark, sf_dir):
-    df = rel.q6_revenue_forecast(spark, sf_dir)
-    assert_pushed_filters(df, "l_shipdate", "l_discount", "l_quantity")
-
-
-def test_q1_prunes_columns(spark, sf_dir):
-    df = rel.q1_pricing_summary(spark, sf_dir)
-    plan = explain_str(df)
-    # ReadSchema must not include unused columns like l_orderkey/l_partkey
-    read_schema = [l for l in plan.splitlines() if "ReadSchema" in l]
-    assert read_schema and "l_partkey" not in read_schema[0], plan
 
 
 def test_asof_join_is_join_free(spark, sf_dir):
@@ -227,47 +204,6 @@ def test_cube_is_one_expand_one_shuffle(spark, sf_dir):
     plan = explain_str(rel_mod.cube_status_priority(spark, sf_dir), mode="simple")
     assert "Expand" in plan, plan
     assert plan.count("Exchange") == 1, plan
-
-
-def test_q4_semi_join_and_date_pushdown(spark, sf_dir):
-    """EXISTS must plan as a single semi join (lineitem scanned once,
-    never materialized per order) with the window pushed into the orders
-    scan."""
-    df = rel.q4_order_priority(spark, sf_dir)
-    plan = explain_str(df, mode="simple")
-    assert "LeftSemi" in plan, plan
-    assert_pushed_filters(df, "o_orderdate")
-
-
-def test_q18_aggregates_before_join(spark, sf_dir):
-    """The HAVING-side aggregate must run BEFORE the joins so only
-    above-threshold keys flow into them: in the simple plan the lineitem
-    aggregate appears below (after, textually) the join operators."""
-    plan = explain_str(rel.q18_large_orders(spark, sf_dir), mode="simple")
-    first_join = min(
-        i for i in (
-            plan.find("SortMergeJoin"),
-            plan.find("BroadcastHashJoin"),
-            plan.find("ShuffledHashJoin"),
-        ) if i >= 0
-    )
-    agg_pos = plan.find("total_qty", first_join)
-    assert agg_pos > first_join, plan
-
-
-def test_q19_no_cartesian(spark, sf_dir):
-    """The disjunctive cross-table predicate must not degrade the equi
-    join to a nested-loop/cartesian plan."""
-    plan = explain_str(rel.q19_disjunctive_revenue(spark, sf_dir), mode="simple")
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-    assert "Join" in plan, plan
-
-
-def test_q16_anti_join_broadcast(spark, sf_dir):
-    plan = explain_str(rel.q16_supplier_part_counts(spark, sf_dir), mode="simple")
-    assert "LeftAnti" in plan, plan
-    assert "BroadcastHashJoin" in plan, plan
 
 
 def test_rp_lsh_probe_prunes_index_partitions(spark, sf_dir):

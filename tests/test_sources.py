@@ -127,41 +127,6 @@ def test_compact_parquet_reduces_files(spark, tmp_path):
     assert spark.read.parquet(p).count() == 10000
 
 
-def test_format_roundtrips_preserve_adversarial_values(spark, tmp_path):
-    """CSV/JSONL write->read must preserve quotes, commas, separators and
-    unicode exactly (quoting/escaping correctness, not just happy-path)."""
-    from adk_noui_vectordb_spark.sources.formats import (
-        read_csv,
-        read_jsonl,
-        write_csv,
-        write_jsonl,
-    )
-
-    schema = "doc_id bigint, text string, lang string, source string, n_chars bigint"
-    rows = [
-        (1, 'he said "hi", twice', "en", "s|a", 19),
-        (2, "comma, semicolon; pipe|tab\tdone", "de", "s2", 31),
-        (3, "unicode: ñ 中文 éàö", "zh", "s3", 17),
-        (4, "trailing spaces   ", "fr", "s4", 18),
-        # embedded newlines: require multiLine quoted-record reads
-        (5, "line one\nline two\n\nline four", "en", "s5", 28),
-        # empty string must round-trip as '', NOT collapse to NULL
-        (6, "", "en", "s6", 0),
-    ]
-    df = spark.createDataFrame(rows, schema)
-    expected = {tuple(r) for r in rows}
-
-    p1 = str(tmp_path / "jsonl")
-    write_jsonl(df, p1)
-    got_j = {tuple(r) for r in read_jsonl(spark, p1, schema).collect()}
-    assert got_j == expected
-
-    p2 = str(tmp_path / "csv")
-    write_csv(df, p2)
-    got_c = {tuple(r) for r in read_csv(spark, p2, schema).collect()}
-    assert got_c == expected
-
-
 def test_upsert_recovers_both_swap_crash_windows(spark, tmp_path):
     import os
     import shutil

@@ -433,17 +433,6 @@ def test_rollback_validation(spark, tmp_path):
     assert os.path.basename(same) == os.path.basename(v2)
 
 
-def test_rollback_purges_idempotence_markers(spark, tmp_path):
-    root = str(tmp_path / "rbm")
-    v1 = _commit_kv(spark, root, [(1, "a")], expected=None)
-    _commit_kv(spark, root, [(2, "b")], expected=os.path.basename(v1))
-    applied = os.path.join(root, "applied")
-    os.makedirs(applied, exist_ok=True)
-    open(os.path.join(applied, "ingest.v_000000.abc123"), "w").close()
-    vn.rollback_index(root)
-    assert os.listdir(applied) == []
-
-
 def test_fork_index_is_generic_and_independent(spark, tmp_path):
     """fork_index works on ANY versioned root (not just collections):
     the fork serves the same rows from shared inodes; mutations on
@@ -466,30 +455,6 @@ def test_fork_index_is_generic_and_independent(spark, tmp_path):
     # refuse to fork onto a root that already has versions
     with pytest.raises(FileExistsError):
         vn.fork_index(src, dst)
-
-
-def test_gc_and_rollback_sweep_ingest_markers(spark, tmp_path):
-    """Idempotence markers under ``applied/`` are keyed
-    ``<prefix>.<version>.<digest>`` and only ever match while that
-    version is current: a commit's gc sweeps markers of other versions
-    and keeps the current version's, and a rollback purges them all so a
-    rolled-back batch re-applies."""
-    root = str(tmp_path / "markers")
-    _commit_kv(spark, root, [(0, "a")], expected=None)
-    v0 = vn.current_name(root)
-    applied = os.path.join(root, "applied")
-    os.makedirs(applied)
-    open(os.path.join(applied, f"c.{v0}.d0"), "w").close()
-
-    _commit_kv(spark, root, [(1, "b")], expected=v0)
-    v1 = vn.current_name(root)
-    open(os.path.join(applied, f"c.{v1}.d1"), "w").close()
-    vn.gc_versions(root)
-    assert os.listdir(applied) == [f"c.{v1}.d1"]
-
-    vn.rollback_index(root)
-    assert vn.current_name(root) == v0
-    assert os.listdir(applied) == []
 
 
 def test_text_doc_reapplies_after_delete(spark, tmp_path):

@@ -41,10 +41,6 @@ KEYS = {
     "curate_corpus": "documents",
     "winnow_fingerprints": "documents",
     "decontaminate_corpus": "documents",
-    "q1_pricing_summary": "lineitem",
-    "q9_brand_profit": "lineitem",
-    "q18_large_orders": "lineitem",
-    "q21_waiting_suppliers": "lineitem",
     "events_sessionize": "events",
     "events_funnel_conversion": "events",
     "events_retention_cohorts": "events",
