@@ -1,8 +1,10 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Operator catalogue: each implemented operator as a named Spark query
+with a DuckDB twin, for parity tests and timing tools.
 
 entry(spark)     -- flagship query (exact k-NN retrieval, SURVEY.md §3.2)
-queries()        -- one entry per implemented operator (SURVEY.md §2 keys)
-oracle_sql()     -- DuckDB twins, same column names + in-query rounding
+queries()        -- key -> builder, one per implemented operator (SURVEY.md §2)
+oracle_sql()     -- DuckDB twins, same keys, same column names + in-query
+                    rounding
 
 Cross-engine parity rules used throughout (see SURVEY.md §5):
 - every float derived by arithmetic is rounded IN the query (sums 2 dp,
@@ -41,7 +43,6 @@ from adk_noui_vectordb_spark.operators import indexing as _idx
 from adk_noui_vectordb_spark.operators import invindex as _inv
 from adk_noui_vectordb_spark.operators import knn as _knn
 from adk_noui_vectordb_spark.operators import quantize as _quant
-from adk_noui_vectordb_spark.operators import relational as _rel
 from adk_noui_vectordb_spark.operators import rollups as _roll
 from adk_noui_vectordb_spark.operators import temporal as _temporal
 from adk_noui_vectordb_spark.operators import textops as _text
@@ -150,375 +151,9 @@ def _q_ann_rp_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ann.ann_rp_lsh_topk(spark, sf_dir, multiprobe_hamming=1)
 
 
-# Keys with a green row in CORRECTNESS_r01.json / _r02.json. The driver
-# records only the first 50 dict entries per round, so queries() orders
-# keys by how much a fresh driver row is worth: never-green first, then
-# r1-green keys whose outputs changed since (stale), then the stable r1
-# set (oldest green), then the r2 set (freshest green). All keys always
-# pass the identical local replica (tools/sweep_parity.py, tests/).
-_CHECKED_R1 = frozenset({
-    "knn_topk", "knn_topk_filtered", "knn_batch_topk", "score_similarity_pairs",
-    "filter_by_lang", "point_lookup", "agg_source_summary", "agg_docs_by_lang",
-    "agg_job_totals", "filter_by_element_type", "filter_by_file",
-    "filter_ext_dispatch", "chunk_fixed_words", "chunk_fixed_lines",
-    "chunk_markdown_sections", "text_stats", "token_count", "quality_score",
-    "lang_id_ngram", "doc_fingerprint", "curate_corpus", "winnow_fingerprints",
-    "tfidf_top_terms", "stratified_sample", "split_assignment", "diag_generic",
-    "diag_python", "diag_js_ts", "dedup_exact", "minhash_signature_rows",
-    "minhash_band_rows", "dedup_minhash_pairs", "dedup_connected_components",
-    "minhash_jaccard_estimate", "dedup_simhash_pairs", "ngram_jaccard_pairs",
-    "simhash_signatures", "dedup_embedding_cosine", "project_searchable_text",
-    "project_element_ids", "agg_file_summary", "agg_elements_by_type",
-    "agg_group_structure", "project_truncate", "corpus_diagnostics",
-    "agg_diag_counts", "agg_collection_count", "upsert_latest_events",
-    "index_pipeline", "embed_projection_rows",
-})
-
-
-# Green in CORRECTNESS_r02.json (49 of the 50-key window; the 50th,
-# embed_quantize_int8, crashed the driver canonicalizer and is re-queued
-# via _PRIORITY_R3 after the posexplode shape fix). Includes the three
-# rows-only-by-design keys — their rows-only driver row is their contract.
-_CHECKED_R2 = frozenset({
-    "chunk_ast_python", "quality_repetition", "decontaminate_corpus",
-    "diag_python_syntax", "diag_python_flakes", "knn_text_query",
-    "knn_file_summary_query", "file_context", "ann_ivf_topk", "ann_lsh_topk",
-    "bm25_topk", "hybrid_rrf_topk", "knn_int8_topk", "knn_int8_rerank",
-    "window_topn_orders", "window_running_revenue", "customers_without_orders",
-    "customers_with_high_value_orders", "events_tumbling_counts",
-    "events_sessionize", "events_sliding_counts", "window_moving_avg",
-    "rollup_segment_status", "salted_event_totals", "salted_skew_join",
-    "pivot_event_matrix", "agg_correlation", "orders_above_avg",
-    "events_by_dow", "agg_percentiles", "setop_active_noncustomers",
-    "json_props_rollup",
-})
-
-# (The round-2 _STALE_R1 set is gone: the rank ordering below derives
-# staleness from _LATEST_GREEN + _REWRITTEN, and all four former members
-# have r4+ greens.)
-
-# Green (rows+schema+hash) in CORRECTNESS_r04.json — the freshest rows, so
-# they sort to the BACK of the 50-key driver window.
-_CHECKED_R4 = frozenset({
-    "embed_quantize_int8", "chunk_js_elements", "line_dedup_corpus",
-    "pack_sequences", "redact_pii", "lm_perplexity_score", "mixture_sample",
-    "bpe_pair_counts", "curate_corpus_full", "cluster_kmeans",
-    "pq_encode_rows", "knn_pq_topk", "knn_pq_rerank",
-    "dedup_canonical_selection", "dedup_simhash_pairs", "ngram_jaccard_pairs",
-    "simhash_signatures", "semdedup_prune", "index_pipeline", "knn_topk",
-    "knn_topk_filtered", "knn_batch_topk", "score_similarity_pairs",
-    "filter_by_lang", "point_lookup", "agg_source_summary", "agg_docs_by_lang",
-})
-
-# Green (rows+schema+hash) in CORRECTNESS_r05.json — 49 keys (every r5
-# window entry except the retired no-oracle ann_lsh_topk).
-_CHECKED_R5 = frozenset({
-    "asof_join_purchase_click", "range_join_bursts", "funnel_signup_purchase",
-    "retention_day_over_day",
-    "events_by_dow",
-    "events_sessionize", "events_sliding_counts", "events_tumbling_counts",
-    "pivot_event_matrix", "json_props_rollup", "salted_event_totals",
-    "salted_skew_join", "setop_active_noncustomers", "upsert_latest_events",
-    "agg_collection_count",
-    "diag_python_syntax", "agg_job_totals", "filter_by_element_type",
-    "filter_by_file", "filter_ext_dispatch", "chunk_fixed_words",
-    "chunk_fixed_lines", "chunk_markdown_sections", "text_stats",
-    "token_count", "quality_score", "lang_id_ngram", "doc_fingerprint",
-    "curate_corpus", "winnow_fingerprints", "tfidf_top_terms",
-    "stratified_sample", "split_assignment", "diag_generic", "diag_python",
-    "diag_js_ts", "dedup_exact", "minhash_signature_rows",
-    "minhash_band_rows", "dedup_minhash_pairs", "dedup_connected_components",
-    "minhash_jaccard_estimate", "dedup_embedding_cosine",
-})
-
-# Green (rows+schema+hash) in CORRECTNESS_r06.json — all 50 window keys,
-# including every key the r5/r6 rewrites touched (the _REWRITTEN
-# mechanism worked: 50/50 green).
-_CHECKED_R6 = frozenset({
-    "agg_diag_counts", "agg_elements_by_type", "agg_file_summary",
-    "agg_group_structure", "ann_ivf_topk", "ann_ivf_trained_topk",
-    "ann_rp_lsh_topk", "bm25_topk", "chunk_ast_python", "chunk_js_elements",
-    "cluster_kmeans", "corpus_diagnostics", "cube_status_priority",
-    "decontaminate_corpus", "dedup_connected_components",
-    "dedup_minhash_pairs", "dedup_simhash_pairs", "diag_python_flakes",
-    "embed_projection_rows", "file_context", "hybrid_rrf_topk",
-    "index_pipeline", "knn_file_summary_query", "knn_int8_rerank",
-    "knn_int8_topk", "knn_pq_rerank", "knn_pq_topk", "knn_text_query",
-    "lang_id_ngram", "minhash_band_rows", "minhash_jaccard_estimate",
-    "minhash_signature_rows", "pq_encode_rows", "project_element_ids",
-    "project_searchable_text", "project_truncate", "quality_repetition",
-    "rp_lsh_band_rows", "semdedup_prune", "simhash_signatures",
-    "tokenize_bpe_encode", "winnow_fingerprints",
-})
-
-# Green (rows+schema+hash) in CORRECTNESS_r07.json — 49 of the 50 window
-# keys (embed_topvar_project was the one red: array<double> output crashed
-# the driver canonicalizer; rewritten to scalar rows in r8).
-_CHECKED_R7 = frozenset({
-    "agg_correlation", "agg_percentiles", "ann_ivf_trained_topk",
-    "ann_rp_lsh_multiprobe_topk", "ann_rp_lsh_topk", "basket_brand_lift",
-    "bm25_topk_served", "chunk_js_elements",
-    "customers_with_high_value_orders", "customers_without_orders",
-    "dedup_repeated_ngrams", "doc_token_entropy", "dup_cluster_size_histogram",
-    "embed_dim_stats", "events_anomaly_zscore", "events_gap_stats",
-    "events_rate_limited_sample", "histogram_order_totals",
-    "hybrid_rrf_served_topk", "inverted_postings_rows", "knn_join_topk",
-    "lm_bigram_score", "normalize_text_corpus", "orders_above_avg",
-    "rollup_segment_status", "scd2_user_state_history", "skew_key_profile",
-    "trend_event_values", "unpivot_event_matrix", "user_activity_profile",
-    "window_moving_avg", "window_running_revenue", "window_topn_orders",
-    "window_trailing_value_sum",
-})
-
-# Green (rows+schema+hash) in CORRECTNESS_r08.json — all 50 window keys,
-# including the three r8 rewrites (embed_topvar_project reshape,
-# knn_join_topk skew cap, hybrid_rrf_served_topk multiprobe default).
-_CHECKED_R8 = frozenset({
-    "agg_docs_by_lang", "agg_job_totals", "agg_source_summary",
-    "bpe_pair_counts", "chunk_fixed_lines", "chunk_fixed_words",
-    "chunk_markdown_sections", "curate_corpus", "curate_corpus_full",
-    "dedup_canonical_selection", "doc_fingerprint", "embed_quantize_int8",
-    "embed_topvar_project", "filter_by_element_type", "filter_by_file",
-    "filter_by_lang", "filter_ext_dispatch", "hybrid_rrf_served_topk",
-    "knn_batch_topk", "knn_join_topk", "knn_topk", "knn_topk_filtered",
-    "line_dedup_corpus", "lm_perplexity_score", "mixture_sample",
-    "ngram_jaccard_pairs", "pack_sequences", "point_lookup", "quality_score",
-    "redact_pii", "score_similarity_pairs", "text_stats", "tfidf_top_terms",
-    "token_count",
-})
-
-# Green (rows+schema+hash) in CORRECTNESS_r09.json — all 50 window keys:
-# the 16 r9 rewrites (versioned-index serving + minhash kernel), the 5
-# new keys (gopher/c4 filters, gate, doc map, vec rows), and the rotated
-# r5 cohort.
-_CHECKED_R9 = frozenset({
-    "agg_collection_count", "ann_ivf_trained_topk",
-    "ann_rp_lsh_multiprobe_topk", "ann_rp_lsh_topk",
-    "asof_join_purchase_click", "bm25_topk_served", "c4_line_filter",
-    "chunk_ast_python", "dedup_connected_components", "dedup_exact",
-    "dedup_embedding_cosine", "dedup_gate_against_index",
-    "dedup_minhash_pairs", "diag_generic", "diag_js_ts", "diag_python",
-    "diag_python_syntax", "dup_cluster_size_histogram", "events_by_dow",
-    "events_sessionize", "events_sliding_counts", "events_tumbling_counts",
-    "funnel_signup_purchase", "gopher_quality_flags",
-    "hybrid_rrf_served_topk", "inverted_postings_rows", "json_props_rollup",
-    "knn_join_topk", "knn_pq_rerank", "knn_pq_topk", "lang_id_ngram",
-    "minhash_band_rows", "minhash_jaccard_estimate",
-    "minhash_signature_rows", "pivot_event_matrix", "pq_encode_rows",
-    "range_join_bursts", "retention_day_over_day", "rp_index_vec_rows",
-    "salted_event_totals", "salted_skew_join", "setop_active_noncustomers",
-    "split_assignment", "stratified_sample",
-    "text_index_doc_map",
-    "upsert_latest_events", "winnow_fingerprints",
-})
-
-# Green (rows+schema+hash) in CORRECTNESS_r10.json — all 50 window keys:
-# the 20 new r10 keys (facade, query language, IVFPQ, rollup, shards), the
-# 6 r10 rewrites (gate broadcasts + text-index v3 cohort), and the rotated
-# r6 cohort (indexing projections/aggregations, diagnostics).
-_CHECKED_R10 = frozenset({
-    "agg_diag_counts", "agg_elements_by_type", "agg_file_summary",
-    "agg_group_structure", "ann_grouped_topk", "ann_ivfpq_topk",
-    "ann_rp_lsh_batch_topk", "ann_rp_lsh_filtered_topk",
-    "bm25_batch_topk_served", "bm25_explain_served", "bm25_page2_served",
-    "bm25_topk_served", "boolean_and_topk", "boolean_or_not_topk",
-    "chunked_maxsim_topk", "cluster_kmeans", "collection_get_where",
-    "collection_query_topk", "corpus_diagnostics", "decontaminate_corpus",
-    "dedup_gate_against_index", "dedup_gate_intra_batch",
-    "dedup_simhash_pairs", "diag_python_flakes", "docs_where_dsl_filter",
-    "fuzzy_topk_served", "hybrid_rrf_served_topk", "inverted_postings_rows",
-    "knn_join_ivf_topk", "knn_join_topk", "knn_truncated_rerank",
-    "knn_where_dsl_topk", "phrase_topk_served", "prefix_topk_served",
-    "project_element_ids", "project_searchable_text", "project_truncate",
-    "proximity_topk_served", "quality_repetition", "search_facet_counts",
-    "search_highlight_served", "semdedup_prune", "simhash_signatures",
-    "text_index_doc_map", "tokenize_bpe_encode",
-})
-
-# CORRECTNESS_r11.json: 50/50 green (every r11 rewrite re-verified, the
-# whole r11 new-key cohort, and the rotated r6/r7 staleness cohorts).
-_CHECKED_R11 = frozenset({
-    "ann_ivf_sampled_topk", "ann_ivf_topk", "ann_ivf_trained_topk",
-    "ann_ivfpq_sampled_topk", "ann_ivfpq_topk", "bm25_topk",
-    "cap_docs_per_source", "chunk_js_elements", "collection_get_page2",
-    "collection_get_where", "collection_query_ip_topk",
-    "collection_query_topk", "cube_status_priority",
-    "dedup_gate_against_index", "dedup_repeated_ngrams", "doc_token_entropy",
-    "docs_where_dsl_filter", "embed_dim_stats", "embed_projection_rows",
-    "file_context", "hybrid_rrf_topk", "index_pipeline",
-    "knn_file_summary_query", "knn_int8_rerank", "knn_int8_topk",
-    "knn_join_ivf_topk", "knn_join_topk", "knn_mmr_topk", "knn_text_query",
-    "knn_where_dsl_topk", "lm_bigram_score", "msm_topk_served",
-    "normalize_text_corpus", "rp_lsh_band_rows",
-})
-
-# CORRECTNESS_r12.json: 50/50 green — the whole r12 new-key cohort
-# (graph family, binary quantization, weighted hybrid, folded BM25,
-# facade graph serving), every r12 rewrite (the former _REWRITTEN
-# members below), and the rotated oldest cohorts.
-_CHECKED_R12 = frozenset({
-    'agg_correlation', 'agg_percentiles', 'ann_binq_ivf_topk', 'ann_binq_topk',
-    'ann_graph_batch_topk', 'ann_graph_filtered_topk',
-    'ann_graph_tombstone_topk', 'ann_graph_topk', 'ann_graph_vacuumed_topk',
-    'ann_ivf_sampled_topk', 'ann_ivf_trained_topk', 'ann_ivfpq_sampled_topk',
-    'ann_ivfpq_topk', 'basket_brand_lift', 'binq_hamming_topk',
-    'bm25_folded_topk_served', 'bm25_page2_served', 'bm25_topk_served',
-    'collection_get_page2', 'collection_get_where',
-    'collection_query_graph_batch_topk', 'collection_query_graph_topk',
-    'collection_query_ip_topk', 'collection_query_topk',
-    'customers_with_high_value_orders', 'customers_without_orders',
-    'dedup_gate_against_index', 'dedup_gate_intra_batch',
-    'events_anomaly_zscore', 'events_gap_stats', 'events_rate_limited_sample',
-    'histogram_order_totals', 'hybrid_weighted_served_topk',
-    'hybrid_weighted_topk', 'knn_join_ivf_topk', 'msm_topk_served',
-    'orders_above_avg', 'rollup_segment_status', 'scd2_user_state_history',
-    'skew_key_profile', 'trend_event_values', 'unpivot_event_matrix',
-    'window_moving_avg', 'window_running_revenue', 'window_topn_orders',
-    'window_trailing_value_sum',
-})
-
-# CORRECTNESS_r13.json: 50/50 green — the whole r13 new-key cohort
-# (recursive hub mesh, ACORN traversal, MVCC time travel, substring
-# rewrite, kNN classify, train/holdout split), every r13 rewrite (the
-# former _REWRITTEN graph-family members), and the rotated r8 cohort.
-_CHECKED_R13 = frozenset({
-    "agg_docs_by_lang", "agg_job_totals", "agg_source_summary",
-    "ann_graph_acorn_batch_topk", "ann_graph_acorn_topk",
-    "ann_graph_batch_topk", "ann_graph_filtered_topk",
-    "ann_graph_recursive_topk", "ann_graph_tombstone_topk", "ann_graph_topk",
-    "ann_graph_vacuumed_topk", "bpe_pair_counts", "chunk_fixed_lines",
-    "chunk_fixed_words", "chunk_markdown_sections", "collection_get_snapshot",
-    "collection_query_graph_acorn_topk", "collection_query_graph_batch_topk",
-    "collection_query_graph_topk", "collection_rollback_get", "curate_corpus",
-    "curate_corpus_full", "dedup_canonical_selection",
-    "dedup_substring_rewrite", "doc_fingerprint", "filter_by_element_type",
-    "filter_by_file", "filter_by_lang", "filter_ext_dispatch",
-    "hybrid_weighted_graph_topk", "knn_batch_topk", "knn_classify", "knn_topk",
-    "knn_topk_filtered", "line_dedup_corpus", "lm_perplexity_score",
-    "mixture_sample", "pack_sequences", "point_lookup", "quality_score",
-    "redact_pii", "score_similarity_pairs", "split_train_holdout",
-    "text_stats", "tfidf_top_terms", "token_count", "user_activity_profile",
-})
-
-# Green (rows+schema+hash) in CORRECTNESS_r14.json — all 50 window keys:
-# the r14 new operators (knn_regress, containment family, embed/pq
-# additions), every r14 rewrite (the former _REWRITTEN graph-family
-# members + knn_join_ivf_topk), and the rotated r5/r6 cohort.
-_CHECKED_R14 = frozenset({
-    "ann_graph_acorn_batch_topk", "ann_graph_acorn_topk",
-    "ann_graph_batch_topk", "ann_graph_filtered_topk",
-    "ann_graph_recursive_topk", "ann_graph_tombstone_topk", "ann_graph_topk",
-    "ann_graph_vacuumed_topk", "c4_line_filter", "chunk_ast_python",
-    "collection_query_graph_acorn_topk", "collection_query_graph_batch_topk",
-    "collection_query_graph_topk", "collection_replace_graph_topk",
-    "dedup_containment_gate", "dedup_containment_pairs", "dedup_exact",
-    "diag_generic", "diag_js_ts", "diag_python", "diag_python_syntax",
-    "embed_quantize_int8", "embed_topvar_project", "gopher_quality_flags",
-    "hybrid_weighted_graph_topk", "knn_join_ivf_topk", "knn_pq_rerank",
-    "knn_pq_topk", "knn_regress", "lang_id_ngram", "minhash_band_rows",
-    "minhash_signature_rows", "ngram_jaccard_pairs", "pq_encode_rows",
-    "split_assignment", "stratified_sample", "winnow_fingerprints",
-})
-
-# Green (rows+schema+hash) in CORRECTNESS_r15.json — all 50 window keys:
-# the r15 new operators (late interaction, DSIR, containment admit,
-# streaming range-join/sessionize), every r15 rewrite (the ACORN
-# vecs-fold graph family + the exact-integer containment pair), and
-# the rotated r7/r8 cohort.
-_CHECKED_R15 = frozenset({
-    "agg_collection_count", "ann_graph_acorn_batch_topk",
-    "ann_graph_acorn_topk", "ann_graph_batch_topk", "ann_graph_filtered_topk",
-    "ann_graph_recursive_topk", "ann_graph_tombstone_topk", "ann_graph_topk",
-    "ann_graph_vacuumed_topk", "ann_rp_lsh_multiprobe_topk", "ann_rp_lsh_topk",
-    "asof_join_purchase_click", "cluster_kmeans",
-    "collection_query_graph_acorn_topk", "collection_query_graph_batch_topk",
-    "collection_query_graph_topk", "collection_replace_graph_topk",
-    "decontaminate_corpus", "dedup_connected_components",
-    "dedup_containment_gate", "dedup_containment_gate_ingested",
-    "dedup_containment_pairs", "dedup_embedding_cosine", "dedup_minhash_pairs",
-    "dsir_importance_select", "dup_cluster_size_histogram", "events_by_dow",
-    "events_sessionize", "events_sliding_counts", "events_tumbling_counts",
-    "funnel_signup_purchase", "hybrid_weighted_graph_topk",
-    "json_props_rollup", "late_interaction_topk", "minhash_jaccard_estimate",
-    "pivot_event_matrix", "quality_repetition", "range_join_bursts",
-    "retention_day_over_day", "rp_index_vec_rows", "salted_event_totals",
-    "salted_skew_join", "setop_active_noncustomers", "tokenize_bpe_encode",
-    "upsert_latest_events",
-})
-
-# Latest green driver round per key — the freshness ranking queries()
-# sorts by (older green = more valuable re-check). Derived from the
-# _CHECKED sets; a key in several sets takes its newest round. The sets
-# hold only keys still in the catalogue, so their per-round counts in the
-# comments above are the counts of the round, not of the set.
-_LATEST_GREEN: dict[str, int] = {}
-for _rnd, _s in (
-    (1, _CHECKED_R1),
-    (2, _CHECKED_R2),
-    (4, _CHECKED_R4),
-    (5, _CHECKED_R5),
-    (6, _CHECKED_R6),
-    (7, _CHECKED_R7),
-    (8, _CHECKED_R8),
-    (9, _CHECKED_R9),
-    (10, _CHECKED_R10),
-    (11, _CHECKED_R11),
-    (12, _CHECKED_R12),
-    (13, _CHECKED_R13),
-    (14, _CHECKED_R14),
-    (15, _CHECKED_R15),
-):
-    for _k in _s:
-        _LATEST_GREEN[_k] = _rnd
-
-# Keys whose implementation changed AFTER their latest green driver row
-# (ADVICE r5, medium): a rewrite strips checked status so the next driver
-# window re-verifies the NEW code at sf0.01 before anything else.
-# Maintained per-round: when a rewritten key gets a fresh green row, move
-# it into that round's _CHECKED set and drop it here. r12: all 9 r11
-# rewrites greened in CORRECTNESS_r11 and moved to _CHECKED_R11; the
-# entries below are the r12 rewrites. r13: all 7 r13 rewrites greened in
-# CORRECTNESS_r13 and moved to _CHECKED_R13. r14: all 13 r14 rewrites
-# greened in CORRECTNESS_r14 and moved to _CHECKED_R14. r15: all 15 r15
-# rewrites (ACORN vecs-fold graph family + exact-integer containment
-# prefix bound) greened in CORRECTNESS_r15 and moved to _CHECKED_R15;
-# the entries below are the r16 rewrites.
-_REWRITTEN = frozenset({
-    # r16 ppjoin_prefix_len hardening (ADVICE r15 #1/#3): num/den now
-    # come from Fraction.limit_denominator(10^6) and the ceil divides
-    # in DECIMAL (exact by construction); twins moved to integer // —
-    # values identical for the pinned t=0.8, but the executed path of
-    # every containment key changed
-    "dedup_containment_pairs",
-    "dedup_containment_gate",
-    "dedup_containment_gate_ingested",
-    # r16 DSIR explicit-target generalization (VERDICT r15 next #5):
-    # featurization factored into _dsir_features shared by corpus and
-    # target sides — same ranking, new executed path
-    "dsir_importance_select",
-})
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Keys ordered by how much a fresh driver row is worth (the driver
-    records the first 50 entries): brand-new and rewritten-since-last-green
-    keys first (rank 0), then ascending by latest-green driver round, so
-    the window always re-verifies the stalest cohort. For r16 that means
-    the new keys plus the r10-green cohort (indexing projections, the
-    served text-search family, semdedup/events rollups) and the oldest
-    r11 keys — keeping every key's newest driver row within ~4 rounds.
-    Ties keep registry insertion order (sorted() is stable)."""
-    q = _all_queries()
-
-    def rank(k: str) -> float:
-        if k in _REWRITTEN or k not in _LATEST_GREEN:
-            return 0.0  # new or rewritten: re-verify before anything else
-        return float(_LATEST_GREEN[k])
-
-    return {k: q[k] for k in sorted(q, key=rank)}
-
-
-def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Every catalogue key mapped to its ``(spark, sf_dir) -> DataFrame``
+    builder, in registry order."""
     return {
         # retrieval core (reference surface, SURVEY.md §2.3/2.6/2.8)
         "knn_topk": _q_knn_topk,
@@ -915,33 +550,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # r11: MMR diversified retrieval — greedy relevance/novelty
         # trade over the exact top-pool, unrolled-CTE oracle twin
         "knn_mmr_topk": _knn.knn_mmr_topk,
-        # relational surface (extended engine)
-        "window_topn_orders": _rel.window_topn_orders,
-        "window_running_revenue": _rel.window_running_revenue,
-        "customers_without_orders": _rel.customers_without_orders,
-        "customers_with_high_value_orders": _rel.customers_with_high_value_orders,
-        "events_tumbling_counts": _rel.events_tumbling_counts,
-        "events_sessionize": _rel.events_sessionize,
-        "events_sliding_counts": _rel.events_sliding_counts,
-        # r16: product-analytics pair — ordered-sequence funnel
-        # (view→click→purchase, earliest-completion within a 24h
-        # horizon) and the weekly signup-cohort retention triangle
-        "events_funnel_conversion": _rel.events_funnel_conversion,
-        "events_retention_cohorts": _rel.events_retention_cohorts,
-        # r16: the revenue companion — cohort LTV curve in exact cents
-        "events_cohort_revenue": _rel.events_cohort_revenue,
-        "window_moving_avg": _rel.window_moving_avg,
-        "rollup_segment_status": _rel.rollup_segment_status,
-        "cube_status_priority": _rel.cube_status_priority,
-        "salted_event_totals": _rel.salted_event_totals,
-        "salted_skew_join": _rel.salted_skew_join,
-        "pivot_event_matrix": _rel.pivot_event_matrix,
-        "agg_correlation": _rel.agg_correlation,
-        "orders_above_avg": _rel.orders_above_avg,
-        "events_by_dow": _rel.events_by_dow,
-        "agg_percentiles": _rel.agg_percentiles,
-        "setop_active_noncustomers": _rel.setop_active_noncustomers,
-        "json_props_rollup": _rel.json_props_rollup,
         # temporal joins (as-of / banded range — north star, no reference analog)
         "asof_join_purchase_click": _temporal.asof_join_purchase_click,
         # r7: SCD2 validity intervals from the event log (CDC surface)
@@ -959,17 +567,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_gap_stats": _temporal.events_gap_stats,
         # r7: dedup reporting — duplicate-cluster size distribution
         "dup_cluster_size_histogram": _dedup.dup_cluster_size_histogram,
-        # r7: distribution profiling + per-series outlier monitoring
-        "histogram_order_totals": _rel.histogram_order_totals,
-        "events_anomaly_zscore": _rel.events_anomaly_zscore,
-        # r7: skew detection (the measurement behind the salted_* ops)
-        "skew_key_profile": _rel.skew_key_profile,
-        # r7: reshape dual (UNPIVOT/melt) and the time-RANGE window frame
-        "unpivot_event_matrix": _rel.unpivot_event_matrix,
-        "window_trailing_value_sum": _rel.window_trailing_value_sum,
-        # r7: market-basket brand lift + per-user ML feature vector
-        "basket_brand_lift": _rel.basket_brand_lift,
-        "user_activity_profile": _rel.user_activity_profile,
     }
 
 
@@ -2947,59 +2544,7 @@ LIMIT 5
 """
 
 
-# View -> click -> purchase funnel, each step within 24 h of the last.
-_FUNNEL_SQL = """
-WITH e AS (
-    SELECT user_id, event_type, epoch_us(ts) * 1000 AS tn FROM events
-), v AS (
-    SELECT user_id, min(tn) AS t1 FROM e
-    WHERE event_type = 'view' GROUP BY 1
-), c AS (
-    SELECT e.user_id, min(e.tn) AS t2, min(v.t1) AS t1
-    FROM e JOIN v ON e.user_id = v.user_id
-    WHERE e.event_type = 'click' AND e.tn > v.t1
-      AND e.tn <= v.t1 + 86400000000000
-    GROUP BY 1
-), p AS (
-    SELECT e.user_id, min(e.tn) AS t3, min(c.t1) AS t1
-    FROM e JOIN c ON e.user_id = c.user_id
-    WHERE e.event_type = 'purchase' AND e.tn > c.t2
-      AND e.tn <= c.t2 + 86400000000000
-    GROUP BY 1
-)
-SELECT '1_view' AS stage, CAST(count(*) AS BIGINT) AS users,
-       CAST(0 AS BIGINT) AS total_gap_s FROM v
-UNION ALL
-SELECT '2_click', CAST(count(*) AS BIGINT),
-       CAST(coalesce(sum((t2 - t1) // 1000000000), 0) AS BIGINT) FROM c
-UNION ALL
-SELECT '3_purchase', CAST(count(*) AS BIGINT),
-       CAST(coalesce(sum((t3 - t1) // 1000000000), 0) AS BIGINT) FROM p
-"""
 
-# Gaps-and-islands sessionization for the events_sessionize oracle.
-_SESSIONIZE_SQL = """
-WITH b AS (
-    SELECT user_id, event_id, value, ts,
-           CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS es
-    FROM events
-), flagged AS (
-    SELECT user_id, event_id, value, ts,
-           CASE WHEN lag(es) OVER w IS NULL OR es - lag(es) OVER w > 1800
-                THEN 1 ELSE 0 END AS new_s
-    FROM b
-    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), s AS (
-    SELECT user_id, value,
-           CAST(sum(new_s) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-               ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-    FROM flagged
-)
-SELECT user_id, session_id, count(*) AS n_events,
-       round(sum(value), 2) AS session_value
-FROM s GROUP BY 1, 2
-"""
 
 # BM25 CTE chain shared by bm25_topk / hybrid_rrf_topk (operators/hybrid.py).
 # Every fractional literal is ::DOUBLE so DuckDB never takes its exact-DECIMAL
@@ -6475,195 +6020,6 @@ SELECT e.vec_id,
        CAST(e.embedding[top.pos + 1] AS DOUBLE) AS component
 FROM embeddings e CROSS JOIN top
 """,
-        "window_topn_orders": """
-SELECT o_custkey, o_orderkey, o_totalprice, CAST(rn AS INTEGER) AS rn FROM (
-    SELECT o_custkey, o_orderkey, o_totalprice,
-           row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn
-    FROM orders
-) WHERE rn <= 3
-""",
-        "window_running_revenue": """
-SELECT o_custkey, o_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate,
-       round(sum(o_totalprice) OVER (
-           PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-           ROWS UNBOUNDED PRECEDING), 2) AS running_total
-FROM orders
-""",
-        "customers_without_orders": """
-SELECT c_custkey, c_name FROM customer
-WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-""",
-        "customers_with_high_value_orders": """
-SELECT c_custkey, c_name, c_mktsegment FROM customer
-WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_totalprice > 450000)
-""",
-        # Funnel twin: same earliest-completion semantics — first view,
-        # first click strictly after it within 24h, first purchase
-        # strictly after that click within 24h; comparisons in
-        # µs-truncated epoch ns (epoch_us×1000 ≡ load_table's ts_ns),
-        # gap seconds by exact integer division.
-        "events_funnel_conversion": _FUNNEL_SQL,
-        # Retention twin: cohort day = first signup day; active_users
-        # counts DISTINCT users per (cohort_week, offset) via the same
-        # per-user collapse; Sunday-aligned week label (Spark
-        # dayofweek: Sun=1; DuckDB: Sun=0).
-        # Cohort-revenue twin: same cohort/week arithmetic as retention,
-        # revenue floor-scaled to integer cents per event before any sum.
-        "events_cohort_revenue": """
-WITH cohort AS (
-    SELECT user_id, min(CAST(ts AS DATE)) AS cohort_day
-    FROM events WHERE event_type = 'signup' GROUP BY 1
-), pur AS (
-    SELECT user_id, CAST(ts AS DATE) AS day,
-           CAST(sum(CAST(floor(value * 100) AS BIGINT)) AS BIGINT) AS cents
-    FROM events WHERE event_type = 'purchase' GROUP BY 1, 2
-)
-SELECT strftime(c.cohort_day
-                - CAST(dayofweek(c.cohort_day) AS INTEGER),
-                '%Y-%m-%d') AS cohort_week,
-       CAST((p.day - c.cohort_day) // 7 AS BIGINT) AS week_offset,
-       CAST(sum(p.cents) AS BIGINT) AS revenue_cents
-FROM pur p JOIN cohort c ON p.user_id = c.user_id
-WHERE p.day >= c.cohort_day
-GROUP BY 1, 2
-""",
-        "events_retention_cohorts": """
-WITH per_day AS (
-    SELECT user_id, CAST(ts AS DATE) AS day,
-           max(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END)
-               AS has_signup
-    FROM events GROUP BY 1, 2
-), cohort AS (
-    SELECT user_id, min(day) AS cohort_day
-    FROM per_day WHERE has_signup = 1 GROUP BY 1
-), uw AS (
-    SELECT DISTINCT
-        strftime(c.cohort_day
-                 - CAST(dayofweek(c.cohort_day) AS INTEGER),
-                 '%Y-%m-%d') AS cohort_week,
-        CAST((p.day - c.cohort_day) // 7 AS BIGINT) AS week_offset,
-        p.user_id
-    FROM per_day p JOIN cohort c ON p.user_id = c.user_id
-    WHERE p.day >= c.cohort_day
-)
-SELECT cohort_week, week_offset, CAST(count(*) AS BIGINT) AS active_users
-FROM uw GROUP BY 1, 2
-""",
-        "events_sliding_counts": """
-WITH secs AS (
-    SELECT event_type, value,
-           (epoch_ns(ts) // 1000000000 // 1800) * 1800 AS grid_s
-    FROM events
-), exploded AS (
-    SELECT event_type, value, grid_s - t.off AS start_s
-    FROM secs, LATERAL (SELECT unnest([0, 1800]) AS off) t
-)
-SELECT strftime(to_timestamp(start_s), '%Y-%m-%d %H:%M:%S') AS window_start,
-       event_type, count(*) AS n_events,
-       round(sum(value), 2) AS total_value
-FROM exploded GROUP BY 1, 2
-""",
-        "window_moving_avg": """
-WITH lagged AS (
-    SELECT o_custkey, o_orderkey, o_totalprice,
-           lag(o_totalprice, 1) OVER w AS l1,
-           lag(o_totalprice, 2) OVER w AS l2
-    FROM orders
-    WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-)
-SELECT o_custkey, o_orderkey,
-       round(o_totalprice + coalesce(l1, 0.0) + coalesce(l2, 0.0), 2)
-           AS sum_last3
-FROM lagged
-""",
-        "events_tumbling_counts": """
-SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-       event_type, count(*) AS n_events, round(sum(value), 2) AS total_value
-FROM events GROUP BY 1, 2
-""",
-        "orders_above_avg": """
-SELECT c_mktsegment, count(*) AS n_orders,
-       round(sum(o_totalprice), 2) AS revenue
-FROM orders JOIN customer ON o_custkey = c_custkey
-WHERE o_totalprice > (SELECT avg(o_totalprice) FROM orders)
-GROUP BY c_mktsegment
-""",
-        "agg_correlation": """
-SELECT l_returnflag,
-       round(corr(l_quantity, l_extendedprice), 4) AS corr_qty_price,
-       round(covar_samp(l_quantity, l_extendedprice), 2) AS covar_qty_price,
-       count(*) AS n
-FROM lineitem GROUP BY l_returnflag
-""",
-        "events_by_dow": """
-SELECT strftime(ts, '%A') AS dow,
-       CAST(hour(ts) AS INTEGER) AS hour_of_day,
-       count(*) AS n_events,
-       round(avg(value), 4) AS avg_value
-FROM events GROUP BY 1, 2
-""",
-        "pivot_event_matrix": """
-SELECT user_id,
-       CAST(sum(CASE WHEN event_type = 'click'    THEN 1 ELSE 0 END) AS BIGINT) AS n_click,
-       CAST(sum(CASE WHEN event_type = 'view'     THEN 1 ELSE 0 END) AS BIGINT) AS n_view,
-       CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS n_purchase,
-       CAST(sum(CASE WHEN event_type = 'signup'   THEN 1 ELSE 0 END) AS BIGINT) AS n_signup,
-       CAST(sum(CASE WHEN event_type = 'error'    THEN 1 ELSE 0 END) AS BIGINT) AS n_error
-FROM events GROUP BY user_id
-""",
-        "salted_event_totals": """
-SELECT event_type, count(*) AS n_events, round(sum(value), 2) AS total_value
-FROM events GROUP BY event_type
-""",
-        "salted_skew_join": """
-WITH weights(event_type, weight) AS (VALUES
-    ('click', 1.0), ('view', 0.5), ('purchase', 5.0),
-    ('signup', 3.0), ('error', 0.0))
-SELECT e.event_type, count(*) AS n_events,
-       round(sum(e.value * w.weight), 2) AS weighted_value
-FROM events e JOIN weights w ON e.event_type = w.event_type
-GROUP BY e.event_type
-""",
-        "rollup_segment_status": """
-SELECT c_mktsegment, o_orderstatus,
-       round(sum(o_totalprice), 2) AS revenue,
-       count(*) AS n_orders,
-       CAST(GROUPING(c_mktsegment, o_orderstatus) AS INTEGER) AS grp
-FROM orders JOIN customer ON o_custkey = c_custkey
-GROUP BY ROLLUP(c_mktsegment, o_orderstatus)
-""",
-        "cube_status_priority": """
-SELECT o_orderstatus, o_orderpriority,
-       round(sum(o_totalprice), 2) AS revenue,
-       count(*) AS n_orders,
-       CAST(GROUPING(o_orderstatus, o_orderpriority) AS INTEGER) AS grp
-FROM orders
-GROUP BY CUBE(o_orderstatus, o_orderpriority)
-""",
-        "agg_percentiles": """
-WITH r AS (
-    SELECT l_returnflag, l_extendedprice,
-           row_number() OVER (PARTITION BY l_returnflag ORDER BY l_extendedprice) AS rn,
-           count(*) OVER (PARTITION BY l_returnflag) AS n
-    FROM lineitem
-)
-SELECT l_returnflag,
-       max(CASE WHEN rn = CAST(ceil(0.5 * n) AS BIGINT) THEN l_extendedprice END) AS p50,
-       max(CASE WHEN rn = CAST(ceil(0.9 * n) AS BIGINT) THEN l_extendedprice END) AS p90,
-       max(CASE WHEN rn = CAST(ceil(0.99 * n) AS BIGINT) THEN l_extendedprice END) AS p99
-FROM r GROUP BY l_returnflag
-""",
-        "setop_active_noncustomers": """
-SELECT CAST(user_id AS BIGINT) AS uid FROM events
-EXCEPT
-SELECT CAST(o_custkey AS BIGINT) FROM orders
-""",
-        "json_props_rollup": """
-SELECT event_type, count(*) AS n_events,
-       round(avg(CAST(props->>'k' AS INTEGER)), 4) AS avg_k,
-       max(CAST(props->>'k' AS INTEGER)) AS max_k
-FROM events GROUP BY event_type
-""",
         "stratified_sample": """
 SELECT doc_id, lang, source, n_chars FROM (
     SELECT doc_id, lang, source, n_chars,
@@ -6745,94 +6101,6 @@ SELECT doc_id, norm_text,
        CAST(len(string_split(norm_text, ' ')) AS INTEGER) AS n_tokens_norm
 FROM n
 """,
-        # The melt round-trip lands back at the plain long-form counts.
-        "unpivot_event_matrix": """
-SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS n_events
-FROM events GROUP BY 1, 2
-""",
-        # RANGE frame over integer epoch-µs; values floor-scaled to
-        # integer micros BEFORE the window sum (bounded-frame float
-        # aggregates associate differently across engines; integers
-        # are exact in any association order). RANGE includes all
-        # peers at equal ts, so ties need no order disambiguation.
-        "window_trailing_value_sum": """
-SELECT user_id, event_id,
-       CAST(sum(CAST(floor(value * 1000000) AS BIGINT)) OVER (
-           PARTITION BY user_id ORDER BY epoch_us(ts)
-           RANGE BETWEEN 60000000 PRECEDING AND CURRENT ROW) AS BIGINT)
-           AS trailing_sum_micro
-FROM events
-""",
-        "basket_brand_lift": """
-WITH ob AS (
-    SELECT DISTINCT l.l_orderkey AS okey, p.p_brand AS brand
-    FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-),
-pairs AS (
-    SELECT a.brand AS u, b.brand AS v, CAST(count(*) AS BIGINT) AS n_ab
-    FROM ob a JOIN ob b ON a.okey = b.okey AND a.brand < b.brand
-    GROUP BY 1, 2
-),
-singles AS (
-    SELECT brand, CAST(count(*) AS BIGINT) AS n_one FROM ob GROUP BY 1
-),
-t AS (SELECT CAST(count(DISTINCT okey) AS BIGINT) AS n_orders FROM ob)
-SELECT p.u, p.v, p.n_ab,
-       CAST(CAST(p.n_ab AS HUGEINT) * t.n_orders * 1000000
-            // (CAST(sa.n_one AS HUGEINT) * sb.n_one) AS BIGINT)
-           AS lift_micro
-FROM pairs p
-JOIN singles sa ON p.u = sa.brand
-JOIN singles sb ON p.v = sb.brand
-CROSS JOIN t
-ORDER BY p.n_ab DESC, p.u, p.v LIMIT 20
-""",
-        "user_activity_profile": """
-SELECT user_id,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS n_click,
-       CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS n_view,
-       CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS n_purchase,
-       CAST(sum(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS n_signup,
-       CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_error,
-       CAST(count(DISTINCT strftime(ts, '%Y-%m-%d')) AS BIGINT) AS active_days,
-       strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS first_seen,
-       strftime(max(ts), '%Y-%m-%d %H:%M:%S') AS last_seen
-FROM events GROUP BY 1
-""",
-        "skew_key_profile": """
-WITH c AS (SELECT user_id, count(*) AS cnt FROM events GROUP BY 1),
-t AS (SELECT CAST(sum(cnt) AS BIGINT) AS total FROM c)
-SELECT user_id, CAST(cnt AS BIGINT) AS cnt,
-       CAST(cnt * 1000000 // total AS BIGINT) AS share_micro
-FROM c CROSS JOIN t
-ORDER BY cnt DESC, user_id LIMIT 10
-""",
-        # Bucket index is ONE IEEE expression over identical stored
-        # doubles — bit-identical cross-engine; mass in exact cents.
-        "histogram_order_totals": """
-SELECT CAST(floor((o_totalprice - 0.0::DOUBLE) / 25000.0::DOUBLE) AS INTEGER)
-           AS bucket,
-       CAST(count(*) AS BIGINT) AS n_orders,
-       CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-           AS total_cents
-FROM orders GROUP BY 1
-""",
-        "events_anomaly_zscore": """
-WITH s AS (
-    SELECT event_type, avg(value) AS mu, stddev_pop(value) AS sigma
-    FROM events GROUP BY 1
-),
-z AS (
-    SELECT e.event_type, e.event_id, e.value,
-           CAST(floor((e.value - s.mu) / s.sigma * 1000000.0::DOUBLE)
-                AS BIGINT) AS z_micro
-    FROM events e JOIN s USING (event_type)
-    WHERE s.sigma > 0
-)
-SELECT event_type, event_id, value, z_micro
-FROM z WHERE z_micro >= 2000000 OR z_micro < -2000000
-""",
         "retention_day_over_day": """
 WITH user_days AS (
     SELECT DISTINCT user_id, strftime(ts, '%Y-%m-%d') AS day FROM events
@@ -6873,5 +6141,4 @@ FROM e a JOIN e b
   ON a.user_id = b.user_id
  AND b.ts_ns > a.ts_ns AND b.ts_ns - a.ts_ns <= 60000000000
 """,
-        "events_sessionize": _SESSIONIZE_SQL,
     }

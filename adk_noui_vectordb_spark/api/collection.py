@@ -51,7 +51,7 @@ import hashlib
 import json
 import os
 from functools import reduce
-from operator import or_
+from operator import and_, or_
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -142,6 +142,50 @@ def _mbucket_specs(id_frame: DataFrame) -> frozenset:
         .distinct()
         .collect()
     )
+
+
+def _survivors(
+    read: DataFrame, specs, victims: DataFrame, keep: list
+) -> DataFrame:
+    """The rows of the partitions named by ``specs`` (``"col=v/col=v"``
+    directory specs) that a commit rewrites, minus the ``victims``
+    (vec_id) rows, projected to ``keep``."""
+    preds = [
+        reduce(
+            and_,
+            [
+                F.col(c).cast("string") == v
+                for c, v in (p.split("=") for p in spec.split("/"))
+            ],
+        )
+        for spec in sorted(specs)
+    ]
+    return (
+        read.filter(reduce(or_, preds))
+        .join(victims, "vec_id", "left_anti")
+        .select(*keep)
+    )
+
+
+def _checked_size(b: DataFrame) -> int:
+    """Row count of a write batch, with its ids checked in the same one
+    job: a NULL or repeated id raises ``ValueError``."""
+    r = b.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.count("id").alias("n_ids"),
+        F.countDistinct("id").alias("n_distinct"),
+    ).head()
+    if r["n_ids"] != r["n"]:
+        raise ValueError(f"NULL id in {r['n'] - r['n_ids']} batch row(s)")
+    if r["n_distinct"] != r["n"]:
+        raise ValueError("duplicate ids within one batch")
+    return r["n"]
+
+
+def _require_int(name: str, val, lo: int) -> None:
+    """Call-time check of a count argument: an int (not a bool) >= lo."""
+    if isinstance(val, bool) or not isinstance(val, int) or val < lo:
+        raise ValueError(f"{name} must be an int >= {lo}, got {val!r}")
 
 
 class Collection:
@@ -898,11 +942,9 @@ class Collection:
         b = batch.withColumn(
             "vec_id", _sid_expr(F.col("id").cast("string"))
         ).localCheckpoint(eager=True)
-        n = b.count()
+        n = _checked_size(b)
         if n == 0:
             return cur
-        if b.select("id").distinct().count() != n:
-            raise ValueError("duplicate ids within one batch")
         last = None
         for _ in range(3):
             try:
@@ -1019,12 +1061,9 @@ class Collection:
                 ),
             )
         b, meta_cols = self._normalize(batch)
-        n = b.count()
-        if n == 0:
+        if _checked_size(b) == 0:
             cur = self._cur()
             return cur if cur is not None else ""
-        if b.select("id").distinct().count() != n:
-            raise ValueError("duplicate ids within one batch")
         b = b.withColumn("vec_id", _sid_expr(F.col("id"))).localCheckpoint(
             eager=True
         )
@@ -1207,41 +1246,26 @@ class Collection:
     def _plan(self, b, batch_bands, meta_cols, rw_pairs, rw_vb, rw_mb, prev):
         """Component plans: survivors (anti-joined old rows of rewritten
         partitions) + batch appends — the shared-kernel discipline."""
-        def survivors(read, part_col_set, victim_ids, keep_cols):
-            preds = []
-            for spec in sorted(part_col_set):
-                kv = dict(p.split("=") for p in spec.split("/"))
-                leg = None
-                for c, v in kv.items():
-                    e = F.col(c).cast("string") == v
-                    leg = e if leg is None else (leg & e)
-                preds.append(leg)
-            return (
-                read.filter(reduce(or_, preds))
-                .join(victim_ids, "vec_id", "left_anti")
-                .select(*keep_cols)
-            )
-
         band_writes, vec_writes, meta_writes = [], [], []
         if prev is not None:
             cur, info, resub_ids = prev
             if rw_pairs:
                 band_writes.append(
-                    survivors(
+                    _survivors(
                         self._bands(cur), rw_pairs, resub_ids,
                         ["band", "band_key", "vec_id"],
                     )
                 )
             if rw_vb:
                 vec_writes.append(
-                    survivors(
+                    _survivors(
                         self._vecs(cur), rw_vb, resub_ids,
                         ["vbucket", "vec_id", "emb"],
                     )
                 )
             if rw_mb:
                 meta_writes.append(
-                    survivors(
+                    _survivors(
                         self._meta(cur, info), rw_mb, resub_ids,
                         ["mbucket", "vec_id", "id", "document", *meta_cols],
                     )
@@ -1300,28 +1324,12 @@ class Collection:
             return cur
         rw_mb = _mbucket_specs(victims)
         rw_vb, rw_pairs = self._stale_partitions(cur, victims, info["dim"])
-
-        def survivors(read, specs, keep):
-            preds = []
-            for spec in sorted(specs):
-                kv = dict(p.split("=") for p in spec.split("/"))
-                leg = None
-                for c, v in kv.items():
-                    e = F.col(c).cast("string") == v
-                    leg = e if leg is None else (leg & e)
-                preds.append(leg)
-            return (
-                read.filter(reduce(or_, preds))
-                .join(victims, "vec_id", "left_anti")
-                .select(*keep)
-            )
-
         comps = [
             vn.Component(
                 "bands",
                 ("band", "band_key"),
                 rw_pairs,
-                (survivors(self._bands(cur), rw_pairs, ["band", "band_key", "vec_id"]),)
+                (_survivors(self._bands(cur), rw_pairs, victims, ["band", "band_key", "vec_id"]),)
                 if rw_pairs
                 else (),
             ),
@@ -1329,7 +1337,7 @@ class Collection:
                 "vecs",
                 ("vbucket",),
                 rw_vb,
-                (survivors(self._vecs(cur), rw_vb, ["vbucket", "vec_id", "emb"]),)
+                (_survivors(self._vecs(cur), rw_vb, victims, ["vbucket", "vec_id", "emb"]),)
                 if rw_vb
                 else (),
             ),
@@ -1338,9 +1346,10 @@ class Collection:
                 ("mbucket",),
                 rw_mb,
                 (
-                    survivors(
+                    _survivors(
                         self._meta(cur, info),
                         rw_mb,
+                        victims,
                         ["mbucket", "vec_id", "id", "document"]
                         + self._meta_cols(info),
                     ),
@@ -1474,34 +1483,21 @@ class Collection:
             rw_mb = _mbucket_specs(overlap)
             rw_vb, rw_pairs = self._stale_partitions(cur, overlap, info["dim"])
 
-        def survivors(read, specs, keep):
-            preds = []
-            for spec in sorted(specs):
-                kv = dict(p.split("=") for p in spec.split("/"))
-                leg = None
-                for c, v in kv.items():
-                    e = F.col(c).cast("string") == v
-                    leg = e if leg is None else (leg & e)
-                preds.append(leg)
-            return (
-                read.filter(reduce(or_, preds))
-                .join(overlap, "vec_id", "left_anti")
-                .select(*keep)
-            )
-
         band_writes = (
-            [survivors(self._bands(cur), rw_pairs, ["band", "band_key", "vec_id"])]
+            [_survivors(self._bands(cur), rw_pairs, overlap, ["band", "band_key", "vec_id"])]
             if rw_pairs
             else []
         ) + [src_bands.select("band", "band_key", "vec_id")]
         vec_writes = (
-            [survivors(self._vecs(cur), rw_vb, ["vbucket", "vec_id", "emb"])]
+            [_survivors(self._vecs(cur), rw_vb, overlap, ["vbucket", "vec_id", "emb"])]
             if rw_vb
             else []
         ) + [src_vecs.select("vbucket", "vec_id", "emb")]
         meta_keep = ["mbucket", "vec_id", "id", "document", *meta_cols]
         meta_writes = (
-            [survivors(self._meta(cur, info), rw_mb, meta_keep)] if rw_mb else []
+            [_survivors(self._meta(cur, info), rw_mb, overlap, meta_keep)]
+            if rw_mb
+            else []
         ) + [src_meta.select(*meta_keep)]
         comps = [
             vn.Component("bands", ("band", "band_key"), rw_pairs, tuple(band_writes)),
@@ -1765,8 +1761,8 @@ class Collection:
         if offset is not None and after_id is not None:
             raise ValueError("pass offset OR after_id, not both")
         for name, val in (("limit", limit), ("offset", offset)):
-            if val is not None and val < 0:
-                raise ValueError(f"{name} must be >= 0, got {val}")
+            if val is not None:
+                _require_int(name, val, 0)
         inc = {"documents", "metadatas"} if include is None else set(include)
         unknown = inc - {"documents", "metadatas", "embeddings"}
         if unknown:
@@ -1885,8 +1881,7 @@ class Collection:
         unknown = inc - {"documents", "metadatas", "embeddings", "distances"}
         if unknown:
             raise ValueError(f"include: unknown items {sorted(unknown)}")
-        if n_results < 1:
-            raise ValueError(f"n_results must be >= 1, got {n_results}")
+        _require_int("n_results", n_results, 1)
         if (query_embeddings is None) == (query_texts is None):
             raise ValueError(
                 "pass exactly one of query_embeddings / query_texts"
@@ -1915,6 +1910,10 @@ class Collection:
         mat = np.asarray(qs, dtype=np.float64)
         if mat.ndim != 2 or mat.shape[1] != dim:
             raise ValueError(f"query_embeddings must be n x {dim}")
+        if self.space == "cosine" and not mat.any(axis=1).all():
+            raise ValueError(
+                "query_embeddings: a zero vector has no cosine distance"
+            )
         if filter_strategy not in ("auto", "probe", "exact", "graph"):
             raise ValueError(
                 "filter_strategy: 'auto'|'probe'|'exact'|'graph', "
@@ -2132,9 +2131,13 @@ class Collection:
             dist = F.lit(1.0) - F.round(dot_product(e, qe), 4)
         else:
             dist = F.lit(1.0) - F.round(cosine_similarity(e, qe), 4)
+        vecs = self._vecs(cur)
+        if strategy == "exact" and self.space == "cosine":
+            # a zero vector is stored, never banded: probe and graph
+            # never reach it, and its cosine is undefined
+            vecs = vecs.filter(_nonzero_pred())
         scored = (
-            self._vecs(cur)
-            .join(cand, "vec_id")
+            vecs.join(cand, "vec_id")
             .withColumn("q_emb", F.element_at(qlits, F.col("query_idx") + 1))
             .select("query_idx", "vec_id", dist.alias("distance"))
         )

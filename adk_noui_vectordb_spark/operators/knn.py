@@ -147,8 +147,9 @@ def knn_regress(spark, sf_dir: str, n_queries: int = 8, k: int = 15) -> DataFram
     Returns (query_id, predicted_n_chars double, true_n_chars,
     abs_error double). No rounding anywhere: the neighbor sum is exact
     BIGINT and one double division by the neighbor count is bit-equal
-    across engines (the agg_percentiles rounding-tie lesson — emit raw
-    doubles, never round(sum/count)).
+    across engines (emit raw doubles, never round(sum/count): an average
+    of two 2-dp values can sit on a rounding tie the engines break
+    differently).
 
     100 TB shape: broadcast query side, shuffle-free corpus scoring,
     one per-query rank window, map-side-combined mean."""

@@ -318,10 +318,10 @@ def events_gap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Gaps come from one lag window per user (deterministic
     (ts_ns, event_id) order); the median is RANK-SELECTED (the
-    agg_percentiles discipline: the ceil(n/2)-th smallest stored gap —
-    a stored integer, never an interpolation that differs in the last
-    ulp across engines). Both windows and the final aggregate share the
-    user_id partitioning — one corpus-sized shuffle.
+    ceil(n/2)-th smallest stored gap — a stored integer, never an
+    interpolation that differs in the last ulp across engines). Both
+    windows and the final aggregate share the user_id partitioning — one
+    corpus-sized shuffle.
     """
     e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts_ns", "event_id")

@@ -109,17 +109,6 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 BROADCAST_MAX_BYTES = 32 * 1024 * 1024
 
 
-def parquet_size_bytes(sf_dir: str, name: str) -> int:
-    """Total on-disk bytes of one testdata table (file or directory)."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if os.path.isfile(path):
-        return os.path.getsize(path)
-    total = 0
-    for root, _, files in os.walk(path):
-        total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-    return total
-
-
 def maybe_broadcast(
     df: DataFrame, size_bytes: int, max_bytes: int = BROADCAST_MAX_BYTES
 ) -> DataFrame:

@@ -49,18 +49,9 @@ BENCH_KEYS = [
     "late_interaction_where_topk_served",
     "late_interaction_explain_served",
     "dsir_importance_select",
-    "window_topn_orders",
-    "events_sessionize",
-    "events_funnel_conversion",
-    "events_retention_cohorts",
-    "events_cohort_revenue",
-    "events_tumbling_counts",
     "asof_join_purchase_click",
     "range_join_bursts",
-    "rollup_segment_status",
-    "agg_percentiles",
     "curate_corpus",
-    "pivot_event_matrix",
     "retention_day_over_day",
     "chunk_ast_python",
     "quality_repetition",
@@ -122,10 +113,7 @@ BENCH_KEYS = [
     "embed_topvar_project",
     "normalize_text_corpus",
     "trend_event_values",
-    "histogram_order_totals",
-    "events_anomaly_zscore",
     "hybrid_rrf_served_topk",
-    "skew_key_profile",
     "knn_join_topk",
     # r10c: ChromaDB-compatible Collection facade + full where DSL
     "collection_query_topk",

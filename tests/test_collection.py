@@ -65,7 +65,13 @@ def test_add_rejects_existing_and_batch_dups(spark, coll):
         coll.add(_batch(spark, ["b", "x"], _vecs(3, 2)))
     with pytest.raises(ValueError, match="duplicate ids"):
         coll.add(_batch(spark, ["y", "y"], _vecs(4, 2)))
+    # a NULL id is rejected before anything commits, on add and upsert
+    for ids in ([None], [None, "z"]):
+        for write in (coll.add, coll.upsert):
+            with pytest.raises(ValueError, match="NULL id"):
+                write(_batch(spark, ids, _vecs(5, len(ids))))
     assert coll.count() == 3
+    assert [c for c, ok, _ in coll.fsck() if not ok] == []
 
 
 def test_upsert_replaces_everything(spark, coll):
@@ -150,6 +156,12 @@ def test_query_batch_is_per_query_topk(spark, coll):
     assert by_q[1][0]["id"] == "v11" and by_q[1][0]["distance"] == 0.0
     # a non-positive n_results fails at call time, single and batch alike
     for bad in (0, -1):
+        with pytest.raises(ValueError, match="n_results"):
+            coll.query(qs[0], n_results=bad)
+        with pytest.raises(ValueError, match="n_results"):
+            coll.query(qs, n_results=bad)
+    # and so does a count that is not an int (a bool is not a count)
+    for bad in (True, 2.5):
         with pytest.raises(ValueError, match="n_results"):
             coll.query(qs[0], n_results=bad)
         with pytest.raises(ValueError, match="n_results"):
@@ -527,6 +539,12 @@ def test_get_offset_and_after_id_paginate(spark, coll):
         coll.get(limit=-1)
     with pytest.raises(ValueError, match="offset"):
         coll.get(offset=-1)
+    # so do bounds that are not ints
+    for bad in (2.5, True):
+        with pytest.raises(ValueError, match="limit"):
+            coll.get(limit=bad)
+        with pytest.raises(ValueError, match="offset"):
+            coll.get(offset=bad)
     assert coll.get(limit=0).count() == 0
 
 
@@ -940,7 +958,9 @@ def test_adaptive_prefilter_strategy(spark, tmp_path):
     switches query() to exact-over-survivors (recall 1.0 where the
     probe path thins below k by construction); the explicit strategies
     agree with each other on non-selective filters; 'exact' without a
-    filter is rejected."""
+    filter is rejected. A zero vector the filter keeps is stored but
+    never scored (its cosine is undefined), and a zero query vector is
+    rejected at call time."""
     import numpy as np
 
     n = 300
@@ -953,7 +973,8 @@ def test_adaptive_prefilter_strategy(spark, tmp_path):
             [
                 (f"a{i:04d}", [float(x) for x in mat[i]], f"d{i}", grp[i])
                 for i in range(n)
-            ],
+            ]
+            + [("zero", [0.0] * DIM, "dz", 0)],
             "id string, embedding array<double>, document string, grp int",
         )
     )
@@ -981,6 +1002,10 @@ def test_adaptive_prefilter_strategy(spark, tmp_path):
         ).collect()
     ]
     assert auto == exact == truth  # auto picked the exact path: recall 1.0
+    for strategy in ("auto", "exact", "probe"):
+        with pytest.raises(ValueError, match="zero"):
+            coll.query([0.0] * DIM, n_results=3, where=where,
+                       filter_strategy=strategy)
     # probe path still works and returns a subset of survivors
     probed = [
         r["id"]

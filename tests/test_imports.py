@@ -163,13 +163,13 @@ def _string_keys(node: ast.expr) -> list[str]:
 
 
 def test_catalogue_key_lists_name_registered_keys():
-    """Every key the timing tools iterate is a key ``_all_queries()``
+    """Every key the timing tools iterate is a key ``queries()``
     registers, so deleting an operator cannot leave a stale name behind
     that fails only when the tool runs."""
     registry = next(
         node
         for node in ast.parse((REPO / "__spark_entry__.py").read_text()).body
-        if isinstance(node, ast.FunctionDef) and node.name == "_all_queries"
+        if isinstance(node, ast.FunctionDef) and node.name == "queries"
     )
     returned = next(n.value for n in ast.walk(registry) if isinstance(n, ast.Return))
     known = set(_string_keys(returned))
@@ -183,3 +183,17 @@ def test_catalogue_key_lists_name_registered_keys():
         assert keys, f"{path.name}: {name} lists no keys"
         stale = sorted(set(keys) - known)
         assert not stale, f"{path.name}: {name} names unregistered keys {stale}"
+
+
+def test_every_catalogue_key_has_an_oracle_twin():
+    """``queries()`` and ``oracle_sql()`` hold the same keys. The parity
+    test runs only their intersection, so a key left on one side by a
+    deletion would otherwise go unchecked. Building both dicts starts no
+    Spark session."""
+    import __spark_entry__ as entrymod
+
+    spark_keys, oracle_keys = set(entrymod.queries()), set(entrymod.oracle_sql())
+    assert spark_keys == oracle_keys, (
+        f"no oracle twin: {sorted(spark_keys - oracle_keys)}; "
+        f"no Spark query: {sorted(oracle_keys - spark_keys)}"
+    )

@@ -8,7 +8,6 @@ boundary behavior, not golden values (those are the oracle's job).
 
 from pyspark.sql import functions as F
 
-from adk_noui_vectordb_spark.operators import relational as rel
 from adk_noui_vectordb_spark.operators import textops as tx
 from adk_noui_vectordb_spark.plans import explain_str
 from adk_noui_vectordb_spark.sources.corpus import derived_corpus
@@ -459,56 +458,6 @@ def test_trend_recovers_planted_slope(spark):
     assert r["r2_micro"] == 1_000_000
 
 
-# ------------------------------------------------- histogram / anomaly
-
-def test_histogram_conserves_orders_and_mass(spark, sf_dir):
-    """Bucket counts and cent mass must sum to the table totals exactly
-    (no order falls outside the bucketing, nothing double-counts)."""
-    got = rel.histogram_order_totals(spark, sf_dir)
-    o = load_table(spark, sf_dir, "orders")
-    tot = got.agg(
-        F.sum("n_orders").alias("n"), F.sum("total_cents").alias("c")
-    ).head()
-    want = o.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).alias("c"),
-    ).head()
-    assert tot["n"] == want["n"]
-    assert tot["c"] == want["c"]
-    assert got.filter(F.col("bucket") < 0).count() == 0
-
-
-def test_anomaly_zscore_tail_and_broadcast(spark, sf_dir):
-    """|z| >= 2 flags a small tail (< 15% of events), every flagged row
-    really exceeds the threshold, and the stats side is broadcast."""
-    got = rel.events_anomaly_zscore(spark, sf_dir)
-    rows = got.collect()
-    n_events = load_table(spark, sf_dir, "events").count()
-    assert 0 < len(rows) < 0.15 * n_events
-    assert all(
-        r["z_micro"] >= 2_000_000 or r["z_micro"] < -2_000_000 for r in rows
-    )
-    plan = explain_str(got, mode="simple")
-    assert "BroadcastHashJoin" in plan, plan
-
-
-# ------------------------------------------------------------ skew profile
-
-def test_skew_profile_matches_exact_counts(spark, sf_dir):
-    """Top keys and shares equal an exact recomputation; counts are
-    returned heaviest-first with the id tie-break."""
-    got = rel.skew_key_profile(spark, sf_dir).collect()
-    e = load_table(spark, sf_dir, "events").collect()
-    from collections import Counter
-
-    cnt = Counter(r["user_id"] for r in e)
-    total = sum(cnt.values())
-    want = sorted(cnt.items(), key=lambda kv: (-kv[1], kv[0]))[:10]
-    assert [(r["user_id"], r["cnt"]) for r in got] == want
-    for r in got:
-        assert r["share_micro"] == r["cnt"] * 1_000_000 // total
-
-
 # -------------------------------------------- rate limit / cluster histogram
 
 def test_rate_limited_sample_keeps_earliest_per_user(spark, sf_dir):
@@ -549,49 +498,7 @@ def test_cluster_size_histogram_conserves_docs(spark, sf_dir):
     assert all(r["cluster_size"] >= 1 and r["n_clusters"] >= 1 for r in rows)
 
 
-# ------------------------------------------------ unpivot / range window
-
-def test_unpivot_round_trip_conserves_events(spark, sf_dir):
-    """melt(pivot(events)) returns to the long form: total n_events
-    equals the event count and every (user, type) cell matches the
-    direct groupBy."""
-    got = {
-        (r["user_id"], r["event_type"]): r["n_events"]
-        for r in rel.unpivot_event_matrix(spark, sf_dir).collect()
-    }
-    e = load_table(spark, sf_dir, "events")
-    want = {
-        (r["user_id"], r["event_type"]): r["n"]
-        for r in e.groupBy("user_id", "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert got == want
-    assert sum(got.values()) == e.count()
-
-
-def test_trailing_range_window_matches_python_replay(spark, sf_dir):
-    """The RANGE frame sum equals a brute-force replay over each user's
-    (ts_us, v_micro) series — inclusive 60 s window, peers included."""
-    import math
-
-    rows = rel.window_trailing_value_sum(spark, sf_dir).collect()
-    e = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_id", F.expr("ts_ns div 1000").alias("ts_us"), "value"
-    ).collect()
-    by_user: dict[int, list] = {}
-    series = {}
-    for r in e:
-        v = math.floor(r["value"] * 1e6)
-        by_user.setdefault(r["user_id"], []).append((r["ts_us"], v))
-        series[r["event_id"]] = (r["user_id"], r["ts_us"])
-    for r in rows[:500]:
-        uid, ts = series[r["event_id"]]
-        want = sum(
-            v for (t, v) in by_user[uid] if ts - 60_000_000 <= t <= ts
-        )
-        assert r["trailing_sum_micro"] == want, (r, want)
-
+# ------------------------------------------------ token entropy / gap stats
 
 def test_doc_token_entropy_bounds_and_extremes(spark, sf_dir):
     """0 <= H <= ln(n_distinct) (uniform bound, micro units with floor
@@ -619,59 +526,6 @@ def test_doc_token_entropy_bounds_and_extremes(spark, sf_dir):
         )
         assert r["entropy_micro"] == want
         assert r["n_tokens"] == n and r["n_distinct"] == len(cnt)
-
-
-# ------------------------------------------------ basket lift / user profile
-
-def test_basket_lift_invariants(spark, sf_dir):
-    """Lift is symmetric in construction (u < v canonical), n_ab can
-    never exceed either single count, and lift = n_ab·N/(n_a·n_b) in
-    exact micros for every returned pair."""
-    rows = rel.basket_brand_lift(spark, sf_dir).collect()
-    assert rows
-    l = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    ob = (
-        l.join(p, l.l_partkey == p.p_partkey)
-        .select(F.col("l_orderkey").alias("okey"), F.col("p_brand").alias("b"))
-        .distinct()
-        .collect()
-    )
-    from collections import defaultdict
-
-    baskets = defaultdict(set)
-    for r in ob:
-        baskets[r["okey"]].add(r["b"])
-    n_orders = len(baskets)
-    singles = defaultdict(int)
-    pairs = defaultdict(int)
-    for bs in baskets.values():
-        for x in bs:
-            singles[x] += 1
-        for x in bs:
-            for y in bs:
-                if x < y:
-                    pairs[(x, y)] += 1
-    for r in rows:
-        assert r["u"] < r["v"]
-        assert r["n_ab"] == pairs[(r["u"], r["v"])]
-        assert r["n_ab"] <= min(singles[r["u"]], singles[r["v"]])
-        assert r["lift_micro"] == r["n_ab"] * n_orders * 1_000_000 // (
-            singles[r["u"]] * singles[r["v"]]
-        )
-
-
-def test_user_profile_conserves_events(spark, sf_dir):
-    """Per-type counts sum to n_events for every user, and the profile
-    covers every user exactly once."""
-    rows = rel.user_activity_profile(spark, sf_dir).collect()
-    e = load_table(spark, sf_dir, "events")
-    assert len(rows) == e.select("user_id").distinct().count()
-    type_cols = ["n_click", "n_view", "n_purchase", "n_signup", "n_error"]
-    for r in rows:
-        assert sum(r[c] for c in type_cols) == r["n_events"]
-        assert 1 <= r["active_days"]
-        assert r["first_seen"] <= r["last_seen"]
 
 
 def test_gap_stats_match_python_replay(spark, sf_dir):
@@ -1489,127 +1343,3 @@ def test_containment_fsck_catches_zero_prefix_doc(spark, tmp_path):
     ).parquet(os.path.join(cur, "post"))
     got = {c: ok for c, ok, _ in fsck_containment_index(spark, base)}
     assert got["prefix_flags_exact_bound"] is False, got
-
-
-def _write_events(spark, base, rows):
-    import os
-
-    os.makedirs(base, exist_ok=True)
-    spark.createDataFrame(
-        rows,
-        "event_id bigint, ts timestamp, user_id bigint, "
-        "event_type string, value double, props string",
-    ).write.mode("overwrite").parquet(os.path.join(base, "events.parquet"))
-
-
-def test_events_funnel_conversion_semantics(spark, tmp_path):
-    """Earliest-completion ordered funnel: a user converting inside the
-    horizon advances; a click past the horizon or an out-of-order
-    purchase (no prior view) never counts."""
-    from datetime import datetime as dt
-
-    from adk_noui_vectordb_spark.operators.relational import (
-        events_funnel_conversion,
-    )
-
-    base = str(tmp_path / "fe")
-    _write_events(
-        spark,
-        base,
-        [
-            # A completes: view 10:00 → click 10:30 → purchase 11:00
-            (1, dt(2024, 1, 7, 10, 0), 1, "view", 1.0, "{}"),
-            (2, dt(2024, 1, 7, 10, 30), 1, "click", 1.0, "{}"),
-            (3, dt(2024, 1, 7, 11, 0), 1, "purchase", 1.0, "{}"),
-            # B's click lands 25h after the first view: outside 24h
-            (4, dt(2024, 1, 7, 10, 0), 2, "view", 1.0, "{}"),
-            (5, dt(2024, 1, 8, 11, 0), 2, "click", 1.0, "{}"),
-            # C views only
-            (6, dt(2024, 1, 7, 9, 0), 3, "view", 1.0, "{}"),
-            # D clicks and purchases with NO view: in no stage
-            (7, dt(2024, 1, 7, 9, 0), 4, "click", 1.0, "{}"),
-            (8, dt(2024, 1, 7, 9, 5), 4, "purchase", 1.0, "{}"),
-        ],
-    )
-    got = {
-        r["stage"]: (r["users"], r["total_gap_s"])
-        for r in events_funnel_conversion(spark, base).collect()
-    }
-    assert got == {
-        "1_view": (3, 0),
-        "2_click": (1, 1800),
-        "3_purchase": (1, 3600),
-    }, got
-
-
-def test_events_retention_cohorts_semantics(spark, tmp_path):
-    """Cohort = first signup day; two active days inside one offset week
-    count the user ONCE; pre-signup activity is out of scope; the week
-    label is the cohort day's Sunday."""
-    from datetime import datetime as dt
-
-    from adk_noui_vectordb_spark.operators.relational import (
-        events_retention_cohorts,
-    )
-
-    base = str(tmp_path / "re")
-    _write_events(
-        spark,
-        base,
-        [
-            # A: signup Sun 01-07; active 01-15 + 01-16 (offset 1, one
-            # user-week), 01-21 (offset 2)
-            (1, dt(2024, 1, 7, 8, 0), 1, "signup", 1.0, "{}"),
-            (2, dt(2024, 1, 15, 8, 0), 1, "click", 1.0, "{}"),
-            (3, dt(2024, 1, 16, 8, 0), 1, "view", 1.0, "{}"),
-            (4, dt(2024, 1, 21, 8, 0), 1, "purchase", 1.0, "{}"),
-            # B: signup Wed 01-10 (same Sunday-aligned cohort week);
-            # pre-signup activity 01-05 excluded; 01-18 is offset 1
-            (5, dt(2024, 1, 5, 8, 0), 2, "view", 1.0, "{}"),
-            (6, dt(2024, 1, 10, 8, 0), 2, "signup", 1.0, "{}"),
-            (7, dt(2024, 1, 18, 8, 0), 2, "click", 1.0, "{}"),
-        ],
-    )
-    got = {
-        (r["cohort_week"], r["week_offset"]): r["active_users"]
-        for r in events_retention_cohorts(spark, base).collect()
-    }
-    assert got == {
-        ("2024-01-07", 0): 2,
-        ("2024-01-07", 1): 2,
-        ("2024-01-07", 2): 1,
-    }, got
-
-
-def test_events_cohort_revenue_semantics(spark, tmp_path):
-    """Revenue lands in the purchaser's signup-cohort cell in exact
-    cents; pre-signup purchases and users who never signed up are out
-    of scope; two purchases in one offset week sum."""
-    from datetime import datetime as dt
-
-    from adk_noui_vectordb_spark.operators.relational import (
-        events_cohort_revenue,
-    )
-
-    base = str(tmp_path / "cr")
-    _write_events(
-        spark,
-        base,
-        [
-            (1, dt(2024, 1, 7, 8, 0), 1, "signup", 1.0, "{}"),
-            # offset 0: $1.50
-            (2, dt(2024, 1, 8, 8, 0), 1, "purchase", 1.50, "{}"),
-            # offset 1: $2.25 + $0.10 in the same week sum to 235 cents
-            (3, dt(2024, 1, 16, 8, 0), 1, "purchase", 2.25, "{}"),
-            (4, dt(2024, 1, 17, 8, 0), 1, "purchase", 0.10, "{}"),
-            # pre-signup purchase: excluded
-            (5, dt(2024, 1, 5, 8, 0), 1, "purchase", 9.99, "{}"),
-            # user 2 never signed up: no cohort, ignored
-            (6, dt(2024, 1, 9, 8, 0), 2, "purchase", 5.00, "{}"),
-        ],
-    )
-    got = {
-        (r["cohort_week"], r["week_offset"]): r["revenue_cents"]
-        for r in events_cohort_revenue(spark, base).collect()
-    }
-    assert got == {("2024-01-07", 0): 150, ("2024-01-07", 1): 235}, got

@@ -220,40 +220,6 @@ def test_line_dedup_monotone_in_threshold(spark, min_docs):
     assert high <= low
 
 
-def test_driver_window_prioritizes_unverified_keys():
-    """The driver records only the FIRST 50 queries() entries per round.
-    The r8 ranking contract (__spark_entry__.queries): rank 0 for keys
-    without a trustworthy driver row — brand-new keys and keys rewritten
-    since their last green (_REWRITTEN) — then ascending latest-green
-    round, so the window is always {unverified} + the oldest green
-    cohorts. Every registered key must appear exactly once."""
-    import __spark_entry__ as entrymod
-
-    keys = list(entrymod.queries())
-    window = set(keys[:50])
-    allq = entrymod._all_queries()
-
-    def rank(k):
-        if k in entrymod._REWRITTEN or k not in entrymod._LATEST_GREEN:
-            return 0.0
-        return float(entrymod._LATEST_GREEN[k])
-
-    # unverified/rewritten keys always make the window
-    for k in allq:
-        if rank(k) == 0.0:
-            assert k in window, f"{k} fell out of the 50-key driver window"
-    # the window is rank-downward-closed: nothing outside the window may
-    # outrank (be staler than) anything inside it
-    worst_in = max(rank(k) for k in keys[:50])
-    for k in keys[50:]:
-        assert rank(k) >= worst_in, (
-            f"{k} (rank {rank(k)}) missed the window but outranks "
-            f"worst in-window rank {worst_in}"
-        )
-    assert len(keys) == len(set(keys))
-    assert set(keys) == set(allq)
-
-
 _IDX_SETTINGS = settings(
     max_examples=5,
     deadline=None,

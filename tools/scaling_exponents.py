@@ -41,11 +41,6 @@ KEYS = {
     "curate_corpus": "documents",
     "winnow_fingerprints": "documents",
     "decontaminate_corpus": "documents",
-    "events_sessionize": "events",
-    "events_funnel_conversion": "events",
-    "events_retention_cohorts": "events",
-    "events_cohort_revenue": "events",
-    "events_tumbling_counts": "events",
     "asof_join_purchase_click": "events",
     "range_join_bursts": "events",
     "lang_id_ngram": "documents",
@@ -60,21 +55,14 @@ KEYS = {
     "embed_topvar_project": "embeddings",
     "normalize_text_corpus": "documents",
     "trend_event_values": "events",
-    "histogram_order_totals": "orders",
-    "events_anomaly_zscore": "events",
     "dedup_repeated_ngrams": "documents",
     "scd2_user_state_history": "events",
     # r7c additions
     "knn_join_topk": "embeddings",
     "doc_token_entropy": "documents",
-    "unpivot_event_matrix": "events",
-    "window_trailing_value_sum": "events",
     "events_rate_limited_sample": "events",
     "dup_cluster_size_histogram": "documents",
-    "skew_key_profile": "events",
     "hybrid_rrf_served_topk": "documents",
-    "basket_brand_lift": "lineitem",
-    "user_activity_profile": "events",
     # r9 additions
     "text_index_doc_map": "documents",
     "rp_index_vec_rows": "embeddings",
