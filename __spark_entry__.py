@@ -42,9 +42,7 @@ from adk_noui_vectordb_spark.operators import hybrid as _hyb
 from adk_noui_vectordb_spark.operators import indexing as _idx
 from adk_noui_vectordb_spark.operators import invindex as _inv
 from adk_noui_vectordb_spark.operators import knn as _knn
-from adk_noui_vectordb_spark.operators import quantize as _quant
 from adk_noui_vectordb_spark.operators import rollups as _roll
-from adk_noui_vectordb_spark.operators import temporal as _temporal
 from adk_noui_vectordb_spark.operators import textops as _text
 from adk_noui_vectordb_spark.operators.chunking import (
     chunk_fixed_words,
@@ -100,14 +98,6 @@ def _q_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _knn.knn_topk_batch(emb, queries_df, k=3)
 
 
-def _q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _knn.knn_classify(spark, sf_dir)
-
-
-def _q_knn_regress(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _knn.knn_regress(spark, sf_dir)
-
-
 def _q_score_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from adk_noui_vectordb_spark.functions.vector import cosine_similarity, l2_distance
 
@@ -159,12 +149,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "knn_topk": _q_knn_topk,
         "knn_topk_filtered": _q_knn_topk_filtered,
         "knn_batch_topk": _q_knn_batch,
-        # r13: leave-one-out kNN majority-vote label prediction — the
-        # embedding-space self-consistency probe
-        "knn_classify": _q_knn_classify,
-        # r14: the numeric counterpart — leave-one-out mean-value
-        # prediction over the exact top-15 (continuous-metadata probe)
-        "knn_regress": _q_knn_regress,
         "score_similarity_pairs": _q_score_pairs,
         # scans / filters / lookups (SURVEY.md §2.2)
         "filter_by_lang": _roll.filter_by_lang,
@@ -172,9 +156,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # r10c: ChromaDB get(where=..., where_document=...) — the full
         # public filter DSL compiled to pushed-down Catalyst predicates
         "docs_where_dsl_filter": _roll.docs_where_dsl_filter,
-        # rollups (SURVEY.md §2.4)
-        "agg_source_summary": _roll.agg_source_summary,
-        "agg_docs_by_lang": _roll.agg_docs_by_lang,
         "agg_job_totals": _roll.agg_job_totals,
         "filter_by_element_type": _idx.filter_by_element_type,
         "filter_by_file": _idx.filter_by_file,
@@ -453,7 +434,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # r12: metadata-filtered emission (the Chroma query(where=...)
         # -against-HNSW shape; traversal predicate-blind)
         "ann_graph_filtered_topk": _gann.ann_graph_filtered_topk,
-        # hybrid retrieval (BM25 + RRF) and int8-quantized two-stage ANN
+        # hybrid retrieval (BM25 + RRF)
         "bm25_topk": _hyb.bm25_topk,
         "hybrid_rrf_topk": _hyb.hybrid_rrf_topk,
         # r12: the OTHER standard fusion — convex alpha-combination of
@@ -531,40 +512,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # r13: the two serving families composed — BM25 postings pool +
         # the navigable graph's beam pool, same convex fusion
         "hybrid_weighted_graph_topk": _inv.hybrid_weighted_graph_topk,
-        "embed_quantize_int8": _quant.quantize_rows,
-        "knn_int8_topk": _quant.knn_int8_topk,
-        "knn_int8_rerank": _quant.knn_int8_rerank,
-        # r12: binary quantization — 1-bit sign codes packed into two
-        # 32-bit BIGINT words (32x scan-payload compression); coarse
-        # ranking is pure integer XOR+popcount, rerank exact cosine
-        "binq_hamming_topk": _quant.binq_hamming_topk,
-        "ann_binq_topk": _quant.ann_binq_topk,
-        # r12: FAISS-IndexBinaryIVF composition — sign codes stored per
-        # trained-IVF cell (16 bytes/row probed payload), Hamming
-        # within the nprobe cells, exact refine
-        "ann_binq_ivf_topk": _quant.ann_binq_ivf_topk,
-        # r10: Matryoshka-style truncated-dim coarse pass + exact
-        # full-dim rerank (the no-index ANN baseline: prefix-dim bytes
-        # per scanned row, full vectors only for the C survivors).
-        "knn_truncated_rerank": _knn.knn_truncated_rerank,
-        # r11: MMR diversified retrieval — greedy relevance/novelty
-        # trade over the exact top-pool, unrolled-CTE oracle twin
-        "knn_mmr_topk": _knn.knn_mmr_topk,
-        # temporal joins (as-of / banded range — north star, no reference analog)
-        "asof_join_purchase_click": _temporal.asof_join_purchase_click,
-        # r7: SCD2 validity intervals from the event log (CDC surface)
-        "scd2_user_state_history": _temporal.scd2_user_state_history,
-        "range_join_bursts": _temporal.range_join_bursts,
-        "funnel_signup_purchase": _temporal.funnel_signup_purchase,
-        "retention_day_over_day": _temporal.retention_day_over_day,
-        # r7: per-series OLS drift trend from the closed-form moment
-        # aggregates (regr_slope/intercept/r2), day-conditioned abscissa
-        "trend_event_values": _temporal.trend_event_values,
-        # r7: per-user event caps (balancing/privacy) — the canonical
-        # top-N-per-group window, partitioned BY USER
-        "events_rate_limited_sample": _temporal.events_rate_limited_sample,
-        # r7: arrival-process profile — rank-selected integer-µs median
-        "events_gap_stats": _temporal.events_gap_stats,
         # r7: dedup reporting — duplicate-cluster size distribution
         "dup_cluster_size_histogram": _dedup.dup_cluster_size_histogram,
     }
@@ -724,59 +671,6 @@ ORDER BY sim DESC, e.vec_id LIMIT {k}"""
     )
 
 
-def _binq_ivf_sql(
-    qid: int = 0,
-    nprobe: int = 2,
-    n_coarse: int = 50,
-    k: int = 10,
-    n_centroids: int = 8,
-    iters: int = 2,
-) -> str:
-    """IndexBinaryIVF twin (operators/quantize.py ann_binq_ivf_topk):
-    the trained-IVF Lloyd's chain + centroid ranking + nprobe pruning
-    (the _ivf_trained_sql prologue), then Hamming-over-sign-codes
-    candidate ranking WITHIN the probed cells (the _BINQ_CODES_CTE
-    packing) and the exact 4-dp cosine refine."""
-    ctes, final = _kmeans_ctes(n_centroids, iters)
-    ctes = list(ctes)
-    ctes.append(f"af AS (\n{final})")
-    ctes.append(
-        "qe AS (SELECT CAST(embedding AS DOUBLE[]) AS q"
-        f" FROM embeddings WHERE vec_id = {qid})"
-    )
-    ctes.append(f"""cs AS (
-  SELECT c.cluster,
-         round(list_inner_product(c.c, qe.q)
-               / (sqrt(list_inner_product(c.c, c.c))
-                  * sqrt(list_inner_product(qe.q, qe.q))), 4) AS csim
-  FROM c{iters} c CROSS JOIN qe)""")
-    ctes.append(
-        f"top_c AS (SELECT cluster FROM cs ORDER BY csim DESC, cluster"
-        f" LIMIT {nprobe})"
-    )
-    ctes.append(_BINQ_CODES_CTE.strip().rstrip())
-    ctes.append(f"qc AS (SELECT w0, w1 FROM bcodes WHERE vec_id = {qid})")
-    ctes.append(f"""bcoarse AS (
-  SELECT b.vec_id FROM bcodes b
-  JOIN af USING (vec_id)
-  JOIN top_c USING (cluster)
-  CROSS JOIN qc
-  WHERE b.vec_id <> {qid}
-  ORDER BY bit_count(xor(b.w0, qc.w0)) + bit_count(xor(b.w1, qc.w1)),
-           b.vec_id
-  LIMIT {n_coarse})""")
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f"""
-SELECT e.vec_id, {_COS.format(a="e.embedding", b="qe.q")} AS sim
-FROM embeddings e
-JOIN bcoarse USING (vec_id)
-CROSS JOIN qe
-ORDER BY sim DESC, e.vec_id LIMIT {k}"""
-    )
-
-
 def _ivf_sampled_sql(
     k: int = 5,
     nprobe: int = 2,
@@ -903,51 +797,6 @@ bm_agg AS (
 bm AS (SELECT doc_id, round({total}, 4) AS bm25 FROM bm_agg)
 SELECT doc_id, bm25 FROM bm ORDER BY bm25 DESC, doc_id LIMIT {k}
 """
-
-
-def _knn_mmr_sql(k: int = 5, pool: int = 20, lam: float = 0.5) -> str:
-    """MMR diversified top-k twin (operators/knn.py knn_mmr_topk): the
-    greedy argmax loop unrolled as k chained CTEs (the Lloyd's-unroll
-    discipline) — step i picks argmax(lam*sim - (1-lam)*max pairwise
-    4-dp cosine to the i-1 already-selected) with a vec_id tie-break,
-    over the exact 4-dp-cosine top-``pool``. lam is dyadic (0.5) so the
-    mmr arithmetic is the identical double expression both engines run."""
-    cos_q = _COS.format(a="e.embedding", b="qe.q_emb")
-    cos_p = _COS.format(a="a.emb", b="b.emb")
-    ctes = [
-        "qe AS (SELECT CAST(embedding AS DOUBLE[]) AS q_emb FROM embeddings"
-        " WHERE vec_id = 0)",
-        f"""pool AS (
-  SELECT e.vec_id, {cos_q} AS sim, CAST(e.embedding AS DOUBLE[]) AS emb
-  FROM embeddings e CROSS JOIN qe
-  WHERE e.vec_id <> 0
-  ORDER BY sim DESC, e.vec_id LIMIT {pool})""",
-        f"""pp AS (
-  SELECT a.vec_id AS va, b.vec_id AS vb, {cos_p} AS psim
-  FROM pool a JOIN pool b ON a.vec_id <> b.vec_id)""",
-        f"""s1 AS (
-  SELECT vec_id, sim, {lam} * sim - {1.0 - lam} * 0.0 AS mmr
-  FROM pool ORDER BY mmr DESC, vec_id LIMIT 1)""",
-    ]
-    for i in range(2, k + 1):
-        prev = " UNION ALL ".join(f"SELECT vec_id FROM s{j}" for j in range(1, i))
-        ctes.append(f"sel{i} AS ({prev})")
-        ctes.append(f"""s{i} AS (
-  SELECT p.vec_id, p.sim,
-         {lam} * p.sim - {1.0 - lam} * max(pp.psim) AS mmr
-  FROM pool p
-  JOIN pp ON pp.va = p.vec_id AND pp.vb IN (SELECT vec_id FROM sel{i})
-  WHERE p.vec_id NOT IN (SELECT vec_id FROM sel{i})
-  GROUP BY p.vec_id, p.sim
-  ORDER BY mmr DESC, p.vec_id LIMIT 1)""")
-    union = "\nUNION ALL ".join(
-        f"SELECT {i} AS rank, vec_id, sim, mmr FROM s{i}" for i in range(1, k + 1)
-    )
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f"\nSELECT CAST(rank AS INTEGER) AS rank, vec_id, sim, mmr FROM ({union})\nORDER BY rank"
-    )
 
 
 def _pq_ctes(
@@ -1592,7 +1441,7 @@ def _ann_graph_sql(
     layer-1 edges the top-hub_degree hub pairs by 4-dp cosine, star
     bridges link every member to its cell hub, and the reverse side is
     rank-capped (the bidirectional discipline) — then unrolls the beam
-    search as chained CTEs (the knn_mmr_topk discipline): v_r =
+    search as chained CTEs (the Lloyd's-unroll discipline): v_r =
     v_{{r-1}} UNION the scored unseen neighbors of f_r = top-``beam``
     of v_{{r-1}} (sim DESC, vec_id tie-break); the answer is top-k of
     v_rounds. Seeds: the md5-min hub excluding the query id (the
@@ -2584,49 +2433,6 @@ bm AS (
     FROM bm_agg
 )"""
 
-# Binary-quantization codes (operators/quantize.py with_binarized):
-# two positive 32-bit words per 64-dim vector; bit i of word w set iff
-# embedding[32w + i] > 0 (0-based). Exact integers on both engines.
-_BINQ_CODES_CTE = """
-bcodes AS (
-    SELECT vec_id,
-           list_aggregate(list_transform(range(0, 32),
-               i -> CASE WHEN embedding[i + 1] > 0
-                         THEN (1::BIGINT << i) ELSE 0::BIGINT END),
-               'sum') AS w0,
-           list_aggregate(list_transform(range(0, 32),
-               i -> CASE WHEN embedding[i + 33] > 0
-                         THEN (1::BIGINT << i) ELSE 0::BIGINT END),
-               'sum') AS w1
-    FROM embeddings
-)"""
-
-# Int8 quantization CTE chain (operators/quantize.py): qz = stored form,
-# deq = reconstructed doubles. floor(x*127/max+0.5), never round() — the
-# engines' round() half-tie behaviors differ; floor of identical doubles
-# cannot.
-_QUANTIZE_CTE = """
-qb AS (
-    SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
-           list_max(list_transform(CAST(embedding AS DOUBLE[]), x -> abs(x))) AS max_abs
-    FROM embeddings
-),
-qz AS (
-    SELECT vec_id, max_abs,
-           CASE WHEN max_abs = 0.0::DOUBLE
-                THEN list_transform(e, x -> CAST(0 AS TINYINT))
-                ELSE list_transform(e, x -> CAST(floor(
-                     x * 127.0::DOUBLE / max_abs + 0.5::DOUBLE) AS TINYINT))
-           END AS q
-    FROM qb
-),
-deq AS (
-    SELECT vec_id,
-           list_transform(q, v -> CAST(v AS DOUBLE) * max_abs / 127.0::DOUBLE) AS deq
-    FROM qz
-)"""
-
-
 def _minhash_perm_values() -> str:
     rows = ", ".join(
         f"({i}, {_dedup.MINHASH_A[i]}, {_dedup.MINHASH_B[i]})"
@@ -2841,62 +2647,6 @@ sims AS (
 )
 SELECT query_id, vec_id, sim, rank FROM ranked WHERE rank <= 3
 """,
-        "knn_regress": f"""
-WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < 8),
-sims AS (
-    SELECT q.q_id AS query_id, e.vec_id,
-           {_COS.format(a="e.embedding", b="q.q_emb")} AS sim
-    FROM embeddings e CROSS JOIN q
-    WHERE e.vec_id <> q.q_id
-),
-top AS (
-    SELECT query_id, vec_id FROM (
-        SELECT query_id, vec_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY sim DESC, vec_id) AS rk
-        FROM sims) WHERE rk <= 15
-),
-p AS (
-    SELECT t.query_id, avg(d.n_chars) AS predicted_n_chars
-    FROM top t JOIN documents d ON d.doc_id = t.vec_id
-    GROUP BY t.query_id
-)
-SELECT p.query_id, p.predicted_n_chars,
-       d.n_chars AS true_n_chars,
-       abs(p.predicted_n_chars - d.n_chars) AS abs_error
-FROM p JOIN documents d ON d.doc_id = p.query_id
-ORDER BY p.query_id
-""",
-        "knn_classify": f"""
-WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < 8),
-sims AS (
-    SELECT q.q_id AS query_id, e.vec_id, e.label,
-           {_COS.format(a="e.embedding", b="q.q_emb")} AS sim
-    FROM embeddings e CROSS JOIN q
-    WHERE e.vec_id <> q.q_id
-),
-top AS (
-    SELECT query_id, label FROM (
-        SELECT query_id, label,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY sim DESC, vec_id) AS rk
-        FROM sims) WHERE rk <= 15
-),
-v AS (SELECT query_id, label, count(*) AS votes FROM top GROUP BY 1, 2),
-p AS (
-    SELECT query_id, label, votes FROM (
-        SELECT query_id, label, votes,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY votes DESC, label) AS rn
-        FROM v) WHERE rn = 1
-)
-SELECT p.query_id, CAST(p.label AS INTEGER) AS predicted_label,
-       CAST(p.votes AS INTEGER) AS votes,
-       CAST(e.label AS INTEGER) AS true_label,
-       p.label = e.label AS correct
-FROM p JOIN embeddings e ON e.vec_id = p.query_id
-ORDER BY p.query_id
-""",
         "score_similarity_pairs": f"""
 SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
        {cos_ab} AS cosine,
@@ -2918,19 +2668,6 @@ SELECT doc_id, lang, source, n_chars FROM documents
 WHERE {_wdsl.where_to_sql(_roll.WHERE_DSL_DEMO)}
   AND {_wdsl.where_document_to_sql(_roll.WHERE_DOC_DEMO, "text")}
 ORDER BY doc_id LIMIT 50
-""",
-        "agg_source_summary": """
-SELECT source, count(*) AS doc_count, CAST(sum(n_chars) AS BIGINT) AS total_chars,
-       count(DISTINCT lang) AS n_langs, round(avg(n_chars), 4) AS avg_chars,
-       'Source ' || source || ' contains ' || count(*) || ' documents' AS summary
-FROM documents GROUP BY source
-""",
-        "agg_docs_by_lang": """
-WITH c AS (SELECT source, lang, count(*) AS c FROM documents GROUP BY 1, 2)
-SELECT source,
-       string_agg(lang || ': ' || c, ', ' ORDER BY lang || ': ' || c) AS langs_str,
-       CAST(sum(c) AS BIGINT) AS doc_count
-FROM c GROUP BY source
 """,
         "agg_job_totals": """
 SELECT count(DISTINCT source) AS indexed_sources, count(*) AS total_docs,
@@ -3626,39 +3363,6 @@ reach(src, dst) AS (
     FROM reach JOIN edges ON reach.dst = edges.src
 )
 SELECT src AS doc_id, min(dst) AS cluster_id FROM reach GROUP BY src
-""",
-        "events_gap_stats": """
-WITH ordered AS (
-    SELECT user_id, epoch_ns(ts) AS ns, event_id,
-           lag(epoch_ns(ts)) OVER (
-               PARTITION BY user_id ORDER BY epoch_ns(ts), event_id) AS prev_ns
-    FROM events
-),
-gaps AS (
-    SELECT user_id, (ns - prev_ns) // 1000 AS gap_us
-    FROM ordered WHERE prev_ns IS NOT NULL
-),
-ranked AS (
-    SELECT user_id, gap_us,
-           row_number() OVER (PARTITION BY user_id ORDER BY gap_us) AS rn,
-           count(*) OVER (PARTITION BY user_id) AS n
-    FROM gaps
-)
-SELECT user_id,
-       CAST(max(n) AS BIGINT) AS n_gaps,
-       CAST(min(gap_us) AS BIGINT) AS min_gap_us,
-       CAST(max(gap_us) AS BIGINT) AS max_gap_us,
-       CAST(max(CASE WHEN rn = CAST(ceil(n / 2.0) AS BIGINT)
-                     THEN gap_us END) AS BIGINT) AS median_gap_us
-FROM ranked GROUP BY 1
-""",
-        "events_rate_limited_sample": """
-SELECT user_id, event_id, CAST(rn AS INTEGER) AS rn FROM (
-    SELECT user_id, event_id,
-           row_number() OVER (
-               PARTITION BY user_id ORDER BY epoch_ns(ts), event_id) AS rn
-    FROM events
-) WHERE rn <= 5
 """,
         "dup_cluster_size_histogram": f"""
 WITH RECURSIVE {_MINHASH_BANDS_CTE},
@@ -4641,7 +4345,6 @@ ORDER BY sim DESC, e.vec_id LIMIT 10
         "ann_graph_batch_topk": _ann_graph_batch_sql(),
         "ann_graph_tombstone_topk": _ann_graph_tomb_sql(),
         "ann_graph_vacuumed_topk": _ann_graph_vac_sql(),
-        "ann_binq_ivf_topk": _binq_ivf_sql(),
         "ann_graph_filtered_topk": _ann_graph_filtered_sql(),
         "knn_join_topk": f"""
 WITH {_RP_BANDS_CTE},
@@ -5095,81 +4798,6 @@ SELECT coalesce(l.doc_id, v.doc_id) AS doc_id,
              + 0.4::DOUBLE * coalesce(l.lex_n, 0.0::DOUBLE), 4) AS wscore
 FROM lex_n l FULL OUTER JOIN vec_n v ON l.doc_id = v.doc_id
 ORDER BY wscore DESC, doc_id LIMIT 10
-""",
-        "embed_quantize_int8": f"""
-WITH {_QUANTIZE_CTE}
-SELECT vec_id, CAST(t.i - 1 AS INTEGER) AS pos,
-       CAST(q[t.i] AS INTEGER) AS q_val, max_abs
-FROM qz, LATERAL (SELECT unnest(generate_series(1, len(q))) AS i) t
-""",
-        "knn_int8_topk": f"""
-WITH {_QUANTIZE_CTE},
-qq AS (SELECT vec_id AS q_id, deq AS q_deq FROM deq WHERE vec_id = 0)
-SELECT d.vec_id, {_COS.format(a="d.deq", b="qq.q_deq")} AS sim8
-FROM deq d CROSS JOIN qq WHERE d.vec_id <> qq.q_id
-ORDER BY sim8 DESC, d.vec_id LIMIT 10
-""",
-        # Binary quantization (operators/quantize.py with_binarized):
-        # sign-bit codes as two positive 32-bit words — Spark packs via
-        # exact pow(2.0, i) casts, the twin via 1::BIGINT << i; both are
-        # exact integers in [0, 2^32), so codes and XOR+popcount
-        # distances are bit-identical with no rounding contract.
-        "binq_hamming_topk": f"""
-WITH {_BINQ_CODES_CTE},
-qc AS (SELECT w0, w1 FROM bcodes WHERE vec_id = 0)
-SELECT c.vec_id,
-       CAST(bit_count(xor(c.w0, q.w0))
-            + bit_count(xor(c.w1, q.w1)) AS INTEGER) AS hamming
-FROM bcodes c CROSS JOIN qc q WHERE c.vec_id <> 0
-ORDER BY hamming, c.vec_id LIMIT 10
-""",
-        "ann_binq_topk": f"""
-WITH {_BINQ_CODES_CTE},
-qc AS (SELECT w0, w1 FROM bcodes WHERE vec_id = 0),
-coarse AS (
-    SELECT c.vec_id,
-           bit_count(xor(c.w0, q.w0)) + bit_count(xor(c.w1, q.w1)) AS ham
-    FROM bcodes c CROSS JOIN qc q WHERE c.vec_id <> 0
-    ORDER BY ham, c.vec_id LIMIT 50
-),
-qe AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0)
-SELECT e.vec_id, {_COS.format(a="e.embedding", b="qe.q_emb")} AS sim
-FROM embeddings e JOIN coarse USING (vec_id) CROSS JOIN qe
-ORDER BY sim DESC, e.vec_id LIMIT 10
-""",
-        "knn_int8_rerank": f"""
-WITH {_QUANTIZE_CTE},
-qq AS (SELECT vec_id AS q_id, deq AS q_deq FROM deq WHERE vec_id = 0),
-coarse AS (
-    SELECT d.vec_id, {_COS.format(a="d.deq", b="qq.q_deq")} AS sim8
-    FROM deq d CROSS JOIN qq WHERE d.vec_id <> qq.q_id
-    ORDER BY sim8 DESC, d.vec_id LIMIT 50
-),
-qe AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0)
-SELECT e.vec_id, {_COS.format(a="e.embedding", b="qe.q_emb")} AS sim
-FROM embeddings e JOIN coarse USING (vec_id) CROSS JOIN qe
-ORDER BY sim DESC, e.vec_id LIMIT 10
-""",
-        # Truncated-dim (MRL) rerank: coarse cosine over the 16-dim
-        # prefix slice, exact full-dim cosine on the 50 survivors.
-        "knn_mmr_topk": _knn_mmr_sql(),
-        "knn_truncated_rerank": f"""
-WITH qt AS (
-    SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[])[1:16] AS q_emb_t
-    FROM embeddings WHERE vec_id = 0
-),
-et AS (
-    SELECT vec_id, CAST(embedding AS DOUBLE[])[1:16] AS emb_t FROM embeddings
-),
-coarse AS (
-    SELECT et.vec_id, {_COS.format(a="et.emb_t", b="qt.q_emb_t")} AS sim_t
-    FROM et CROSS JOIN qt WHERE et.vec_id <> qt.q_id
-    ORDER BY sim_t DESC, et.vec_id LIMIT 50
-),
-qe AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0)
-SELECT e.vec_id, {_COS.format(a="e.embedding", b="qe.q_emb")} AS sim
-FROM embeddings e JOIN coarse USING (vec_id) CROSS JOIN qe
-ORDER BY sim DESC, e.vec_id LIMIT 10
 """,
         "knn_text_query": """
 WITH qtok AS (
@@ -6040,55 +5668,6 @@ SELECT CASE WHEN bucket < 90 THEN 'train'
        lang, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS total_chars
 FROM b GROUP BY 1, 2
 """,
-        # SCD2 gaps-and-islands (operators/temporal.py): run segmentation
-        # by lag+running-sum ordered (ts_ns, event_id) — unique ordering,
-        # so default window frames agree across engines.
-        "scd2_user_state_history": """
-WITH o AS (
-    SELECT user_id, event_id, epoch_ns(ts) AS ts_ns, event_type FROM events
-),
-runs AS (
-    SELECT *, CASE WHEN lag(event_type) OVER w IS NULL
-                     OR lag(event_type) OVER w <> event_type
-              THEN 1 ELSE 0 END AS chg
-    FROM o WINDOW w AS (PARTITION BY user_id ORDER BY ts_ns, event_id)
-),
-runid AS (
-    SELECT *, sum(chg) OVER (PARTITION BY user_id ORDER BY ts_ns, event_id
-                             ROWS UNBOUNDED PRECEDING) AS run_id
-    FROM runs
-),
-iv AS (
-    SELECT user_id, run_id, event_type, min(ts_ns) AS valid_from_ns,
-           count(*) AS n_events
-    FROM runid GROUP BY 1, 2, 3
-)
-SELECT user_id, CAST(run_id AS INTEGER) AS run_id, event_type, valid_from_ns,
-       lead(valid_from_ns) OVER w2 AS valid_to_ns,
-       CAST(n_events AS INTEGER) AS n_events,
-       (lead(valid_from_ns) OVER w2 IS NULL) AS is_current
-FROM iv WINDOW w2 AS (PARTITION BY user_id ORDER BY run_id)
-""",
-        # Abscissa from exact integer epoch-µs, identical literal
-        # divisions both engines -> bit-identical x; regr_* moment
-        # accumulation noise (~1e-15 rel) sits far below the floor grid.
-        "trend_event_values": """
-WITH p AS (
-    SELECT event_type,
-           (epoch_us(ts) / 1000000.0::DOUBLE - 1577836800.0::DOUBLE)
-               / 86400.0::DOUBLE AS x,
-           value AS y
-    FROM events
-)
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(floor(regr_slope(y, x) * 1000000.0::DOUBLE) AS BIGINT)
-           AS slope_micro_per_day,
-       CAST(floor(regr_intercept(y, x) * 1000000.0::DOUBLE) AS BIGINT)
-           AS intercept_micro,
-       CAST(floor(regr_r2(y, x) * 1000000.0::DOUBLE) AS BIGINT) AS r2_micro
-FROM p GROUP BY 1
-""",
         "normalize_text_corpus": """
 WITH n AS (
     SELECT doc_id, text,
@@ -6100,45 +5679,5 @@ SELECT doc_id, norm_text,
        CAST(len(string_split(text, ' ')) AS INTEGER) AS n_tokens_raw,
        CAST(len(string_split(norm_text, ' ')) AS INTEGER) AS n_tokens_norm
 FROM n
-""",
-        "retention_day_over_day": """
-WITH user_days AS (
-    SELECT DISTINCT user_id, strftime(ts, '%Y-%m-%d') AS day FROM events
-)
-SELECT t.day, count(*) AS active_users,
-       CAST(sum(CASE WHEN n.user_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-           AS retained_next_day
-FROM user_days t
-LEFT JOIN user_days n
-  ON t.user_id = n.user_id
- AND n.day = strftime(CAST(t.day AS DATE) + INTERVAL 1 DAY, '%Y-%m-%d')
-GROUP BY t.day
-""",
-        "funnel_signup_purchase": """
-SELECT user_id,
-       CAST(CASE WHEN fs IS NOT NULL AND lp IS NOT NULL AND lp > fs
-                 THEN 1 ELSE 0 END AS INTEGER) AS converted
-FROM (
-    SELECT user_id,
-           min(CASE WHEN event_type = 'signup' THEN epoch_ns(ts) END) AS fs,
-           max(CASE WHEN event_type = 'purchase' THEN epoch_ns(ts) END) AS lp
-    FROM events GROUP BY user_id
-)
-""",
-        "asof_join_purchase_click": """
-SELECT p.event_id AS purchase_id, p.user_id, p.value AS purchase_value,
-       c.event_id AS click_id,
-       ((epoch_ns(p.ts) - epoch_ns(c.ts)) // 1000) / 1000000.0 AS gap_s
-FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-  ON p.user_id = c.user_id AND p.ts >= c.ts
-""",
-        "range_join_bursts": """
-WITH e AS (SELECT user_id, event_id, epoch_ns(ts) AS ts_ns FROM events)
-SELECT a.user_id, a.event_id AS event_a, b.event_id AS event_b,
-       ((b.ts_ns - a.ts_ns) // 1000) / 1000000.0 AS gap_s
-FROM e a JOIN e b
-  ON a.user_id = b.user_id
- AND b.ts_ns > a.ts_ns AND b.ts_ns - a.ts_ns <= 60000000000
 """,
     }

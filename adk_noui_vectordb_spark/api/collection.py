@@ -182,6 +182,16 @@ def _checked_size(b: DataFrame) -> int:
     return r["n"]
 
 
+def _id_list(ids) -> list:
+    """``ids`` as a list of strings: a bare ``str`` is one id (the
+    ChromaDB contract), and a non-``str`` element raises ``ValueError``."""
+    ids = [ids] if isinstance(ids, str) else list(ids)
+    bad = [i for i in ids if not isinstance(i, str)]
+    if bad:
+        raise ValueError(f"ids must be strings, got {bad[:3]!r}")
+    return ids
+
+
 def _require_int(name: str, val, lo: int) -> None:
     """Call-time check of a count argument: an int (not a bool) >= lo."""
     if isinstance(val, bool) or not isinstance(val, int) or val < lo:
@@ -284,9 +294,16 @@ class Collection:
         return info
 
     def _cur(self) -> "str | None":
-        if getattr(self, "_pin", None) is not None:
-            return os.path.join(self.root, self._pin)
-        return vn.current_dir(self.root)
+        if getattr(self, "_pin", None) is None:
+            return vn.current_dir(self.root)
+        pinned = os.path.join(self.root, self._pin)
+        if not os.path.isdir(pinned):
+            raise ValueError(
+                f"pinned version {self._pin!r} is gone (gc keeps only the "
+                f"trailing versions); versions() lists "
+                f"{[v['name'] for v in self.versions()]}"
+            )
+        return pinned
 
     def _version_info(self, cur: "str | None") -> "dict | None":
         """Config persisted INSIDE the version dir (ADVICE r11): commits
@@ -1295,7 +1312,7 @@ class Collection:
 
     def delete(
         self,
-        ids: "list[str] | None" = None,
+        ids: "str | list[str] | None" = None,
         where: "dict | None" = None,
         where_document: "dict | None" = None,
     ) -> str:
@@ -1310,7 +1327,7 @@ class Collection:
         meta = self._meta(cur, info)
         pred = None
         if ids is not None:
-            sids = sorted({_sid_py(i) for i in ids})
+            sids = sorted({_sid_py(i) for i in _id_list(ids)})
             mb = sorted({_mbucket_py(s) for s in sids})
             pred = F.col("mbucket").isin(mb) & F.col("vec_id").isin(sids)
         if where is not None:
@@ -1731,7 +1748,7 @@ class Collection:
 
     def get(
         self,
-        ids: "list[str] | None" = None,
+        ids: "str | list[str] | None" = None,
         where: "dict | None" = None,
         where_document: "dict | None" = None,
         limit: "int | None" = None,
@@ -1771,7 +1788,7 @@ class Collection:
             inc.add("embeddings")
         d = self._meta(cur, info)
         if ids is not None:
-            sids = sorted({_sid_py(i) for i in ids})
+            sids = sorted({_sid_py(i) for i in _id_list(ids)})
             mb = sorted({_mbucket_py(s) for s in sids})
             d = d.filter(F.col("mbucket").isin(mb) & F.col("vec_id").isin(sids))
         if where is not None:
@@ -1895,6 +1912,8 @@ class Collection:
             texts = (
                 [query_texts] if isinstance(query_texts, str) else list(query_texts)
             )
+            if not texts:
+                raise ValueError("query_texts: pass at least one text")
             query_embeddings = model.encode(texts)
             if len(query_embeddings[0]) != dim:
                 raise ValueError(

@@ -10,8 +10,8 @@ Everything here is built from higher-order functions (``zip_with`` +
 ``aggregate``): JVM-side, no Python workers, no Arrow transfer. Note the
 honest trade-off: HOF *lambdas* evaluate interpreted (outside whole-stage
 codegen), so per-element cost is higher than a native loop — measured
-faster than the Arrow/numpy twins in ``vector_arrow.py`` below ~100k rows
-(no worker/serialization overhead), slower above. Arrays are cast to
+faster than Arrow/numpy ``pandas_udf`` kernels below ~100k rows (no
+worker/serialization overhead), slower above. Arrays are cast to
 double before multiplying so the fold is a deterministic double-precision
 left-to-right sum; the DuckDB oracle casts to DOUBLE[] the same way, which
 keeps cross-engine results equal far below the 1e-4 rounding used by the

@@ -1,17 +1,13 @@
-"""Grouped rollups over the document corpus — the reference's summary ops.
+"""Corpus filters, lookups and totals — the reference's tool-level ops.
 
-Maps the reference's per-file rollups onto the driver's ``documents`` table
-(one row per document, grouped by ``source`` where the reference groups by
-``file_path``):
+Maps the reference's metadata filters, id lookup and indexing report onto
+the driver's ``documents`` table (one row per document, ``source`` standing
+in for the reference's ``file_path``):
 
-- agg_source_summary  <- _create_file_summary (indexing_agent.py:314-330)
-- agg_docs_by_lang    <- elements_by_type flattening (indexing_agent.py:316-321)
-- agg_job_totals      <- index_codebase report (indexing_agent.py:117-124)
-- group_structure     <- get_file_structure rollup (vector_search_tool.py:245-264)
-
-All are single-shuffle hash aggregations with map-side partial aggregation;
-collect_list results are sorted in-query so output is deterministic (the
-reference's dict-iteration order is not — a documented fix, SURVEY.md §2.7).
+- filter_by_lang         <- filter_by_element_type (vector_search_tool.py:149-201)
+- docs_where_dsl_filter  <- collection.get(where=..., where_document=...)
+- point_lookup           <- point_lookup_id (vector_search_tool.py:232)
+- agg_job_totals         <- index_codebase report (indexing_agent.py:117-124)
 """
 
 from __future__ import annotations
@@ -20,40 +16,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-
-
-def agg_source_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source rollup: doc count, char totals, language spread, and a
-    human-readable summary sentence (reference's summary string,
-    indexing_agent.py:329)."""
-    d = load_table(spark, sf_dir, "documents")
-    return (
-        d.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("doc_count"),
-            F.sum("n_chars").cast("bigint").alias("total_chars"),
-            F.countDistinct("lang").alias("n_langs"),
-            F.round(F.avg("n_chars"), 4).alias("avg_chars"),
-        )
-        .withColumn(
-            "summary",
-            F.format_string(
-                "Source %s contains %d documents", F.col("source"), F.col("doc_count")
-            ),
-        )
-    )
-
-
-def agg_docs_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source 'lang: count' flattened string, sorted for determinism —
-    the elements_by_type_str analog (indexing_agent.py:316-321)."""
-    d = load_table(spark, sf_dir, "documents")
-    counts = d.groupBy("source", "lang").agg(F.count(F.lit(1)).alias("c"))
-    entry = F.format_string("%s: %d", F.col("lang"), F.col("c"))
-    return counts.groupBy("source").agg(
-        F.array_join(F.sort_array(F.collect_list(entry)), ", ").alias("langs_str"),
-        F.sum("c").cast("bigint").alias("doc_count"),
-    )
 
 
 def agg_job_totals(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -49,14 +49,10 @@ BENCH_KEYS = [
     "late_interaction_where_topk_served",
     "late_interaction_explain_served",
     "dsir_importance_select",
-    "asof_join_purchase_click",
-    "range_join_bursts",
     "curate_corpus",
-    "retention_day_over_day",
     "chunk_ast_python",
     "quality_repetition",
     "hybrid_rrf_topk",
-    "knn_int8_rerank",
     "decontaminate_corpus",
     "bm25_topk",
     "bm25_folded_topk_served",
@@ -80,39 +76,32 @@ BENCH_KEYS = [
     "ann_graph_recursive_topk",
     "ann_graph_acorn_topk",
     "ann_graph_acorn_batch_topk",
-    "ann_binq_topk",
-    "ann_binq_ivf_topk",
     "hybrid_weighted_topk",
     "hybrid_weighted_served_topk",
     "hybrid_weighted_graph_topk",
     # r14 (VERDICT r13 next #7): the r13 cost classes that were not yet
     # bench-visible — MVCC read-pin + rollback pointer swing (the
-    # versioning path), content-keyed split, kNN label vote
+    # versioning path), content-keyed split
     "collection_get_snapshot",
     "collection_rollback_get",
     "split_train_holdout",
-    "knn_classify",
     # r14 additions
-    "knn_regress",
     "dedup_containment_pairs",
     "dedup_containment_gate",
     "dedup_containment_gate_ingested",
     "tokenize_bpe_encode",
     # r7 additions
     "dedup_repeated_ngrams",
-    "scd2_user_state_history",
     "bm25_topk_served",
-    # r10: boolean / phrase / truncated-dim serving layer
+    # r10: boolean / phrase serving layer
     "boolean_and_topk",
     "phrase_topk_served",
-    "knn_truncated_rerank",
     # r10b: batch serving shapes (M queries, one probe + one pass)
     "bm25_batch_topk_served",
     "ann_rp_lsh_batch_topk",
     "lm_bigram_score",
     "embed_topvar_project",
     "normalize_text_corpus",
-    "trend_event_values",
     "hybrid_rrf_served_topk",
     "knn_join_topk",
     # r10c: ChromaDB-compatible Collection facade + full where DSL
@@ -121,10 +110,9 @@ BENCH_KEYS = [
     "collection_query_graph_batch_topk",
     "knn_where_dsl_topk",
     "fuzzy_topk_served",
-    # r11: sample-trained IVF serving, MMR diversification, keyset page
+    # r11: sample-trained IVF serving, keyset page
     "ann_ivf_sampled_topk",
     "ann_ivfpq_sampled_topk",
-    "knn_mmr_topk",
     "collection_get_page2",
 ]
 

@@ -56,6 +56,11 @@ def test_add_count_get_roundtrip(spark, coll):
     assert got[0]["document"] == "text of d2"
     assert got[0]["lang"] == "en" and got[0]["stars"] == 2
     assert coll.peek(3).count() == 3
+    # a bare string is ONE id (ChromaDB), never iterated per character
+    coll.add(_batch(spark, ["a", "b", "ab"], _vecs(7, 3)))
+    assert [r["id"] for r in coll.get(ids="ab").collect()] == ["ab"]
+    with pytest.raises(ValueError, match="ids must be strings"):
+        coll.get(ids=[None])
 
 
 def test_add_rejects_existing_and_batch_dups(spark, coll):
@@ -211,9 +216,15 @@ def test_delete_by_ids_where_and_all(spark, coll):
 
 
 def test_delete_requires_a_selector(spark, coll):
-    coll.add(_batch(spark, ["a"], _vecs(13, 1)))
+    coll.add(_batch(spark, ["a", "b", "ab", "c"], _vecs(13, 4)))
     with pytest.raises(ValueError):
         coll.delete()
+    # a bare string is ONE id: "ab" goes, "a" and "b" stay
+    coll.delete(ids="ab")
+    assert sorted(r["id"] for r in coll.get().collect()) == ["a", "b", "c"]
+    with pytest.raises(ValueError, match="ids must be strings"):
+        coll.delete(ids=[None])
+    assert [c for c, ok, _ in coll.fsck() if not ok] == []
 
 
 def test_schema_and_dim_are_enforced(spark, coll):
@@ -398,6 +409,8 @@ def test_query_texts_end_to_end(spark, tmp_path):
     c8.add(_batch(spark, ["a"], _vecs(40, 1)))
     with pytest.raises(ValueError, match="embedder dim"):
         c8.query(query_texts="hello")
+    with pytest.raises(ValueError, match="query_texts"):
+        c.query(query_texts=[])
 
 
 def test_fsck_and_include_embeddings(spark, coll):
@@ -828,6 +841,14 @@ def test_snapshot_view_serves_old_version_read_only(spark, coll):
             verb()
     with pytest.raises(ValueError, match="unknown version"):
         coll.at("v_999999")
+    # gc keeps the trailing two versions, so one more commit removes v1:
+    # the view's reads then name the version instead of a Spark error
+    coll.upsert(_batch(spark, ["s4"], mat[:1]))
+    assert v1 not in {v["name"] for v in coll.versions()}
+    for read in (snap.count, snap.get, lambda: snap.query(q, n_results=2)):
+        with pytest.raises(ValueError, match=f"{v1}.*versions"):
+            read()
+    assert [c for c, ok, _ in coll.fsck() if not ok] == []
 
 
 def test_fork_is_hardlinked_and_divergent(spark, tmp_path):

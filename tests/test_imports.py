@@ -197,3 +197,40 @@ def test_every_catalogue_key_has_an_oracle_twin():
         f"no oracle twin: {sorted(spark_keys - oracle_keys)}; "
         f"no Spark query: {sorted(oracle_keys - spark_keys)}"
     )
+
+
+def _dotted(path: Path) -> str:
+    parts = path.relative_to(REPO).with_suffix("").parts
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+def test_no_package_module_exists_only_for_tests():
+    """Every module under the package is imported by package code,
+    ``__spark_entry__.py``, ``bench.py``, ``tools/`` or ``perfbench/`` —
+    a module only tests import is dead code. Importing a submodule
+    imports its package too."""
+    importers = [
+        p
+        for p in (*SOURCES, *(REPO / "perfbench").rglob("*.py"))
+        if "tests" not in p.relative_to(REPO).parts
+    ]
+    imported: set[str] = set()
+    for path in importers:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Import):
+                mods = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                base = _resolve_from(path, node)
+                mods = [base] + [f"{base}.{a.name}" for a in node.names]
+            else:
+                continue
+            for mod in mods:
+                found = _module_file(mod)
+                if found is None or _dotted(found) == _dotted(path):
+                    continue
+                parts = mod.split(".")
+                imported |= {".".join(parts[:i]) for i in range(1, len(parts) + 1)}
+    modules = {_dotted(p) for p in (REPO / PKG).rglob("*.py")}
+    assert len(modules) > 20, len(modules)
+    orphans = sorted(modules - imported)
+    assert not orphans, f"modules no package code or tool imports: {orphans}"

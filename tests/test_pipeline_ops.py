@@ -394,7 +394,7 @@ def test_canonical_selection_windows_share_partitioning(spark, sf_dir):
     assert not re.search(r"Window[^\n]*\n[^\n]*Exchange[^\n]*\n[^\n]*Window", plan), plan
 
 
-# ----------------------------------------------------- normalize / trend
+# -------------------------------------------------------------- normalize
 
 def test_normalize_text_is_idempotent_and_clean(spark, sf_dir):
     """normalize(normalize(x)) == normalize(x); the output contains only
@@ -423,66 +423,7 @@ def test_normalize_text_plan_has_no_shuffle(spark, sf_dir):
     assert "Exchange" not in plan, plan
 
 
-def test_trend_recovers_planted_slope(spark):
-    """regr_slope/intercept on a synthetic exact line y = 3x + 7 (x in
-    days) recovers slope 3, intercept 7, r2 = 1 in micro units."""
-    import os
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from adk_noui_vectordb_spark.operators import temporal as tp
-
-    base_us = 1577836800 * 1_000_000  # the op's literal epoch
-    rows = [
-        (i, base_us + i * 86_400_000_000, 7.0 + 3.0 * i) for i in range(50)
-    ]
-    with tempfile.TemporaryDirectory() as tmp:
-        spark.createDataFrame(
-            [(eid, us, v) for eid, us, v in rows],
-            "event_id bigint, us bigint, value double",
-        ).select(
-            "event_id",
-            F.timestamp_micros(F.col("us")).alias("ts"),
-            F.lit(1).alias("user_id"),
-            F.lit("linear").alias("event_type"),
-            "value",
-            F.lit("{}").alias("props"),
-        ).write.parquet(os.path.join(tmp, "events.parquet"))
-        got = tp.trend_event_values(spark, tmp).collect()
-    assert len(got) == 1
-    r = got[0]
-    assert r["n"] == 50
-    assert r["slope_micro_per_day"] == 3_000_000
-    assert r["intercept_micro"] == 7_000_000
-    assert r["r2_micro"] == 1_000_000
-
-
-# -------------------------------------------- rate limit / cluster histogram
-
-def test_rate_limited_sample_keeps_earliest_per_user(spark, sf_dir):
-    """Each user keeps at most cap rows, ranks are contiguous from 1,
-    and the kept event_ids are exactly the user's earliest by
-    (ts_ns, event_id)."""
-    from adk_noui_vectordb_spark.operators import temporal as tp
-
-    cap = 5
-    got: dict[int, list] = {}
-    for r in tp.events_rate_limited_sample(spark, sf_dir, cap=cap).collect():
-        got.setdefault(r["user_id"], []).append((r["rn"], r["event_id"]))
-    e = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_id", "ts_ns"
-    ).collect()
-    by_user: dict[int, list] = {}
-    for r in e:
-        by_user.setdefault(r["user_id"], []).append((r["ts_ns"], r["event_id"]))
-    for uid, kept in got.items():
-        kept.sort()
-        assert [k[0] for k in kept] == list(range(1, len(kept) + 1))
-        assert len(kept) <= cap
-        want = [ev for _, ev in sorted(by_user[uid])[:cap]]
-        assert [k[1] for k in kept] == want
-
+# ------------------------------------------------------ cluster histogram
 
 def test_cluster_size_histogram_conserves_docs(spark, sf_dir):
     """sum(cluster_size * n_clusters) equals the corpus size — every
@@ -498,7 +439,7 @@ def test_cluster_size_histogram_conserves_docs(spark, sf_dir):
     assert all(r["cluster_size"] >= 1 and r["n_clusters"] >= 1 for r in rows)
 
 
-# ------------------------------------------------ token entropy / gap stats
+# ---------------------------------------------------------- token entropy
 
 def test_doc_token_entropy_bounds_and_extremes(spark, sf_dir):
     """0 <= H <= ln(n_distinct) (uniform bound, micro units with floor
@@ -526,35 +467,6 @@ def test_doc_token_entropy_bounds_and_extremes(spark, sf_dir):
         )
         assert r["entropy_micro"] == want
         assert r["n_tokens"] == n and r["n_distinct"] == len(cnt)
-
-
-def test_gap_stats_match_python_replay(spark, sf_dir):
-    """Gap count/min/max/rank-selected median per user equal a
-    brute-force replay over the sorted event series."""
-    from adk_noui_vectordb_spark.operators import temporal as tp
-
-    got = {r["user_id"]: r for r in tp.events_gap_stats(spark, sf_dir).collect()}
-    e = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts_ns", "event_id"
-    ).collect()
-    series: dict[int, list] = {}
-    for r in e:
-        series.setdefault(r["user_id"], []).append((r["ts_ns"], r["event_id"]))
-    import math
-
-    for uid, evs in series.items():
-        evs.sort()
-        gaps = sorted(
-            (b[0] - a[0]) // 1000 for a, b in zip(evs, evs[1:])
-        )
-        if not gaps:
-            assert uid not in got
-            continue
-        r = got[uid]
-        assert r["n_gaps"] == len(gaps)
-        assert r["min_gap_us"] == gaps[0]
-        assert r["max_gap_us"] == gaps[-1]
-        assert r["median_gap_us"] == gaps[math.ceil(len(gaps) / 2) - 1]
 
 
 def test_gopher_rules_fire_on_constructed_docs(spark, tmp_path):
@@ -987,28 +899,6 @@ def test_containment_gate_rejects_below_build_threshold(spark, sf_dir):
     assert all(
         max(r["cont_new_in_old"], r["cont_old_in_new"]) >= 0.9 for r in rows
     )
-
-
-def test_knn_regress_predicts_within_neighbor_range(spark, sf_dir):
-    """knn_regress: one row per query, the prediction is the exact mean
-    of the 15 neighbors' n_chars (so it lies within the corpus range),
-    and abs_error is self-consistent."""
-    from adk_noui_vectordb_spark.operators.knn import knn_regress
-    from adk_noui_vectordb_spark.sources.tables import load_table
-
-    got = knn_regress(spark, sf_dir).collect()
-    assert [r["query_id"] for r in got] == list(range(8))
-    stats = (
-        load_table(spark, sf_dir, "documents")
-        .agg(F.min("n_chars"), F.max("n_chars"))
-        .head()
-    )
-    lo, hi = stats[0], stats[1]
-    for r in got:
-        assert lo <= r["predicted_n_chars"] <= hi
-        assert r["abs_error"] == abs(
-            r["predicted_n_chars"] - r["true_n_chars"]
-        )
 
 
 def test_containment_gate_catches_clones_and_truncations(spark, sf_dir):

@@ -73,23 +73,6 @@ def test_knn_filter_pushes_to_scan(spark, sf_dir):
     assert_pushed_filters(df, "label")
 
 
-def test_asof_join_is_join_free(spark, sf_dir):
-    """The as-of is union+window — no join operator may appear."""
-    from adk_noui_vectordb_spark.operators import temporal
-
-    plan = explain_str(temporal.asof_join_purchase_click(spark, sf_dir))
-    assert "Join" not in plan, plan
-
-
-def test_range_join_is_equi_not_cartesian(spark, sf_dir):
-    """Bucket banding must turn the interval join into equi joins."""
-    from adk_noui_vectordb_spark.operators import temporal
-
-    plan = explain_str(temporal.range_join_bursts(spark, sf_dir))
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-
-
 def test_bucketed_join_has_no_shuffle(spark, sf_dir, tmp_path):
     """orders |x| lineitem bucketed on the join key: zero exchanges."""
     from adk_noui_vectordb_spark.sources.sinks import write_bucketed

@@ -7,14 +7,12 @@ exercises the edges (blank blocks, ties, empty sides, duplicate keys).
 
 from __future__ import annotations
 
-import pandas as pd
 import pytest
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from adk_noui_vectordb_spark.operators.chunking import chunk_fixed_lines
-from adk_noui_vectordb_spark.operators.temporal import asof_purchase_click_frame
 
 SETTINGS = settings(
     max_examples=8,
@@ -58,44 +56,6 @@ def test_chunk_fixed_lines_partitions_content(spark, lines):
         if i not in covered:
             block = lines[(i // 5) * 5 : (i // 5) * 5 + 5]
             assert "".join("".join(block).split()) == ""
-
-
-events_strategy = st.lists(
-    st.tuples(
-        st.integers(0, 3),            # user_id
-        st.integers(0, 50),           # ts_ns (tiny domain -> forces ties)
-        st.sampled_from(["click", "purchase"]),
-        st.floats(0, 100, allow_nan=False),
-    ),
-    min_size=0,
-    max_size=40,
-)
-
-
-@given(rows=events_strategy)
-@SETTINGS
-def test_asof_matches_bruteforce(spark, rows):
-    """The union+window as-of equals the brute-force definition: for each
-    purchase, the click of the same user with the greatest ts <= purchase
-    ts (ties on ts resolved toward the click; ties between clicks at the
-    same ts by greatest event_id, matching the window order)."""
-    data = [
-        (i, ts, uid, et, val) for i, (uid, ts, et, val) in enumerate(rows)
-    ]
-    df = spark.createDataFrame(
-        data, "event_id bigint, ts_ns bigint, user_id int, event_type string, value double"
-    )
-    got = {
-        r.purchase_id: r.click_id
-        for r in asof_purchase_click_frame(df).collect()
-    }
-    purchases = [d for d in data if d[3] == "purchase"]
-    clicks = [d for d in data if d[3] == "click"]
-    assert set(got) == {p[0] for p in purchases}
-    for pid, ts, uid, _, _ in purchases:
-        cands = [c for c in clicks if c[2] == uid and c[1] <= ts]
-        expected = max(cands, key=lambda c: (c[1], c[0]))[0] if cands else None
-        assert got[pid] == expected, (pid, got[pid], expected)
 
 
 @given(

@@ -1,9 +1,8 @@
-"""Hybrid retrieval (BM25 + RRF) and int8-quantized kNN semantics.
+"""Hybrid retrieval (BM25 + RRF, weighted fusion), embedding dim stats
+and late interaction.
 
-Pins the operators' math on hand-built inputs and measures the int8
-quantization recall against the exact float path (the number BASELINE.md
-reports). Plan shape: the coarse stage must be TakeOrderedAndProject and
-the rerank join must broadcast the candidate list — the 100 TB contract.
+Pins the operators' math on hand-built inputs. Plan shape: every cut
+stage must be TakeOrderedAndProject — the 100 TB contract.
 """
 
 import math
@@ -11,7 +10,6 @@ import math
 from pyspark.sql import functions as F
 
 from adk_noui_vectordb_spark.operators import hybrid as hyb
-from adk_noui_vectordb_spark.operators import quantize as qz
 from adk_noui_vectordb_spark.operators.knn import knn_topk, make_query_from_vec
 from adk_noui_vectordb_spark.plans import explain_str
 from adk_noui_vectordb_spark.sources.tables import load_table
@@ -74,181 +72,6 @@ def test_hybrid_rrf_values_and_cut(spark):
     assert rrfs == sorted(rrfs, reverse=True)
 
 
-# ------------------------------------------------------------- int8
-
-
-def test_quantize_bounds_and_roundtrip(spark):
-    emb = load_table(spark, SF, "embeddings")
-    rows = (
-        qz.with_quantized(emb)
-        .select(
-            "max_abs",
-            F.array_max("q").alias("qmax"),
-            F.array_min("q").alias("qmin"),
-            F.array_max(
-                F.zip_with(
-                    qz.dequantized(F.col("q"), F.col("max_abs")),
-                    F.transform(
-                        F.col("embedding"), lambda x: x.cast("double")
-                    ),
-                    lambda d, x: F.abs(d - x),
-                )
-            ).alias("max_err"),
-        )
-        .collect()
-    )
-    for r in rows:
-        assert -127 <= r["qmin"] and r["qmax"] <= 127
-        # one of the extremes must hit full scale (that element IS max_abs)
-        assert r["qmax"] == 127 or r["qmin"] == -127
-        # reconstruction error <= half a quantization step
-        step = r["max_abs"] / 127.0
-        assert r["max_err"] <= step / 2 + 1e-12
-
-
-def test_quantize_zero_vector_guard(spark):
-    emb = spark.createDataFrame(
-        [(0, [0.0, 0.0, 0.0]), (1, [1.0, -2.0, 0.5])],
-        "vec_id long, embedding array<float>",
-    )
-    rows = {r["vec_id"]: r for r in qz.with_quantized(emb).collect()}
-    assert rows[0]["q"] == [0, 0, 0]
-    assert rows[0]["max_abs"] == 0.0
-    assert rows[1]["q"] == [64, -127, 32]  # 1/2*127 rounds half-up to 64
-
-
-def test_int8_recall_vs_float(spark):
-    """Quantization-only recall@10: how many of the float top-10 survive in
-    the int8 top-10. Measured, then pinned (BASELINE.md)."""
-    exact = {
-        r["vec_id"]
-        for r in knn_topk(
-            load_table(spark, SF, "embeddings"),
-            make_query_from_vec(load_table(spark, SF, "embeddings"), 0),
-            k=10,
-        ).collect()
-    }
-    quant = {r["vec_id"] for r in qz.knn_int8_topk(spark, SF, k=10).collect()}
-    recall = len(exact & quant) / 10
-    assert recall >= 0.8, f"int8 recall@10 degraded: {recall}"
-
-
-def test_rerank_recovers_exact_ranking(spark):
-    """Two-stage (coarse int8 top-50 -> float rerank) must reproduce the
-    exact float top-10 whenever the true top-10 survives the coarse cut —
-    with 50 candidates for k=10 at this SF it does."""
-    exact = [
-        (r["vec_id"], r["sim"])
-        for r in knn_topk(
-            load_table(spark, SF, "embeddings"),
-            make_query_from_vec(load_table(spark, SF, "embeddings"), 0),
-            k=10,
-        ).collect()
-    ]
-    reranked = [
-        (r["vec_id"], r["sim"])
-        for r in qz.knn_int8_rerank(spark, SF, k=10).collect()
-    ]
-    assert reranked == exact
-
-
-def test_int8_plan_shapes(spark):
-    plan = explain_str(qz.knn_int8_rerank(spark, SF), mode="simple")
-    assert "TakeOrderedAndProject" in plan, plan
-    assert plan.count("BroadcastHashJoin") + plan.count(
-        "BroadcastNestedLoopJoin"
-    ) >= 2, plan  # coarse candidate list AND 1-row query both broadcast
-
-
-# ------------------------------------------------------ binary (1-bit)
-
-
-def test_binq_codes_are_positive_32bit_words(spark):
-    """Sign-bit packing contract: every word in [0, 2^32) — positive in
-    BIGINT on both engines, the property the cross-engine XOR+popcount
-    identity rests on — and a hand vector packs to the expected bits."""
-    emb = load_table(spark, SF, "embeddings")
-    bad = (
-        qz.with_binarized(emb)
-        .filter(
-            (F.col("w0") < 0) | (F.col("w0") >= 2**32)
-            | (F.col("w1") < 0) | (F.col("w1") >= 2**32)
-        )
-        .count()
-    )
-    assert bad == 0
-    hand = spark.createDataFrame(
-        [(0, [1.0, -1.0, 0.0, 2.0] + [0.0] * 28 + [3.0] + [0.0] * 31)],
-        "vec_id long, embedding array<float>",
-    )
-    row = qz.with_binarized(hand).select("w0", "w1").head()
-    # bits 0 and 3 set (x > 0; zero and negative clear), word 1 bit 0
-    assert (row["w0"], row["w1"]) == (0b1001, 0b1)
-
-
-def test_binq_packing_matches_python_twin_on_random_vectors(spark):
-    """Bulk cross-engine hardening beyond the fixture rows: 200 seeded
-    random vectors (mixed signs, exact zeros, tiny magnitudes) pack to
-    the SAME words in Catalyst (pow(2,i) fold) and the Python twin
-    (1 << i) — the positive-32-bit-word identity the DuckDB oracle's
-    `1::BIGINT << i` relies on, checked in one job."""
-    import numpy as np
-
-    from adk_noui_vectordb_spark.operators.quantize import _binq_words_py
-
-    rng = np.random.default_rng(99)
-    vecs = rng.normal(size=(200, 64)) * rng.choice(
-        [0.0, 1e-30, 1.0, 1e20], size=(200, 64), p=[0.1, 0.1, 0.7, 0.1]
-    )
-    rows = [(i, [float(x) for x in vecs[i]]) for i in range(200)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    got = {
-        r["vec_id"]: (r["w0"], r["w1"])
-        for r in qz.with_binarized(df).select("vec_id", "w0", "w1").collect()
-    }
-    for i, v in rows:
-        # the float32 cast is what the engine stores — pack the same
-        want = _binq_words_py([float(np.float32(x)) for x in v])
-        assert got[i] == tuple(want), i
-
-
-def test_binq_hamming_identity_and_symmetry(spark):
-    """A vector's distance to itself is 0 (checked via a duplicate id
-    pair) and the top-k distances are non-decreasing."""
-    rows = qz.binq_hamming_topk(spark, SF, query_vec_id=0, k=25).collect()
-    hams = [r["hamming"] for r in rows]
-    assert hams == sorted(hams)
-    assert all(0 <= h <= 64 for h in hams)
-
-
-def test_binq_rerank_recall_vs_exact(spark):
-    """Recall@10 of the 1-bit coarse cut at C=50 vs the exact float
-    top-10 — the most aggressive compression tier, so the floor is the
-    loosest in the quantization family (int8 pins 0.8). Measured 0.8 at
-    this SF (0.7 at sf0.01); pinned at 0.5 to absorb fixture
-    regeneration."""
-    exact = {
-        r["vec_id"]
-        for r in knn_topk(
-            load_table(spark, SF, "embeddings"),
-            make_query_from_vec(load_table(spark, SF, "embeddings"), 0),
-            k=10,
-        ).collect()
-    }
-    binq = {r["vec_id"] for r in qz.ann_binq_topk(spark, SF, k=10).collect()}
-    assert len(exact & binq) / 10 >= 0.5, sorted(binq)
-
-
-def test_binq_plan_shapes(spark):
-    """Same 100 TB contract as int8: coarse cut is a TakeOrderedAndProject
-    heap, candidate list and 1-row query broadcast into the rerank."""
-    plan = explain_str(qz.ann_binq_topk(spark, SF), mode="simple")
-    assert "TakeOrderedAndProject" in plan, plan
-    assert plan.count("BroadcastHashJoin") + plan.count(
-        "BroadcastNestedLoopJoin"
-    ) >= 2, plan
-
-
 # ------------------------------------------------- weighted (alpha) fusion
 
 
@@ -288,88 +111,6 @@ def test_weighted_fusion_scores_bounded_and_plan(spark):
     assert scores == sorted(scores, reverse=True)
     plan = explain_str(df, mode="simple")
     assert plan.count("TakeOrderedAndProject") >= 3, plan  # 2 pools + final
-
-
-def test_binq_ivf_probe_is_partition_pruned_and_recall(spark):
-    """IndexBinaryIVF contract: the coarse probe's codes read carries a
-    LITERAL cluster partition filter (unprobed cells' 16-byte rows are
-    never listed), the refine joins broadcast, the Python query-side
-    packing twin equals with_binarized exactly, and recall@10 vs exact
-    is no worse than flat binq at the same C (the cells only FOCUS the
-    Hamming scan)."""
-    from adk_noui_vectordb_spark.operators.quantize import _binq_words_py
-
-    emb = load_table(spark, SF, "embeddings")
-    rows = emb.orderBy("vec_id").limit(5).collect()
-    packed = {
-        r["vec_id"]: _binq_words_py([float(x) for x in r["embedding"]])
-        for r in rows
-    }
-    spark_words = {
-        r["vec_id"]: (r["w0"], r["w1"])
-        for r in qz.with_binarized(emb)
-        .filter(F.col("vec_id") < 5)
-        .select("vec_id", "w0", "w1")
-        .collect()
-    }
-    for vid, (w0, w1) in spark_words.items():
-        assert packed[vid] == [w0, w1], vid
-
-    df = qz.ann_binq_ivf_topk(spark, SF, k=10)
-    plan = explain_str(df)
-    heads = [s.split("\n")[0] for s in plan.split("PartitionFilters")[1:]]
-    assert any("cluster" in h for h in heads), plan
-    got = df.collect()
-    assert len(got) == 10
-    exact = {
-        r["vec_id"]
-        for r in knn_topk(emb, make_query_from_vec(emb, 0), k=10).collect()
-    }
-    ivf_recall = len({r["vec_id"] for r in got} & exact) / 10
-    assert ivf_recall >= 0.4, ivf_recall  # nprobe=2 of 8 cells, 1-bit codes
-
-
-def test_binq_ivf_update_lifecycle(spark, tmp_path):
-    """update_binq_ivf_index on a private corpus: a new vector's code
-    lands in its frozen-centroid cell and an exact clone of the query
-    surfaces at Hamming 0 / rank 1; a re-submitted id REPLACES its
-    rows (no duplicates); fsck stays green throughout."""
-    import os
-
-    emb = load_table(spark, SF, "embeddings")
-    priv = str(tmp_path / "bqupd")
-    os.makedirs(priv)
-    emb.write.parquet(os.path.join(priv, "embeddings.parquet"))
-    qz.build_binq_ivf_index(spark, priv)
-
-    v0 = [float(x) for x in emb.filter(F.col("vec_id") == 0).head()["embedding"]]
-    clone = spark.createDataFrame(
-        [(777_001, v0)], "vec_id bigint, embedding array<double>"
-    )
-    qz.update_binq_ivf_index(spark, priv, clone)
-    got = qz.ann_binq_ivf_topk(spark, priv, query_vec_id=0, k=5).collect()
-    assert got[0]["vec_id"] == 777_001, got  # exact clone: sim 1.0, rank 1
-
-    # REPLACE: resubmit the same id with a different vector — one row
-    other = [float(x) for x in emb.filter(F.col("vec_id") == 9).head()["embedding"]]
-    qz.update_binq_ivf_index(
-        spark,
-        priv,
-        spark.createDataFrame(
-            [(777_001, other)], "vec_id bigint, embedding array<double>"
-        ),
-    )
-    cur = qz.build_binq_ivf_index(spark, priv)
-    rows = (
-        spark.read.schema(qz.BINQ_CODES_SCHEMA)
-        .parquet(os.path.join(cur, "codes"))
-        .filter(F.col("vec_id") == 777_001)
-        .collect()
-    )
-    assert len(rows) == 1, rows
-    checks = {c[0]: (c[1], c[2]) for c in qz.fsck_binq_ivf_index(spark, priv)}
-    bad = {k: v for k, v in checks.items() if not v[0]}
-    assert not bad, bad
 
 
 def test_hybrid_plan_no_global_sort_before_cut(spark):
@@ -453,86 +194,7 @@ def test_embed_dim_stats_partial_aggregates_before_shuffle(spark):
     assert plan.count("HashAggregate") >= 2, plan
 
 
-# ------------------------------------------------- truncated-dim rerank
-
-
-def test_truncated_rerank_full_width_equals_exact_knn(spark):
-    """With trunc_dims = d the coarse ranking IS the exact ranking, so
-    the two-stage result must equal exact kNN row-for-row — pins that
-    the rerank stage neither reorders nor loses candidates."""
-    from adk_noui_vectordb_spark.operators.knn import knn_truncated_rerank
-
-    emb = load_table(spark, SF, "embeddings")
-    exact = knn_topk(emb, make_query_from_vec(emb, 0), k=10).collect()
-    two_stage = knn_truncated_rerank(
-        spark, SF, trunc_dims=64, n_coarse=50, k=10
-    ).collect()
-    assert [tuple(r) for r in two_stage] == [tuple(r) for r in exact]
-
-
-def test_truncated_rerank_recall_and_plan(spark):
-    """16-of-64-dim coarse pass at C=50: measure recall@10 vs exact (the
-    isotropic-data floor BASELINE.md records) and pin the serving plan —
-    coarse must be TakeOrderedAndProject, rerank joins must broadcast."""
-    from adk_noui_vectordb_spark.operators.knn import knn_truncated_rerank
-
-    emb = load_table(spark, SF, "embeddings")
-    exact = {
-        r["vec_id"]
-        for r in knn_topk(emb, make_query_from_vec(emb, 0), k=10).collect()
-    }
-    df = knn_truncated_rerank(spark, SF, trunc_dims=16, n_coarse=50, k=10)
-    got = {r["vec_id"] for r in df.collect()}
-    assert len(got) == 10
-    # the rerank stage is exact on its candidates, so every returned id
-    # the exact top-10 contains is in the right order; recall floor on
-    # 64-dim isotropic data with a 25%-dim coarse pass at C=50 stays
-    # comfortably above chance (50/1999)
-    assert len(got & exact) >= 3
-    plan = explain_str(df)
-    assert "TakeOrderedAndProject" in plan
-    assert plan.count("BroadcastExchange") >= 2, plan
-
-
-def test_knn_mmr_diversifies_the_topk(spark, sf_dir):
-    """MMR's selections trade relevance for novelty: rank 1 equals the
-    plain top-1, ranks are contiguous, every pick comes from the pool,
-    and the mmr column reproduces the greedy objective (lam*sim -
-    (1-lam)*max pairwise sim to earlier picks)."""
-    import numpy as np
-
-    from adk_noui_vectordb_spark.operators.knn import knn_mmr_topk
-    from adk_noui_vectordb_spark.sources.tables import load_table
-
-    out = knn_mmr_topk(spark, sf_dir, k=5, pool=20).collect()
-    assert [r["rank"] for r in out] == [1, 2, 3, 4, 5]
-    emb = {
-        r["vec_id"]: np.array(r["embedding"], dtype=np.float64)
-        for r in load_table(spark, sf_dir, "embeddings").collect()
-    }
-    q = emb[0]
-
-    def cos(a, b):
-        return round(float(a @ b) / (np.linalg.norm(a) * np.linalg.norm(b)), 4)
-
-    sims = {v: cos(e, q) for v, e in emb.items() if v != 0}
-    top1 = min(sims, key=lambda v: (-sims[v], v))
-    assert out[0]["vec_id"] == top1 and out[0]["mmr"] == 0.5 * out[0]["sim"]
-    # replay the greedy objective for rank 2 and 3
-    for i in (1, 2):
-        picked = [r["vec_id"] for r in out[:i]]
-        v = out[i]["vec_id"]
-        mp = max(cos(emb[v], emb[p]) for p in picked)
-        assert abs(out[i]["mmr"] - (0.5 * out[i]["sim"] - 0.5 * mp)) < 2e-4
-    # the pool's plain top-5 is less diverse (or equal): max pairwise
-    # sim among MMR picks never exceeds the plain top-5's
-    top5 = sorted(sims, key=lambda v: (-sims[v], v))[:5]
-    mmr5 = [r["vec_id"] for r in out]
-
-    def max_pair(vs):
-        return max(cos(emb[a], emb[b]) for a in vs for b in vs if a != b)
-
-    assert max_pair(mmr5) <= max_pair(top5) + 1e-9
+# ------------------------------------------------------- late interaction
 
 
 def test_late_interaction_matches_bruteforce_and_beats_pooled(

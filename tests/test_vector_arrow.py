@@ -1,44 +1,5 @@
-"""The Arrow/BLAS vector kernels must agree with the Catalyst expressions
-(functions/vector.py) far below the 4-dp rounding every consumer applies."""
-
-import pytest
-from pyspark.sql import functions as F
-
-from adk_noui_vectordb_spark.functions import vector as v
-from adk_noui_vectordb_spark.functions import vector_arrow as va
-from adk_noui_vectordb_spark.sources.tables import load_table
-
-
-@pytest.fixture(scope="module")
-def pairs(spark, sf_dir):
-    e = load_table(spark, sf_dir, "embeddings")
-    a, b = e.alias("a"), e.alias("b")
-    return (
-        a.join(b, F.col("b.vec_id") == F.col("a.vec_id") + 1)
-        .select(
-            F.col("a.embedding").alias("x"), F.col("b.embedding").alias("y")
-        )
-        .limit(200)
-    )
-
-
-@pytest.mark.parametrize(
-    "expr_fn,arrow_fn",
-    [
-        (v.dot_product, va.dot_product_arrow),
-        (v.cosine_similarity, va.cosine_similarity_arrow),
-        (v.l2_distance, va.l2_distance_arrow),
-    ],
-    ids=["dot", "cosine", "l2"],
-)
-def test_arrow_matches_catalyst(pairs, expr_fn, arrow_fn):
-    rows = pairs.select(
-        expr_fn(F.col("x"), F.col("y")).alias("ref"),
-        arrow_fn(F.col("x"), F.col("y")).alias("fast"),
-    ).collect()
-    assert rows, "no pairs loaded"
-    for r in rows:
-        assert r.fast == pytest.approx(r.ref, rel=1e-9, abs=1e-9)
+"""The Arrow (mapInPandas) simhash kernel must agree byte for byte with
+its pure-JVM expression twin."""
 
 
 def test_simhash_kernel_matches_expression_twin(spark, sf_dir):

@@ -41,8 +41,6 @@ KEYS = {
     "curate_corpus": "documents",
     "winnow_fingerprints": "documents",
     "decontaminate_corpus": "documents",
-    "asof_join_purchase_click": "events",
-    "range_join_bursts": "events",
     "lang_id_ngram": "documents",
     "tokenize_bpe_encode": "documents",
     "ann_ivf_trained_topk": "embeddings",
@@ -54,13 +52,10 @@ KEYS = {
     "lm_bigram_score": "documents",
     "embed_topvar_project": "embeddings",
     "normalize_text_corpus": "documents",
-    "trend_event_values": "events",
     "dedup_repeated_ngrams": "documents",
-    "scd2_user_state_history": "events",
     # r7c additions
     "knn_join_topk": "embeddings",
     "doc_token_entropy": "documents",
-    "events_rate_limited_sample": "events",
     "dup_cluster_size_histogram": "documents",
     "hybrid_rrf_served_topk": "documents",
     # r9 additions
@@ -83,14 +78,9 @@ KEYS = {
     "ann_graph_acorn_topk": "embeddings",
     "ann_graph_acorn_batch_topk": "embeddings",
     "collection_query_graph_acorn_topk": "embeddings",
-    "knn_classify": "embeddings",
-    "knn_regress": "embeddings",
     "dedup_containment_pairs": "documents",
     "dedup_containment_gate": "documents",
     "split_train_holdout": "documents",
-    "binq_hamming_topk": "embeddings",
-    "ann_binq_ivf_topk": "embeddings",
-    "ann_binq_topk": "embeddings",
     "hybrid_weighted_topk": "documents",
     "hybrid_weighted_served_topk": "documents",
     "hybrid_weighted_graph_topk": "documents",
@@ -100,7 +90,6 @@ KEYS = {
     "phrase_topk_served": "documents",
     "prefix_topk_served": "documents",
     "proximity_topk_served": "documents",
-    "knn_truncated_rerank": "embeddings",
     "ann_rp_lsh_filtered_topk": "embeddings",
     # r10c additions (where DSL, collection facade, fuzzy, shards)
     "docs_where_dsl_filter": "documents",
@@ -122,7 +111,6 @@ KEYS = {
     "dsir_importance_select": "documents",
     "ann_grouped_topk": "embeddings",
     # r11 additions
-    "knn_mmr_topk": "embeddings",
     "ann_ivf_sampled_topk": "embeddings",
     "collection_get_page2": "documents",
     "collection_query_ip_topk": "embeddings",
