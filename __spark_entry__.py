@@ -17,7 +17,7 @@ Cross-engine parity rules used throughout (see SURVEY.md §5):
 - DuckDB BIGINT/HUGEINT widths are cast to match Spark's (count->BIGINT,
   len->INTEGER, sum(int)->BIGINT);
 - comparisons that pick a WINNER from floats near a boundary (LSH sign
-  bits, PQ/k-means distance ranks) travel as floor-scaled integer units
+  bits, k-means distance ranks) travel as floor-scaled integer units
   (micro: 1e6) so any summation order yields the same integer in every
   engine — round-then-compare is reserved for display-grade values;
 - data-dependent constants an operator bakes into its plan (BPE merges,
@@ -42,7 +42,6 @@ from adk_noui_vectordb_spark.operators import hybrid as _hyb
 from adk_noui_vectordb_spark.operators import indexing as _idx
 from adk_noui_vectordb_spark.operators import invindex as _inv
 from adk_noui_vectordb_spark.operators import knn as _knn
-from adk_noui_vectordb_spark.operators import rollups as _roll
 from adk_noui_vectordb_spark.operators import textops as _text
 from adk_noui_vectordb_spark.operators.chunking import (
     chunk_fixed_words,
@@ -150,13 +149,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "knn_topk_filtered": _q_knn_topk_filtered,
         "knn_batch_topk": _q_knn_batch,
         "score_similarity_pairs": _q_score_pairs,
-        # scans / filters / lookups (SURVEY.md §2.2)
-        "filter_by_lang": _roll.filter_by_lang,
-        "point_lookup": _roll.point_lookup,
-        # r10c: ChromaDB get(where=..., where_document=...) — the full
-        # public filter DSL compiled to pushed-down Catalyst predicates
-        "docs_where_dsl_filter": _roll.docs_where_dsl_filter,
-        "agg_job_totals": _roll.agg_job_totals,
+        # scans / filters (SURVEY.md §2.2)
         "filter_by_element_type": _idx.filter_by_element_type,
         "filter_by_file": _idx.filter_by_file,
         "filter_ext_dispatch": _idx.filter_ext_dispatch,
@@ -207,9 +200,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tokenize_bpe_encode": _text.tokenize_bpe_encode,
         "curate_corpus_full": _text.curate_corpus_full,
         "cluster_kmeans": _ann.cluster_kmeans,
-        "pq_encode_rows": _ann.pq_encode_rows,
-        "knn_pq_topk": _ann.knn_pq_topk,
-        "knn_pq_rerank": _ann.knn_pq_rerank,
         "stratified_sample": _text.stratified_sample,
         "split_assignment": _text.split_assignment,
         "diag_generic": _text.diag_generic,
@@ -324,26 +314,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ),
         "knn_file_summary_query": _embed.knn_file_summary_query,
         "file_context": _idx.file_context,
-        # approximate ANN (SURVEY.md §4). r6: the engine-owned
+        # approximate ANN (SURVEY.md §4): the engine-owned
         # random-hyperplane LSH (md5-seeded +-1 projections, integer-exact
-        # sign bits — operators/ann.py:rp_lsh_band_rows) replaces the MLlib
-        # key in the registry: BucketedRandomProjectionLSH's projections are
-        # Spark-ML-internal, so the old ann_lsh_topk could never have a SQL
-        # twin (err: no_oracle in every round r1-r5). The MLlib path remains
-        # the recall harness in tests/test_ann.py.
-        "ann_ivf_topk": _ann.ann_ivf_topk,
-        "ann_ivf_trained_topk": _ann.ann_ivf_trained_topk,
-        # r11: the 100 TB training path — Lloyd's on the md5-top-s
+        # sign bits — operators/ann.py:rp_lsh_band_rows).
+        # r11: the 100 TB IVF training path — Lloyd's on the md5-top-s
         # sample (cost independent of corpus size), one frozen-centroid
-        # full-corpus assignment pass, same serving discipline
+        # full-corpus assignment pass
         "ann_ivf_sampled_topk": _ann.ann_ivf_sampled_topk,
-        # r10: composed IVF+PQ (FAISS IVFADC layout — per-cell posting
-        # lists of PQ codes; the clustered-recall measurement's
-        # conclusion made operational)
-        "ann_ivfpq_topk": _ann.ann_ivfpq_topk,
-        # r11: the composed index with BOTH trainers on the sample —
-        # training cost independent of corpus size (FAISS train/add)
-        "ann_ivfpq_sampled_topk": _ann.ann_ivfpq_sampled_topk,
         "rp_lsh_band_rows": _ann.rp_lsh_band_rows,
         "ann_rp_lsh_topk": _ann.ann_rp_lsh_topk,
         # r10: the reference's where-filtered vector query
@@ -398,11 +375,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # table — recall 1.00 on the isotropic worst case (BASELINE.md)
         # at 30/96 partitions probed, no re-banding.
         "ann_rp_lsh_multiprobe_topk": _q_ann_rp_multiprobe,
-        # r7: batch k-NN JOIN — top-k neighbors for EVERY vector from
-        # the band table's equi self-join (never the O(n²) pair space)
-        "knn_join_topk": _ann.knn_join_topk,
-        # r10: cell-blocked batch kNN join — the clustered-data fast
-        # path (same-cell pairs only; n^2/c candidate volume)
+        # r10: cell-blocked batch kNN join — top-k neighbors for EVERY
+        # vector from same-cell pairs only (n^2/c candidate volume)
         "knn_join_ivf_topk": _ann.knn_join_ivf_topk,
         # r12: the HNSW analog — versioned k-NN graph (cell-join layer 0
         # + md5-min-hub layer 1), deterministic beam search serving
@@ -594,9 +568,9 @@ def _kmeans_ctes(
     operators/ann.py _lloyd exactly: 6-dp-rounded squared-L2 argmin with
     cluster tie-break, 6-dp-rounded per-dim centroid means. Returns
     (cte_list, final_assignment_select) so callers (``_kmeans_sql``,
-    ``_semdedup_sql``, ``_pq_*_sql``) can extend the chain; ``tag``
-    suffixes every CTE name (per-subspace PQ codebooks) and ``emb_sql``
-    is the vector expression (full array or a list slice)."""
+    ``_semdedup_sql``, ``_ivf_sampled_sql``) can extend the chain;
+    ``tag`` suffixes every CTE name and ``emb_sql`` is the vector
+    expression."""
     dist = (
         f"round(list_inner_product(e{tag}.emb, e{tag}.emb)"
         f" - 2 * list_inner_product(e{tag}.emb, c.c)"
@@ -633,44 +607,6 @@ def _kmeans_sql(k: int = 8, iters: int = 2) -> str:
     return "WITH " + ",\n".join(ctes) + "\n" + final
 
 
-def _ivf_trained_sql(
-    k: int = 5, nprobe: int = 2, n_centroids: int = 8, iters: int = 2
-) -> str:
-    """Trained-IVF twin (operators/ann.py ann_ivf_trained_topk): the same
-    unrolled Lloyd's chain as cluster_kmeans, then centroid cosine ranking
-    (4 dp, cluster tie-break), nprobe pruning through the assignment, and
-    the exact rerank."""
-    ctes, final = _kmeans_ctes(n_centroids, iters)
-    ctes = list(ctes)
-    ctes.append(f"af AS (\n{final})")
-    ctes.append(
-        "qe AS (SELECT CAST(embedding AS DOUBLE[]) AS q"
-        " FROM embeddings WHERE vec_id = 0)"
-    )
-    ctes.append(f"""cs AS (
-  SELECT c.cluster,
-         round(list_inner_product(c.c, qe.q)
-               / (sqrt(list_inner_product(c.c, c.c))
-                  * sqrt(list_inner_product(qe.q, qe.q))), 4) AS csim
-  FROM c{iters} c CROSS JOIN qe)""")
-    ctes.append(
-        f"top_c AS (SELECT cluster FROM cs ORDER BY csim DESC, cluster"
-        f" LIMIT {nprobe})"
-    )
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f"""
-SELECT e.vec_id, af.cluster, {_COS.format(a="e.embedding", b="qe.q")} AS sim
-FROM embeddings e
-JOIN af ON af.vec_id = e.vec_id
-JOIN top_c USING (cluster)
-CROSS JOIN qe
-WHERE e.vec_id <> 0
-ORDER BY sim DESC, e.vec_id LIMIT {k}"""
-    )
-
-
 def _ivf_sampled_sql(
     k: int = 5,
     nprobe: int = 2,
@@ -683,8 +619,9 @@ def _ivf_sampled_sql(
     sample rank, Lloyd's runs over the SAMPLE only (the c0 seeds are the
     md5-top-k sample rows by construction of the rank key), the FULL
     corpus is assigned against the final centroids with the same 6-dp
-    d2 / cluster-tie-break argmin, and the serving tail matches
-    _ivf_trained_sql."""
+    d2 / cluster-tie-break argmin, and the serving tail ranks centroids
+    by 4-dp cosine (cluster tie-break), keeps the top ``nprobe`` cells
+    and exact-reranks their members."""
     s = n_centroids * train_per_cell
     ctes = [
         "eall AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb"
@@ -797,325 +734,6 @@ bm_agg AS (
 bm AS (SELECT doc_id, round({total}, 4) AS bm25 FROM bm_agg)
 SELECT doc_id, bm25 FROM bm ORDER BY bm25 DESC, doc_id LIMIT {k}
 """
-
-
-def _pq_ctes(
-    m: int = 4,
-    k: int = 8,
-    iters: int = 2,
-    dim: int = 64,
-    source: str = "embeddings",
-) -> list[str]:
-    """Per-subspace Lloyd's chains for the PQ oracles (operators/ann.py
-    _pq_codebooks): one tagged _kmeans_ctes chain per dim/m-wide slice,
-    plus af_s{s} = that subspace's final code assignment."""
-    d = dim // m
-    ctes: list[str] = []
-    for s in range(m):
-        lo, hi = s * d + 1, (s + 1) * d
-        sub, final = _kmeans_ctes(
-            k,
-            iters,
-            tag=f"_s{s}",
-            emb_sql=f"CAST(embedding AS DOUBLE[])[{lo}:{hi}]",
-            source=source,
-        )
-        ctes += sub
-        ctes.append(f"af_s{s} AS (\n{final})")
-    return ctes
-
-
-def _pq_encode_sql(m: int = 4, k: int = 8, iters: int = 2) -> str:
-    ctes = _pq_ctes(m, k, iters)
-    selects = [
-        f"SELECT vec_id, {s} AS subspace, cluster AS code FROM af_s{s}"
-        for s in range(m)
-    ]
-    return "WITH " + ",\n".join(ctes) + "\n" + "\nUNION ALL\n".join(selects)
-
-
-def _pq_adc_parts(
-    qid: int, topk: int, m: int, k: int, iters: int
-) -> tuple[list[str], str]:
-    """ADC oracle parts: distance table per subspace (code -> floor-scaled
-    BIGINT micro-units, integer-exact cross-engine), summed over the m code
-    columns per vector. Returns (ctes, top-k select)."""
-    ctes = _pq_ctes(m, k, iters)
-    for s in range(m):
-        ctes.append(f"q_s{s} AS (SELECT emb FROM e_s{s} WHERE vec_id = {qid})")
-        ctes.append(f"""dtab_s{s} AS (
-  SELECT c.cluster AS code,
-         CAST(floor((list_inner_product(q.emb, q.emb)
-                     - 2 * list_inner_product(q.emb, c.c)
-                     + list_inner_product(c.c, c.c)) * 1000000.0 + 0.5)
-              AS BIGINT) AS d2_micro
-  FROM c{iters}_s{s} c CROSS JOIN q_s{s} q)""")
-    union = "\nUNION ALL\n".join(
-        f"SELECT a.vec_id, d.d2_micro FROM af_s{s} a"
-        f" JOIN dtab_s{s} d ON a.cluster = d.code WHERE a.vec_id <> {qid}"
-        for s in range(m)
-    )
-    select = f"""SELECT vec_id, CAST(sum(d2_micro) AS BIGINT) AS adc_d2_micro FROM (
-{union}
-) GROUP BY vec_id ORDER BY adc_d2_micro, vec_id LIMIT {topk}"""
-    return ctes, select
-
-
-def _pq_topk_sql(
-    qid: int = 0, topk: int = 10, m: int = 4, k: int = 8, iters: int = 2
-) -> str:
-    ctes, select = _pq_adc_parts(qid, topk, m, k, iters)
-    return "WITH " + ",\n".join(ctes) + "\n" + select
-
-
-def _pq_rerank_sql(
-    qid: int = 0,
-    topk: int = 10,
-    candidates: int = 100,
-    m: int = 4,
-    k: int = 8,
-    iters: int = 2,
-) -> str:
-    """Two-stage oracle (operators/ann.py knn_pq_rerank): ADC top-C
-    candidates, exact squared-L2 rerank in the same micro-unit integers."""
-    ctes, select = _pq_adc_parts(qid, candidates, m, k, iters)
-    ctes.append(f"cand AS (\n{select})")
-    ctes.append(
-        "ef AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings)"
-    )
-    ctes.append(f"qf AS (SELECT emb FROM ef WHERE vec_id = {qid})")
-    return (
-        "WITH " + ",\n".join(ctes) + f"""
-SELECT ef.vec_id,
-       CAST(floor((list_inner_product(ef.emb, ef.emb)
-                   - 2 * list_inner_product(ef.emb, qf.emb)
-                   + list_inner_product(qf.emb, qf.emb)) * 1000000.0 + 0.5)
-            AS BIGINT) AS d2_micro
-FROM ef JOIN cand USING (vec_id) CROSS JOIN qf
-ORDER BY d2_micro, vec_id LIMIT {topk}
-"""
-    )
-
-
-def _ivfpq_sql(
-    qid: int = 0,
-    topk: int = 10,
-    nprobe: int = 2,
-    candidates: int = 50,
-    n_centroids: int = 8,
-    ivf_iters: int = 2,
-    m: int = 4,
-    k: int = 8,
-    pq_iters: int = 2,
-) -> str:
-    """Composed residual-IVFADC oracle (operators/ann.py
-    ann_ivfpq_topk): the trained-IVF chain ranks centroids and prunes
-    to nprobe cells; codebooks train on the RESIDUALS (vector − its
-    cell centroid — the resid CTE mirrors _residual_frame's exact
-    elementwise subtraction); per-(probed cell, subspace) ADC tables
-    score the query's residual against each cell's centroid; candidates
-    = residual-ADC top-C within the probed cells; exact micro-unit
-    rerank on the RAW vectors. Arithmetic identical to the Spark path
-    stage for stage."""
-    d = 64 // m
-    ctes, final = _kmeans_ctes(n_centroids, ivf_iters)
-    ctes = list(ctes)
-    ctes.append(f"af AS (\n{final})")
-    ctes.append(
-        f"qe AS (SELECT CAST(embedding AS DOUBLE[]) AS q"
-        f" FROM embeddings WHERE vec_id = {qid})"
-    )
-    ctes.append(f"""cs AS (
-  SELECT c.cluster,
-         round(list_inner_product(c.c, qe.q)
-               / (sqrt(list_inner_product(c.c, c.c))
-                  * sqrt(list_inner_product(qe.q, qe.q))), 4) AS csim
-  FROM c{ivf_iters} c CROSS JOIN qe)""")
-    ctes.append(
-        f"top_c AS (SELECT cluster FROM cs ORDER BY csim DESC, cluster"
-        f" LIMIT {nprobe})"
-    )
-    ctes.append(f"""resid AS (
-  SELECT e.vec_id,
-         list_transform(generate_series(1, len(e.emb)),
-                        i -> e.emb[i] - cc.c[i]) AS embedding
-  FROM e JOIN af USING (vec_id)
-  JOIN c{ivf_iters} cc ON af.cluster = cc.cluster)""")
-    ctes += _pq_ctes(m, k, pq_iters, source="resid")
-    ctes.append(f"""q_res AS (
-  SELECT tc.cluster,
-         list_transform(generate_series(1, len(qe.q)),
-                        i -> qe.q[i] - cc.c[i]) AS qr
-  FROM top_c tc JOIN c{ivf_iters} cc USING (cluster) CROSS JOIN qe)""")
-    for s in range(m):
-        lo, hi = s * d + 1, (s + 1) * d
-        ctes.append(f"""dtab_s{s} AS (
-  SELECT q.cluster, cb.cluster AS code,
-         CAST(floor((list_inner_product(q.qs, q.qs)
-                     - 2 * list_inner_product(q.qs, cb.c)
-                     + list_inner_product(cb.c, cb.c)) * 1000000.0 + 0.5)
-              AS BIGINT) AS d2_micro
-  FROM (SELECT cluster, qr[{lo}:{hi}] AS qs FROM q_res) q
-  CROSS JOIN c{pq_iters}_s{s} cb)""")
-    union = "\nUNION ALL\n".join(
-        f"SELECT a.vec_id, d.d2_micro FROM af_s{s} a"
-        f" JOIN af USING (vec_id)"
-        f" JOIN dtab_s{s} d ON d.cluster = af.cluster AND d.code = a.cluster"
-        f" WHERE a.vec_id <> {qid}"
-        for s in range(m)
-    )
-    ctes.append(f"""cand AS (
-  SELECT vec_id FROM (
-    SELECT vec_id, CAST(sum(d2_micro) AS BIGINT) AS adc FROM (
-{union}
-    ) GROUP BY vec_id ORDER BY adc, vec_id LIMIT {candidates}))""")
-    ctes.append(
-        "ef AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings)"
-    )
-    ctes.append(f"qf AS (SELECT emb FROM ef WHERE vec_id = {qid})")
-    return (
-        "WITH " + ",\n".join(ctes) + f"""
-SELECT ef.vec_id,
-       CAST(floor((list_inner_product(ef.emb, ef.emb)
-                   - 2 * list_inner_product(ef.emb, qf.emb)
-                   + list_inner_product(qf.emb, qf.emb)) * 1000000.0 + 0.5)
-            AS BIGINT) AS d2_micro
-FROM ef JOIN cand USING (vec_id) CROSS JOIN qf
-ORDER BY d2_micro, vec_id LIMIT {topk}
-"""
-    )
-
-
-def _ivfpq_sampled_sql(
-    qid: int = 0,
-    topk: int = 10,
-    nprobe: int = 2,
-    candidates: int = 50,
-    n_centroids: int = 8,
-    ivf_iters: int = 2,
-    m: int = 4,
-    k: int = 8,
-    pq_iters: int = 2,
-    train_per_cell: int = 32,
-) -> str:
-    """Fully sample-trained IVFADC twin (operators/ann.py
-    ann_ivfpq_sampled_topk): coarse Lloyd's over the rank-keyed md5-top-s
-    sample + one full-corpus frozen-centroid assignment (afs — the
-    ann_ivf_sampled_topk chain), residual codebooks trained on the SAME
-    sample's residuals rank-keyed again, full-corpus codes from a
-    frozen-codebook per-subspace argmin (code_s*), then the proven ADC +
-    exact-micro-rerank tail with every reference swapped to the sampled
-    chain's CTEs. Stage-for-stage identical arithmetic to the Spark
-    path."""
-    d = 64 // m
-    s = n_centroids * train_per_cell
-    ctes = [
-        "eall AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb"
-        " FROM embeddings)",
-        f"samp AS (SELECT vec_id, emb, md5(CAST(vec_id AS VARCHAR)) AS md"
-        f" FROM eall ORDER BY md, vec_id LIMIT {s})",
-        "samp_rk AS (SELECT vec_id, CAST(row_number() OVER"
-        " (ORDER BY md, vec_id) - 1 AS BIGINT) AS rk FROM samp)",
-        "train AS (SELECT r.rk AS vec_id, sa.emb FROM samp sa"
-        " JOIN samp_rk r USING (vec_id))",
-    ]
-    kc, _final = _kmeans_ctes(
-        n_centroids, ivf_iters, tag="s", emb_sql="emb", source="train"
-    )
-    ctes += kc
-    dist_full = (
-        "round(list_inner_product(eall.emb, eall.emb)"
-        " - 2 * list_inner_product(eall.emb, c.c)"
-        " + list_inner_product(c.c, c.c), 6)"
-    )
-    ctes.append(f"""afs AS (
-  SELECT vec_id, cluster FROM (
-    SELECT eall.vec_id, c.cluster,
-           row_number() OVER (PARTITION BY eall.vec_id
-                              ORDER BY {dist_full}, c.cluster) AS rn
-    FROM eall CROSS JOIN c{ivf_iters}s c) WHERE rn = 1)""")
-    ctes.append(
-        f"qe AS (SELECT CAST(embedding AS DOUBLE[]) AS q"
-        f" FROM embeddings WHERE vec_id = {qid})"
-    )
-    ctes.append(f"""cs AS (
-  SELECT c.cluster,
-         round(list_inner_product(c.c, qe.q)
-               / (sqrt(list_inner_product(c.c, c.c))
-                  * sqrt(list_inner_product(qe.q, qe.q))), 4) AS csim
-  FROM c{ivf_iters}s c CROSS JOIN qe)""")
-    ctes.append(
-        f"top_c AS (SELECT cluster FROM cs ORDER BY csim DESC, cluster"
-        f" LIMIT {nprobe})"
-    )
-    ctes.append(f"""resid AS (
-  SELECT e2.vec_id,
-         list_transform(generate_series(1, len(e2.emb)),
-                        i -> e2.emb[i] - cc.c[i]) AS embedding
-  FROM eall e2 JOIN afs ON afs.vec_id = e2.vec_id
-  JOIN c{ivf_iters}s cc ON afs.cluster = cc.cluster)""")
-    ctes.append(
-        "samp_resid AS (SELECT r.rk AS vec_id, d.embedding"
-        " FROM resid d JOIN samp_rk r USING (vec_id))"
-    )
-    ctes += _pq_ctes(m, k, pq_iters, source="samp_resid")
-    for sp in range(m):
-        lo, hi = sp * d + 1, (sp + 1) * d
-        dist_cb = (
-            "round(list_inner_product(r.rs, r.rs)"
-            " - 2 * list_inner_product(r.rs, cb.c)"
-            " + list_inner_product(cb.c, cb.c), 6)"
-        )
-        ctes.append(f"""code_s{sp} AS (
-  SELECT vec_id, cluster AS code FROM (
-    SELECT r.vec_id, cb.cluster,
-           row_number() OVER (PARTITION BY r.vec_id
-                              ORDER BY {dist_cb}, cb.cluster) AS rn
-    FROM (SELECT vec_id, CAST(embedding AS DOUBLE[])[{lo}:{hi}] AS rs
-          FROM resid) r
-    CROSS JOIN c{pq_iters}_s{sp} cb) WHERE rn = 1)""")
-    ctes.append(f"""q_res AS (
-  SELECT tc.cluster,
-         list_transform(generate_series(1, len(qe.q)),
-                        i -> qe.q[i] - cc.c[i]) AS qr
-  FROM top_c tc JOIN c{ivf_iters}s cc USING (cluster) CROSS JOIN qe)""")
-    for sp in range(m):
-        lo, hi = sp * d + 1, (sp + 1) * d
-        ctes.append(f"""dtab_s{sp} AS (
-  SELECT q.cluster, cb.cluster AS code,
-         CAST(floor((list_inner_product(q.qs, q.qs)
-                     - 2 * list_inner_product(q.qs, cb.c)
-                     + list_inner_product(cb.c, cb.c)) * 1000000.0 + 0.5)
-              AS BIGINT) AS d2_micro
-  FROM (SELECT cluster, qr[{lo}:{hi}] AS qs FROM q_res) q
-  CROSS JOIN c{pq_iters}_s{sp} cb)""")
-    union = "\nUNION ALL\n".join(
-        f"SELECT c.vec_id, d.d2_micro FROM code_s{sp} c"
-        f" JOIN afs ON afs.vec_id = c.vec_id"
-        f" JOIN dtab_s{sp} d ON d.cluster = afs.cluster AND d.code = c.code"
-        f" WHERE c.vec_id <> {qid}"
-        for sp in range(m)
-    )
-    ctes.append(f"""cand AS (
-  SELECT vec_id FROM (
-    SELECT vec_id, CAST(sum(d2_micro) AS BIGINT) AS adc FROM (
-{union}
-    ) GROUP BY vec_id ORDER BY adc, vec_id LIMIT {candidates}))""")
-    ctes.append(
-        "ef AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings)"
-    )
-    ctes.append(f"qf AS (SELECT emb FROM ef WHERE vec_id = {qid})")
-    return (
-        "WITH " + ",\n".join(ctes) + f"""
-SELECT ef.vec_id,
-       CAST(floor((list_inner_product(ef.emb, ef.emb)
-                   - 2 * list_inner_product(ef.emb, qf.emb)
-                   + list_inner_product(qf.emb, qf.emb)) * 1000000.0 + 0.5)
-            AS BIGINT) AS d2_micro
-FROM ef JOIN cand USING (vec_id) CROSS JOIN qf
-ORDER BY d2_micro, vec_id LIMIT {topk}
-"""
-    )
 
 
 def _cell_join_ctes(iters: int = 2, source: str = "embeddings") -> list:
@@ -2393,8 +2011,6 @@ LIMIT 5
 """
 
 
-
-
 # BM25 CTE chain shared by bm25_topk / hybrid_rrf_topk (operators/hybrid.py).
 # Every fractional literal is ::DOUBLE so DuckDB never takes its exact-DECIMAL
 # arithmetic path (e.g. decimal tf*2.2 re-rounded to double differs from
@@ -2652,27 +2268,6 @@ SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
        {cos_ab} AS cosine,
        round(list_distance(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), 4) AS l2_dist
 FROM embeddings a JOIN embeddings b ON b.vec_id = a.vec_id + 1
-""",
-        "filter_by_lang": """
-SELECT doc_id, lang, source, n_chars FROM documents
-WHERE lang = 'es' ORDER BY doc_id LIMIT 10
-""",
-        "point_lookup": """
-SELECT doc_id, lang, source, n_chars FROM documents WHERE doc_id = 42
-""",
-        # The DSL trees render through where_to_sql/where_document_to_sql
-        # — the SAME objects the Spark key compiles (one filter
-        # definition, two engines; the r9 shared-constants discipline).
-        "docs_where_dsl_filter": f"""
-SELECT doc_id, lang, source, n_chars FROM documents
-WHERE {_wdsl.where_to_sql(_roll.WHERE_DSL_DEMO)}
-  AND {_wdsl.where_document_to_sql(_roll.WHERE_DOC_DEMO, "text")}
-ORDER BY doc_id LIMIT 50
-""",
-        "agg_job_totals": """
-SELECT count(DISTINCT source) AS indexed_sources, count(*) AS total_docs,
-       CAST(sum(n_chars) AS BIGINT) AS total_chars
-FROM documents
 """,
         "chunk_fixed_words": """
 WITH w AS (
@@ -3251,9 +2846,6 @@ WHERE d.doc_id IN (SELECT doc_id FROM keep)
 """,
         "cluster_kmeans": _kmeans_sql(),
         "semdedup_prune": _semdedup_sql(),
-        "pq_encode_rows": _pq_encode_sql(),
-        "knn_pq_topk": _pq_topk_sql(),
-        "knn_pq_rerank": _pq_rerank_sql(),
         "doc_fingerprint": """
 SELECT doc_id, md5(text) AS content_hash,
        md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')) AS vocab_hash
@@ -4023,35 +3615,7 @@ SELECT user_id, event_id AS last_event_id, event_type, value FROM (
     FROM events
 ) WHERE rn = 1
 """,
-        "ann_ivf_topk": f"""
-WITH ex AS (
-    SELECT e.vec_id, e.label, t.i AS pos, CAST(e.embedding[t.i] AS DOUBLE) AS v
-    FROM embeddings e,
-         LATERAL (SELECT unnest(generate_series(1, len(e.embedding))) AS i) t
-), q AS (
-    SELECT pos, v AS qv FROM ex WHERE vec_id = 0
-), cent AS (
-    SELECT label, pos, avg(v) AS c FROM ex GROUP BY 1, 2
-), cscore AS (
-    SELECT cent.label,
-           round(sum(cent.c * q.qv)
-                 / (sqrt(sum(cent.c * cent.c)) * sqrt(sum(q.qv * q.qv))), 4) AS csim_r
-    FROM cent JOIN q ON cent.pos = q.pos GROUP BY cent.label
-), top_labels AS (
-    SELECT label FROM cscore ORDER BY csim_r DESC, label LIMIT 2
-), qe AS (
-    SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0
-)
-SELECT e.vec_id, e.label, {_COS.format(a="e.embedding", b="qe.q_emb")} AS sim
-FROM embeddings e JOIN top_labels USING (label) CROSS JOIN qe
-WHERE e.vec_id <> 0
-ORDER BY sim DESC, e.vec_id
-LIMIT 5
-""",
-        "ann_ivf_trained_topk": _ivf_trained_sql(),
         "ann_ivf_sampled_topk": _ivf_sampled_sql(),
-        "ann_ivfpq_topk": _ivfpq_sql(),
-        "ann_ivfpq_sampled_topk": _ivfpq_sampled_sql(),
         "rp_lsh_band_rows": f"""
 WITH {_RP_BANDS_CTE}
 SELECT vec_id, band, band_key FROM rp_bands
@@ -4331,12 +3895,6 @@ SELECT e.vec_id, {_COS.format(a="e.embedding", b="qe.q_emb")} AS sim
 FROM embeddings e JOIN fcand USING (vec_id) CROSS JOIN qe
 ORDER BY sim DESC, e.vec_id LIMIT 10
 """,
-        # Skew guard mirror (ann.py:cap_bucket_members): zero-norm
-        # embeddings are dropped from the band table BEFORE the cap
-        # (ADVICE r8 — they must not waste md5-top-cap slots), then the
-        # neighbor side keeps only the md5-top-cap members per bucket.
-        # Cap and band-bit width interpolate the ann module constants so
-        # Spark and oracle share one source of truth (ADVICE r8).
         "knn_join_ivf_topk": _knn_join_ivf_sql(),
         "ann_graph_topk": _ann_graph_sql(),
         "ann_graph_recursive_topk": _ann_graph_recursive_sql(),
@@ -4346,44 +3904,6 @@ ORDER BY sim DESC, e.vec_id LIMIT 10
         "ann_graph_tombstone_topk": _ann_graph_tomb_sql(),
         "ann_graph_vacuumed_topk": _ann_graph_vac_sql(),
         "ann_graph_filtered_topk": _ann_graph_filtered_sql(),
-        "knn_join_topk": f"""
-WITH {_RP_BANDS_CTE},
-nz_bands AS (
-    SELECT b.band, b.band_key, b.vec_id
-    FROM rp_bands b JOIN embeddings e ON e.vec_id = b.vec_id
-    WHERE list_inner_product(CAST(e.embedding AS DOUBLE[]),
-                             CAST(e.embedding AS DOUBLE[])) > 0
-),
-capped AS (
-    SELECT band, band_key, vec_id FROM (
-        SELECT band, band_key, vec_id,
-               row_number() OVER (
-                   PARTITION BY band, band_key
-                   ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS m
-        FROM nz_bands
-    ) WHERE m <= {_ann.KNN_JOIN_BUCKET_CAP}
-),
-cand AS (
-    SELECT DISTINCT a.vec_id AS src, b.vec_id AS nbr
-    FROM nz_bands a JOIN capped b USING (band, band_key)
-    WHERE a.vec_id <> b.vec_id
-),
-scored AS (
-    SELECT c.src, c.nbr,
-           {_COS.format(a="es.embedding", b="en.embedding")} AS sim
-    FROM cand c
-    JOIN embeddings es ON es.vec_id = c.src
-    JOIN embeddings en ON en.vec_id = c.nbr
-),
-ranked AS (
-    SELECT src, nbr, sim,
-           row_number() OVER (
-               PARTITION BY src ORDER BY sim DESC, nbr) AS rank
-    FROM scored
-)
-SELECT src, nbr, sim, CAST(rank AS INTEGER) AS rank
-FROM ranked WHERE rank <= 3
-""",
         "bm25_topk": f"""
 WITH {_BM25_CTE}
 SELECT doc_id, bm25 FROM bm ORDER BY bm25 DESC, doc_id LIMIT 10

@@ -192,10 +192,17 @@ def _id_list(ids) -> list:
     return ids
 
 
-def _require_int(name: str, val, lo: int) -> None:
-    """Call-time check of a count argument: an int (not a bool) >= lo."""
-    if isinstance(val, bool) or not isinstance(val, int) or val < lo:
-        raise ValueError(f"{name} must be an int >= {lo}, got {val!r}")
+def _require_int(name: str, val, lo: int, hi: "int | None" = None) -> None:
+    """Call-time check of a count argument: an int (not a bool) in
+    [lo, hi] (no upper bound when ``hi`` is None)."""
+    if (
+        isinstance(val, bool)
+        or not isinstance(val, int)
+        or val < lo
+        or (hi is not None and val > hi)
+    ):
+        bound = f">= {lo}" if hi is None else f"in [{lo}, {hi}]"
+        raise ValueError(f"{name} must be an int {bound}, got {val!r}")
 
 
 class Collection:
@@ -1101,9 +1108,23 @@ class Collection:
                 f"{r['vec_id']} — shard into another collection"
             )
 
-        dim = b.select(F.size("emb").alias("d")).agg(
-            F.min("d").alias("lo"), F.max("d").alias("hi")
+        # one aggregate checks the dims and finds a NULL or non-finite
+        # embedding (such a vector has no cosine and breaks the graph
+        # sidecar's centroid literals), before anything commits
+        bad_emb = F.col("emb").isNull() | F.exists(
+            "emb",
+            lambda x: x.isNull() | F.isnan(x) | (F.abs(x) == float("inf")),
+        )
+        dim = b.agg(
+            F.min(F.size("emb")).alias("lo"),
+            F.max(F.size("emb")).alias("hi"),
+            F.min(F.when(bad_emb, F.col("id"))).alias("bad_id"),
         ).head()
+        if dim["bad_id"] is not None:
+            raise ValueError(
+                f"embedding of id {dim['bad_id']!r} is NULL or holds a NULL, "
+                f"NaN or infinite element"
+            )
         if dim["lo"] != dim["hi"]:
             raise ValueError(f"mixed embedding dims {dim['lo']}..{dim['hi']}")
         meta_schema = ", ".join(
@@ -1777,6 +1798,8 @@ class Collection:
         cur, info = self._require()
         if offset is not None and after_id is not None:
             raise ValueError("pass offset OR after_id, not both")
+        if after_id is not None and not isinstance(after_id, str):
+            raise ValueError(f"after_id must be a str id, got {after_id!r}")
         for name, val in (("limit", limit), ("offset", offset)):
             if val is not None:
                 _require_int(name, val, 0)
@@ -1899,6 +1922,14 @@ class Collection:
         if unknown:
             raise ValueError(f"include: unknown items {sorted(unknown)}")
         _require_int("n_results", n_results, 1)
+        _require_int("multiprobe_hamming", multiprobe_hamming, 0, 1)
+        _require_int("prefilter_threshold", prefilter_threshold, 0)
+        for name, val in (
+            ("graph_beam", graph_beam),
+            ("graph_rounds", graph_rounds),
+        ):
+            if val is not None:
+                _require_int(name, val, 1)
         if (query_embeddings is None) == (query_texts is None):
             raise ValueError(
                 "pass exactly one of query_embeddings / query_texts"

@@ -17,7 +17,7 @@ stale signatures/indexes. stat() over a few dozen files is microseconds,
 so the fingerprint is recomputed on every lookup rather than trusted.
 
 The same fingerprint feeds the ON-DISK index tags (``index_root``):
-a PQ/RP/IVF index built under /tmp in a previous driver run against
+an RP/IVF/graph index built under /tmp in a previous driver run against
 older testdata must not be served against regenerated data, so the
 directory tag hashes the fingerprint alongside the parameters.
 """
@@ -161,7 +161,7 @@ def component_df(spark: SparkSession, ver_dir: str, comp: str, schema: str):
 
 def index_root(name: str, sf_dir: str, *params: Any) -> str:
     """Deterministic on-disk root for a train-once/serve-many index
-    (PQ codes, RP-LSH band table, trained-IVF assignment): a tmpdir
+    (RP-LSH band table, trained-IVF assignment, graph sidecar): a tmpdir
     path tagged by md5(name | sf_dir | params | dataset fingerprint).
     Regenerated testdata changes the fingerprint, hence the tag, hence
     the directory — the old index is simply never consulted again."""

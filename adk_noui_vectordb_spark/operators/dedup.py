@@ -213,7 +213,7 @@ def _minhash_wide_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The signature kernel is the expensive stage of every minhash consumer
 # (signature/band rows, candidate pairs, Jaccard estimate, connected
 # components); at 100 TB the lifecycle is encode-once/serve-many — write
-# the signature table to parquet and join from it (the build_pq_index
+# the signature table to parquet and join from it (the build_rp_index
 # pattern, documented in SCALE.md) — and this memo is the exact
 # in-session equivalent: the first caller materializes via
 # localCheckpoint, everyone else reuses the materialized blocks.
@@ -287,7 +287,7 @@ def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     minhash Arrow kernel TWICE (measured ~0.8 s per run at sf0.1 — it was
     most of this query's cost). At 100 TB the same move is writing the
     signature table to parquet once and serving joins from it (the
-    build_pq_index lifecycle); the checkpointed memo is the in-session
+    build_rp_index lifecycle); the checkpointed memo is the in-session
     equivalent, shared by every minhash consumer. The band projection off
     the checkpoint (md5 over 4 ints per band) is cheap enough to run per
     join side.
@@ -786,9 +786,9 @@ def update_containment_index(
     )
 
 
-# Drift thresholds for the frozen-dfs admit path (the IVF family's
+# Drift thresholds for the frozen-dfs admit path (the graph index's
 # discipline: DRIFT_RESIDUAL_THRESHOLD=1.5 growth / DRIFT_SKEW_THRESHOLD
-# =3.0 mass, ann.py:1249): probes serve from prefixes ranked by
+# =3.0 mass, graph_ann.py): probes serve from prefixes ranked by
 # BUILD-time dfs, so admitted mass fattens candidates invisibly — the
 # metrics below make it visible and point at the rebuild.
 CONTAIN_DRIFT_FANOUT_THRESHOLD = 1.5  # mean prefix-row TRUE df vs build
@@ -889,7 +889,7 @@ def rebuild_containment_index(
     spark: SparkSession, sf_dir: str, tag: str = ""
 ) -> str:
     """Re-derive the frozen coarse structure over the index's OWN docs
-    — the ``rebalance_ivf_index`` symmetry for the containment family:
+    — the ``rebuild_graph_index`` symmetry for the containment family:
     ``grams/``+``sizes/`` are the corpus of record after admits, so
     fresh dfs come from one groupBy over grams, prefixes re-rank under
     the fresh dfs, and the commit rewrites ``post/`` and ``dfs/`` in
@@ -1814,7 +1814,7 @@ def dedup_repeated_ngrams(
     dup_per_million = round(n_dup/n_ngrams * 1e6) computed in EXACT
     integer arithmetic — ``(2*a*1e6 + b) div (2*b)`` is floor(a*1e6/b
     + 1/2) with no float division anywhere, so both engines produce the
-    identical bigint (the knn_pq micro-unit discipline applied to a
+    identical bigint (the RP-LSH micro-unit discipline applied to a
     ratio; a float `round(a/b, 4)` would hit cross-engine .xxxx5 ties
     whenever b divides 2*10^4).
 
@@ -2009,7 +2009,7 @@ def dup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- persisted MinHash signature index (r9) -----------------------------
 #
-# The dedup analog of the RP/IVF/PQ serving story: at 100 TB you sign the
+# The dedup analog of the RP/IVF serving story: at 100 TB you sign the
 # corpus ONCE, keep the signatures + LSH band table on disk under the
 # shared versioned-commit lifecycle (sources/versioning.py), and every
 # ingest batch dedups AGAINST the index — never re-signing the corpus.
@@ -2085,7 +2085,7 @@ def build_minhash_index(spark: SparkSession, sf_dir: str) -> str:
     pairs are literal partition filters) and ``sigs/sbucket=*/`` (the
     wide 16-minhash rows the verification stage and the replace path's
     reverse derivation read). Atomic versioned commit, same lifecycle
-    as the text/RP/IVF/PQ indexes."""
+    as the text/RP indexes."""
     import os
     import shutil
 
@@ -2247,7 +2247,7 @@ def delete_from_minhash_index(
     auto_compact_threshold: int = 16,
 ) -> str:
     """Targeted document deletion from the MinHash signature index —
-    completing the delete family (text/RP/IVF/PQ/minhash all deletable;
+    completing the delete family (text/RP/graph/minhash all deletable;
     the retraction half of the reference's upsert, indexing_agent.py:
     332-361). O(deleted docs + their partitions): victims' stale band
     rows are re-derived from their STORED signatures (banding is a pure
@@ -2683,8 +2683,8 @@ def fsck_containment_index(
         out.append(
             ("prefix_flags_exact_bound", pf_bad == 0, f"bad_docs={pf_bad}")
         )
-        # drift advisory (VERDICT r15 next #3 — the fsck_ivf_index
-        # centroid_drift discipline: a drifted index is not corrupt,
+        # drift advisory (VERDICT r15 next #3 — the fsck_graph_index
+        # coarse_drift discipline: a drifted index is not corrupt,
         # the row's detail says what to run)
         m = containment_drift_metrics(spark, sf_dir, tag)
         if m["drifted"] is None:

@@ -763,7 +763,7 @@ def late_interaction_where_topk_served(
     functions/where_dsl.py) instead of ``late_interaction_filtered_
     topk_served``'s single-field lang equality, completing the where-DSL
     symmetry the vector families already have (``knn_where_dsl_topk``,
-    ``docs_where_dsl_filter``, the collection facade's where= path,
+    the collection facade's where= path,
     the graph ACORN where tree). Same serving plan: per-token band probe (static partition
     pruning), the compiled predicate pushed into a narrow column-pruned
     metadata projection, doc_id semi-join into the exact rerank. The
@@ -1327,7 +1327,7 @@ def embed_topvar_project(
     highest-variance dimensions (variance-ranked feature selection, the
     cheap cousin of PCA that needs no rotation matrix) and project every
     vector onto them — the storage/scan shape for a coarse first-stage
-    filter in two-stage retrieval (the int8/PQ family's narrow twin).
+    filter in two-stage retrieval.
 
     The selection ranks by the FLOORED micro-variance with position
     tie-break (deterministic cross-engine); the projection itself is
@@ -1341,8 +1341,8 @@ def embed_topvar_project(
 
     Output shape: scalar rows ``(vec_id, rank, component)`` — NOT an
     ``array<double>`` column.  The driver's pandas canonicalizer cannot
-    sort list cells (the catalogued r2 ``embed_quantize_int8`` crash,
-    repeated here in r7); every registry output schema is now pinned
+    sort list cells (a crash first catalogued in r2 and repeated here
+    in r7); every registry output schema is now pinned
     flat by ``tests/test_oracle_parity.py::test_no_nested_output_types``.
     Consumers wanting the packed vector regroup with
     ``groupBy("vec_id").agg(array_sort(collect_list(struct(rank,

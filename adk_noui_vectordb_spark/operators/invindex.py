@@ -4,7 +4,7 @@ The reference serves every query from a persisted ChromaDB collection on
 disk (reference: coding_agent/tools/vector_search_tool.py:33-79 queries
 the index that indexing_agent.py built earlier) — build-once/serve-many
 is its core lifecycle. Round 7 made that lifecycle real for the ANN side
-(``build_rp_index`` / ``build_ivf_index``, operators/ann.py); this module
+(``build_rp_index`` / ``build_ivf_index_sampled``, operators/ann.py); this module
 is the LEXICAL twin: ``operators/hybrid.py`` ranks BM25 by re-scanning the
 corpus per query, which is the right shape for one-off analytics but not
 for a query service over 100 TB. Here the corpus is scanned ONCE into an

@@ -14,8 +14,9 @@ Spark-first plan shape (SURVEY.md section 3.2):
 
 ``TakeOrderedAndProject`` keeps a k-row heap per partition and merges heaps
 on the driver: per-partition O(n log k), no global sort, no shuffle. At
-100 TB that is the optimal exact plan; the approximate path (LSH / IVF in
-operators/ann.py) prunes candidates before this same kernel.
+100 TB that is the optimal exact plan; the approximate paths
+(operators/ann.py, operators/graph_ann.py) prune candidates first and
+then rerank them exactly under the same rounding and tie-break.
 
 Determinism: ranking uses the ROUNDED similarity (4 dp) with ``vec_id`` as
 tie-break, so top-k membership is stable across engines/float orderings —

@@ -2,8 +2,8 @@
 
 Shared by the Collection (api/collection.py) and every build-once/
 serve-many index in the repo (the lexical inverted index, the MinHash
-and containment indexes, the RP-LSH band table, the IVF/PQ/IVFPQ and
-binary-IVF indexes, the late-interaction index and the navigable graph
+and containment indexes, the RP-LSH band table, the sample-trained IVF
+index, the late-interaction index and the navigable graph
 in operators/): an index whose update rewrites SEVERAL parquet
 components (postings + termstats + stats; bands + vecs; assign + vecs)
 must never let a reader observe them out of sync. POSIX offers no

@@ -63,10 +63,7 @@ BENCH_KEYS = [
     "lm_perplexity_score",
     "cluster_kmeans",
     "semdedup_prune",
-    "knn_pq_rerank",
     "ann_rp_lsh_topk",
-    "ann_ivf_trained_topk",
-    "ann_ivfpq_topk",
     "knn_join_ivf_topk",
     "ann_graph_topk",
     "ann_graph_batch_topk",
@@ -103,7 +100,6 @@ BENCH_KEYS = [
     "embed_topvar_project",
     "normalize_text_corpus",
     "hybrid_rrf_served_topk",
-    "knn_join_topk",
     # r10c: ChromaDB-compatible Collection facade + full where DSL
     "collection_query_topk",
     "collection_query_graph_topk",
@@ -112,7 +108,6 @@ BENCH_KEYS = [
     "fuzzy_topk_served",
     # r11: sample-trained IVF serving, keyset page
     "ann_ivf_sampled_topk",
-    "ann_ivfpq_sampled_topk",
     "collection_get_page2",
 ]
 

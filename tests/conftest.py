@@ -26,7 +26,6 @@ SLOW_TESTS = {
     "test_compact_text_index_preserves_content",
     "test_containment_index_admit_and_replace",
     "test_delete_by_ids_where_and_all",
-    "test_delete_from_ivf_and_pq_indexes",
     "test_delete_from_rp_index_retracts_bands_and_vecs",
     "test_delete_from_text_index_retracts_everything",
     "test_facade_filtered_recall_on_clustered_fixture",
@@ -45,19 +44,12 @@ SLOW_TESTS = {
     "test_graph_vacuum_lifecycle",
     "test_graph_vacuum_scratch_is_version_addressed",
     "test_incremental_update_equals_fresh_build",
-    "test_ivf_drift_detection_and_rebalance",
-    "test_ivfpq_drift_detection_and_rebalance",
-    "test_ivfpq_lifecycle_update_delete_and_serving",
-    "test_knn_join_zero_norm_excluded_before_cap",
     "test_li_index_update_replace_and_rebuild_equality",
     "test_partial_update_keeps_omitted_fields",
     "test_resubmitting_same_batch_is_a_noop",
     "test_rp_index_lifecycle_matches_model",
     "test_rp_update_crash_before_commit_preserves_served_results",
-    "test_sampled_ivfpq_recall_on_tight_clusters",
     "test_text_index_lifecycle_matches_model",
-    "test_update_ivf_index_equals_frozen_reassignment",
-    "test_update_pq_index_equals_frozen_encoding",
     "test_update_rp_index_equals_fresh_rebuild",
     "test_upsert_replaces_everything",
     "test_version_gc_keeps_current_and_previous",

@@ -1,11 +1,11 @@
-"""Approximate-ANN quality gates (BASELINE.md: recall@10 >= 0.9 vs brute
-force). The driver can only rows-check LSH, so recall is enforced here."""
+"""Approximate-ANN quality gates: RP-LSH and sample-trained IVF recall
+against brute force, the shuffle-free centroid assignment kernels, and
+the RP index's update/delete/compaction lifecycle."""
 
 import os
 
 from pyspark.sql import functions as F
 
-from adk_noui_vectordb_spark.operators.ann import ann_ivf_topk, ann_lsh_topk
 from adk_noui_vectordb_spark.operators.knn import knn_topk, make_query_from_vec
 from adk_noui_vectordb_spark.sources.tables import load_table
 
@@ -14,19 +14,6 @@ def _exact_topk_ids(spark, sf_dir, query_vec_id, k):
     emb = load_table(spark, sf_dir, "embeddings")
     df = knn_topk(emb, make_query_from_vec(emb, query_vec_id), k=k)
     return [r["vec_id"] for r in df.collect()]
-
-
-def test_lsh_recall_at_10(spark, sf_dir):
-    recalls = []
-    for qid in (0, 1, 2):
-        exact = set(_exact_topk_ids(spark, sf_dir, qid, 10))
-        approx = {
-            r["vec_id"]
-            for r in ann_lsh_topk(spark, sf_dir, query_vec_id=qid, k=10).collect()
-        }
-        recalls.append(len(exact & approx) / 10)
-    avg = sum(recalls) / len(recalls)
-    assert avg >= 0.9, f"LSH recall@10 {avg} < 0.9 (per-query {recalls})"
 
 
 def test_rp_lsh_band_table_shape(spark, sf_dir):
@@ -94,7 +81,7 @@ def test_rp_lsh_recall_matches_band_theory(spark, sf_dir):
     per-plane agreement p = 1 - theta/pi ~ 0.6 and band-match probability
     1 - (1 - p^4)^6 ~ 0.55 — measured avg recall@10 is 0.5 at sf0.001.
     Genuinely clustered neighbors (higher cosine) match with much higher
-    probability; the MLlib harness above stays the high-recall path."""
+    probability."""
     from adk_noui_vectordb_spark.operators.ann import ann_rp_lsh_topk
 
     recalls = []
@@ -107,50 +94,6 @@ def test_rp_lsh_recall_matches_band_theory(spark, sf_dir):
         recalls.append(len(exact & approx) / 10)
     avg = sum(recalls) / len(recalls)
     assert avg >= 0.3, f"RP-LSH recall@10 {avg} < 0.3 (per-query {recalls})"
-
-
-def test_ivf_returns_k_and_respects_probe(spark, sf_dir):
-    df = ann_ivf_topk(spark, sf_dir, query_vec_id=0, k=5, nprobe=2)
-    rows = df.collect()
-    assert len(rows) == 5
-    # all results come from <= nprobe partitions
-    assert len({r["label"] for r in rows}) <= 2
-
-
-def test_ivf_recall_vs_exact(spark, sf_dir):
-    # nprobe = all partitions -> IVF must equal exact brute force
-    emb = load_table(spark, sf_dir, "embeddings")
-    n_labels = emb.select("label").distinct().count()
-    exact = _exact_topk_ids(spark, sf_dir, 0, 5)
-    full = [
-        r["vec_id"]
-        for r in ann_ivf_topk(
-            spark, sf_dir, query_vec_id=0, k=5, nprobe=n_labels
-        ).collect()
-    ]
-    assert full == exact
-
-
-def test_ivf_trained_respects_probe_and_recovers_exact(spark, sf_dir):
-    """The trained-IVF key: results come from <= nprobe trained cells, and
-    with nprobe = n_centroids the pruning is a no-op so the top-k must
-    equal exact brute force (the same contract as label-IVF)."""
-    from adk_noui_vectordb_spark.operators.ann import ann_ivf_trained_topk
-
-    rows = ann_ivf_trained_topk(
-        spark, sf_dir, query_vec_id=0, k=5, nprobe=2
-    ).collect()
-    assert len(rows) == 5
-    assert len({r["cluster"] for r in rows}) <= 2
-
-    exact = _exact_topk_ids(spark, sf_dir, 0, 5)
-    full = [
-        r["vec_id"]
-        for r in ann_ivf_trained_topk(
-            spark, sf_dir, query_vec_id=0, k=5, nprobe=8, n_centroids=8
-        ).collect()
-    ]
-    assert full == exact
 
 
 def test_kmeans_assigns_every_vector_once(spark, sf_dir):
@@ -173,60 +116,6 @@ def test_kmeans_k1_is_single_cluster(spark, sf_dir):
 
     got = cluster_kmeans(spark, sf_dir, k=1, iters=1)
     assert got.filter(F.col("cluster") != 0).count() == 0
-
-
-def test_pq_encode_structure(spark, sf_dir):
-    """Every vector gets exactly one code per subspace, codes in [0, k)."""
-    from adk_noui_vectordb_spark.operators.ann import PQ_K, PQ_M, pq_encode_rows
-    from adk_noui_vectordb_spark.sources.tables import load_table
-
-    codes = pq_encode_rows(spark, sf_dir)
-    n = load_table(spark, sf_dir, "embeddings").count()
-    assert codes.count() == n * PQ_M
-    assert codes.select("vec_id", "subspace").distinct().count() == n * PQ_M
-    bad = codes.filter((F.col("code") < 0) | (F.col("code") >= PQ_K)).count()
-    assert bad == 0
-
-
-def test_pq_rerank_recall(spark, sf_dir):
-    """Two-stage PQ (ADC top-100 -> exact rerank) recall@10 vs exact L2.
-    Measured 0.9 avg on the isotropic sf0.001 testdata (BASELINE.md: the
-    4x3-bit code budget is data-limited here, same caveat as IVF); the
-    rerank stage makes the top-10 ORDER exact within the candidate set."""
-    import numpy as np
-
-    from adk_noui_vectordb_spark.operators.ann import knn_pq_rerank
-    from adk_noui_vectordb_spark.sources.tables import load_table
-
-    rows = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    ).collect()
-    ids = np.array([r["vec_id"] for r in rows])
-    M = np.stack([np.asarray(r["emb"]) for r in rows])
-    recalls = []
-    for qi in (0, 1, 2):
-        q = M[ids == qi][0]
-        d2 = ((M - q) ** 2).sum(1)
-        d2[ids == qi] = np.inf
-        exact = set(ids[np.argsort(d2, kind="stable")[:10]].tolist())
-        got = {
-            r["vec_id"]
-            for r in knn_pq_rerank(spark, sf_dir, query_vec_id=int(qi), k=10).collect()
-        }
-        recalls.append(len(exact & got) / 10)
-    avg = sum(recalls) / len(recalls)
-    assert avg >= 0.7, f"PQ rerank recall@10 {avg} < 0.7 (per-query {recalls})"
-
-
-def test_pq_adc_scan_is_broadcast(spark, sf_dir):
-    """The ADC stage must broadcast the m*k distance table — the encoded
-    corpus side never shuffles for the lookup."""
-    from adk_noui_vectordb_spark.operators.ann import knn_pq_topk
-    from adk_noui_vectordb_spark.plans import explain_str
-
-    plan = explain_str(knn_pq_topk(spark, sf_dir), mode="simple")
-    assert "BroadcastHashJoin" in plan, plan
-    assert "TakeOrderedAndProject" in plan, plan
 
 
 def test_semdedup_keep_rule(spark, sf_dir):
@@ -415,22 +304,6 @@ def test_kmeans_assignment_is_pure_projection(spark, sf_dir):
         assert bad not in plan, f"{bad} in assignment plan:\n{plan}"
 
 
-def test_knn_join_ranks_are_contiguous_and_sorted(spark, sf_dir):
-    from adk_noui_vectordb_spark.operators.ann import knn_join_topk
-
-    rows = knn_join_topk(spark, sf_dir, k=3).collect()
-    by_src = {}
-    for r in rows:
-        by_src.setdefault(r["src"], []).append((r["rank"], r["sim"], r["nbr"]))
-    assert by_src
-    for src, lst in by_src.items():
-        lst.sort()
-        assert [x[0] for x in lst] == list(range(1, len(lst) + 1))
-        sims = [x[1] for x in lst]
-        assert sims == sorted(sims, reverse=True)
-        assert all(x[2] != src for x in lst)
-
-
 def test_cap_bucket_members_bounds_skewed_self_join(spark):
     """Skew guard (VERDICT r7 next #4): a hot (band, band_key) bucket of
     m members must contribute at most m x cap candidate pairs to the
@@ -478,33 +351,6 @@ def test_cap_bucket_members_deterministic_and_order_free(spark):
     assert sel1 == sel2 and len(sel1) == 40
     # cap >= bucket size is the identity
     assert cap_bucket_members(bands, cap=200).count() == 200
-
-
-def test_knn_join_default_cap_exceeds_benchmark_buckets(spark, sf_dir):
-    """Pin the 'cap=256 never binds on the benchmark corpus' claim: the
-    largest band bucket must stay within the default bucket_cap, so the
-    capped top-k is provably identical to uncapped at this SF (the
-    identity holds at biggest <= cap — the cap keeps exactly the first
-    `cap` members, so a bucket of exactly `cap` loses nothing;
-    ADVICE r8)."""
-    import inspect
-
-    from adk_noui_vectordb_spark.operators.ann import (
-        knn_join_topk,
-        rp_lsh_band_rows,
-    )
-
-    default_cap = inspect.signature(knn_join_topk).parameters[
-        "bucket_cap"
-    ].default
-    biggest = (
-        rp_lsh_band_rows(spark, sf_dir)
-        .groupBy("band", "band_key")
-        .count()
-        .agg(F.max("count").alias("mx"))
-        .collect()[0]["mx"]
-    )
-    assert biggest <= default_cap
 
 
 # --- incremental index maintenance (VERDICT r8 next #3/#4) --------------
@@ -620,63 +466,6 @@ def test_rp_served_probe_converges_one_batch_after_ingest(
     assert top[0]["sim"] == 1.0
 
 
-def test_update_ivf_index_equals_frozen_reassignment(
-    spark, sf_dir, tmp_path
-):
-    """Under frozen centroids the updated assignment must equal a
-    re-assignment of the combined corpus through the SAME
-    assign_to_centroids kernel — and the ingested clone of vec 0 must
-    be served by the next probe (its cell is probed first)."""
-    import os
-
-    from adk_noui_vectordb_spark.operators import ann
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    base_dir = str(tmp_path / "ivf_base")
-    os.makedirs(base_dir)
-    emb.filter(F.col("vec_id") % 5 != 0).write.parquet(
-        os.path.join(base_dir, "embeddings.parquet")
-    )
-    assign_p, cents_p = ann.build_ivf_index(spark, base_dir)
-    cent_rows = sorted(
-        (
-            {"cluster": r["cluster"], "c": list(r["c"])}
-            for r in spark.read.parquet(cents_p).collect()
-        ),
-        key=lambda r: r["cluster"],
-    )
-    batch = emb.filter(F.col("vec_id") % 5 == 0).select("vec_id", "embedding")
-    assign_p2, cents_p2 = ann.update_ivf_index(spark, base_dir, batch)
-
-    got = {
-        r["vec_id"]: r["cluster"]
-        for r in spark.read.parquet(assign_p2).collect()
-    }
-    combined = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    want = {
-        r["vec_id"]: r["cluster"]
-        for r in ann.assign_to_centroids(combined, cent_rows).collect()
-    }
-    assert got == want
-    # centroids byte-identical (frozen)
-    c2 = sorted(
-        (r["cluster"], tuple(r["c"]))
-        for r in spark.read.parquet(cents_p2).collect()
-    )
-    assert c2 == sorted((r["cluster"], tuple(r["c"])) for r in
-                        (spark.read.parquet(cents_p).collect()))
-
-    clone = emb.filter(F.col("vec_id") == 0).select(
-        F.lit(987654322).cast("bigint").alias("vec_id"), F.col("embedding")
-    )
-    ann.update_ivf_index(spark, base_dir, clone)
-    top = ann.ann_ivf_trained_topk(spark, base_dir, query_vec_id=0, k=3).collect()
-    assert top[0]["vec_id"] == 987654322
-    assert top[0]["sim"] == 1.0
-
-
 def test_rp_update_crash_before_commit_preserves_served_results(
     spark, sf_dir, tmp_path, monkeypatch
 ):
@@ -758,104 +547,6 @@ def test_compact_rp_index_preserves_bands_and_serving(spark, sf_dir, tmp_path):
             assert n <= 1, (band, bk, n)
 
 
-def test_knn_join_zero_norm_excluded_before_cap(spark, sf_dir, tmp_path):
-    """A zero-norm vector must neither appear in the batch k-NN output
-    nor occupy cap slots: results over corpus+zero-vec equal results
-    over the clean corpus exactly (the exclusion-path gate fires only
-    when a zero vector exists — the clean corpus skips the semi-join)."""
-    import os
-
-    from adk_noui_vectordb_spark.operators import ann
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    clean_dir = str(tmp_path / "knnz_clean")
-    dirty_dir = str(tmp_path / "knnz_dirty")
-    os.makedirs(clean_dir), os.makedirs(dirty_dir)
-    emb.write.parquet(os.path.join(clean_dir, "embeddings.parquet"))
-    zero = emb.limit(1).select(
-        F.lit(876543210).cast("bigint").alias("vec_id"),
-        F.transform(F.col("embedding"), lambda x: x * 0.0).alias("embedding"),
-        *[c for c in emb.columns if c not in ("vec_id", "embedding")],
-    )
-    emb.unionByName(zero).write.parquet(
-        os.path.join(dirty_dir, "embeddings.parquet")
-    )
-    a = [tuple(r) for r in ann.knn_join_topk(spark, clean_dir).collect()]
-    b = [tuple(r) for r in ann.knn_join_topk(spark, dirty_dir).collect()]
-    assert sorted(a) == sorted(b)
-    assert all(r[0] != 876543210 and r[1] != 876543210 for r in b)
-
-
-def test_update_pq_index_equals_frozen_encoding(spark, sf_dir, tmp_path):
-    """Under frozen codebooks the updated codes must equal a
-    re-encoding of the combined corpus through pq_encode_for; the
-    ingested clone of vec 0 must top the exact rerank (d2 = 0) one
-    batch after ingest; re-submitting the same batch is a no-op."""
-    import os
-
-    from adk_noui_vectordb_spark.operators import ann
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    base_dir = str(tmp_path / "pq_base")
-    os.makedirs(base_dir)
-    emb.filter(F.col("vec_id") % 5 != 0).write.parquet(
-        os.path.join(base_dir, "embeddings.parquet")
-    )
-    codes_p, cents_p = ann.build_pq_index(spark, base_dir)
-    cent_rows = [
-        {"subspace": r["subspace"], "code": r["code"], "c": list(r["c"])}
-        for r in spark.read.parquet(cents_p).collect()
-    ]
-    batch = emb.filter(F.col("vec_id") % 5 == 0).select("vec_id", "embedding")
-    codes_p2, cents_p2 = ann.update_pq_index(spark, base_dir, batch)
-
-    got = {
-        (r["vec_id"], r["subspace"]): r["code"]
-        for r in spark.read.parquet(codes_p2).collect()
-    }
-    combined = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    want = {
-        (r["vec_id"], r["subspace"]): r["code"]
-        for r in ann.pq_encode_for(combined, cent_rows, ann.PQ_M).collect()
-    }
-    assert got == want
-    # codebooks frozen byte-for-byte
-    assert sorted(
-        (r["subspace"], r["code"], tuple(r["c"]))
-        for r in spark.read.parquet(cents_p2).collect()
-    ) == sorted(
-        (r["subspace"], r["code"], tuple(r["c"]))
-        for r in spark.read.parquet(cents_p).collect()
-    )
-
-    clone = emb.filter(F.col("vec_id") == 0).select(
-        F.lit(987654324).cast("bigint").alias("vec_id"), F.col("embedding")
-    )
-    ann.update_pq_index(spark, base_dir, clone)
-    top = ann.knn_pq_rerank(spark, base_dir, query_vec_id=0, k=3).collect()
-    assert top[0]["vec_id"] == 987654324
-    assert top[0]["d2_micro"] == 0
-
-    before = {
-        (r["vec_id"], r["subspace"]): r["code"]
-        for r in spark.read.parquet(
-            os.path.join(
-                ann.build_pq_index(spark, base_dir)[0]
-            )
-        ).collect()
-    }
-    ann.update_pq_index(spark, base_dir, clone)  # same batch again
-    after = {
-        (r["vec_id"], r["subspace"]): r["code"]
-        for r in spark.read.parquet(
-            ann.build_pq_index(spark, base_dir)[0]
-        ).collect()
-    }
-    assert after == before
-
-
 def test_delete_from_rp_index_retracts_bands_and_vecs(spark, sf_dir, tmp_path):
     """Deleting vectors must equal a fresh build over the corpus
     WITHOUT them (bands and vecs), and the probe must stop serving
@@ -889,60 +580,6 @@ def test_delete_from_rp_index_retracts_bands_and_vecs(spark, sf_dir, tmp_path):
 
     absent = spark.createDataFrame([(99_999_998,)], "vec_id bigint")
     assert ann.delete_from_rp_index(spark, full_dir, absent) == bands_del
-
-
-def test_delete_from_ivf_and_pq_indexes(spark, sf_dir, tmp_path):
-    """Deletion symmetry across the vector-index family: IVF and PQ
-    deletions must equal frozen-quantizer state over the corpus minus
-    the victims, and absent ids are no-ops."""
-    import os
-
-    from adk_noui_vectordb_spark.operators import ann
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    base_dir = str(tmp_path / "vdel")
-    os.makedirs(base_dir)
-    emb.write.parquet(os.path.join(base_dir, "embeddings.parquet"))
-    victims = emb.filter(F.col("vec_id") % 9 == 0).select("vec_id")
-    victim_set = {r["vec_id"] for r in victims.collect()}
-
-    # IVF
-    assign_p0, cents_p = ann.build_ivf_index(spark, base_dir)
-    before = {
-        r["vec_id"]: r["cluster"]
-        for r in spark.read.parquet(assign_p0).collect()
-    }
-    assign_p1, _ = ann.delete_from_ivf_index(spark, base_dir, victims)
-    after = {
-        r["vec_id"]: r["cluster"]
-        for r in spark.read.parquet(assign_p1).collect()
-    }
-    assert after == {k: v for k, v in before.items() if k not in victim_set}
-    vecs_left = {
-        r["vec_id"]
-        for r in spark.read.parquet(
-            os.path.join(os.path.dirname(assign_p1), "vecs")
-        ).collect()
-    }
-    assert not (vecs_left & victim_set)
-    absent = spark.createDataFrame([(77_777_777,)], "vec_id bigint")
-    assert ann.delete_from_ivf_index(spark, base_dir, absent)[0] == assign_p1
-
-    # PQ
-    codes_p0, _ = ann.build_pq_index(spark, base_dir)
-    cbefore = {
-        (r["vec_id"], r["subspace"]): r["code"]
-        for r in spark.read.parquet(codes_p0).collect()
-    }
-    codes_p1, _ = ann.delete_from_pq_index(spark, base_dir, victims)
-    cafter = {
-        (r["vec_id"], r["subspace"]): r["code"]
-        for r in spark.read.parquet(codes_p1).collect()
-    }
-    assert cafter == {
-        k: v for k, v in cbefore.items() if k[0] not in victim_set
-    }
-    assert ann.delete_from_pq_index(spark, base_dir, absent)[0] == codes_p1
 
 
 def test_rp_empty_index_state_serves_and_recovers(spark, tmp_path):
@@ -991,203 +628,6 @@ def test_rp_empty_index_state_serves_and_recovers(spark, tmp_path):
     )
     got = ann.ann_rp_lsh_topk(spark, base, query_vec_id=0, k=3).collect()
     assert [(r["vec_id"], r["sim"]) for r in got] == [(1, 1.0)]
-
-
-def test_clustered_embeddings_bow_the_ivf_recall_curve(spark, tmp_path):
-    """The ANN design's central scale claim, measured (VERDICT r9 next
-    #4): on CLUSTERED embeddings (the real-data regime — a seeded
-    mixture of Gaussians) IVF recall at small nprobe is far ABOVE the
-    candidate rate, where isotropic testdata pins recall ~ candidate
-    rate (the documented worst case, BASELINE.md). Deterministic: the
-    fixture is seed-42 and every pipeline stage is md5/6-dp exact."""
-    import os
-
-    from adk_noui_vectordb_spark.operators import ann
-    from tools.make_clustered_embeddings import make
-
-    base = str(tmp_path / "clustered")
-    make(base, n=400, k_centers=8, sigma=0.06)
-    emb = spark.read.parquet(os.path.join(base, "embeddings.parquet"))
-
-    k = 10
-    recalls, rates = [], []
-    for qid in (0, 1, 2):
-        exact = {
-            r["vec_id"] for r in knn_topk(emb, make_query_from_vec(emb, qid), k=k).collect()
-        }
-        approx = {
-            r["vec_id"]
-            for r in ann.ann_ivf_trained_topk(
-                spark, base, query_vec_id=qid, k=k, nprobe=1, n_centroids=8
-            ).collect()
-        }
-        recalls.append(len(exact & approx) / k)
-        # candidate rate: fraction of the corpus in the probed cell(s) —
-        # read from the same trained index the query served from
-        assign_p, _ = ann.build_ivf_index(spark, base, 8, 2)
-        sizes = {
-            r["cluster"]: r["n"]
-            for r in spark.read.schema(ann.IVF_ASSIGN_SCHEMA)
-            .parquet(assign_p)
-            .groupBy("cluster")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        rates.append(max(sizes.values()) / sum(sizes.values()))
-
-    avg_recall = sum(recalls) / len(recalls)
-    worst_rate = max(rates)
-    # isotropic data: recall ~ rate; clustered data must clear it by 2x
-    assert avg_recall >= 0.5, (recalls, rates)
-    assert avg_recall >= 2.0 * worst_rate, (recalls, rates)
-
-
-def test_ivfpq_lifecycle_update_delete_and_serving(spark, sf_dir, tmp_path):
-    """The composed IVF+PQ index (r10): incremental upsert equals a
-    frozen-centroid/frozen-codebook re-encode of the combined corpus,
-    an ingested vector serves one batch later, and deletion retracts
-    its plist and vecs rows."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from adk_noui_vectordb_spark.operators import ann
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    base = str(tmp_path / "ivfpqbase")
-    os.makedirs(base)
-    emb.filter(F.col("vec_id") % 7 != 0).write.parquet(
-        os.path.join(base, "embeddings.parquet")
-    )
-    v0 = ann.build_ivfpq_index(spark, base)
-    cent_rows, pqcent_rows = ann._ivfpq_trained_rows(spark, v0)
-    cents_dicts = [{"cluster": cl, "c": c} for cl, c in cent_rows]
-
-    batch = emb.filter(F.col("vec_id") % 7 == 0).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    v1 = ann.update_ivfpq_index(spark, base, batch)
-
-    def plist_rows(v):
-        return {
-            tuple(r)
-            for r in spark.read.schema(ann.IVFPQ_PLIST_SCHEMA)
-            .parquet(os.path.join(v, "plist"))
-            .collect()
-        }
-
-    # expected: EVERY corpus vector residual-encoded/assigned under the
-    # FROZEN subset-trained centroids and codebooks (FAISS
-    # add-after-train with residual coding)
-    all_vecs = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    all_assign = ann.assign_to_centroids(all_vecs, cents_dicts).select(
-        "vec_id", "cluster"
-    )
-    cents_df = spark.createDataFrame(
-        [(int(cl), [float(x) for x in c]) for cl, c in cent_rows],
-        "cluster int, c array<double>",
-    )
-    all_resid = ann._residual_frame(all_vecs, all_assign, cents_df)
-    expected = {
-        tuple(r)
-        for r in ann.pq_encode_for(all_resid, pqcent_rows, ann.PQ_M)
-        .join(all_assign, "vec_id")
-        .select("vec_id", "subspace", "code", "cluster")
-        .collect()
-    }
-    assert plist_rows(v1) == expected
-
-    # an ingested vector serves immediately (query id 7 is batch-only)
-    got = {
-        r["vec_id"]
-        for r in ann.ann_ivfpq_topk(spark, base, query_vec_id=7).collect()
-    }
-    assert got and 7 not in got
-
-    # delete retracts plist and vecs rows; absent-id delete is a no-op
-    v2 = ann.delete_from_ivfpq_index(
-        spark, base, spark.createDataFrame([(7,)], "vec_id bigint")
-    )
-    assert not any(t[0] == 7 for t in plist_rows(v2))
-    vecs2 = {
-        r["vec_id"]
-        for r in spark.read.schema(ann.VECS_SCHEMA)
-        .parquet(os.path.join(v2, "vecs"))
-        .collect()
-    }
-    assert 7 not in vecs2
-    assert plist_rows(v2) == {t for t in expected if t[0] != 7}
-    v3 = ann.delete_from_ivfpq_index(
-        spark, base, spark.createDataFrame([(987654321,)], "vec_id bigint")
-    )
-    assert v3 == v2
-
-
-def test_ivfpq_probe_prunes_cell_partitions(spark, sf_dir):
-    """The composed index's probe must reach the plist scan as a literal
-    cluster PartitionFilter — the trained-IVF serving contract."""
-    from adk_noui_vectordb_spark.operators import ann
-    from adk_noui_vectordb_spark.plans.explain import explain_str
-
-    df = ann.ann_ivfpq_topk(spark, sf_dir)
-    plan = explain_str(df)
-    seg = plan.split("PartitionFilters")
-    assert len(seg) > 1, plan
-    assert any("cluster" in s.split("\n")[0] for s in seg[1:]), plan
-
-
-def test_residual_ivfpq_recall_on_clustered_fixture(spark, tmp_path):
-    """Residual-encoded IVFPQ recall pin on the seeded clustered
-    fixture, against the matching EXACT-L2 baseline (the index's
-    metric — a cosine baseline would mis-measure by the norm spread):
-    probing 2 of 8 cells at m=4 ints/vector with a 60-vector exact
-    rerank must recover >= 0.7 of the true top-10. Deterministic:
-    seed-42 fixture, md5/6-dp-exact pipeline."""
-    import os
-
-    from adk_noui_vectordb_spark.functions.vector import dot_product
-    from adk_noui_vectordb_spark.operators import ann
-    from tools.make_clustered_embeddings import make
-
-    base = str(tmp_path / "rivfpq")
-    make(base, n=400, k_centers=8, sigma=0.06)
-    emb = spark.read.parquet(os.path.join(base, "embeddings.parquet"))
-    e = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-
-    def exact_l2(qid):
-        q = e.filter(F.col("vec_id") == qid).select(F.col("emb").alias("qe"))
-        d2 = (
-            dot_product(F.col("emb"), F.col("emb"))
-            - 2 * dot_product(F.col("emb"), F.col("qe"))
-            + dot_product(F.col("qe"), F.col("qe"))
-        )
-        return {
-            r["vec_id"]
-            for r in e.crossJoin(F.broadcast(q))
-            .filter(F.col("vec_id") != qid)
-            .select("vec_id", d2.alias("d2"))
-            .orderBy("d2", "vec_id")
-            .limit(10)
-            .collect()
-        }
-
-    recalls = []
-    for qid in (0, 1, 2):
-        exact = exact_l2(qid)
-        got = {
-            r["vec_id"]
-            for r in ann.ann_ivfpq_topk(
-                spark, base, query_vec_id=qid, topk=10, nprobe=2,
-                candidates=60, n_centroids=8,
-            ).collect()
-        }
-        recalls.append(len(exact & got) / 10)
-    avg = sum(recalls) / len(recalls)
-    assert avg >= 0.7, recalls
 
 
 def test_filtered_ann_respects_predicate_and_probe(spark, sf_dir):
@@ -1351,231 +791,3 @@ def test_sampled_ivf_training_matches_full_on_tight_clusters(spark, tmp_path):
         tot += 10
     assert hits / tot >= 0.95, f"sampled-trained recall {hits / tot}"
 
-
-def test_sampled_ivfpq_recall_on_tight_clusters(spark, tmp_path):
-    """r11: the fully sample-trained IVFADC (sampled coarse + sampled
-    residual codebooks) must match the full-trained index's recall in
-    its design regime — measured 1.00 on the tight 2000-vec fixture at
-    nprobe=2/cand=100 (BASELINE.md r11; this pins a 0.9 floor on that
-    EXACT configuration — smaller corpora can land the 2-iteration
-    sampled Lloyd's in a worse seed basin, the documented mild-fixture
-    class, so the pin stays on the measured config)."""
-    import numpy as np
-
-    from adk_noui_vectordb_spark.operators import ann
-    from tools.make_clustered_embeddings import make
-
-    base = str(tmp_path / "sivfpq")
-    make(base, 2000, 20, 0.06)
-    emb = np.array(
-        spark.read.parquet(base + "/embeddings.parquet")
-        .orderBy("vec_id")
-        .select("embedding")
-        .toPandas()["embedding"]
-        .tolist(),
-        dtype=np.float64,
-    )
-    n = len(emb)
-    hits = tot = 0
-    for qid in range(5):
-        got = {
-            r["vec_id"]
-            for r in ann.ann_ivfpq_sampled_topk(
-                spark, base, query_vec_id=qid, topk=10, nprobe=2,
-                candidates=100, n_centroids=10,
-            ).collect()
-        }
-        q = emb[qid]
-        d2 = ((emb - q) ** 2).sum(axis=1)
-        order = sorted(
-            (i for i in range(n) if i != qid),
-            key=lambda i: (round(float(d2[i] * 1e6)), i),
-        )
-        hits += len(got & set(order[:10]))
-        tot += 10
-    assert hits / tot >= 0.9, f"sampled IVFPQ recall {hits / tot}"
-
-
-def test_ivfpq_drift_detection_and_rebalance(spark, tmp_path):
-    """The composed-index half of VERDICT r11 next #4: frozen-codebook
-    streamed ingest of a drifted region must FIRE the quantization-
-    error metric (codebooks never saw the new region, so ADC error
-    explodes); rebalance_ivfpq_index retrains coarse + codebooks on the
-    index's own vecs and re-encodes, the metric resets to baseline, and
-    the rebalanced index EQUALS a fresh sampled build over the combined
-    corpus (plist, cents, pqcents — same trainer code paths)."""
-    import os
-
-    import numpy as np
-
-    from adk_noui_vectordb_spark.operators import ann
-
-    rng = np.random.default_rng(13)
-    dim = 64  # the PQ kernel's asserted dimensionality
-    centers = rng.normal(size=(4, dim))
-    rows_a = [
-        (i, [float(x) for x in (centers[i % 4] + rng.normal(scale=0.05, size=dim))])
-        for i in range(200)
-    ]
-    far = rng.normal(size=dim) * 10.0
-    rows_b = [
-        (1000 + i, [float(x) for x in (far + rng.normal(scale=0.05, size=dim))])
-        for i in range(100)
-    ]
-    base = str(tmp_path / "pqdrift")
-    os.makedirs(base)
-    schema = "vec_id bigint, embedding array<double>"
-    spark.createDataFrame(rows_a, schema).write.parquet(
-        os.path.join(base, "embeddings.parquet")
-    )
-    P = dict(n_centroids=4, ivf_iters=2, m=4, k=8, pq_iters=2)
-    ann.build_ivfpq_index(spark, base, *P.values())
-    m0 = ann.ivfpq_drift_metrics(spark, base, *P.values())
-    assert m0["drifted"] is False, m0
-
-    ann.update_ivfpq_index(
-        spark, base, spark.createDataFrame(rows_b, schema), *P.values()
-    )
-    m1 = ann.ivfpq_drift_metrics(spark, base, *P.values())
-    assert m1["drifted"] is True, m1
-    assert m1["qerr_growth"] > ann.DRIFT_RESIDUAL_THRESHOLD, m1
-    checks = {
-        c[0]: (c[1], c[2])
-        for c in ann.fsck_ivfpq_index(spark, base, *P.values())
-    }
-    assert checks["codebook_drift"][0] is False
-    assert "rebalance_ivfpq_index" in checks["codebook_drift"][1]
-    assert checks["plist_vecs_same_ids"][0] is True
-    assert checks["m_codes_per_vector"][0] is True
-
-    cur = ann.rebalance_ivfpq_index(
-        spark, base, *P.values(), train_per_cell=32
-    )
-    m2 = ann.ivfpq_drift_metrics(spark, base, *P.values())
-    assert m2["drifted"] is False, m2
-    assert abs(m2["qerr_growth"] - 1.0) < 1e-9  # baseline reset to retrain
-    checks2 = {c[0]: c[1] for c in ann.fsck_ivfpq_index(spark, base, *P.values())}
-    assert all(checks2.values()), checks2
-
-    # equality-with-rebuild: fresh sampled build over the combined corpus
-    base2 = str(tmp_path / "pqdrift_rebuild")
-    os.makedirs(base2)
-    spark.createDataFrame(rows_a + rows_b, schema).write.parquet(
-        os.path.join(base2, "embeddings.parquet")
-    )
-    cur2 = ann.build_ivfpq_index_sampled(
-        spark, base2, *P.values(), train_per_cell=32
-    )
-
-    def rows_of(ver, comp, schema_):
-        df = (
-            spark.read.schema(schema_).parquet(os.path.join(ver, comp))
-            if schema_
-            else spark.read.parquet(os.path.join(ver, comp))
-        )
-        return sorted(tuple(r) for r in df.collect())
-
-    assert rows_of(cur, "plist", ann.IVFPQ_PLIST_SCHEMA) == rows_of(
-        cur2, "plist", ann.IVFPQ_PLIST_SCHEMA
-    )
-    c_got = sorted(
-        (r["cluster"], tuple(r["c"]))
-        for r in spark.read.parquet(os.path.join(cur, "cents")).collect()
-    )
-    c_want = sorted(
-        (r["cluster"], tuple(r["c"]))
-        for r in spark.read.parquet(os.path.join(cur2, "cents")).collect()
-    )
-    assert c_got == c_want
-    pq_got = sorted(
-        (r["subspace"], r["code"], tuple(r["c"]))
-        for r in spark.read.parquet(os.path.join(cur, "pqcents")).collect()
-    )
-    pq_want = sorted(
-        (r["subspace"], r["code"], tuple(r["c"]))
-        for r in spark.read.parquet(os.path.join(cur2, "pqcents")).collect()
-    )
-    assert pq_got == pq_want
-
-
-def test_ivf_drift_detection_and_rebalance(spark, tmp_path):
-    """VERDICT r11 next #4: frozen-centroid streamed ingest of a
-    drifted region must FIRE the drift metric; rebalance_ivf_index
-    retrains (sampled) + reassigns, the metric recovers, and the
-    rebalanced index EQUALS a fresh sampled build over the combined
-    corpus (same trainer code path, same md5 sample discipline)."""
-    import os
-
-    import numpy as np
-
-    from adk_noui_vectordb_spark.operators import ann
-
-    rng = np.random.default_rng(7)
-    dim = 8
-    centers = rng.normal(size=(4, dim))
-    rows_a = [
-        (i, [float(x) for x in (centers[i % 4] + rng.normal(scale=0.05, size=dim))])
-        for i in range(200)
-    ]
-    far = rng.normal(size=dim) * 10.0
-    rows_b = [
-        (1000 + i, [float(x) for x in (far + rng.normal(scale=0.05, size=dim))])
-        for i in range(100)
-    ]
-    base = str(tmp_path / "drift")
-    os.makedirs(base)
-    schema = "vec_id bigint, embedding array<double>"
-    spark.createDataFrame(rows_a, schema).write.parquet(
-        os.path.join(base, "embeddings.parquet")
-    )
-    ann.build_ivf_index(spark, base, n_centroids=4, iters=2)
-    m0 = ann.ivf_drift_metrics(spark, base, 4, 2)
-    assert m0["drifted"] is False, m0
-
-    ann.update_ivf_index(
-        spark, base, spark.createDataFrame(rows_b, schema), 4, 2
-    )
-    m1 = ann.ivf_drift_metrics(spark, base, 4, 2)
-    assert m1["drifted"] is True, m1
-    assert m1["residual_growth"] > ann.DRIFT_RESIDUAL_THRESHOLD, m1
-    checks = {c[0]: (c[1], c[2]) for c in ann.fsck_ivf_index(spark, base, 4, 2)}
-    assert checks["centroid_drift"][0] is False
-    assert "rebalance_ivf_index" in checks["centroid_drift"][1]
-    assert checks["assign_vecs_same_ids"][0] is True
-
-    assign_p, cents_p = ann.rebalance_ivf_index(
-        spark, base, 4, 2, train_per_cell=32
-    )
-    m2 = ann.ivf_drift_metrics(spark, base, 4, 2)
-    assert m2["drifted"] is False, m2
-    assert abs(m2["residual_growth"] - 1.0) < 1e-9  # baseline reset to retrain
-    checks2 = {c[0]: c[1] for c in ann.fsck_ivf_index(spark, base, 4, 2)}
-    assert all(checks2.values()), checks2
-
-    # equality-with-rebuild: fresh sampled build over the combined corpus
-    base2 = str(tmp_path / "drift_rebuild")
-    os.makedirs(base2)
-    spark.createDataFrame(rows_a + rows_b, schema).write.parquet(
-        os.path.join(base2, "embeddings.parquet")
-    )
-    assign_p2, cents_p2 = ann.build_ivf_index_sampled(
-        spark, base2, 4, 2, train_per_cell=32
-    )
-    got = sorted(
-        (r["vec_id"], r["cluster"])
-        for r in spark.read.schema(ann.IVF_ASSIGN_SCHEMA).parquet(assign_p).collect()
-    )
-    want = sorted(
-        (r["vec_id"], r["cluster"])
-        for r in spark.read.schema(ann.IVF_ASSIGN_SCHEMA).parquet(assign_p2).collect()
-    )
-    assert got == want
-    c_got = sorted(
-        (r["cluster"], tuple(r["c"]))
-        for r in spark.read.parquet(cents_p).collect()
-    )
-    c_want = sorted(
-        (r["cluster"], tuple(r["c"]))
-        for r in spark.read.parquet(cents_p2).collect()
-    )
-    assert c_got == c_want

@@ -75,6 +75,27 @@ def test_add_rejects_existing_and_batch_dups(spark, coll):
         for write in (coll.add, coll.upsert):
             with pytest.raises(ValueError, match="NULL id"):
                 write(_batch(spark, ids, _vecs(5, len(ids))))
+    # so is an embedding that is NULL or holds a NULL, NaN or infinite
+    # element: one such row fails the whole batch, on add and upsert
+    good = [float(x) for x in _vecs(6, 1)[0]]
+    schema = (
+        "id string, embedding array<double>, document string, lang string, "
+        "stars int"
+    )
+    for emb in (
+        None,
+        [None] + good[1:],
+        [float("nan")] + good[1:],
+        [float("inf")] + good[1:],
+        [float("-inf")] + good[1:],
+    ):
+        batch = spark.createDataFrame(
+            [("ok", good, "fine", "en", 0), ("bad", emb, "broken", "en", 1)],
+            schema,
+        )
+        for write in (coll.add, coll.upsert):
+            with pytest.raises(ValueError, match="embedding of id 'bad'"):
+                write(batch)
     assert coll.count() == 3
     assert [c for c, ok, _ in coll.fsck() if not ok] == []
 
@@ -171,6 +192,16 @@ def test_query_batch_is_per_query_topk(spark, coll):
             coll.query(qs[0], n_results=bad)
         with pytest.raises(ValueError, match="n_results"):
             coll.query(qs, n_results=bad)
+    # out-of-range search options fail at call time too
+    for name, bad in (
+        ("multiprobe_hamming", 2),
+        ("multiprobe_hamming", -1),
+        ("graph_beam", 0),
+        ("graph_rounds", 0),
+        ("prefilter_threshold", -1),
+    ):
+        with pytest.raises(ValueError, match=name):
+            coll.query(qs[0], **{name: bad})
 
 
 def test_get_where_document_and_limit(spark, coll):
@@ -547,6 +578,9 @@ def test_get_offset_and_after_id_paginate(spark, coll):
     assert page2_key == page2_off  # keyset page == positional page
     with pytest.raises(ValueError, match="offset OR after_id"):
         coll.get(offset=1, after_id="p0")
+    # the cursor is an id, so it must be a str
+    with pytest.raises(ValueError, match="after_id"):
+        coll.get(after_id=5)
     # negative bounds fail at call time, not when the result is collected
     with pytest.raises(ValueError, match="limit"):
         coll.get(limit=-1)

@@ -157,7 +157,8 @@ def _assigned(path: Path, name: str) -> ast.expr:
 
 
 def _string_keys(node: ast.expr) -> list[str]:
-    """String keys of a dict literal, or string items of a list literal."""
+    """String keys of a dict literal, or string items of a list or set
+    literal."""
     items = node.keys if isinstance(node, ast.Dict) else node.elts
     return [i.value for i in items if isinstance(i, ast.Constant)]
 
@@ -183,6 +184,24 @@ def test_catalogue_key_lists_name_registered_keys():
         assert keys, f"{path.name}: {name} lists no keys"
         stale = sorted(set(keys) - known)
         assert not stale, f"{path.name}: {name} names unregistered keys {stale}"
+
+
+def test_slow_tests_name_existing_tests():
+    """Every name in ``conftest.SLOW_TESTS`` is a ``test_*`` function
+    under ``tests/``. The skip hook matches by bare name, so a slow test
+    that is renamed would otherwise start running in the default suite
+    while its stale old name lingers in the set."""
+    slow = _string_keys(_assigned(REPO / "tests" / "conftest.py", "SLOW_TESTS"))
+    assert len(slow) > 10, len(slow)
+    defined = {
+        node.name
+        for path in (REPO / "tests").rglob("*.py")
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+        and node.name.startswith("test_")
+    }
+    stale = sorted(set(slow) - defined)
+    assert not stale, f"SLOW_TESTS names no test function: {stale}"
 
 
 def test_every_catalogue_key_has_an_oracle_twin():

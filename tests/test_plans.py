@@ -7,23 +7,12 @@ Regressions here mean a query silently became a full-scan/shuffle plan.
 
 import os
 
-from adk_noui_vectordb_spark.operators import rollups as roll
 from adk_noui_vectordb_spark.operators.knn import knn_topk, make_query_from_vec
 from adk_noui_vectordb_spark.plans import assert_pushed_filters, explain_str
 from adk_noui_vectordb_spark.sources.tables import (
     load_table,
     maybe_broadcast,
 )
-
-
-def test_point_lookup_pushes_filter(spark, sf_dir):
-    df = roll.point_lookup(spark, sf_dir)
-    assert_pushed_filters(df, "doc_id")
-
-
-def test_metadata_filter_pushes_to_scan(spark, sf_dir):
-    df = roll.filter_by_lang(spark, sf_dir)
-    assert_pushed_filters(df, "lang")
 
 
 def test_maybe_broadcast_hints_only_under_the_gate(spark, sf_dir):
@@ -239,25 +228,11 @@ def test_text_index_probe_prunes_term_buckets(spark, sf_dir):
     assert len(buckets) < invindex.N_TERM_BUCKETS  # probe is a strict subset
 
 
-def test_ivf_trained_probe_prunes_cell_partitions(spark, sf_dir):
-    """ann_ivf_trained_topk serves from the assignment parquet partitioned
-    by cluster: the nprobe literal cell ids must be PartitionFilters."""
-    from adk_noui_vectordb_spark.operators import ann
-
-    df = ann.ann_ivf_trained_topk(spark, sf_dir)
-    plan = explain_str(df)
-    seg = plan.split("PartitionFilters")
-    assert len(seg) > 1, plan
-    assert any(
-        "cluster" in s.split("\n")[0] for s in seg[1:]
-    ), plan
-
-
 def test_vecs_store_point_lookup_prunes_vbucket(spark, sf_dir):
     """The r9 index-resident vector stores serve query point lookups
     with STATIC vbucket partition pruning — the scan lists one of
     N_VEC_BUCKETS partition dirs, the text-probe contract applied to
-    vectors. Pinned for both the RP and PQ paths."""
+    vectors."""
     import os
 
     from pyspark.sql import functions as F
@@ -273,16 +248,6 @@ def test_vecs_store_point_lookup_prunes_vbucket(spark, sf_dir):
     seg = plan.split("PartitionFilters")
     assert len(seg) > 1, plan
     assert "vbucket" in seg[1].split("\n")[0], plan
-
-    codes_p, _ = ann.build_pq_index(spark, sf_dir)
-    pq_vecs = spark.read.parquet(
-        os.path.join(os.path.dirname(codes_p), "vecs")
-    )
-    probe2 = pq_vecs.filter(
-        (F.col("vbucket") == ann.vec_bucket_py(0)) & (F.col("vec_id") == 0)
-    )
-    plan2 = explain_str(probe2)
-    assert "vbucket" in plan2.split("PartitionFilters")[1].split("\n")[0], plan2
 
 
 def test_dedup_gate_verification_broadcasts_batch_side(spark, sf_dir):
@@ -446,9 +411,9 @@ def test_collection_keyset_page_pushes_cursor_to_scan(spark, sf_dir):
 
 
 def test_sampled_ivf_probe_prunes_cells_and_takeordered(spark, sf_dir):
-    """The sample-trained index serves with the same probe discipline as
-    the full-trained one: literal nprobe cell PartitionFilters on the
-    assignment scan, TakeOrderedAndProject for the exact rerank."""
+    """The sample-trained index serves with literal nprobe cell
+    PartitionFilters on the assignment scan and TakeOrderedAndProject for
+    the exact rerank."""
     from adk_noui_vectordb_spark.operators import ann
 
     df = ann.ann_ivf_sampled_topk(spark, sf_dir)
@@ -592,10 +557,10 @@ def test_serving_path_job_budgets(spark, sf_dir):
     serving families. Seconds are bench weather; Spark JOB counts are
     scheduler round-trips and reproduce anywhere — so the r17 serving
     wins (graph beam fusion halving per-round point reads, the fused
-    containment-gate prologue, PQ memo handles) are pinned here as a
+    containment-gate prologue) are pinned here as a
     WARM-serve job ceiling per key. Budgets are the measured warm
     counts + 2 slack (sf0.001: graph solo/batch 6, acorn solo/batch 6,
-    collection graph 9, containment gate 15, pq_rerank 6, served-LI 4);
+    collection graph 9, containment gate 15, served-LI 4);
     a regression that re-adds a per-round fetch or an eager prologue
     job jumps by >= rounds and fails the pin, not a bench."""
     import __spark_entry__ as entry
@@ -608,7 +573,6 @@ def test_serving_path_job_budgets(spark, sf_dir):
         "ann_graph_acorn_batch_topk": 8,
         "collection_query_graph_topk": 11,
         "dedup_containment_gate": 17,
-        "knn_pq_rerank": 8,
         "late_interaction_topk_served": 6,
     }
     sc = spark.sparkContext

@@ -229,15 +229,14 @@ FULL_DTYPES = {
 
 def test_embedding_dimensionality_contract(spark, sf_dir):
     """The ANN stack bakes dim=64 into its constants (ann.RP_DIM, the
-    PQ subspace split ann.PQ_DIM, the RP-LSH oracle's range(1,65)): a
-    testdata regeneration that changes the embedding width must fail
+    RP-LSH oracle's range(1,65)): a testdata regeneration that changes the embedding width must fail
     HERE by name, not as a dozen red ANN driver rows."""
     from pyspark.sql import functions as F
 
-    from adk_noui_vectordb_spark.operators.ann import PQ_DIM, RP_DIM
+    from adk_noui_vectordb_spark.operators.ann import RP_DIM
     from adk_noui_vectordb_spark.sources.tables import load_table
 
-    assert RP_DIM == PQ_DIM == 64
+    assert RP_DIM == 64
     dims = (
         load_table(spark, sf_dir, "embeddings")
         .select(F.size("embedding").alias("d"))

@@ -102,26 +102,6 @@ def main() -> None:
             (sf, n_vecs, r_up, r_rb)
         )
 
-        # IVF: same fixed batch, frozen centroids vs full retrain
-        base = corpus_copy(sf_dir, "embeddings", f"ivf_{sf}")
-        emb = spark.read.parquet(os.path.join(base, "embeddings.parquet"))
-        vbatch = (
-            emb.limit(BATCH)
-            .select((F.col("vec_id") + 10_000_000).alias("vec_id"), "embedding")
-            .localCheckpoint(eager=True)
-        )
-        ann.build_ivf_index(spark, base)
-        i_up = _timed(lambda: ann.update_ivf_index(spark, base, vbatch))
-
-        def rebuild_ivf():
-            shutil.rmtree(ann.ivf_index_root(base, 8, 2), ignore_errors=True)
-            ann.build_ivf_index(spark, base)
-
-        i_rb = _timed(rebuild_ivf)
-        rows.setdefault("IVF (assign+vecs, frozen vs retrain)", []).append(
-            (sf, n_vecs, i_up, i_rb)
-        )
-
     print(
         "| index | corpus rows (sf) | 50-row upsert (s) | full rebuild (s) |"
     )

@@ -37,13 +37,11 @@ KEYS = {
     "cluster_kmeans": "embeddings",
     "knn_topk": "embeddings",
     "ann_rp_lsh_topk": "embeddings",
-    "knn_pq_rerank": "embeddings",
     "curate_corpus": "documents",
     "winnow_fingerprints": "documents",
     "decontaminate_corpus": "documents",
     "lang_id_ngram": "documents",
     "tokenize_bpe_encode": "documents",
-    "ann_ivf_trained_topk": "embeddings",
     "dedup_simhash_pairs": "documents",
     "dedup_substring_rewrite": "documents",
     # r7b additions
@@ -54,7 +52,6 @@ KEYS = {
     "normalize_text_corpus": "documents",
     "dedup_repeated_ngrams": "documents",
     # r7c additions
-    "knn_join_topk": "embeddings",
     "doc_token_entropy": "documents",
     "dup_cluster_size_histogram": "documents",
     "hybrid_rrf_served_topk": "documents",
@@ -66,7 +63,6 @@ KEYS = {
     # r10 additions
     "dedup_gate_against_index": "documents",
     "dedup_gate_intra_batch": "documents",
-    "ann_ivfpq_topk": "embeddings",
     "knn_join_ivf_topk": "embeddings",
     "ann_graph_topk": "embeddings",
     "ann_graph_batch_topk": "embeddings",
@@ -92,7 +88,6 @@ KEYS = {
     "proximity_topk_served": "documents",
     "ann_rp_lsh_filtered_topk": "embeddings",
     # r10c additions (where DSL, collection facade, fuzzy, shards)
-    "docs_where_dsl_filter": "documents",
     "knn_where_dsl_topk": "embeddings",
     "collection_query_topk": "embeddings",
     "collection_query_graph_topk": "embeddings",
@@ -114,7 +109,6 @@ KEYS = {
     "ann_ivf_sampled_topk": "embeddings",
     "collection_get_page2": "documents",
     "collection_query_ip_topk": "embeddings",
-    "ann_ivfpq_sampled_topk": "embeddings",
 }
 
 
