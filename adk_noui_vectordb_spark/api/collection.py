@@ -26,19 +26,26 @@ silent).
 Metadata is SCHEMA-ON-FIRST-WRITE: the first batch's non-reserved
 columns become typed parquet columns (not a string map), so a
 ``where`` DSL filter (functions/where_dsl.py) compiles to ordinary
-Catalyst predicates with full pushdown into the meta scan. The schema
-and embedding dim persist in a root-level ``collection.json`` sidecar
-and later batches must match.
+Catalyst predicates for the write paths and to a pyarrow mask for the
+reads. The schema and embedding dim persist in a root-level
+``collection.json`` sidecar and later batches must match.
 
 Scale shape (the same contracts as the sf_dir-bound index family):
 - ``add``/``upsert`` are APPEND-MOSTLY: brand-new ids write O(batch)
   and read ZERO existing rows; replaced ids rewrite exactly the
   partitions holding their stale rows (reverse-mapped by re-banding
   the OLD vectors from the collection's own vecs store).
-- ``query`` computes band keys CLIENT-side (24 integer dots — no job),
-  probes the band table with literal partition predicates (static
-  pruning), reranks candidates from vecs, and applies ``where`` /
-  ``where_document`` on the meta sidecar — never a corpus scan.
+- Reads (``query``, ``get``, ``count``, ``peek``) serve the resolved
+  version on the DRIVER with zero Spark jobs: a published version
+  never changes, so each partition dir is read once per session with
+  pyarrow (``_read_partition``, memoized on its path) and filtered and
+  scored in numpy; the answer is a local DataFrame, valid after its
+  version is garbage collected. ``query`` computes band keys
+  client-side (24 integer dots) and opens only the probed band dirs
+  and the vbucket/mbucket dirs of their candidates; ``count`` sums
+  the meta footers' row counts. Online top-k over one small snapshot
+  does not fit a job scheduler — each Spark job costs more than the
+  whole driver-side read.
 - ``delete`` rewrites only victim partitions inside one atomic commit.
 - Readers never see a partial write: every mutation is one ``_CURRENT``
   swing; concurrent writers serialize on the root's writer lock and a
@@ -53,20 +60,27 @@ import os
 from functools import reduce
 from operator import and_, or_
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.vector import cosine_similarity, dot_product, l2_distance
-from ..functions.where_dsl import compile_where, compile_where_document
+from ..functions.vector import np_round4, np_scores
+from ..functions.where_dsl import (
+    compile_where,
+    compile_where_document,
+    where_document_mask,
+    where_mask,
+)
 from ..operators.ann import (
     RP_BAND_BITS,
     RP_BANDS,
     RP_PLANES,
-    _double_sql,
     _nonzero_pred,
     _rp_band_keys,
     _rp_plane_signs,
     vec_bucket_expr,
+    vec_bucket_py,
 )
 from ..sources import versioning as vn
 
@@ -203,6 +217,71 @@ def _require_int(name: str, val, lo: int, hi: "int | None" = None) -> None:
     ):
         bound = f">= {lo}" if hi is None else f"in [{lo}, {hi}]"
         raise ValueError(f"{name} must be an int {bound}, got {val!r}")
+
+
+# ------------------------------------------------------- driver reads
+# Serving reads a committed version on the driver: each partition dir is
+# read once per session with pyarrow (a published version never
+# changes), filtered and scored in numpy, and the answer handed back as
+# a local DataFrame — no Spark job per read.
+
+
+def _part_files(part: str) -> list:
+    """The data files of one partition dir, sorted; none when the dir
+    is absent (a partition no row hashed to is never written)."""
+    if not os.path.isdir(part):
+        return []
+    return [
+        os.path.join(part, f)
+        for f in sorted(os.listdir(part))
+        if not f.startswith(("_", "."))  # _SUCCESS markers, .crc files
+    ]
+
+
+def _dir_id(path: str) -> "tuple | None":
+    """(inode, mtime_ns) of a directory, None when it is absent. A
+    published version never changes, but after a rollback the next
+    commit publishes new content under the swept orphan's name, so read
+    memos key on a dir's identity as well as its path."""
+    try:
+        st = os.stat(path)
+    except FileNotFoundError:
+        return None
+    return st.st_ino, st.st_mtime_ns
+
+
+def _read_partition(spark: SparkSession, part: str, columns: list, convert):
+    """``convert`` of the pyarrow table of one partition dir of a
+    published version (None when the dir holds no file), memoized on
+    the partition's path and identity. Every collection read goes
+    through here."""
+    import pyarrow.parquet as pq
+
+    from ..memo import version_memo
+
+    def read(f):
+        # ParquetFile.read skips the dataset layer read_table goes
+        # through: ~8x less CPU on these few-KB files
+        with pq.ParquetFile(f) as pf:
+            return pf.read(columns=columns, use_threads=False)
+
+    def build():
+        ts = [read(f) for f in _part_files(part)]
+        return convert(pa.concat_tables(ts) if ts else None)
+
+    return version_memo(spark, part, "coll_partition", build, _dir_id(part))
+
+
+def _row_mask(meta, where, where_document):
+    """The meta rows ``where`` and ``where_document`` keep."""
+    import numpy as np
+
+    keep = np.ones(meta.num_rows, bool)
+    if where is not None:
+        keep &= where_mask(where, meta)
+    if where_document is not None:
+        keep &= where_document_mask(where_document, meta, "document")
+    return keep
 
 
 class Collection:
@@ -385,6 +464,93 @@ class Collection:
             os.path.join(cur, "bands")
         )
 
+    def _band_part(self, cur: str, band: int, key: int) -> tuple:
+        """(vec_id, vbucket, mbucket) arrays of one band partition."""
+        import numpy as np
+
+        def convert(t):
+            ids = [] if t is None else t.column("vec_id").to_pylist()
+            return (
+                np.array(ids, np.int64),
+                np.array([vec_bucket_py(i) for i in ids], np.int64),
+                np.array([_mbucket_py(i) for i in ids], np.int64),
+            )
+
+        part = os.path.join(cur, "bands", f"band={band}", f"band_key={key}")
+        return _read_partition(self.spark, part, ["vec_id"], convert)
+
+    def _vec_rows(self, cur: str, dim: int, vbuckets) -> tuple:
+        """(vec_id, n x dim embeddings) of the ``vbuckets`` partitions."""
+        import numpy as np
+
+        def convert(t):
+            if t is None:
+                return np.empty(0, np.int64), np.empty((0, dim))
+            emb = t.column("emb").combine_chunks().flatten().to_numpy()
+            return t.column("vec_id").to_numpy(), emb.reshape(t.num_rows, dim)
+
+        parts = [(np.empty(0, np.int64), np.empty((0, dim)))] + [
+            _read_partition(
+                self.spark, os.path.join(cur, "vecs", f"vbucket={vb}"),
+                ["vec_id", "emb"], convert,
+            )
+            for vb in sorted(vbuckets)
+        ]
+        return np.concatenate([p[0] for p in parts]), np.concatenate(
+            [p[1] for p in parts]
+        )
+
+    def _meta_schema(self, cur: str, info: dict) -> tuple:
+        """({name: Spark field}, pyarrow schema) of the meta rows,
+        without the mbucket partition column."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+        from pyspark.sql.types import StructType
+
+        from ..memo import version_memo
+
+        def build():
+            ddl = StructType.fromDDL(info["meta_schema"])
+            fields = [f for f in ddl.fields if f.name != "mbucket"]
+            return {f.name: f for f in fields}, to_arrow_schema(StructType(fields))
+
+        return version_memo(
+            self.spark, cur, "coll_meta_schema", build, info["meta_schema"]
+        )
+
+    def _meta_rows(self, cur: str, info: dict, mbuckets):
+        """pyarrow table of the meta rows of the ``mbuckets`` partitions."""
+        schema = self._meta_schema(cur, info)[1]
+        return pa.concat_tables(
+            [schema.empty_table()]
+            + [
+                _read_partition(
+                    self.spark, os.path.join(cur, "meta", f"mbucket={mb}"),
+                    schema.names,
+                    lambda t: schema.empty_table() if t is None else t.cast(schema),
+                )
+                for mb in sorted(mbuckets)
+            ]
+        )
+
+    def _frame(self, cur, info, inc, page, lead=(), embeddings=None) -> DataFrame:
+        """The local DataFrame a read returns: the ``lead`` (field,
+        array) columns, then ``id`` and the ``inc`` projection of the
+        meta rows ``page``, then ``embeddings`` when asked for."""
+        from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
+
+        fields = self._meta_schema(cur, info)[0]
+        cols = ["id"] + (["document"] if "documents" in inc else [])
+        cols += self._meta_cols(info) if "metadatas" in inc else []
+        struct = [f for f, _ in lead] + [fields[c] for c in cols]
+        arrays = [a for _, a in lead] + [page.column(c) for c in cols]
+        if "embeddings" in inc:
+            struct.append(StructField("embedding", ArrayType(DoubleType())))
+            arrays.append(pa.array(embeddings, pa.list_(pa.float64())))
+        return self.spark.createDataFrame(
+            pa.Table.from_arrays(arrays, names=[f.name for f in struct]),
+            StructType(struct),
+        )
+
     def _graph_lineage_dir(self) -> str:
         """The graph sidecar's LINEAGE state dir — stable across
         collection commits (unlike ``index_root``, which fingerprints
@@ -428,10 +594,10 @@ class Collection:
         race still fall back to the full rebuild (which RESETS the
         alias map — a fresh scratch serves plain sids). Emission safety
         is structural: deltas only ever REMOVE ids from the
-        collection's vecs store, and every strategy's final distance
-        join runs against the CURRENT version's vecs, so tombstoned
-        pool candidates drop out there (a replaced sid surviving in a
-        pool as a routing bridge joins to its CURRENT vector — right
+        collection's vecs store, and every strategy's final scoring
+        reads the CURRENT version's vecs, so tombstoned pool
+        candidates drop out there (a replaced sid surviving in a pool
+        as a routing bridge scores with its CURRENT vector — right
         answer by construction; the alias translation dedups it against
         its rid twin). Returns the graph version dir."""
         from ..memo import dataset_fingerprint, index_root
@@ -636,7 +802,6 @@ class Collection:
         semantics)."""
         from ..memo import component_df, version_memo
         from ..operators.ann import VECS_SCHEMA as GV_SCHEMA
-        from ..operators.ann import vec_bucket_py
         from ..operators.graph_ann import (
             GRAPH_EDGES_SCHEMA,
             GRAPH_ENTRY_SCHEMA,
@@ -1757,15 +1922,35 @@ class Collection:
         return Collection(self.spark, dst_root, space=self.space)
 
     def count(self) -> int:
+        """Row count of the resolved version, summed from the meta
+        files' parquet footers (no data page is read)."""
+        import pyarrow.parquet as pq
+
+        from ..memo import version_memo
+
         cur = self._cur()
-        info = self._info(cur)
-        if cur is None or info is None:
+        if cur is None or self._info(cur) is None:
             return 0
-        return self._meta(cur, info).count()
+        meta = os.path.join(cur, "meta")
+        return version_memo(
+            self.spark,
+            cur,
+            "coll_count",
+            lambda: sum(
+                pq.read_metadata(f).num_rows
+                for d in os.listdir(meta)
+                for f in _part_files(os.path.join(meta, d))
+            ),
+            _dir_id(meta),
+        )
 
     def peek(self, n: int = 10) -> DataFrame:
+        """The first ``n`` rows by id."""
+        _require_int("n", n, 0)
         cur, info = self._require()
-        return self._meta(cur, info).drop("mbucket", "vec_id").orderBy("id").limit(n)
+        meta = self._meta_rows(cur, info, range(N_META_BUCKETS))
+        page = meta.take(pc.sort_indices(meta, [("id", "ascending")])[:n])
+        return self._frame(cur, info, {"documents", "metadatas"}, page)
 
     def get(
         self,
@@ -1778,23 +1963,27 @@ class Collection:
         include_embeddings: bool = False,
         include: "list[str] | None" = None,
     ) -> DataFrame:
-        """ChromaDB ``get``: literal ids prune to their mbucket
-        directories; DSL filters compile to pushed-down predicates.
-        Deterministic: ordered by id.
+        """ChromaDB ``get``, ordered by id: literal ids read only their
+        mbucket partitions; ``where``/``where_document`` filter the meta
+        rows on the driver (functions/where_dsl.py's mask).
 
         Pagination: ``offset`` is ChromaDB's positional contract (skip N
-        rows of the id-ordered result — fine for dashboards, but a deep
-        offset still sorts+discards N rows per page). ``after_id`` is the
-        keyset path (``id > after_id`` is a pushed-down predicate, so page
-        depth costs nothing at scale — same discipline as the BM25
-        search_after key); pass one or the other, not both.
+        rows of the id-ordered result). ``after_id`` is the keyset path
+        (the rows with ``id > after_id`` — the BM25 search_after
+        discipline); pass one or the other, not both.
 
         ``include`` is ChromaDB's projection switch, any subset of
         {'documents', 'metadatas', 'embeddings'} (default: documents +
         metadatas, embeddings opt-in — the fat column never rides along
         unasked, the docvalues split). ``include_embeddings=True`` is the
-        pre-r11 spelling of ``include=[..., 'embeddings']``; an
-        ids-bounded get joins a vbucket-pruned vecs slice."""
+        pre-r11 spelling of ``include=[..., 'embeddings']``; it reads
+        only the page's vbucket partitions.
+
+        The result is a local DataFrame: its collect() starts no Spark
+        job, and it stays valid after gc removes its version."""
+        import numpy as np
+        import pandas as pd
+
         cur, info = self._require()
         if offset is not None and after_id is not None:
             raise ValueError("pass offset OR after_id, not both")
@@ -1809,39 +1998,28 @@ class Collection:
             raise ValueError(f"include: unknown items {sorted(unknown)}")
         if include_embeddings:
             inc.add("embeddings")
-        d = self._meta(cur, info)
         if ids is not None:
             sids = sorted({_sid_py(i) for i in _id_list(ids)})
-            mb = sorted({_mbucket_py(s) for s in sids})
-            d = d.filter(F.col("mbucket").isin(mb) & F.col("vec_id").isin(sids))
-        if where is not None:
-            d = d.filter(compile_where(where))
-        if where_document is not None:
-            d = d.filter(compile_where_document(where_document, "document"))
+            meta = self._meta_rows(cur, info, {_mbucket_py(s) for s in sids})
+            keep = np.isin(meta.column("vec_id").to_numpy(), sids)
+        else:
+            meta = self._meta_rows(cur, info, range(N_META_BUCKETS))
+            keep = np.ones(meta.num_rows, bool)
+        keep &= _row_mask(meta, where, where_document)
         if after_id is not None:
-            d = d.filter(F.col("id") > after_id)
+            keep &= pc.greater(meta.column("id"), after_id).to_numpy()
+        page = meta.filter(pa.array(keep))
+        page = page.take(pc.sort_indices(page, [("id", "ascending")]))
+        page = page.slice(offset or 0, limit)
+        emb = None
         if "embeddings" in inc:
-            from ..operators.ann import vec_bucket_py
-
-            v = self._vecs(cur)
-            if ids is not None:
-                v = v.filter(
-                    F.col("vbucket").isin(sorted({vec_bucket_py(s) for s in sids}))
-                )
-            d = d.join(
-                v.select("vec_id", F.col("emb").alias("embedding")),
-                "vec_id",
-                "left",
+            sids = page.column("vec_id").to_numpy()
+            vids, vmat = self._vec_rows(
+                cur, info["dim"], {vec_bucket_py(int(s)) for s in sids}
             )
-        drop = ["mbucket", "vec_id"]
-        if "documents" not in inc:
-            drop.append("document")
-        if "metadatas" not in inc:
-            drop.extend(self._meta_cols(info))
-        d = d.drop(*drop).orderBy("id")
-        if offset:
-            d = d.offset(offset)
-        return d.limit(limit) if limit is not None else d
+            pos = pd.Index(vids).get_indexer(sids)
+            emb = [vmat[p] if p >= 0 else None for p in pos]
+        return self._frame(cur, info, inc, page, embeddings=emb)
 
     def query(
         self,
@@ -1858,56 +2036,56 @@ class Collection:
         graph_rounds: "int | None" = None,
         graph_predicate_expansion: "bool | None" = None,
     ) -> DataFrame:
-        """ChromaDB ``query``: RP-LSH probe (client-side band keys →
-        literal partition predicates), vecs-store cosine rerank, DSL
-        post-filter on the meta sidecar, top n_results per query.
+        """ChromaDB ``query``: RP-LSH probe (client-side band keys name
+        the band partitions to read), exact rerank of the candidates
+        from their vecs partitions, ``where``/``where_document`` on
+        their meta rows, top n_results per query by (distance, id).
+        Runs on the driver over partitions read once per version, with
+        zero Spark jobs; distances equal the Catalyst expressions bit
+        for bit (functions/vector.py's numpy twins and ``round4``).
 
         ``include`` (r11, the ChromaDB projection switch): any subset of
         {'documents', 'metadatas', 'embeddings', 'distances'} — default
         documents + metadatas + distances (the Chroma default);
-        embeddings opt-in, joined from the vecs store only when asked
-        (the get() docvalues discipline). ``id`` and ``query_idx``
-        always ride along (they key the result).
+        embeddings opt-in. ``id`` and ``query_idx`` always ride along
+        (they key the result).
 
         ``filter_strategy`` (r11, the adaptive pre-filter plan every
         production vector DB ships): 'probe' (default) = LSH candidates
-        then post-filter — the documented, oracle-pinned shape; right
-        when filters keep most of the corpus (multiprobe holds
-        recall@10 >= 0.98 down to 10% selectivity, BASELINE.md r11).
-        'exact' = skip the probe and rerank EXACTLY over the filter's
-        survivors — right when the filter is ultra-selective (at 0.1%
-        selectivity the survivors of ANY probe thin below k by
-        construction; exact-over-survivors is both cheaper and
-        recall-1.0 because the survivor set is smaller than a probe's
-        candidate set). 'auto' = one cheap COUNT on the narrow meta
-        sidecar picks: exact iff survivors <= ``prefilter_threshold``
-        (at 100 TB that is a metadata-column count against pushed-down
-        predicates, never a vector read). 'auto' is OPT-IN rather than
-        the default so the default plan stays deterministic and
-        probe-pinned — a plan that silently depends on a cardinality
-        count is the wrong default for a reproducibility-first engine.
+        then post-filter — right when filters keep most of the corpus
+        (multiprobe holds recall@10 >= 0.98 down to 10% selectivity,
+        BASELINE.md r11). 'exact' = skip the probe and rerank EXACTLY
+        over the filter's survivors (zero vectors skipped under cosine)
+        — right when the filter is ultra-selective (at 0.1% selectivity
+        the survivors of ANY probe thin below k by construction).
+        'auto' = exact iff the filter keeps <= ``prefilter_threshold``
+        rows. 'auto' is OPT-IN so the default plan stays probe-pinned:
+        a plan that silently depends on a cardinality is the wrong
+        default for a reproducibility-first engine. 'graph' walks the
+        navigable-graph sidecar (``_graph_pools``) and scores its pool
+        like any other candidates.
 
         ``query_texts`` is the reference's primary entry
         (``semantic_search(query: str)``, vector_search_tool.py:33-46):
-        the text embeds DRIVER-side through the engine's embedder
-        singleton (operators/embed.py — env-gated SentenceTransformer,
-        deterministic hash-projection fallback), one row, no job — the
-        reference does exactly this before its collection.query. The
-        embedder's dim must match the collection's (a collection built
-        with a different encoder fails loudly, never serves garbage).
+        the text embeds DRIVER-side through the collection's embedder
+        (operators/embed.py — env-gated SentenceTransformer,
+        deterministic hash-projection fallback). The embedder's dim
+        must match the collection's (a collection built with a
+        different encoder fails loudly, never serves garbage). A query
+        row holding a NaN or infinite element raises.
 
         ``graph_predicate_expansion`` (tri-state, r15): ``True`` forces
         the ACORN predicate-aware walk, ``False`` forces the blind
-        walk + emission filter, ``None`` (default) AUTO-selects — a
-        filtered graph query estimates selectivity from two narrow
-        meta-sidecar counts and takes the ACORN beam below
-        ``GRAPH_AUTO_EXPANSION_SELECTIVITY`` (the silent thin-pool
-        case a Chroma-parity ``query(where=...)`` caller used to hit).
+        walk + emission filter, ``None`` (default) takes the ACORN beam
+        when the filter keeps at most
+        ``GRAPH_AUTO_EXPANSION_SELECTIVITY`` of the rows.
 
-        Returns (query_idx, id, distance, document, <metadata>), with
-        ``distance = 1 - round(cos, 4)`` (cosine space). Post-filtering
-        is the right order for LSH (buckets are metadata-blind); the
-        multiprobe default widens candidates because filters thin them.
+        Returns (query_idx, distance, id, document, <metadata>), with
+        ``distance = 1 - round(cos, 4)`` (cosine space), as a local
+        DataFrame: its collect() starts no Spark job, and it stays
+        valid after gc removes its version. Post-filtering is the right
+        order for LSH (buckets are metadata-blind); the multiprobe
+        default widens candidates because filters thin them.
         """
         import numpy as np
 
@@ -1960,6 +2138,12 @@ class Collection:
         mat = np.asarray(qs, dtype=np.float64)
         if mat.ndim != 2 or mat.shape[1] != dim:
             raise ValueError(f"query_embeddings must be n x {dim}")
+        bad = np.flatnonzero(~np.isfinite(mat).all(axis=1))
+        if bad.size:
+            raise ValueError(
+                f"query_embeddings: row {int(bad[0])} holds a NaN or "
+                f"infinite element"
+            )
         if self.space == "cosine" and not mat.any(axis=1).all():
             raise ValueError(
                 "query_embeddings: a zero vector has no cosine distance"
@@ -1969,31 +2153,25 @@ class Collection:
                 "filter_strategy: 'auto'|'probe'|'exact'|'graph', "
                 f"got {filter_strategy!r}"
             )
-        meta = self._meta(cur, info)
-        if where is not None:
-            meta = meta.filter(compile_where(where))
-        if where_document is not None:
-            meta = meta.filter(compile_where_document(where_document, "document"))
         has_filter = where is not None or where_document is not None
         strategy = filter_strategy
-        if strategy == "auto":
-            strategy = (
-                "exact"
-                if has_filter and meta.count() <= prefilter_threshold
-                else "probe"
-            )
-        elif strategy == "exact" and not has_filter:
+        if strategy == "exact" and not has_filter:
             raise ValueError(
                 "filter_strategy='exact' needs a where/where_document filter"
             )
-
+        if has_filter and strategy in ("auto", "exact"):
+            # the filter over the whole meta store: exact scores its
+            # survivors, auto counts them
+            meta = self._meta_rows(cur, info, range(N_META_BUCKETS))
+            keep = _row_mask(meta, where, where_document)
+        if strategy == "auto":
+            auto_exact = has_filter and keep.sum() <= prefilter_threshold
+            strategy = "exact" if auto_exact else "probe"
         if strategy == "exact":
             # ultra-selective filter: the survivor set is SMALLER than
             # any probe's candidate set — score all of it exactly
-            qidx = self.spark.createDataFrame(
-                [(i,) for i in range(mat.shape[0])], "query_idx int"
-            )
-            cand = meta.select("vec_id").crossJoin(F.broadcast(qidx))
+            sids = np.sort(meta.column("vec_id").to_numpy()[keep])
+            cands = [sids] * len(mat)
         elif strategy == "graph":
             # the reference's ACTUAL serving structure: beam search over
             # the navigable-graph sidecar built from this version's
@@ -2001,8 +2179,8 @@ class Collection:
             # hnswlib candidate set); the meta filter applies at
             # emission on the pool, never during traversal (the filter-
             # functor discipline — restricting the walk would
-            # disconnect the graph). Distances recompute below in the
-            # same 4-dp Catalyst expression every strategy uses.
+            # disconnect the graph). The pool is scored below like
+            # every strategy's candidates.
             if self.space != "cosine":
                 # the graph's edges and beam scoring are cosine-built;
                 # routing an l2/ip ranking through a cosine graph is the
@@ -2032,29 +2210,18 @@ class Collection:
                 # r15 AUTO (VERDICT r14 next #3): a selective filter
                 # thins the blind walk's emission pool silently — the
                 # exact case a Chroma-parity caller hits with
-                # query(where=...). Estimate selectivity with two
-                # counts on the NARROW meta sidecar (the filtered one
-                # runs against pushed-down predicates; the total is
-                # memoized per immutable version dir — at 100 TB both
-                # are metadata-column counts, never a vector read) and
-                # switch to the ACORN beam below the measured
-                # crossover. Explicit True/False still forces a path —
-                # the oracle-pinned driver keys pass one, so their
-                # executed plan never depends on a cardinality count.
+                # query(where=...). Measure the filter's selectivity on
+                # the meta store and switch to the ACORN beam below the
+                # measured crossover. Explicit True/False still forces
+                # a path — the oracle-pinned driver keys pass one, so
+                # their walk never depends on a cardinality.
                 if has_filter:
-                    from ..memo import version_memo
-
-                    n_total = version_memo(
-                        self.spark,
-                        cur,
-                        "coll_meta_total_rows",
-                        lambda: self._meta(cur, info).count(),
-                    )
+                    meta = self._meta_rows(cur, info, range(N_META_BUCKETS))
                     # inclusive: at exactly half selectivity the r14
                     # table still reads ACORN 0.88 vs blind 0.69
-                    graph_predicate_expansion = (
-                        meta.count()
-                        <= GRAPH_AUTO_EXPANSION_SELECTIVITY * max(1, n_total)
+                    graph_predicate_expansion = bool(
+                        _row_mask(meta, where, where_document).sum()
+                        <= GRAPH_AUTO_EXPANSION_SELECTIVITY * max(1, meta.num_rows)
                     )
                 else:
                     graph_predicate_expansion = False
@@ -2081,7 +2248,13 @@ class Collection:
                 # extra hop (see _graph_beam_batch_acorn); pass lookups
                 # are mbucket-pruned point reads of the FILTERED meta
                 # (by the pool ids' SID translation when rids exist)
-                fmeta = meta
+                fmeta = self._meta(cur, info)
+                if where is not None:
+                    fmeta = fmeta.filter(compile_where(where))
+                if where_document is not None:
+                    fmeta = fmeta.filter(
+                        compile_where_document(where_document, "document")
+                    )
 
                 def pass_of(ids) -> set:
                     ids = sorted(ids)
@@ -2127,102 +2300,80 @@ class Collection:
                         for gid in visited
                     }
                 )
-            cand = self.spark.createDataFrame(
-                rows, "query_idx int, vec_id bigint"
-            )
-        else:
-            signs_t = np.array(
-                _rp_plane_signs(RP_PLANES, dim), dtype=np.int64
-            ).T
-            keys = _rp_band_keys(mat, signs_t)  # n x bands
-
-            probe_rows, pairs = [], set()
-            for qi in range(mat.shape[0]):
-                for b in range(RP_BANDS):
-                    ks = {int(keys[qi][b])}
-                    if multiprobe_hamming >= 1:
-                        ks |= {
-                            int(keys[qi][b]) ^ (1 << bit)
-                            for bit in range(RP_BAND_BITS)
-                        }
-                    for key in sorted(ks):
-                        probe_rows.append((qi, b, key))
-                        pairs.add((b, key))
-
-            probe = self.spark.createDataFrame(
-                probe_rows, "query_idx int, band int, band_key int"
-            )
-            probe_pred = reduce(
-                or_,
-                [
-                    (F.col("band") == b) & (F.col("band_key") == k)
-                    for b, k in sorted(pairs)
-                ],
-            )
-            cand = (
-                self._bands(cur)
-                .filter(probe_pred)
-                .join(F.broadcast(probe), ["band", "band_key"])
-                .select("query_idx", "vec_id")
-                .distinct()
-            )
-        qlits = F.array(
-            *[
-                F.expr("array(" + ",".join(_double_sql(x) for x in row) + ")")
-                for row in mat
+            cands = [
+                np.array([s for q, s in rows if q == qi], np.int64)
+                for qi in range(len(mat))
             ]
-        )
-        e, qe = F.col("emb"), F.col("q_emb")
-        if self.space == "l2":
-            dist = F.round(l2_distance(e, qe), 4)
-        elif self.space == "ip":
-            # Chroma's ip distance VALUE contract: 1 - <a,b> (ADVICE r11 —
-            # callers threshold and display distances, not just rank them)
-            dist = F.lit(1.0) - F.round(dot_product(e, qe), 4)
+            sids = np.unique(np.concatenate(cands))
+            meta = self._meta_rows(cur, info, {_mbucket_py(int(s)) for s in sids})
+            keep = _row_mask(meta, where, where_document)
         else:
-            dist = F.lit(1.0) - F.round(cosine_similarity(e, qe), 4)
-        vecs = self._vecs(cur)
-        if strategy == "exact" and self.space == "cosine":
-            # a zero vector is stored, never banded: probe and graph
-            # never reach it, and its cosine is undefined
-            vecs = vecs.filter(_nonzero_pred())
-        scored = (
-            vecs.join(cand, "vec_id")
-            .withColumn("q_emb", F.element_at(qlits, F.col("query_idx") + 1))
-            .select("query_idx", "vec_id", dist.alias("distance"))
+            # probe: the query's band keys and (multiprobe) their
+            # Hamming-1 flips name the band partitions to read
+            keys = _rp_band_keys(
+                mat, np.array(_rp_plane_signs(RP_PLANES, dim), np.int64).T
+            )
+            flips = [0] + [1 << b for b in range(RP_BAND_BITS) if multiprobe_hamming]
+            cands, vbs, mbs = [], set(), set()
+            for qk in keys:
+                parts = [
+                    self._band_part(cur, b, int(k))
+                    for b in range(RP_BANDS)
+                    for k in sorted({int(qk[b]) ^ f for f in flips})
+                ]
+                cands.append(np.unique(np.concatenate([p[0] for p in parts])))
+                for _, pv, pm in parts:
+                    vbs.update(pv.tolist())
+                    mbs.update(pm.tolist())
+            meta = self._meta_rows(cur, info, mbs)
+            keep = _row_mask(meta, where, where_document)
+        if strategy != "probe":
+            vbs = {vec_bucket_py(int(s)) for s in np.unique(np.concatenate(cands))}
+        return self._rank(
+            cur, info, mat, cands, vbs, meta, keep, n_results, inc,
+            nonzero=strategy == "exact" and self.space == "cosine",
         )
-        joined = scored.join(meta.drop("mbucket"), "vec_id")
-        if "embeddings" in inc:
-            joined = joined.join(
-                self._vecs(cur).select("vec_id", F.col("emb").alias("embedding")),
-                "vec_id",
-            )
-        drop = ["vec_id"]
-        if "documents" not in inc:
-            drop.append("document")
-        if "metadatas" not in inc:
-            drop.extend(self._meta_cols(info))
-        if mat.shape[0] == 1:
-            # single query: a global top-k collapses to
-            # TakeOrderedAndProject — no rank-window shuffle
-            out = (
-                joined.orderBy(F.asc("distance"), F.asc("id"))
-                .limit(n_results)
-                .drop(*drop)
-            )
-            return out.drop("distance") if "distances" not in inc else out
-        from pyspark.sql.window import Window
 
-        w = Window.partitionBy("query_idx").orderBy(
-            F.asc("distance"), F.asc("id")
+    def _rank(
+        self, cur, info, mat, cands, vbs, meta, keep, n_results, inc, nonzero
+    ) -> DataFrame:
+        """Score each query's candidate sids that are stored (in the
+        ``vbs`` partitions) and kept (``keep`` over ``meta``), and emit
+        the top ``n_results`` per query by (distance, id)."""
+        import numpy as np
+        import pandas as pd
+        from pyspark.sql.types import DoubleType, IntegerType, StructField
+
+        vids, vmat = self._vec_rows(cur, info["dim"], vbs)
+        vix = pd.Index(vids)
+        mpos = np.flatnonzero(keep)
+        mix = pd.Index(meta.column("vec_id").to_numpy()[mpos])
+        ids = meta.column("id").to_numpy(zero_copy_only=False)
+        out_q, out_d, out_m, out_v = [], [], [], []
+        for qi, c in enumerate(cands):
+            pv, pm = vix.get_indexer(c), mix.get_indexer(c)
+            ok = (pv >= 0) & (pm >= 0)
+            pv, pm = pv[ok], mpos[pm[ok]]
+            if nonzero:
+                # a zero vector is stored, never banded: probe and graph
+                # never reach it, and its cosine is undefined
+                nz = vmat[pv].any(axis=1)
+                pv, pm = pv[nz], pm[nz]
+            r = np_round4(np_scores(vmat[pv], mat[qi : qi + 1], self.space)[:, 0])
+            dist = r if self.space == "l2" else 1.0 - r
+            # Spark's ascending order: NaN last, ties by id
+            top = np.lexsort((ids[pm], dist))[:n_results]
+            out_q += [qi] * len(top)
+            out_d += dist[top].tolist()
+            out_m += pm[top].tolist()
+            out_v += pv[top].tolist()
+        lead = [(StructField("query_idx", IntegerType()), pa.array(out_q, pa.int32()))]
+        if "distances" in inc:
+            lead.append((StructField("distance", DoubleType()), pa.array(out_d, pa.float64())))
+        return self._frame(
+            cur, info, inc, meta.take(pa.array(out_m, pa.int64())), lead,
+            embeddings=[vmat[v] for v in out_v],
         )
-        out = (
-            joined.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= n_results)
-            .drop("rank", *drop)
-            .orderBy("query_idx", "distance", "id")
-        )
-        return out.drop("distance") if "distances" not in inc else out
 
 
 def _stored_space(root: str, default: str = "cosine") -> str:
@@ -2365,51 +2516,52 @@ class Client:
 # every other index root.
 
 
-def demo_collection(spark: SparkSession, sf_dir: str) -> Collection:
-    from ..memo import index_root
+def _demo_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The demo corpus as a write batch, plus ``par`` = doc_id % 2 for
+    the two-commit lifecycle keys."""
     from ..sources.tables import load_table
 
-    root = index_root(
-        "collection_v1", sf_dir, RP_PLANES, RP_BANDS, N_META_BUCKETS
+    d = load_table(spark, sf_dir, "documents")
+    e = load_table(spark, sf_dir, "embeddings")
+    return e.join(d, e["vec_id"] == d["doc_id"]).select(
+        F.concat(F.lit("doc-"), F.col("doc_id").cast("string")).alias("id"),
+        F.col("embedding").cast("array<double>").alias("embedding"),
+        F.col("text").alias("document"),
+        "lang",
+        "source",
+        "n_chars",
+        (F.col("doc_id") % 2).alias("par"),
     )
-    coll = Collection(spark, root)
-    if coll._cur() is None:
-        d = load_table(spark, sf_dir, "documents")
-        e = load_table(spark, sf_dir, "embeddings")
-        batch = e.join(d, e["vec_id"] == d["doc_id"]).select(
-            F.concat(F.lit("doc-"), F.col("doc_id").cast("string")).alias("id"),
-            F.col("embedding").cast("array<double>").alias("embedding"),
-            F.col("text").alias("document"),
-            "lang",
-            "source",
-            "n_chars",
-        )
-        coll.add(batch)
-    return coll
 
 
-def demo_collection_ip(spark: SparkSession, sf_dir: str) -> Collection:
-    """Inner-product-space twin of ``demo_collection`` (own memoized
-    root — the space is fixed at creation and persisted)."""
-    from ..memo import index_root
+def _demo_query(spark: SparkSession, sf_dir: str, vec_id: int) -> list:
+    """The stored embedding of ``vec_id`` as a query vector."""
     from ..sources.tables import load_table
 
-    root = index_root(
-        "collection_ip_v1", sf_dir, RP_PLANES, RP_BANDS, N_META_BUCKETS
+    row = (
+        load_table(spark, sf_dir, "embeddings")
+        .filter(F.col("vec_id") == vec_id)
+        .select(F.col("embedding").cast("array<double>").alias("e"))
+        .head()
     )
-    coll = Collection(spark, root, space="ip")
+    return [float(x) for x in row["e"]]
+
+
+def _demo_root(spark: SparkSession, sf_dir: str, tag: str, space="cosine"):
+    """The memoized demo collection root ``tag`` (created empty)."""
+    from ..memo import index_root
+
+    root = index_root(tag, sf_dir, RP_PLANES, RP_BANDS, N_META_BUCKETS)
+    return Collection(spark, root, space=space)
+
+
+def demo_collection(spark: SparkSession, sf_dir: str, space="cosine") -> Collection:
+    """The whole demo corpus in one collection of ``space`` (own
+    memoized root per space — the space is fixed at creation)."""
+    tag = "collection_v1" if space == "cosine" else f"collection_{space}_v1"
+    coll = _demo_root(spark, sf_dir, tag, space)
     if coll._cur() is None:
-        d = load_table(spark, sf_dir, "documents")
-        e = load_table(spark, sf_dir, "embeddings")
-        batch = e.join(d, e["vec_id"] == d["doc_id"]).select(
-            F.concat(F.lit("doc-"), F.col("doc_id").cast("string")).alias("id"),
-            F.col("embedding").cast("array<double>").alias("embedding"),
-            F.col("text").alias("document"),
-            "lang",
-            "source",
-            "n_chars",
-        )
-        coll.add(batch)
+        coll.add(_demo_batch(spark, sf_dir).drop("par"))
     return coll
 
 
@@ -2421,17 +2573,8 @@ def collection_query_ip_topk(
     with space='ip' and distances follow ChromaDB's value contract
     ``1 - <a,b>`` (the ADVICE r11 fix, oracle-locked here — rankings
     alone would not catch a constant shift)."""
-    from ..sources.tables import load_table
-
-    coll = demo_collection_ip(spark, sf_dir)
-    q = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") == query_vec_id)
-        .select(F.col("embedding").cast("array<double>").alias("e"))
-        .head()
-    )
-    return coll.query(
-        [float(x) for x in q["e"]],
+    return demo_collection(spark, sf_dir, "ip").query(
+        _demo_query(spark, sf_dir, query_vec_id),
         n_results=k,
         where=COLLECTION_WHERE_DEMO,
     ).select("id", "distance", "lang", "n_chars")
@@ -2445,17 +2588,8 @@ def collection_query_topk(
     facade: client-side band keys -> pruned band probe -> vecs rerank ->
     DSL post-filter -> top-k. Includes the query's own document
     (ChromaDB does not exclude self-matches)."""
-    from ..sources.tables import load_table
-
-    coll = demo_collection(spark, sf_dir)
-    q = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") == query_vec_id)
-        .select(F.col("embedding").cast("array<double>").alias("e"))
-        .head()
-    )
-    return coll.query(
-        [float(x) for x in q["e"]],
+    return demo_collection(spark, sf_dir).query(
+        _demo_query(spark, sf_dir, query_vec_id),
         n_results=k,
         where=COLLECTION_WHERE_DEMO,
     ).select("id", "distance", "lang", "n_chars")
@@ -2472,17 +2606,8 @@ def collection_query_graph_topk(
     included at distance 0. The oracle reconstructs the whole graph
     over the collection's md5-surrogate ids and replays the raw-vector
     beam (entry hub + query-cell hub seeds, no self-exclusion)."""
-    from ..sources.tables import load_table
-
-    coll = demo_collection(spark, sf_dir)
-    q = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") == query_vec_id)
-        .select(F.col("embedding").cast("array<double>").alias("e"))
-        .head()
-    )
-    return coll.query(
-        [float(x) for x in q["e"]],
+    return demo_collection(spark, sf_dir).query(
+        _demo_query(spark, sf_dir, query_vec_id),
         n_results=k,
         where=COLLECTION_WHERE_DEMO,
         filter_strategy="graph",
@@ -2504,17 +2629,8 @@ def collection_query_graph_acorn_topk(
     (GRAPH_BEAM/GRAPH_ROUNDS, which dominates r13's measured
     raise-ef-for-filters graph_beam=16 setting). The oracle replays the
     pass-flagged fused beam over the surrogate keyspace."""
-    from ..sources.tables import load_table
-
-    coll = demo_collection(spark, sf_dir)
-    q = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") == query_vec_id)
-        .select(F.col("embedding").cast("array<double>").alias("e"))
-        .head()
-    )
-    return coll.query(
-        [float(x) for x in q["e"]],
+    return demo_collection(spark, sf_dir).query(
+        _demo_query(spark, sf_dir, query_vec_id),
         n_results=k,
         where={"lang": {"$eq": "fr"}},
         filter_strategy="graph",
@@ -2534,19 +2650,8 @@ def collection_query_graph_batch_topk(
     per-query state untouched, so each query's rows equal its solo run
     (pinned) and the oracle replays M solo chains over the shared
     surrogate-keyspace graph."""
-    from ..sources.tables import load_table
-
+    qs = [_demo_query(spark, sf_dir, qid) for qid in query_vec_ids]
     coll = demo_collection(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings")
-    qs = [
-        [
-            float(x)
-            for x in emb.filter(F.col("vec_id") == qid)
-            .select(F.col("embedding").cast("array<double>").alias("e"))
-            .head()["e"]
-        ]
-        for qid in query_vec_ids
-    ]
     return coll.query(qs, n_results=k, filter_strategy="graph").select(
         "query_idx", "id", "distance"
     )
@@ -2573,24 +2678,8 @@ def collection_get_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rows are exactly the FIRST commit's filter survivors, proving
     committed version dirs are immutable snapshots. Replays detect the
     target state (both versions present) and serve directly."""
-    from ..memo import index_root
-    from ..sources.tables import load_table
-
-    root = index_root(
-        "collection_snap_v1", sf_dir, RP_PLANES, RP_BANDS, N_META_BUCKETS
-    )
-    coll = Collection(spark, root)
-    d = load_table(spark, sf_dir, "documents")
-    e = load_table(spark, sf_dir, "embeddings")
-    base = e.join(d, e["vec_id"] == d["doc_id"]).select(
-        F.concat(F.lit("doc-"), F.col("doc_id").cast("string")).alias("id"),
-        F.col("embedding").cast("array<double>").alias("embedding"),
-        F.col("text").alias("document"),
-        "lang",
-        "source",
-        "n_chars",
-        (F.col("doc_id") % 2).alias("par"),
-    )
+    coll = _demo_root(spark, sf_dir, "collection_snap_v1")
+    base = _demo_batch(spark, sf_dir)
     if coll._cur() is None:
         coll.add(base.filter(F.col("par") == 0).drop("par"))
     if os.path.basename(coll._cur()) == "v_000000":
@@ -2612,28 +2701,12 @@ def collection_rollback_get(spark: SparkSession, sf_dir: str) -> DataFrame:
     orphan the next commit sweeps). Replay-safe at every crash window:
     whatever version ``_CURRENT`` names on entry, the key converges it
     back to v_000000 before reading."""
-    from ..memo import index_root
-    from ..sources.tables import load_table
-
-    root = index_root(
-        "collection_rollback_v1", sf_dir, RP_PLANES, RP_BANDS, N_META_BUCKETS
-    )
-    coll = Collection(spark, root)
-    d = load_table(spark, sf_dir, "documents")
-    e = load_table(spark, sf_dir, "embeddings")
-    base = e.join(d, e["vec_id"] == d["doc_id"]).select(
-        F.concat(F.lit("doc-"), F.col("doc_id").cast("string")).alias("id"),
-        F.col("embedding").cast("array<double>").alias("embedding"),
-        F.col("text").alias("document"),
-        "lang",
-        "source",
-        "n_chars",
-        (F.col("doc_id") % 2).alias("par"),
-    )
+    coll = _demo_root(spark, sf_dir, "collection_rollback_v1")
+    base = _demo_batch(spark, sf_dir)
     if coll._cur() is None:
         coll.add(base.filter(F.col("par") == 0).drop("par"))
     if os.path.basename(coll._cur()) == "v_000000" and not os.path.isdir(
-        os.path.join(root, "v_000001")
+        os.path.join(coll.root, "v_000001")
     ):
         coll.add(base.filter(F.col("par") == 1).drop("par"))
     if os.path.basename(coll._cur()) != "v_000000":
@@ -2668,41 +2741,19 @@ def collection_replace_graph_topk(
     against the CURRENT (post-replace) vectors."""
     import shutil
 
-    from ..memo import index_root
-    from ..sources.tables import load_table
-
-    root = index_root(
-        "collection_replace_graph_v1", sf_dir, RP_PLANES, RP_BANDS,
-        N_META_BUCKETS,
-    )
-    coll = Collection(spark, root)
-    d = load_table(spark, sf_dir, "documents")
-    e = load_table(spark, sf_dir, "embeddings")
-    base = e.join(d, e["vec_id"] == d["doc_id"]).select(
-        F.concat(F.lit("doc-"), F.col("doc_id").cast("string")).alias("id"),
-        F.col("embedding").cast("array<double>").alias("embedding"),
-        F.col("text").alias("document"),
-        "lang",
-        "source",
-        "n_chars",
-    )
+    coll = _demo_root(spark, sf_dir, "collection_replace_graph_v1")
+    base = _demo_batch(spark, sf_dir)
     if coll._cur() is None:
-        coll.add(base)
+        coll.add(base.drop("par"))
     if os.path.basename(coll._cur()) != "v_000000":
         coll.rollback("v_000000")
     shutil.rmtree(coll._graph_lineage_dir(), ignore_errors=True)
-    qv = [
-        float(x)
-        for x in e.filter(F.col("vec_id") == 7).head()["embedding"]
-    ]
+    qv = _demo_query(spark, sf_dir, 7)
     # stage the sidecar at v_000000 (the lineage anchor the delta
     # advances from)
     coll.query(qv, n_results=1, filter_strategy="graph").collect()
     coll.update(
-        e.filter(F.col("vec_id") == 7).select(
-            F.lit("doc-3").alias("id"),
-            F.col("embedding").cast("array<double>").alias("embedding"),
-        )
+        spark.createDataFrame([("doc-3", qv)], "id string, embedding array<double>")
     )
     return coll.query(qv, n_results=k, filter_strategy="graph").select(
         "id", "distance"

@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import weakref
 from typing import Any, Callable
 
 from pyspark.sql import SparkSession
@@ -39,6 +40,18 @@ from pyspark.sql import SparkSession
 MEMO_MAX = 48
 _MEMO: "dict[tuple, Any]" = {}
 _MISS = object()
+_APP_IDS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+
+
+def _app_id(spark: SparkSession) -> str:
+    """The session's applicationId, fetched once per SparkContext: each
+    ``sc.applicationId`` is a py4j round trip, and a collection read
+    makes one memo lookup per partition."""
+    sc = spark.sparkContext
+    aid = _APP_IDS.get(sc)
+    if aid is None:
+        aid = _APP_IDS[sc] = sc.applicationId
+    return aid
 
 
 def dataset_fingerprint(sf_dir: str) -> tuple:
@@ -73,7 +86,7 @@ def session_memo(
     part of the key, so regenerated testdata under the same path misses
     cleanly instead of serving a stale frame."""
     key = (
-        spark.sparkContext.applicationId,
+        _app_id(spark),
         os.path.abspath(sf_dir),
         dataset_fingerprint(sf_dir),
         name,
@@ -97,8 +110,11 @@ def session_memo(
 # listing-avoidance the handle memo exists for. Separate from _MEMO so
 # cheap lazy handles can never FIFO-evict expensive built frames
 # (minhash/simhash/band signatures); LRU because ingest lifecycles mint
-# new version dirs all session long.
-VERSION_MEMO_MAX = 256
+# new version dirs all session long. Sized for the collection read path,
+# which memoizes one entry per partition dir (up to 96 band + 32 vecs +
+# 32 meta dirs per version): a few versions served side by side (an
+# at() view next to the live one) plus the graph sidecar's handles.
+VERSION_MEMO_MAX = 1024
 _VERSION_MEMO: "dict[tuple, Any]" = {}
 
 
@@ -115,7 +131,7 @@ def version_memo(
     content-addressed ``index_root`` scratch) — never a path whose
     contents can be rewritten in place."""
     key = (
-        spark.sparkContext.applicationId,
+        _app_id(spark),
         os.path.abspath(ver_dir),
         name,
         *extra,

@@ -22,6 +22,7 @@ brute force in tests.
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 
@@ -87,21 +88,24 @@ def _seq_self_dot(vals) -> float:
     return acc
 
 
-def _rp_plane_signs(planes: int = RP_PLANES, dim: int = RP_DIM) -> list[list[int]]:
+@functools.lru_cache(maxsize=None)
+def _rp_plane_signs(planes: int = RP_PLANES, dim: int = RP_DIM) -> tuple:
     """The planes x dim +-1 hyperplane matrix, derived from md5 so the
     DuckDB oracle regenerates it bit-identically in SQL:
     ``CAST(('0x' || substr(md5('rp|' || p || '|' || i), 1, 15)) AS BIGINT) % 2``.
+    Cached (immutable tuples): every query derives its band keys from
+    it, and its planes x dim md5 calls take ~3 ms at dim 64.
     """
     import hashlib
 
-    return [
-        [
+    return tuple(
+        tuple(
             1 if int(hashlib.md5(f"rp|{p}|{i}".encode()).hexdigest()[:15], 16) % 2 == 0
             else -1
             for i in range(1, dim + 1)
-        ]
+        )
         for p in range(planes)
-    ]
+    )
 
 
 def _rp_band_keys(mat, signs_t) -> "object":
@@ -910,10 +914,10 @@ def _ivf_serve_topk(
     nprobe: int,
 ) -> DataFrame:
     """The shared trained-IVF probe tail: driver-side centroid cosine
-    ranking (Decimal HALF_UP — F.round/DuckDB midpoint semantics,
+    ranking (``round4`` — F.round/DuckDB midpoint semantics,
     ADVICE r6), nprobe LITERAL cell pruning on the stored assignment,
     exact vbucket-pruned rerank from the index's own vecs/ store."""
-    from decimal import ROUND_HALF_UP, Decimal
+    from ..functions.vector import round4
 
     # Fully index-served (r9): the query vector and the rerank vectors
     # come from the index's own vecs/ store (vbucket-pruned point
@@ -939,12 +943,8 @@ def _ivf_serve_topk(
 
         return num / (math.sqrt(dd) * math.sqrt(qq))
 
-    four = Decimal("0.0001")
     ranked = sorted(
-        (
-            (Decimal(repr(cos(c))).quantize(four, rounding=ROUND_HALF_UP), cluster)
-            for cluster, c in cent_rows
-        ),
+        ((round4(cos(c)), cluster) for cluster, c in cent_rows),
         key=lambda t: (-t[0], t[1]),
     )
     top = [int(cluster) for _, cluster in ranked[:nprobe]]

@@ -78,7 +78,7 @@ from decimal import ROUND_HALF_UP, Decimal
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.vector import cosine_similarity
+from ..functions.vector import cosine_similarity, round4
 from ..sources import versioning as vn
 from ..sources.tables import load_table
 from .ann import (
@@ -685,15 +685,13 @@ def build_graph_index(
 
 def _sim4(a: list, b: list) -> float:
     """4-dp cosine on doubles: left-to-right fold (list_inner_product's
-    order) + Decimal HALF_UP quantize (= F.round / DuckDB round on these
-    values)."""
+    order) + ``round4`` (= F.round / DuckDB round on these values)."""
     num = aa = bb = 0.0
     for x, y in zip(a, b):
         num += x * y
         aa += x * x
         bb += y * y
-    c = num / (math.sqrt(aa) * math.sqrt(bb))
-    return float(Decimal(repr(c)).quantize(Decimal("0.0001"), rounding=ROUND_HALF_UP))
+    return round4(num / (math.sqrt(aa) * math.sqrt(bb)))
 
 
 def _graph_coarse_rows(spark: SparkSession, cur: str) -> tuple:

@@ -47,6 +47,10 @@ def get_spark(
         # No \r stage-progress lines: the bench driver parses a JSON line
         # from a small output tail, and progress spam can evict it.
         .config("spark.ui.showConsoleProgress", "false")
+        # pyspark 4.1 otherwise captures a Python call-site origin
+        # (stack inspection) on every DataFrame/Column call, for error
+        # messages; plan-building paths make thousands of such calls
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

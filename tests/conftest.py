@@ -82,3 +82,20 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMALL
+
+
+@pytest.fixture()
+def opened_dirs(monkeypatch):
+    """Every partition dir a collection read opens in the test (memo
+    hits included), in order."""
+    from adk_noui_vectordb_spark.api import collection as capi
+
+    seen = []
+    real = capi._read_partition
+
+    def record(spark, part, columns, convert):
+        seen.append(part)
+        return real(spark, part, columns, convert)
+
+    monkeypatch.setattr(capi, "_read_partition", record)
+    return seen

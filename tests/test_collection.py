@@ -312,16 +312,147 @@ def test_empty_batch_is_noop(spark, coll):
     assert coll.count() == 1
 
 
-def test_query_probe_prunes_band_partitions(spark, coll):
-    """The band scan must carry partition filters (static pruning) —
-    the plan reads probed bucket directories, not the table."""
+def test_query_probe_prunes_band_partitions(spark, coll, opened_dirs):
+    """A probe opens exactly the probed band=/band_key= dirs (the
+    query's band keys and their Hamming-1 flips) and the vbucket=/
+    mbucket= dirs holding their candidates — never the whole table."""
+    import os
+
+    from adk_noui_vectordb_spark.api.collection import _mbucket_py
+    from adk_noui_vectordb_spark.operators.ann import vec_bucket_py
+
     mat = _vecs(18, 12)
     coll.add(_batch(spark, [f"p{i}" for i in range(12)], mat))
-    df = coll.query([float(x) for x in mat[0]], n_results=3)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "band" in plan  # sanity
-    # the probe predicate appears as a data/partition filter on the scan
-    assert "band_key" in plan
+    seen = opened_dirs
+    coll.query([float(x) for x in mat[0]], n_results=3).collect()
+    cur = coll._cur()
+    keys = _rp_band_keys(mat[:1], np.array(_rp_plane_signs(RP_PLANES, DIM)).T)[0]
+    probed = {
+        (b, int(keys[b]) ^ flip)
+        for b in range(RP_BANDS)
+        for flip in [0] + [1 << bit for bit in range(RP_BAND_BITS)]
+    }
+    rel = [os.path.relpath(p, cur) for p in seen]
+    assert {r for r in rel if r.startswith("bands/")} == {
+        f"bands/band={b}/band_key={k}" for b, k in probed
+    }
+    cand = {
+        r["vec_id"]
+        for r in coll._bands(cur).collect()
+        if (r["band"], r["band_key"]) in probed
+    }
+    assert {r for r in rel if r.startswith("vecs/")} == {
+        f"vecs/vbucket={vec_bucket_py(s)}" for s in cand
+    }
+    assert {r for r in rel if r.startswith("meta/")} == {
+        f"meta/mbucket={_mbucket_py(s)}" for s in cand
+    }
+    assert len(probed) < RP_BANDS * 2**RP_BAND_BITS  # some dirs unread
+
+
+def test_query_rejects_non_finite_query_vector(spark, coll):
+    """A NaN or infinite query element fails at call time with one
+    ValueError naming the row, whatever the strategy."""
+    mat = _vecs(19, 6)
+    coll.add(_batch(spark, [f"n{i}" for i in range(6)], mat))
+    for bad in (float("nan"), float("inf"), float("-inf")):
+        q = [float(x) for x in mat[1]]
+        q[2] = bad
+        for strategy in ("probe", "exact", "auto", "graph"):
+            with pytest.raises(ValueError, match="row 1 .*NaN or infinite"):
+                coll.query(
+                    [[float(x) for x in mat[0]], q],
+                    n_results=2,
+                    where={"lang": "en"},
+                    filter_strategy=strategy,
+                )
+
+
+def test_results_outlive_later_commits(spark, coll):
+    """query() and get() results are materialized: they still collect
+    after gc removed the version they were read from, through the live
+    collection and through an at() view alike."""
+    import os
+
+    mat = _vecs(23, 8)
+    coll.add(_batch(spark, [f"r{i}" for i in range(4)], mat[:4]))
+    v0 = os.path.basename(coll._cur())
+    q = [float(x) for x in mat[1]]
+    snap = coll.at(v0)
+    taken = {
+        "query": coll.query(q, n_results=2),
+        "get": coll.get(where={"lang": "en"}),
+        "at_query": snap.query(q, n_results=2),
+        "at_get": snap.get(ids=["r2"]),
+    }
+    for i in range(4, 7):
+        coll.upsert(_batch(spark, [f"r{i}"], mat[i : i + 1]))
+    assert v0 not in {v["name"] for v in coll.versions()}
+    assert [r["id"] for r in taken["query"].collect()][0] == "r1"
+    assert [r["id"] for r in taken["at_query"].collect()][0] == "r1"
+    assert [r["id"] for r in taken["get"].collect()] == ["r0", "r1", "r2", "r3"]
+    assert [r["id"] for r in taken["at_get"].collect()] == ["r2"]
+
+
+def test_numpy_scorer_is_bit_exact_against_catalyst(spark, sf_dir):
+    """The driver scorer equals the Catalyst expression the Spark plans
+    use (functions/vector.py + F.round(..., 4)) bit for bit, raw and
+    rounded, in all three spaces — on the fixture embeddings and on
+    constructed rows whose unrounded score is a decimal tie (repr ends
+    in 5 at the 5th decimal), where half-to-even rounding would differ."""
+    import math
+    import os
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from adk_noui_vectordb_spark.functions.vector import (
+        cosine_similarity,
+        dot_product,
+        l2_distance,
+        np_round4,
+        np_scores,
+        round4,
+    )
+
+    emb = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"))
+    rows = [[float(x) for x in v] for v in emb.column("embedding").to_pylist()]
+    dim = len(rows[0])
+    ties = []
+    for x in (0.00015, 0.00225, 0.12345, 0.50005, -0.31415):
+        # cosine against the first axis is x exactly; ip and l2 too
+        ties.append([x, math.sqrt(1 - x * x)] + [0.0] * (dim - 2))
+        ties.append([x] + [0.0] * (dim - 1))
+    rows += ties
+    axis = [1.0] + [0.0] * (dim - 1)
+    queries = [axis, rows[0], rows[7]]
+    mat = np.array(rows)
+    df = spark.createDataFrame(
+        [(i, r) for i, r in enumerate(rows)], "i int, emb array<double>"
+    )
+    exprs = {
+        "cosine": cosine_similarity,
+        "l2": l2_distance,
+        "ip": dot_product,
+    }
+    n_ties = 0
+    for space, fn in exprs.items():
+        for q in queries:
+            qlit = F.array(*[F.lit(x) for x in q])
+            got = df.select(
+                "i", fn(F.col("emb"), qlit).alias("raw"),
+                F.round(fn(F.col("emb"), qlit), 4).alias("r4"),
+            ).orderBy("i").collect()
+            raw = np_scores(mat, np.array([q]), space)[:, 0]
+            r4 = np_round4(raw)
+            assert [r["raw"] for r in got] == raw.tolist(), space
+            assert [r["r4"] for r in got] == r4.tolist(), space
+            assert [round4(x) for x in raw.tolist()] == r4.tolist()
+            n_ties += sum(
+                float(np.round(x, 4)) != y for x, y in zip(raw, r4)
+            )
+    assert n_ties >= 5  # the tie rows are where half-to-even would differ
+
 
 def test_rollback_undoes_a_bad_batch(spark, coll):
     mat = _vecs(20, 4)
@@ -336,9 +467,12 @@ def test_rollback_undoes_a_bad_batch(spark, coll):
     assert row["lang"] == "en" and row["document"] == "text of b"
     top = coll.query([float(x) for x in mat[1]], n_results=1).head()
     assert top["id"] == "b" and top["distance"] == 0.0
-    # and the collection stays writable after the rollback
+    # and the collection stays writable after the rollback; the commit
+    # reuses the abandoned version's name, and reads serve its new
+    # content, not what an earlier read of that name memoized
     coll.upsert(_batch(spark, ["e"], _vecs(22, 1)))
     assert coll.count() == 5
+    assert coll.get(ids=["b"]).head()["lang"] == "en"
 
 
 def test_merge_disjoint_shards(spark, tmp_path):

@@ -372,42 +372,81 @@ def test_new_serving_ops_prune_and_avoid_corpus(spark, sf_dir):
         assert any(part_col in s.split("\n")[0] for s in seg[1:]), plan
 
 
-def test_collection_serving_plans_are_index_only(spark, sf_dir):
-    """The facade's serving plans: the query's band scan carries the
-    literal probe pairs as PartitionFilters (static pruning), the meta
-    DSL filter reaches its scan's PushedFilters, and neither plan ever
-    scans the source documents/embeddings parquet — the collection
-    root is the corpus of record."""
+def test_collection_serving_plans_are_index_only(spark, sf_dir, opened_dirs):
+    """The facade's reads stay inside the collection root: a probe
+    opens only band=/band_key= dirs it probed and the vbucket=/mbucket=
+    dirs of their candidates, a filtered get opens only meta dirs, and
+    neither ever opens the source documents/embeddings parquet — the
+    collection root is the corpus of record."""
     from adk_noui_vectordb_spark.api import collection as capi
 
     coll = capi.demo_collection(spark, sf_dir)
-    q = capi.collection_query_topk(spark, sf_dir)
-    plan = explain_str(q)
-    segs = plan.split("PartitionFilters")
-    assert any(
-        "band" in s.split("\n")[0] for s in segs[1:]
-    ), plan  # probed (band, band_key) literals prune the bands scan
-    assert "documents.parquet" not in plan, plan
-    assert "embeddings.parquet" not in plan, plan
+    cur = coll._cur()
+    seen = opened_dirs
+    capi.collection_query_topk(spark, sf_dir).collect()
+    assert seen and all(p.startswith(cur + os.sep) for p in seen), seen
+    comps = {os.path.relpath(p, cur).split(os.sep)[0] for p in seen}
+    assert comps == {"bands", "vecs", "meta"}, seen
+    bands = {os.path.relpath(p, cur) for p in seen if "/bands/" in p}
+    assert 0 < len(bands) <= 6 * 5, bands  # 6 bands x (key + 4 flips)
+    assert not any("documents" in p or "embeddings" in p for p in seen)
 
-    g = coll.get(where={"lang": {"$in": ["en", "de"]}}, limit=5)
-    gplan = explain_str(g)
-    pushed = [ln for ln in gplan.splitlines() if "PushedFilters" in ln]
-    assert pushed and any("lang" in ln for ln in pushed), gplan
-    assert "documents.parquet" not in gplan, gplan
+    seen.clear()
+    coll.get(where={"lang": {"$in": ["en", "de"]}}, limit=5).collect()
+    assert seen and all(
+        os.path.relpath(p, cur).startswith("meta" + os.sep) for p in seen
+    ), seen
 
 
-def test_collection_keyset_page_pushes_cursor_to_scan(spark, sf_dir):
-    """get(after_id=...) must reach the meta parquet scan as a pushed
-    filter (the keyset-pagination contract: page depth costs nothing) —
-    and the default get() projection must NOT read the vecs store."""
+def test_collection_keyset_page_pushes_cursor_to_scan(spark, sf_dir, opened_dirs):
+    """get(after_id=...) serves the page after the cursor from the meta
+    partitions alone — the default get() projection opens no vecs/ dir
+    (the docvalues split: no fat column)."""
     from adk_noui_vectordb_spark.api.collection import demo_collection
 
     coll = demo_collection(spark, sf_dir)
-    df = coll.get(limit=5, after_id="doc-1")
-    plan = explain_str(df)
-    assert "PushedFilters" in plan and "doc-1" in plan, plan
-    assert "/vecs" not in plan, plan  # docvalues split: no fat column
+    seen = opened_dirs
+    page = [r["id"] for r in coll.get(limit=5, after_id="doc-1").collect()]
+    everything = [r["id"] for r in coll.get().collect()]
+    assert page == [i for i in everything if i > "doc-1"][:5]
+    assert seen and not any("/vecs/" in p for p in seen), seen
+
+
+def test_collection_reads_run_no_spark_jobs(spark, sf_dir):
+    """Warm serving reads run ZERO Spark jobs: query (probe, filtered,
+    batch), get by ids, keyset-paged get(where, after_id) and count
+    read memoized partitions on the driver and return a local
+    DataFrame whose collect() schedules nothing."""
+    from adk_noui_vectordb_spark.api.collection import demo_collection
+
+    coll = demo_collection(spark, sf_dir)
+    q = [r["emb"] for r in coll._vecs(coll._cur()).limit(2).collect()]
+    reads = {
+        "query.probe": lambda: coll.query(q[0], n_results=5).collect(),
+        "query.filtered": lambda: coll.query(
+            q[0], n_results=5, where={"lang": "en"}
+        ).collect(),
+        "query.batch": lambda: coll.query(q, n_results=5).collect(),
+        "get.ids": lambda: coll.get(ids=["doc-1", "doc-7"]).collect(),
+        "get.where": lambda: coll.get(
+            where={"lang": "en"}, after_id="doc-1", limit=5
+        ).collect(),
+        "count": coll.count,
+    }
+    sc = spark.sparkContext
+    failures = []
+    for name, read in reads.items():
+        read()  # warm: partition memos
+        group = f"read-jobs-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            read()
+        finally:
+            sc.setJobGroup(None, None)
+        n = len(sc.statusTracker().getJobIdsForGroup(group))
+        if n:
+            failures.append(f"{name}: {n} jobs")
+    assert not failures, "; ".join(failures)
 
 
 def test_sampled_ivf_probe_prunes_cells_and_takeordered(spark, sf_dir):

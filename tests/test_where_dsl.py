@@ -1,7 +1,7 @@
-"""ChromaDB where-DSL compiler: unit semantics, error contract, and a
-cross-engine property test (random filter trees → Spark filter vs
-DuckDB WHERE on the same parquet — the same two-engine discipline as
-the oracle gate)."""
+"""ChromaDB where-DSL compiler: unit semantics, error contract, and
+cross-engine property tests (random filter trees → Spark filter vs
+DuckDB WHERE vs the driver-side pyarrow mask on the same parquet — the
+same two-engine discipline as the oracle gate)."""
 
 from __future__ import annotations
 
@@ -14,7 +14,9 @@ from pyspark.sql import functions as F
 from adk_noui_vectordb_spark.functions.where_dsl import (
     compile_where,
     compile_where_document,
+    where_document_mask,
     where_document_to_sql,
+    where_mask,
     where_to_sql,
 )
 
@@ -39,6 +41,16 @@ def _duck_ids(sql_pred):
     finally:
         con.close()
     return [r[0] for r in rows]
+
+
+def _docs_table():
+    import pyarrow.parquet as pq
+
+    return pq.read_table(DOCS)
+
+
+def _mask_ids(table, mask):
+    return sorted(table.column("doc_id").to_numpy()[mask].tolist())
 
 
 # ------------------------------------------------------------- semantics
@@ -97,6 +109,30 @@ def test_ne_keeps_null_metadata(spark):
     assert "IS NULL" in sql and "<>" in sql
 
 
+def test_mask_null_semantics():
+    """The mask target's NULL rules are Spark's filter's: a comparison
+    or $in against NULL drops the row, $ne/$nin keep it, and a NULL
+    document passes neither $contains nor $not_contains."""
+    import pyarrow as pa
+
+    t = pa.table({"lang": ["en", None, "de"], "document": ["a b", None, "c"]})
+    cases = [
+        ({"$eq": "en"}, [True, False, False]),
+        ({"$gt": "a"}, [True, False, True]),
+        ({"$in": ["en"]}, [True, False, False]),
+        ({"$ne": "en"}, [False, True, True]),
+        ({"$nin": ["en"]}, [False, True, True]),
+    ]
+    for spec, want in cases:
+        assert where_mask({"lang": spec}, t).tolist() == want, spec
+    assert where_document_mask({"$contains": "a"}, t, "document").tolist() == [
+        True, False, False,
+    ]
+    assert where_document_mask({"$not_contains": "a"}, t, "document").tolist() == [
+        False, False, True,
+    ]
+
+
 def test_or_union(docs):
     a = set(_ids(docs, compile_where({"lang": "en"})))
     b = set(_ids(docs, compile_where({"n_chars": {"$lt": 100}})))
@@ -138,6 +174,8 @@ def test_where_document_contains_and_not_contains(docs):
 def test_compile_where_rejects(bad):
     with pytest.raises(ValueError):
         compile_where(bad)
+    with pytest.raises(ValueError):
+        where_mask(bad, _docs_table())
 
 
 @pytest.mark.parametrize(
@@ -147,6 +185,8 @@ def test_compile_where_rejects(bad):
 def test_compile_where_document_rejects(bad):
     with pytest.raises(ValueError):
         compile_where_document(bad)
+    with pytest.raises(ValueError):
+        where_document_mask(bad, _docs_table())
 
 
 # ------------------------------------------------- cross-engine property
@@ -208,6 +248,38 @@ def test_where_document_matches_sql_twin_cross_engine(spark, tree):
     df = spark.read.parquet(DOCS)
     assert _ids(df, compile_where_document(tree)) == _duck_ids(
         where_document_to_sql(tree)
+    )
+
+
+@settings(max_examples=25, deadline=None, suppress_health_check=list(HealthCheck))
+@given(tree=_TREE)
+def test_where_mask_matches_spark_filter(spark, tree):
+    """where_mask is the third rendering of the tree: the driver-side
+    mask over the pyarrow table keeps exactly Spark's filter rows."""
+    t = _docs_table()
+    assert _mask_ids(t, where_mask(tree, t)) == _ids(
+        spark.read.parquet(DOCS), compile_where(tree)
+    )
+
+
+@settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    tree=st.recursive(
+        st.sampled_from(["the", "and", "zzzz", "don't"]).flatmap(
+            lambda s: st.sampled_from(["$contains", "$not_contains"]).map(
+                lambda op: {op: s}
+            )
+        ),
+        lambda kids: st.lists(kids, min_size=2, max_size=3).flatmap(
+            lambda xs: st.sampled_from(["$and", "$or"]).map(lambda op: {op: xs})
+        ),
+        max_leaves=4,
+    )
+)
+def test_where_document_mask_matches_spark_filter(spark, tree):
+    t = _docs_table()
+    assert _mask_ids(t, where_document_mask(tree, t)) == _ids(
+        spark.read.parquet(DOCS), compile_where_document(tree)
     )
 
 
