@@ -378,36 +378,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # r10: cell-blocked batch kNN join — top-k neighbors for EVERY
         # vector from same-cell pairs only (n^2/c candidate volume)
         "knn_join_ivf_topk": _ann.knn_join_ivf_topk,
-        # r12: the HNSW analog — versioned k-NN graph (cell-join layer 0
-        # + md5-min-hub layer 1), deterministic beam search serving
-        "ann_graph_topk": _gann.ann_graph_topk,
-        # r13: the RECURSIVE hub-mesh build path (VERDICT r12 next #1 —
-        # hub levels above hub_allpairs_max meshed by the cell-blocked
-        # pipeline, HNSW log-layering; apm=4 forces the recursion at
-        # every test SF so the 100 TB build path is oracle-checked)
-        "ann_graph_recursive_topk": _gann.ann_graph_recursive_topk,
-        # r13: ACORN-style predicate-aware traversal (opt-in) — the
-        # filter steers the frontier and failing neighbors expand one
-        # extra hop, keeping recall under selective filters (0.99 at
-        # 10% selectivity vs the blind pool's 0.15, BASELINE.md r13)
-        "ann_graph_acorn_topk": _gann.ann_graph_acorn_topk,
-        # r13: M predicate-aware beams with fused IO (batch == solo
-        # pinned; per-query pass sets over the shared label cache)
-        "ann_graph_acorn_batch_topk": _gann.ann_graph_acorn_batch_topk,
-        # r12: M beam searches, fused per-round probes (one edges
-        # point-read + one vecs fetch for the union of frontiers)
-        "ann_graph_batch_topk": _gann.ann_graph_batch_topk,
-        # r12: mark-delete lifecycle — tombstoned ids keep routing the
-        # beam (hnswlib semantics) but are filtered at result emission;
-        # the delete commit writes only the kilobyte tomb/ component
-        "ann_graph_tombstone_topk": _gann.ann_graph_tombstone_topk,
-        # r12: physical removal — vacuum rebuilds over the survivors on
-        # a tagged root (delete lifecycle end-to-end: mark, vacuum,
-        # serve the re-derived graph)
-        "ann_graph_vacuumed_topk": _gann.ann_graph_vacuumed_topk,
-        # r12: metadata-filtered emission (the Chroma query(where=...)
-        # -against-HNSW shape; traversal predicate-blind)
-        "ann_graph_filtered_topk": _gann.ann_graph_filtered_topk,
         # hybrid retrieval (BM25 + RRF)
         "bm25_topk": _hyb.bm25_topk,
         "hybrid_rrf_topk": _hyb.hybrid_rrf_topk,
@@ -483,9 +453,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # r12: alpha fusion from the same on-disk pools (zero corpus
         # scans — the weighted scan key's serving twin)
         "hybrid_weighted_served_topk": _inv.hybrid_weighted_served_topk,
-        # r13: the two serving families composed — BM25 postings pool +
-        # the navigable graph's beam pool, same convex fusion
-        "hybrid_weighted_graph_topk": _inv.hybrid_weighted_graph_topk,
         # r7: dedup reporting — duplicate-cluster size distribution
         "dup_cluster_size_histogram": _dedup.dup_cluster_size_histogram,
     }
@@ -741,7 +708,7 @@ def _cell_join_ctes(iters: int = 2, source: str = "embeddings") -> list:
     rank-keyed training sample, sampled Lloyd's, frozen full-corpus
     assignment ``af``/``afnz``, md5-capped neighbor side, same-cell
     candidates, 4-dp cosine ``jscored``) — the common prefix of the
-    ``knn_join_ivf_topk`` and ``ann_graph_topk`` oracles."""
+    ``knn_join_ivf_topk`` and the Collection graph oracles."""
     derived_c = (
         f"(SELECT GREATEST({_ann.IVF_JOIN_MIN_CENTROIDS}, "
         f"CAST(ceil(count(*) * 1.0 / {_ann.IVF_JOIN_TARGET_CELL}) AS BIGINT)) "
@@ -814,7 +781,7 @@ def _knn_join_ivf_sql(k: int = 3, iters: int = 2) -> str:
     SAME derived value as the Spark side — max(MIN, ceil(n / TARGET))
     computed from the table's own count as a scalar subquery — and the
     neighbor side keeps only the md5-top-CELL_CAP members per cell
-    (cap_bucket_members on ("cluster",)); all constants interpolate
+    (cap_bucket_members); all constants interpolate
     from the ann module, one source of truth.
 
     Sampled training mirror (r11): with c ∝ n, full-corpus Lloyd's is
@@ -834,133 +801,18 @@ SELECT src, nbr, sim, CAST(rank AS INTEGER) AS rank FROM (
     )
 
 
-def _recursive_mesh_ctes(hub_degree: int, iters: int) -> list:
-    """One unrolled hub-mesh recursion level (graph_ann.py
-    _hub_mesh_edges): the ``ghv`` hub set is sampled (md5-top rc×32,
-    rank-keyed — _sampled_centroid_rows verbatim), Lloyd's-trained at
-    rc = max(2, ceil(c/128)) cells (tag "h"), fully assigned under the
-    6-dp d2 / cluster-tie-break contract (assign_to_centroids), meshed
-    by same-cell md5-capped kNN at rank ≤ hub_degree, and the md5-min
-    next-level hubs get star bridges plus an all-pairs top mesh —
-    ending at ``ghedges`` like the all-pairs branch it replaces."""
-    mc = _gann.GRAPH_HUB_RECURSE_MIN_CELLS
-    tc = _ann.IVF_JOIN_TARGET_CELL
-    tpc = _ann.IVF_JOIN_TRAIN_PER_CELL
-    cap = _ann.IVF_JOIN_CELL_CAP
-    rc = (
-        f"(SELECT GREATEST({mc}, CAST(ceil(count(*) * 1.0 / {tc}) AS BIGINT))"
-        f" FROM ghubs)"
-    )
-    rs = (
-        f"(SELECT GREATEST({mc}, CAST(ceil(count(*) * 1.0 / {tc}) AS BIGINT))"
-        f" * {tpc} FROM ghubs)"
-    )
-    ctes = [
-        f"hsamp AS (SELECT vec_id, emb, md5(CAST(vec_id AS VARCHAR)) AS md"
-        f" FROM ghv ORDER BY md, vec_id LIMIT {rs})",
-        "hsamp_rk AS (SELECT vec_id, CAST(row_number() OVER"
-        " (ORDER BY md, vec_id) - 1 AS BIGINT) AS rk FROM hsamp)",
-        "htrain AS (SELECT r.rk AS vec_id, s.emb FROM hsamp s"
-        " JOIN hsamp_rk r USING (vec_id))",
-    ]
-    kc, _final = _kmeans_ctes(rc, iters, tag="h", emb_sql="emb", source="htrain")
-    ctes += kc
-    dist_h = (
-        "round(list_inner_product(g.emb, g.emb)"
-        " - 2 * list_inner_product(g.emb, c.c)"
-        " + list_inner_product(c.c, c.c), 6)"
-    )
-    ctes.append(f"""afh AS (
-  SELECT vec_id, cluster FROM (
-    SELECT g.vec_id, c.cluster,
-           row_number() OVER (PARTITION BY g.vec_id
-                              ORDER BY {dist_h}, c.cluster) AS rn
-    FROM ghv g CROSS JOIN c{iters}h c) WHERE rn = 1)""")
-    ctes.append(f"""hrcap AS (
-  SELECT vec_id, cluster FROM (
-    SELECT vec_id, cluster,
-           row_number() OVER (PARTITION BY cluster
-                              ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS m
-    FROM afh) WHERE m <= {cap})""")
-    cos_hh = _COS.format(a="ga.emb", b="gb.emb")
-    ctes.append(f"""hknn AS (
-  SELECT src, nbr, sim FROM (
-    SELECT src, nbr, sim,
-           row_number() OVER (PARTITION BY src ORDER BY sim DESC, nbr) AS rk
-    FROM (
-      SELECT a.vec_id AS src, b.vec_id AS nbr, {cos_hh} AS sim
-      FROM afh a JOIN hrcap b USING (cluster)
-      JOIN ghv ga ON ga.vec_id = a.vec_id
-      JOIN ghv gb ON gb.vec_id = b.vec_id
-      WHERE a.vec_id <> b.vec_id)) WHERE rk <= {hub_degree})""")
-    ctes.append("""l2h AS (
-  SELECT cluster, vec_id FROM (
-    SELECT cluster, vec_id, row_number() OVER (PARTITION BY cluster
-             ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn
-    FROM afh) WHERE rn = 1)""")
-    ctes.append(f"""hstar AS (
-  SELECT a.vec_id AS src, h.vec_id AS nbr, {cos_hh} AS sim
-  FROM afh a
-  JOIN l2h h USING (cluster)
-  JOIN ghv ga ON ga.vec_id = a.vec_id
-  JOIN ghv gb ON gb.vec_id = h.vec_id
-  WHERE a.vec_id <> h.vec_id)""")
-    ctes.append(
-        "l2v AS (SELECT h.vec_id, g.emb FROM l2h h JOIN ghv g USING (vec_id))"
-    )
-    cos_l2 = _COS.format(a="ga.emb", b="gb.emb")
-    ctes.append(f"""l2mesh AS (
-  SELECT src, nbr, sim FROM (
-    SELECT ga.vec_id AS src, gb.vec_id AS nbr, {cos_l2} AS sim,
-           row_number() OVER (PARTITION BY ga.vec_id
-                              ORDER BY {cos_l2} DESC, gb.vec_id) AS rk
-    FROM l2v ga JOIN l2v gb ON ga.vec_id <> gb.vec_id) WHERE rk <= {hub_degree})""")
-    # ADVICE r13 (low): this twin unrolls exactly ONE recursion level,
-    # correct only while the NEXT level (rc = max(MIN, ceil(c/TARGET))
-    # hubs) is small enough for the all-pairs base case at the key's
-    # hub_allpairs_max=4 — i.e. hub count c <= 4*TARGET (n <= ~65k at
-    # 128 vecs/hub). Past that the Spark side recurses a second level
-    # and a silent hash mismatch would flag the key red; fail LOUDLY at
-    # query time instead so an out-of-range SF reads as a harness
-    # limit, not a correctness failure.
-    guard = (
-        f"(SELECT CASE WHEN GREATEST({mc}, CAST(ceil(count(*) * 1.0 /"
-        f" {tc}) AS BIGINT)) <= 4 THEN TRUE ELSE error("
-        "'recursive-mesh twin unrolls one level; hub count exceeds the"
-        " hub_allpairs_max=4 one-level bound — raise the unroll depth'"
-        ") END FROM ghubs)"
-    )
-    ctes.append(
-        "ghedges AS (SELECT src, nbr, sim FROM ("
-        "SELECT src, nbr, sim FROM hknn"
-        " UNION ALL SELECT src, nbr, sim FROM hstar"
-        " UNION ALL SELECT src, nbr, sim FROM l2mesh)"
-        f" WHERE {guard})"
-    )
-    return ctes
-
-
 def _graph_build_ctes(
     degree: int,
     hub_degree: int,
     iters: int,
     source: str = "embeddings",
-    recursive_mesh: bool = False,
 ) -> list:
-    """The graph-construction CTE chain shared by every graph-index
-    twin (solo / batch / tombstone): cell-join layer-0 edges at rank <=
-    degree, md5-min hubs + hub mesh, star bridges, capped reversals —
-    ending at ``gedges`` (the unified bidirectional adjacency).
-
-    ``recursive_mesh`` mirrors graph_ann.py _hub_mesh_edges with the
-    test override hub_allpairs_max=4: ONE recursion level — the hub set
-    is meshed by the sampled-Lloyd's cell-blocked pipeline (tag "h",
-    the knn_join_ivf_topk oracle one level up at rc = max(2,
-    ceil(c/128)) cells), the md5-min next-level hubs get star bridges,
-    and the top level is all-pairs. Statically one level is CORRECT for
-    every test SF because c = max(8, ceil(n/128)) ∈ (4, 512] there
-    (recursion fires exactly once, rc = 2 ≤ 4 stops it); at n > 65,536
-    this twin would need a second unrolled level.
+    """The graph-construction CTE chain shared by every Collection graph
+    twin (solo / batch / ACORN / replace): cell-join layer-0 edges at
+    rank <= degree, md5-min hubs + the all-pairs hub mesh (the default
+    hub_allpairs_max keeps every test SF on one mesh level), star
+    bridges, capped reversals — ending at ``gedges`` (the unified
+    bidirectional adjacency).
 
     r14: layer-0 edge CANDIDATES come from each source's top-
     GRAPH_BUILD_NPROBE cells (graph_ann.py GRAPH_BUILD_NPROBE doc — the
@@ -1015,10 +867,7 @@ def _graph_build_ctes(
   JOIN {source} em ON em.vec_id = a.vec_id
   JOIN {source} eh ON eh.vec_id = h.vec_id
   WHERE a.vec_id <> h.vec_id)""")
-    if recursive_mesh:
-        ctes += _recursive_mesh_ctes(hub_degree, iters)
-    else:
-        ctes.append(f"""ghedges AS (
+    ctes.append(f"""ghedges AS (
   SELECT src, nbr, sim FROM (
     SELECT a.vec_id AS src, b.vec_id AS nbr, {cos_h} AS sim,
            row_number() OVER (PARTITION BY a.vec_id
@@ -1042,306 +891,6 @@ def _graph_build_ctes(
         " UNION SELECT src, nbr FROM grev)"
     )
     return ctes
-
-
-def _ann_graph_sql(
-    qid: int = 0,
-    k: int = 10,
-    beam: int = _gann.GRAPH_BEAM,
-    rounds: int = _gann.GRAPH_ROUNDS,
-    degree: int = 8,
-    hub_degree: int = 8,
-    iters: int = 2,
-) -> str:
-    """Navigable-graph ANN twin (operators/graph_ann.py ann_graph_topk):
-    reconstructs the WHOLE index in SQL — layer-0 edges are the cell
-    join's rank <= degree, hubs are each cell's md5-min nonzero member,
-    layer-1 edges the top-hub_degree hub pairs by 4-dp cosine, star
-    bridges link every member to its cell hub, and the reverse side is
-    rank-capped (the bidirectional discipline) — then unrolls the beam
-    search as chained CTEs (the Lloyd's-unroll discipline): v_r =
-    v_{{r-1}} UNION the scored unseen neighbors of f_r = top-``beam``
-    of v_{{r-1}} (sim DESC, vec_id tie-break); the answer is top-k of
-    v_rounds. Seeds: the md5-min hub excluding the query id (the
-    stored entry/ pair realizes the same value) UNION the query's own
-    cell hub (the hubmap/ point lookup — here the af assignment row)."""
-    ctes = _graph_build_ctes(degree, hub_degree, iters)
-    ctes += _graph_search_ctes(qid, "", beam, rounds)
-    mat = _GRAPH_MAT | {f"gv{r}" for r in range(rounds + 1)} | {"gseed"}
-    ctes = _mat_ctes(ctes, mat)
-    return (
-        "WITH " + ",\n".join(ctes) + f"""
-SELECT CAST(rank AS INTEGER) AS rank, vec_id, sim FROM (
-  SELECT vec_id, sim,
-         row_number() OVER (ORDER BY sim DESC, vec_id) AS rank
-  FROM gv{rounds}) WHERE rank <= {k}
-ORDER BY rank
-"""
-    )
-
-
-def _graph_acorn_search_ctes(
-    qid: int, beam: int, rounds: int, source: str = "embeddings",
-    sfx: str = "", iters: int = 2,
-) -> list:
-    """The ACORN beam unroll (graph_ann.py _beam_visited_acorn, same-
-    label predicate): gv rows carry a ``pass`` flag; each round's
-    frontier ranks passing nodes first (pass DESC, sim DESC, vec_id),
-    hop-1's failing members expand one extra hop, and both hops' new
-    nodes score into gv. Emission (the caller) keeps passing rows.
-    Seeds are the r14 multi-cell doors (_graph_search_ctes); expansion
-    stays UNCAPPED — the pass-first frontier + hop-2 rule rations IO."""
-    cos_q = _COS.format(a="em.embedding", b=f"qe{sfx}.q")
-    pas = f"(em.label = (SELECT label FROM {source} WHERE vec_id = {qid}))"
-    sc = _gann.GRAPH_SEED_CELLS
-    dist_q = (
-        f"round(list_inner_product(qe{sfx}.q, qe{sfx}.q)"
-        f" - 2 * list_inner_product(qe{sfx}.q, c.c)"
-        " + list_inner_product(c.c, c.c), 6)"
-    )
-    ctes = [
-        f"qe{sfx} AS (SELECT CAST(embedding AS DOUBLE[]) AS q"
-        f" FROM {source} WHERE vec_id = {qid})",
-        f"ent{sfx} AS (SELECT vec_id FROM ghubs WHERE vec_id <> {qid}"
-        f" ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 1)",
-        f"""gqc{sfx} AS (
-  SELECT cluster FROM (
-    SELECT c.cluster,
-           row_number() OVER (ORDER BY {dist_q}, c.cluster) AS rn
-    FROM c{iters}s c CROSS JOIN qe{sfx}) WHERE rn <= {sc})""",
-        f"""gseed{sfx} AS (
-  SELECT vec_id FROM ent{sfx}
-  UNION
-  SELECT h.vec_id FROM ghubs h JOIN gqc{sfx} USING (cluster)
-  WHERE h.vec_id <> {qid})""",
-        f"""gv0{sfx} AS (
-  SELECT em.vec_id, {cos_q} AS sim, {pas} AS pass
-  FROM {source} em JOIN gseed{sfx} s ON s.vec_id = em.vec_id
-  CROSS JOIN qe{sfx})""",
-    ]
-    for r in range(1, rounds + 1):
-        p = r - 1
-        ctes.append(
-            f"gf{r}{sfx} AS (SELECT vec_id FROM gv{p}{sfx}"
-            f" ORDER BY pass DESC, sim DESC, vec_id LIMIT {beam})"
-        )
-        ctes.append(f"""n1_{r}{sfx} AS (
-  SELECT DISTINCT ed.nbr AS vec_id FROM gedges ed
-  JOIN gf{r}{sfx} f ON ed.src = f.vec_id
-  WHERE ed.nbr <> {qid}
-    AND ed.nbr NOT IN (SELECT vec_id FROM gv{p}{sfx}))""")
-        ctes.append(f"""s1_{r}{sfx} AS (
-  SELECT em.vec_id, {cos_q} AS sim, {pas} AS pass
-  FROM {source} em JOIN n1_{r}{sfx} n ON n.vec_id = em.vec_id
-  CROSS JOIN qe{sfx})""")
-        ctes.append(
-            f"f1_{r}{sfx} AS (SELECT vec_id FROM s1_{r}{sfx} WHERE NOT pass)"
-        )
-        ctes.append(f"""n2_{r}{sfx} AS (
-  SELECT DISTINCT ed.nbr AS vec_id FROM gedges ed
-  JOIN f1_{r}{sfx} f ON ed.src = f.vec_id
-  WHERE ed.nbr <> {qid}
-    AND ed.nbr NOT IN (SELECT vec_id FROM gv{p}{sfx})
-    AND ed.nbr NOT IN (SELECT vec_id FROM n1_{r}{sfx}))""")
-        ctes.append(f"""s2_{r}{sfx} AS (
-  SELECT em.vec_id, {cos_q} AS sim, {pas} AS pass
-  FROM {source} em JOIN n2_{r}{sfx} n ON n.vec_id = em.vec_id
-  CROSS JOIN qe{sfx})""")
-        ctes.append(f"""gv{r}{sfx} AS (
-  SELECT vec_id, sim, pass FROM gv{p}{sfx}
-  UNION
-  SELECT vec_id, sim, pass FROM s1_{r}{sfx}
-  UNION
-  SELECT vec_id, sim, pass FROM s2_{r}{sfx})""")
-    return ctes
-
-
-def _ann_graph_acorn_sql(
-    qid: int = 0,
-    k: int = 10,
-    beam: int = _gann.GRAPH_ACORN_BEAM,
-    rounds: int = _gann.GRAPH_ROUNDS,
-    degree: int = 8,
-    hub_degree: int = 8,
-    iters: int = 2,
-) -> str:
-    """Predicate-aware filtered graph twin (graph_ann.py
-    ann_graph_acorn_topk): graph construction identical to the solo
-    twin; the beam unroll is the ACORN chain (pass-first frontier +
-    failing-neighbor second hop); emission keeps passing rows only."""
-    ctes = _graph_build_ctes(degree, hub_degree, iters)
-    ctes += _graph_acorn_search_ctes(qid, beam, rounds)
-    mat = set(_GRAPH_MAT) | {"gseed"}
-    for r in range(rounds + 1):
-        mat.add(f"gv{r}")
-    for r in range(1, rounds + 1):
-        mat |= {f"n1_{r}", f"s1_{r}", f"f1_{r}", f"n2_{r}", f"s2_{r}"}
-    ctes = _mat_ctes(ctes, mat)
-    return (
-        "WITH " + ",\n".join(ctes) + f"""
-SELECT CAST(rank AS INTEGER) AS rank, vec_id, sim FROM (
-  SELECT vec_id, sim,
-         row_number() OVER (ORDER BY sim DESC, vec_id) AS rank
-  FROM gv{rounds} WHERE pass) WHERE rank <= {k}
-ORDER BY rank
-"""
-    )
-
-
-def _hybrid_weighted_graph_sql(
-    qid: int = 0,
-    k: int = 10,
-    alpha: float = 0.6,
-    n_candidates: int = 100,
-    beam: int = _gann.GRAPH_BEAM,
-    rounds: int = _gann.GRAPH_ROUNDS,
-    degree: int = 8,
-    hub_degree: int = 8,
-    iters: int = 2,
-) -> str:
-    """Graph-pool alpha fusion twin (invindex.py
-    hybrid_weighted_graph_topk): the BM25 chain + the full graph
-    construction/search chain, vector pool = top-N of the final
-    visited set, then the weighted key's min-max fusion tail."""
-    g = _graph_build_ctes(degree, hub_degree, iters)
-    g += _graph_search_ctes(qid, "", beam, rounds)
-    mat = _GRAPH_MAT | {f"gv{r}" for r in range(rounds + 1)} | {"gseed"}
-    g = _mat_ctes(g, mat)
-    return (
-        f"WITH {_BM25_CTE},\n"
-        + ",\n".join(g)
-        + f""",
-gvec_top AS (SELECT vec_id AS doc_id, sim FROM gv{rounds}
-             ORDER BY sim DESC, vec_id LIMIT {n_candidates}),
-gvec_stats AS (SELECT min(sim) AS mn, max(sim) AS mx FROM gvec_top),
-gvec_n AS (
-    SELECT doc_id,
-           CASE WHEN s.mx = s.mn THEN 1.0::DOUBLE
-                ELSE (sim - s.mn) / (s.mx - s.mn) END AS vec_n
-    FROM gvec_top CROSS JOIN gvec_stats s
-),
-glex_top AS (SELECT doc_id, bm25 FROM bm ORDER BY bm25 DESC, doc_id LIMIT {n_candidates}),
-glex_stats AS (SELECT min(bm25) AS mn, max(bm25) AS mx FROM glex_top),
-glex_n AS (
-    SELECT doc_id,
-           CASE WHEN s.mx = s.mn THEN 1.0::DOUBLE
-                ELSE (bm25 - s.mn) / (s.mx - s.mn) END AS lex_n
-    FROM glex_top CROSS JOIN glex_stats s
-)
-SELECT coalesce(l.doc_id, v.doc_id) AS doc_id,
-       round({alpha}::DOUBLE * coalesce(v.vec_n, 0.0::DOUBLE)
-             + {round(1.0 - alpha, 10)}::DOUBLE * coalesce(l.lex_n, 0.0::DOUBLE), 4) AS wscore
-FROM glex_n l FULL OUTER JOIN gvec_n v ON l.doc_id = v.doc_id
-ORDER BY wscore DESC, doc_id LIMIT {k}
-"""
-    )
-
-
-def _ann_graph_acorn_batch_sql(
-    qids: tuple = (0, 3, 9),
-    k: int = 10,
-    beam: int = _gann.GRAPH_ACORN_BEAM,
-    rounds: int = _gann.GRAPH_ROUNDS,
-    degree: int = 8,
-    hub_degree: int = 8,
-    iters: int = 2,
-) -> str:
-    """Batched ACORN twin (graph_ann.py ann_graph_acorn_batch_topk):
-    the shared graph construction once, then each query's SOLO
-    pass-flagged acorn chain (the Spark side fuses IO, not state),
-    UNION ALL'd with its query_id; per-query top-k of the passing
-    visited set."""
-    ctes = _graph_build_ctes(degree, hub_degree, iters)
-    finals = []
-    mat = set(_GRAPH_MAT)
-    for i, qid in enumerate(qids):
-        sfx = f"_q{i}"
-        ctes += _graph_acorn_search_ctes(qid, beam, rounds, sfx=sfx)
-        mat |= {f"gv{r}{sfx}" for r in range(rounds + 1)} | {f"gseed{sfx}"}
-        for r in range(1, rounds + 1):
-            mat |= {
-                f"n1_{r}{sfx}", f"s1_{r}{sfx}", f"f1_{r}{sfx}",
-                f"n2_{r}{sfx}", f"s2_{r}{sfx}",
-            }
-        finals.append(f"""
-SELECT CAST({qid} AS BIGINT) AS query_id, vec_id, sim,
-       CAST(rank AS INTEGER) AS rank FROM (
-  SELECT vec_id, sim,
-         row_number() OVER (ORDER BY sim DESC, vec_id) AS rank
-  FROM gv{rounds}{sfx} WHERE pass) WHERE rank <= {k}""")
-    ctes = _mat_ctes(ctes, mat)
-    return (
-        "WITH " + ",\n".join(ctes)
-        + "\nSELECT * FROM (" + "\nUNION ALL".join(finals)
-        + ")\nORDER BY query_id, rank\n"
-    )
-
-
-def _ann_graph_recursive_sql(
-    qid: int = 0,
-    k: int = 10,
-    beam: int = _gann.GRAPH_BEAM,
-    rounds: int = _gann.GRAPH_ROUNDS,
-    degree: int = 8,
-    hub_degree: int = 8,
-    iters: int = 2,
-) -> str:
-    """Recursive-mesh graph twin (graph_ann.py ann_graph_recursive_topk,
-    hub_allpairs_max=4): the solo graph oracle with the hub mesh
-    replaced by one unrolled cell-blocked recursion level
-    (_recursive_mesh_ctes); search chain identical — the recursion
-    changes construction, never traversal."""
-    ctes = _graph_build_ctes(
-        degree, hub_degree, iters, recursive_mesh=True
-    )
-    ctes += _graph_search_ctes(qid, "", beam, rounds)
-    mat = (
-        _GRAPH_MAT
-        | _RECURSIVE_MESH_MAT
-        | {f"gv{r}" for r in range(rounds + 1)}
-        | {"gseed"}
-    )
-    ctes = _mat_ctes(ctes, mat)
-    return (
-        "WITH " + ",\n".join(ctes) + f"""
-SELECT CAST(rank AS INTEGER) AS rank, vec_id, sim FROM (
-  SELECT vec_id, sim,
-         row_number() OVER (ORDER BY sim DESC, vec_id) AS rank
-  FROM gv{rounds}) WHERE rank <= {k}
-ORDER BY rank
-"""
-    )
-
-
-def _ann_graph_filtered_sql(
-    qid: int = 0,
-    k: int = 10,
-    beam: int = _gann.GRAPH_BEAM,
-    rounds: int = _gann.GRAPH_ROUNDS,
-    degree: int = 8,
-    hub_degree: int = 8,
-    iters: int = 2,
-) -> str:
-    """Filtered graph-serving twin (graph_ann.py ann_graph_filtered_
-    topk): the solo visited chain verbatim (traversal is predicate-
-    blind), emission keeps only visited nodes whose corpus ``label``
-    equals the query's."""
-    ctes = _graph_build_ctes(degree, hub_degree, iters)
-    ctes += _graph_search_ctes(qid, "", beam, rounds)
-    mat = _GRAPH_MAT | {f"gv{r}" for r in range(rounds + 1)} | {"gseed"}
-    ctes = _mat_ctes(ctes, mat)
-    return (
-        "WITH " + ",\n".join(ctes) + f"""
-SELECT CAST(rank AS INTEGER) AS rank, vec_id, sim FROM (
-  SELECT v.vec_id, v.sim,
-         row_number() OVER (ORDER BY v.sim DESC, v.vec_id) AS rank
-  FROM gv{rounds} v
-  JOIN embeddings e ON e.vec_id = v.vec_id
-  WHERE e.label = (SELECT label FROM embeddings WHERE vec_id = {qid})
-) WHERE rank <= {k}
-ORDER BY rank
-"""
-    )
 
 
 def _coll_graph_query_ctes(
@@ -1411,7 +960,8 @@ def _coll_graph_acorn_ctes(
     ranks passing first; failing hop-1 members expand one extra hop.
     No qid exclusion (raw query vector, Chroma self-match semantics).
     Seeds are the r14 multi-cell doors; expansion stays uncapped (the
-    ACORN rationing argument, _graph_acorn_search_ctes)."""
+    ACORN rationing argument: the pass-first frontier + hop-2 rule
+    rations IO)."""
     cos_q = _COS.format(a="em.embedding", b="qe.q")
     sc = _gann.GRAPH_SEED_CELLS
     dist_q = (
@@ -1759,90 +1309,6 @@ LIMIT {k}""")
     )
 
 
-def _ann_graph_tomb_sql(
-    qid: int = 0,
-    n_delete: int = 2,
-    k: int = 10,
-    beam: int = _gann.GRAPH_BEAM,
-    rounds: int = _gann.GRAPH_ROUNDS,
-    degree: int = 8,
-    hub_degree: int = 8,
-    iters: int = 2,
-) -> str:
-    """Tombstone-aware graph serving twin (graph_ann.py
-    ann_graph_tombstone_topk): traversal is tombstone-BLIND (hnswlib
-    mark-delete semantics — deleted nodes still route), so the visited
-    chain is the solo oracle's verbatim; the deleted set is the
-    blind search's own top-``n_delete`` (what the Spark side deletes),
-    and only the final emission anti-joins it."""
-    ctes = _graph_build_ctes(degree, hub_degree, iters)
-    ctes += _graph_search_ctes(qid, "", beam, rounds)
-    ctes.append(
-        f"gdel AS (SELECT vec_id FROM gv{rounds}"
-        f" ORDER BY sim DESC, vec_id LIMIT {n_delete})"
-    )
-    mat = _GRAPH_MAT | {f"gv{r}" for r in range(rounds + 1)} | {"gseed"}
-    ctes = _mat_ctes(ctes, mat)
-    return (
-        "WITH " + ",\n".join(ctes) + f"""
-SELECT CAST(rank AS INTEGER) AS rank, vec_id, sim FROM (
-  SELECT vec_id, sim,
-         row_number() OVER (ORDER BY sim DESC, vec_id) AS rank
-  FROM gv{rounds}
-  WHERE vec_id NOT IN (SELECT vec_id FROM gdel)) WHERE rank <= {k}
-ORDER BY rank
-"""
-    )
-
-
-def _ann_graph_vac_sql(
-    qid: int = 0,
-    n_delete: int = 2,
-    k: int = 10,
-    beam: int = _gann.GRAPH_BEAM,
-    rounds: int = _gann.GRAPH_ROUNDS,
-    degree: int = 8,
-    hub_degree: int = 8,
-    iters: int = 2,
-) -> str:
-    """Vacuumed-graph twin (graph_ann.py ann_graph_vacuumed_topk):
-    unlike mark-delete (same graph, filtered emission), vacuum REBUILDS
-    over the survivors — so this twin runs the whole construction +
-    search chain with every ``embeddings`` read swapped for ``esurv``
-    (the corpus minus the exact-cosine top-``n_delete`` of the query,
-    the same corpus-derived set the Spark side deletes). The derived
-    cell count, training sample, hubs, and edges all re-derive from
-    the survivor set, exactly like the scratch rebuild."""
-    cos_d = _COS.format(a="e.embedding", b="q.q_emb")
-    pre = [
-        f"""vdel AS (
-  SELECT e.vec_id FROM embeddings e
-  CROSS JOIN (SELECT embedding AS q_emb FROM embeddings
-              WHERE vec_id = {qid}) q
-  WHERE e.vec_id <> {qid}
-  ORDER BY {cos_d} DESC, e.vec_id LIMIT {n_delete})""",
-        "esurv AS (SELECT vec_id, embedding FROM embeddings"
-        " WHERE vec_id NOT IN (SELECT vec_id FROM vdel))",
-    ]
-    ctes = pre + _graph_build_ctes(degree, hub_degree, iters, source="esurv")
-    ctes += _graph_search_ctes(qid, "", beam, rounds, source="esurv")
-    mat = (
-        _GRAPH_MAT
-        | {f"gv{r}" for r in range(rounds + 1)}
-        | {"gseed", "vdel", "esurv"}
-    )
-    ctes = _mat_ctes(ctes, mat)
-    return (
-        "WITH " + ",\n".join(ctes) + f"""
-SELECT CAST(rank AS INTEGER) AS rank, vec_id, sim FROM (
-  SELECT vec_id, sim,
-         row_number() OVER (ORDER BY sim DESC, vec_id) AS rank
-  FROM gv{rounds}) WHERE rank <= {k}
-ORDER BY rank
-"""
-    )
-
-
 def _mat_ctes(ctes: list, names: set) -> list:
     """Rewrite ``name AS (`` to ``name AS MATERIALIZED (`` for the named
     CTEs — semantically neutral, but REQUIRED for the graph oracles:
@@ -1872,107 +1338,6 @@ _GRAPH_MAT = {
     "af2", "afnz2", "jcand2", "jscored2",
     "ghubs", "ghv", "gstar", "ghedges", "gfwd", "grev", "gedges",
 }
-
-# the recursive-mesh chain's multiply-referenced CTEs (afh feeds four
-# consumers; hsamp two) — materialized for the same inlining reason
-_RECURSIVE_MESH_MAT = {
-    "hsamp", "htrain", "afh", "hrcap", "hknn", "l2h", "hstar", "l2v",
-    "l2mesh",
-}
-
-
-def _graph_search_ctes(
-    qid: int,
-    sfx: str,
-    beam: int,
-    rounds: int,
-    source: str = "embeddings",
-    iters: int = 2,
-) -> list:
-    """The per-query beam unroll (seed → gv0 → rounds × (gf, gv)) with
-    CTE names suffixed by ``sfx`` — shared by the single-query and the
-    batch graph oracles (each batch query runs the IDENTICAL solo
-    chain; the Spark side only fuses IO)."""
-    cos_q = _COS.format(a="em.embedding", b=f"qe{sfx}.q")
-    sc = _gann.GRAPH_SEED_CELLS
-    dist_q = (
-        f"round(list_inner_product(qe{sfx}.q, qe{sfx}.q)"
-        f" - 2 * list_inner_product(qe{sfx}.q, c.c)"
-        " + list_inner_product(c.c, c.c), 6)"
-    )
-    ctes = [
-        f"qe{sfx} AS (SELECT CAST(embedding AS DOUBLE[]) AS q"
-        f" FROM {source} WHERE vec_id = {qid})",
-        f"ent{sfx} AS (SELECT vec_id FROM ghubs WHERE vec_id <> {qid}"
-        f" ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 1)",
-        # the query's GRAPH_SEED_CELLS nearest cells under the frozen
-        # 6-dp d2 / cluster tie-break (graph_ann._seed_hubs)
-        f"""gqc{sfx} AS (
-  SELECT cluster FROM (
-    SELECT c.cluster,
-           row_number() OVER (ORDER BY {dist_q}, c.cluster) AS rn
-    FROM c{iters}s c CROSS JOIN qe{sfx}) WHERE rn <= {sc})""",
-        # seeds: global entry ∪ the seed cells' hubs, qid excluded
-        f"""gseed{sfx} AS (
-  SELECT vec_id FROM ent{sfx}
-  UNION
-  SELECT h.vec_id FROM ghubs h JOIN gqc{sfx} USING (cluster)
-  WHERE h.vec_id <> {qid})""",
-        f"""gv0{sfx} AS (
-  SELECT em.vec_id, {cos_q} AS sim
-  FROM {source} em JOIN gseed{sfx} s ON s.vec_id = em.vec_id
-  CROSS JOIN qe{sfx})""",
-    ]
-    for r in range(1, rounds + 1):
-        ctes.append(
-            f"gf{r}{sfx} AS (SELECT vec_id FROM gv{r - 1}{sfx}"
-            f" ORDER BY sim DESC, vec_id LIMIT {beam})"
-        )
-        ctes.append(f"""gv{r}{sfx} AS (
-  SELECT vec_id, sim FROM gv{r - 1}{sfx}
-  UNION
-  SELECT em.vec_id, {cos_q} AS sim
-  FROM gedges ed
-  JOIN gf{r}{sfx} f ON ed.src = f.vec_id
-  JOIN {source} em ON em.vec_id = ed.nbr
-  CROSS JOIN qe{sfx}
-  WHERE ed.nbr <> {qid})""")
-    return ctes
-
-
-def _ann_graph_batch_sql(
-    qids: tuple = (0, 3, 9),
-    k: int = 10,
-    beam: int = _gann.GRAPH_BEAM,
-    rounds: int = _gann.GRAPH_ROUNDS,
-    degree: int = 8,
-    hub_degree: int = 8,
-    iters: int = 2,
-) -> str:
-    """Batched graph-serving twin (graph_ann.py ann_graph_batch_topk):
-    the shared graph-construction CTEs once, then each query's SOLO
-    beam unroll (the batch fuses IO, not state), UNION ALL'd with its
-    query_id."""
-    ctes = _graph_build_ctes(degree, hub_degree, iters)
-    finals = []
-    mat = set(_GRAPH_MAT)
-    for i, qid in enumerate(qids):
-        sfx = f"_q{i}"
-        ctes += _graph_search_ctes(qid, sfx, beam, rounds)
-        mat |= {f"gv{r}{sfx}" for r in range(rounds + 1)} | {f"gseed{sfx}"}
-        finals.append(f"""
-SELECT CAST({qid} AS BIGINT) AS query_id, vec_id, sim,
-       CAST(rank AS INTEGER) AS rank FROM (
-  SELECT vec_id, sim,
-         row_number() OVER (ORDER BY sim DESC, vec_id) AS rank
-  FROM gv{rounds}{sfx}) WHERE rank <= {k}""")
-    ctes = _mat_ctes(ctes, mat)
-    return (
-        "WITH " + ",\n".join(ctes)
-        + "\nSELECT * FROM (" + "\nUNION ALL".join(finals)
-        + ")\nORDER BY query_id, rank\n"
-    )
-
 
 def _semdedup_sql(k: int = 8, iters: int = 2, thr: float = 0.35) -> str:
     """SemDeDup oracle: extend the k-means CTE chain with a within-cluster
@@ -3896,14 +3261,6 @@ FROM embeddings e JOIN fcand USING (vec_id) CROSS JOIN qe
 ORDER BY sim DESC, e.vec_id LIMIT 10
 """,
         "knn_join_ivf_topk": _knn_join_ivf_sql(),
-        "ann_graph_topk": _ann_graph_sql(),
-        "ann_graph_recursive_topk": _ann_graph_recursive_sql(),
-        "ann_graph_acorn_topk": _ann_graph_acorn_sql(),
-        "ann_graph_acorn_batch_topk": _ann_graph_acorn_batch_sql(),
-        "ann_graph_batch_topk": _ann_graph_batch_sql(),
-        "ann_graph_tombstone_topk": _ann_graph_tomb_sql(),
-        "ann_graph_vacuumed_topk": _ann_graph_vac_sql(),
-        "ann_graph_filtered_topk": _ann_graph_filtered_sql(),
         "bm25_topk": f"""
 WITH {_BM25_CTE}
 SELECT doc_id, bm25 FROM bm ORDER BY bm25 DESC, doc_id LIMIT 10
@@ -4198,7 +3555,6 @@ FROM srv_fused ORDER BY rrf DESC, doc_id LIMIT 10
 """,
         # Served alpha fusion (invindex.py hybrid_weighted_served_topk):
         # the SAME served pools, the weighted scan key's fusion tail.
-        "hybrid_weighted_graph_topk": _hybrid_weighted_graph_sql(),
         "hybrid_weighted_served_topk": f"""
 WITH {_BM25_CTE},
 {_RP_BANDS_CTE.lstrip()},

@@ -66,12 +66,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.vector import np_round4, np_scores
-from ..functions.where_dsl import (
-    compile_where,
-    compile_where_document,
-    where_document_mask,
-    where_mask,
-)
+from ..functions.where_dsl import where_document_mask, where_mask
 from ..operators.ann import (
     RP_BAND_BITS,
     RP_BANDS,
@@ -788,130 +783,137 @@ class Collection:
             return {}
         return {int(g): int(s) for s, g in alias.items()}
 
-    def _graph_batch_state(self, gver: str, qvecs: list) -> tuple:
-        """The fused-IO prologue shared by the blind and the ACORN
-        facade beams: resolves the graph version's entry and coarse
-        structure (memoized collects), ranks each query's
-        GRAPH_SEED_CELLS nearest cells driver-side and takes their hubs
-        as seed doors (zero per-query jobs — cellhubs/ is collected
-        once per version), and returns (fetch_vecs, fetch_adj,
-        payload, visited)
-        — visited pre-seeded with each query's scored seeds (md5-min
-        entry hub + its seed-cell hubs, NO self-exclusion: a stored
-        vector identical to a query surfaces at distance 0, Chroma
-        semantics)."""
-        from ..memo import component_df, version_memo
-        from ..operators.ann import VECS_SCHEMA as GV_SCHEMA
-        from ..operators.graph_ann import (
-            GRAPH_EDGES_SCHEMA,
-            GRAPH_ENTRY_SCHEMA,
-            _point_reads,
-            _seed_hubs,
-            _sim4,
+    def _graph_edges(self, gver: str, sbucket: int) -> tuple:
+        """({src: [nbr, ...]}, {nbr: embedding row}) of one edges
+        partition of a graph version; a null payload (an edge whose
+        neighbor has no vector) keeps its adjacency but no embedding."""
+        import numpy as np
+
+        def convert(t):
+            if t is None:
+                return {}, {}
+            nemb = t.column("nemb").combine_chunks()
+            ok = nemb.is_valid().to_numpy(zero_copy_only=False)
+            flat = nemb.flatten().to_numpy()
+            emb = flat.reshape(int(ok.sum()), -1) if ok.any() else flat
+            adj: dict = {}
+            pay: dict = {}
+            rows = iter(emb)
+            for s, n, has in zip(
+                t.column("src").to_pylist(), t.column("nbr").to_pylist(), ok
+            ):
+                adj.setdefault(s, []).append(n)
+                if has:
+                    pay[n] = next(rows)
+            return adj, pay
+
+        part = os.path.join(gver, "edges", f"sbucket={sbucket}")
+        return _read_partition(
+            self.spark, part, ["src", "nbr", "nemb"], convert
         )
 
-        # session-memoized handles for the immutable graph version's
-        # components + scoped-AQE point reads — the graph_ann.py r16
-        # serving discipline applied to the facade's fetchers (each
-        # fetch used to rebuild the datasource relation and pay AQE's
-        # wrapper on a single-stage collect)
-        vecs_df = component_df(self.spark, gver, "vecs", GV_SCHEMA)
-        edges_df = component_df(self.spark, gver, "edges", GRAPH_EDGES_SCHEMA)
+    def _graph_coarse(self, gver: str) -> tuple:
+        """(entry hub, centroid rows sorted by cluster, {cluster: hub})
+        of a graph version — the beam's seed doors."""
 
-        def fetch_vecs(ids) -> dict:
-            ids = sorted(ids)
-            vbs = sorted({vec_bucket_py(i) for i in ids})
-            with _point_reads(self.spark):
-                rows = (
-                    vecs_df
-                    .filter(
-                        F.col("vbucket").isin(vbs) & F.col("vec_id").isin(ids)
+        def entry(t):
+            return t.sort_by("rk").column("vec_id")[0].as_py()
+
+        def cents(t):
+            return sorted(
+                (
+                    {"cluster": c, "c": v}
+                    for c, v in zip(
+                        t.column("cluster").to_pylist(), t.column("c").to_pylist()
                     )
-                    .select("vec_id", "emb")
-                    .collect()
-                )
-            return {r["vec_id"]: [float(x) for x in r["emb"]] for r in rows}
+                ),
+                key=lambda r: r["cluster"],
+            )
 
-        # entry/ is a tiny table in an immutable graph version — one
-        # collect per (session, version), not one job per query
-        entry = version_memo(
-            self.spark,
-            gver,
-            "coll_graph_entry",
-            lambda: (
-                self.spark.read.schema(GRAPH_ENTRY_SCHEMA)
-                .parquet(os.path.join(gver, "entry"))
-                .orderBy("rk")
-                .head()["vec_id"]
-            ),
+        def hubs(t):
+            return dict(
+                zip(t.column("cluster").to_pylist(), t.column("hub").to_pylist())
+            )
+
+        def read(comp, cols, convert):
+            return _read_partition(
+                self.spark, os.path.join(gver, comp), cols, convert
+            )
+
+        return (
+            read("entry", ["rk", "vec_id"], entry),
+            read("cents", ["cluster", "c"], cents),
+            read("cellhubs", ["cluster", "hub"], hubs),
         )
-        # seed doors: the hubs of each query's GRAPH_SEED_CELLS nearest
-        # cells (pure driver math over the memoized cents + the graph
-        # version's cellhubs table — the r14 multi-door seeding; this
-        # replaced the per-batch assignment job + member read + hubmap
-        # point-read with zero jobs)
-        seeds_per_q = []
-        for q in qvecs:
-            s = {int(entry)}
-            s.update(int(h) for h in _seed_hubs(self.spark, gver, list(q)))
-            seeds_per_q.append(s)
-        first = fetch_vecs(set().union(*seeds_per_q)) if seeds_per_q else {}
+
+    def _graph_batch_state(self, gver: str, qvecs: list) -> tuple:
+        """The prologue shared by the blind and the ACORN beams: each
+        query's seeds are the md5-min entry hub plus the hubs of its
+        GRAPH_SEED_CELLS nearest cells (``_seed_hubs``), scored against
+        the seeds' vectors from the graph's ``vecs/`` (NO self-exclusion:
+        a stored vector identical to a query surfaces at distance 0,
+        Chroma semantics). Returns (fetch_adj, payload, visited): every
+        read goes through ``_read_partition``, so a warm beam runs no
+        Spark job."""
+        import numpy as np
+
+        from ..operators.graph_ann import _seed_hubs, _sim4
+
+        entry, cent_rows, hub_of = self._graph_coarse(gver)
+        seeds_per_q = [
+            {int(entry)} | {int(h) for h in _seed_hubs(cent_rows, hub_of, q)}
+            for q in qvecs
+        ]
+        seeds = set().union(*seeds_per_q)
+        vids, vmat = self._vec_rows(
+            gver, len(qvecs[0]), {vec_bucket_py(s) for s in seeds}
+        )
+        hit = np.isin(vids, list(seeds))
+        first = {int(v): row.tolist() for v, row in zip(vids[hit], vmat[hit])}
         visited = [
-            {s: _sim4(q, first[s]) for s in seeds if s in first}
-            for q, seeds in zip(qvecs, seeds_per_q)
+            {s: _sim4(q, first[s]) for s in ss if s in first}
+            for q, ss in zip(qvecs, seeds_per_q)
         ]
         # shared payload cache filled by fetch_adj from the edge rows'
-        # neighbor embeddings (r17 GRAPH_EDGES_SCHEMA): the beams read
-        # candidate vectors from here instead of a second vecs fetch
+        # neighbor embeddings (GRAPH_EDGES_SCHEMA)
         payload: dict = {}
 
         def fetch_adj(srcs) -> dict:
-            """One fused edges point-read: {src: {nbr, ...}}, and the
-            neighbors' embeddings land in ``payload`` from the same
-            rows (r17 — the per-round vecs fetch is gone). NO
+            """{src: {nbr, ...}} from the frontier's sbucket partitions;
+            the neighbors' embeddings land in ``payload``. NO
             per-source expansion cap — a sim-ranked cap was measured to
             sever hub star-doors into interleaved sub-clusters
-            (graph_ann.py module doc); volume is already bounded by the
-            build's per-source reversal cap."""
-            srcs = sorted(srcs)
-            if not srcs:
-                return {}
-            sbs = sorted({vec_bucket_py(s) for s in srcs})
+            (graph_ann.py GRAPH_SEED_CELLS doc); volume is already
+            bounded by the build's per-source reversal cap."""
             adj: dict = {}
-            with _point_reads(self.spark):
-                rows = (
-                    edges_df
-                    .filter(
-                        F.col("sbucket").isin(sbs) & F.col("src").isin(srcs)
-                    )
-                    .select("src", "nbr", "nemb")
-                    .collect()
-                )
-            for r in rows:
-                adj.setdefault(r["src"], set()).add(r["nbr"])
-                if r["nbr"] not in payload and r["nemb"] is not None:
-                    payload[r["nbr"]] = [float(x) for x in r["nemb"]]
+            by_bucket: dict = {}
+            for s in srcs:
+                by_bucket.setdefault(vec_bucket_py(s), []).append(s)
+            for sb, ss in by_bucket.items():
+                padj, ppay = self._graph_edges(gver, sb)
+                for s in ss:
+                    nbrs = padj.get(s, ())
+                    if nbrs:
+                        adj[s] = set(nbrs)
+                    for n in nbrs:
+                        if n not in payload and n in ppay:
+                            payload[n] = ppay[n].tolist()
             return adj
 
-        return fetch_vecs, fetch_adj, payload, visited
+        return fetch_adj, payload, visited
 
     def _graph_beam_batch(
         self, gver: str, qvecs: list, beam: int, rounds: int
     ) -> list:
-        """Beam searches for M RAW query vectors with FUSED IO (the
-        ann_graph_batch_topk discipline): each round issues ONE
-        payload-carrying edges point-read for the union of all
-        frontiers (r17: candidate embeddings ride the edge rows, so
-        the per-round vecs fetch is gone; prologue jobs:
-        ``_graph_batch_state``). Per-query visited state is untouched,
-        so each query's evolution equals its solo run
-        (ann_graph_batch_topk's pinned property). Returns one
-        {sid: 4-dp sim} per query, in input order."""
+        """Beam searches for M RAW query vectors with FUSED IO: each
+        round reads the edges partitions of the union of all frontiers
+        once (candidate embeddings ride the edge rows). Per-query
+        visited state is untouched, so each query's evolution equals
+        its solo run. Returns one {graph id: 4-dp sim} per query, in
+        input order."""
         from ..operators.graph_ann import _sim4
 
-        fetch_vecs, fetch_adj, payload, visited = self._graph_batch_state(
-            gver, qvecs
-        )
+        fetch_adj, payload, visited = self._graph_batch_state(gver, qvecs)
         frontier = [
             sorted(v, key=lambda x: (-v[x], x))[:beam] for v in visited
         ]
@@ -940,24 +942,19 @@ class Collection:
     def _graph_beam_batch_acorn(
         self, gver: str, qvecs: list, beam: int, rounds: int, pass_of
     ) -> "tuple[list, set]":
-        """Predicate-aware facade beams (VERDICT r12 next #4, after
-        ACORN SIGMOD'24 — the graph_ann.py _beam_visited_acorn rule
-        with this facade's fused IO): per query, the frontier ranks
-        PASSING visited nodes first (failing ones fill only when
-        passing are scarce), and hop-1's failing members get their own
-        neighbors expanded (hop 2) — so a selective ``where`` keeps
-        recall instead of thinning an oblivious pool (BASELINE.md r12b:
-        0.15 at 10% selectivity). Per round: two fused payload-carrying
-        edges point-reads (frontiers; failing hop-1) plus two fused
-        pass lookups on the filtered meta (mbucket-pruned) — the
-        per-round vecs fetch rides the edge rows since r17. ~2× the
-        blind beam's IO, the documented opt-in cost. Returns
-        (visited list, passing sid set)."""
+        """Predicate-aware beams (after ACORN, SIGMOD'24): per query,
+        the frontier ranks PASSING visited nodes first (failing ones
+        fill only when passing are scarce), and hop-1's failing members
+        get their own neighbors expanded (hop 2) — so a selective
+        ``where`` keeps recall instead of thinning an oblivious pool
+        (BASELINE.md r12b: 0.15 at 10% selectivity). Per round: two
+        fused edges reads (frontiers; failing hop-1) plus two ``pass_of``
+        calls on the meta rows. ~2× the blind beam's reads, the
+        documented opt-in cost. Returns (visited list, passing graph id
+        set)."""
         from ..operators.graph_ann import _sim4
 
-        fetch_vecs, fetch_adj, payload, visited = self._graph_batch_state(
-            gver, qvecs
-        )
+        fetch_adj, payload, visited = self._graph_batch_state(gver, qvecs)
         passing: set = set(pass_of({s for v in visited for s in v}))
         for _ in range(rounds):
             frontier = [
@@ -1503,29 +1500,23 @@ class Collection:
         where_document: "dict | None" = None,
     ) -> str:
         """Targeted deletion (ChromaDB ``delete(ids=..., where=...)``):
-        victims resolve from literal ids (mbucket-pruned point reads)
-        and/or compiled DSL predicates on the meta store; only victim
-        partitions rewrite, inside one atomic commit."""
+        the victims are the rows ``get`` with the same selectors returns
+        (``_selected``, on the driver); only victim partitions rewrite,
+        inside one atomic commit."""
         self._assert_writable()
         if ids is None and where is None and where_document is None:
             raise ValueError("delete(): pass ids and/or where/where_document")
         cur, info = self._require()
-        meta = self._meta(cur, info)
-        pred = None
-        if ids is not None:
-            sids = sorted({_sid_py(i) for i in _id_list(ids)})
-            mb = sorted({_mbucket_py(s) for s in sids})
-            pred = F.col("mbucket").isin(mb) & F.col("vec_id").isin(sids)
-        if where is not None:
-            w = compile_where(where)
-            pred = w if pred is None else (pred & w)
-        if where_document is not None:
-            wd = compile_where_document(where_document, "document")
-            pred = wd if pred is None else (pred & wd)
-        victims = meta.filter(pred).select("vec_id").localCheckpoint(eager=True)
-        if not victims.head(1):
+        meta, keep = self._selected(cur, info, ids, where, where_document)
+        vids = sorted(meta.column("vec_id").to_numpy()[keep].tolist())
+        if not vids:
             return cur
-        rw_mb = _mbucket_specs(victims)
+        # an Arrow table becomes a JVM LocalRelation: the commit's jobs
+        # scan it without starting Python workers
+        victims = self.spark.createDataFrame(
+            pa.table({"vec_id": pa.array(vids, pa.int64())})
+        )
+        rw_mb = frozenset(f"mbucket={_mbucket_py(v)}" for v in vids)
         rw_vb, rw_pairs = self._stale_partitions(cur, victims, info["dim"])
         comps = [
             vn.Component(
@@ -1952,6 +1943,21 @@ class Collection:
         page = meta.take(pc.sort_indices(meta, [("id", "ascending")])[:n])
         return self._frame(cur, info, {"documents", "metadatas"}, page)
 
+    def _selected(self, cur, info, ids, where, where_document) -> tuple:
+        """(meta rows, mask) of the rows the ``ids``/``where``/
+        ``where_document`` selectors pick: literal ids read only their
+        mbucket partitions, the filters mask on the driver."""
+        import numpy as np
+
+        if ids is not None:
+            sids = sorted({_sid_py(i) for i in _id_list(ids)})
+            meta = self._meta_rows(cur, info, {_mbucket_py(s) for s in sids})
+            keep = np.isin(meta.column("vec_id").to_numpy(), sids)
+        else:
+            meta = self._meta_rows(cur, info, range(N_META_BUCKETS))
+            keep = np.ones(meta.num_rows, bool)
+        return meta, keep & _row_mask(meta, where, where_document)
+
     def get(
         self,
         ids: "str | list[str] | None" = None,
@@ -1981,7 +1987,6 @@ class Collection:
 
         The result is a local DataFrame: its collect() starts no Spark
         job, and it stays valid after gc removes its version."""
-        import numpy as np
         import pandas as pd
 
         cur, info = self._require()
@@ -1998,14 +2003,7 @@ class Collection:
             raise ValueError(f"include: unknown items {sorted(unknown)}")
         if include_embeddings:
             inc.add("embeddings")
-        if ids is not None:
-            sids = sorted({_sid_py(i) for i in _id_list(ids)})
-            meta = self._meta_rows(cur, info, {_mbucket_py(s) for s in sids})
-            keep = np.isin(meta.column("vec_id").to_numpy(), sids)
-        else:
-            meta = self._meta_rows(cur, info, range(N_META_BUCKETS))
-            keep = np.ones(meta.num_rows, bool)
-        keep &= _row_mask(meta, where, where_document)
+        meta, keep = self._selected(cur, info, ids, where, where_document)
         if after_id is not None:
             keep &= pc.greater(meta.column("id"), after_id).to_numpy()
         page = meta.filter(pa.array(keep))
@@ -2062,7 +2060,7 @@ class Collection:
         rows. 'auto' is OPT-IN so the default plan stays probe-pinned:
         a plan that silently depends on a cardinality is the wrong
         default for a reproducibility-first engine. 'graph' walks the
-        navigable-graph sidecar (``_graph_pools``) and scores its pool
+        navigable-graph sidecar (``_graph_beam_batch``) and scores its pool
         like any other candidates.
 
         ``query_texts`` is the reference's primary entry
@@ -2243,35 +2241,22 @@ class Collection:
                 [float(x) for x in mat[qi]] for qi in range(mat.shape[0])
             ]
             if graph_predicate_expansion and has_filter:
-                # opt-in ACORN traversal: the compiled where predicate
-                # steers the frontier and failing neighbors expand an
-                # extra hop (see _graph_beam_batch_acorn); pass lookups
-                # are mbucket-pruned point reads of the FILTERED meta
-                # (by the pool ids' SID translation when rids exist)
-                fmeta = self._meta(cur, info)
-                if where is not None:
-                    fmeta = fmeta.filter(compile_where(where))
-                if where_document is not None:
-                    fmeta = fmeta.filter(
-                        compile_where_document(where_document, "document")
-                    )
-
+                # opt-in ACORN traversal: the where predicate steers the
+                # frontier and failing neighbors expand an extra hop
+                # (see _graph_beam_batch_acorn); a pass lookup masks the
+                # meta rows of the pool ids' mbuckets (by the ids' SID
+                # translation when rids exist)
                 def pass_of(ids) -> set:
-                    ids = sorted(ids)
                     if not ids:
                         return set()
                     tr = {g: int(amap.get(g, g)) for g in ids}
-                    mb = sorted({_mbucket_py(s) for s in tr.values()})
                     sids = sorted(set(tr.values()))
-                    passing_sids = {
-                        r["vec_id"]
-                        for r in fmeta.filter(
-                            F.col("mbucket").isin(mb)
-                            & F.col("vec_id").isin(sids)
-                        )
-                        .select("vec_id")
-                        .collect()
-                    }
+                    meta = self._meta_rows(
+                        cur, info, {_mbucket_py(s) for s in sids}
+                    )
+                    vid = meta.column("vec_id").to_numpy()
+                    keep = _row_mask(meta, where, where_document)
+                    passing_sids = set(vid[keep & np.isin(vid, sids)].tolist())
                     return {g for g, s in tr.items() if s in passing_sids}
 
                 pools, passing = self._graph_beam_batch_acorn(
@@ -2625,10 +2610,10 @@ def collection_query_graph_acorn_topk(
     """``collection.query`` with the opt-in ACORN traversal (r13): a
     selective where (lang='fr', ~14% of the demo collection) steers the
     beam — passing nodes rank first in the frontier and failing hop-1
-    neighbors expand one extra hop — at the module default budget
-    (GRAPH_BEAM/GRAPH_ROUNDS, which dominates r13's measured
-    raise-ef-for-filters graph_beam=16 setting). The oracle replays the
-    pass-flagged fused beam over the surrogate keyspace."""
+    neighbors expand one extra hop — at the ACORN default budget
+    (GRAPH_ACORN_BEAM/GRAPH_ROUNDS, r13's measured raise-ef-for-filters
+    setting). The oracle replays the pass-flagged beam over the
+    surrogate keyspace."""
     return demo_collection(spark, sf_dir).query(
         _demo_query(spark, sf_dir, query_vec_id),
         n_results=k,
@@ -2645,9 +2630,8 @@ def collection_query_graph_batch_topk(
     k: int = 5,
 ) -> DataFrame:
     """Batched facade graph serving: M queries through ONE fused beam
-    (`_graph_beam_batch` — one assignment job, one hub resolution, one
-    edges read + one vecs fetch per round for the union of frontiers);
-    per-query state untouched, so each query's rows equal its solo run
+    (`_graph_beam_batch` — one edges read per round for the union of
+    frontiers); per-query state untouched, so each query's rows equal its solo run
     (pinned) and the oracle replays M solo chains over the shared
     surrogate-keyspace graph."""
     qs = [_demo_query(spark, sf_dir, qid) for qid in query_vec_ids]
@@ -2672,8 +2656,7 @@ def collection_get_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-travel READ through the facade (r13 — the MVCC story
     end-to-end as a driver key): a two-commit lifecycle on its OWN
     tagged root (even doc_ids commit as v_000000, odd ones as v_000001
-    — mutating keys never share a root with other serving keys, the
-    vacuum-key discipline), then ``snapshot('v_000000').get(...)``
+    — mutating keys never share a root with other serving keys), then ``snapshot('v_000000').get(...)``
     serves YESTERDAY'S corpus while ``_CURRENT`` points at today's:
     the rows are exactly the FIRST commit's filter survivors, proving
     committed version dirs are immutable snapshots. Replays detect the

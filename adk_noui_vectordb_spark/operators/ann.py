@@ -1413,47 +1413,26 @@ def _lloyd(e: DataFrame, k: int, iters: int) -> tuple[DataFrame, DataFrame]:
     return assign(rows), cents
 
 
-def cap_bucket_members(
-    bands: DataFrame,
-    cap: int,
-    member_col: str = "vec_id",
-    bucket_cols: "tuple[str, ...]" = ("band", "band_key"),
-) -> DataFrame:
-    """Skew guard for bucketed self-joins (VERDICT r7 next #4): keep at
-    most ``cap`` members per (band, band_key) bucket, selected by md5 of
-    the member id (deterministic, corpus-order-independent — the house
+def cap_bucket_members(members: DataFrame, cap: int) -> DataFrame:
+    """Skew guard for cell-blocked self-joins: keep at most ``cap``
+    (vec_id, cluster) members per ``cluster``, selected by md5 of the
+    vec_id (deterministic, corpus-order-independent — the house
     md5-derived-constant discipline) with the raw id as tie-break.
 
-    Why: an equi self-join on a hot bucket of m members materializes m²
-    candidate pairs. Isotropic testdata spreads mass evenly, but a
-    near-duplicate-heavy 100 TB corpus concentrates it — one bucket with
-    10⁷ members is 10¹⁴ pairs, a job-killer. Capping ONE side of the
-    join bounds the per-bucket intermediate at m_src x cap and the total
-    at n x RP_BANDS x cap — linear in corpus size regardless of skew.
-
-    Recall impact (documented, measured in tests/test_ann.py): a true
-    neighbor is lost only if it falls outside the md5-top-``cap`` in
-    EVERY band it shares with the source; with RP_BANDS=6 independent
-    buckets and cap >> k the loss is negligible. The default cap=256
-    exceeds the benchmark corpus's largest bucket (183 at sf0.1), so
-    the capped top-k is IDENTICAL to uncapped there — measured, and the
-    binding case (cap=128 at sf0.1 changes ~12% of top-3 rows) is the
-    documented recall/robustness trade a 100 TB deployment tunes.
-
-    One extra shuffle (the row_number window over the band table), but
-    it is O(n x RP_BANDS) rows and replaces an unbounded blow-up.
-
-    ``bucket_cols`` generalizes the bucket identity: the RP band table
-    caps on (band, band_key); the IVF cell join caps on ("cluster",) —
-    same md5 discipline, same skew bound (VERDICT r10 next #1).
+    Why: an equi self-join on a hot cell of m members materializes m²
+    candidate pairs; a near-duplicate-heavy corpus concentrates mass in
+    a few cells. Capping ONE side of the join bounds the per-cell
+    intermediate at m_src x cap and the total at n x cap — linear in
+    corpus size regardless of skew. One extra shuffle (the row_number
+    window), over O(n) rows.
     """
     from pyspark.sql.window import Window
 
-    w = Window.partitionBy(*bucket_cols).orderBy(
-        F.md5(F.col(member_col).cast("string")), F.asc(member_col)
+    w = Window.partitionBy("cluster").orderBy(
+        F.md5(F.col("vec_id").cast("string")), F.asc("vec_id")
     )
     return (
-        bands.withColumn("_m", F.row_number().over(w))
+        members.withColumn("_m", F.row_number().over(w))
         .filter(F.col("_m") <= cap)
         .drop("_m")
     )
@@ -1668,7 +1647,7 @@ def knn_join_ivf_topk(
         ).select(F.col("vec_id").alias("src"), "cluster")
     else:
         l = nz_assign.select(F.col("vec_id").alias("src"), "cluster")
-    r = cap_bucket_members(nz_assign, cell_cap, bucket_cols=("cluster",)).select(
+    r = cap_bucket_members(nz_assign, cell_cap).select(
         F.col("vec_id").alias("nbr"), "cluster"
     )
     cand = (

@@ -889,7 +889,7 @@ def rebuild_containment_index(
     spark: SparkSession, sf_dir: str, tag: str = ""
 ) -> str:
     """Re-derive the frozen coarse structure over the index's OWN docs
-    — the ``rebuild_graph_index`` symmetry for the containment family:
+    for the containment family:
     ``grams/``+``sizes/`` are the corpus of record after admits, so
     fresh dfs come from one groupBy over grams, prefixes re-rank under
     the fresh dfs, and the commit rewrites ``post/`` and ``dfs/`` in

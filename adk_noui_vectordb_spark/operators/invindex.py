@@ -1367,49 +1367,6 @@ def hybrid_weighted_served_topk(
     )
 
 
-def hybrid_weighted_graph_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    terms: tuple[str, ...] = QUERY_TERMS,
-    query_vec_id: int = 0,
-    alpha: float = 0.6,
-    n_candidates: int = 100,
-    k: int = 10,
-    beam: "int | None" = None,
-    rounds: "int | None" = None,
-) -> DataFrame:
-    """Alpha fusion with the NAVIGABLE GRAPH as the vector pool (r13 —
-    the two serving families composed: Weaviate/Chroma deployments pair
-    exactly this, BM25 postings + an HNSW candidate pool): identical
-    fusion arithmetic to ``hybrid_weighted_served_topk``, but the
-    vector side is the graph beam's visited top-N instead of the
-    multiprobe band probe — bounded point reads, no band table needed.
-    Zero corpus scans at query time on either pool."""
-    from .ann import VECS_SCHEMA  # noqa: F401  (parity with served twin)
-    from .graph_ann import GRAPH_BEAM, GRAPH_ROUNDS, ann_graph_topk
-    from .hybrid import _minmax_norm
-
-    beam = GRAPH_BEAM if beam is None else beam
-    rounds = GRAPH_ROUNDS if rounds is None else rounds
-    lex_top = bm25_topk_served(spark, sf_dir, terms, k=n_candidates)
-    lex_n = _minmax_norm(lex_top, "bm25", "lex_n")
-    vec_top = ann_graph_topk(
-        spark, sf_dir, query_vec_id, k=n_candidates, beam=beam, rounds=rounds
-    ).select(F.col("vec_id").alias("doc_id"), "sim")
-    vec_n = _minmax_norm(vec_top, "sim", "vec_n")
-    fused = lex_n.join(vec_n, "doc_id", "full_outer")
-    wscore = F.round(
-        F.lit(alpha) * F.coalesce(F.col("vec_n"), F.lit(0.0))
-        + F.lit(1.0 - alpha) * F.coalesce(F.col("lex_n"), F.lit(0.0)),
-        4,
-    )
-    return (
-        fused.select("doc_id", wscore.alias("wscore"))
-        .orderBy(F.desc("wscore"), F.asc("doc_id"))
-        .limit(k)
-    )
-
-
 def compact_text_index(
     spark: SparkSession, sf_dir: str, threshold: int = 4
 ) -> str:

@@ -65,17 +65,8 @@ BENCH_KEYS = [
     "semdedup_prune",
     "ann_rp_lsh_topk",
     "knn_join_ivf_topk",
-    "ann_graph_topk",
-    "ann_graph_batch_topk",
-    "ann_graph_tombstone_topk",
-    "ann_graph_vacuumed_topk",
-    "ann_graph_filtered_topk",
-    "ann_graph_recursive_topk",
-    "ann_graph_acorn_topk",
-    "ann_graph_acorn_batch_topk",
     "hybrid_weighted_topk",
     "hybrid_weighted_served_topk",
-    "hybrid_weighted_graph_topk",
     # r14 (VERDICT r13 next #7): the r13 cost classes that were not yet
     # bench-visible — MVCC read-pin + rollback pointer swing (the
     # versioning path), content-keyed split

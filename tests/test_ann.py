@@ -305,31 +305,26 @@ def test_kmeans_assignment_is_pure_projection(spark, sf_dir):
 
 
 def test_cap_bucket_members_bounds_skewed_self_join(spark):
-    """Skew guard (VERDICT r7 next #4): a hot (band, band_key) bucket of
-    m members must contribute at most m x cap candidate pairs to the
-    self-join, not m² — the difference between a slow bucket and a dead
-    executor at 100 TB."""
+    """Skew guard: a hot cluster of m members must contribute at most
+    m x cap candidate pairs to the same-cell self-join, not m² — the
+    difference between a slow cell and a dead executor at 100 TB."""
     from adk_noui_vectordb_spark.operators.ann import cap_bucket_members
 
-    hot = [(0, 7, i) for i in range(1000)]  # one hot bucket, m=1000
-    cold = [(1, 3, i) for i in range(10)]
-    bands = spark.createDataFrame(
-        hot + cold, "band int, band_key int, vec_id int"
-    )
-    capped = cap_bucket_members(bands, cap=50)
+    hot = [(7, i) for i in range(1000)]  # one hot cluster, m=1000
+    cold = [(3, i) for i in range(10)]
+    members = spark.createDataFrame(hot + cold, "cluster int, vec_id int")
+    capped = cap_bucket_members(members, cap=50)
     sizes = {
-        (r["band"], r["band_key"]): r["n"]
-        for r in capped.groupBy("band", "band_key")
+        r["cluster"]: r["n"]
+        for r in capped.groupBy("cluster")
         .agg(F.count("*").alias("n"))
         .collect()
     }
-    assert sizes == {(0, 7): 50, (1, 3): 10}
+    assert sizes == {7: 50, 3: 10}
 
-    a = bands.select("band", "band_key", F.col("vec_id").alias("src"))
-    b = capped.select("band", "band_key", F.col("vec_id").alias("nbr"))
-    pairs = a.join(b, ["band", "band_key"]).filter(
-        F.col("src") != F.col("nbr")
-    )
+    a = members.select("cluster", F.col("vec_id").alias("src"))
+    b = capped.select("cluster", F.col("vec_id").alias("nbr"))
+    pairs = a.join(b, "cluster").filter(F.col("src") != F.col("nbr"))
     n_pairs = pairs.count()
     # hot: 1000 x 50 minus the 50 self-pairs; cold: 10 x 10 minus 10.
     assert n_pairs == 1000 * 50 - 50 + 90
@@ -341,16 +336,16 @@ def test_cap_bucket_members_deterministic_and_order_free(spark):
     partitioning (corpus-order determinism, the house discipline)."""
     from adk_noui_vectordb_spark.operators.ann import cap_bucket_members
 
-    rows = [(0, 1, i) for i in range(200)]
-    bands = spark.createDataFrame(rows, "band int, band_key int, vec_id int")
-    sel1 = {r["vec_id"] for r in cap_bucket_members(bands, cap=40).collect()}
-    shuffled = bands.orderBy(F.desc("vec_id")).repartition(7)
+    rows = [(1, i) for i in range(200)]
+    members = spark.createDataFrame(rows, "cluster int, vec_id int")
+    sel1 = {r["vec_id"] for r in cap_bucket_members(members, cap=40).collect()}
+    shuffled = members.orderBy(F.desc("vec_id")).repartition(7)
     sel2 = {
         r["vec_id"] for r in cap_bucket_members(shuffled, cap=40).collect()
     }
     assert sel1 == sel2 and len(sel1) == 40
-    # cap >= bucket size is the identity
-    assert cap_bucket_members(bands, cap=200).count() == 200
+    # cap >= cell size is the identity
+    assert cap_bucket_members(members, cap=200).count() == 200
 
 
 # --- incremental index maintenance (VERDICT r8 next #3/#4) --------------

@@ -258,6 +258,40 @@ def test_delete_requires_a_selector(spark, coll):
     assert [c for c, ok, _ in coll.fsck() if not ok] == []
 
 
+def test_delete_removes_exactly_the_rows_get_selects(spark, coll):
+    """``delete(where=w)`` removes exactly the ids ``get(where=w)``
+    returns, on metadata with NULL values: ``$or`` keeps a row whose
+    every branch is NULL, while ``$nin``/``$ne`` match a NULL field
+    (the DSL's negation semantics)."""
+    langs = ["en", "de", None, "fr", "en", None, "de", "fr", "de", None, "es", "de"]
+    stars = [1, None, 3, None, 5, 6, 2, 8, 4, None, 11, 1]
+    mat = _vecs(15, len(langs))
+    coll.add(
+        spark.createDataFrame(
+            [
+                (f"r{i}", [float(x) for x in mat[i]], f"doc {i}", langs[i], stars[i])
+                for i in range(len(langs))
+            ],
+            "id string, embedding array<double>, document string, "
+            "lang string, stars int",
+        )
+    )
+    trees = [
+        ({"$or": [{"lang": {"$eq": "en"}}, {"stars": {"$gt": 5}}]},
+         {"r0", "r4", "r5", "r7", "r10"}),
+        ({"stars": {"$nin": [1, 2]}}, {"r1", "r2", "r3", "r8", "r9"}),
+        ({"stars": {"$ne": 1}}, {"r6"}),
+    ]
+    for w, expect in trees:
+        before = {r["id"] for r in coll.get().collect()}
+        want = {r["id"] for r in coll.get(where=w).collect()}
+        assert want == expect, (w, want)
+        coll.delete(where=w)
+        after = {r["id"] for r in coll.get().collect()}
+        assert before - after == want, (w, before - after, want)
+    assert after == {"r11"}
+
+
 def test_schema_and_dim_are_enforced(spark, coll):
     coll.add(_batch(spark, ["a"], _vecs(14, 1)))
     # different metadata schema
@@ -1757,11 +1791,10 @@ def test_graph_strategy_refuses_non_cosine_spaces(spark, tmp_path):
 
 
 def test_graph_strategy_batch_equals_per_query(spark, sf_dir):
-    """The fused multi-query graph beam (one assignment job, one hub
-    resolution, one edges read + one vecs fetch per round for the UNION
-    of frontiers) keeps per-query state untouched: the batch result
-    equals the per-query calls row-for-row — the ann_graph_batch_topk
-    property at the facade."""
+    """The fused multi-query graph beam (one read of the edges
+    partitions per round for the UNION of frontiers) keeps per-query
+    state untouched: the batch result equals the per-query calls
+    row-for-row."""
     import os
 
     from pyspark.sql import functions as F

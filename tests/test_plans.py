@@ -414,9 +414,10 @@ def test_collection_keyset_page_pushes_cursor_to_scan(spark, sf_dir, opened_dirs
 
 def test_collection_reads_run_no_spark_jobs(spark, sf_dir):
     """Warm serving reads run ZERO Spark jobs: query (probe, filtered,
-    batch), get by ids, keyset-paged get(where, after_id) and count
-    read memoized partitions on the driver and return a local
-    DataFrame whose collect() schedules nothing."""
+    batch, and the graph strategy's blind, ACORN and batch walks), get
+    by ids, keyset-paged get(where, after_id) and count read memoized
+    partitions on the driver and return a local DataFrame whose
+    collect() schedules nothing."""
     from adk_noui_vectordb_spark.api.collection import demo_collection
 
     coll = demo_collection(spark, sf_dir)
@@ -427,6 +428,19 @@ def test_collection_reads_run_no_spark_jobs(spark, sf_dir):
             q[0], n_results=5, where={"lang": "en"}
         ).collect(),
         "query.batch": lambda: coll.query(q, n_results=5).collect(),
+        "query.graph": lambda: coll.query(
+            q[0], n_results=5, filter_strategy="graph"
+        ).collect(),
+        "query.graph_acorn": lambda: coll.query(
+            q[0],
+            n_results=5,
+            where={"lang": "en"},
+            filter_strategy="graph",
+            graph_predicate_expansion=True,
+        ).collect(),
+        "query.graph_batch": lambda: coll.query(
+            q, n_results=5, filter_strategy="graph"
+        ).collect(),
         "get.ids": lambda: coll.get(ids=["doc-1", "doc-7"]).collect(),
         "get.where": lambda: coll.get(
             where={"lang": "en"}, after_id="doc-1", limit=5
@@ -460,60 +474,6 @@ def test_sampled_ivf_probe_prunes_cells_and_takeordered(spark, sf_dir):
     pf = [l for l in plan.splitlines() if "PartitionFilters" in l and "cluster" in l]
     assert pf, plan
     assert "TakeOrderedAndProject" in plan, plan
-
-
-def test_acorn_pass_lookup_prunes_vbucket(spark, sf_dir):
-    """VERDICT r13 next #5 + r14 next #1: the corpus ACORN keys'
-    scored fetch is ONE scan of the label-carrying vecs component
-    (GRAPH_VECS_SCHEMA) with static vbucket PartitionFilters; the
-    labels sidecar keeps the same pruned layout (plan-pinned here)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from adk_noui_vectordb_spark.operators import graph_ann as gann
-
-    cur = gann.build_graph_index(spark, sf_dir)
-    vbs = [gann.vec_bucket_py(i) for i in (0, 3)]
-    for comp, schema in (
-        ("labels", gann.GRAPH_LABELS_SCHEMA),
-        ("vecs", gann.GRAPH_VECS_SCHEMA),
-    ):
-        probe = (
-            spark.read.schema(schema)
-            .parquet(os.path.join(cur, comp))
-            .filter(F.col("vbucket").isin(vbs) & F.col("vec_id").isin([0, 3]))
-        )
-        plan = explain_str(probe)
-        pf = [
-            ln
-            for ln in plan.splitlines()
-            if "PartitionFilters" in ln and "vbucket" in ln
-        ]
-        assert pf, f"{comp}: no vbucket PartitionFilters\n{plan}"
-    # the layout invariant behind the single-scan fetch: on this
-    # labeled corpus the vecs FILES physically carry the label, equal
-    # to the sidecar's value for the same id (not schema-filled nulls)
-    got = (
-        spark.read.schema(gann.GRAPH_VECS_SCHEMA)
-        .parquet(os.path.join(cur, "vecs"))
-        .filter(
-            F.col("vbucket").isin(vbs[:1]) & (F.col("vec_id") == F.lit(0))
-        )
-        .select("label")
-        .head()
-    )
-    want = (
-        spark.read.schema(gann.GRAPH_LABELS_SCHEMA)
-        .parquet(os.path.join(cur, "labels"))
-        .filter(
-            F.col("vbucket").isin(vbs[:1]) & (F.col("vec_id") == F.lit(0))
-        )
-        .select("label")
-        .head()
-    )
-    assert got is not None and want is not None
-    assert got["label"] == want["label"] and got["label"] is not None
 
 
 def test_late_interaction_plan_partial_max_and_take_ordered(spark, sf_dir):
@@ -594,23 +554,19 @@ def test_li_where_serve_narrow_meta_and_semi_join(spark, sf_dir):
 def test_serving_path_job_budgets(spark, sf_dir):
     """VERDICT r16 next #3: machine-independent pins for the multi-job
     serving families. Seconds are bench weather; Spark JOB counts are
-    scheduler round-trips and reproduce anywhere — so the r17 serving
-    wins (graph beam fusion halving per-round point reads, the fused
-    containment-gate prologue) are pinned here as a
-    WARM-serve job ceiling per key. Budgets are the measured warm
-    counts + 2 slack (sf0.001: graph solo/batch 6, acorn solo/batch 6,
-    collection graph 9, containment gate 15, served-LI 4);
-    a regression that re-adds a per-round fetch or an eager prologue
-    job jumps by >= rounds and fails the pin, not a bench."""
+    scheduler round-trips and reproduce anywhere — so each key's
+    WARM-serve job count is pinned as a ceiling. Budgets: the
+    containment gate and served-LI are their measured warm counts + 2
+    slack (sf0.001: 15 and 4); the collection graph key is pinned at
+    its measured 2, both from reading the demo query vector
+    (``_demo_query``'s head); the beam itself reads the graph version
+    on the driver and runs none. A regression that re-adds a per-round
+    fetch or an eager prologue job fails the pin, not a bench."""
     import __spark_entry__ as entry
 
     qs = entry.queries()
     budgets = {
-        "ann_graph_topk": 8,
-        "ann_graph_batch_topk": 8,
-        "ann_graph_acorn_topk": 8,
-        "ann_graph_acorn_batch_topk": 8,
-        "collection_query_graph_topk": 11,
+        "collection_query_graph_topk": 2,
         "dedup_containment_gate": 17,
         "late_interaction_topk_served": 6,
     }

@@ -64,22 +64,13 @@ KEYS = {
     "dedup_gate_against_index": "documents",
     "dedup_gate_intra_batch": "documents",
     "knn_join_ivf_topk": "embeddings",
-    "ann_graph_topk": "embeddings",
-    "ann_graph_batch_topk": "embeddings",
-    "ann_graph_tombstone_topk": "embeddings",
-    "ann_graph_vacuumed_topk": "embeddings",
-    "ann_graph_filtered_topk": "embeddings",
     # r13 additions
-    "ann_graph_recursive_topk": "embeddings",
-    "ann_graph_acorn_topk": "embeddings",
-    "ann_graph_acorn_batch_topk": "embeddings",
     "collection_query_graph_acorn_topk": "embeddings",
     "dedup_containment_pairs": "documents",
     "dedup_containment_gate": "documents",
     "split_train_holdout": "documents",
     "hybrid_weighted_topk": "documents",
     "hybrid_weighted_served_topk": "documents",
-    "hybrid_weighted_graph_topk": "documents",
     # r10b additions (query-language + filtered-ANN serving layer)
     "boolean_and_topk": "documents",
     "boolean_or_not_topk": "documents",

@@ -37,12 +37,7 @@ LANGS = ["en", "de", "fr", "es", "zh"]
 SOURCES = ["web", "wiki", "books", "code"]
 
 DEFAULT_KEYS = [
-    "ann_graph_topk",
-    "ann_graph_batch_topk",
-    "ann_graph_acorn_topk",
-    "ann_graph_acorn_batch_topk",
     "collection_query_graph_topk",
-    "hybrid_weighted_graph_topk",
     "dedup_substring_rewrite",
 ]
 
