@@ -132,14 +132,6 @@ def _q_chunk_js(spark: SparkSession, sf_dir: str) -> DataFrame:
     return chunk_js_elements(derived_js_corpus(spark, sf_dir, "de", ".js"))
 
 
-def _q_ann_rp_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multiprobe RP-LSH (operators/ann.py ann_rp_lsh_topk with
-    multiprobe_hamming=1): per band, probe the query's bucket plus its
-    RP_BAND_BITS Hamming-1 neighbor buckets of the on-disk partitioned
-    band table."""
-    return _ann.ann_rp_lsh_topk(spark, sf_dir, multiprobe_hamming=1)
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Every catalogue key mapped to its ``(spark, sf_dir) -> DataFrame``
     builder, in registry order."""
@@ -295,9 +287,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "late_interaction_filtered_topk_served": (
             _embed.late_interaction_filtered_topk_served
         ),
-        # r16: the FULL where-DSL over the LI rerank (the
-        # knn_where_dsl_topk symmetry — compound $and/$or/$in/$gte
-        # tree, one definition for both engines via where_to_sql)
+        # r16: the FULL where-DSL over the LI rerank (compound
+        # $and/$or/$in/$gte tree, one definition for both engines via
+        # where_to_sql)
         "late_interaction_where_topk_served": (
             _embed.late_interaction_where_topk_served
         ),
@@ -314,25 +306,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ),
         "knn_file_summary_query": _embed.knn_file_summary_query,
         "file_context": _idx.file_context,
-        # approximate ANN (SURVEY.md §4): the engine-owned
-        # random-hyperplane LSH (md5-seeded +-1 projections, integer-exact
-        # sign bits — operators/ann.py:rp_lsh_band_rows).
-        # r11: the 100 TB IVF training path — Lloyd's on the md5-top-s
+        # approximate ANN (SURVEY.md §4) — r11: the 100 TB IVF training path — Lloyd's on the md5-top-s
         # sample (cost independent of corpus size), one frozen-centroid
         # full-corpus assignment pass
         "ann_ivf_sampled_topk": _ann.ann_ivf_sampled_topk,
-        "rp_lsh_band_rows": _ann.rp_lsh_band_rows,
-        "ann_rp_lsh_topk": _ann.ann_rp_lsh_topk,
-        # r10: the reference's where-filtered vector query
-        # (collection.query(where={...})) — index probe for candidates,
-        # narrow metadata projection for the predicate, vecs-store rerank.
-        "ann_rp_lsh_filtered_topk": _ann.ann_rp_lsh_filtered_topk,
-        # r10c: the FULL ChromaDB where grammar over the same filtered-
-        # ANN plan — DSL tree compiled by functions/where_dsl.py and
-        # shared with the oracle via where_to_sql
-        "knn_where_dsl_topk": _ann.ann_rp_lsh_where_topk,
-        # r10c: per-group top-k from one probe (multi-tenant serving)
-        "ann_grouped_topk": _ann.ann_grouped_topk,
         # r10c: the ChromaDB-compatible Collection facade end-to-end —
         # the reference's collection.query / collection.get surface
         # (vector_search_tool.py:33-46,149-232) over the versioned
@@ -367,14 +344,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "collection_get_page2": _coll.collection_get_page2,
         # r11: the ip-space facade path with the 1 - dot value contract
         "collection_query_ip_topk": _coll.collection_query_ip_topk,
-        # r10: batched ANN — M queries, one tagged band-table probe,
-        # one vecs-store rerank pass (the knn_topk_batch of the index).
-        "ann_rp_lsh_batch_topk": _ann.ann_rp_lsh_batch_topk,
-        # r7: multiprobe recall knob (Hamming-1 bucket expansion per band,
-        # Lv et al. VLDB 2007) over the SAME on-disk partitioned band
-        # table — recall 1.00 on the isotropic worst case (BASELINE.md)
-        # at 30/96 partitions probed, no re-banding.
-        "ann_rp_lsh_multiprobe_topk": _q_ann_rp_multiprobe,
         # r10: cell-blocked batch kNN join — top-k neighbors for EVERY
         # vector from same-cell pairs only (n^2/c candidate volume)
         "knn_join_ivf_topk": _ann.knn_join_ivf_topk,
@@ -385,18 +354,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # min-max-normalized pool scores (preserves score magnitude
         # where RRF flattens to rank)
         "hybrid_weighted_topk": _hyb.hybrid_weighted_topk,
-        # r7: the LEXICAL build-once/serve-many lifecycle (the rp/ivf
+        # r7: the LEXICAL build-once/serve-many lifecycle (the ivf
         # serving contract applied to text): postings persisted to parquet
         # partitioned by md5 term bucket, probes statically prune to the
         # query terms' buckets (tests/test_plans.py), ranking arithmetic
         # byte-identical to bm25_topk so both share the _BM25_CTE oracle.
         "inverted_postings_rows": _inv.inverted_postings_rows,
-        # r9: the versioned-index maintenance components as
+        # r9: the versioned-index maintenance component as
         # driver-checkable rows — the docs/ reverse map the text
-        # replace path depends on, and the RP index's vecs/ store the
-        # serving reranks and vector replace path read.
+        # replace path depends on.
         "text_index_doc_map": _inv.text_index_doc_map,
-        "rp_index_vec_rows": _ann.rp_index_vec_rows,
         "bm25_topk_served": _inv.bm25_topk_served,
         # r10c: keyset pagination (search_after) — page 2 by cursor
         "bm25_page2_served": _inv.bm25_search_after,
@@ -447,12 +414,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # r10: facet counts over the top-100 search result (per-lang /
         # per-source panels) from a narrow metadata projection.
         "search_facet_counts": _inv.search_facet_counts,
-        # r7: BOTH retrieval arms from on-disk indexes (inverted index +
-        # RP-LSH band table) — zero corpus scans at query time.
-        "hybrid_rrf_served_topk": _inv.hybrid_rrf_served_topk,
-        # r12: alpha fusion from the same on-disk pools (zero corpus
-        # scans — the weighted scan key's serving twin)
-        "hybrid_weighted_served_topk": _inv.hybrid_weighted_served_topk,
         # r7: dedup reporting — duplicate-cluster size distribution
         "dup_cluster_size_histogram": _dedup.dup_cluster_size_histogram,
     }
@@ -470,7 +431,8 @@ _COS = (
 
 _STOPWORDS_SQL = "('the','a','of','and','to','in','is','it')"
 
-# Random-hyperplane LSH band table (operators/ann.py:rp_lsh_band_rows):
+# Random-hyperplane LSH band table (operators/ann.py _rp_band_keys, the
+# kernel that keys Collection's bands/):
 # +-1 hyperplanes regenerated from md5 parity; the sign-determining dot
 # runs over floor-scaled integer micro-units, so every term and the
 # 64-term sum are integer-valued doubles far below 2^53 — exact in any
@@ -496,32 +458,6 @@ rp_bands AS (
            CAST(sum(bit * (1 << CAST(p % 4 AS INTEGER))) AS INTEGER) AS band_key
     FROM rp_bits GROUP BY 1, 2
 )"""
-
-# The index-served candidate pools shared by both served hybrid twins
-# (RRF and weighted): the multiprobe RP-LSH vector pool + the BM25
-# lexical pool, each cut to 100. Requires _BM25_CTE and _RP_BANDS_CTE
-# earlier in the chain.
-_SRV_POOLS_CTE = f"""srv_qb AS (
-    SELECT band, band_key FROM rp_bands WHERE vec_id = 0
-),
-srv_qb_exp AS (
-    SELECT band, band_key FROM srv_qb
-    UNION
-    SELECT q.band, CAST(xor(q.band_key, (1 << t.b)) AS INTEGER) AS band_key
-    FROM srv_qb q CROSS JOIN (SELECT unnest(range(0, {_ann.RP_BAND_BITS})) AS b) t
-),
-srv_cand AS (
-    SELECT DISTINCT b.vec_id FROM rp_bands b JOIN srv_qb_exp USING (band, band_key)
-    WHERE b.vec_id <> 0
-),
-srv_qe AS (
-    SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0
-),
-srv_vsims AS (
-    SELECT e.vec_id AS doc_id, {_COS.format(a="e.embedding", b="srv_qe.q_emb")} AS sim
-    FROM embeddings e JOIN srv_cand USING (vec_id) CROSS JOIN srv_qe
-),
-srv_vec_top AS (SELECT doc_id, sim FROM srv_vsims ORDER BY sim DESC, doc_id LIMIT 100)"""
 
 
 def _kmeans_ctes(
@@ -2981,113 +2917,10 @@ SELECT user_id, event_id AS last_event_id, event_type, value FROM (
 ) WHERE rn = 1
 """,
         "ann_ivf_sampled_topk": _ivf_sampled_sql(),
-        "rp_lsh_band_rows": f"""
-WITH {_RP_BANDS_CTE}
-SELECT vec_id, band, band_key FROM rp_bands
-""",
-        "ann_rp_lsh_topk": f"""
-WITH {_RP_BANDS_CTE},
-qb AS (
-    SELECT band, band_key FROM rp_bands WHERE vec_id = 0
-),
-cand AS (
-    SELECT DISTINCT b.vec_id FROM rp_bands b JOIN qb USING (band, band_key)
-    WHERE b.vec_id <> 0
-),
-qe AS (
-    SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0
-)
-SELECT e.vec_id, {_COS.format(a="e.embedding", b="qe.q_emb")} AS sim
-FROM embeddings e JOIN cand USING (vec_id) CROSS JOIN qe
-ORDER BY sim DESC, e.vec_id LIMIT 10
-""",
-        # Multiprobe twin: the probe set per band is the query's key plus
-        # its RP_BAND_BITS Hamming-1 neighbors (xor with each power of 2).
-        "ann_rp_lsh_multiprobe_topk": f"""
-WITH {_RP_BANDS_CTE},
-qb AS (
-    SELECT band, band_key FROM rp_bands WHERE vec_id = 0
-),
-qb_exp AS (
-    SELECT band, band_key FROM qb
-    UNION
-    SELECT q.band, CAST(xor(q.band_key, (1 << t.b)) AS INTEGER) AS band_key
-    FROM qb q CROSS JOIN (SELECT unnest(range(0, {_ann.RP_BAND_BITS})) AS b) t
-),
-cand AS (
-    SELECT DISTINCT b.vec_id FROM rp_bands b JOIN qb_exp USING (band, band_key)
-    WHERE b.vec_id <> 0
-),
-qe AS (
-    SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0
-)
-SELECT e.vec_id, {_COS.format(a="e.embedding", b="qe.q_emb")} AS sim
-FROM embeddings e JOIN cand USING (vec_id) CROSS JOIN qe
-ORDER BY sim DESC, e.vec_id LIMIT 10
-""",
-        # Batched ANN: per-query band pairs tagged by query id, one
-        # candidate dedup, one rerank, one per-query rank window.
-        "ann_rp_lsh_batch_topk": f"""
-WITH {_RP_BANDS_CTE},
-qids(query_id) AS (VALUES (CAST(0 AS BIGINT)), (3), (9)),
-qb AS (
-    SELECT q.query_id, b.band, b.band_key
-    FROM rp_bands b JOIN qids q ON b.vec_id = q.query_id
-),
-cand AS (
-    SELECT DISTINCT q.query_id, b.vec_id
-    FROM rp_bands b JOIN qb q USING (band, band_key)
-    WHERE b.vec_id <> q.query_id
-),
-qe AS (
-    SELECT q.query_id, e.embedding AS q_emb
-    FROM embeddings e JOIN qids q ON e.vec_id = q.query_id
-),
-sims AS (
-    SELECT c.query_id, c.vec_id,
-           {_COS.format(a="e.embedding", b="qe.q_emb")} AS sim
-    FROM cand c JOIN embeddings e USING (vec_id) JOIN qe USING (query_id)
-)
-SELECT query_id, vec_id, sim, rank FROM (
-    SELECT query_id, vec_id, sim,
-           CAST(row_number() OVER (
-               PARTITION BY query_id ORDER BY sim DESC, vec_id
-           ) AS INTEGER) AS rank
-    FROM sims
-) WHERE rank <= 5
-""",
-        # Filtered ANN: the multiprobe candidate set intersected with
-        # the metadata predicate (label = 1) before the exact rerank.
-        "ann_rp_lsh_filtered_topk": f"""
-WITH {_RP_BANDS_CTE},
-qb AS (
-    SELECT band, band_key FROM rp_bands WHERE vec_id = 0
-),
-qb_exp AS (
-    SELECT band, band_key FROM qb
-    UNION
-    SELECT q.band, CAST(xor(q.band_key, (1 << t.b)) AS INTEGER) AS band_key
-    FROM qb q CROSS JOIN (SELECT unnest(range(0, {_ann.RP_BAND_BITS})) AS b) t
-),
-cand AS (
-    SELECT DISTINCT b.vec_id FROM rp_bands b JOIN qb_exp USING (band, band_key)
-    WHERE b.vec_id <> 0
-),
-fcand AS (
-    SELECT c.vec_id FROM cand c JOIN embeddings e USING (vec_id)
-    WHERE e.label = 1
-),
-qe AS (
-    SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0
-)
-SELECT e.vec_id, {_COS.format(a="e.embedding", b="qe.q_emb")} AS sim
-FROM embeddings e JOIN fcand USING (vec_id) CROSS JOIN qe
-ORDER BY sim DESC, e.vec_id LIMIT 10
-""",
         # Collection facade twins: the collection holds documents INNER
         # JOIN embeddings (id = 'doc-' || doc_id); its band table is the
         # same RP kernel over the same vectors, so the candidate set is
-        # the multiprobe CTE's; distance = 1 - rounded cosine; ChromaDB
+        # the Hamming-1 multiprobe of _RP_BANDS_CTE; distance = 1 - rounded cosine; ChromaDB
         # keeps self-matches. Filter trees render from the api module's
         # shared constants.
         "collection_query_graph_topk": _collection_graph_sql(),
@@ -3196,69 +3029,6 @@ SELECT id, lang, source, n_chars FROM flt CROSS JOIN cursor
 WHERE id > cursor.last_id
 ORDER BY id ASC
 LIMIT 10
-""",
-        # Grouped twin: same multiprobe candidates, one rank window per
-        # label over the rounded-cosine rerank.
-        "ann_grouped_topk": f"""
-WITH {_RP_BANDS_CTE},
-qb AS (
-    SELECT band, band_key FROM rp_bands WHERE vec_id = 0
-),
-qb_exp AS (
-    SELECT band, band_key FROM qb
-    UNION
-    SELECT q.band, CAST(xor(q.band_key, (1 << t.b)) AS INTEGER) AS band_key
-    FROM qb q CROSS JOIN (SELECT unnest(range(0, {_ann.RP_BAND_BITS})) AS b) t
-),
-cand AS (
-    SELECT DISTINCT b.vec_id FROM rp_bands b JOIN qb_exp USING (band, band_key)
-    WHERE b.vec_id <> 0
-),
-qe AS (
-    SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0
-),
-scored AS (
-    SELECT e.label, e.vec_id,
-           {_COS.format(a="e.embedding", b="qe.q_emb")} AS sim
-    FROM embeddings e JOIN cand USING (vec_id) CROSS JOIN qe
-)
-SELECT label, vec_id, sim, rank FROM (
-    SELECT label, vec_id, sim,
-           CAST(row_number() OVER (
-               PARTITION BY label ORDER BY sim DESC, vec_id
-           ) AS INTEGER) AS rank
-    FROM scored
-) WHERE rank <= 3
-ORDER BY label, rank
-""",
-        # Full where-DSL twin of the filtered-ANN oracle: the predicate
-        # renders from the SAME tree the Spark key compiles
-        # (ann.ANN_WHERE_DEMO through where_to_sql).
-        "knn_where_dsl_topk": f"""
-WITH {_RP_BANDS_CTE},
-qb AS (
-    SELECT band, band_key FROM rp_bands WHERE vec_id = 0
-),
-qb_exp AS (
-    SELECT band, band_key FROM qb
-    UNION
-    SELECT q.band, CAST(xor(q.band_key, (1 << t.b)) AS INTEGER) AS band_key
-    FROM qb q CROSS JOIN (SELECT unnest(range(0, {_ann.RP_BAND_BITS})) AS b) t
-),
-cand AS (
-    SELECT DISTINCT b.vec_id FROM rp_bands b JOIN qb_exp USING (band, band_key)
-    WHERE b.vec_id <> 0
-),
-fcand AS (
-    SELECT c.vec_id FROM cand c JOIN embeddings e USING (vec_id)
-    WHERE {_wdsl.where_to_sql(_ann.ANN_WHERE_DEMO)}
-),
-qe AS (
-    SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0
-)
-SELECT e.vec_id, {_COS.format(a="e.embedding", b="qe.q_emb")} AS sim
-FROM embeddings e JOIN fcand USING (vec_id) CROSS JOIN qe
-ORDER BY sim DESC, e.vec_id LIMIT 10
 """,
         "knn_join_ivf_topk": _knn_join_ivf_sql(),
         "bm25_topk": f"""
@@ -3525,62 +3295,7 @@ SELECT doc_id, CAST(_tf0 + _tf1 AS BIGINT) AS tf_total
 FROM piv WHERE (_tf0 > 0 OR _tf1 > 0) AND _tf2 = 0
 ORDER BY tf_total DESC, doc_id LIMIT 10
 """,
-        # Served hybrid: the scan-time fusion tail over the SERVED
-        # candidate sources — BM25 list (identical arithmetic) and the
-        # RP-LSH probe candidates (exact cosine rerank, LIMIT 100).
-        "hybrid_rrf_served_topk": f"""
-WITH {_BM25_CTE},
-{_RP_BANDS_CTE.lstrip()},
-{_SRV_POOLS_CTE},
-srv_vec_ranked AS (
-    SELECT doc_id,
-           row_number() OVER (ORDER BY sim DESC, doc_id) AS vec_rank
-    FROM srv_vec_top
-),
-srv_lex_top AS (SELECT doc_id, bm25 FROM bm ORDER BY bm25 DESC, doc_id LIMIT 100),
-srv_lex_ranked AS (
-    SELECT doc_id,
-           row_number() OVER (ORDER BY bm25 DESC, doc_id) AS lex_rank
-    FROM srv_lex_top
-),
-srv_fused AS (
-    SELECT coalesce(l.doc_id, v.doc_id) AS doc_id, l.lex_rank, v.vec_rank
-    FROM srv_lex_ranked l FULL OUTER JOIN srv_vec_ranked v ON l.doc_id = v.doc_id
-)
-SELECT doc_id, CAST(lex_rank AS INTEGER) AS lex_rank,
-       CAST(vec_rank AS INTEGER) AS vec_rank,
-       coalesce(1.0::DOUBLE / (60 + lex_rank), 0.0::DOUBLE)
-       + coalesce(1.0::DOUBLE / (60 + vec_rank), 0.0::DOUBLE) AS rrf
-FROM srv_fused ORDER BY rrf DESC, doc_id LIMIT 10
-""",
-        # Served alpha fusion (invindex.py hybrid_weighted_served_topk):
-        # the SAME served pools, the weighted scan key's fusion tail.
-        "hybrid_weighted_served_topk": f"""
-WITH {_BM25_CTE},
-{_RP_BANDS_CTE.lstrip()},
-{_SRV_POOLS_CTE},
-srv_vec_stats AS (SELECT min(sim) AS mn, max(sim) AS mx FROM srv_vec_top),
-srv_vec_n AS (
-    SELECT doc_id,
-           CASE WHEN s.mx = s.mn THEN 1.0::DOUBLE
-                ELSE (sim - s.mn) / (s.mx - s.mn) END AS vec_n
-    FROM srv_vec_top CROSS JOIN srv_vec_stats s
-),
-srv_lex_top AS (SELECT doc_id, bm25 FROM bm ORDER BY bm25 DESC, doc_id LIMIT 100),
-srv_lex_stats AS (SELECT min(bm25) AS mn, max(bm25) AS mx FROM srv_lex_top),
-srv_lex_n AS (
-    SELECT doc_id,
-           CASE WHEN s.mx = s.mn THEN 1.0::DOUBLE
-                ELSE (bm25 - s.mn) / (s.mx - s.mn) END AS lex_n
-    FROM srv_lex_top CROSS JOIN srv_lex_stats s
-)
-SELECT coalesce(l.doc_id, v.doc_id) AS doc_id,
-       round(0.6::DOUBLE * coalesce(v.vec_n, 0.0::DOUBLE)
-             + 0.4::DOUBLE * coalesce(l.lex_n, 0.0::DOUBLE), 4) AS wscore
-FROM srv_lex_n l FULL OUTER JOIN srv_vec_n v ON l.doc_id = v.doc_id
-ORDER BY wscore DESC, doc_id LIMIT 10
-""",
-        # Index-content check (the rp_lsh_band_rows analog): the probed
+        # Index-content check: the probed
         # postings rows themselves — tf per (doc, query term) plus the
         # denormalized doc length.
         "inverted_postings_rows": """
@@ -3593,10 +3308,10 @@ FROM words w JOIN dl USING (doc_id)
 WHERE w.term IN ('join', 'scan', 'window')
 GROUP BY 1, 2
 """,
-        # r9 maintenance components: the docs/ reverse map (one row per
-        # doc x term bucket its postings occupy) and the RP vecs/ store
-        # bucketing — both re-derived from the raw tables with the SAME
-        # md5 first-8-hex-digit arithmetic the Spark build uses.
+        # r9 maintenance component: the docs/ reverse map (one row per
+        # doc x term bucket its postings occupy), re-derived from the raw
+        # tables with the SAME md5 first-8-hex-digit arithmetic the Spark
+        # build uses.
         "text_index_doc_map": f"""
 WITH toks AS (
     SELECT doc_id, len(string_split(text, ' ')) AS dl,
@@ -3607,12 +3322,6 @@ SELECT DISTINCT doc_id, CAST(dl AS BIGINT) AS dl,
        CAST(('0x' || substr(md5(term), 1, 8))::BIGINT
             % {_inv.N_TERM_BUCKETS} AS INTEGER) AS tbucket
 FROM toks
-""",
-        "rp_index_vec_rows": f"""
-SELECT vec_id,
-       CAST(('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 8))::BIGINT
-            % {_ann.N_VEC_BUCKETS} AS INTEGER) AS vbucket
-FROM embeddings
 """,
         "hybrid_rrf_topk": f"""
 WITH {_BM25_CTE},
@@ -4215,7 +3924,7 @@ LIMIT 5
         # Where-DSL served ColBERT twin: same equivalence argument as
         # the filtered twin, with the corpus restricted by the SHARED
         # where tree rendered through where_to_sql (one filter
-        # definition, two engines — the knn_where_dsl_topk discipline).
+        # definition, two engines).
 "late_interaction_where_topk_served": f"""
 WITH qtok AS (
     SELECT * FROM (VALUES (0, 'spark'), (1, 'query'),

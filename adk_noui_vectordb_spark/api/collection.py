@@ -267,6 +267,20 @@ def _read_partition(spark: SparkSession, part: str, columns: list, convert):
     return version_memo(spark, part, "coll_partition", build, _dir_id(part))
 
 
+def _sims4(q, ids, rows: dict) -> dict:
+    """{id: 4-dp cosine of ``rows[id]`` against the query ``q``} for
+    the ``ids`` that have a row, scored in one ``np_scores`` call — the
+    Catalyst fold every other strategy scores with."""
+    import numpy as np
+
+    have = [i for i in ids if i in rows]
+    if not have:
+        return {}
+    mat = np.stack([rows[i] for i in have]).astype(np.float64, copy=False)
+    qs = np.asarray(q, dtype=np.float64)[None, :]
+    return dict(zip(have, np_round4(np_scores(mat, qs, "cosine"))[:, 0].tolist()))
+
+
 def _row_mask(meta, where, where_document):
     """The meta rows ``where`` and ``where_document`` keep."""
     import numpy as np
@@ -595,7 +609,7 @@ class Collection:
         as a routing bridge scores with its CURRENT vector — right
         answer by construction; the alias translation dedups it against
         its rid twin). Returns the graph version dir."""
-        from ..memo import dataset_fingerprint, index_root
+        from ..memo import dataset_fingerprint, index_root, version_memo
         from ..operators.graph_ann import build_graph_index
 
         lin = self._graph_lineage_dir()
@@ -610,7 +624,16 @@ class Collection:
                 state = None
 
         def _fp(ver_dir: str) -> list:
-            return [list(t) for t in dataset_fingerprint(ver_dir)]
+            # a published version never changes; keying on the dir's
+            # identity as well as its path makes a commit that reuses a
+            # rolled-back version's name miss and re-fingerprint
+            return version_memo(
+                self.spark,
+                ver_dir,
+                "coll_fingerprint",
+                lambda: [list(t) for t in dataset_fingerprint(ver_dir)],
+                _dir_id(ver_dir),
+            )
 
         def _save(scratch: str, alias: "dict | None" = None) -> None:
             os.makedirs(lin, exist_ok=True)
@@ -857,7 +880,7 @@ class Collection:
         Spark job."""
         import numpy as np
 
-        from ..operators.graph_ann import _seed_hubs, _sim4
+        from ..operators.graph_ann import _seed_hubs
 
         entry, cent_rows, hub_of = self._graph_coarse(gver)
         seeds_per_q = [
@@ -869,10 +892,9 @@ class Collection:
             gver, len(qvecs[0]), {vec_bucket_py(s) for s in seeds}
         )
         hit = np.isin(vids, list(seeds))
-        first = {int(v): row.tolist() for v, row in zip(vids[hit], vmat[hit])}
+        first = {int(v): row for v, row in zip(vids[hit], vmat[hit])}
         visited = [
-            {s: _sim4(q, first[s]) for s in ss if s in first}
-            for q, ss in zip(qvecs, seeds_per_q)
+            _sims4(q, ss, first) for q, ss in zip(qvecs, seeds_per_q)
         ]
         # shared payload cache filled by fetch_adj from the edge rows'
         # neighbor embeddings (GRAPH_EDGES_SCHEMA)
@@ -897,7 +919,7 @@ class Collection:
                         adj[s] = set(nbrs)
                     for n in nbrs:
                         if n not in payload and n in ppay:
-                            payload[n] = ppay[n].tolist()
+                            payload[n] = ppay[n]
             return adj
 
         return fetch_adj, payload, visited
@@ -911,8 +933,6 @@ class Collection:
         visited state is untouched, so each query's evolution equals
         its solo run. Returns one {graph id: 4-dp sim} per query, in
         input order."""
-        from ..operators.graph_ann import _sim4
-
         fetch_adj, payload, visited = self._graph_batch_state(gver, qvecs)
         frontier = [
             sorted(v, key=lambda x: (-v[x], x))[:beam] for v in visited
@@ -931,9 +951,7 @@ class Collection:
             if not need:
                 break  # every query at its fixed point
             for qi, q in enumerate(qvecs):
-                for vid in new_per_q[qi]:
-                    if vid in payload:
-                        visited[qi][vid] = _sim4(q, payload[vid])
+                visited[qi].update(_sims4(q, new_per_q[qi], payload))
                 frontier[qi] = sorted(
                     visited[qi], key=lambda x: (-visited[qi][x], x)
                 )[:beam]
@@ -952,8 +970,6 @@ class Collection:
         calls on the meta rows. ~2× the blind beam's reads, the
         documented opt-in cost. Returns (visited list, passing graph id
         set)."""
-        from ..operators.graph_ann import _sim4
-
         fetch_adj, payload, visited = self._graph_batch_state(gver, qvecs)
         passing: set = set(pass_of({s for v in visited for s in v}))
         for _ in range(rounds):
@@ -998,9 +1014,9 @@ class Collection:
             if not need:
                 break
             for qi, q in enumerate(qvecs):
-                for vid in new1_per_q[qi] | new2_per_q[qi]:
-                    if vid in payload:
-                        visited[qi][vid] = _sim4(q, payload[vid])
+                visited[qi].update(
+                    _sims4(q, new1_per_q[qi] | new2_per_q[qi], payload)
+                )
         return visited, passing
 
     def _band_rows_for(self, e: DataFrame, dim: int) -> DataFrame:
@@ -1361,7 +1377,7 @@ class Collection:
             return new
 
         # resubmitted ids: pruned reverse-map read from the collection's
-        # own meta store (the vecs store's analog of update_rp_index)
+        # own meta store (the vecs store's reverse map)
         mbuckets = sorted(
             r["m"]
             for r in b.select(_mbucket_expr(F.col("vec_id")).alias("m"))

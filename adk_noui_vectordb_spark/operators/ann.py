@@ -5,10 +5,11 @@ coding_agent/tools/indexing_agent.py:55, vector_search_tool.py:42). HNSW is
 a single-node graph structure that does not shard naturally; the Spark-first
 pieces here are (SURVEY.md section 4):
 
-- the random-hyperplane LSH band index (``build_rp_index``,
-  ``ann_rp_lsh_topk`` and its filtered/batch variants): probe only the
-  query's band buckets, then exact-rerank the candidates. Its band
-  kernels also key ``Collection``'s on-disk band table.
+- the random-hyperplane LSH kernels (``_rp_plane_signs``,
+  ``_rp_band_keys``): md5-seeded hyperplanes and integer-exact band
+  keys. They key ``Collection``'s on-disk band table, which its
+  ``query`` probes before an exact rerank, and ``embed``'s
+  late-interaction index (``rp_band_rows_for``).
 - the sample-trained IVF (``build_ivf_index_sampled``,
   ``ann_ivf_sampled_topk``): partition vectors by nearest centroid and
   prune to the ``nprobe`` closest cells at query time. Its trainer, the
@@ -124,29 +125,11 @@ def _rp_band_keys(mat, signs_t) -> "object":
 N_VEC_BUCKETS = 32
 
 
-# Explicit component schemas: partitioned index components can be EMPTY
-# (an all-zero-norm corpus bands nothing; deleting every vector empties
-# assign), and schema inference fails on a file-less directory —
-# readers therefore always pass the schema (found by the r9 lifecycle
-# property test).
-RP_BANDS_SCHEMA = "vec_id bigint, band int, band_key int"
+# Explicit component schemas: a partitioned index component can be
+# EMPTY (deleting every vector empties assign), and schema inference
+# fails on a file-less directory — readers therefore always pass one.
 VECS_SCHEMA = "vec_id bigint, emb array<double>, vbucket int"
-
-
-def _pair_eq(pairs):
-    """(band, band_key) OR-probe as ONE parsed expression — the py4j
-    round-trip killer shared by the serving probes and the update
-    paths' rewrite filters (functions/predicates.py doc)."""
-    from ..functions.predicates import pair_eq_any
-
-    return pair_eq_any("band", "band_key", pairs)
-
-
 IVF_ASSIGN_SCHEMA = "vec_id bigint, cluster int"
-
-# compact_index component specs — used by the update/delete
-# auto-compaction hook (VERDICT r9 next #7) and ``compact_rp_index``.
-RP_COMPONENTS = [("bands", ["band", "band_key"]), ("vecs", ["vbucket"])]
 
 
 def vec_bucket_expr(vec_id: F.Column) -> F.Column:
@@ -176,244 +159,12 @@ def _nonzero_pred() -> F.Column:
     return F.exists(F.col("emb"), lambda x: x != F.lit(0.0))
 
 
-def rp_index_root(sf_dir: str) -> str:
-    from ..memo import index_root
-
-    return index_root("rp_index_v2", sf_dir, RP_PLANES, RP_BANDS, N_VEC_BUCKETS)
-
-
-def _rp_current_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Resolve (building if absent) the current RP index version dir —
-    self-contained: ``bands/`` (the LSH table) + ``vecs/`` (the
-    vector store the serving rerank reads, making the index the corpus
-    of record exactly like the reference's ChromaDB collection)."""
-    build_rp_index(spark, sf_dir)
-    from ..sources import versioning as vn
-
-    return vn.current_dir(rp_index_root(sf_dir))
-
-
-def build_rp_index(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once / serve-many for the RP-LSH band table: materialize
-    ``rp_lsh_band_rows`` as parquet PARTITIONED BY (band, band_key) and
-    return the band-table path. This is the 100 TB serving layout
-    (VERDICT r6 next #1): a probe's RP_BANDS (band, band_key) literals
-    become static partition filters, so the scan lists ONLY the probed
-    bucket directories — at most RP_BANDS * 2^RP_BAND_BITS = 96
-    partitions exist and a single-probe query touches 6 of them, never
-    the corpus. Pruning is pinned in tests/test_plans.py.
-
-    Since r9 the index is VERSIONED (sources/versioning.py — the atomic
-    ``_CURRENT`` pointer lifecycle shared with the lexical index) and
-    carries a second component: ``vecs/vbucket=*/`` holds every indexed
-    (vec_id, emb) row partitioned by the md5 vec bucket, which makes the
-    index self-contained — serving reranks and incremental updates
-    (``update_rp_index``) read vectors from the index, never the source
-    table. The directory tag hashes the dataset fingerprint
-    (memo.index_root), so regenerated testdata gets a fresh build
-    instead of a stale index (ADVICE r6).
-    """
-    from ..sources import versioning as vn
-
-    root = rp_index_root(sf_dir)
-    cur = vn.current_dir(root)
-    if cur is not None:
-        return os.path.join(cur, "bands")
-    os.makedirs(root, exist_ok=True)
-    tmp = os.path.join(root, ".__tmp_build__")
-    shutil.rmtree(tmp, ignore_errors=True)
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    # Zero-norm vectors are excluded from the BAND TABLE at build time
-    # (a zero vector has no direction — its cosine to anything is
-    # undefined, so band membership is meaningless; and in the batch
-    # k-NN join they would waste md5-top-cap slots, ADVICE r8). They
-    # stay in vecs/ (point-lookupable, replaceable); `exists`
-    # short-circuits at the first nonzero element — no dot-product HOF.
-    rp_band_rows_for(e.filter(_nonzero_pred())).write.mode(
-        "overwrite"
-    ).partitionBy("band", "band_key").parquet(os.path.join(tmp, "bands"))
-    e.select(
-        vec_bucket_expr(F.col("vec_id")).alias("vbucket"), "vec_id", "emb"
-    ).write.mode("overwrite").partitionBy("vbucket").parquet(
-        os.path.join(tmp, "vecs")
-    )
-    name = vn.next_version_name(root)
-    try:
-        vn.publish_version(root, tmp, name, expected=None)
-    except vn.ConcurrentWriterError:
-        # an interleaved builder won the race to the initial version —
-        # theirs is equivalent (same corpus fingerprint in the root tag)
-        return os.path.join(vn.current_dir(root), "bands")
-    return os.path.join(root, name, "bands")
-
-
-def update_rp_index(
-    spark: SparkSession,
-    sf_dir: str,
-    new_vecs: DataFrame,
-    auto_compact_threshold: int = 16,
-) -> str:
-    """Incremental RP-LSH maintenance with vec-level REPLACE (upsert)
-    semantics — the reference's core write path (indexing_agent.py:
-    332-361 upserts changed files into ChromaDB, whose HNSW updates
-    incrementally) for the band table. Returns the new current
-    band-table path.
-
-    A batch vector's band rows come from the SAME module-level kernel
-    as the build (``rp_band_rows_for`` — byte-identical signatures).
-
-    APPEND-MOSTLY discipline (the measured r9 finding,
-    tools/bench_incremental_updates.py): the band table has only
-    RP_BANDS * 2^RP_BAND_BITS = 96 partitions, so "rewrite affected
-    buckets" degenerates to rewriting the WHOLE table for any diverse
-    batch — the incremental path would cost O(corpus). Instead:
-
-    - brand-NEW vec_ids (the bulk-ingest common case) have no stale
-      rows to retract, so their band rows simply APPEND as new part
-      files into hardlinked partitions — ZERO reads of existing band
-      data, O(batch) total;
-    - RE-submitted vec_ids (replace) force rewrites of exactly the
-      partitions holding their stale rows — found by re-banding their
-      OLD vectors from the index's ``vecs/`` store (the signature is a
-      pure function of the stored vector, so ``vecs/`` doubles as the
-      reverse map, pruned by the batch's literal vbucket set) — a
-      per-partition anti-join bounded by resubmit_count * RP_BANDS
-      partitions, never the batch's own (random, dense) bucket set.
-
-    Appends accumulate small files; ``compact_rp_index`` folds them
-    back single-file inside a normal versioned commit. The commit is
-    the atomic ``_CURRENT`` swing (sources/versioning.py) either way,
-    so a crash mid-update leaves every reader on the old version.
-
-    Equality with a fresh rebuild over the combined corpus and
-    served-probe convergence one batch after ingest are pinned in
-    tests/test_ann.py. After an update the index represents
-    ``sf_dir ∪ batch`` — the index, not the source table, is the
-    corpus of record (the update_text_index contract).
-    """
-    from ..sources import versioning as vn
-
-    cur = _rp_current_dir(spark, sf_dir)
-    root = os.path.dirname(cur)
-
-    emb_col = "embedding" if "embedding" in new_vecs.columns else "emb"
-    batch = (
-        new_vecs.select(
-            "vec_id", F.col(emb_col).cast("array<double>").alias("emb")
-        )
-        .dropDuplicates(["vec_id"])
-        .localCheckpoint(eager=True)
-    )
-    # band rows only for directional (nonzero) vectors — the build-time
-    # exclusion contract; zero-norm batch vectors still land in vecs/.
-    batch_bands = rp_band_rows_for(batch.filter(_nonzero_pred())).localCheckpoint(
-        eager=True
-    )
-    batch_ids = batch.select("vec_id")
-    vbuckets = sorted(
-        r["b"]
-        for r in batch_ids.select(
-            vec_bucket_expr(F.col("vec_id")).alias("b")
-        ).distinct().collect()
-    )
-    if not vbuckets:
-        return os.path.join(cur, "bands")
-
-    # Re-submitted ids and their stale locations (pruned reverse-map
-    # read; empty for a pure-ADD batch, which then touches no old data).
-    old_vecs_aff = spark.read.schema(VECS_SCHEMA).parquet(os.path.join(cur, "vecs")).filter(
-        F.col("vbucket").isin(vbuckets)
-    )
-    resub = (
-        old_vecs_aff.join(batch_ids, "vec_id", "leftsemi")
-        .select("vbucket", "vec_id", "emb")
-        .localCheckpoint(eager=True)
-    )
-    resub_ids = resub.select("vec_id")
-    rw_pairs = {
-        (r["band"], r["band_key"])
-        for r in rp_band_rows_for(
-            resub.select("vec_id", "emb").filter(_nonzero_pred())
-        )
-        .select("band", "band_key")
-        .distinct()
-        .collect()
-    }
-    rw_vb = sorted(
-        r["vbucket"] for r in resub.select("vbucket").distinct().collect()
-    )
-
-    # bands: rewrite ONLY partitions holding stale rows; link the rest;
-    # append every batch band row (adds land beside linked files,
-    # replacements beside their rewritten partition's files).
-    band_writes = []
-    if rw_pairs:
-        pair_pred = _pair_eq(sorted(rw_pairs))
-        band_writes.append(
-            spark.read.schema(RP_BANDS_SCHEMA)
-            .parquet(os.path.join(cur, "bands"))
-            .filter(pair_pred)
-            .join(resub_ids, "vec_id", "left_anti")
-            .select("band", "band_key", "vec_id")
-        )
-    band_writes.append(batch_bands.select("band", "band_key", "vec_id"))
-    # vecs: same discipline on the vbucket axis.
-    vec_writes = []
-    if rw_vb:
-        vec_writes.append(
-            spark.read.schema(VECS_SCHEMA)
-            .parquet(os.path.join(cur, "vecs"))
-            .filter(F.col("vbucket").isin(rw_vb))
-            .join(resub_ids, "vec_id", "left_anti")
-            .select("vbucket", "vec_id", "emb")
-        )
-    vec_writes.append(
-        batch.select(
-            vec_bucket_expr(F.col("vec_id")).alias("vbucket"), "vec_id", "emb"
-        )
-    )
-    new_cur = vn.commit_version(
-        spark,
-        root,
-        [
-            vn.Component(
-                "bands",
-                ("band", "band_key"),
-                frozenset(f"band={b}/band_key={k}" for b, k in rw_pairs),
-                tuple(band_writes),
-            ),
-            vn.Component(
-                "vecs",
-                ("vbucket",),
-                frozenset(f"vbucket={b}" for b in rw_vb),
-                tuple(vec_writes),
-            ),
-        ],
-        expected=os.path.basename(cur),
-        compact=RP_COMPONENTS,
-        compact_threshold=auto_compact_threshold,
-    )
-    return os.path.join(new_cur, "bands")
-
-
-def rp_lsh_band_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, band, band_key) for every corpus vector — the LSH index
-    kernel. One narrow Arrow pass (the _minhash_wide shape): no explode,
-    no shuffle. ``build_rp_index`` materializes this frame to parquet
-    partitioned by (band, band_key) — the build-once/serve-many layout
-    the probe path scans with static partition pruning."""
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    return rp_band_rows_for(e)
-
-
 def rp_band_rows_for(e: DataFrame) -> DataFrame:
-    """The banding kernel over ANY (vec_id, emb) frame — shared by the
-    full build and the incremental ``update_rp_index`` path, so batch
-    signatures are byte-identical to build-time signatures."""
+    """The banding kernel over ANY (vec_id, emb) frame at the engine
+    table's RP_DIM: (vec_id, band, band_key) rows in one narrow Arrow
+    pass. Shared by the late-interaction index's build and update
+    paths (embed.py), so batch signatures are byte-identical to
+    build-time signatures."""
     import numpy as np
     import pandas as pd
 
@@ -441,291 +192,6 @@ def rp_band_rows_for(e: DataFrame) -> DataFrame:
             )
 
     return e.mapInPandas(batches, "vec_id bigint, band int, band_key int")
-
-
-def ann_rp_lsh_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    query_vec_id: int = 0,
-    k: int = 10,
-    multiprobe_hamming: int = 0,
-) -> DataFrame:
-    """Approximate top-k by engine-owned random-hyperplane LSH: probe the
-    query's RP_BANDS band buckets of the ON-DISK partitioned index for
-    candidates, then exact cosine rerank (round 4 dp, vec_id tie-break)
-    of the candidate set only.
-
-    Fully oracle-checkable: hyperplanes are md5-derived, sign bits are
-    integer-exact, and the rerank is the established _COS discipline.
-
-    ``multiprobe_hamming=1`` additionally probes, per band, every key at
-    Hamming distance 1 from the query's key (flip each of RP_BAND_BITS
-    sign bits) — the multiprobe LSH recall knob (Lv et al., VLDB 2007):
-    a near neighbor that lost ONE sign vote in a band still lands in a
-    probed bucket, so recall rises (measured 1.00 on the isotropic
-    worst case at 6x4+hamming-1, BASELINE.md) without re-banding the
-    index; the probe grows to RP_BANDS*(1+RP_BAND_BITS)=30 of the 96
-    partitions, still never the corpus. Default 0 keeps the original
-    key's arithmetic byte-identical.
-
-    Scale shape: FULLY index-served (since r9 the rerank vectors come
-    from the index's own ``vecs/`` store, not the source table — the
-    index is the corpus of record, so vectors ingested through
-    ``update_rp_index`` are immediately servable). The query signature
-    is computed CLIENT-side from one vbucket-pruned point lookup + 24
-    tiny integer dots — no corpus job; the probe pairs are LITERAL
-    predicates on the band table's partition columns, so the scan lists
-    only the probed bucket directories (static partition pruning,
-    pinned in tests/test_plans.py — no job even touches the other
-    buckets); the rerank touches only candidates
-    (TakeOrderedAndProject caps the sort at k). Candidate volume
-    ~= corpus * (1 - (1 - 2^-RP_BAND_BITS)^RP_BANDS) for isotropic
-    data, far less for genuinely clustered neighbors.
-    """
-    vecs, cand, qlit = _rp_probe(spark, sf_dir, query_vec_id, multiprobe_hamming)
-    sim = F.round(
-        cosine_similarity(F.col("emb"), qlit), 4
-    ).alias("sim")
-    return (
-        vecs.join(cand, "vec_id")
-        .select("vec_id", sim)
-        .orderBy(F.desc("sim"), F.asc("vec_id"))
-        .limit(k)
-    )
-
-
-def _rp_probe(
-    spark: SparkSession,
-    sf_dir: str,
-    query_vec_id: int,
-    multiprobe_hamming: int = 0,
-):
-    """The shared RP-LSH probe: (index vecs store, distinct candidate
-    ids from the statically pruned band-table probe, query-vector
-    literal) — exactly the ``ann_rp_lsh_topk`` front half, factored so
-    the filtered variant cannot drift from it."""
-    import numpy as np
-
-    ver = _rp_current_dir(spark, sf_dir)
-    vecs = spark.read.schema(VECS_SCHEMA).parquet(os.path.join(ver, "vecs"))
-    qrow = vecs.filter(
-        (F.col("vbucket") == vec_bucket_py(query_vec_id))
-        & (F.col("vec_id") == query_vec_id)
-    ).select(F.col("emb").alias("q_emb")).head()
-    if qrow is None:
-        raise ValueError(f"query vec_id {query_vec_id} not found")
-    signs_t = np.array(_rp_plane_signs(), dtype=np.int64).T
-    qkeys = _rp_band_keys(
-        np.asarray(qrow["q_emb"], dtype=np.float64)[None, :], signs_t
-    )[0]
-    pairs = []
-    for b in range(RP_BANDS):
-        keys = {int(qkeys[b])}
-        if multiprobe_hamming >= 1:
-            keys |= {int(qkeys[b]) ^ (1 << bit) for bit in range(RP_BAND_BITS)}
-        pairs.extend((b, key) for key in sorted(keys))
-    bands = spark.read.schema(RP_BANDS_SCHEMA).parquet(os.path.join(ver, "bands"))
-    probe_pred = _pair_eq(pairs)
-    cand = (
-        bands.filter(probe_pred)
-        .filter(F.col("vec_id") != query_vec_id)
-        .select("vec_id")
-        .distinct()
-    )
-    qlit = F.expr(
-        "array(" + ",".join(_double_sql(x) for x in qrow["q_emb"]) + ")"
-    )
-    return vecs, cand, qlit
-
-
-def ann_rp_lsh_batch_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    query_vec_ids: tuple[int, ...] = (0, 3, 9),
-    k: int = 5,
-) -> DataFrame:
-    """Batched ANN: M queries against the RP index in ONE probe + ONE
-    rerank pass — the index-served twin of ``knn_topk_batch`` (and the
-    lexical ``bm25_batch_topk_served``): the reference loops
-    ``collection.query`` per query; here the band table is probed once
-    with every query's (band, band_key) pairs tagged by query id.
-
-    Plan: query signatures come client-side from one vbucket-pruned
-    point lookup per query (M tiny lookups, no corpus job); the tagged
-    probe-pair frame broadcasts against the band table (the scan still
-    prunes to the UNION of probed partitions); candidates dedup per
-    (query, vec_id); the rerank joins the vecs store once and ranks
-    with a single row_number window partitioned by query_id.
-
-    Output: (query_id, vec_id, sim, rank) — top-k per query.
-    """
-    import numpy as np
-
-    ver = _rp_current_dir(spark, sf_dir)
-    vecs = spark.read.schema(VECS_SCHEMA).parquet(os.path.join(ver, "vecs"))
-    signs_t = np.array(_rp_plane_signs(), dtype=np.int64).T
-    probe_rows = []
-    q_embs = {}
-    for qid in query_vec_ids:
-        qrow = vecs.filter(
-            (F.col("vbucket") == vec_bucket_py(qid))
-            & (F.col("vec_id") == qid)
-        ).select(F.col("emb").alias("q_emb")).head()
-        if qrow is None:
-            raise ValueError(f"query vec_id {qid} not found")
-        q_embs[qid] = qrow["q_emb"]
-        qkeys = _rp_band_keys(
-            np.asarray(qrow["q_emb"], dtype=np.float64)[None, :], signs_t
-        )[0]
-        probe_rows.extend(
-            (qid, b, int(qkeys[b])) for b in range(RP_BANDS)
-        )
-    probes = spark.createDataFrame(
-        probe_rows, "query_id bigint, band int, band_key int"
-    )
-    bands = spark.read.schema(RP_BANDS_SCHEMA).parquet(
-        os.path.join(ver, "bands")
-    )
-    # partition pruning over the union of probed (band, band_key) pairs
-    union_pred = _pair_eq(sorted({(b, key) for _q, b, key in probe_rows}))
-    cand = (
-        bands.filter(union_pred)
-        .join(F.broadcast(probes), ["band", "band_key"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id")
-        .distinct()
-    )
-    # one rerank pass: per-query literal embedding via a CASE chain
-    # (M tiny literal arrays — the batched form of the qlit broadcast)
-    qcase = None
-    for qid in query_vec_ids:
-        arr = F.expr(
-            "array(" + ",".join(_double_sql(x) for x in q_embs[qid]) + ")"
-        )
-        qcase = (
-            F.when(F.col("query_id") == qid, arr)
-            if qcase is None
-            else qcase.when(F.col("query_id") == qid, arr)
-        )
-    sim = F.round(cosine_similarity(F.col("emb"), qcase), 4)
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        cand.join(vecs, "vec_id")
-        .select("query_id", "vec_id", sim.alias("sim"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "vec_id", "sim", F.col("rank").cast("int").alias("rank")
-        )
-    )
-
-
-def ann_rp_lsh_filtered_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    query_vec_id: int = 0,
-    label: int = 1,
-    k: int = 10,
-    multiprobe_hamming: int = 1,
-) -> DataFrame:
-    """Metadata-filtered ANN — the reference's ``where``-filtered vector
-    query (``collection.query(where={...})``, coding_agent/tools/
-    vector_search_tool.py:39-46), index-served: candidates come from the
-    on-disk band-table probe (static partition pruning, never the
-    corpus); the metadata PREDICATE comes from a NARROW (vec_id, label)
-    projection of the metadata table — filter AND column pruning pushed
-    into that scan, so at 100 TB the filter reads two thin columns, not
-    the vector payload (metadata lives beside the index, not inside it
-    — the Lucene docvalues split); the exact rerank reads the index's
-    own vecs store for the surviving candidates only.
-
-    Post-filtering (probe, then filter) is the right order here: LSH
-    buckets are metadata-blind, so pre-filtering would still scan the
-    same band partitions. The multiprobe default widens the candidate
-    pool because filtering thins it — the standard filtered-ANN recall
-    compensation.
-    """
-    vecs, cand, qlit = _rp_probe(spark, sf_dir, query_vec_id, multiprobe_hamming)
-    meta = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("label") == label)
-        .select("vec_id")
-    )
-    sim = F.round(cosine_similarity(F.col("emb"), qlit), 4).alias("sim")
-    return (
-        vecs.join(cand.join(meta, "vec_id"), "vec_id")
-        .select("vec_id", sim)
-        .orderBy(F.desc("sim"), F.asc("vec_id"))
-        .limit(k)
-    )
-
-
-ANN_WHERE_DEMO = {"$or": [{"label": {"$in": [1, 2, 3]}}, {"label": {"$gte": 8}}]}
-
-
-def ann_rp_lsh_where_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    query_vec_id: int = 0,
-    where: "dict | None" = None,
-    k: int = 10,
-    multiprobe_hamming: int = 1,
-) -> DataFrame:
-    """``collection.query(where={...})`` with ChromaDB's FULL filter
-    grammar ($and/$or/$in/$gte/..., functions/where_dsl.py) instead of
-    the single-field equality of ``ann_rp_lsh_filtered_topk`` — the
-    rest of the reference's filtered vector query, same serving plan:
-    band-table probe for candidates (static partition pruning), the
-    compiled predicate pushed into a NARROW metadata projection, exact
-    rerank from the index's own vecs store. The DSL tree is shared with
-    the DuckDB oracle via where_to_sql (one filter, two engines)."""
-    from ..functions.where_dsl import compile_where
-
-    vecs, cand, qlit = _rp_probe(spark, sf_dir, query_vec_id, multiprobe_hamming)
-    meta = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(compile_where(where or ANN_WHERE_DEMO))
-        .select("vec_id")
-    )
-    sim = F.round(cosine_similarity(F.col("emb"), qlit), 4).alias("sim")
-    return (
-        vecs.join(cand.join(meta, "vec_id"), "vec_id")
-        .select("vec_id", sim)
-        .orderBy(F.desc("sim"), F.asc("vec_id"))
-        .limit(k)
-    )
-
-
-def ann_grouped_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    query_vec_id: int = 0,
-    k: int = 3,
-    multiprobe_hamming: int = 1,
-) -> DataFrame:
-    """Per-GROUP top-k from ONE probe — the multi-tenant serving shape
-    (top-k within every label/tenant/source in a single query instead
-    of one filtered query per group): shared RP multiprobe for
-    candidates, vecs-store rerank, narrow (vec_id, label) metadata
-    join, one rank window partitioned by group. At 100 TB the window
-    shuffles only candidate rows (probe-sized), never the corpus, and
-    replaces G sequential filtered queries with one plan."""
-    from pyspark.sql.window import Window
-
-    vecs, cand, qlit = _rp_probe(spark, sf_dir, query_vec_id, multiprobe_hamming)
-    meta = load_table(spark, sf_dir, "embeddings").select("vec_id", "label")
-    sim = F.round(cosine_similarity(F.col("emb"), qlit), 4).alias("sim")
-    w = Window.partitionBy("label").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        vecs.join(cand, "vec_id")
-        .join(meta, "vec_id")
-        .select("label", "vec_id", sim)
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .orderBy("label", "rank")
-    )
 
 
 def ivf_sampled_root(
@@ -1436,120 +902,6 @@ def cap_bucket_members(members: DataFrame, cap: int) -> DataFrame:
         .filter(F.col("_m") <= cap)
         .drop("_m")
     )
-
-
-def compact_rp_index(
-    spark: SparkSession, sf_dir: str, threshold: int = 4
-) -> str:
-    """Small-file compaction for the RP-LSH index — the invindex
-    ``compact_text_index`` chore applied to bands/vecs. Returns the
-    current version dir."""
-    from ..sources import versioning as vn
-
-    build_rp_index(spark, sf_dir)
-    return vn.compact_index(spark, rp_index_root(sf_dir), RP_COMPONENTS, threshold)
-
-
-def rp_index_vec_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The RP index's ``vecs/`` store as driver-checkable rows
-    (vec_id, vbucket) — validates the r9 index-resident vector store
-    (the component serving reranks and replace-path reverse lookups
-    read) against a DuckDB oracle re-deriving the md5 vec bucket."""
-    ver = _rp_current_dir(spark, sf_dir)
-    vecs = spark.read.schema(VECS_SCHEMA).parquet(os.path.join(ver, "vecs"))
-    return vecs.select(
-        "vec_id", F.col("vbucket").cast("int").alias("vbucket")
-    )
-
-
-def delete_from_rp_index(
-    spark: SparkSession,
-    sf_dir: str,
-    vec_ids: DataFrame,
-    auto_compact_threshold: int = 16,
-) -> str:
-    """Targeted vector DELETION from the RP-LSH index (the
-    right-to-be-forgotten path; the retraction half of the reference's
-    upsert, indexing_agent.py:332-361). O(deleted vecs + their
-    partitions): each victim's band rows are re-derived from its stored
-    vector in ``vecs/`` (pruned by the literal vbucket set) and exactly
-    those partitions rewrite with an anti-join; atomic versioned
-    commit. Deleting an absent vec_id is a no-op. Returns the current
-    band-table path."""
-    from ..sources import versioning as vn
-
-    cur = _rp_current_dir(spark, sf_dir)
-    root = os.path.dirname(cur)
-
-    ids = vec_ids.select("vec_id").dropDuplicates(["vec_id"])
-    vbuckets = sorted(
-        r["b"]
-        for r in ids.select(vec_bucket_expr(F.col("vec_id")).alias("b"))
-        .distinct()
-        .collect()
-    )
-    if not vbuckets:
-        return os.path.join(cur, "bands")
-    victims = (
-        spark.read.schema(VECS_SCHEMA).parquet(os.path.join(cur, "vecs"))
-        .filter(F.col("vbucket").isin(vbuckets))
-        .join(ids, "vec_id", "leftsemi")
-        .localCheckpoint(eager=True)
-    )
-    victim_ids = victims.select("vec_id")
-    rw_vb = sorted(
-        r["vbucket"] for r in victims.select("vbucket").distinct().collect()
-    )
-    if not rw_vb:
-        return os.path.join(cur, "bands")
-    rw_pairs = {
-        (r["band"], r["band_key"])
-        for r in rp_band_rows_for(
-            victims.select("vec_id", "emb").filter(_nonzero_pred())
-        )
-        .select("band", "band_key")
-        .distinct()
-        .collect()
-    }
-
-    band_writes = []
-    if rw_pairs:
-        pair_pred = _pair_eq(sorted(rw_pairs))
-        band_writes.append(
-            spark.read.schema(RP_BANDS_SCHEMA)
-            .parquet(os.path.join(cur, "bands"))
-            .filter(pair_pred)
-            .join(victim_ids, "vec_id", "left_anti")
-            .select("band", "band_key", "vec_id")
-        )
-    new_cur = vn.commit_version(
-        spark,
-        root,
-        [
-            vn.Component(
-                "bands",
-                ("band", "band_key"),
-                frozenset(f"band={b}/band_key={k}" for b, k in rw_pairs),
-                tuple(band_writes),
-            ),
-            vn.Component(
-                "vecs",
-                ("vbucket",),
-                frozenset(f"vbucket={b}" for b in rw_vb),
-                (
-                    spark.read.schema(VECS_SCHEMA)
-                    .parquet(os.path.join(cur, "vecs"))
-                    .filter(F.col("vbucket").isin(rw_vb))
-                    .join(victim_ids, "vec_id", "left_anti")
-                    .select("vbucket", "vec_id", "emb"),
-                ),
-            ),
-        ],
-        expected=os.path.basename(cur),
-        compact=RP_COMPONENTS,
-        compact_threshold=auto_compact_threshold,
-    )
-    return os.path.join(new_cur, "bands")
 
 
 def derived_cell_count(

@@ -213,8 +213,8 @@ def _minhash_wide_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The signature kernel is the expensive stage of every minhash consumer
 # (signature/band rows, candidate pairs, Jaccard estimate, connected
 # components); at 100 TB the lifecycle is encode-once/serve-many — write
-# the signature table to parquet and join from it (the build_rp_index
-# pattern, documented in SCALE.md) — and this memo is the exact
+# the signature table to parquet and join from it (the versioned
+# build-once pattern of build_text_index, documented in SCALE.md) — and this memo is the exact
 # in-session equivalent: the first caller materializes via
 # localCheckpoint, everyone else reuses the materialized blocks.
 def _minhash_wide_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -287,7 +287,7 @@ def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     minhash Arrow kernel TWICE (measured ~0.8 s per run at sf0.1 — it was
     most of this query's cost). At 100 TB the same move is writing the
     signature table to parquet once and serving joins from it (the
-    build_rp_index lifecycle); the checkpointed memo is the in-session
+    build_text_index lifecycle); the checkpointed memo is the in-session
     equivalent, shared by every minhash consumer. The band projection off
     the checkpoint (md5 over 4 ints per band) is cheap enough to run per
     join side.

@@ -317,7 +317,7 @@ def late_interaction_topk(
 # Served late interaction (VERDICT r15 next #1): the chunk-level vector
 # index that turns the ColBERT scorer from scan-time into build-once /
 # serve-many — the same discipline every other retrieval family here
-# follows (bm25_topk -> bm25_topk_served, scan kNN -> ann_rp_lsh_topk).
+# follows (bm25_topk -> bm25_topk_served, scan kNN -> Collection.query).
 # The reference's anti-pattern this replaces: its tool re-constructs the
 # model and re-reads the collection PER CALL (vector_search_tool.py:13-31).
 # ---------------------------------------------------------------------------
@@ -407,7 +407,7 @@ def build_li_index(
     leaves a sliver in every dir — 3k files whose open/footer overhead
     dominated the probe; measured 2.9 s -> 1.2 s at sf0.1). Zero-norm
     chunks stay in vecs/ but band nothing (no direction — the
-    build_rp_index discipline).
+    Collection's bands/ discipline).
     """
     import os
     import shutil
@@ -642,8 +642,8 @@ def _li_served_grouped(
         vecs = vecs.filter(F.col("lang") == lang)
     joined = vecs.join(cand, "vec_id")
     if where is not None:
-        # full ChromaDB where grammar over the DOC metadata — the
-        # knn_where_dsl_topk discipline: the compiled predicate pushes
+        # full ChromaDB where grammar over the DOC metadata: the
+        # compiled predicate pushes
         # into a NARROW column-pruned projection of the metadata table
         # (doc_id + referenced fields only), and enters the rerank as a
         # doc_id SEMI join, so non-matching docs never reach the maxes
@@ -676,7 +676,7 @@ def late_interaction_filtered_topk_served(
     k: int = 5,
 ) -> DataFrame:
     """Metadata-filtered served ColBERT — the family-completeness twin
-    of ``ann_rp_lsh_filtered_topk``: the candidate probe is unchanged
+    of a ``Collection.query`` with ``where``: the candidate probe is unchanged
     and the rerank intersects with a metadata predicate served from the
     index's OWN ``vecs/`` lang fold (v2 layout), so a filtered query
     still reads zero corpus rows. Documents outside the filter simply
@@ -736,7 +736,7 @@ def late_interaction_explain_served(
 
 
 # compound demo tree exercising $and/$or/$in/$gte over three metadata
-# fields — the LI analog of ANN_WHERE_DEMO (operators/ann.py)
+# fields
 LI_WHERE_DEMO = {
     "$and": [
         {"lang": {"$in": ["en", "de"]}},
@@ -762,9 +762,8 @@ def late_interaction_where_topk_served(
     family — ChromaDB's FULL filter grammar ($and/$or/$in/$gte/...,
     functions/where_dsl.py) instead of ``late_interaction_filtered_
     topk_served``'s single-field lang equality, completing the where-DSL
-    symmetry the vector families already have (``knn_where_dsl_topk``,
-    the collection facade's where= path,
-    the graph ACORN where tree). Same serving plan: per-token band probe (static partition
+    symmetry the vector families already have (the collection facade's
+    where= path, the graph ACORN where tree). Same serving plan: per-token band probe (static partition
     pruning), the compiled predicate pushed into a narrow column-pruned
     metadata projection, doc_id semi-join into the exact rerank. The
     DSL tree is shared with the DuckDB oracle via where_to_sql (one
@@ -788,7 +787,7 @@ def update_li_index(
     auto_compact_threshold: int = 16,
 ) -> str:
     """ADMIT a document batch into the li_index with DOC-level REPLACE
-    (the ``update_rp_index`` discipline lifted to document granularity):
+    (the ``Collection.upsert`` discipline lifted to document granularity):
     a batch doc's chunk vectors come from the SAME kernel as the build
     (``_li_vec_rows_for`` — byte-identical chunks, embeddings, packing),
     brand-new docs APPEND beside hardlinked partitions with zero reads
@@ -899,7 +898,7 @@ def delete_from_li_index(
     auto_compact_threshold: int = 16,
 ) -> str:
     """Retract documents from the li_index — the delete side of the
-    admit lifecycle (the ``delete_from_rp_index`` discipline at doc
+    admit lifecycle (the ``Collection.delete`` discipline at doc
     granularity): the victims' chunk rows are located by ONE
     dbucket-pruned ``vecs/`` read, their band rows by re-banding the
     stored vectors (vecs/ doubles as the reverse map), and only the
@@ -1146,8 +1145,8 @@ def late_interaction_batch_topk_served(
     multiprobe_hamming: int = 1,
 ) -> DataFrame:
     """Batched index-served ColBERT — M queries against the li_index in
-    ONE probe + ONE rerank pass (the ``ann_rp_lsh_batch_topk`` /
-    ``bm25_batch_topk_served`` discipline): every (query, token) pair
+    ONE probe + ONE rerank pass (the ``bm25_batch_topk_served``
+    discipline): every (query, token) pair
     gets a global token index j, all tokens embed in ONE driver-side
     encode call, the union of their Hamming-1 probe pairs scans the
     band table once (static partition pruning over the DISTINCT pairs),

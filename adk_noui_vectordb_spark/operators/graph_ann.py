@@ -60,14 +60,13 @@ independent, like every serving probe in the ANN family.
 
 from __future__ import annotations
 
-import math
 import os
 from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.vector import cosine_similarity, round4
+from ..functions.vector import cosine_similarity
 from ..sources import versioning as vn
 from ..sources.tables import load_table
 from .ann import (
@@ -517,17 +516,6 @@ def build_graph_index(
     except vn.ConcurrentWriterError:
         pass  # a racing builder won; serve its identical version
     return vn.current_dir(root)
-
-
-def _sim4(a: list, b: list) -> float:
-    """4-dp cosine on doubles: left-to-right fold (list_inner_product's
-    order) + ``round4`` (= F.round / DuckDB round on these values)."""
-    num = aa = bb = 0.0
-    for x, y in zip(a, b):
-        num += x * y
-        aa += x * x
-        bb += y * y
-    return round4(num / (math.sqrt(aa) * math.sqrt(bb)))
 
 
 def _exact_d2_key(emb: list, crow: dict) -> tuple:

@@ -3,9 +3,9 @@
 The reference serves every query from a persisted ChromaDB collection on
 disk (reference: coding_agent/tools/vector_search_tool.py:33-79 queries
 the index that indexing_agent.py built earlier) — build-once/serve-many
-is its core lifecycle. Round 7 made that lifecycle real for the ANN side
-(``build_rp_index`` / ``build_ivf_index_sampled``, operators/ann.py); this module
-is the LEXICAL twin: ``operators/hybrid.py`` ranks BM25 by re-scanning the
+is its core lifecycle. The vector side lives in ``Collection``
+(api/collection.py) and the IVF/graph sidecars (operators/ann.py,
+operators/graph_ann.py); this module is the LEXICAL twin: ``operators/hybrid.py`` ranks BM25 by re-scanning the
 corpus per query, which is the right shape for one-off analytics but not
 for a query service over 100 TB. Here the corpus is scanned ONCE into an
 on-disk inverted index and every subsequent query touches only the
@@ -112,7 +112,7 @@ def doc_bucket_expr(doc_id: F.Column) -> F.Column:
 
 
 # Versioned-root plumbing (VERDICT r8 next #4) is shared with the
-# RP-LSH / IVF vector indexes — see sources/versioning.py for the
+# Collection and the IVF / graph vector indexes — see sources/versioning.py for the
 # commit protocol and crash-window analysis.
 from ..sources.versioning import (  # noqa: E402
     Component as _Component,
@@ -306,7 +306,7 @@ def inverted_postings_rows(
     spark: SparkSession, sf_dir: str, terms: tuple[str, ...] = QUERY_TERMS
 ) -> DataFrame:
     """The probed postings themselves — validates the index CONTENT the
-    way rp_lsh_band_rows validates the ANN band table."""
+    a ``Collection.fsck`` validates its band table."""
     root = build_text_index(spark, sf_dir)
     post = spark.read.schema(POSTINGS_SCHEMA).parquet(os.path.join(root, "postings"))
     return post.filter(_probe_pred(terms)).select(
@@ -1089,7 +1089,7 @@ def update_text_index(
     # Re-submitted docs and their stale term buckets, via the pruned
     # reverse map — empty for a pure-ADD batch (bulk ingest), which
     # then APPENDS postings/docs rows without reading any old postings
-    # (the update_rp_index append-mostly discipline: with only
+    # (the Collection upsert's append-mostly discipline: with only
     # N_TERM_BUCKETS partitions, "rewrite affected buckets" would
     # degenerate to rewriting the whole table for any diverse batch).
     old_docs_aff = spark.read.schema(DOCS_SCHEMA).parquet(os.path.join(cur, "docs")).filter(
@@ -1244,126 +1244,6 @@ def update_text_index(
         expected=os.path.basename(cur),
         compact=_TEXT_COMPONENTS,
         compact_threshold=auto_compact_threshold,
-    )
-
-
-def hybrid_rrf_served_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    terms: tuple[str, ...] = QUERY_TERMS,
-    query_vec_id: int = 0,
-    n_candidates: int = 100,
-    k: int = 10,
-    multiprobe_hamming: int = 1,
-) -> DataFrame:
-    """Fully index-served hybrid retrieval — the complete query-service
-    story: the lexical arm ranks from the on-disk inverted index
-    (term-bucket pruned, ``bm25_topk_served``) and the vector arm from
-    the on-disk RP-LSH band table (partition-pruned probe + exact
-    rerank, ``ann_rp_lsh_topk``), fused with Reciprocal Rank Fusion.
-    ZERO corpus scans at query time: a query against 100 TB touches the
-    query terms' postings buckets, the query signature's band buckets,
-    and the candidate embeddings — nothing else.
-
-    The vector arm defaults to the MULTIPROBE probe (hamming-1, 30 of
-    96 buckets — VERDICT r7 next #5): measured recall 1.00 vs 0.62 for
-    the single-probe arm on the isotropic worst case, same on-disk
-    index, still partition-pruned. ``multiprobe_hamming=0`` restores
-    the narrower 6-bucket probe for latency-critical serving.
-
-    Fusion arithmetic is identical to ``hybrid.hybrid_rrf_topk``
-    (1/(60+rank) exact-integer-input divisions, rank windows over the
-    N-capped lists, full-outer on doc_id); only the candidate sources
-    change, which is the point — serving swaps the scans, not the
-    semantics. The vector arm is LSH-approximate, so the fused list can
-    differ from the scan-time hybrid where the vector candidate set
-    does; the oracle mirrors the probe exactly, so the key is still
-    hash-checked.
-    """
-    from pyspark.sql.window import Window
-
-    from .ann import ann_rp_lsh_topk
-    from .hybrid import RRF_K
-
-    lex_top = bm25_topk_served(spark, sf_dir, terms, k=n_candidates)
-    lex_ranked = lex_top.select(
-        "doc_id",
-        F.row_number()
-        .over(Window.orderBy(F.desc("bm25"), F.asc("doc_id")))
-        .alias("lex_rank"),
-    )
-    vec_top = ann_rp_lsh_topk(
-        spark,
-        sf_dir,
-        query_vec_id,
-        k=n_candidates,
-        multiprobe_hamming=multiprobe_hamming,
-    )
-    vec_ranked = vec_top.select(
-        F.col("vec_id").alias("doc_id"),
-        F.row_number()
-        .over(Window.orderBy(F.desc("sim"), F.asc("vec_id")))
-        .alias("vec_rank"),
-    )
-    fused = lex_ranked.join(vec_ranked, "doc_id", "full_outer")
-    rrf = F.coalesce(
-        F.lit(1.0) / (F.lit(RRF_K) + F.col("lex_rank")), F.lit(0.0)
-    ) + F.coalesce(
-        F.lit(1.0) / (F.lit(RRF_K) + F.col("vec_rank")), F.lit(0.0)
-    )
-    return (
-        fused.select(
-            "doc_id",
-            F.col("lex_rank").cast("int").alias("lex_rank"),
-            F.col("vec_rank").cast("int").alias("vec_rank"),
-            rrf.alias("rrf"),
-        )
-        .orderBy(F.desc("rrf"), F.asc("doc_id"))
-        .limit(k)
-    )
-
-
-def hybrid_weighted_served_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    terms: tuple[str, ...] = QUERY_TERMS,
-    query_vec_id: int = 0,
-    alpha: float = 0.6,
-    n_candidates: int = 100,
-    k: int = 10,
-    multiprobe_hamming: int = 1,
-) -> DataFrame:
-    """Index-served convex alpha fusion — hybrid.hybrid_weighted_topk's
-    serving twin, exactly as hybrid_rrf_served_topk serves the RRF
-    scan key: the lexical pool ranks from the on-disk inverted index,
-    the vector pool from the multiprobe RP-LSH band table, and ONLY
-    the fusion arithmetic differs (min-max normalize each O(N) pool,
-    ``alpha*vec + (1-alpha)*lex``, absent modality contributes 0).
-    Zero corpus scans at query time; the min/max stats are 1-row
-    broadcasts over the N-capped pools."""
-    from .ann import ann_rp_lsh_topk
-    from .hybrid import _minmax_norm
-
-    lex_top = bm25_topk_served(spark, sf_dir, terms, k=n_candidates)
-    lex_n = _minmax_norm(lex_top, "bm25", "lex_n")
-    vec_top = ann_rp_lsh_topk(
-        spark,
-        sf_dir,
-        query_vec_id,
-        k=n_candidates,
-        multiprobe_hamming=multiprobe_hamming,
-    ).select(F.col("vec_id").alias("doc_id"), "sim")
-    vec_n = _minmax_norm(vec_top, "sim", "vec_n")
-    fused = lex_n.join(vec_n, "doc_id", "full_outer")
-    wscore = F.round(
-        F.lit(alpha) * F.coalesce(F.col("vec_n"), F.lit(0.0))
-        + F.lit(1.0 - alpha) * F.coalesce(F.col("lex_n"), F.lit(0.0)),
-        4,
-    )
-    return (
-        fused.select("doc_id", wscore.alias("wscore"))
-        .orderBy(F.desc("wscore"), F.asc("doc_id"))
-        .limit(k)
     )
 
 

@@ -63,10 +63,8 @@ BENCH_KEYS = [
     "lm_perplexity_score",
     "cluster_kmeans",
     "semdedup_prune",
-    "ann_rp_lsh_topk",
     "knn_join_ivf_topk",
     "hybrid_weighted_topk",
-    "hybrid_weighted_served_topk",
     # r14 (VERDICT r13 next #7): the r13 cost classes that were not yet
     # bench-visible — MVCC read-pin + rollback pointer swing (the
     # versioning path), content-keyed split
@@ -86,16 +84,13 @@ BENCH_KEYS = [
     "phrase_topk_served",
     # r10b: batch serving shapes (M queries, one probe + one pass)
     "bm25_batch_topk_served",
-    "ann_rp_lsh_batch_topk",
     "lm_bigram_score",
     "embed_topvar_project",
     "normalize_text_corpus",
-    "hybrid_rrf_served_topk",
     # r10c: ChromaDB-compatible Collection facade + full where DSL
     "collection_query_topk",
     "collection_query_graph_topk",
     "collection_query_graph_batch_topk",
-    "knn_where_dsl_topk",
     "fuzzy_topk_served",
     # r11: sample-trained IVF serving, keyset page
     "ann_ivf_sampled_topk",

@@ -22,11 +22,9 @@ SF_MED = "/root/testdata/sf0.01"
 SLOW_TESTS = {
     "test_auto_compaction_bounds_files_per_partition",
     "test_collection_lifecycle_matches_model",
-    "test_compact_rp_index_preserves_bands_and_serving",
     "test_compact_text_index_preserves_content",
     "test_containment_index_admit_and_replace",
     "test_delete_by_ids_where_and_all",
-    "test_delete_from_rp_index_retracts_bands_and_vecs",
     "test_delete_from_text_index_retracts_everything",
     "test_facade_filtered_recall_on_clustered_fixture",
     "test_facade_graph_strategy_recall_on_clustered_fixture",
@@ -44,10 +42,7 @@ SLOW_TESTS = {
     "test_li_index_update_replace_and_rebuild_equality",
     "test_partial_update_keeps_omitted_fields",
     "test_resubmitting_same_batch_is_a_noop",
-    "test_rp_index_lifecycle_matches_model",
-    "test_rp_update_crash_before_commit_preserves_served_results",
     "test_text_index_lifecycle_matches_model",
-    "test_update_rp_index_equals_fresh_rebuild",
     "test_upsert_replaces_everything",
     "test_version_gc_keeps_current_and_previous",
 }

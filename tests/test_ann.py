@@ -1,99 +1,12 @@
-"""Approximate-ANN quality gates: RP-LSH and sample-trained IVF recall
-against brute force, the shuffle-free centroid assignment kernels, and
-the RP index's update/delete/compaction lifecycle."""
+"""Approximate-ANN quality gates: sample-trained IVF recall against
+brute force, the shuffle-free centroid assignment kernels and the
+cell-blocked kNN join."""
 
 import os
 
 from pyspark.sql import functions as F
 
-from adk_noui_vectordb_spark.operators.knn import knn_topk, make_query_from_vec
 from adk_noui_vectordb_spark.sources.tables import load_table
-
-
-def _exact_topk_ids(spark, sf_dir, query_vec_id, k):
-    emb = load_table(spark, sf_dir, "embeddings")
-    df = knn_topk(emb, make_query_from_vec(emb, query_vec_id), k=k)
-    return [r["vec_id"] for r in df.collect()]
-
-
-def test_rp_lsh_band_table_shape(spark, sf_dir):
-    """Every vector gets exactly RP_BANDS band rows with keys in
-    [0, 2^RP_BAND_BITS)."""
-    from adk_noui_vectordb_spark.operators.ann import (
-        RP_BAND_BITS,
-        RP_BANDS,
-        rp_lsh_band_rows,
-    )
-
-    bands = rp_lsh_band_rows(spark, sf_dir)
-    n = load_table(spark, sf_dir, "embeddings").count()
-    assert bands.count() == n * RP_BANDS
-    assert bands.select("vec_id", "band").distinct().count() == n * RP_BANDS
-    bad = bands.filter(
-        (F.col("band_key") < 0) | (F.col("band_key") >= (1 << RP_BAND_BITS))
-    ).count()
-    assert bad == 0
-
-
-def test_rp_lsh_results_are_candidate_restricted_exact(spark, sf_dir):
-    """RP-LSH top-k must equal the exact cosine ranking RESTRICTED to the
-    band-probe candidate set — the rerank stage adds no approximation."""
-    from adk_noui_vectordb_spark.operators.ann import (
-        ann_rp_lsh_topk,
-        rp_lsh_band_rows,
-    )
-
-    qid = 0
-    bands = rp_lsh_band_rows(spark, sf_dir)
-    qb = bands.filter(F.col("vec_id") == qid).select("band", "band_key")
-    cand = {
-        r["vec_id"]
-        for r in bands.join(qb, ["band", "band_key"])
-        .filter(F.col("vec_id") != qid)
-        .select("vec_id")
-        .distinct()
-        .collect()
-    }
-    exact_order = _exact_topk_ids(spark, sf_dir, qid, 10_000_000)
-    expected = [v for v in exact_order if v in cand][:10]
-    got = [
-        r["vec_id"]
-        for r in ann_rp_lsh_topk(spark, sf_dir, query_vec_id=qid, k=10).collect()
-    ]
-    assert got == expected
-
-
-def test_rp_lsh_probe_plan_is_broadcast_topk(spark, sf_dir):
-    """The bucket probe must broadcast the RP_BANDS-row probe table (never
-    shuffle the band table for it) and the rerank must cap at k via
-    TakeOrderedAndProject — the serving-path plan contract."""
-    from adk_noui_vectordb_spark.operators.ann import ann_rp_lsh_topk
-    from adk_noui_vectordb_spark.plans import explain_str
-
-    plan = explain_str(ann_rp_lsh_topk(spark, sf_dir), mode="simple")
-    assert "BroadcastHashJoin" in plan, plan
-    assert "TakeOrderedAndProject" in plan, plan
-
-
-def test_rp_lsh_recall_matches_band_theory(spark, sf_dir):
-    """Honest recall floor on the ISOTROPIC testdata (BASELINE.md caveat,
-    same as IVF): top-10 neighbors sit at cosine ~0.3 (theta ~72 deg), so
-    per-plane agreement p = 1 - theta/pi ~ 0.6 and band-match probability
-    1 - (1 - p^4)^6 ~ 0.55 — measured avg recall@10 is 0.5 at sf0.001.
-    Genuinely clustered neighbors (higher cosine) match with much higher
-    probability."""
-    from adk_noui_vectordb_spark.operators.ann import ann_rp_lsh_topk
-
-    recalls = []
-    for qid in (0, 1, 2):
-        exact = set(_exact_topk_ids(spark, sf_dir, qid, 10))
-        approx = {
-            r["vec_id"]
-            for r in ann_rp_lsh_topk(spark, sf_dir, query_vec_id=qid, k=10).collect()
-        }
-        recalls.append(len(exact & approx) / 10)
-    avg = sum(recalls) / len(recalls)
-    assert avg >= 0.3, f"RP-LSH recall@10 {avg} < 0.3 (per-query {recalls})"
 
 
 def test_kmeans_assigns_every_vector_once(spark, sf_dir):
@@ -349,333 +262,6 @@ def test_cap_bucket_members_deterministic_and_order_free(spark):
 
 
 # --- incremental index maintenance (VERDICT r8 next #3/#4) --------------
-
-
-def _split_embedding_dirs(spark, sf_dir, tmp_path, tag):
-    """base/ holds vec_id % 5 != 0, all/ holds everything — the invindex
-    incremental-test harness applied to the embeddings table."""
-    import os
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    base_dir, all_dir = str(tmp_path / f"{tag}_base"), str(tmp_path / f"{tag}_all")
-    os.makedirs(base_dir), os.makedirs(all_dir)
-    emb.filter(F.col("vec_id") % 5 != 0).write.parquet(
-        os.path.join(base_dir, "embeddings.parquet")
-    )
-    emb.write.parquet(os.path.join(all_dir, "embeddings.parquet"))
-    batch = emb.filter(F.col("vec_id") % 5 == 0).select("vec_id", "embedding")
-    return base_dir, all_dir, batch
-
-
-def _band_map(spark, bands_p):
-    return {
-        (r["band"], r["band_key"], r["vec_id"])
-        for r in spark.read.parquet(bands_p).collect()
-    }
-
-
-def test_update_rp_index_equals_fresh_rebuild(spark, sf_dir, tmp_path):
-    """Building on base and incrementally ingesting the rest must yield
-    the same band table AND vector store as a from-scratch build over
-    everything — the signatures come from the shared rp_band_rows_for
-    kernel, so equality is exact, not approximate."""
-    import os
-
-    from adk_noui_vectordb_spark.operators import ann
-
-    base_dir, all_dir, batch = _split_embedding_dirs(spark, sf_dir, tmp_path, "rp")
-    bands_inc = ann.update_rp_index(spark, base_dir, batch)
-    bands_all = ann.build_rp_index(spark, all_dir)
-    assert _band_map(spark, bands_inc) == _band_map(spark, bands_all)
-
-    def vec_map(p):
-        return {
-            r["vec_id"]: (r["vbucket"], tuple(r["emb"]))
-            for r in spark.read.parquet(
-                os.path.join(os.path.dirname(p), "vecs")
-            ).collect()
-        }
-
-    assert vec_map(bands_inc) == vec_map(bands_all)
-
-
-def test_update_rp_index_replaces_resubmitted_vector(spark, sf_dir, tmp_path):
-    """Vec-level replace: re-submitting vec 1 with a NEW embedding must
-    retract its old band rows (found via the vecs/ reverse map, not a
-    scan) and serve the new signature; re-submitting the same batch
-    again changes nothing (idempotent upsert)."""
-    import os
-
-    from adk_noui_vectordb_spark.operators import ann
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    base_dir = str(tmp_path / "rp_rebase")
-    os.makedirs(base_dir)
-    emb.write.parquet(os.path.join(base_dir, "embeddings.parquet"))
-    bands0 = ann.build_rp_index(spark, base_dir)
-    before = _band_map(spark, bands0)
-    old_rows = {t for t in before if t[2] == 1}
-    assert len(old_rows) == ann.RP_BANDS
-
-    flipped = emb.filter(F.col("vec_id") == 1).select(
-        "vec_id",
-        F.transform(
-            F.col("embedding").cast("array<double>"), lambda x: -x
-        ).alias("emb"),
-    )
-    bands1 = ann.update_rp_index(spark, base_dir, flipped)
-    after = _band_map(spark, bands1)
-    new_rows = {t for t in after if t[2] == 1}
-    assert len(new_rows) == ann.RP_BANDS
-    # sign-flip flips every plane vote -> every band key changes
-    assert new_rows.isdisjoint(old_rows)
-    assert after - new_rows == before - old_rows  # everyone else untouched
-
-    bands2 = ann.update_rp_index(spark, base_dir, flipped)
-    assert _band_map(spark, bands2) == after
-
-
-def test_rp_served_probe_converges_one_batch_after_ingest(
-    spark, sf_dir, tmp_path
-):
-    """The stream_text_index_ingest contract for the vector side: a
-    vector ingested via update_rp_index is served by the very next
-    ann_rp_lsh_topk probe (the rerank reads the index's vecs/ store,
-    never the source table)."""
-    import os
-
-    from adk_noui_vectordb_spark.operators import ann
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    base_dir = str(tmp_path / "rp_serve")
-    os.makedirs(base_dir)
-    emb.write.parquet(os.path.join(base_dir, "embeddings.parquet"))
-    ann.build_rp_index(spark, base_dir)
-
-    clone = emb.filter(F.col("vec_id") == 0).select(
-        F.lit(987654321).cast("bigint").alias("vec_id"), F.col("embedding")
-    )
-    ann.update_rp_index(spark, base_dir, clone)
-    top = ann.ann_rp_lsh_topk(spark, base_dir, query_vec_id=0, k=3).collect()
-    assert top[0]["vec_id"] == 987654321
-    assert top[0]["sim"] == 1.0
-
-
-def test_rp_update_crash_before_commit_preserves_served_results(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    """The versioning discipline holds for the vector indexes too: a
-    crash injected before the _CURRENT swing leaves the probe serving
-    the old consistent version; re-running the update succeeds."""
-    import os
-
-    from adk_noui_vectordb_spark.operators import ann
-    from adk_noui_vectordb_spark.sources import versioning
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    base_dir = str(tmp_path / "rp_crash")
-    os.makedirs(base_dir)
-    emb.write.parquet(os.path.join(base_dir, "embeddings.parquet"))
-    ann.build_rp_index(spark, base_dir)
-    served_before = [
-        tuple(r) for r in ann.ann_rp_lsh_topk(spark, base_dir).collect()
-    ]
-    clone = emb.filter(F.col("vec_id") == 0).select(
-        F.lit(987654323).cast("bigint").alias("vec_id"), F.col("embedding")
-    )
-
-    real = versioning.point_current
-
-    def boom(root, name):
-        raise RuntimeError("injected crash before commit point")
-
-    monkeypatch.setattr(versioning, "point_current", boom)
-    try:
-        ann.update_rp_index(spark, base_dir, clone)
-        raise AssertionError("injected crash did not fire")
-    except RuntimeError:
-        pass
-    monkeypatch.setattr(versioning, "point_current", real)
-
-    assert [
-        tuple(r) for r in ann.ann_rp_lsh_topk(spark, base_dir).collect()
-    ] == served_before
-    bands = ann.update_rp_index(spark, base_dir, clone)  # recovery = re-run
-    got = {t[2] for t in _band_map(spark, bands)}
-    assert 987654323 in got
-
-
-def test_compact_rp_index_preserves_bands_and_serving(spark, sf_dir, tmp_path):
-    """RP compaction: content-identical bands/vecs, <=1 part file per
-    partition dir afterward, probe results unchanged."""
-    import os
-
-    from adk_noui_vectordb_spark.operators import ann
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    base_dir = str(tmp_path / "rp_comp")
-    os.makedirs(base_dir)
-    emb.filter(F.col("vec_id") % 3 != 0).write.parquet(
-        os.path.join(base_dir, "embeddings.parquet")
-    )
-    ann.build_rp_index(spark, base_dir)
-    ann.update_rp_index(
-        spark, base_dir, emb.filter(F.col("vec_id") % 3 == 0).select("vec_id", "embedding")
-    )
-    bands_p = ann.build_rp_index(spark, base_dir)
-    before = _band_map(spark, bands_p)
-    served_before = [
-        tuple(r) for r in ann.ann_rp_lsh_topk(spark, base_dir).collect()
-    ]
-    ver = ann.compact_rp_index(spark, base_dir, threshold=0)
-    assert _band_map(spark, os.path.join(ver, "bands")) == before
-    assert [
-        tuple(r) for r in ann.ann_rp_lsh_topk(spark, base_dir).collect()
-    ] == served_before
-    for band in os.listdir(os.path.join(ver, "bands")):
-        bp = os.path.join(ver, "bands", band)
-        if not os.path.isdir(bp):
-            continue
-        for bk in os.listdir(bp):
-            kp = os.path.join(bp, bk)
-            n = sum(1 for f in os.listdir(kp) if f.startswith("part-"))
-            assert n <= 1, (band, bk, n)
-
-
-def test_delete_from_rp_index_retracts_bands_and_vecs(spark, sf_dir, tmp_path):
-    """Deleting vectors must equal a fresh build over the corpus
-    WITHOUT them (bands and vecs), and the probe must stop serving
-    them; deleting an absent id is a no-op."""
-    import os
-
-    from adk_noui_vectordb_spark.operators import ann
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    full_dir = str(tmp_path / "rpdfull")
-    rest_dir = str(tmp_path / "rpdrest")
-    os.makedirs(full_dir), os.makedirs(rest_dir)
-    emb.write.parquet(os.path.join(full_dir, "embeddings.parquet"))
-    emb.filter(F.col("vec_id") % 7 != 0).write.parquet(
-        os.path.join(rest_dir, "embeddings.parquet")
-    )
-    ann.build_rp_index(spark, full_dir)
-    victims = emb.filter(F.col("vec_id") % 7 == 0).select("vec_id")
-    bands_del = ann.delete_from_rp_index(spark, full_dir, victims)
-    bands_ref = ann.build_rp_index(spark, rest_dir)
-    assert _band_map(spark, bands_del) == _band_map(spark, bands_ref)
-    vecs_left = {
-        r["vec_id"]
-        for r in spark.read.parquet(
-            os.path.join(os.path.dirname(bands_del), "vecs")
-        ).collect()
-    }
-    assert not (vecs_left & {r["vec_id"] for r in victims.collect()})
-    top = ann.ann_rp_lsh_topk(spark, full_dir, query_vec_id=1, k=50).collect()
-    assert all(r["vec_id"] % 7 != 0 for r in top)
-
-    absent = spark.createDataFrame([(99_999_998,)], "vec_id bigint")
-    assert ann.delete_from_rp_index(spark, full_dir, absent) == bands_del
-
-
-def test_rp_empty_index_state_serves_and_recovers(spark, tmp_path):
-    """The RP twin of the text-index empty-state pin (VERDICT r9 next
-    #1): deleting every vector leaves a legal, servable index — vec/band
-    stores answer 0 rows, compaction no-ops, a probe for a deleted id
-    raises the documented error, and an update re-populates serving."""
-    import os
-
-    import pytest
-
-    from adk_noui_vectordb_spark.operators import ann
-    from adk_noui_vectordb_spark.sources import versioning as vn
-
-    base = str(tmp_path / "rpempty")
-    os.makedirs(base)
-    v0 = [1.0] * 64
-    v1 = [2.0] * 64  # same direction as v0 -> identical band keys
-    spark.createDataFrame(
-        [(0, v0, 0), (1, v1, 0)],
-        "vec_id bigint, embedding array<double>, label int",
-    ).write.parquet(os.path.join(base, "embeddings.parquet"))
-    ann.build_rp_index(spark, base)
-    ann.delete_from_rp_index(
-        spark, base, spark.createDataFrame([(0,), (1,)], "vec_id bigint")
-    )
-
-    assert ann.rp_index_vec_rows(spark, base).count() == 0
-    bands_p = ann.build_rp_index(spark, base)
-    assert (
-        spark.read.schema(ann.RP_BANDS_SCHEMA).parquet(bands_p).count() == 0
-    )
-
-    cur = vn.current_dir(ann.rp_index_root(base))
-    assert ann.compact_rp_index(spark, base, threshold=0) == cur
-
-    with pytest.raises(ValueError, match="not found"):
-        ann.ann_rp_lsh_topk(spark, base, query_vec_id=0, k=3)
-
-    ann.update_rp_index(
-        spark,
-        base,
-        spark.createDataFrame(
-            [(0, v0), (1, v1)], "vec_id bigint, embedding array<double>"
-        ),
-    )
-    got = ann.ann_rp_lsh_topk(spark, base, query_vec_id=0, k=3).collect()
-    assert [(r["vec_id"], r["sim"]) for r in got] == [(1, 1.0)]
-
-
-def test_filtered_ann_respects_predicate_and_probe(spark, sf_dir):
-    """ann_rp_lsh_filtered_topk: every hit carries the filtered label,
-    and the result equals the unfiltered multiprobe candidate set
-    intersected with the label set then exactly reranked (post-filter
-    semantics, the reference's where= contract)."""
-    from pyspark.sql import functions as F
-
-    from adk_noui_vectordb_spark.operators import ann
-    from adk_noui_vectordb_spark.sources.tables import load_table
-
-    got = ann.ann_rp_lsh_filtered_topk(spark, sf_dir, label=1, k=10).collect()
-    assert len(got) > 0
-    labels = {
-        r["vec_id"]: r["label"]
-        for r in load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "label")
-        .collect()
-    }
-    assert all(labels[r["vec_id"]] == 1 for r in got)
-
-    # post-filter semantics: unfiltered multiprobe top-BIG, keep label=1,
-    # take 10 — must equal the operator's output exactly
-    big = ann.ann_rp_lsh_topk(
-        spark, sf_dir, k=10**6, multiprobe_hamming=1
-    ).collect()
-    want = [
-        (r["vec_id"], r["sim"]) for r in big if labels[r["vec_id"]] == 1
-    ][:10]
-    assert [(r["vec_id"], r["sim"]) for r in got] == want
-
-
-def test_batch_ann_matches_single_query_serving(spark, sf_dir):
-    """Each query's slice of the batched probe equals the single-query
-    index serving — the batching is a plan change, not a contract
-    change (the bm25_batch_topk_served discipline on the vector arm)."""
-    from adk_noui_vectordb_spark.operators import ann
-
-    batch = ann.ann_rp_lsh_batch_topk(
-        spark, sf_dir, query_vec_ids=(0, 3, 9), k=5
-    ).collect()
-    for qid in (0, 3, 9):
-        single = ann.ann_rp_lsh_topk(spark, sf_dir, query_vec_id=qid, k=5).collect()
-        got = [
-            (r["vec_id"], r["sim"])
-            for r in sorted(
-                (r for r in batch if r["query_id"] == qid),
-                key=lambda r: r["rank"],
-            )
-        ]
-        want = [(r["vec_id"], r["sim"]) for r in single]
-        assert got == want, (qid, got, want)
 
 
 def test_knn_join_ivf_cell_cap_bounds_hot_cells(spark, sf_dir):

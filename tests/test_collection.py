@@ -428,6 +428,80 @@ def test_results_outlive_later_commits(spark, coll):
     assert [r["id"] for r in taken["at_get"].collect()] == ["r2"]
 
 
+def _reads(coll, q):
+    """What a reader sees: count, every row with its embedding, and one
+    query's scored top 5."""
+    return (
+        coll.count(),
+        [tuple(r) for r in coll.get(include_embeddings=True).collect()],
+        [tuple(r) for r in coll.query(q, n_results=5).collect()],
+    )
+
+
+def test_crash_before_current_swing_keeps_serving_last_commit(
+    spark, coll, monkeypatch
+):
+    """A writer that dies after staging its version but before the
+    ``_CURRENT`` swing publishes nothing: get, count and query serve the
+    last commit unchanged, fsck is clean, and re-running the upsert
+    lands."""
+    from adk_noui_vectordb_spark.sources import versioning
+
+    mat = _vecs(31, 8)
+    coll.add(_batch(spark, [f"c{i}" for i in range(8)], mat))
+    q = [float(x) for x in mat[0]]
+    before = _reads(coll, q)
+    new = _vecs(32, 2)
+    batch = _batch(spark, ["c0", "fresh"], new, docs=["moved", "new row"])
+
+    def boom(root, name):
+        raise RuntimeError("injected crash before the _CURRENT swing")
+
+    real = versioning.point_current
+    monkeypatch.setattr(versioning, "point_current", boom)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        coll.upsert(batch)
+    monkeypatch.setattr(versioning, "point_current", real)
+
+    assert _reads(coll, q) == before
+    assert [c for c, ok, _ in coll.fsck() if not ok] == []
+    coll.upsert(batch)  # recovery is a re-run
+    assert coll.count() == 9
+    assert coll.get(ids=["fresh"]).head()["document"] == "new row"
+    top = coll.query([float(x) for x in new[0]], n_results=1).head()
+    assert top["id"] == "c0" and top["distance"] == 0.0
+    assert [c for c, ok, _ in coll.fsck() if not ok] == []
+
+
+def test_compact_preserves_reads(spark, coll):
+    """Compaction is a content-preserving commit: after several small
+    upserts left partitions holding more than one file,
+    ``compact(threshold=0)`` folds each partition dir to at most one
+    file and every read returns what it returned before."""
+    import os
+
+    mat = _vecs(33, 16)
+    ids = [f"k{i:02d}" for i in range(16)]
+    coll.add(_batch(spark, ids[:4], mat[:4]))
+    for s in range(4, 16, 4):
+        coll.upsert(_batch(spark, ids[s : s + 4], mat[s : s + 4]))
+    q = [float(x) for x in mat[5]]
+    before = _reads(coll, q)
+
+    def files_per_partition(ver):
+        out = []
+        for top, dirs, files in os.walk(ver):
+            if not dirs and "=" in os.path.basename(top):
+                out.append(sum(1 for f in files if f.startswith("part-")))
+        return out
+
+    assert max(files_per_partition(coll._cur())) > 1
+    coll.compact(threshold=0)
+    assert max(files_per_partition(coll._cur())) == 1
+    assert _reads(coll, q) == before
+    assert [c for c, ok, _ in coll.fsck() if not ok] == []
+
+
 def test_numpy_scorer_is_bit_exact_against_catalyst(spark, sf_dir):
     """The driver scorer equals the Catalyst expression the Spark plans
     use (functions/vector.py + F.round(..., 4)) bit for bit, raw and
@@ -1435,6 +1509,47 @@ def test_graph_strategy_serves_the_collection(spark, sf_dir):
     assert filt and all(r["n_chars"] > 100 for r in filt)
     pool_ids = {r["id"] for r in coll.query(q, n_results=50, filter_strategy="graph").collect()}
     assert {r["id"] for r in filt} <= pool_ids
+
+
+def test_graph_sidecar_fingerprint_is_memoized_and_tracks_recommit(
+    spark, tmp_path, monkeypatch
+):
+    """A warm graph query does not re-fingerprint the collection
+    version (a walk and stat of every file), yet after a rollback the commit that republishes the
+    abandoned version's name with new content still misses the stored
+    fingerprint: the sidecar rebuilds and serves the new vectors."""
+    import os
+
+    from adk_noui_vectordb_spark import memo
+
+    coll = Collection(spark, str(tmp_path / "fp"))
+    mat = _vecs(41, 14)
+    coll.add(_batch(spark, [f"g{i}" for i in range(12)], mat[:12]))
+    coll.query([float(x) for x in mat[0]], n_results=3, filter_strategy="graph")
+    coll.add(_batch(spark, ["x"], mat[12:13]))
+    qx = [float(x) for x in mat[12]]
+    top = coll.query(qx, n_results=1, filter_strategy="graph").head()
+    assert (top["id"], top["distance"]) == ("x", 0.0)
+
+    calls = []
+    real = memo.dataset_fingerprint
+
+    def counted(path):
+        calls.append(path)
+        return real(path)
+
+    monkeypatch.setattr(memo, "dataset_fingerprint", counted)
+    coll.query(qx, n_results=1, filter_strategy="graph").collect()
+    assert not [p for p in calls if p.startswith(coll.root)], calls
+
+    abandoned = os.path.basename(coll._cur())
+    coll.rollback()
+    coll.add(_batch(spark, ["y"], mat[13:14]))
+    assert os.path.basename(coll._cur()) == abandoned
+    qy = [float(x) for x in mat[13]]
+    got = coll.query(qy, n_results=3, filter_strategy="graph").collect()
+    assert (got[0]["id"], got[0]["distance"]) == ("y", 0.0)
+    assert "x" not in {r["id"] for r in got}
 
 
 def test_facade_graph_strategy_recall_on_clustered_fixture(spark, tmp_path):

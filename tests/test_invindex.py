@@ -1,6 +1,6 @@
 """Inverted-index serving lifecycle (operators/invindex.py).
 
-The lexical twin of the rp/ivf serving tests: build-once/serve-many,
+The lexical twin of the vector serving tests: build-once/serve-many,
 derived-constant parity between the Spark bucket expression and the
 client-side Python helper, and ranking equality with the scan-time BM25.
 """
@@ -154,71 +154,6 @@ def test_incremental_update_touches_only_affected_buckets(spark, sf_dir, tmp_pat
             p = os.path.join(post_p, d)
             now = max(os.path.getmtime(os.path.join(p, f)) for f in os.listdir(p))
             assert now == mt, f"bucket {b} rewritten by unrelated update"
-
-
-def test_served_hybrid_is_fully_index_served(spark, sf_dir):
-    """Both arms of hybrid_rrf_served_topk must read from on-disk
-    indexes with partition pruning (tbucket for the lexical arm,
-    band/band_key for the vector probe) — no documents-table scan in
-    the plan."""
-    from adk_noui_vectordb_spark.plans import explain_str
-
-    df = invindex.hybrid_rrf_served_topk(spark, sf_dir)
-    plan = explain_str(df)
-    heads = [s.split("\n")[0] for s in plan.split("PartitionFilters")[1:]]
-    assert any("tbucket" in h for h in heads), plan
-    assert any("band" in h for h in heads), plan
-    assert "documents.parquet" not in plan, plan
-
-
-def test_served_hybrid_lexical_arm_matches_scan_hybrid(spark, sf_dir):
-    """The lexical ranks inside the served fusion equal the scan-time
-    hybrid's lexical ranks (identical BM25 arithmetic); only the vector
-    arm may differ (LSH-approximate by design)."""
-    from adk_noui_vectordb_spark.operators.hybrid import hybrid_rrf_topk
-
-    served = {
-        r["doc_id"]: r["lex_rank"]
-        for r in invindex.hybrid_rrf_served_topk(spark, sf_dir).collect()
-        if r["lex_rank"] is not None
-    }
-    scan = {
-        r["doc_id"]: r["lex_rank"]
-        for r in hybrid_rrf_topk(spark, sf_dir).collect()
-        if r["lex_rank"] is not None
-    }
-    for doc_id, rank in served.items():
-        if doc_id in scan:
-            assert scan[doc_id] == rank, (doc_id, rank, scan[doc_id])
-
-
-def test_served_weighted_hybrid_index_only_and_bounds(spark, sf_dir):
-    """The weighted served twin inherits the RRF served key's index-only
-    contract (tbucket + band partition filters, no documents scan), its
-    scores are a convex combination in [0, 1], and alpha=0 reduces to
-    the served BM25 top-k exactly."""
-    from adk_noui_vectordb_spark.plans import explain_str
-
-    df = invindex.hybrid_weighted_served_topk(spark, sf_dir)
-    plan = explain_str(df)
-    heads = [s.split("\n")[0] for s in plan.split("PartitionFilters")[1:]]
-    assert any("tbucket" in h for h in heads), plan
-    assert any("band" in h for h in heads), plan
-    assert "documents.parquet" not in plan, plan
-    rows = df.collect()
-    assert len(rows) == 10
-    assert all(0.0 <= r["wscore"] <= 1.0 for r in rows)
-    a0 = [
-        r["doc_id"]
-        for r in invindex.hybrid_weighted_served_topk(
-            spark, sf_dir, alpha=0.0
-        ).collect()
-    ]
-    lex = [
-        r["doc_id"]
-        for r in invindex.bm25_topk_served(spark, sf_dir, k=10).collect()
-    ]
-    assert a0 == lex
 
 
 def test_term_bucket_property_parity(spark):

@@ -155,66 +155,12 @@ def test_decontaminate_fallback_matches_collect_path(spark, sf_dir):
     assert "Join" in plan, plan
 
 
-def test_rp_lsh_probe_prunes_index_partitions(spark, sf_dir):
-    """ann_rp_lsh_topk serves from the on-disk band table partitioned by
-    (band, band_key): the probe's literal (band, band_key) pairs must be
-    PartitionFilters — the scan lists only the probed bucket directories
-    (the 100 TB serving contract, VERDICT r6 next #1)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from adk_noui_vectordb_spark.operators import ann
-
-    df = ann.ann_rp_lsh_topk(spark, sf_dir)
-    plan = explain_str(df)
-    seg = plan.split("PartitionFilters")
-    assert len(seg) > 1, plan
-    head = seg[1].split("\n")[0]
-    assert "band" in head and "band_key" in head, plan
-
-    # runtime proof: the probed-bucket listing reads fewer leaf dirs than
-    # the index holds (single probe touches RP_BANDS of up to 96 buckets)
-    bands_p = ann.build_rp_index(spark, sf_dir)
-    n_buckets = sum(
-        1
-        for band in os.listdir(bands_p)
-        if band.startswith("band=")
-        for bk in os.listdir(os.path.join(bands_p, band))
-        if bk.startswith("band_key=")
-    )
-    assert n_buckets > ann.RP_BANDS
-    probed = (
-        spark.read.parquet(bands_p)
-        .filter((F.col("band") == 0) & (F.col("band_key") == 0))
-    )
-    assert "PartitionFilters" in explain_str(probed)
-
-
-def test_rp_lsh_multiprobe_expands_candidates(spark, sf_dir):
-    """Hamming-1 multiprobe must probe a superset of the single-probe
-    buckets: its candidate set contains the single-probe candidates."""
-    from adk_noui_vectordb_spark.operators import ann
-
-    single = set(
-        r["vec_id"] for r in ann.ann_rp_lsh_topk(spark, sf_dir, k=1000).collect()
-    )
-    multi = set(
-        r["vec_id"]
-        for r in ann.ann_rp_lsh_topk(
-            spark, sf_dir, k=1000, multiprobe_hamming=1
-        ).collect()
-    )
-    assert single <= multi
-    assert len(multi) >= len(single)
-
-
 def test_text_index_probe_prunes_term_buckets(spark, sf_dir):
     """bm25_topk_served reads the on-disk postings partitioned by
     tbucket: the literal query-term buckets must be PartitionFilters on
     every index scan (postings AND termstats) — a query touches only its
     own terms' buckets however large the corpus (the lexical twin of the
-    rp/ivf serving contract)."""
+    band/ivf serving contract)."""
     from adk_noui_vectordb_spark.operators import invindex
 
     df = invindex.bm25_topk_served(spark, sf_dir)
@@ -226,28 +172,6 @@ def test_text_index_probe_prunes_term_buckets(spark, sf_dir):
         {invindex.term_bucket_py(t) for t in invindex.QUERY_TERMS}
     )
     assert len(buckets) < invindex.N_TERM_BUCKETS  # probe is a strict subset
-
-
-def test_vecs_store_point_lookup_prunes_vbucket(spark, sf_dir):
-    """The r9 index-resident vector stores serve query point lookups
-    with STATIC vbucket partition pruning — the scan lists one of
-    N_VEC_BUCKETS partition dirs, the text-probe contract applied to
-    vectors."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from adk_noui_vectordb_spark.operators import ann
-
-    bands_p = ann.build_rp_index(spark, sf_dir)
-    vecs = spark.read.parquet(os.path.join(os.path.dirname(bands_p), "vecs"))
-    probe = vecs.filter(
-        (F.col("vbucket") == ann.vec_bucket_py(0)) & (F.col("vec_id") == 0)
-    )
-    plan = explain_str(probe)
-    seg = plan.split("PartitionFilters")
-    assert len(seg) > 1, plan
-    assert "vbucket" in seg[1].split("\n")[0], plan
 
 
 def test_dedup_gate_verification_broadcasts_batch_side(spark, sf_dir):
@@ -344,9 +268,9 @@ def test_phrase_probe_prunes_term_buckets_and_never_scans_corpus(
 
 def test_new_serving_ops_prune_and_avoid_corpus(spark, sf_dir):
     """One sweep over the r10b serving layer: proximity, prefix (probe
-    phase), highlight and batch-ANN plans never scan the corpus files,
-    and every positions/postings/bands scan carries partition filters."""
-    from adk_noui_vectordb_spark.operators import ann, invindex
+    phase) and highlight plans never scan the corpus files, and every
+    positions/postings scan carries partition filters."""
+    from adk_noui_vectordb_spark.operators import invindex
 
     cases = [
         (
@@ -358,11 +282,6 @@ def test_new_serving_ops_prune_and_avoid_corpus(spark, sf_dir):
             invindex.search_highlight_served(spark, sf_dir),
             "documents.parquet",
             "tbucket",
-        ),
-        (
-            ann.ann_rp_lsh_batch_topk(spark, sf_dir),
-            "embeddings.parquet",
-            "band",
         ),
     ]
     for df, corpus_file, part_col in cases:

@@ -82,7 +82,7 @@ def test_upsert_idempotent_and_keyed(spark, batch, tmp_path_factory):
 @pytest.mark.parametrize(
     "key",
     [
-        "ann_rp_lsh_topk",         # md5-seeded hyperplanes + band probe
+        "collection_query_topk",   # md5-seeded hyperplanes + band probe
         "filter_by_element_type",  # ranked limit cut
         "stratified_sample",       # ranked modulo sample
         "dedup_minhash_pairs",     # Arrow kernel + self-join
@@ -306,106 +306,6 @@ def test_text_index_lifecycle_matches_model(spark, tmp_path_factory, initial, op
     )
     assert s["n_docs"] == len(model)
     assert s["tot_dl"] == sum(len(t.split(" ")) for t in model.values())
-
-
-_vec = st.lists(
-    st.integers(min_value=-3, max_value=3).map(float), min_size=64, max_size=64
-)
-_rp_op = st.one_of(
-    st.tuples(
-        st.just("upsert"),
-        st.dictionaries(
-            st.integers(min_value=0, max_value=5), _vec, min_size=1, max_size=2
-        ),
-    ),
-    st.tuples(
-        st.just("delete"),
-        st.lists(st.integers(min_value=0, max_value=7), min_size=1, max_size=2),
-    ),
-    st.tuples(st.just("compact"), st.none()),
-)
-
-
-@given(
-    initial=st.dictionaries(
-        st.integers(min_value=0, max_value=5), _vec, min_size=2, max_size=3
-    ),
-    ops=st.lists(_rp_op, min_size=1, max_size=3),
-)
-# Same pinned corner as the text lifecycle: delete EVERY vector.
-@example(
-    initial={0: [1.0] * 64, 1: [2.0] * 64}, ops=[("delete", [0, 1])]
-)
-@settings(
-    max_examples=3,
-    deadline=None,
-    suppress_health_check=[
-        HealthCheck.function_scoped_fixture,
-        HealthCheck.too_slow,
-    ],
-)
-def test_rp_index_lifecycle_matches_model(spark, tmp_path_factory, initial, ops):
-    """Stateful property for the RP-LSH index: ANY upsert/delete/compact
-    sequence must leave bands equal to the banding kernel applied to a
-    dict model of the corpus (zero-norm vectors band-excluded) and vecs
-    equal to the model itself."""
-    import os
-
-    from adk_noui_vectordb_spark.operators import ann
-
-    base = str(tmp_path_factory.mktemp("rpprop"))
-    spark.createDataFrame(
-        [(i, v, 0) for i, v in sorted(initial.items())],
-        "vec_id bigint, embedding array<double>, label int",
-    ).write.parquet(os.path.join(base, "embeddings.parquet"))
-    ann.build_rp_index(spark, base)
-    model = dict(initial)
-
-    for kind, arg in ops:
-        if kind == "upsert":
-            batch = spark.createDataFrame(
-                [(i, v) for i, v in sorted(arg.items())],
-                "vec_id bigint, embedding array<double>",
-            )
-            ann.update_rp_index(spark, base, batch)
-            model.update(arg)
-        elif kind == "delete":
-            ids = spark.createDataFrame(
-                [(i,) for i in sorted(set(arg))], "vec_id bigint"
-            )
-            ann.delete_from_rp_index(spark, base, ids)
-            for i in set(arg):
-                model.pop(i, None)
-        else:
-            ann.compact_rp_index(spark, base, threshold=0)
-
-    bands_p = ann.build_rp_index(spark, base)
-    got = {
-        (r["band"], r["band_key"], r["vec_id"])
-        for r in spark.read.schema(ann.RP_BANDS_SCHEMA)
-        .parquet(bands_p)
-        .collect()
-    }
-    nz = {i: v for i, v in model.items() if any(x != 0.0 for x in v)}
-    if nz:
-        mdf = spark.createDataFrame(
-            [(i, v) for i, v in sorted(nz.items())],
-            "vec_id bigint, emb array<double>",
-        )
-        want = {
-            (r["band"], r["band_key"], r["vec_id"])
-            for r in ann.rp_band_rows_for(mdf).collect()
-        }
-    else:
-        want = set()
-    assert got == want
-    vecs = {
-        r["vec_id"]: tuple(r["emb"])
-        for r in spark.read.schema(ann.VECS_SCHEMA)
-        .parquet(os.path.join(os.path.dirname(bands_p), "vecs"))
-        .collect()
-    }
-    assert vecs == {i: tuple(v) for i, v in model.items()}
 
 
 _cemb = st.lists(

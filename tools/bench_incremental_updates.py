@@ -1,12 +1,12 @@
-"""Incremental-update vs full-rebuild scaling (r9 maintenance paths).
+"""Incremental-update vs full-rebuild scaling of the lexical index.
 
-The claim under test: ``update_*_index`` costs O(batch + stale
+The claim under test: ``update_text_index`` costs O(batch + stale
 partitions) while a rebuild costs O(corpus). Local wall-clock at one SF
 cannot show that (per-job fixed overhead dominates a small update), so
 this tool holds the BATCH SIZE FIXED (50 brand-new rows) and scales the
-CORPUS across sf0.01 -> sf0.1 (documents 500 -> 5000 rows, embeddings
-500 -> 2000): an O(batch) update stays flat while the rebuild grows
-with the corpus — the same log-log evidence scaling_exponents.py uses.
+CORPUS across sf0.01 -> sf0.1 (documents 500 -> 5000 rows): an O(batch)
+update stays flat while the rebuild grows with the corpus — the same
+log-log evidence scaling_exponents.py uses.
 
 Usage: python tools/bench_incremental_updates.py -> markdown rows
 (paste into BASELINE.md). Times are best-of-N wall seconds.
@@ -40,7 +40,7 @@ def _timed(fn) -> float:
 def main() -> None:
     from pyspark.sql import functions as F
 
-    from adk_noui_vectordb_spark.operators import ann, invindex
+    from adk_noui_vectordb_spark.operators import invindex
     from adk_noui_vectordb_spark.session import get_spark
 
     spark = get_spark(app_name="bench-incremental")
@@ -80,27 +80,6 @@ def main() -> None:
 
         t_rb = _timed(rebuild_text)
         rows.setdefault("text (inverted)", []).append((sf, n_docs, t_up, t_rb))
-
-        # RP-LSH: fixed 50-vector batch of brand-new vec_ids
-        base = corpus_copy(sf_dir, "embeddings", f"rp_{sf}")
-        emb = spark.read.parquet(os.path.join(base, "embeddings.parquet"))
-        n_vecs = emb.count()
-        vbatch = (
-            emb.limit(BATCH)
-            .select((F.col("vec_id") + 10_000_000).alias("vec_id"), "embedding")
-            .localCheckpoint(eager=True)
-        )
-        ann.build_rp_index(spark, base)
-        r_up = _timed(lambda: ann.update_rp_index(spark, base, vbatch))
-
-        def rebuild_rp():
-            shutil.rmtree(ann.rp_index_root(base), ignore_errors=True)
-            ann.build_rp_index(spark, base)
-
-        r_rb = _timed(rebuild_rp)
-        rows.setdefault("RP-LSH (bands+vecs)", []).append(
-            (sf, n_vecs, r_up, r_rb)
-        )
 
     print(
         "| index | corpus rows (sf) | 50-row upsert (s) | full rebuild (s) |"

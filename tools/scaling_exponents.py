@@ -36,7 +36,6 @@ KEYS = {
     "semdedup_prune": "embeddings",
     "cluster_kmeans": "embeddings",
     "knn_topk": "embeddings",
-    "ann_rp_lsh_topk": "embeddings",
     "curate_corpus": "documents",
     "winnow_fingerprints": "documents",
     "decontaminate_corpus": "documents",
@@ -54,10 +53,8 @@ KEYS = {
     # r7c additions
     "doc_token_entropy": "documents",
     "dup_cluster_size_histogram": "documents",
-    "hybrid_rrf_served_topk": "documents",
     # r9 additions
     "text_index_doc_map": "documents",
-    "rp_index_vec_rows": "embeddings",
     "gopher_quality_flags": "documents",
     "c4_line_filter": "documents",
     # r10 additions
@@ -70,16 +67,13 @@ KEYS = {
     "dedup_containment_gate": "documents",
     "split_train_holdout": "documents",
     "hybrid_weighted_topk": "documents",
-    "hybrid_weighted_served_topk": "documents",
     # r10b additions (query-language + filtered-ANN serving layer)
     "boolean_and_topk": "documents",
     "boolean_or_not_topk": "documents",
     "phrase_topk_served": "documents",
     "prefix_topk_served": "documents",
     "proximity_topk_served": "documents",
-    "ann_rp_lsh_filtered_topk": "embeddings",
     # r10c additions (where DSL, collection facade, fuzzy, shards)
-    "knn_where_dsl_topk": "embeddings",
     "collection_query_topk": "embeddings",
     "collection_query_graph_topk": "embeddings",
     "collection_query_graph_batch_topk": "embeddings",
@@ -95,7 +89,6 @@ KEYS = {
     "late_interaction_explain_served": "documents",
     "dedup_containment_gate_ingested": "documents",
     "dsir_importance_select": "documents",
-    "ann_grouped_topk": "embeddings",
     # r11 additions
     "ann_ivf_sampled_topk": "embeddings",
     "collection_get_page2": "documents",
