@@ -25,28 +25,37 @@ silent).
 
 Metadata is SCHEMA-ON-FIRST-WRITE: the first batch's non-reserved
 columns become typed parquet columns (not a string map), so a
-``where`` DSL filter (functions/where_dsl.py) compiles to ordinary
-Catalyst predicates for the write paths and to a pyarrow mask for the
-reads. The schema and embedding dim persist in a root-level
+``where`` DSL filter (functions/where_dsl.py) compiles to a pyarrow
+mask over them for reads and deletes. The schema and embedding dim persist in a root-level
 ``collection.json`` sidecar and later batches must match.
 
-Scale shape (the same contracts as the sf_dir-bound index family):
-- ``add``/``upsert`` are APPEND-MOSTLY: brand-new ids write O(batch)
-  and read ZERO existing rows; replaced ids rewrite exactly the
-  partitions holding their stale rows (reverse-mapped by re-banding
-  the OLD vectors from the collection's own vecs store).
+Scale shape — a served collection lives in driver memory (every read
+below holds its partitions there), so every commit and every read is
+planned on the driver too:
+- Writes (``add``, ``upsert``, full-schema ``update``, ``delete`` and a
+  conflicted ``merge_from``) are driver COPY-ON-WRITE of the partitions
+  they touch: the batch is collected once (a pandas or Arrow batch is
+  a LocalRelation, so zero Spark jobs) and checked in numpy; the rows
+  it replaces or deletes are found with the read path's partition
+  readers (a replaced row's stale band partitions by re-banding its
+  stored vector); and every touched partition is rewritten as ONE
+  pyarrow file of its surviving plus added rows. Untouched partitions
+  hardlink into the new version, so each partition dir holds one data
+  file (a disjoint ``merge_from`` links the source's files beside it;
+  ``compact`` folds those). Only a partial ``update``'s
+  old-value assembly and ``add_metadata_column`` still run Spark.
 - Reads (``query``, ``get``, ``count``, ``peek``) serve the resolved
-  version on the DRIVER with zero Spark jobs: a published version
-  never changes, so each partition dir is read once per session with
-  pyarrow (``_read_partition``, memoized on its path) and filtered and
-  scored in numpy; the answer is a local DataFrame, valid after its
-  version is garbage collected. ``query`` computes band keys
-  client-side (24 integer dots) and opens only the probed band dirs
-  and the vbucket/mbucket dirs of their candidates; ``count`` sums
-  the meta footers' row counts. Online top-k over one small snapshot
-  does not fit a job scheduler — each Spark job costs more than the
-  whole driver-side read.
-- ``delete`` rewrites only victim partitions inside one atomic commit.
+  version on the DRIVER with zero Spark jobs: each partition is read
+  once per session with pyarrow (``_read_partition``, memoized on its
+  data files' unique names, so a partition a commit hardlinked
+  unchanged is not read again) and filtered and scored in numpy; the
+  answer is a local DataFrame, valid after its version is garbage
+  collected. ``query`` computes band keys client-side (24 integer
+  dots) and opens only the probed band dirs and the vbucket/mbucket
+  dirs of their candidates; ``count`` sums the meta footers' row
+  counts. Online top-k over one small snapshot does not fit a job
+  scheduler — each Spark job costs more than the whole driver-side
+  read.
 - Readers never see a partial write: every mutation is one ``_CURRENT``
   swing; concurrent writers serialize on the root's writer lock and a
   stale plan raises ``ConcurrentWriterError`` instead of clobbering.
@@ -54,11 +63,10 @@ Scale shape (the same contracts as the sf_dir-bound index family):
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import os
-from functools import reduce
-from operator import and_, or_
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -68,6 +76,7 @@ from pyspark.sql import functions as F
 from ..functions.vector import np_round4, np_scores
 from ..functions.where_dsl import where_document_mask, where_mask
 from ..operators.ann import (
+    N_VEC_BUCKETS,
     RP_BAND_BITS,
     RP_BANDS,
     RP_PLANES,
@@ -141,41 +150,6 @@ def _mbucket_py(sid: int) -> int:
     return int(hashlib.md5(str(sid).encode()).hexdigest()[:8], 16) % N_META_BUCKETS
 
 
-def _mbucket_specs(id_frame: DataFrame) -> frozenset:
-    """Distinct mbucket partition specs of a (vec_id) frame — the
-    distinct runs DISTRIBUTED (<= N_META_BUCKETS rows collect), never a
-    driver-side pass over the victim set."""
-    return frozenset(
-        f"mbucket={r['m']}"
-        for r in id_frame.select(_mbucket_expr(F.col("vec_id")).alias("m"))
-        .distinct()
-        .collect()
-    )
-
-
-def _survivors(
-    read: DataFrame, specs, victims: DataFrame, keep: list
-) -> DataFrame:
-    """The rows of the partitions named by ``specs`` (``"col=v/col=v"``
-    directory specs) that a commit rewrites, minus the ``victims``
-    (vec_id) rows, projected to ``keep``."""
-    preds = [
-        reduce(
-            and_,
-            [
-                F.col(c).cast("string") == v
-                for c, v in (p.split("=") for p in spec.split("/"))
-            ],
-        )
-        for spec in sorted(specs)
-    ]
-    return (
-        read.filter(reduce(or_, preds))
-        .join(victims, "vec_id", "left_anti")
-        .select(*keep)
-    )
-
-
 def _checked_size(b: DataFrame) -> int:
     """Row count of a write batch, with its ids checked in the same one
     job: a NULL or repeated id raises ``ValueError``."""
@@ -247,12 +221,18 @@ def _dir_id(path: str) -> "tuple | None":
 
 def _read_partition(spark: SparkSession, part: str, columns: list, convert):
     """``convert`` of the pyarrow table of one partition dir of a
-    published version (None when the dir holds no file), memoized on
-    the partition's path and identity. Every collection read goes
-    through here."""
+    published version (None when the dir holds no file). Every
+    collection read goes through here. Memoized on the partition's
+    path below its version dir plus the names of its data files:
+    those names are unique and a hardlink keeps them, so a partition a
+    commit carried over unchanged is not read again."""
     import pyarrow.parquet as pq
 
-    from ..memo import version_memo
+    from ..memo import files_memo
+
+    files = _part_files(part)
+    if not files:
+        return convert(None)
 
     def read(f):
         # ParquetFile.read skips the dataset layer read_table goes
@@ -260,11 +240,66 @@ def _read_partition(spark: SparkSession, part: str, columns: list, convert):
         with pq.ParquetFile(f) as pf:
             return pf.read(columns=columns, use_threads=False)
 
-    def build():
-        ts = [read(f) for f in _part_files(part)]
-        return convert(pa.concat_tables(ts) if ts else None)
+    head, rel = part, []
+    while not rel or "=" in rel[-1]:  # up to the component dir
+        head, name = os.path.split(head)
+        rel.append(name)
+    return files_memo(
+        spark,
+        "coll_partition",
+        lambda: convert(pa.concat_tables([read(f) for f in files])),
+        "/".join(reversed(rel)),
+        tuple(os.path.basename(f) for f in files),
+        tuple(columns),
+    )
 
-    return version_memo(spark, part, "coll_partition", build, _dir_id(part))
+
+@functools.lru_cache(maxsize=64)
+def _meta_arrow(meta_schema: str) -> tuple:
+    """({name: Spark field}, pyarrow schema) of the meta rows of a
+    collection's ``meta_schema`` DDL, without the mbucket partition
+    column."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    fields = [f for f in StructType.fromDDL(meta_schema).fields if f.name != "mbucket"]
+    return {f.name: f for f in fields}, to_arrow_schema(StructType(fields))
+
+
+def _arrow_column(values: list, typ):
+    """pyarrow array of collected Spark row values. A collected
+    timestamp is a naive local-time datetime; it is made aware so the
+    UTC column stores the instant Spark held."""
+    import datetime
+
+    if pa.types.is_timestamp(typ):
+        values = [
+            v.astimezone(datetime.timezone.utc)
+            if isinstance(v, datetime.datetime) and v.tzinfo is None
+            else v
+            for v in values
+        ]
+    return pa.array(values, typ)
+
+
+def _list_array(mat):
+    """The rows of an n x dim float64 matrix as an ``array<double>``
+    column (the vecs store's ``emb``)."""
+    import numpy as np
+
+    n, dim = mat.shape
+    offsets = dim * np.arange(n + 1, dtype=np.int32)
+    return pa.ListArray.from_arrays(offsets, pa.array(mat.reshape(-1), pa.float64()))
+
+
+def _band_keys(mat, dim: int) -> tuple:
+    """(nonzero-row mask, n x RP_BANDS band keys) of an n x ``dim``
+    float64 matrix — the probe's banding at the collection's dim; a
+    zero vector has no band rows."""
+    import numpy as np
+
+    signs_t = np.array(_rp_plane_signs(RP_PLANES, dim), np.int64).T
+    return (mat != 0).any(axis=1), _rp_band_keys(mat, signs_t)
 
 
 def _sims4(q, ids, rows: dict) -> dict:
@@ -509,26 +544,9 @@ class Collection:
             [p[1] for p in parts]
         )
 
-    def _meta_schema(self, cur: str, info: dict) -> tuple:
-        """({name: Spark field}, pyarrow schema) of the meta rows,
-        without the mbucket partition column."""
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import StructType
-
-        from ..memo import version_memo
-
-        def build():
-            ddl = StructType.fromDDL(info["meta_schema"])
-            fields = [f for f in ddl.fields if f.name != "mbucket"]
-            return {f.name: f for f in fields}, to_arrow_schema(StructType(fields))
-
-        return version_memo(
-            self.spark, cur, "coll_meta_schema", build, info["meta_schema"]
-        )
-
     def _meta_rows(self, cur: str, info: dict, mbuckets):
         """pyarrow table of the meta rows of the ``mbuckets`` partitions."""
-        schema = self._meta_schema(cur, info)[1]
+        schema = _meta_arrow(info["meta_schema"])[1]
         return pa.concat_tables(
             [schema.empty_table()]
             + [
@@ -547,7 +565,7 @@ class Collection:
         meta rows ``page``, then ``embeddings`` when asked for."""
         from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
-        fields = self._meta_schema(cur, info)[0]
+        fields = _meta_arrow(info["meta_schema"])[0]
         cols = ["id"] + (["document"] if "documents" in inc else [])
         cols += self._meta_cols(info) if "metadatas" in inc else []
         struct = [f for f, _ in lead] + [fields[c] for c in cols]
@@ -1019,42 +1037,14 @@ class Collection:
                 )
         return visited, passing
 
-    def _band_rows_for(self, e: DataFrame, dim: int) -> DataFrame:
-        """The RP banding kernel at this collection's dim (the module
-        kernel rp_band_rows_for is fixed at the engine table's RP_DIM;
-        signatures here come from the SAME md5-seeded planes generator,
-        so a 64-dim collection bands byte-identically to the engine)."""
-        import numpy as np
-        import pandas as pd
-
-        signs_t = np.array(_rp_plane_signs(RP_PLANES, dim), dtype=np.int64).T
-
-        def batches(it):
-            for pdf in it:
-                if len(pdf) == 0:
-                    continue
-                mat = np.stack(
-                    [np.asarray(v, dtype=np.float64) for v in pdf["emb"]]
-                )
-                if mat.shape[1] != dim:
-                    raise ValueError(
-                        f"collection dim={dim}, got {mat.shape[1]}"
-                    )
-                keys = _rp_band_keys(mat, signs_t)
-                ids = pdf["vec_id"].to_numpy()
-                yield pd.DataFrame(
-                    {
-                        "vec_id": np.repeat(ids, RP_BANDS),
-                        "band": np.tile(
-                            np.arange(RP_BANDS, dtype=np.int32), len(ids)
-                        ),
-                        "band_key": keys.reshape(-1).astype(np.int32),
-                    }
-                )
-
-        return e.mapInPandas(batches, BANDS_SCHEMA)
-
     # ----------------------------------------------------------- writes
+    # Every add/upsert/update/delete/merge commit is planned on the
+    # driver (``_commit_rows``): the batch is collected once and checked
+    # in numpy, the rows it replaces or deletes are found with the read
+    # path's partition readers, and each partition the commit touches
+    # is rewritten as ONE pyarrow file — its old rows minus those ids,
+    # plus the batch's rows for it. vn.commit_version hardlinks every
+    # other partition and publishes. A local batch runs no Spark job.
 
     @staticmethod
     def _normalize(batch: DataFrame) -> tuple[DataFrame, list[str]]:
@@ -1108,8 +1098,9 @@ class Collection:
         BEFORE the atomic replace (Chroma replaces the whole metadata
         dict; with schema-on-first-write typed columns, the column
         subset is the equivalent contract). Provided columns replace.
-        A full-schema batch takes the direct path with zero old reads
-        beyond the resubmission check.
+        A full-schema batch is an upsert that requires every id present
+        (the driver write path, no Spark job for a local batch); a
+        partial one assembles its old values in Spark first.
 
         Lost-update fence (ADVICE r11): the carried-forward old values
         are a snapshot; the commit CASes on exactly that snapshot's
@@ -1249,6 +1240,8 @@ class Collection:
         lock — so a concurrent commit between assembly and here raises
         ``ConcurrentWriterError`` instead of silently reverting the
         interleaved writer's columns."""
+        import numpy as np
+
         self._assert_writable()
         if "embedding" not in batch.columns and "document" in batch.columns:
             # ChromaDB add(documents=...): embeddings computed by THE
@@ -1263,48 +1256,43 @@ class Collection:
                 ),
             )
         b, meta_cols = self._normalize(batch)
-        if _checked_size(b) == 0:
+        # a pandas or Arrow batch is a LocalRelation, which collects
+        # without a job; any other plan runs its own job here, once
+        rows = b.collect()
+        if not rows:
             cur = self._cur()
             return cur if cur is not None else ""
-        b = b.withColumn("vec_id", _sid_expr(F.col("id"))).localCheckpoint(
-            eager=True
-        )
-        # within-batch surrogate collision (ADVICE r11): two DISTINCT new
-        # ids sharing one 60-bit surrogate pass the duplicate-id check
-        # above and would silently write two rows under one vec_id —
-        # reject at write time, same contract as the existing-row check.
-        intra = (
-            b.groupBy("vec_id")
-            .agg(F.countDistinct("id").alias("n_ids"), F.min("id").alias("a"), F.max("id").alias("z"))
-            .filter(F.col("n_ids") > 1)
-            .head(1)
-        )
-        if intra:
-            r = intra[0]
+        ids = [r[0] for r in rows]
+        if None in ids:
+            raise ValueError(f"NULL id in {ids.count(None)} batch row(s)")
+        if len(set(ids)) != len(ids):
+            raise ValueError("duplicate ids within one batch")
+        sids = [_sid_py(i) for i in ids]
+        if len(set(sids)) != len(sids):
+            # two DISTINCT ids sharing one 60-bit surrogate would write
+            # two rows under one vec_id (ADVICE r11) — rejected like a
+            # collision with a stored row
+            by_sid: dict = {}
+            for i, s in zip(ids, sids):
+                by_sid.setdefault(s, []).append(i)
+            s, grp = min((s, g) for s, g in by_sid.items() if len(g) > 1)
             raise SurrogateCollisionError(
-                f"ids {r['a']!r} and {r['z']!r} in one batch share surrogate "
-                f"{r['vec_id']} — shard into another collection"
+                f"ids {min(grp)!r} and {max(grp)!r} in one batch share "
+                f"surrogate {s} — shard into another collection"
             )
-
-        # one aggregate checks the dims and finds a NULL or non-finite
-        # embedding (such a vector has no cosine and breaks the graph
-        # sidecar's centroid literals), before anything commits
-        bad_emb = F.col("emb").isNull() | F.exists(
-            "emb",
-            lambda x: x.isNull() | F.isnan(x) | (F.abs(x) == float("inf")),
-        )
-        dim = b.agg(
-            F.min(F.size("emb")).alias("lo"),
-            F.max(F.size("emb")).alias("hi"),
-            F.min(F.when(bad_emb, F.col("id"))).alias("bad_id"),
-        ).head()
-        if dim["bad_id"] is not None:
+        # a NULL or non-finite embedding (a NULL element reads as NaN
+        # here) has no cosine and breaks the graph sidecar's centroid
+        # literals: rejected, with the dims checked, before any commit
+        embs = [None if r[1] is None else np.asarray(r[1], np.float64) for r in rows]
+        bad = [i for i, e in zip(ids, embs) if e is None or not np.isfinite(e).all()]
+        if bad:
             raise ValueError(
-                f"embedding of id {dim['bad_id']!r} is NULL or holds a NULL, "
-                f"NaN or infinite element"
+                f"embedding of id {min(bad)!r} is NULL or holds a NULL, NaN "
+                f"or infinite element"
             )
-        if dim["lo"] != dim["hi"]:
-            raise ValueError(f"mixed embedding dims {dim['lo']}..{dim['hi']}")
+        lo, hi = min(len(e) for e in embs), max(len(e) for e in embs)
+        if lo != hi:
+            raise ValueError(f"mixed embedding dims {lo}..{hi}")
         meta_schema = ", ".join(
             ["vec_id bigint", "id string", "document string"]
             + [
@@ -1330,11 +1318,7 @@ class Collection:
         # and legacy versions.
         info = self._version_info(cur) if cur is not None else None
         if info is None:
-            desired = {
-                "dim": dim["lo"],
-                "meta_schema": meta_schema,
-                "space": self.space,
-            }
+            desired = {"dim": lo, "meta_schema": meta_schema, "space": self.space}
             if self._embedder is not None:
                 desired["embedder"] = self._embedder
             info = self._save_sidecar(desired)
@@ -1343,171 +1327,140 @@ class Collection:
                 f"metadata schema mismatch: collection has "
                 f"{info['meta_schema']!r}, batch brings {meta_schema!r}"
             )
-        if info["dim"] != dim["lo"]:
-            raise ValueError(f"dim mismatch: {info['dim']} != {dim['lo']}")
+        if info["dim"] != lo:
+            raise ValueError(f"dim mismatch: {info['dim']} != {lo}")
         extra = {"collection.json": json.dumps(info)}
-
-        batch_ids = b.select("vec_id", "id")
-        batch_bands = self._band_rows_for(
-            b.select("vec_id", "emb").filter(_nonzero_pred()), info["dim"]
-        ).localCheckpoint(eager=True)
-
+        schema = _meta_arrow(meta_schema)[1]
+        # the meta fields after vec_id are the batch's id, document and
+        # metadata columns: every column but emb, in order
+        cols = [0] + list(range(2, len(b.columns)))
+        add = pa.Table.from_arrays(
+            [pa.array(sids, pa.int64())]
+            + [
+                _arrow_column([r[j] for r in rows], f.type)
+                for j, f in zip(cols, list(schema)[1:])
+            ],
+            schema=schema,
+        )
+        mat = np.stack(embs)
         if cur is None:
             if require_present:
-                some = [r["id"] for r in b.select("id").head(3)]
                 raise KeyError(
-                    f"update(): collection is empty — ids {some} absent; "
+                    f"update(): collection is empty — ids {ids[:3]} absent; "
                     f"use add() or upsert()"
                 )
-            # initial build: plain component writes, expected=None
             try:
-                new = vn.commit_version(
-                    self.spark,
-                    self.root,
-                    self._plan(b, batch_bands, meta_cols, frozenset(), frozenset(), frozenset(), None),
-                    expected=None,
-                    extra_files=extra,
-                )
+                return self._commit_rows(None, info, (), add, mat, extra)
             except vn.ConcurrentWriterError:
                 # a racing creator won the initial commit; replay this
                 # batch on top of theirs with the CALLER's semantics —
                 # a losing add() must still raise DuplicateIDError if the
                 # winner carried overlapping ids (VERDICT r10 next #4)
                 return self._write(batch, replace=replace, require_present=require_present)
-            return new
+        victims = self._stored_ids(cur, info, add, replace, require_present)
+        return self._commit_rows(cur, info, victims, add, mat, extra)
 
-        # resubmitted ids: pruned reverse-map read from the collection's
-        # own meta store (the vecs store's reverse map)
-        mbuckets = sorted(
-            r["m"]
-            for r in b.select(_mbucket_expr(F.col("vec_id")).alias("m"))
-            .distinct()
-            .collect()
+    def _stored_ids(self, cur, info, add, replace, require_present):
+        """The vec_ids of the ``add`` rows that ``cur`` already stores,
+        read from their mbucket partitions: a stored row under another
+        id is a surrogate collision, ``require_present`` rejects an
+        absent id and an insert-only write (not ``replace``) any
+        stored one."""
+        import numpy as np
+
+        sids = add.column("vec_id").to_numpy()
+        old = self._meta_rows(cur, info, {_mbucket_py(int(s)) for s in sids})
+        old = old.filter(pc.is_in(old.column("vec_id"), value_set=pa.array(sids)))
+        stored = dict(
+            zip(old.column("vec_id").to_pylist(), old.column("id").to_pylist())
         )
-        old_meta_aff = self._meta(cur, info).filter(F.col("mbucket").isin(mbuckets))
-        clash = (
-            old_meta_aff.join(batch_ids.withColumnRenamed("id", "new_id"), "vec_id")
-            .select("vec_id", "id", "new_id")
-            .localCheckpoint(eager=True)
-        )
-        coll = clash.filter(F.col("id") != F.col("new_id")).head(1)
-        if coll:
-            r = coll[0]
-            raise SurrogateCollisionError(
-                f"ids {r['id']!r} and {r['new_id']!r} share surrogate "
-                f"{r['vec_id']} — shard into another collection"
-            )
-        resub_ids = clash.select("vec_id").localCheckpoint(eager=True)
-        if require_present:
-            absent = (
-                batch_ids.join(resub_ids, "vec_id", "left_anti").select("id").head(3)
-            )
-            if absent:
-                raise KeyError(
-                    f"update(): ids not present: {[r['id'] for r in absent]} — "
-                    f"use upsert() to insert-or-replace"
+        pairs = list(zip(sids.tolist(), add.column("id").to_pylist()))
+        for s, i in pairs:
+            if stored.get(s, i) != i:
+                raise SurrogateCollisionError(
+                    f"ids {stored[s]!r} and {i!r} share surrogate {s} — "
+                    f"shard into another collection"
                 )
-        if not replace and resub_ids.head(1):
-            some = [r["vec_id"] for r in resub_ids.head(3)]
-            raise DuplicateIDError(
-                f"add(): ids already present (surrogates {some}) — use upsert()"
+        absent = [i for s, i in pairs if s not in stored]
+        if require_present and absent:
+            raise KeyError(
+                f"update(): ids not present: {absent[:3]} — use upsert() to "
+                f"insert-or-replace"
             )
+        if not replace and stored:
+            raise DuplicateIDError(
+                f"add(): ids already present (surrogates {sorted(stored)[:3]}) "
+                f"— use upsert()"
+            )
+        return np.array(sorted(stored), np.int64)
 
-        rw_mb = _mbucket_specs(resub_ids)
-        # victim vectors' stale band/vec partitions, reverse-mapped from
-        # the current vecs store (pruned by the victims' vbuckets)
-        rw_vb, rw_pairs = self._stale_partitions(cur, resub_ids, info["dim"])
-        new = vn.commit_version(
+    def _commit_rows(self, cur, info, victims, add=None, mat=None, extra=None) -> str:
+        """Copy-on-write commit on ``cur`` (None for the initial build):
+        remove the ``victims`` vec_ids and add the ``add`` rows (meta
+        schema) with their ``mat`` embeddings. Every partition that
+        holds a victim or receives a row becomes one new file of its
+        surviving and added rows; a victim's band partitions come from
+        re-banding its STORED vector. The commit CASes on ``cur``."""
+        import numpy as np
+
+        dim = info["dim"]
+        schema = _meta_arrow(info["meta_schema"])[1]
+        if add is None:
+            add, mat = schema.empty_table(), np.empty((0, dim))
+        sids = add.column("vec_id").to_numpy()
+        gone = np.asarray(victims, np.int64)
+
+        def survivors(ids):
+            return ~np.isin(ids, gone)
+
+        old_vb = {vec_bucket_py(int(v)) for v in gone}
+        old_ids, old_mat = self._vec_rows(cur, dim, old_vb)
+        old_nz, old_keys = _band_keys(old_mat[np.isin(old_ids, gone)], dim)
+        add_nz, add_keys = _band_keys(mat, dim)
+        add_vb = np.array([vec_bucket_py(int(s)) for s in sids], np.int64)
+        add_mb = np.array([_mbucket_py(int(s)) for s in sids], np.int64)
+
+        bands = {}
+        for b in range(RP_BANDS):
+            keys = np.union1d(old_keys[old_nz, b], add_keys[add_nz, b])
+            for k in keys.tolist():
+                ids = np.empty(0, np.int64) if cur is None else self._band_part(cur, b, k)[0]
+                bands[f"band={b}/band_key={k}"] = pa.table(
+                    {
+                        "vec_id": np.concatenate(
+                            [ids[survivors(ids)], sids[add_nz & (add_keys[:, b] == k)]]
+                        )
+                    }
+                )
+        vecs = {}
+        for vb in sorted(old_vb | set(add_vb.tolist())):
+            ids, emb = self._vec_rows(cur, dim, [vb] if cur is not None else [])
+            keep, new = survivors(ids), add_vb == vb
+            vecs[f"vbucket={vb}"] = pa.table(
+                {
+                    "vec_id": np.concatenate([ids[keep], sids[new]]),
+                    "emb": _list_array(np.concatenate([emb[keep], mat[new]])),
+                }
+            )
+        meta = {}
+        old_mb = {_mbucket_py(int(v)) for v in gone}
+        for mb in sorted(old_mb | set(add_mb.tolist())):
+            rows = self._meta_rows(cur, info, [mb] if cur is not None else [])
+            keep = survivors(rows.column("vec_id").to_numpy())
+            meta[f"mbucket={mb}"] = pa.concat_tables(
+                [rows.filter(pa.array(keep)), add.filter(pa.array(add_mb == mb))]
+            )
+        return vn.commit_version(
             self.spark,
             self.root,
-            self._plan(b, batch_bands, meta_cols, rw_pairs, rw_vb, rw_mb, (cur, info, resub_ids)),
-            expected=os.path.basename(cur),
-            compact=_COMPONENTS,
+            [
+                vn.Component("bands", ("band", "band_key"), tables=bands),
+                vn.Component("vecs", ("vbucket",), tables=vecs),
+                vn.Component("meta", ("mbucket",), tables=meta),
+            ],
+            expected=None if cur is None else os.path.basename(cur),
             extra_files=extra,
         )
-        return new
-
-    def _stale_partitions(self, cur, victim_ids, dim):
-        vbuckets = sorted(
-            r["b"]
-            for r in victim_ids.select(
-                vec_bucket_expr(F.col("vec_id")).alias("b")
-            )
-            .distinct()
-            .collect()
-        )
-        if not vbuckets:
-            return frozenset(), frozenset()
-        old = (
-            self._vecs(cur)
-            .filter(F.col("vbucket").isin(vbuckets))
-            .join(victim_ids, "vec_id", "leftsemi")
-            .localCheckpoint(eager=True)
-        )
-        rw_vb = frozenset(
-            f"vbucket={r['vbucket']}"
-            for r in old.select("vbucket").distinct().collect()
-        )
-        rw_pairs = frozenset(
-            f"band={r['band']}/band_key={r['band_key']}"
-            for r in self._band_rows_for(
-                old.select("vec_id", "emb").filter(_nonzero_pred()), dim
-            )
-            .select("band", "band_key")
-            .distinct()
-            .collect()
-        )
-        return rw_vb, rw_pairs
-
-    def _plan(self, b, batch_bands, meta_cols, rw_pairs, rw_vb, rw_mb, prev):
-        """Component plans: survivors (anti-joined old rows of rewritten
-        partitions) + batch appends — the shared-kernel discipline."""
-        band_writes, vec_writes, meta_writes = [], [], []
-        if prev is not None:
-            cur, info, resub_ids = prev
-            if rw_pairs:
-                band_writes.append(
-                    _survivors(
-                        self._bands(cur), rw_pairs, resub_ids,
-                        ["band", "band_key", "vec_id"],
-                    )
-                )
-            if rw_vb:
-                vec_writes.append(
-                    _survivors(
-                        self._vecs(cur), rw_vb, resub_ids,
-                        ["vbucket", "vec_id", "emb"],
-                    )
-                )
-            if rw_mb:
-                meta_writes.append(
-                    _survivors(
-                        self._meta(cur, info), rw_mb, resub_ids,
-                        ["mbucket", "vec_id", "id", "document", *meta_cols],
-                    )
-                )
-        band_writes.append(batch_bands.select("band", "band_key", "vec_id"))
-        vec_writes.append(
-            b.select(
-                vec_bucket_expr(F.col("vec_id")).alias("vbucket"),
-                "vec_id",
-                "emb",
-            )
-        )
-        meta_writes.append(
-            b.select(
-                _mbucket_expr(F.col("vec_id")).alias("mbucket"),
-                "vec_id",
-                "id",
-                "document",
-                *meta_cols,
-            )
-        )
-        return [
-            vn.Component("bands", ("band", "band_key"), frozenset(rw_pairs), tuple(band_writes)),
-            vn.Component("vecs", ("vbucket",), frozenset(rw_vb), tuple(vec_writes)),
-            vn.Component("meta", ("mbucket",), frozenset(rw_mb), tuple(meta_writes)),
-        ]
 
     def delete(
         self,
@@ -1524,57 +1477,10 @@ class Collection:
             raise ValueError("delete(): pass ids and/or where/where_document")
         cur, info = self._require()
         meta, keep = self._selected(cur, info, ids, where, where_document)
-        vids = sorted(meta.column("vec_id").to_numpy()[keep].tolist())
-        if not vids:
+        vids = meta.column("vec_id").to_numpy()[keep]
+        if not vids.size:
             return cur
-        # an Arrow table becomes a JVM LocalRelation: the commit's jobs
-        # scan it without starting Python workers
-        victims = self.spark.createDataFrame(
-            pa.table({"vec_id": pa.array(vids, pa.int64())})
-        )
-        rw_mb = frozenset(f"mbucket={_mbucket_py(v)}" for v in vids)
-        rw_vb, rw_pairs = self._stale_partitions(cur, victims, info["dim"])
-        comps = [
-            vn.Component(
-                "bands",
-                ("band", "band_key"),
-                rw_pairs,
-                (_survivors(self._bands(cur), rw_pairs, victims, ["band", "band_key", "vec_id"]),)
-                if rw_pairs
-                else (),
-            ),
-            vn.Component(
-                "vecs",
-                ("vbucket",),
-                rw_vb,
-                (_survivors(self._vecs(cur), rw_vb, victims, ["vbucket", "vec_id", "emb"]),)
-                if rw_vb
-                else (),
-            ),
-            vn.Component(
-                "meta",
-                ("mbucket",),
-                rw_mb,
-                (
-                    _survivors(
-                        self._meta(cur, info),
-                        rw_mb,
-                        victims,
-                        ["mbucket", "vec_id", "id", "document"]
-                        + self._meta_cols(info),
-                    ),
-                )
-                if rw_mb
-                else (),
-            ),
-        ]
-        return vn.commit_version(
-            self.spark,
-            self.root,
-            comps,
-            expected=os.path.basename(cur),
-            compact=_COMPONENTS,
-        )
+        return self._commit_rows(cur, info, vids)
 
     @staticmethod
     def _meta_cols(info: dict) -> list[str]:
@@ -1595,19 +1501,23 @@ class Collection:
         partitions — ZERO re-banding, ZERO re-hashing, zero reads of
         destination data.
 
-        ``on_conflict`` for ids present in both (detected by one
-        thin-projection join — a merge is corpus-scale by nature):
-        'error' (default), 'keep_self' (destination wins; the add
-        analog), 'replace' (source wins; the upsert analog — victim
-        partitions rewrite exactly as in ``upsert``). Cross-collection
-        surrogate collisions (same sid, different id) always raise.
+        ``on_conflict`` for ids present in both: 'error' (default),
+        'keep_self' (destination wins; an upsert of the source's other
+        rows), 'replace' (source wins; an upsert of all its rows).
+        Cross-collection surrogate collisions (same sid, different id)
+        always raise. Overlap is found on the driver from the source's
+        meta rows and the destination's matching mbucket partitions.
 
         DISJOINT merges (and merges into an empty root) take the
         METADATA-ONLY fast path: the source's parquet files HARDLINK
         into the new version's partition dirs (Component.
         merge_from_paths) — O(number of files) directory ops, zero row
-        data read or written; only conflicted merges fall back to
-        rewriting the affected partitions."""
+        data read or written; a conflicted merge reads the source's rows
+        with its driver readers and commits them through the same
+        copy-on-write planner as ``upsert``."""
+        import numpy as np
+        import pandas as pd
+
         self._assert_writable()
         if on_conflict not in ("error", "keep_self", "replace"):
             raise ValueError(f"on_conflict: unknown mode {on_conflict!r}")
@@ -1617,10 +1527,6 @@ class Collection:
                 f"merge_from: source space {oinfo.get('space', 'cosine')!r} "
                 f"!= destination space {self.space!r}"
             )
-        src_meta = other._meta(ocur, oinfo)
-        src_vecs = other._vecs(ocur)
-        src_bands = other._bands(ocur)
-        meta_cols = self._meta_cols(oinfo)
 
         def _link_comps():
             return [
@@ -1652,28 +1558,15 @@ class Collection:
                 f"merge_from: config mismatch {info} != {oinfo} "
                 f"(same dim and metadata schema required)"
             )
-        clash = (
-            src_meta.select("vec_id", F.col("id").alias("src_id"))
-            .join(self._meta(cur, info).select("vec_id", "id"), "vec_id")
-            .localCheckpoint(eager=True)
-        )
-        coll = clash.filter(F.col("id") != F.col("src_id")).head(1)
-        if coll:
-            r = coll[0]
-            raise SurrogateCollisionError(
-                f"ids {r['id']!r} and {r['src_id']!r} share surrogate "
-                f"{r['vec_id']}"
-            )
-        overlap = clash.select("vec_id").localCheckpoint(eager=True)
-        has_overlap = bool(overlap.head(1))
-        if has_overlap and on_conflict == "error":
-            some = [r["vec_id"] for r in overlap.head(3)]
+        src = other._meta_rows(ocur, oinfo, range(N_META_BUCKETS))
+        overlap = self._stored_ids(cur, info, src, replace=True, require_present=False)
+        if overlap.size and on_conflict == "error":
             raise DuplicateIDError(
                 f"merge_from: ids present in both collections "
-                f"(surrogates {some}) — pass on_conflict="
+                f"(surrogates {overlap[:3].tolist()}) — pass on_conflict="
                 f"'keep_self' or 'replace'"
             )
-        if not has_overlap:
+        if not overlap.size:
             # disjoint: the metadata-only fast path (zero row IO)
             return vn.commit_version(
                 self.spark,
@@ -1682,45 +1575,16 @@ class Collection:
                 expected=os.path.basename(cur),
                 compact=_COMPONENTS,
             )
-
-        if has_overlap and on_conflict == "keep_self":
-            src_bands = src_bands.join(overlap, "vec_id", "left_anti")
-            src_vecs = src_vecs.join(overlap, "vec_id", "left_anti")
-            src_meta = src_meta.join(overlap, "vec_id", "left_anti")
-
-        rw_vb, rw_pairs, rw_mb = frozenset(), frozenset(), frozenset()
-        if has_overlap and on_conflict == "replace":
-            rw_mb = _mbucket_specs(overlap)
-            rw_vb, rw_pairs = self._stale_partitions(cur, overlap, info["dim"])
-
-        band_writes = (
-            [_survivors(self._bands(cur), rw_pairs, overlap, ["band", "band_key", "vec_id"])]
-            if rw_pairs
-            else []
-        ) + [src_bands.select("band", "band_key", "vec_id")]
-        vec_writes = (
-            [_survivors(self._vecs(cur), rw_vb, overlap, ["vbucket", "vec_id", "emb"])]
-            if rw_vb
-            else []
-        ) + [src_vecs.select("vbucket", "vec_id", "emb")]
-        meta_keep = ["mbucket", "vec_id", "id", "document", *meta_cols]
-        meta_writes = (
-            [_survivors(self._meta(cur, info), rw_mb, overlap, meta_keep)]
-            if rw_mb
-            else []
-        ) + [src_meta.select(*meta_keep)]
-        comps = [
-            vn.Component("bands", ("band", "band_key"), rw_pairs, tuple(band_writes)),
-            vn.Component("vecs", ("vbucket",), rw_vb, tuple(vec_writes)),
-            vn.Component("meta", ("mbucket",), rw_mb, tuple(meta_writes)),
-        ]
-        return vn.commit_version(
-            self.spark,
-            self.root,
-            comps,
-            expected=os.path.basename(cur),
-            compact=_COMPONENTS,
-        )
+        if on_conflict == "keep_self":
+            src = src.filter(
+                pa.array(~np.isin(src.column("vec_id").to_numpy(), overlap))
+            )
+            overlap = overlap[:0]
+            if not src.num_rows:
+                return cur
+        vids, emb = other._vec_rows(ocur, oinfo["dim"], range(N_VEC_BUCKETS))
+        pos = pd.Index(vids).get_indexer(src.column("vec_id").to_numpy())
+        return self._commit_rows(cur, info, overlap, src, emb[pos])
 
     def fsck(self) -> list:
         """Integrity check: the generic versioned-root invariants

@@ -130,12 +130,20 @@ def version_memo(
     Only pass dirs published by ``versioning.commit_version`` (or a
     content-addressed ``index_root`` scratch) — never a path whose
     contents can be rewritten in place."""
-    key = (
-        _app_id(spark),
-        os.path.abspath(ver_dir),
-        name,
-        *extra,
-    )
+    return _version_lru((_app_id(spark), os.path.abspath(ver_dir), name, *extra), build)
+
+
+def files_memo(
+    spark: SparkSession, name: str, build: Callable[[], Any], *key: Any
+) -> Any:
+    """``version_memo`` for a value that is a pure function of a set of
+    data files whose names never repeat with other content (uuid-named
+    part files, immutable once written): ``key`` names the files, so a
+    hardlink of them into a later version hits the same entry."""
+    return _version_lru((_app_id(spark), name, *key), build)
+
+
+def _version_lru(key: tuple, build: Callable[[], Any]) -> Any:
     hit = _VERSION_MEMO.get(key, _MISS)
     if hit is _MISS:
         hit = build()

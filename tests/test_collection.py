@@ -42,6 +42,26 @@ def _batch(spark, ids, mat, langs=None, stars=None, docs=None):
     )
 
 
+def _local_batch(spark, ids, mat, langs=None, stars=None, docs=None):
+    """``_batch`` built from pandas, as a client sends it: a
+    LocalRelation, which the writer collects without a Spark job."""
+    import pandas as pd
+
+    n = len(ids)
+    pdf = pd.DataFrame(
+        {
+            "id": ids,
+            "embedding": [np.asarray(v, np.float64) for v in mat],
+            "document": docs or [f"text of {i}" for i in ids],
+            "lang": langs or ["en"] * n,
+            "stars": pd.array(stars or list(range(n)), dtype="int32"),
+        }
+    )
+    return spark.createDataFrame(
+        pdf, "id string, embedding array<double>, document string, lang string, stars int"
+    )
+
+
 @pytest.fixture()
 def coll(spark, tmp_path):
     return Collection(spark, str(tmp_path / "coll"))
@@ -438,44 +458,65 @@ def _reads(coll, q):
     )
 
 
+@pytest.mark.parametrize("op", ["upsert", "delete", "compact"])
+@pytest.mark.parametrize(
+    "point",
+    [
+        "_carry_version_files",  # the first step after the tmp component writes
+        "_write_extra_files",
+        "publish_version",
+        "point_current",
+        "gc_versions",
+    ],
+)
 def test_crash_before_current_swing_keeps_serving_last_commit(
-    spark, coll, monkeypatch
+    spark, coll, tmp_path, monkeypatch, point, op
 ):
-    """A writer that dies after staging its version but before the
-    ``_CURRENT`` swing publishes nothing: get, count and query serve the
-    last commit unchanged, fsck is clean, and re-running the upsert
-    lands."""
+    """A writer that dies at any step of a commit — after staging its
+    partitions, writing the version's config files, publishing, swinging
+    ``_CURRENT`` or collecting old versions — leaves a root on which a
+    fresh Collection serves the last completed commit: the old one, or
+    the new one once ``_CURRENT`` swung (a raise in gc). Re-running the
+    op lands, and fsck is clean after it."""
     from adk_noui_vectordb_spark.sources import versioning
 
     mat = _vecs(31, 8)
     coll.add(_batch(spark, [f"c{i}" for i in range(8)], mat))
     q = [float(x) for x in mat[0]]
-    before = _reads(coll, q)
     new = _vecs(32, 2)
     batch = _batch(spark, ["c0", "fresh"], new, docs=["moved", "new row"])
+    run = {
+        "upsert": lambda c: c.upsert(batch),
+        "delete": lambda c: c.delete(ids=["c1", "c2"]),
+        "compact": lambda c: c.compact(threshold=0),
+    }[op]
+    before = _reads(coll, q)
+    twin = coll.fork(str(tmp_path / "twin"))
+    run(twin)
+    after = _reads(twin, q)
 
-    def boom(root, name):
-        raise RuntimeError("injected crash before the _CURRENT swing")
+    def boom(*args, **kwargs):
+        raise RuntimeError(f"injected crash in {point}")
 
-    real = versioning.point_current
-    monkeypatch.setattr(versioning, "point_current", boom)
+    real = getattr(versioning, point)
+    monkeypatch.setattr(versioning, point, boom)
     with pytest.raises(RuntimeError, match="injected crash"):
-        coll.upsert(batch)
-    monkeypatch.setattr(versioning, "point_current", real)
+        run(coll)
+    monkeypatch.setattr(versioning, point, real)
 
-    assert _reads(coll, q) == before
-    assert [c for c, ok, _ in coll.fsck() if not ok] == []
-    coll.upsert(batch)  # recovery is a re-run
-    assert coll.count() == 9
-    assert coll.get(ids=["fresh"]).head()["document"] == "new row"
-    top = coll.query([float(x) for x in new[0]], n_results=1).head()
-    assert top["id"] == "c0" and top["distance"] == 0.0
-    assert [c for c, ok, _ in coll.fsck() if not ok] == []
+    fresh = Collection(spark, coll.root)
+    assert _reads(fresh, q) == (after if point == "gc_versions" else before)
+    if point in ("point_current", "gc_versions"):
+        # the staged dir was already renamed: no orphan for fsck to flag
+        assert [c for c, ok, _ in fresh.fsck() if not ok] == []
+    run(fresh)  # recovery is a re-run
+    assert _reads(fresh, q) == after
+    assert [c for c, ok, _ in fresh.fsck() if not ok] == []
 
 
-def test_compact_preserves_reads(spark, coll):
-    """Compaction is a content-preserving commit: after several small
-    upserts left partitions holding more than one file,
+def test_compact_preserves_reads(spark, coll, tmp_path):
+    """Compaction is a content-preserving commit: after several disjoint
+    merges left partitions holding more than one file,
     ``compact(threshold=0)`` folds each partition dir to at most one
     file and every read returns what it returned before."""
     import os
@@ -484,7 +525,9 @@ def test_compact_preserves_reads(spark, coll):
     ids = [f"k{i:02d}" for i in range(16)]
     coll.add(_batch(spark, ids[:4], mat[:4]))
     for s in range(4, 16, 4):
-        coll.upsert(_batch(spark, ids[s : s + 4], mat[s : s + 4]))
+        shard = Collection(spark, str(tmp_path / f"shard{s}"))
+        shard.add(_batch(spark, ids[s : s + 4], mat[s : s + 4]))
+        coll.merge_from(shard)
     q = [float(x) for x in mat[5]]
     before = _reads(coll, q)
 
@@ -500,6 +543,205 @@ def test_compact_preserves_reads(spark, coll):
     assert max(files_per_partition(coll._cur())) == 1
     assert _reads(coll, q) == before
     assert [c for c, ok, _ in coll.fsck() if not ok] == []
+
+
+def test_driver_writes_run_no_spark_job(spark, coll):
+    """add, upsert with replacements, full-schema update and delete by
+    ids and by where, each of a local 20-row batch into an existing
+    collection, run no Spark job; afterwards every read matches a numpy
+    model of the ledger and fsck is clean."""
+    sc = spark.sparkContext
+    model = {}
+
+    def apply(ids, mat, langs, stars, docs=None):
+        docs = docs or [f"text of {i}" for i in ids]
+        for j, i in enumerate(ids):
+            model[i] = (list(mat[j]), docs[j], langs[j], stars[j])
+
+    base = [f"m{i:02d}" for i in range(40)]
+    m0, langs0 = _vecs(41, 40), ["en", "de"] * 20
+    coll.add(_batch(spark, base, m0, langs=langs0))
+    apply(base, m0, langs0, list(range(40)))
+
+    def jobs(name, call):
+        group = f"driver-write-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            call()
+        finally:
+            sc.setJobGroup(None, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    new_ids = [f"n{i:02d}" for i in range(20)]
+    m1, l1, s1 = _vecs(42, 20), ["fr"] * 20, list(range(100, 120))
+    assert jobs("add", lambda: coll.add(_local_batch(spark, new_ids, m1, l1, s1))) == 0
+    apply(new_ids, m1, l1, s1)
+
+    up_ids = base[:10] + [f"u{i:02d}" for i in range(10)]
+    m2, l2, s2 = _vecs(43, 20), ["de", "es"] * 10, list(range(200, 220))
+    assert jobs("upsert", lambda: coll.upsert(_local_batch(spark, up_ids, m2, l2, s2))) == 0
+    apply(up_ids, m2, l2, s2)
+
+    m3, l3, s3 = _vecs(44, 20), ["en"] * 20, list(range(300, 320))
+    d3 = [f"updated {i}" for i in new_ids]
+    assert jobs(
+        "update", lambda: coll.update(_local_batch(spark, new_ids, m3, l3, s3, d3))
+    ) == 0
+    apply(new_ids, m3, l3, s3, d3)
+
+    victims = base[10:20]
+    assert jobs("delete_ids", lambda: coll.delete(ids=victims)) == 0
+    for i in victims:
+        del model[i]
+    assert jobs("delete_where", lambda: coll.delete(where={"lang": "de"})) == 0
+    for i in [i for i, r in model.items() if r[2] == "de"]:
+        del model[i]
+
+    got = {
+        r["id"]: (list(r["embedding"]), r["document"], r["lang"], r["stars"])
+        for r in coll.get(include_embeddings=True).collect()
+    }
+    assert got == model
+    assert coll.count() == len(model)
+    rows = [(i, np.array(r[0]), r[2]) for i, r in sorted(model.items())]
+    for q in (m2[0], m3[5], _vecs(45, 1)[0]):
+        top = coll.query([float(x) for x in q], n_results=5).collect()
+        assert [(r["distance"], r["id"]) for r in top] == [
+            (pytest.approx(d), i) for d, i in _model_query(rows, q, k=5)
+        ]
+    assert [c for c, ok, _ in coll.fsck() if not ok] == []
+
+
+def test_repeat_query_rereads_only_rewritten_partitions(
+    spark, coll, opened_dirs, monkeypatch
+):
+    """Partition reads are memoized on their data files' names, which a
+    commit's hardlinks keep: after a 1-row upsert, a repeated query opens
+    parquet files only in the partitions the upsert rewrote."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    mat = _vecs(34, 12)
+    coll.add(_batch(spark, [f"w{i}" for i in range(12)], mat))
+    q = [float(x) for x in mat[0]]
+    coll.query(q, n_results=3).collect()
+    old = coll._cur()
+    coll.upsert(_batch(spark, ["w00"], _vecs(35, 1)))
+    cur = coll._cur()
+
+    opened = []
+
+    class CountingParquetFile(pq.ParquetFile):
+        def __init__(self, source, *args, **kwargs):
+            opened.append(source)
+            super().__init__(source, *args, **kwargs)
+
+    opened_dirs.clear()
+    monkeypatch.setattr(pq, "ParquetFile", CountingParquetFile)
+    coll.query(q, n_results=3).collect()
+    monkeypatch.undo()
+
+    def files(ver, rel):
+        d = os.path.join(ver, rel)
+        return sorted(os.listdir(d)) if os.path.isdir(d) else []
+
+    read = {os.path.relpath(p, cur) for p in opened_dirs if files(cur, os.path.relpath(p, cur))}
+    rewritten = {r for r in read if files(cur, r) != files(old, r)}
+    assert rewritten and read - rewritten
+    assert sorted(os.path.relpath(os.path.dirname(f), cur) for f in opened) == sorted(
+        rewritten
+    )
+
+
+def test_driver_writer_matches_spark_hash_twins(spark, tmp_path):
+    """One batch through the driver writer — non-ASCII ids, a zero
+    vector, a NULL document and every metadata type ``_normalize``
+    accepts — reads back through Spark as the Spark kernels would have
+    placed it: ``vec_id`` is ``_sid_expr(id)``, every row sits in the
+    vbucket/mbucket dir the Spark expressions assign, the band rows
+    equal ``rp_band_rows_for``'s, and values and types round-trip (with
+    the read schema and with the one Spark infers from the files)."""
+    import datetime
+    import decimal
+    import os
+
+    from adk_noui_vectordb_spark.api.collection import (
+        BANDS_SCHEMA,
+        VECS_SCHEMA,
+        _mbucket_expr,
+        _sid_expr,
+    )
+    from adk_noui_vectordb_spark.operators.ann import (
+        RP_DIM,
+        _nonzero_pred,
+        rp_band_rows_for,
+        vec_bucket_expr,
+    )
+
+    ddl = (
+        "id string, embedding array<double>, document string, s string, "
+        "b bigint, i int, sm smallint, t tinyint, d double, f float, "
+        "ok boolean, day date, ts timestamp, amt decimal(10,2)"
+    )
+    ids = ["naïve", "日本語", "emoji 🚀", "plain", "Ωmega", "zero"]
+    mat = np.random.default_rng(46).normal(size=(len(ids), RP_DIM)).round(4)
+    mat[-1] = 0.0
+    rows = [
+        (
+            i,
+            [float(x) for x in mat[j]],
+            None if j == 2 else f"doc {i}",
+            f"s{j}",
+            2**40 + j,
+            -j,
+            j * 100,
+            j - 3,
+            j / 3,
+            j * 0.5,
+            j % 2 == 0,
+            datetime.date(2020, 1, 1 + j),
+            datetime.datetime(2021, 6, 1, 12, j, 30, 250000),
+            decimal.Decimal(f"{j}.{j}5"),
+        )
+        for j, i in enumerate(ids)
+    ]
+    batch = spark.createDataFrame(rows, ddl)
+    coll = Collection(spark, str(tmp_path / "twins"))
+    coll.add(batch)
+    cur, info = coll._require()
+
+    meta = spark.read.schema(info["meta_schema"]).parquet(os.path.join(cur, "meta"))
+    vecs = spark.read.schema(VECS_SCHEMA).parquet(os.path.join(cur, "vecs"))
+    bands = spark.read.schema(BANDS_SCHEMA).parquet(os.path.join(cur, "bands"))
+    assert meta.filter(
+        (F.col("vec_id") != _sid_expr(F.col("id")))
+        | (F.col("mbucket") != _mbucket_expr(F.col("vec_id")))
+    ).count() == 0
+    assert vecs.filter(F.col("vbucket") != vec_bucket_expr(F.col("vec_id"))).count() == 0
+    assert sorted(map(tuple, bands.select("vec_id", "band", "band_key").collect())) == sorted(
+        map(
+            tuple,
+            rp_band_rows_for(vecs.select("vec_id", "emb").filter(_nonzero_pred())).collect(),
+        )
+    )
+    assert bands.select("vec_id").distinct().count() == len(ids) - 1  # not the zero vector
+
+    want = {r[0]: tuple(r) for r in batch.collect()}
+    sid_to_id = {r["vec_id"]: r["id"] for r in meta.collect()}
+    assert {sid_to_id[r["vec_id"]]: list(r["emb"]) for r in vecs.collect()} == {
+        i: list(w[1]) for i, w in want.items()
+    }
+    cols = [c for c in batch.columns if c != "embedding"]
+    inferred = spark.read.parquet(os.path.join(cur, "meta"))
+    for read in (meta, inferred):
+        assert {r["id"]: tuple(r[c] for c in cols) for r in read.collect()} == {
+            i: tuple(w[j] for j, c in enumerate(batch.columns) if c != "embedding")
+            for i, w in want.items()
+        }
+        assert [(c, t) for c, t in read.dtypes if c in cols] == [
+            (c, t) for c, t in batch.dtypes if c in cols
+        ]
 
 
 def test_numpy_scorer_is_bit_exact_against_catalyst(spark, sf_dir):
@@ -903,9 +1145,7 @@ def test_intra_batch_surrogate_collision_rejected(spark, tmp_path, monkeypatch):
     the surrogate to make a collision constructible."""
     from adk_noui_vectordb_spark.api import collection as cmod
 
-    monkeypatch.setattr(
-        cmod, "_sid_expr", lambda c: F.length(c).cast("bigint")
-    )
+    monkeypatch.setattr(cmod, "_sid_py", len)
     coll = Collection(spark, str(tmp_path / "collide"))
     with pytest.raises(cmod.SurrogateCollisionError, match="in one batch"):
         coll.add(_batch(spark, ["aa", "bb"], _vecs(96, 2)))
