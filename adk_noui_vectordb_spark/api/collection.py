@@ -45,17 +45,21 @@ planned on the driver too:
   ``compact`` folds those). Only a partial ``update``'s
   old-value assembly and ``add_metadata_column`` still run Spark.
 - Reads (``query``, ``get``, ``count``, ``peek``) serve the resolved
-  version on the DRIVER with zero Spark jobs: each partition is read
-  once per session with pyarrow (``_read_partition``, memoized on its
-  data files' unique names, so a partition a commit hardlinked
-  unchanged is not read again) and filtered and scored in numpy; the
-  answer is a local DataFrame, valid after its version is garbage
-  collected. ``query`` computes band keys client-side (24 integer
-  dots) and opens only the probed band dirs and the vbucket/mbucket
-  dirs of their candidates; ``count`` sums the meta footers' row
-  counts. Online top-k over one small snapshot does not fit a job
-  scheduler — each Spark job costs more than the whole driver-side
-  read.
+  version on the DRIVER with zero Spark jobs and, warm, zero py4j
+  calls: each version dir is listed once per session
+  (``_version_parts``) and each partition read once with pyarrow
+  (``_read_partition``, memoized on its data files' unique names, so a
+  partition a commit hardlinked unchanged is not read again), then
+  filtered and scored in numpy. The answer is a ``LocalResult``, valid
+  after its version is garbage collected: ``collect``, ``count``,
+  ``columns``, ``schema``, ``head``, ``first`` and ``take`` answer from
+  its Arrow table on the driver, and any other DataFrame method
+  builds the Spark DataFrame once. ``query`` computes band keys
+  client-side (24 integer dots) and opens only the probed band dirs
+  and the vbucket/mbucket dirs of their candidates; ``count`` sums the
+  meta footers' row counts. Online top-k over one small snapshot does
+  not fit a job scheduler — each Spark job costs more than the whole
+  driver-side read.
 - Readers never see a partial write: every mutation is one ``_CURRENT``
   swing; concurrent writers serialize on the root's writer lock and a
   stale plan raises ``ConcurrentWriterError`` instead of clobbering.
@@ -80,7 +84,6 @@ from ..operators.ann import (
     RP_BAND_BITS,
     RP_BANDS,
     RP_PLANES,
-    _nonzero_pred,
     _rp_band_keys,
     _rp_plane_signs,
     vec_bucket_expr,
@@ -189,22 +192,87 @@ def _require_int(name: str, val, lo: int, hi: "int | None" = None) -> None:
 
 
 # ------------------------------------------------------- driver reads
-# Serving reads a committed version on the driver: each partition dir is
-# read once per session with pyarrow (a published version never
-# changes), filtered and scored in numpy, and the answer handed back as
-# a local DataFrame — no Spark job per read.
+# Serving reads a committed version on the driver: each version dir is
+# listed and each partition dir read once per session with pyarrow (a
+# published version never changes), filtered and scored in numpy, and
+# the answer handed back as a ``LocalResult`` — no Spark job and no
+# py4j call per read.
 
 
-def _part_files(part: str) -> list:
-    """The data files of one partition dir, sorted; none when the dir
-    is absent (a partition no row hashed to is never written)."""
-    if not os.path.isdir(part):
-        return []
-    return [
-        os.path.join(part, f)
-        for f in sorted(os.listdir(part))
-        if not f.startswith(("_", "."))  # _SUCCESS markers, .crc files
-    ]
+class LocalResult:
+    """The answer of a read, held on the driver: its pyarrow ``table``
+    and Spark ``schema``. ``collect``, ``count``, ``columns``,
+    ``schema``, ``head``, ``first`` and ``take`` answer locally, with no
+    py4j call, and return the Rows Spark's ``collect`` would. Any other
+    attribute builds ``spark.createDataFrame(table, schema)`` once and
+    delegates to it."""
+
+    def __init__(self, spark: SparkSession, table: pa.Table, schema):
+        self._spark, self._table, self.schema = spark, table, schema
+
+    @functools.cached_property
+    def _df(self) -> DataFrame:
+        return self._spark.createDataFrame(self._table, self.schema)
+
+    def __getattr__(self, name: str):
+        return getattr(self._df, name)
+
+    @property
+    def columns(self) -> list:
+        return self.schema.fieldNames()
+
+    def collect(self) -> list:
+        # classic collect's own path: the JVM pickles each row's internal
+        # values (timestamps as epoch micros, dates as epoch days) and
+        # StructType.fromInternal builds the Row. (Spark Connect's Arrow
+        # converter drops the fold of an ambiguous local time, so a
+        # fall-back hour's timestamp would not round-trip.)
+        def internal(col):
+            if pa.types.is_timestamp(col.type):
+                return col.cast(pa.int64())
+            return col.cast(pa.int32()) if pa.types.is_date32(col.type) else col
+
+        cols = [internal(c).to_pylist() for c in self._table.columns]
+        return [self.schema.fromInternal(v) for v in zip(*cols)]
+
+    def count(self) -> int:
+        return self._table.num_rows
+
+    def take(self, num: int) -> list:
+        return LocalResult(self._spark, self._table.slice(0, num), self.schema).collect()
+
+    def head(self, n: "int | None" = None):
+        if n is not None:
+            return self.take(n)
+        rows = self.take(1)
+        return rows[0] if rows else None
+
+    def first(self):
+        return self.head()
+
+
+def _list_parts(ver: str) -> dict:
+    """{partition dir relative to ``ver``: its data file names, sorted}
+    for every dir below the version dir that holds a data file (a
+    partition no row hashed to is never written)."""
+    out = {}
+    for d, _, files in os.walk(ver):
+        # _SUCCESS markers, .crc files
+        names = tuple(sorted(f for f in files if not f.startswith(("_", "."))))
+        if names and d != ver:
+            out[os.path.relpath(d, ver)] = names
+    return out
+
+
+def _version_parts(spark: SparkSession, ver: str) -> dict:
+    """``_list_parts`` of a published version dir, listed once per
+    session: memoized on its path and identity, so a warm read costs one
+    ``stat`` of the version dir."""
+    from ..memo import version_memo
+
+    return version_memo(
+        spark, ver, "coll_parts", lambda: _list_parts(ver), _dir_id(ver)
+    )
 
 
 def _dir_id(path: str) -> "tuple | None":
@@ -219,38 +287,104 @@ def _dir_id(path: str) -> "tuple | None":
     return st.st_ino, st.st_mtime_ns
 
 
-def _read_partition(spark: SparkSession, part: str, columns: list, convert):
-    """``convert`` of the pyarrow table of one partition dir of a
-    published version (None when the dir holds no file). Every
-    collection read goes through here. Memoized on the partition's
-    path below its version dir plus the names of its data files:
-    those names are unique and a hardlink keeps them, so a partition a
-    commit carried over unchanged is not read again."""
+def _read_files(part: str, names, columns: list) -> pa.Table:
+    """The ``columns`` of the data files ``names`` of one partition dir,
+    concatenated."""
     import pyarrow.parquet as pq
-
-    from ..memo import files_memo
-
-    files = _part_files(part)
-    if not files:
-        return convert(None)
 
     def read(f):
         # ParquetFile.read skips the dataset layer read_table goes
         # through: ~8x less CPU on these few-KB files
-        with pq.ParquetFile(f) as pf:
+        with pq.ParquetFile(os.path.join(part, f)) as pf:
             return pf.read(columns=columns, use_threads=False)
 
-    head, rel = part, []
-    while not rel or "=" in rel[-1]:  # up to the component dir
-        head, name = os.path.split(head)
-        rel.append(name)
+    return pa.concat_tables([read(f) for f in names])
+
+
+def _read_partition(
+    spark: SparkSession, ver: str, rel: str, names: tuple, columns: list, convert
+):
+    """``convert`` of the pyarrow table of the partition dir ``rel`` of
+    the published version dir ``ver``, whose data files are ``names``
+    (from ``_version_parts``; ``convert(None)`` when there are none).
+    Every collection read goes through here. Memoized on ``rel`` plus
+    ``names``: those names are unique and a hardlink keeps them, so a
+    partition a commit carried over unchanged is not read again."""
+    from ..memo import files_memo
+
+    if not names:
+        return convert(None)
     return files_memo(
         spark,
         "coll_partition",
-        lambda: convert(pa.concat_tables([read(f) for f in files])),
-        "/".join(reversed(rel)),
-        tuple(os.path.basename(f) for f in files),
+        lambda: convert(_read_files(os.path.join(ver, rel), names, columns)),
+        rel,
+        names,
         tuple(columns),
+    )
+
+
+def _reader(spark: SparkSession, ver: "str | None"):
+    """``read(rel, columns, convert)``: ``_read_partition`` over the
+    version dir ``ver``, with the file names of its one listing."""
+    if ver is None:  # nothing committed yet: every partition is empty
+        return lambda rel, columns, convert: convert(None)
+    parts = _version_parts(spark, ver)
+
+    def read(rel: str, columns: list, convert):
+        return _read_partition(spark, ver, rel, parts.get(rel, ()), columns, convert)
+
+    return read
+
+
+def _band_rows(read, pairs) -> list:
+    """(vec_id, vbucket, mbucket) arrays of each (band, band_key)
+    partition of ``pairs``."""
+    import numpy as np
+
+    def convert(t):
+        ids = [] if t is None else t.column("vec_id").to_pylist()
+        return (
+            np.array(ids, np.int64),
+            np.array([vec_bucket_py(i) for i in ids], np.int64),
+            np.array([_mbucket_py(i) for i in ids], np.int64),
+        )
+
+    return [read(f"bands/band={b}/band_key={k}", ["vec_id"], convert) for b, k in pairs]
+
+
+def _vec_rows(read, dim: int, vbuckets) -> tuple:
+    """(vec_id, n x dim embeddings) of the ``vbuckets`` partitions."""
+    import numpy as np
+
+    def convert(t):
+        if t is None:
+            return np.empty(0, np.int64), np.empty((0, dim))
+        emb = t.column("emb").combine_chunks().flatten().to_numpy()
+        return t.column("vec_id").to_numpy(), emb.reshape(t.num_rows, dim)
+
+    parts = [(np.empty(0, np.int64), np.empty((0, dim)))] + [
+        read(f"vecs/vbucket={vb}", ["vec_id", "emb"], convert)
+        for vb in sorted(vbuckets)
+    ]
+    return np.concatenate([p[0] for p in parts]), np.concatenate(
+        [p[1] for p in parts]
+    )
+
+
+def _meta_rows(read, info: dict, mbuckets):
+    """pyarrow table of the meta rows of the ``mbuckets`` partitions."""
+    schema = _meta_arrow(info["meta_schema"])[1]
+    return pa.concat_tables(
+        [schema.empty_table()]
+        + [
+            read(
+                f"meta/mbucket={mb}",
+                schema.names,
+                lambda t: schema.empty_table() if t is None else t.cast(schema),
+            )
+            for mb in sorted(mbuckets)
+        ]
     )
 
 
@@ -508,59 +642,8 @@ class Collection:
             os.path.join(cur, "bands")
         )
 
-    def _band_part(self, cur: str, band: int, key: int) -> tuple:
-        """(vec_id, vbucket, mbucket) arrays of one band partition."""
-        import numpy as np
-
-        def convert(t):
-            ids = [] if t is None else t.column("vec_id").to_pylist()
-            return (
-                np.array(ids, np.int64),
-                np.array([vec_bucket_py(i) for i in ids], np.int64),
-                np.array([_mbucket_py(i) for i in ids], np.int64),
-            )
-
-        part = os.path.join(cur, "bands", f"band={band}", f"band_key={key}")
-        return _read_partition(self.spark, part, ["vec_id"], convert)
-
-    def _vec_rows(self, cur: str, dim: int, vbuckets) -> tuple:
-        """(vec_id, n x dim embeddings) of the ``vbuckets`` partitions."""
-        import numpy as np
-
-        def convert(t):
-            if t is None:
-                return np.empty(0, np.int64), np.empty((0, dim))
-            emb = t.column("emb").combine_chunks().flatten().to_numpy()
-            return t.column("vec_id").to_numpy(), emb.reshape(t.num_rows, dim)
-
-        parts = [(np.empty(0, np.int64), np.empty((0, dim)))] + [
-            _read_partition(
-                self.spark, os.path.join(cur, "vecs", f"vbucket={vb}"),
-                ["vec_id", "emb"], convert,
-            )
-            for vb in sorted(vbuckets)
-        ]
-        return np.concatenate([p[0] for p in parts]), np.concatenate(
-            [p[1] for p in parts]
-        )
-
-    def _meta_rows(self, cur: str, info: dict, mbuckets):
-        """pyarrow table of the meta rows of the ``mbuckets`` partitions."""
-        schema = _meta_arrow(info["meta_schema"])[1]
-        return pa.concat_tables(
-            [schema.empty_table()]
-            + [
-                _read_partition(
-                    self.spark, os.path.join(cur, "meta", f"mbucket={mb}"),
-                    schema.names,
-                    lambda t: schema.empty_table() if t is None else t.cast(schema),
-                )
-                for mb in sorted(mbuckets)
-            ]
-        )
-
-    def _frame(self, cur, info, inc, page, lead=(), embeddings=None) -> DataFrame:
-        """The local DataFrame a read returns: the ``lead`` (field,
+    def _frame(self, info, inc, page, lead=(), embeddings=None) -> LocalResult:
+        """The ``LocalResult`` a read returns: the ``lead`` (field,
         array) columns, then ``id`` and the ``inc`` projection of the
         meta rows ``page``, then ``embeddings`` when asked for."""
         from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
@@ -573,7 +656,8 @@ class Collection:
         if "embeddings" in inc:
             struct.append(StructField("embedding", ArrayType(DoubleType())))
             arrays.append(pa.array(embeddings, pa.list_(pa.float64())))
-        return self.spark.createDataFrame(
+        return LocalResult(
+            self.spark,
             pa.Table.from_arrays(arrays, names=[f.name for f in struct]),
             StructType(struct),
         )
@@ -824,10 +908,12 @@ class Collection:
             return {}
         return {int(g): int(s) for s, g in alias.items()}
 
-    def _graph_edges(self, gver: str, sbucket: int) -> tuple:
+    @staticmethod
+    def _graph_edges(read, sbucket: int) -> tuple:
         """({src: [nbr, ...]}, {nbr: embedding row}) of one edges
-        partition of a graph version; a null payload (an edge whose
-        neighbor has no vector) keeps its adjacency but no embedding."""
+        partition of a graph version (``read``); a null payload (an edge
+        whose neighbor has no vector) keeps its adjacency but no
+        embedding."""
         import numpy as np
 
         def convert(t):
@@ -848,14 +934,12 @@ class Collection:
                     pay[n] = next(rows)
             return adj, pay
 
-        part = os.path.join(gver, "edges", f"sbucket={sbucket}")
-        return _read_partition(
-            self.spark, part, ["src", "nbr", "nemb"], convert
-        )
+        return read(f"edges/sbucket={sbucket}", ["src", "nbr", "nemb"], convert)
 
-    def _graph_coarse(self, gver: str) -> tuple:
+    @staticmethod
+    def _graph_coarse(read) -> tuple:
         """(entry hub, centroid rows sorted by cluster, {cluster: hub})
-        of a graph version — the beam's seed doors."""
+        of a graph version (``read``) — the beam's seed doors."""
 
         def entry(t):
             return t.sort_by("rk").column("vec_id")[0].as_py()
@@ -874,11 +958,6 @@ class Collection:
         def hubs(t):
             return dict(
                 zip(t.column("cluster").to_pylist(), t.column("hub").to_pylist())
-            )
-
-        def read(comp, cols, convert):
-            return _read_partition(
-                self.spark, os.path.join(gver, comp), cols, convert
             )
 
         return (
@@ -900,14 +979,15 @@ class Collection:
 
         from ..operators.graph_ann import _seed_hubs
 
-        entry, cent_rows, hub_of = self._graph_coarse(gver)
+        read = _reader(self.spark, gver)
+        entry, cent_rows, hub_of = self._graph_coarse(read)
         seeds_per_q = [
             {int(entry)} | {int(h) for h in _seed_hubs(cent_rows, hub_of, q)}
             for q in qvecs
         ]
         seeds = set().union(*seeds_per_q)
-        vids, vmat = self._vec_rows(
-            gver, len(qvecs[0]), {vec_bucket_py(s) for s in seeds}
+        vids, vmat = _vec_rows(
+            read, len(qvecs[0]), {vec_bucket_py(s) for s in seeds}
         )
         hit = np.isin(vids, list(seeds))
         first = {int(v): row for v, row in zip(vids[hit], vmat[hit])}
@@ -930,7 +1010,7 @@ class Collection:
             for s in srcs:
                 by_bucket.setdefault(vec_bucket_py(s), []).append(s)
             for sb, ss in by_bucket.items():
-                padj, ppay = self._graph_edges(gver, sb)
+                padj, ppay = self._graph_edges(read, sb)
                 for s in ss:
                     nbrs = padj.get(s, ())
                     if nbrs:
@@ -1369,7 +1449,9 @@ class Collection:
         import numpy as np
 
         sids = add.column("vec_id").to_numpy()
-        old = self._meta_rows(cur, info, {_mbucket_py(int(s)) for s in sids})
+        old = _meta_rows(
+            _reader(self.spark, cur), info, {_mbucket_py(int(s)) for s in sids}
+        )
         old = old.filter(pc.is_in(old.column("vec_id"), value_set=pa.array(sids)))
         stored = dict(
             zip(old.column("vec_id").to_pylist(), old.column("id").to_pylist())
@@ -1413,8 +1495,9 @@ class Collection:
         def survivors(ids):
             return ~np.isin(ids, gone)
 
+        read = _reader(self.spark, cur)
         old_vb = {vec_bucket_py(int(v)) for v in gone}
-        old_ids, old_mat = self._vec_rows(cur, dim, old_vb)
+        old_ids, old_mat = _vec_rows(read, dim, old_vb)
         old_nz, old_keys = _band_keys(old_mat[np.isin(old_ids, gone)], dim)
         add_nz, add_keys = _band_keys(mat, dim)
         add_vb = np.array([vec_bucket_py(int(s)) for s in sids], np.int64)
@@ -1424,7 +1507,7 @@ class Collection:
         for b in range(RP_BANDS):
             keys = np.union1d(old_keys[old_nz, b], add_keys[add_nz, b])
             for k in keys.tolist():
-                ids = np.empty(0, np.int64) if cur is None else self._band_part(cur, b, k)[0]
+                ids = _band_rows(read, [(b, k)])[0][0]
                 bands[f"band={b}/band_key={k}"] = pa.table(
                     {
                         "vec_id": np.concatenate(
@@ -1434,7 +1517,7 @@ class Collection:
                 )
         vecs = {}
         for vb in sorted(old_vb | set(add_vb.tolist())):
-            ids, emb = self._vec_rows(cur, dim, [vb] if cur is not None else [])
+            ids, emb = _vec_rows(read, dim, [vb])
             keep, new = survivors(ids), add_vb == vb
             vecs[f"vbucket={vb}"] = pa.table(
                 {
@@ -1445,7 +1528,7 @@ class Collection:
         meta = {}
         old_mb = {_mbucket_py(int(v)) for v in gone}
         for mb in sorted(old_mb | set(add_mb.tolist())):
-            rows = self._meta_rows(cur, info, [mb] if cur is not None else [])
+            rows = _meta_rows(read, info, [mb])
             keep = survivors(rows.column("vec_id").to_numpy())
             meta[f"mbucket={mb}"] = pa.concat_tables(
                 [rows.filter(pa.array(keep)), add.filter(pa.array(add_mb == mb))]
@@ -1476,7 +1559,9 @@ class Collection:
         if ids is None and where is None and where_document is None:
             raise ValueError("delete(): pass ids and/or where/where_document")
         cur, info = self._require()
-        meta, keep = self._selected(cur, info, ids, where, where_document)
+        meta, keep = self._selected(
+            _reader(self.spark, cur), info, ids, where, where_document
+        )
         vids = meta.column("vec_id").to_numpy()[keep]
         if not vids.size:
             return cur
@@ -1484,10 +1569,9 @@ class Collection:
 
     @staticmethod
     def _meta_cols(info: dict) -> list[str]:
-        names = [p.strip().split()[0] for p in info["meta_schema"].split(",")]
-        return [
-            n for n in names if n not in ("vec_id", "id", "document", "mbucket")
-        ]
+        # parsed, not split on commas: a decimal(p,s) type holds one
+        names = _meta_arrow(info["meta_schema"])[0]
+        return [n for n in names if n not in ("vec_id", "id", "document")]
 
     def merge_from(self, other: "Collection", on_conflict: str = "error") -> str:
         """Merge another collection's contents into this one — the
@@ -1558,7 +1642,8 @@ class Collection:
                 f"merge_from: config mismatch {info} != {oinfo} "
                 f"(same dim and metadata schema required)"
             )
-        src = other._meta_rows(ocur, oinfo, range(N_META_BUCKETS))
+        oread = _reader(self.spark, ocur)
+        src = _meta_rows(oread, oinfo, range(N_META_BUCKETS))
         overlap = self._stored_ids(cur, info, src, replace=True, require_present=False)
         if overlap.size and on_conflict == "error":
             raise DuplicateIDError(
@@ -1582,7 +1667,7 @@ class Collection:
             overlap = overlap[:0]
             if not src.num_rows:
                 return cur
-        vids, emb = other._vec_rows(ocur, oinfo["dim"], range(N_VEC_BUCKETS))
+        vids, emb = _vec_rows(oread, oinfo["dim"], range(N_VEC_BUCKETS))
         pos = pd.Index(vids).get_indexer(src.column("vec_id").to_numpy())
         return self._commit_rows(cur, info, overlap, src, emb[pos])
 
@@ -1592,7 +1677,11 @@ class Collection:
         versioning.fsck_index) plus the facade's semantic invariants:
         vecs↔meta surrogate sets agree, every band row's vector exists,
         nonzero vectors band exactly RP_BANDS times, no surrogate maps
-        to two ids. Returns (check, ok, detail) tuples, never raises."""
+        to two ids — checked on the driver, in numpy over pyarrow reads
+        of the version's files. Returns (check, ok, detail) tuples,
+        never raises."""
+        import numpy as np
+
         cur = self._cur()
         info = self._info(cur)
         comps = [
@@ -1602,18 +1691,34 @@ class Collection:
         out = vn.fsck_index(self.spark, self.root, comps)
         if cur is None or info is None:
             return out
-        meta = self._meta(cur, info)
-        vecs = self._vecs(cur)
-        bands = self._bands(cur)
-        a = vecs.join(meta, "vec_id", "left_anti").count()
-        b = meta.join(vecs, "vec_id", "left_anti").count()
+        # the read path's readers over fresh pyarrow reads, past the
+        # memos: a file damaged in place keeps its name
+        parts = _list_parts(cur)
+
+        def fresh(rel, columns, convert):
+            if rel not in parts:
+                return convert(None)
+            return convert(_read_files(os.path.join(cur, rel), parts[rel], columns))
+
+        try:
+            meta = _meta_rows(fresh, info, range(N_META_BUCKETS))
+            v_ids, mat = _vec_rows(fresh, info["dim"], range(N_VEC_BUCKETS))
+            keys = range(1 << RP_BAND_BITS)
+            bands = _band_rows(fresh, [(b, k) for b in range(RP_BANDS) for k in keys])
+        except (OSError, TypeError, ValueError, pa.ArrowException) as ex:
+            out.append(("semantic_reads", False, f"{type(ex).__name__}: {ex}"))
+            return out
+        m_ids = meta.column("vec_id").to_numpy()
+        b_ids = np.concatenate([ids for ids, _, _ in bands])
+        a = int((~np.isin(v_ids, m_ids)).sum())
+        b = int((~np.isin(m_ids, v_ids)).sum())
         out.append(
             ("vecs_meta_same_ids", a == 0 and b == 0, f"vecs_only={a} meta_only={b}")
         )
-        c = bands.join(vecs, "vec_id", "left_anti").count()
+        c = int((~np.isin(b_ids, v_ids)).sum())
         out.append(("bands_subset_of_vecs", c == 0, f"dangling={c}"))
-        nz = vecs.filter(_nonzero_pred()).count()
-        nb = bands.count()
+        nz = int(mat.any(axis=1).sum())
+        nb = b_ids.size
         out.append(
             (
                 "nonzero_band_fanout",
@@ -1621,12 +1726,8 @@ class Collection:
                 f"bands={nb} expect={nz}*{RP_BANDS}",
             )
         )
-        dup = (
-            meta.groupBy("vec_id")
-            .agg(F.countDistinct("id").alias("n"))
-            .filter(F.col("n") > 1)
-            .count()
-        )
+        ids_per_sid = meta.group_by("vec_id").aggregate([("id", "count_distinct")])
+        dup = int((ids_per_sid.column("id_count_distinct").to_numpy() > 1).sum())
         out.append(("surrogates_unique", dup == 0, f"collisions={dup}"))
         return out
 
@@ -1797,33 +1898,36 @@ class Collection:
         files' parquet footers (no data page is read)."""
         import pyarrow.parquet as pq
 
-        from ..memo import version_memo
+        from ..memo import files_memo
 
         cur = self._cur()
         if cur is None or self._info(cur) is None:
             return 0
-        meta = os.path.join(cur, "meta")
-        return version_memo(
+        meta = tuple(
+            (rel, names)
+            for rel, names in _version_parts(self.spark, cur).items()
+            if rel.startswith("meta" + os.sep)
+        )
+        return files_memo(
             self.spark,
-            cur,
             "coll_count",
             lambda: sum(
-                pq.read_metadata(f).num_rows
-                for d in os.listdir(meta)
-                for f in _part_files(os.path.join(meta, d))
+                pq.read_metadata(os.path.join(cur, rel, f)).num_rows
+                for rel, names in meta
+                for f in names
             ),
-            _dir_id(meta),
+            meta,
         )
 
-    def peek(self, n: int = 10) -> DataFrame:
-        """The first ``n`` rows by id."""
+    def peek(self, n: int = 10) -> LocalResult:
+        """The first ``n`` rows by id, as a ``LocalResult``."""
         _require_int("n", n, 0)
         cur, info = self._require()
-        meta = self._meta_rows(cur, info, range(N_META_BUCKETS))
+        meta = _meta_rows(_reader(self.spark, cur), info, range(N_META_BUCKETS))
         page = meta.take(pc.sort_indices(meta, [("id", "ascending")])[:n])
-        return self._frame(cur, info, {"documents", "metadatas"}, page)
+        return self._frame(info, {"documents", "metadatas"}, page)
 
-    def _selected(self, cur, info, ids, where, where_document) -> tuple:
+    def _selected(self, read, info, ids, where, where_document) -> tuple:
         """(meta rows, mask) of the rows the ``ids``/``where``/
         ``where_document`` selectors pick: literal ids read only their
         mbucket partitions, the filters mask on the driver."""
@@ -1831,10 +1935,10 @@ class Collection:
 
         if ids is not None:
             sids = sorted({_sid_py(i) for i in _id_list(ids)})
-            meta = self._meta_rows(cur, info, {_mbucket_py(s) for s in sids})
+            meta = _meta_rows(read, info, {_mbucket_py(s) for s in sids})
             keep = np.isin(meta.column("vec_id").to_numpy(), sids)
         else:
-            meta = self._meta_rows(cur, info, range(N_META_BUCKETS))
+            meta = _meta_rows(read, info, range(N_META_BUCKETS))
             keep = np.ones(meta.num_rows, bool)
         return meta, keep & _row_mask(meta, where, where_document)
 
@@ -1848,7 +1952,7 @@ class Collection:
         after_id: "str | None" = None,
         include_embeddings: bool = False,
         include: "list[str] | None" = None,
-    ) -> DataFrame:
+    ) -> LocalResult:
         """ChromaDB ``get``, ordered by id: literal ids read only their
         mbucket partitions; ``where``/``where_document`` filter the meta
         rows on the driver (functions/where_dsl.py's mask).
@@ -1865,11 +1969,13 @@ class Collection:
         pre-r11 spelling of ``include=[..., 'embeddings']``; it reads
         only the page's vbucket partitions.
 
-        The result is a local DataFrame: its collect() starts no Spark
-        job, and it stays valid after gc removes its version."""
+        Returns a ``LocalResult``: its collect() runs on the driver with
+        no Spark job and no py4j call, and it stays valid after gc
+        removes its version."""
         import pandas as pd
 
         cur, info = self._require()
+        read = _reader(self.spark, cur)
         if offset is not None and after_id is not None:
             raise ValueError("pass offset OR after_id, not both")
         if after_id is not None and not isinstance(after_id, str):
@@ -1883,7 +1989,7 @@ class Collection:
             raise ValueError(f"include: unknown items {sorted(unknown)}")
         if include_embeddings:
             inc.add("embeddings")
-        meta, keep = self._selected(cur, info, ids, where, where_document)
+        meta, keep = self._selected(read, info, ids, where, where_document)
         if after_id is not None:
             keep &= pc.greater(meta.column("id"), after_id).to_numpy()
         page = meta.filter(pa.array(keep))
@@ -1892,12 +1998,12 @@ class Collection:
         emb = None
         if "embeddings" in inc:
             sids = page.column("vec_id").to_numpy()
-            vids, vmat = self._vec_rows(
-                cur, info["dim"], {vec_bucket_py(int(s)) for s in sids}
+            vids, vmat = _vec_rows(
+                read, info["dim"], {vec_bucket_py(int(s)) for s in sids}
             )
             pos = pd.Index(vids).get_indexer(sids)
             emb = [vmat[p] if p >= 0 else None for p in pos]
-        return self._frame(cur, info, inc, page, embeddings=emb)
+        return self._frame(info, inc, page, embeddings=emb)
 
     def query(
         self,
@@ -1913,7 +2019,7 @@ class Collection:
         graph_beam: "int | None" = None,
         graph_rounds: "int | None" = None,
         graph_predicate_expansion: "bool | None" = None,
-    ) -> DataFrame:
+    ) -> LocalResult:
         """ChromaDB ``query``: RP-LSH probe (client-side band keys name
         the band partitions to read), exact rerank of the candidates
         from their vecs partitions, ``where``/``where_document`` on
@@ -1959,15 +2065,17 @@ class Collection:
         ``GRAPH_AUTO_EXPANSION_SELECTIVITY`` of the rows.
 
         Returns (query_idx, distance, id, document, <metadata>), with
-        ``distance = 1 - round(cos, 4)`` (cosine space), as a local
-        DataFrame: its collect() starts no Spark job, and it stays
-        valid after gc removes its version. Post-filtering is the right
-        order for LSH (buckets are metadata-blind); the multiprobe
-        default widens candidates because filters thin them.
+        ``distance = 1 - round(cos, 4)`` (cosine space), as a
+        ``LocalResult``: its collect() runs on the driver with no Spark
+        job and no py4j call, and it stays valid after gc removes its
+        version. Post-filtering is the right order for LSH (buckets are
+        metadata-blind); the multiprobe default widens candidates
+        because filters thin them.
         """
         import numpy as np
 
         cur, info = self._require()
+        read = _reader(self.spark, cur)
         dim = info["dim"]
         inc = (
             {"documents", "metadatas", "distances"}
@@ -2040,7 +2148,7 @@ class Collection:
         if has_filter and strategy in ("auto", "exact"):
             # the filter over the whole meta store: exact scores its
             # survivors, auto counts them
-            meta = self._meta_rows(cur, info, range(N_META_BUCKETS))
+            meta = _meta_rows(read, info, range(N_META_BUCKETS))
             keep = _row_mask(meta, where, where_document)
         if strategy == "auto":
             auto_exact = has_filter and keep.sum() <= prefilter_threshold
@@ -2094,7 +2202,7 @@ class Collection:
                 # a path — the oracle-pinned driver keys pass one, so
                 # their walk never depends on a cardinality.
                 if has_filter:
-                    meta = self._meta_rows(cur, info, range(N_META_BUCKETS))
+                    meta = _meta_rows(read, info, range(N_META_BUCKETS))
                     # inclusive: at exactly half selectivity the r14
                     # table still reads ACORN 0.88 vs blind 0.69
                     graph_predicate_expansion = bool(
@@ -2131,9 +2239,7 @@ class Collection:
                         return set()
                     tr = {g: int(amap.get(g, g)) for g in ids}
                     sids = sorted(set(tr.values()))
-                    meta = self._meta_rows(
-                        cur, info, {_mbucket_py(s) for s in sids}
-                    )
+                    meta = _meta_rows(read, info, {_mbucket_py(s) for s in sids})
                     vid = meta.column("vec_id").to_numpy()
                     keep = _row_mask(meta, where, where_document)
                     passing_sids = set(vid[keep & np.isin(vid, sids)].tolist())
@@ -2170,7 +2276,7 @@ class Collection:
                 for qi in range(len(mat))
             ]
             sids = np.unique(np.concatenate(cands))
-            meta = self._meta_rows(cur, info, {_mbucket_py(int(s)) for s in sids})
+            meta = _meta_rows(read, info, {_mbucket_py(int(s)) for s in sids})
             keep = _row_mask(meta, where, where_document)
         else:
             # probe: the query's band keys and (multiprobe) their
@@ -2181,27 +2287,30 @@ class Collection:
             flips = [0] + [1 << b for b in range(RP_BAND_BITS) if multiprobe_hamming]
             cands, vbs, mbs = [], set(), set()
             for qk in keys:
-                parts = [
-                    self._band_part(cur, b, int(k))
-                    for b in range(RP_BANDS)
-                    for k in sorted({int(qk[b]) ^ f for f in flips})
-                ]
+                parts = _band_rows(
+                    read,
+                    [
+                        (b, k)
+                        for b in range(RP_BANDS)
+                        for k in sorted({int(qk[b]) ^ f for f in flips})
+                    ],
+                )
                 cands.append(np.unique(np.concatenate([p[0] for p in parts])))
                 for _, pv, pm in parts:
                     vbs.update(pv.tolist())
                     mbs.update(pm.tolist())
-            meta = self._meta_rows(cur, info, mbs)
+            meta = _meta_rows(read, info, mbs)
             keep = _row_mask(meta, where, where_document)
         if strategy != "probe":
             vbs = {vec_bucket_py(int(s)) for s in np.unique(np.concatenate(cands))}
         return self._rank(
-            cur, info, mat, cands, vbs, meta, keep, n_results, inc,
+            read, info, mat, cands, vbs, meta, keep, n_results, inc,
             nonzero=strategy == "exact" and self.space == "cosine",
         )
 
     def _rank(
-        self, cur, info, mat, cands, vbs, meta, keep, n_results, inc, nonzero
-    ) -> DataFrame:
+        self, read, info, mat, cands, vbs, meta, keep, n_results, inc, nonzero
+    ) -> LocalResult:
         """Score each query's candidate sids that are stored (in the
         ``vbs`` partitions) and kept (``keep`` over ``meta``), and emit
         the top ``n_results`` per query by (distance, id)."""
@@ -2209,7 +2318,7 @@ class Collection:
         import pandas as pd
         from pyspark.sql.types import DoubleType, IntegerType, StructField
 
-        vids, vmat = self._vec_rows(cur, info["dim"], vbs)
+        vids, vmat = _vec_rows(read, info["dim"], vbs)
         vix = pd.Index(vids)
         mpos = np.flatnonzero(keep)
         mix = pd.Index(meta.column("vec_id").to_numpy()[mpos])
@@ -2236,7 +2345,7 @@ class Collection:
         if "distances" in inc:
             lead.append((StructField("distance", DoubleType()), pa.array(out_d, pa.float64())))
         return self._frame(
-            cur, info, inc, meta.take(pa.array(out_m, pa.int64())), lead,
+            info, inc, meta.take(pa.array(out_m, pa.int64())), lead,
             embeddings=[vmat[v] for v in out_v],
         )
 

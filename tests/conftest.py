@@ -85,9 +85,38 @@ def opened_dirs(monkeypatch):
     seen = []
     real = capi._read_partition
 
-    def record(spark, part, columns, convert):
-        seen.append(part)
-        return real(spark, part, columns, convert)
+    def record(spark, ver, rel, names, columns, convert):
+        seen.append(os.path.join(ver, rel))
+        return real(spark, ver, rel, names, columns, convert)
 
     monkeypatch.setattr(capi, "_read_partition", record)
     return seen
+
+
+@pytest.fixture()
+def py4j_calls(spark, monkeypatch):
+    """A context manager counting the py4j commands the driver sends to
+    the JVM inside its block: ``with py4j_calls() as n: ...``, then
+    ``n[0]`` is the count."""
+    import contextlib
+
+    client = type(spark.sparkContext._gateway._gateway_client)
+    real = client.send_command
+    sent = [0]
+
+    def send(self, *args, **kwargs):
+        sent[0] += 1
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", send)
+
+    @contextlib.contextmanager
+    def block():
+        n = [0]
+        start = sent[0]
+        try:
+            yield n
+        finally:
+            n[0] = sent[0] - start
+
+    return block

@@ -744,6 +744,117 @@ def test_driver_writer_matches_spark_hash_twins(spark, tmp_path):
         ]
 
 
+def test_read_rows_equal_spark_collect(spark, tmp_path, monkeypatch):
+    """Every read returns the Rows Spark's own ``collect`` returns for
+    its table: for each strategy, ``get`` selector, ``peek`` and
+    ``include`` variant over every metadata type ``_normalize`` accepts
+    (NULLs included), ``collect()`` equals
+    ``spark.createDataFrame(table, schema).collect()`` in values,
+    Python types and field names — once in UTC and once in a DST zone,
+    where naive local timestamps could disagree — and a delegated call
+    (``select``, ``toPandas``) equals the one on that DataFrame."""
+    import datetime
+    import decimal
+    import time
+
+    ddl = (
+        "id string, embedding array<double>, document string, s string, "
+        "b bigint, i int, sm smallint, t tinyint, d double, f float, "
+        "ok boolean, day date, ts timestamp, amt decimal(10,2)"
+    )
+    stamps = [
+        datetime.datetime(2021, 3, 14, 7, 30, 0, 250000),  # EDT begins
+        datetime.datetime(2021, 11, 7, 5, 30),  # 01:30 EDT, then EST
+        datetime.datetime(2021, 11, 7, 6, 30),
+        datetime.datetime(1960, 1, 1, 12, 0, 0, 1),
+    ]
+    mat = _vecs(47, 24)
+    rows = [
+        (
+            f"t{j:02d}",
+            [float(x) for x in mat[j]],
+            None if j % 5 == 2 else f"doc {j} the text",
+            None if j % 7 == 3 else f"s{j % 3}",
+            None if j % 6 == 1 else 2**40 + j,
+            -j,
+            None if j % 4 == 0 else j * 100,
+            j - 12,
+            j / 3,
+            None if j % 5 == 0 else j * 0.5,
+            None if j % 8 == 5 else j % 2 == 0,
+            datetime.date(2020, 1, 1 + j),
+            None if j % 9 == 4 else stamps[j % 4],
+            decimal.Decimal(f"{j}.{j % 10}0"),
+        )
+        for j in range(24)
+    ]
+    coll = Collection(
+        spark, str(tmp_path / "rows"), embedder={"kind": "hash_projection", "dim": DIM}
+    )
+    coll.add(spark.createDataFrame(rows, ddl))
+    q0, q1 = ([float(x) for x in mat[j]] for j in (3, 11))
+    where = {"s": {"$ne": "s1"}}
+    reads = {
+        "probe": lambda: coll.query(q0, n_results=5),
+        "exact": lambda: coll.query(
+            q0, n_results=5, where=where, filter_strategy="exact"
+        ),
+        "auto": lambda: coll.query(
+            [q0, q1], n_results=4, where=where, filter_strategy="auto"
+        ),
+        "graph": lambda: coll.query(q0, n_results=5, filter_strategy="graph"),
+        "graph_acorn": lambda: coll.query(
+            q0,
+            n_results=5,
+            where=where,
+            filter_strategy="graph",
+            graph_predicate_expansion=True,
+        ),
+        "graph_batch": lambda: coll.query(
+            [q0, q1], n_results=5, filter_strategy="graph"
+        ),
+        "texts": lambda: coll.query(query_texts=["doc 3 the text"], n_results=5),
+        "no_distances": lambda: coll.query(q0, n_results=5, include=["documents"]),
+        "embeddings": lambda: coll.query(
+            q0, n_results=5, include=["distances", "metadatas", "embeddings"]
+        ),
+        "get.ids": lambda: coll.get(ids=["t01", "t04", "t19", "absent"]),
+        "get.where": lambda: coll.get(where={"b": {"$gt": 2**40 + 5}}),
+        "get.where_document": lambda: coll.get(where_document={"$contains": "1"}),
+        "get.after_id": lambda: coll.get(where=where, after_id="t05", limit=6),
+        "get.offset": lambda: coll.get(offset=3, limit=7),
+        "get.embeddings": lambda: coll.get(ids=["t02", "t07"], include_embeddings=True),
+        "peek": lambda: coll.peek(5),
+    }
+
+    def check():
+        for name, read in reads.items():
+            res = read()
+            df = spark.createDataFrame(res._table, res.schema)
+            got, want = res.collect(), df.collect()
+            assert got and repr(got) == repr(want), name
+            assert [[type(v) for v in r] for r in got] == [
+                [type(v) for v in r] for r in want
+            ], name
+            assert [r.__fields__ for r in got] == [r.__fields__ for r in want], name
+            assert (res.schema, res.columns) == (df.schema, df.columns), name
+        assert any(r["ts"] is not None for r in coll.peek(24).collect())
+
+    check()
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        check()
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+
+    res = coll.query([q0, q1], n_results=5)
+    df = spark.createDataFrame(res._table, res.schema)
+    assert res.select("id", "distance").collect() == df.select("id", "distance").collect()
+    assert res.toPandas().equals(df.toPandas())
+
+
 def test_numpy_scorer_is_bit_exact_against_catalyst(spark, sf_dir):
     """The driver scorer equals the Catalyst expression the Spark plans
     use (functions/vector.py + F.round(..., 4)) bit for bit, raw and
@@ -939,6 +1050,51 @@ def test_fsck_and_include_embeddings(spark, coll):
     assert got["embedding"] == pytest.approx([float(x) for x in mat[2]])
     # default path carries no vector payload
     assert "embedding" not in coll.get(ids=["f2"]).columns
+
+
+def test_fsck_flags_each_broken_invariant(spark, tmp_path):
+    """Each of fsck's four semantic checks fails, alone, on a committed
+    version whose part file was rewritten (same name) to break it: a
+    meta row dropped, a band row pointing at no vector, a band row
+    dropped, a second id under one surrogate."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def with_first(t, col, value):
+        """``t``'s first row, with ``col`` set to ``value``."""
+        i = t.schema.get_field_index(col)
+        f = t.schema.field(i)
+        return t.slice(0, 1).set_column(i, f, pa.array([value], f.type))
+
+    breaks = {
+        "vecs_meta_same_ids": ("meta", lambda t: t.slice(1)),
+        "bands_subset_of_vecs": (
+            "bands",
+            lambda t: pa.concat_tables([with_first(t, "vec_id", -1), t.slice(1)]),
+        ),
+        "nonzero_band_fanout": ("bands", lambda t: t.slice(1)),
+        "surrogates_unique": (
+            "meta",
+            lambda t: pa.concat_tables([t, with_first(t, "id", "impostor")]),
+        ),
+    }
+    mat = _vecs(52, 12)
+    for check, (comp, edit) in breaks.items():
+        coll = Collection(spark, str(tmp_path / check))
+        coll.add(_local_batch(spark, [f"k{i}" for i in range(12)], mat))
+        assert [c for c, ok, _ in coll.fsck() if not ok] == []
+        path = next(
+            os.path.join(d, f)
+            for d, _, files in sorted(os.walk(os.path.join(coll._cur(), comp)))
+            for f in sorted(files)
+            if f.endswith(".parquet")
+        )
+        broken = edit(pq.ParquetFile(path).read())
+        os.unlink(path)  # the version's own copy: its hardlinks keep theirs
+        pq.write_table(broken, path)
+        assert [c for c, ok, _ in coll.fsck() if not ok] == [check]
 
 
 def test_client_named_collections(spark, tmp_path):

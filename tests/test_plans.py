@@ -382,6 +382,51 @@ def test_collection_reads_run_no_spark_jobs(spark, sf_dir):
     assert not failures, "; ".join(failures)
 
 
+def test_collection_reads_make_no_py4j_call(spark, sf_dir, py4j_calls):
+    """Warm serving reads — the read set of
+    test_collection_reads_run_no_spark_jobs plus peek — make no py4j
+    call, the result's collect() included: the rows come from the
+    driver-held Arrow table, never through the JVM."""
+    from adk_noui_vectordb_spark.api.collection import demo_collection
+
+    coll = demo_collection(spark, sf_dir)
+    q = [r["emb"] for r in coll._vecs(coll._cur()).limit(2).collect()]
+    reads = {
+        "query.probe": lambda: coll.query(q[0], n_results=5).collect(),
+        "query.filtered": lambda: coll.query(
+            q[0], n_results=5, where={"lang": "en"}
+        ).collect(),
+        "query.batch": lambda: coll.query(q, n_results=5).collect(),
+        "query.graph": lambda: coll.query(
+            q[0], n_results=5, filter_strategy="graph"
+        ).collect(),
+        "query.graph_acorn": lambda: coll.query(
+            q[0],
+            n_results=5,
+            where={"lang": "en"},
+            filter_strategy="graph",
+            graph_predicate_expansion=True,
+        ).collect(),
+        "query.graph_batch": lambda: coll.query(
+            q, n_results=5, filter_strategy="graph"
+        ).collect(),
+        "get.ids": lambda: coll.get(ids=["doc-1", "doc-7"]).collect(),
+        "get.where": lambda: coll.get(
+            where={"lang": "en"}, after_id="doc-1", limit=5
+        ).collect(),
+        "count": coll.count,
+        "peek": lambda: coll.peek().collect(),
+    }
+    failures = []
+    for name, read in reads.items():
+        read()  # warm: listings and partition memos
+        with py4j_calls() as n:
+            assert read()
+        if n[0]:
+            failures.append(f"{name}: {n[0]} py4j calls")
+    assert not failures, "; ".join(failures)
+
+
 def test_sampled_ivf_probe_prunes_cells_and_takeordered(spark, sf_dir):
     """The sample-trained index serves with literal nprobe cell
     PartitionFilters on the assignment scan and TakeOrderedAndProject for
