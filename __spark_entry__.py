@@ -313,7 +313,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # r10c: the ChromaDB-compatible Collection facade end-to-end —
         # the reference's collection.query / collection.get surface
         # (vector_search_tool.py:33-46,149-232) over the versioned
-        # vecs+bands+meta components (api/collection.py)
+        # vecs+meta components (api/collection.py)
         "collection_query_topk": _coll.collection_query_topk,
         # r12: the facade served by the reference's ACTUAL structure —
         # beam search over a navigable-graph sidecar of the collection's
@@ -432,7 +432,7 @@ _COS = (
 _STOPWORDS_SQL = "('the','a','of','and','to','in','is','it')"
 
 # Random-hyperplane LSH band table (operators/ann.py _rp_band_keys, the
-# kernel that keys Collection's bands/):
+# kernel whose keys Collection.query derives from its stored vectors):
 # +-1 hyperplanes regenerated from md5 parity; the sign-determining dot
 # runs over floor-scaled integer micro-units, so every term and the
 # 64-term sum are integer-valued doubles far below 2^53 — exact in any

@@ -9,11 +9,15 @@ path (coding_agent/tools/vector_search_tool.py:33-46,149-232). This
 module IS that surface, Spark-first: a ``Collection`` is one versioned
 index root (sources/versioning.py — atomic ``_CURRENT`` commits, CAS
 single-writer enforcement, hardlinked unchanged partitions,
-auto-compaction) holding three components:
+auto-compaction) holding two components:
 
-    vecs/  vbucket=*          (vec_id, emb)            — vector store
-    bands/ band=*/band_key=*  (vec_id, band, band_key) — RP-LSH table
-    meta/  mbucket=*          (vec_id, id, document, <metadata cols>)
+    vecs/ vbucket=*  (vec_id, emb)                          — vector store
+    meta/ mbucket=*  (vec_id, id, document, <metadata cols>)
+
+The RP-LSH band keys the probe matches are not stored: they are a pure
+function of each stored vector, derived when its vecs partition is read
+and memoized with it. (A version written before this layout also holds
+a ``bands/`` dir; reads ignore it and its next commit drops it.)
 
 ChromaDB ids are STRINGS; every distributed structure keys on a 60-bit
 md5 surrogate (``sid``) so joins stay BIGINT and point lookups prune to
@@ -32,18 +36,18 @@ mask over them for reads and deletes. The schema and embedding dim persist in a 
 Scale shape — a served collection lives in driver memory (every read
 below holds its partitions there), so every commit and every read is
 planned on the driver too:
-- Writes (``add``, ``upsert``, full-schema ``update``, ``delete`` and a
-  conflicted ``merge_from``) are driver COPY-ON-WRITE of the partitions
-  they touch: the batch is collected once (a pandas or Arrow batch is
-  a LocalRelation, so zero Spark jobs) and checked in numpy; the rows
-  it replaces or deletes are found with the read path's partition
-  readers (a replaced row's stale band partitions by re-banding its
-  stored vector); and every touched partition is rewritten as ONE
-  pyarrow file of its surviving plus added rows. Untouched partitions
-  hardlink into the new version, so each partition dir holds one data
-  file (a disjoint ``merge_from`` links the source's files beside it;
-  ``compact`` folds those). Only a partial ``update``'s
-  old-value assembly and ``add_metadata_column`` still run Spark.
+- Writes (``add``, ``upsert``, ``update``, ``delete`` and a conflicted
+  ``merge_from``) are driver COPY-ON-WRITE of the partitions they
+  touch: the batch is collected once (a pandas or Arrow batch is a
+  LocalRelation, so zero Spark jobs) and checked in numpy (a partial
+  ``update`` first fills its omitted columns from the stored rows);
+  the rows it replaces or deletes are found with the read path's
+  partition readers; and every touched vecs and meta partition is
+  rewritten as ONE pyarrow file of its surviving plus added rows.
+  Untouched partitions hardlink into the new version, so each
+  partition dir holds one data file (a disjoint ``merge_from`` links
+  the source's files beside it; ``compact`` folds those). Only
+  ``add_metadata_column`` and ``compact`` still run Spark.
 - Reads (``query``, ``get``, ``count``, ``peek``) serve the resolved
   version on the DRIVER with zero Spark jobs and, warm, zero py4j
   calls: each version dir is listed once per session
@@ -54,10 +58,10 @@ planned on the driver too:
   after its version is garbage collected: ``collect``, ``count``,
   ``columns``, ``schema``, ``head``, ``first`` and ``take`` answer from
   its Arrow table on the driver, and any other DataFrame method
-  builds the Spark DataFrame once. ``query`` computes band keys
-  client-side (24 integer dots) and opens only the probed band dirs
-  and the vbucket/mbucket dirs of their candidates; ``count`` sums the
-  meta footers' row counts. Online top-k over one small snapshot does
+  builds the Spark DataFrame once. A probe ``query`` matches the
+  query's band keys against the keys held with each vecs partition and
+  opens the meta dirs of its candidates; ``count`` sums the meta
+  footers' row counts. Online top-k over one small snapshot does
   not fit a job scheduler — each Spark job costs more than the whole
   driver-side read.
 - Readers never see a partial write: every mutation is one ``_CURRENT``
@@ -86,18 +90,15 @@ from ..operators.ann import (
     RP_PLANES,
     _rp_band_keys,
     _rp_plane_signs,
-    vec_bucket_expr,
     vec_bucket_py,
 )
 from ..sources import versioning as vn
 
 N_META_BUCKETS = 32
-BANDS_SCHEMA = "vec_id bigint, band int, band_key int"
 VECS_SCHEMA = "vec_id bigint, emb array<double>, vbucket int"
 _RESERVED = ("id", "document", "embedding", "emb", "vec_id", "mbucket", "vbucket")
 
 _COMPONENTS = [
-    ("bands", ["band", "band_key"]),
     ("vecs", ["vbucket"]),
     ("meta", ["mbucket"]),
 ]
@@ -153,19 +154,12 @@ def _mbucket_py(sid: int) -> int:
     return int(hashlib.md5(str(sid).encode()).hexdigest()[:8], 16) % N_META_BUCKETS
 
 
-def _checked_size(b: DataFrame) -> int:
-    """Row count of a write batch, with its ids checked in the same one
-    job: a NULL or repeated id raises ``ValueError``."""
-    r = b.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count("id").alias("n_ids"),
-        F.countDistinct("id").alias("n_distinct"),
-    ).head()
-    if r["n_ids"] != r["n"]:
-        raise ValueError(f"NULL id in {r['n'] - r['n_ids']} batch row(s)")
-    if r["n_distinct"] != r["n"]:
+def _check_ids(ids: list) -> None:
+    """A NULL or repeated id in a write batch raises ``ValueError``."""
+    if None in ids:
+        raise ValueError(f"NULL id in {ids.count(None)} batch row(s)")
+    if len(set(ids)) != len(ids):
         raise ValueError("duplicate ids within one batch")
-    return r["n"]
 
 
 def _id_list(ids) -> list:
@@ -337,36 +331,37 @@ def _reader(spark: SparkSession, ver: "str | None"):
     return read
 
 
-def _band_rows(read, pairs) -> list:
-    """(vec_id, vbucket, mbucket) arrays of each (band, band_key)
-    partition of ``pairs``."""
+def _vec_parts(read, dim: int, vbuckets) -> list:
+    """(vec_id, n x dim embeddings, n x RP_BANDS band keys, mbucket) of
+    each of the ``vbuckets`` partitions, sorted. The band keys and
+    mbuckets are derived from the stored rows when the partition is
+    read, so they are memoized with its embeddings; a zero vector's
+    keys are -1 (it has none)."""
     import numpy as np
 
     def convert(t):
-        ids = [] if t is None else t.column("vec_id").to_pylist()
-        return (
-            np.array(ids, np.int64),
-            np.array([vec_bucket_py(i) for i in ids], np.int64),
-            np.array([_mbucket_py(i) for i in ids], np.int64),
-        )
+        if t is None:
+            ids, emb = np.empty(0, np.int64), np.empty((0, dim))
+        else:
+            ids = t.column("vec_id").to_numpy()
+            emb = t.column("emb").combine_chunks().flatten().to_numpy()
+            emb = emb.reshape(t.num_rows, dim)
+        mb = np.array([_mbucket_py(int(i)) for i in ids], np.int64)
+        return ids, emb, _band_keys(emb, dim), mb
 
-    return [read(f"bands/band={b}/band_key={k}", ["vec_id"], convert) for b, k in pairs]
+    return [
+        read(f"vecs/vbucket={vb}", ["vec_id", "emb"], convert)
+        for vb in sorted(vbuckets)
+    ]
 
 
 def _vec_rows(read, dim: int, vbuckets) -> tuple:
     """(vec_id, n x dim embeddings) of the ``vbuckets`` partitions."""
     import numpy as np
 
-    def convert(t):
-        if t is None:
-            return np.empty(0, np.int64), np.empty((0, dim))
-        emb = t.column("emb").combine_chunks().flatten().to_numpy()
-        return t.column("vec_id").to_numpy(), emb.reshape(t.num_rows, dim)
-
-    parts = [(np.empty(0, np.int64), np.empty((0, dim)))] + [
-        read(f"vecs/vbucket={vb}", ["vec_id", "emb"], convert)
-        for vb in sorted(vbuckets)
-    ]
+    parts = [(np.empty(0, np.int64), np.empty((0, dim)))] + _vec_parts(
+        read, dim, vbuckets
+    )
     return np.concatenate([p[0] for p in parts]), np.concatenate(
         [p[1] for p in parts]
     )
@@ -426,14 +421,37 @@ def _list_array(mat):
     return pa.ListArray.from_arrays(offsets, pa.array(mat.reshape(-1), pa.float64()))
 
 
-def _band_keys(mat, dim: int) -> tuple:
-    """(nonzero-row mask, n x RP_BANDS band keys) of an n x ``dim``
-    float64 matrix — the probe's banding at the collection's dim; a
-    zero vector has no band rows."""
+def _signs_t(dim: int):
+    """The dim x RP_PLANES +-1 hyperplane matrix the band keys dot."""
     import numpy as np
 
-    signs_t = np.array(_rp_plane_signs(RP_PLANES, dim), np.int64).T
-    return (mat != 0).any(axis=1), _rp_band_keys(mat, signs_t)
+    return np.array(_rp_plane_signs(RP_PLANES, dim), np.int64).T
+
+
+def _band_keys(mat, dim: int):
+    """n x RP_BANDS band keys of an n x ``dim`` float64 matrix of stored
+    vectors, -1 for a zero vector (it has none)."""
+    keys = _rp_band_keys(mat, _signs_t(dim))
+    keys[~(mat != 0).any(axis=1)] = -1
+    return keys
+
+
+def _probe(keys, qkeys, multiprobe: bool) -> list:
+    """One row mask per query over the stored ``keys`` (n x RP_BANDS,
+    -1 for none): a row is a candidate when in some band its key equals
+    the query's ``qkeys`` row or, with ``multiprobe``, a Hamming-1 flip
+    of it."""
+    import numpy as np
+
+    flips = [0] + [1 << b for b in range(RP_BAND_BITS) if multiprobe]
+    bands = np.arange(RP_BANDS)
+    out = []
+    for qk in qkeys:
+        probed = np.zeros((RP_BANDS, 1 << RP_BAND_BITS), bool)
+        for b in bands:
+            probed[b, [int(qk[b]) ^ f for f in flips]] = True
+        out.append((probed[bands, keys] & (keys >= 0)).any(axis=1))
+    return out
 
 
 def _sims4(q, ids, rows: dict) -> dict:
@@ -636,11 +654,6 @@ class Collection:
 
     def _vecs(self, cur: str) -> DataFrame:
         return self.spark.read.schema(VECS_SCHEMA).parquet(os.path.join(cur, "vecs"))
-
-    def _bands(self, cur: str) -> DataFrame:
-        return self.spark.read.schema(BANDS_SCHEMA).parquet(
-            os.path.join(cur, "bands")
-        )
 
     def _frame(self, info, inc, page, lead=(), embeddings=None) -> LocalResult:
         """The ``LocalResult`` a read returns: the ``lead`` (field,
@@ -1174,13 +1187,14 @@ class Collection:
         Partial batches (r11, the Chroma ``update(ids, metadatas=...)``
         shape): the batch may OMIT ``embedding``, ``document``, and/or
         any metadata column — omitted fields keep their stored values,
-        filled by a bucket-pruned join against the current version
-        BEFORE the atomic replace (Chroma replaces the whole metadata
-        dict; with schema-on-first-write typed columns, the column
-        subset is the equivalent contract). Provided columns replace.
-        A full-schema batch is an upsert that requires every id present
-        (the driver write path, no Spark job for a local batch); a
-        partial one assembles its old values in Spark first.
+        read from the current version's partitions on the driver BEFORE
+        the atomic replace (Chroma replaces the whole metadata dict;
+        with schema-on-first-write typed columns, the column subset is
+        the equivalent contract). Provided columns replace. A
+        full-schema batch is an upsert that requires every id present;
+        a partial one is collected once and completed on the driver,
+        then commits through the same driver write path (no Spark job
+        for a local batch either way).
 
         Lost-update fence (ADVICE r11): the carried-forward old values
         are a snapshot; the commit CASes on exactly that snapshot's
@@ -1212,88 +1226,79 @@ class Collection:
         if provided >= full:
             return self._write(batch, replace=True, require_present=True)
 
-        b = batch.withColumn(
-            "vec_id", _sid_expr(F.col("id").cast("string"))
-        ).localCheckpoint(eager=True)
-        n = _checked_size(b)
-        if n == 0:
+        sel = batch.select(
+            F.col("id").cast("string").alias("id"),
+            *[F.col(c) for c in batch.columns if c != "id"],
+        )
+        # a pandas or Arrow batch is a LocalRelation: collected, no job
+        rows = sel.collect()
+        _check_ids([r["id"] for r in rows])
+        if not rows:
             return cur
+        fields = sel.schema.fields
         last = None
         for _ in range(3):
             try:
-                return self._update_partial(b, n, provided, cur, info, meta_cols)
+                return self._update_partial(fields, rows, cur, info)
             except vn.ConcurrentWriterError as ex:
                 last = ex
                 cur = self._cur()
                 info = self._info(cur)
                 if cur is None or info is None:
                     raise
-                meta_cols = self._meta_cols(info)
         raise last
 
-    def _update_partial(self, b, n, provided, cur, info, meta_cols) -> str:
-        """One partial-update attempt against the ``cur`` snapshot: fill
-        omitted columns from ``cur``'s stores, then commit with the CAS
-        expected pinned to ``cur`` (via ``_write(expected_version=...)``)
-        so a stale assembly loses loudly, never silently."""
-        mb = sorted(
-            r["m"]
-            for r in b.select(_mbucket_expr(F.col("vec_id")).alias("m"))
-            .distinct()
-            .collect()
-        )
-        old = (
-            self._meta(cur, info)
-            .filter(F.col("mbucket").isin(mb))
-            .join(b.select("vec_id"), "vec_id", "leftsemi")
-            .select(
-                "vec_id",
-                F.col("document").alias("_old_document"),
-                *[F.col(c).alias(f"_old_{c}") for c in meta_cols],
+    def _update_partial(self, fields, rows, cur, info) -> str:
+        """One partial-update attempt against the ``cur`` snapshot: the
+        columns the collected batch ``rows`` (Spark ``fields``) omit are
+        filled from ``cur``'s stored rows, and the completed batch
+        commits with the CAS expected pinned to ``cur`` (via
+        ``_write(expected_version=...)``) so a stale assembly loses
+        loudly, never silently."""
+        import numpy as np
+        import pandas as pd
+        from pyspark.sql.pandas.types import to_arrow_type
+        from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
+
+        read = _reader(self.spark, cur)
+        ids = [r["id"] for r in rows]
+        sids = np.array([_sid_py(i) for i in ids], np.int64)
+        old = _meta_rows(read, info, {_mbucket_py(int(s)) for s in sids})
+        pos = pd.Index(old.column("vec_id").to_numpy()).get_indexer(sids)
+        given = {f.name: f for f in fields}
+        if "embedding" not in given:
+            vids, vmat = _vec_rows(
+                read, info["dim"], {vec_bucket_py(int(s)) for s in sids}
             )
-        )
-        assembled = b.join(old, "vec_id")
-        if "embedding" not in provided:
-            vb = sorted(
-                r["b"]
-                for r in b.select(vec_bucket_expr(F.col("vec_id")).alias("b"))
-                .distinct()
-                .collect()
-            )
-            oldv = (
-                self._vecs(cur)
-                .filter(F.col("vbucket").isin(vb))
-                .join(b.select("vec_id"), "vec_id", "leftsemi")
-                .select("vec_id", F.col("emb").alias("_old_embedding"))
-            )
-            assembled = assembled.join(oldv, "vec_id")
-        # assemble in the COLLECTION's column order, not sorted order:
-        # _write derives the meta schema from batch column order, so a
-        # collection whose metadata columns are not alphabetical must
-        # still round-trip (regression-pinned)
-        sel = [F.col("id")]
-        for c in ["embedding", "document"] + meta_cols:
-            sel.append(
-                F.col(c) if c in provided else F.col(f"_old_{c}").alias(c)
-            )
-        assembled = assembled.select(*sel).localCheckpoint(eager=True)
-        if assembled.count() != n:
-            absent = [
-                r["id"]
-                for r in b.join(
-                    assembled.select(_sid_expr(F.col("id")).alias("vec_id")),
-                    "vec_id",
-                    "left_anti",
-                )
-                .select("id")
-                .head(3)
-            ]
+            vpos = pd.Index(vids).get_indexer(sids)
+            pos[vpos < 0] = -1
+        absent = [i for i, p in zip(ids, pos) if p < 0]
+        if absent:
             raise KeyError(
-                f"update(): ids not present: {absent} — use upsert() to "
+                f"update(): ids not present: {absent[:3]} — use upsert() to "
                 f"insert-or-replace"
             )
+        old = old.take(pa.array(pos))
+        stored = _meta_arrow(info["meta_schema"])[0]
+        # in the COLLECTION's column order: _write derives the meta
+        # schema from the batch's column order
+        out, arrays = [], []
+        for c in ["id", "embedding", "document"] + self._meta_cols(info):
+            if c in given:
+                f = given[c]
+                arrays.append(
+                    _arrow_column([r[c] for r in rows], to_arrow_type(f.dataType))
+                )
+            elif c == "embedding":
+                f = StructField(c, ArrayType(DoubleType()))
+                arrays.append(_list_array(vmat[vpos]))
+            else:
+                f = stored[c]
+                arrays.append(old.column(c))
+            out.append(f)
+        table = pa.Table.from_arrays(arrays, names=[f.name for f in out])
         return self._write(
-            assembled,
+            self.spark.createDataFrame(table, StructType(out)),
             replace=True,
             require_present=True,
             expected_version=os.path.basename(cur),
@@ -1343,10 +1348,7 @@ class Collection:
             cur = self._cur()
             return cur if cur is not None else ""
         ids = [r[0] for r in rows]
-        if None in ids:
-            raise ValueError(f"NULL id in {ids.count(None)} batch row(s)")
-        if len(set(ids)) != len(ids):
-            raise ValueError("duplicate ids within one batch")
+        _check_ids(ids)
         sids = [_sid_py(i) for i in ids]
         if len(set(sids)) != len(sids):
             # two DISTINCT ids sharing one 60-bit surrogate would write
@@ -1479,10 +1481,10 @@ class Collection:
     def _commit_rows(self, cur, info, victims, add=None, mat=None, extra=None) -> str:
         """Copy-on-write commit on ``cur`` (None for the initial build):
         remove the ``victims`` vec_ids and add the ``add`` rows (meta
-        schema) with their ``mat`` embeddings. Every partition that
-        holds a victim or receives a row becomes one new file of its
-        surviving and added rows; a victim's band partitions come from
-        re-banding its STORED vector. The commit CASes on ``cur``."""
+        schema) with their ``mat`` embeddings. Every vecs and meta
+        partition that holds a victim or receives a row becomes one new
+        file of its surviving and added rows. The commit CASes on
+        ``cur``."""
         import numpy as np
 
         dim = info["dim"]
@@ -1497,24 +1499,8 @@ class Collection:
 
         read = _reader(self.spark, cur)
         old_vb = {vec_bucket_py(int(v)) for v in gone}
-        old_ids, old_mat = _vec_rows(read, dim, old_vb)
-        old_nz, old_keys = _band_keys(old_mat[np.isin(old_ids, gone)], dim)
-        add_nz, add_keys = _band_keys(mat, dim)
         add_vb = np.array([vec_bucket_py(int(s)) for s in sids], np.int64)
         add_mb = np.array([_mbucket_py(int(s)) for s in sids], np.int64)
-
-        bands = {}
-        for b in range(RP_BANDS):
-            keys = np.union1d(old_keys[old_nz, b], add_keys[add_nz, b])
-            for k in keys.tolist():
-                ids = _band_rows(read, [(b, k)])[0][0]
-                bands[f"band={b}/band_key={k}"] = pa.table(
-                    {
-                        "vec_id": np.concatenate(
-                            [ids[survivors(ids)], sids[add_nz & (add_keys[:, b] == k)]]
-                        )
-                    }
-                )
         vecs = {}
         for vb in sorted(old_vb | set(add_vb.tolist())):
             ids, emb = _vec_rows(read, dim, [vb])
@@ -1537,7 +1523,6 @@ class Collection:
             self.spark,
             self.root,
             [
-                vn.Component("bands", ("band", "band_key"), tables=bands),
                 vn.Component("vecs", ("vbucket",), tables=vecs),
                 vn.Component("meta", ("mbucket",), tables=meta),
             ],
@@ -1578,11 +1563,11 @@ class Collection:
         distributed-build pattern: shard the corpus, build per-shard
         collections IN PARALLEL (each an independent root with its own
         writer lock), then fold them together. Because every partition
-        value is content-derived by SHARED kernels (band keys from the
-        md5-seeded planes, vbucket/mbucket from md5 of the sid), the
-        source's component rows are valid in the destination AS-IS:
-        a disjoint merge is pure file appends into hardlinked
-        partitions — ZERO re-banding, ZERO re-hashing, zero reads of
+        value is content-derived by SHARED kernels (vbucket/mbucket from
+        md5 of the sid; the band keys are derived from the stored
+        vectors on read), the source's component rows are valid in the
+        destination AS-IS: a disjoint merge is pure file appends into
+        hardlinked partitions — ZERO re-hashing, zero reads of
         destination data.
 
         ``on_conflict`` for ids present in both: 'error' (default),
@@ -1614,10 +1599,6 @@ class Collection:
 
         def _link_comps():
             return [
-                vn.Component(
-                    "bands", ("band", "band_key"),
-                    merge_from_paths=(os.path.join(ocur, "bands"),),
-                ),
                 vn.Component(
                     "vecs", ("vbucket",),
                     merge_from_paths=(os.path.join(ocur, "vecs"),),
@@ -1675,20 +1656,18 @@ class Collection:
         """Integrity check: the generic versioned-root invariants
         (pointer, orphans, locks, component readability —
         versioning.fsck_index) plus the facade's semantic invariants:
-        vecs↔meta surrogate sets agree, every band row's vector exists,
-        nonzero vectors band exactly RP_BANDS times, no surrogate maps
-        to two ids — checked on the driver, in numpy over pyarrow reads
-        of the version's files. Returns (check, ok, detail) tuples,
-        never raises."""
+        vecs↔meta surrogate sets agree and no surrogate maps to two ids
+        — checked on the driver, in numpy over pyarrow reads of the
+        version's files. Returns (check, ok, detail) tuples, never
+        raises."""
         import numpy as np
 
         cur = self._cur()
         info = self._info(cur)
-        comps = [
-            ("bands", ["band", "band_key"], BANDS_SCHEMA),
-            ("vecs", ["vbucket"], VECS_SCHEMA),
-        ] + ([("meta", ["mbucket"], info["meta_schema"])] if info else [])
-        out = vn.fsck_index(self.spark, self.root, comps)
+        comps = [("vecs", ["vbucket"], VECS_SCHEMA)] + (
+            [("meta", ["mbucket"], info["meta_schema"])] if info else []
+        )
+        out = vn.fsck_index(self.root, comps)
         if cur is None or info is None:
             return out
         # the read path's readers over fresh pyarrow reads, past the
@@ -1702,29 +1681,15 @@ class Collection:
 
         try:
             meta = _meta_rows(fresh, info, range(N_META_BUCKETS))
-            v_ids, mat = _vec_rows(fresh, info["dim"], range(N_VEC_BUCKETS))
-            keys = range(1 << RP_BAND_BITS)
-            bands = _band_rows(fresh, [(b, k) for b in range(RP_BANDS) for k in keys])
+            v_ids, _ = _vec_rows(fresh, info["dim"], range(N_VEC_BUCKETS))
         except (OSError, TypeError, ValueError, pa.ArrowException) as ex:
             out.append(("semantic_reads", False, f"{type(ex).__name__}: {ex}"))
             return out
         m_ids = meta.column("vec_id").to_numpy()
-        b_ids = np.concatenate([ids for ids, _, _ in bands])
         a = int((~np.isin(v_ids, m_ids)).sum())
         b = int((~np.isin(m_ids, v_ids)).sum())
         out.append(
             ("vecs_meta_same_ids", a == 0 and b == 0, f"vecs_only={a} meta_only={b}")
-        )
-        c = int((~np.isin(b_ids, v_ids)).sum())
-        out.append(("bands_subset_of_vecs", c == 0, f"dangling={c}"))
-        nz = int(mat.any(axis=1).sum())
-        nb = b_ids.size
-        out.append(
-            (
-                "nonzero_band_fanout",
-                nb == nz * RP_BANDS,
-                f"bands={nb} expect={nz}*{RP_BANDS}",
-            )
         )
         ids_per_sid = meta.group_by("vec_id").aggregate([("id", "count_distinct")])
         dup = int((ids_per_sid.column("id_count_distinct").to_numpy() > 1).sum())
@@ -1807,8 +1772,8 @@ class Collection:
         with ``default`` (NULL when omitted) on every existing row.
 
         Cost shape: rewrites the META component only — the narrow
-        sidecar table, never the vector store or band table (those
-        components hardlink through unchanged); one atomic commit.
+        sidecar table, never the vector store (it hardlinks through
+        unchanged); one atomic commit.
         The new schema commits ATOMICALLY with the data — persisted
         inside the version dir (ADVICE r11: the old post-commit root
         sidecar swap left a window where a concurrent upsert normalized
@@ -1847,7 +1812,6 @@ class Collection:
             self.root,
             [
                 vn.Component("meta", ("mbucket",), all_mb, (widened,)),
-                vn.Component("bands", link_from=os.path.join(cur, "bands")),
                 vn.Component("vecs", link_from=os.path.join(cur, "vecs")),
             ],
             expected=os.path.basename(cur),
@@ -2020,10 +1984,10 @@ class Collection:
         graph_rounds: "int | None" = None,
         graph_predicate_expansion: "bool | None" = None,
     ) -> LocalResult:
-        """ChromaDB ``query``: RP-LSH probe (client-side band keys name
-        the band partitions to read), exact rerank of the candidates
-        from their vecs partitions, ``where``/``where_document`` on
-        their meta rows, top n_results per query by (distance, id).
+        """ChromaDB ``query``: RP-LSH probe (the query's band keys
+        matched against those derived from the stored vectors), exact
+        rerank of the candidates, ``where``/``where_document`` on their
+        meta rows, top n_results per query by (distance, id).
         Runs on the driver over partitions read once per version, with
         zero Spark jobs; distances equal the Catalyst expressions bit
         for bit (functions/vector.py's numpy twins and ``round4``).
@@ -2279,27 +2243,19 @@ class Collection:
             meta = _meta_rows(read, info, {_mbucket_py(int(s)) for s in sids})
             keep = _row_mask(meta, where, where_document)
         else:
-            # probe: the query's band keys and (multiprobe) their
-            # Hamming-1 flips name the band partitions to read
-            keys = _rp_band_keys(
-                mat, np.array(_rp_plane_signs(RP_PLANES, dim), np.int64).T
+            # probe: every stored row's band keys are read with its vecs
+            # partition and matched against the query's
+            parts = _vec_parts(read, dim, range(N_VEC_BUCKETS))
+            vids, keys, mbk = (
+                np.concatenate([p[j] for p in parts]) for j in (0, 2, 3)
             )
-            flips = [0] + [1 << b for b in range(RP_BAND_BITS) if multiprobe_hamming]
-            cands, vbs, mbs = [], set(), set()
-            for qk in keys:
-                parts = _band_rows(
-                    read,
-                    [
-                        (b, k)
-                        for b in range(RP_BANDS)
-                        for k in sorted({int(qk[b]) ^ f for f in flips})
-                    ],
-                )
-                cands.append(np.unique(np.concatenate([p[0] for p in parts])))
-                for _, pv, pm in parts:
-                    vbs.update(pv.tolist())
-                    mbs.update(pm.tolist())
-            meta = _meta_rows(read, info, mbs)
+            vbk = np.repeat(np.arange(N_VEC_BUCKETS), [len(p[0]) for p in parts])
+            qkeys = _rp_band_keys(mat, _signs_t(dim))
+            hits = _probe(keys, qkeys, multiprobe_hamming)
+            cands = [np.unique(vids[h]) for h in hits]
+            hit = np.logical_or.reduce(hits)
+            vbs = set(vbk[hit].tolist())
+            meta = _meta_rows(read, info, set(mbk[hit].tolist()))
             keep = _row_mask(meta, where, where_document)
         if strategy != "probe":
             vbs = {vec_bucket_py(int(s)) for s in np.unique(np.concatenate(cands))}
@@ -2329,8 +2285,8 @@ class Collection:
             ok = (pv >= 0) & (pm >= 0)
             pv, pm = pv[ok], mpos[pm[ok]]
             if nonzero:
-                # a zero vector is stored, never banded: probe and graph
-                # never reach it, and its cosine is undefined
+                # a zero vector is stored but has no band keys: probe
+                # and graph never reach it, and its cosine is undefined
                 nz = vmat[pv].any(axis=1)
                 pv, pm = pv[nz], pm[nz]
             r = np_round4(np_scores(vmat[pv], mat[qi : qi + 1], self.space)[:, 0])
@@ -2559,8 +2515,8 @@ def collection_query_topk(
 ) -> DataFrame:
     """The reference's ``collection.query(query_embeddings, n_results,
     where={...})`` (vector_search_tool.py:33-46) end-to-end on the
-    facade: client-side band keys -> pruned band probe -> vecs rerank ->
-    DSL post-filter -> top-k. Includes the query's own document
+    facade: the query's band keys matched against the stored vectors'
+    -> exact rerank -> DSL post-filter -> top-k. Includes the query's own document
     (ChromaDB does not exclude self-matches)."""
     return demo_collection(spark, sf_dir).query(
         _demo_query(spark, sf_dir, query_vec_id),

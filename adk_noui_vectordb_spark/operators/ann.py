@@ -7,9 +7,9 @@ pieces here are (SURVEY.md section 4):
 
 - the random-hyperplane LSH kernels (``_rp_plane_signs``,
   ``_rp_band_keys``): md5-seeded hyperplanes and integer-exact band
-  keys. They key ``Collection``'s on-disk band table, which its
-  ``query`` probes before an exact rerank, and ``embed``'s
-  late-interaction index (``rp_band_rows_for``).
+  keys. ``Collection.query`` probes the keys it derives from the
+  stored vectors before an exact rerank; ``embed``'s late-interaction
+  index stores them (``rp_band_rows_for``).
 - the sample-trained IVF (``build_ivf_index_sampled``,
   ``ann_ivf_sampled_topk``): partition vectors by nearest centroid and
   prune to the ``nprobe`` closest cells at query time. Its trainer, the

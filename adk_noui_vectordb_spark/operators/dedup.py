@@ -2619,7 +2619,6 @@ def fsck_containment_index(
     cur = build_containment_index(spark, sf_dir, tag)
     root = os.path.dirname(cur)
     out = vn.fsck_index(
-        spark,
         root,
         [
             ("post", ["gbucket"], "gk bigint, doc_id bigint, in_prefix boolean, gbucket int"),
@@ -2722,7 +2721,6 @@ def fsck_minhash_index(spark: SparkSession, sf_dir: str) -> list:
     cur = build_minhash_index(spark, sf_dir)
     root = os.path.dirname(cur)
     out = vn.fsck_index(
-        spark,
         root,
         [
             ("bands", ["band", "kbucket"], MINHASH_BANDS_SCHEMA),

@@ -1007,7 +1007,6 @@ def fsck_li_index(
     cur = build_li_index(spark, sf_dir, chunk_size, tag)
     root = os.path.dirname(cur)
     out = vn.fsck_index(
-        spark,
         root,
         [
             ("bands", ["band", "band_key"], LI_BANDS_SCHEMA),

@@ -857,7 +857,7 @@ def fsck_graph_index(spark: SparkSession, sf_dir: str) -> list:
         ("assign", ["cluster"], IVF_ASSIGN_SCHEMA),
         ("cents", [], "cluster int, c array<double>"),
     ]
-    out = vn.fsck_index(spark, root, comp_list)
+    out = vn.fsck_index(root, comp_list)
     cur = vn.current_dir(root)
     if cur is None:
         return out

@@ -1429,7 +1429,6 @@ def fsck_text_index(
     cur = build_text_index(spark, sf_dir, analyzer)
     root = os.path.dirname(cur)
     out = vn.fsck_index(
-        spark,
         root,
         [
             ("postings", ["tbucket"], POSTINGS_SCHEMA),

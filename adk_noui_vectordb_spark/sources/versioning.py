@@ -2,7 +2,7 @@
 
 Shared by the Collection (api/collection.py) and every build-once/
 serve-many index in the repo (the lexical inverted index, the MinHash
-and containment indexes, the RP-LSH band table, the sample-trained IVF
+and containment indexes, the sample-trained IVF
 index, the late-interaction index and the navigable graph
 in operators/): an index whose update rewrites SEVERAL parquet
 components (postings + termstats + stats; bands + vecs; assign + vecs)
@@ -752,7 +752,7 @@ def describe_index(root: str) -> dict:
     return out
 
 
-def fsck_index(spark, root: str, components) -> list:
+def fsck_index(root: str, components) -> list:
     """Structural integrity check for a versioned index root — the
     ops-tool complement of ``describe_index`` (run it after a crash,
     before trusting a restored backup, or on a schedule): verifies the
@@ -760,10 +760,12 @@ def fsck_index(spark, root: str, components) -> list:
     per-index semantic invariants (doc-set consistency, stats
     equalities) live with their index modules and build on this.
 
-    ``components`` is a list of (name, partition_cols, schema_ddl).
+    ``components`` is a list of (name, partition_cols, schema_ddl); a
+    component is readable when every data file under it has a readable
+    parquet footer (read with pyarrow on the driver, no Spark job).
     Returns a list of (check, ok, detail) tuples — empty ``detail`` on
     pass; never raises (a broken index must still be diagnosable)."""
-    from pyspark.sql import functions as F  # noqa: F401
+    import pyarrow.parquet as pq
 
     out = []
     cur_name = current_name(root)
@@ -784,13 +786,18 @@ def fsck_index(spark, root: str, components) -> list:
         except (OSError, ValueError):
             stale_lock = True
     out.append(("no_stale_lock", not stale_lock, lock if stale_lock else ""))
-    for name, cols, schema in components:
+    for name, _cols, _schema in components:
         cpath = os.path.join(cur, name)
         if not os.path.isdir(cpath):
             out.append((f"component_{name}", False, "missing directory"))
             continue
         try:
-            n = spark.read.schema(schema).parquet(cpath).count()
+            n = sum(
+                pq.read_metadata(os.path.join(d, f)).num_rows
+                for d, _, files in os.walk(cpath)
+                for f in files
+                if not f.startswith(("_", "."))  # _SUCCESS, .crc
+            )
             out.append((f"component_{name}", True, f"rows={n}"))
         except Exception as ex:  # noqa: BLE001 — diagnose, don't die
             out.append((f"component_{name}", False, type(ex).__name__))

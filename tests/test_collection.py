@@ -335,8 +335,8 @@ def test_schema_and_dim_are_enforced(spark, coll):
 
 
 def test_components_stay_consistent_across_lifecycle(spark, coll):
-    """Invariant fsck: meta count == vecs count; bands == nonzero * RP_BANDS;
-    surrogates in every component agree."""
+    """Invariant fsck: meta count == vecs count; surrogates in every
+    component agree."""
     mat = _vecs(15, 10)
     mat[4] = 0.0  # zero-norm: stored, never banded
     ids = [f"k{i}" for i in range(10)]
@@ -346,13 +346,10 @@ def test_components_stay_consistent_across_lifecycle(spark, coll):
     cur, info = coll._require()
     meta = coll._meta(cur, info)
     vecs = coll._vecs(cur)
-    bands = coll._bands(cur)
     assert meta.count() == 9 and vecs.count() == 9
-    assert bands.count() == 8 * RP_BANDS  # k4 is zero-norm
     assert (
         vecs.join(meta, "vec_id", "left_anti").count() == 0
         and meta.join(vecs, "vec_id", "left_anti").count() == 0
-        and bands.join(vecs, "vec_id", "left_anti").count() == 0
     )
     # surrogate mapping is the documented md5 contract
     sids = {r["vec_id"] for r in meta.select("vec_id").collect()}
@@ -367,41 +364,33 @@ def test_empty_batch_is_noop(spark, coll):
 
 
 def test_query_probe_prunes_band_partitions(spark, coll, opened_dirs):
-    """A probe opens exactly the probed band=/band_key= dirs (the
-    query's band keys and their Hamming-1 flips) and the vbucket=/
-    mbucket= dirs holding their candidates — never the whole table."""
+    """A probe opens only vecs/ and meta/ dirs: its candidates are the
+    rows whose band keys, derived from their stored vectors, meet the
+    query's key or a Hamming-1 flip of it in some band (``_model_query``'s
+    banded set), and it opens the mbucket= dirs of exactly those."""
     import os
 
     from adk_noui_vectordb_spark.api.collection import _mbucket_py
-    from adk_noui_vectordb_spark.operators.ann import vec_bucket_py
 
     mat = _vecs(18, 12)
-    coll.add(_batch(spark, [f"p{i}" for i in range(12)], mat))
+    mat[5] = 0.0  # zero-norm: no band keys, never a candidate
+    ids = [f"p{i}" for i in range(12)]
+    coll.add(_batch(spark, ids, mat))
     seen = opened_dirs
-    coll.query([float(x) for x in mat[0]], n_results=3).collect()
+    q = mat[0] + 0.5 * _vecs(19, 1)[0]
+    rows = coll.query([float(x) for x in q], n_results=len(ids)).collect()
     cur = coll._cur()
-    keys = _rp_band_keys(mat[:1], np.array(_rp_plane_signs(RP_PLANES, DIM)).T)[0]
-    probed = {
-        (b, int(keys[b]) ^ flip)
-        for b in range(RP_BANDS)
-        for flip in [0] + [1 << bit for bit in range(RP_BAND_BITS)]
-    }
-    rel = [os.path.relpath(p, cur) for p in seen]
-    assert {r for r in rel if r.startswith("bands/")} == {
-        f"bands/band={b}/band_key={k}" for b, k in probed
-    }
-    cand = {
-        r["vec_id"]
-        for r in coll._bands(cur).collect()
-        if (r["band"], r["band_key"]) in probed
-    }
-    assert {r for r in rel if r.startswith("vecs/")} == {
-        f"vecs/vbucket={vec_bucket_py(s)}" for s in cand
-    }
+    stored = [(i, mat[j], "en") for j, i in enumerate(ids) if j != 5]
+    model = _model_query(stored, q, k=len(ids))
+    assert [(r["distance"], r["id"]) for r in rows] == [
+        (pytest.approx(d), i) for d, i in model
+    ]
+    assert 0 < len(model) < len(ids) - 1  # the probe prunes some rows
+    rel = {os.path.relpath(p, cur) for p in seen}
+    assert {r.split(os.sep)[0] for r in rel} == {"vecs", "meta"}, rel
     assert {r for r in rel if r.startswith("meta/")} == {
-        f"meta/mbucket={_mbucket_py(s)}" for s in cand
+        f"meta/mbucket={_mbucket_py(_sid_py(i))}" for _, i in model
     }
-    assert len(probed) < RP_BANDS * 2**RP_BAND_BITS  # some dirs unread
 
 
 def test_query_rejects_non_finite_query_vector(spark, coll):
@@ -589,6 +578,17 @@ def test_driver_writes_run_no_spark_job(spark, coll):
     ) == 0
     apply(new_ids, m3, l3, s3, d3)
 
+    def stars_only(ids, stars):
+        import pandas as pd
+
+        pdf = pd.DataFrame({"id": ids, "stars": pd.array(stars, dtype="int32")})
+        return spark.createDataFrame(pdf, "id string, stars int")
+
+    s4 = list(range(400, 410))
+    assert jobs("update_partial", lambda: coll.update(stars_only(new_ids[5:15], s4))) == 0
+    for i, s in zip(new_ids[5:15], s4):
+        model[i] = model[i][:3] + (s,)
+
     victims = base[10:20]
     assert jobs("delete_ids", lambda: coll.delete(ids=victims)) == 0
     for i in victims:
@@ -659,22 +659,24 @@ def test_driver_writer_matches_spark_hash_twins(spark, tmp_path):
     vector, a NULL document and every metadata type ``_normalize``
     accepts — reads back through Spark as the Spark kernels would have
     placed it: ``vec_id`` is ``_sid_expr(id)``, every row sits in the
-    vbucket/mbucket dir the Spark expressions assign, the band rows
-    equal ``rp_band_rows_for``'s, and values and types round-trip (with
-    the read schema and with the one Spark infers from the files)."""
+    vbucket/mbucket dir the Spark expressions assign, the band keys the
+    engine derives from the stored vecs equal ``rp_band_rows_for``'s,
+    and values and types round-trip (with the read schema and with the
+    one Spark infers from the files)."""
     import datetime
     import decimal
     import os
 
     from adk_noui_vectordb_spark.api.collection import (
-        BANDS_SCHEMA,
         VECS_SCHEMA,
         _mbucket_expr,
+        _reader,
         _sid_expr,
+        _vec_parts,
     )
     from adk_noui_vectordb_spark.operators.ann import (
+        N_VEC_BUCKETS,
         RP_DIM,
-        _nonzero_pred,
         rp_band_rows_for,
         vec_bucket_expr,
     )
@@ -713,19 +715,24 @@ def test_driver_writer_matches_spark_hash_twins(spark, tmp_path):
 
     meta = spark.read.schema(info["meta_schema"]).parquet(os.path.join(cur, "meta"))
     vecs = spark.read.schema(VECS_SCHEMA).parquet(os.path.join(cur, "vecs"))
-    bands = spark.read.schema(BANDS_SCHEMA).parquet(os.path.join(cur, "bands"))
     assert meta.filter(
         (F.col("vec_id") != _sid_expr(F.col("id")))
         | (F.col("mbucket") != _mbucket_expr(F.col("vec_id")))
     ).count() == 0
     assert vecs.filter(F.col("vbucket") != vec_bucket_expr(F.col("vec_id"))).count() == 0
-    assert sorted(map(tuple, bands.select("vec_id", "band", "band_key").collect())) == sorted(
-        map(
-            tuple,
-            rp_band_rows_for(vecs.select("vec_id", "emb").filter(_nonzero_pred())).collect(),
-        )
-    )
-    assert bands.select("vec_id").distinct().count() == len(ids) - 1  # not the zero vector
+    derived = {
+        (int(v), b, int(k[b]))
+        for p in _vec_parts(_reader(spark, cur), RP_DIM, range(N_VEC_BUCKETS))
+        for v, k in zip(p[0], p[2])
+        for b in range(RP_BANDS)
+        if k[b] >= 0
+    }
+    zero = _sid_py("zero")
+    twin = {
+        tuple(r) for r in rp_band_rows_for(vecs.select("vec_id", "emb")).collect()
+    }
+    assert derived == {r for r in twin if r[0] != zero}
+    assert {v for v, _, _ in derived} == {_sid_py(i) for i in ids} - {zero}
 
     want = {r[0]: tuple(r) for r in batch.collect()}
     sid_to_id = {r["vec_id"]: r["id"] for r in meta.collect()}
@@ -955,7 +962,6 @@ def test_merge_disjoint_shards(spark, tmp_path):
     # component invariants survive the merge
     cur, info = dst._require()
     assert dst._vecs(cur).count() == 10
-    assert dst._bands(cur).count() == 10 * RP_BANDS
 
 
 def test_merge_conflict_modes(spark, tmp_path):
@@ -1053,10 +1059,9 @@ def test_fsck_and_include_embeddings(spark, coll):
 
 
 def test_fsck_flags_each_broken_invariant(spark, tmp_path):
-    """Each of fsck's four semantic checks fails, alone, on a committed
+    """Each of fsck's two semantic checks fails, alone, on a committed
     version whose part file was rewritten (same name) to break it: a
-    meta row dropped, a band row pointing at no vector, a band row
-    dropped, a second id under one surrogate."""
+    meta row dropped, a second id under one surrogate."""
     import os
 
     import pyarrow as pa
@@ -1070,11 +1075,6 @@ def test_fsck_flags_each_broken_invariant(spark, tmp_path):
 
     breaks = {
         "vecs_meta_same_ids": ("meta", lambda t: t.slice(1)),
-        "bands_subset_of_vecs": (
-            "bands",
-            lambda t: pa.concat_tables([with_first(t, "vec_id", -1), t.slice(1)]),
-        ),
-        "nonzero_band_fanout": ("bands", lambda t: t.slice(1)),
         "surrogates_unique": (
             "meta",
             lambda t: pa.concat_tables([t, with_first(t, "id", "impostor")]),
@@ -1095,6 +1095,152 @@ def test_fsck_flags_each_broken_invariant(spark, tmp_path):
         os.unlink(path)  # the version's own copy: its hardlinks keep theirs
         pq.write_table(broken, path)
         assert [c for c, ok, _ in coll.fsck() if not ok] == [check]
+
+
+def test_fsck_reads_footers_without_spark(spark, tmp_path):
+    """fsck checks each component's readability from its files' parquet
+    footers on the driver: no Spark job, healthy or not, and a
+    truncated vecs part file is flagged by its exception's name."""
+    import os
+
+    coll = Collection(spark, str(tmp_path / "footers"))
+    coll.add(_local_batch(spark, [f"f{i}" for i in range(12)], _vecs(53, 12)))
+    sc = spark.sparkContext
+
+    def fsck():
+        sc.setJobGroup("fsck-footers", "fsck")
+        try:
+            out = coll.fsck()
+        finally:
+            sc.setJobGroup(None, None)
+        return {c: (ok, d) for c, ok, d in out}
+
+    checks = fsck()
+    assert all(ok for ok, _ in checks.values()), checks
+    assert checks["component_vecs"] == (True, "rows=12")
+    assert checks["component_meta"] == (True, "rows=12")
+    path = next(
+        os.path.join(d, f)
+        for d, _, files in sorted(os.walk(os.path.join(coll._cur(), "vecs")))
+        for f in sorted(files)
+        if f.endswith(".parquet")
+    )
+    with open(path, "rb") as f:
+        data = f.read()
+    os.unlink(path)  # the version's own copy: its hardlinks keep theirs
+    with open(path, "wb") as f:
+        f.write(data[: len(data) // 2])
+    checks = fsck()
+    assert checks["component_vecs"] == (False, "ArrowInvalid")
+    assert checks["component_meta"] == (True, "rows=12")
+    assert len(sc.statusTracker().getJobIdsForGroup("fsck-footers")) == 0
+
+
+def test_commit_writes_one_file_per_touched_partition(spark, coll):
+    """An upsert or delete writes exactly one new data file in each
+    vbucket and mbucket partition holding a replaced, deleted or added
+    row (none where a delete empties the partition), hardlinks every
+    other file, and writes no band table."""
+    import os
+
+    from adk_noui_vectordb_spark.api.collection import _mbucket_py
+    from adk_noui_vectordb_spark.operators.ann import vec_bucket_py
+
+    base = [f"c{i:02d}" for i in range(40)]
+    coll.add(_local_batch(spark, base, _vecs(54, 40)))
+
+    def files(ver):
+        """{data file path relative to ``ver``: its inode}"""
+        paths = [
+            os.path.join(d, f)
+            for d, _, fs in os.walk(ver)
+            for f in fs
+            if f.endswith(".parquet")
+        ]
+        return {os.path.relpath(p, ver): os.stat(p).st_ino for p in paths}
+
+    def check(commit, touched_ids):
+        old = set(files(coll._cur()).values())
+        commit()
+        cur = coll._cur()
+        new = sorted(r for r, ino in files(cur).items() if ino not in old)
+        sids = [_sid_py(i) for i in touched_ids]
+        touched = {f"vecs/vbucket={vec_bucket_py(s)}" for s in sids} | {
+            f"meta/mbucket={_mbucket_py(s)}" for s in sids
+        }
+        assert [os.path.dirname(r) for r in new] == sorted(
+            p for p in touched if os.path.isdir(os.path.join(cur, p))
+        )
+        assert sorted(os.listdir(cur)) == ["collection.json", "meta", "vecs"]
+
+    up = base[:5] + ["c_new0", "c_new1"]
+    check(lambda: coll.upsert(_local_batch(spark, up, _vecs(55, 7))), up)
+    check(lambda: coll.delete(ids=base[30:33]), base[30:33])
+    assert coll.count() == 39
+    assert [c for c, ok, _ in coll.fsck() if not ok] == []
+
+
+def test_legacy_band_store_is_ignored_then_dropped(spark, tmp_path):
+    """A version written by the old layout also holds a ``bands/``
+    table: reads serve it exactly like the same rows without one, fsck
+    is clean, and its next upsert and its next compaction each publish
+    a version without ``bands/``."""
+    import os
+
+    from adk_noui_vectordb_spark.operators.ann import (
+        RP_DIM,
+        _nonzero_pred,
+        rp_band_rows_for,
+    )
+    from adk_noui_vectordb_spark.sources import versioning as vn
+
+    mat = np.random.default_rng(56).normal(size=(40, RP_DIM)).round(3)
+    ids = [f"g{i:02d}" for i in range(40)]
+    langs = ["en", "de"] * 20
+    shard = Collection(spark, str(tmp_path / "shard"))
+    shard.add(_local_batch(spark, ids[20:], mat[20:], langs[20:]))
+    plain = Collection(spark, str(tmp_path / "plain"))
+    legacy = Collection(spark, str(tmp_path / "legacy"))
+    for c in (plain, legacy):
+        c.add(_local_batch(spark, ids[:20], mat[:20], langs[:20]))
+        c.merge_from(shard)  # disjoint: two files per shared partition
+    cur = legacy._cur()
+    vecs = legacy._vecs(cur).select("vec_id", "emb").filter(_nonzero_pred())
+    vn.commit_version(
+        spark,
+        legacy.root,
+        [
+            vn.Component("vecs", link_from=os.path.join(cur, "vecs")),
+            vn.Component("meta", link_from=os.path.join(cur, "meta")),
+            vn.Component(
+                "bands", ("band", "band_key"), writes=(rp_band_rows_for(vecs),)
+            ),
+        ],
+        expected=os.path.basename(cur),
+    )
+    assert os.path.isdir(os.path.join(legacy._cur(), "bands"))
+    old = legacy.fork(str(tmp_path / "legacy_fork"))
+
+    def answers(c):
+        qs = [[float(x) for x in mat[j] + 0.1] for j in (0, 25, 33)]
+        return [
+            c.query(qs, n_results=5).collect(),
+            c.query(qs, n_results=5, where={"lang": "de"}).collect(),
+            c.get(include=["embeddings", "documents", "metadatas"]).collect(),
+        ]
+
+    assert answers(legacy) == answers(plain)
+    assert [c for c, ok, _ in legacy.fsck() if not ok] == []
+    before = legacy._cur()
+    assert legacy.compact() != before
+    assert not os.path.exists(os.path.join(legacy._cur(), "bands"))
+    assert answers(legacy) == answers(plain)
+    batch = _local_batch(spark, ids[:3] + ["g_new"], mat[4:8] * 2, ["fr"] * 4)
+    old.upsert(batch)
+    plain.upsert(batch)
+    assert not os.path.exists(os.path.join(old._cur(), "bands"))
+    assert answers(old) == answers(plain)
+    assert [c for c, ok, _ in old.fsck() if not ok] == []
 
 
 def test_client_named_collections(spark, tmp_path):
@@ -1148,7 +1294,7 @@ def test_disjoint_merge_is_metadata_only(spark, tmp_path):
 
     cur, info = dst._require()
     src_inodes = inodes(str(tmp_path / "ha")) | inodes(str(tmp_path / "hb"))
-    for comp in ("bands", "vecs", "meta"):
+    for comp in ("vecs", "meta"):
         got = inodes(os.path.join(cur, comp))
         assert got and got <= src_inodes, comp  # every file linked, none rewritten
     # and it still SERVES correctly

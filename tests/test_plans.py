@@ -293,10 +293,11 @@ def test_new_serving_ops_prune_and_avoid_corpus(spark, sf_dir):
 
 def test_collection_serving_plans_are_index_only(spark, sf_dir, opened_dirs):
     """The facade's reads stay inside the collection root: a probe
-    opens only band=/band_key= dirs it probed and the vbucket=/mbucket=
-    dirs of their candidates, a filtered get opens only meta dirs, and
-    neither ever opens the source documents/embeddings parquet — the
-    collection root is the corpus of record."""
+    opens only vbucket= dirs (the band keys it matches are held with
+    the stored vectors) and the mbucket= dirs of its candidates, a
+    filtered get opens only meta dirs, and neither ever opens the
+    source documents/embeddings parquet — the collection root is the
+    corpus of record."""
     from adk_noui_vectordb_spark.api import collection as capi
 
     coll = capi.demo_collection(spark, sf_dir)
@@ -305,9 +306,7 @@ def test_collection_serving_plans_are_index_only(spark, sf_dir, opened_dirs):
     capi.collection_query_topk(spark, sf_dir).collect()
     assert seen and all(p.startswith(cur + os.sep) for p in seen), seen
     comps = {os.path.relpath(p, cur).split(os.sep)[0] for p in seen}
-    assert comps == {"bands", "vecs", "meta"}, seen
-    bands = {os.path.relpath(p, cur) for p in seen if "/bands/" in p}
-    assert 0 < len(bands) <= 6 * 5, bands  # 6 bands x (key + 4 flips)
+    assert comps == {"vecs", "meta"}, seen
     assert not any("documents" in p or "embeddings" in p for p in seen)
 
     seen.clear()
