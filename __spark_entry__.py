@@ -28,7 +28,6 @@ Cross-engine parity rules used throughout (see SURVEY.md §5):
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -316,7 +315,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # vecs+meta components (api/collection.py)
         "collection_query_topk": _coll.collection_query_topk,
         # r12: the facade served by the reference's ACTUAL structure —
-        # beam search over a navigable-graph sidecar of the collection's
+        # beam search over the navigable graph of the collection's
         # own vectors (hnswlib is Chroma's backend), filter at emission
         "collection_query_graph_topk": _coll.collection_query_graph_topk,
         "collection_query_graph_batch_topk": (
@@ -335,9 +334,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # r13: the write-side counterpart — rollback() pointer swing,
         # get serves the restored state (crash-window convergent)
         "collection_rollback_get": _coll.collection_rollback_get,
-        # r14: incremental vector REPLACE through the graph sidecar —
-        # tombstone-old + add-under-private-rid + alias emission, the
-        # whole lifecycle replayed deterministically per run
+        # vector REPLACE then a graph query: the graph of the new
+        # version's vectors, the whole lifecycle replayed per run
         "collection_replace_graph_topk": _coll.collection_replace_graph_topk,
         # r11: keyset pagination through the facade (after_id cursor —
         # the BM25 search_after discipline on the metadata store)
@@ -745,8 +743,7 @@ def _graph_build_ctes(
 ) -> list:
     """The graph-construction CTE chain shared by every Collection graph
     twin (solo / batch / ACORN / replace): cell-join layer-0 edges at
-    rank <= degree, md5-min hubs + the all-pairs hub mesh (the default
-    hub_allpairs_max keeps every test SF on one mesh level), star
+    rank <= degree, md5-min hubs + the all-pairs hub mesh, star
     bridges, capped reversals — ending at ``gedges`` (the unified
     bidirectional adjacency).
 
@@ -1056,146 +1053,37 @@ def _collection_replace_graph_sql(
     hub_degree: int = 8,
     iters: int = 2,
 ) -> str:
-    """Incremental vector-REPLACE lifecycle twin (api/collection.py
-    collection_replace_graph_topk): the v_000000 graph is the blind
-    facade build over the surrogate keyspace; doc-3's replacement rides
-    the UPDATE-path edge discipline for its private rid =
-    md5('rep|v_000001|<sid>') (graph_ann.update_graph_index: frozen-
-    centroid top-GRAPH_BUILD_NPROBE-cell candidates over the md5-capped
-    union members, star bridge to the frozen cell hub, reversals — the
-    batch is ONE row here so the reversal cap cannot bind); the beam
-    walks the UNION adjacency with the rid's vector added to the
-    fetchable store (the tombstoned old node keeps routing — tombstones
-    never prune traversal); emission translates rid->sid, set-dedups,
-    and ranks by distance against the CURRENT (post-replace) vectors.
-    Zero-norm members may hold md5-cap slots but never score into the
-    top-degree (their cosine is undefined; Spark sorts them last) — the
-    twin mirrors by capping over ALL members and scoring only nonzero
-    ones, exact while every touched cell has ≥ degree nonzero members
-    (true at every test SF)."""
-    sid3 = _coll._sid_py("doc-3")
-    sid7 = _coll._sid_py("doc-7")
-    rid = int(
-        hashlib.md5(f"rep|v_000001|{sid3}".encode()).hexdigest()[:15], 16
-    )
-    np_ = _gann.GRAPH_BUILD_NPROBE
-    cap = _ann.IVF_JOIN_CELL_CAP
-    ctes = [_GCOLL_CTE]
+    """Vector-REPLACE lifecycle twin (api/collection.py
+    collection_replace_graph_topk): the graph of the post-update
+    version is the standard surrogate-keyspace build over the demo
+    corpus with doc-3's embedding swapped for embeddings[7]'s, then the
+    raw-vector beam at doc-7's vector, no where-filter, the facade
+    distance contract."""
+    qid = _coll._sid_py("doc-7")
+    ctes = [
+        """gcoll AS (
+  SELECT CAST(('0x' || substr(md5('doc-' || CAST(e.vec_id AS VARCHAR)), 1, 15))
+              AS BIGINT) AS vec_id,
+         CASE WHEN e.vec_id = 3
+              THEN (SELECT embedding FROM embeddings WHERE vec_id = 7)
+              ELSE e.embedding END AS embedding,
+         e.vec_id AS doc_id
+  FROM embeddings e)"""
+    ]
     ctes += _graph_build_ctes(degree, hub_degree, iters, source="gcoll")
-    dist_u = (
-        "round(list_inner_product(unew.emb, unew.emb)"
-        " - 2 * list_inner_product(unew.emb, c.c)"
-        " + list_inner_product(c.c, c.c), 6)"
-    )
-    cos_un = _COS.format(a="unew.emb", b="g.embedding")
-    ctes += [
-        # the replacement vector (embeddings[7]'s), and the rid's
-        # frozen-centroid probes: rn=1 (membership/star) and rn<=nprobe
-        # (edge candidates)
-        "unew AS (SELECT CAST(embedding AS DOUBLE[]) AS emb"
-        " FROM embeddings WHERE vec_id = 7)",
-        f"""ucells AS (
-  SELECT cluster, rn FROM (
-    SELECT c.cluster,
-           row_number() OVER (ORDER BY {dist_u}, c.cluster) AS rn
-    FROM c{iters}s c CROSS JOIN unew) WHERE rn <= {np_})""",
-        # union members of the touched cells (existing rn=1 assignment
-        # plus the rid in its own cell), md5-capped per cluster
-        f"""umem AS (
-  SELECT a.vec_id, a.cluster FROM af a JOIN ucells u ON a.cluster = u.cluster
-  UNION ALL
-  SELECT {rid} AS vec_id, cluster FROM ucells WHERE rn = 1)""",
-        f"""umcap AS (
-  SELECT vec_id, cluster FROM (
-    SELECT vec_id, cluster,
-           row_number() OVER (PARTITION BY cluster
-                              ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS m
-    FROM umem) WHERE m <= {cap})""",
-        f"""uknn AS (
-  SELECT src, nbr, sim FROM (
-    SELECT {rid} AS src, m.vec_id AS nbr, {cos_un} AS sim,
-           row_number() OVER (ORDER BY {cos_un} DESC, m.vec_id) AS rk
-    FROM umcap m
-    JOIN gcoll g ON g.vec_id = m.vec_id
-    JOIN nz ON nz.vec_id = m.vec_id
-    CROSS JOIN unew
-    WHERE m.vec_id <> {rid}) WHERE rk <= {degree})""",
-        f"""ustar AS (
-  SELECT {rid} AS src, h.vec_id AS nbr, {cos_un} AS sim
-  FROM ghubs h
-  JOIN ucells u ON u.cluster = h.cluster AND u.rn = 1
-  JOIN gcoll g ON g.vec_id = h.vec_id
-  CROSS JOIN unew
-  WHERE h.vec_id <> {rid})""",
-        "ufwd AS (SELECT DISTINCT src, nbr FROM"
-        " (SELECT src, nbr FROM uknn UNION ALL SELECT src, nbr FROM ustar))",
-        "alledges AS (SELECT src, nbr FROM gedges"
-        " UNION SELECT src, nbr FROM ufwd"
-        " UNION SELECT nbr AS src, src AS nbr FROM ufwd)",
-        # fetchable vectors during the beam: the frozen store + the rid
-        f"vall AS (SELECT vec_id, embedding FROM gcoll"
-        f" UNION ALL SELECT {rid} AS vec_id,"
-        f" (SELECT embedding FROM embeddings WHERE vec_id = 7) AS embedding)",
-        # CURRENT collection vectors (post-replace) for final ranking
-        "gcur AS (SELECT g.vec_id, g.doc_id,"
-        " CASE WHEN g.doc_id = 3 THEN"
-        " (SELECT embedding FROM embeddings WHERE vec_id = 7)"
-        " ELSE g.embedding END AS embedding FROM gcoll g)",
-    ]
-    # the beam: the facade chain with vall as the vector store and
-    # alledges as the adjacency — query = doc-7's (unchanged) vector
-    cos_q = _COS.format(a="em.embedding", b="qe.q")
-    sc = _gann.GRAPH_SEED_CELLS
-    dist_q = (
-        "round(list_inner_product(qe.q, qe.q)"
-        " - 2 * list_inner_product(qe.q, c.c)"
-        " + list_inner_product(c.c, c.c), 6)"
-    )
-    ctes += [
-        f"qe AS (SELECT CAST(embedding AS DOUBLE[]) AS q"
-        f" FROM gcoll WHERE vec_id = {sid7})",
-        "gent AS (SELECT vec_id FROM ghubs"
-        " ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 1)",
-        f"""gqc AS (
-  SELECT cluster FROM (
-    SELECT c.cluster,
-           row_number() OVER (ORDER BY {dist_q}, c.cluster) AS rn
-    FROM c{iters}s c CROSS JOIN qe) WHERE rn <= {sc})""",
-        """gseed AS (
-  SELECT vec_id FROM gent
-  UNION
-  SELECT h.vec_id FROM ghubs h JOIN gqc USING (cluster))""",
-        f"""gv0 AS (
-  SELECT em.vec_id, {cos_q} AS sim
-  FROM vall em JOIN gseed s ON s.vec_id = em.vec_id
-  CROSS JOIN qe)""",
-    ]
-    for r in range(1, rounds + 1):
-        ctes.append(
-            f"gf{r} AS (SELECT vec_id FROM gv{r - 1}"
-            f" ORDER BY sim DESC, vec_id LIMIT {beam})"
-        )
-        ctes.append(f"""gv{r} AS (
-  SELECT vec_id, sim FROM gv{r - 1}
-  UNION
-  SELECT em.vec_id, {cos_q} AS sim
-  FROM alledges ed
-  JOIN gf{r} f ON ed.src = f.vec_id
-  JOIN vall em ON em.vec_id = ed.nbr
-  CROSS JOIN qe)""")
+    ctes += _coll_graph_query_ctes(qid, "", beam, rounds)
     mat = (
         _GRAPH_MAT
         | {f"gv{r}" for r in range(rounds + 1)}
-        | {"gseed", "gcoll", "vall", "alledges", "umcap"}
+        | {"gseed", "gcoll"}
     )
     ctes = _mat_ctes(ctes, mat)
     dist = "1 - " + _COS.format(a="g.embedding", b="qe.q")
     return (
         "WITH " + ",\n".join(ctes) + f"""
 SELECT 'doc-' || CAST(g.doc_id AS VARCHAR) AS id, {dist} AS distance
-FROM (SELECT DISTINCT CASE WHEN vec_id = {rid} THEN {sid3} ELSE vec_id END
-             AS vec_id FROM gv{rounds}) v
-JOIN gcur g ON g.vec_id = v.vec_id
+FROM gv{rounds} v
+JOIN gcoll g ON g.vec_id = v.vec_id
 CROSS JOIN qe
 ORDER BY distance ASC, id ASC
 LIMIT {k}

@@ -675,376 +675,77 @@ class Collection:
             StructType(struct),
         )
 
-    def _graph_lineage_dir(self) -> str:
-        """The graph sidecar's LINEAGE state dir — stable across
-        collection commits (unlike ``index_root``, which fingerprints
-        the whole store and so changes on every commit by design).
-        Holds ``state.json``: which collection version the current
-        graph sidecar reflects, that version's parquet fingerprint
-        (stale-path guard: a recreated collection at the same path must
-        never be served a previous collection's graph), and the scratch
-        sf_dir whose graph root carries the sidecar's version history.
+    def _graph(self, cur: str, dim: int) -> tuple:
+        """(``graph_ann.build_graph`` of the version ``cur``'s vectors,
+        {id: embedding row}). A pure function of the vectors, so it is
+        memoized on the version's ``vecs/`` data-file names: every graph
+        query of one version shares one build, a version that hardlinked
+        the same files shares it too, and a commit that changed a vector
+        (a recommit after a rollback included) wrote new uuid names and
+        builds again."""
+        from ..memo import files_memo
+        from ..operators import graph_ann
 
-        Lives INSIDE the collection root (ADVICE r13: a world-shared
-        /tmp path could be pre-created/poisoned by another local user
-        and outlived the collection it described, decoupling state and
-        collection lifetimes). The versioning layer only ever touches
-        ``v_*`` / ``.__tmp_*`` entries, so a dotted sibling is inert to
-        commits/compaction — and ``delete_collection``'s rm -rf now
-        takes the lineage down WITH the collection, closing the
-        recreate-at-same-path staleness window structurally."""
-        return os.path.join(self.root, ".graph_lineage")
-
-    def _graph_sidecar(self, cur: str) -> str:
-        """Resolve the navigable-graph sidecar index over THIS
-        collection version's vectors — the reference's actual serving
-        structure (ChromaDB's default index IS hnswlib). INCREMENTAL
-        (VERDICT r12 next #3): the first graph query stages the version
-        as a scratch corpus and full-builds; subsequent versions apply
-        the vecs DELTA against the last reflected version through
-        ``update_graph_index`` (pure additions) and
-        ``delete_from_graph_index`` (pure removals) on the SAME graph
-        root — a steady upsert stream pays O(batch) per commit, exactly
-        hnswlib's ``add_items`` amortization, instead of a full rebuild
-        per version. CHANGED embeddings are incremental too (r14,
-        VERDICT r13 next #4): the old sid is tombstoned and the new
-        vector added under a fresh surrogate rid in the sidecar's
-        PRIVATE id space — the graph stays ADD-only (hnswlib's own
-        contract) while an update()-heavy workload pays O(batch) per
-        commit; the rid→sid alias map rides the lineage state and is
-        applied at pool emission (``_graph_alias_map``). Re-added
-        tombstoned ids, a compacted-away predecessor version, a
-        cross-lifetime fingerprint mismatch, or a concurrent-writer
-        race still fall back to the full rebuild (which RESETS the
-        alias map — a fresh scratch serves plain sids). Emission safety
-        is structural: deltas only ever REMOVE ids from the
-        collection's vecs store, and every strategy's final scoring
-        reads the CURRENT version's vecs, so tombstoned pool
-        candidates drop out there (a replaced sid surviving in a pool
-        as a routing bridge scores with its CURRENT vector — right
-        answer by construction; the alias translation dedups it against
-        its rid twin). Returns the graph version dir."""
-        from ..memo import dataset_fingerprint, index_root, version_memo
-        from ..operators.graph_ann import build_graph_index
-
-        lin = self._graph_lineage_dir()
-        state_p = os.path.join(lin, "state.json")
-        cur_name = os.path.basename(cur)
-        state = None
-        if os.path.exists(state_p):
-            try:
-                with open(state_p) as f:
-                    state = json.load(f)
-            except (OSError, ValueError):
-                state = None
-
-        def _fp(ver_dir: str) -> list:
-            # a published version never changes; keying on the dir's
-            # identity as well as its path makes a commit that reuses a
-            # rolled-back version's name miss and re-fingerprint
-            return version_memo(
-                self.spark,
-                ver_dir,
-                "coll_fingerprint",
-                lambda: [list(t) for t in dataset_fingerprint(ver_dir)],
-                _dir_id(ver_dir),
-            )
-
-        def _save(scratch: str, alias: "dict | None" = None) -> None:
-            os.makedirs(lin, exist_ok=True)
-            tmp = state_p + ".__tmp__"
-            with open(tmp, "w") as f:
-                json.dump(
-                    {
-                        "coll_ver": cur_name,
-                        "fp": _fp(cur),
-                        "scratch": scratch,
-                        # sid -> PRIVATE graph id for incrementally
-                        # replaced vectors; {} after a full rebuild (a
-                        # fresh scratch serves plain sids)
-                        "alias": alias or {},
-                    },
-                    f,
-                )
-            os.replace(tmp, state_p)
-
-        if state is not None and state.get("coll_ver") == cur_name:
-            if state.get("fp") == _fp(cur) and os.path.isdir(
-                state.get("scratch", "")
-            ):
-                # the sidecar already reflects this exact version
-                return build_graph_index(self.spark, state["scratch"])
-            state = None  # same name, different content: stale lineage
-        if (
-            state is not None
-            and state.get("coll_ver", "") < cur_name
-            and os.path.isdir(os.path.join(self.root, state.get("coll_ver", "")))
-            and os.path.isdir(state.get("scratch", ""))
-            # ADVICE r13 (medium): the delta branch must verify the
-            # lineage's stored fingerprint against the PREV version dir
-            # it is about to diff from — version dirs are immutable
-            # within a lifetime, so a mismatch can only mean the
-            # lineage outlived its collection (recreated at the same
-            # path with version numbering past the stale coll_ver);
-            # falling through serves a full rebuild instead of applying
-            # a new-collection delta to an old-collection graph
-            and state.get("fp")
-            == _fp(os.path.join(self.root, state["coll_ver"]))
-        ):
-            prev = os.path.join(self.root, state["coll_ver"])
-            try:
-                gver, alias = self._graph_apply_delta(
-                    state["scratch"], prev, cur, state.get("alias") or {}
-                )
-                _save(state["scratch"], alias)
-                return gver
-            except (ValueError, vn.ConcurrentWriterError):
-                pass  # not incrementally applicable: full rebuild below
-        # full (re)build: stage this version as a fresh scratch corpus
-        # (content-addressed by version name + store fingerprint) and
-        # run the shared build pipeline — one graph lifecycle
-        # implementation, not a facade fork
-        scratch = index_root(
-            "coll_graph_corpus", self.root, cur_name
-        )
-        corpus_p = os.path.join(scratch, "embeddings.parquet")
-        if not os.path.isdir(corpus_p):
-            tmp_p = corpus_p + ".__tmp__"
-            self._vecs(cur).select(
-                "vec_id", F.col("emb").alias("embedding")
-            ).write.mode("overwrite").parquet(tmp_p)
-            os.makedirs(scratch, exist_ok=True)
-            try:
-                os.rename(tmp_p, corpus_p)
-            except OSError:
-                pass  # racing stager won; identical content
-        gver = build_graph_index(self.spark, scratch)
-        if state is None or state.get("coll_ver", "") <= cur_name:
-            # never move the lineage BACKWARD: a pinned-snapshot fork
-            # querying an older version gets its own scratch build
-            # without resetting the live lineage
-            _save(scratch)
-        return gver
-
-    def _graph_apply_delta(
-        self, scratch: str, prev: str, cur: str, alias: dict
-    ) -> "tuple[str, dict]":
-        """Advance the sidecar graph from the ``prev`` collection
-        version to ``cur`` by the vecs diff: pure additions stream
-        through ``update_graph_index`` (frozen coarse structure, capped
-        reversed edges), pure removals through
-        ``delete_from_graph_index`` (tombstones keep routing), and
-        CHANGED embeddings (same sid, new vector) become tombstone-old
-        + add-under-fresh-surrogate (r14, VERDICT r13 next #4): the
-        graph node for a replaced sid is a PRIVATE rid =
-        md5("rep|version|sid") in the same 60-bit space, recorded in
-        ``alias`` (sid -> live graph id) and translated back at pool
-        emission — the graph stays ADD-only (hnswlib's contract) while
-        update()-heavy workloads pay O(batch) per commit. Deterministic
-        rids make a crash replay idempotent (the whole re-added batch
-        is detected as present and no-ops). Raises ValueError on
-        structural inapplicability (e.g. an rid collision trips the
-        ADD-only guard) — the caller then serves a full rebuild, which
-        resets the alias map. Returns (graph version dir, new alias)."""
-        from ..operators.graph_ann import (
-            build_graph_index,
-            delete_from_graph_index,
-            update_graph_index,
-        )
-
-        from ..operators.dedup import md5_long
-
-        pv = self._vecs(prev).select("vec_id", "emb")
-        cv = self._vecs(cur).select("vec_id", "emb")
-        cur_name = os.path.basename(cur)
-        # ADVICE r14 #3: the rid derives DISTRIBUTEDLY (md5_long over
-        # the same "rep|version|sid" string the driver loop used to
-        # hash — identical first-15-hex-chars value), and the driver
-        # collects only the (sid, rid) id pairs for the alias map —
-        # never the changed embeddings, so an update()-heavy commit on
-        # a wide-embedding collection stays O(batch × 16 bytes) driver
-        # memory, not O(batch × dim)
-        changed = (
-            cv.join(pv.select("vec_id", F.col("emb").alias("pe")), "vec_id")
-            .filter(F.col("emb") != F.col("pe"))
-            .select(
-                "vec_id",
-                "emb",
-                md5_long(
-                    F.concat(
-                        F.lit(f"rep|{cur_name}|"),
-                        F.col("vec_id").cast("string"),
-                    )
-                ).alias("rid"),
+        files = tuple(
+            sorted(
+                (rel, names)
+                for rel, names in _version_parts(self.spark, cur).items()
+                if rel.startswith("vecs" + os.sep)
             )
         )
-        alias = dict(alias)
-        tomb_ids = []
-        n_changed = 0
-        for r in changed.select("vec_id", "rid").collect():
-            sid = int(r["vec_id"])
-            n_changed += 1
-            # tombstone the sid's LIVE graph node (the sid itself, or
-            # the rid of an earlier replacement)
-            tomb_ids.append(int(alias.get(str(sid), sid)))
-            alias[str(sid)] = int(r["rid"])
-        added = cv.join(pv.select("vec_id"), "vec_id", "left_anti")
-        removed = [
-            int(r["vec_id"])
-            for r in pv.join(cv.select("vec_id"), "vec_id", "left_anti")
-            .select("vec_id")
-            .collect()
-        ]
-        for sid in removed:
-            tomb_ids.append(int(alias.pop(str(sid), sid)))
-        gver = build_graph_index(self.spark, scratch)
-        if n_changed:
-            added = added.unionByName(
-                changed.select(F.col("rid").alias("vec_id"), "emb")
-            )
-        if added.head(1):
-            gver = update_graph_index(self.spark, scratch, added)
-        if tomb_ids:
-            gver = delete_from_graph_index(self.spark, scratch, tomb_ids)
-        return gver, alias
 
-    def _graph_alias_map(self) -> dict:
-        """{private graph id -> sid} for incrementally REPLACED vectors
-        (the inverse of the lineage's sid->rid alias) — applied when a
-        graph pool's ids become collection candidates. Empty when the
-        sidecar has never replaced (the common case: zero overhead)."""
-        state_p = os.path.join(self._graph_lineage_dir(), "state.json")
-        try:
-            with open(state_p) as f:
-                alias = json.load(f).get("alias") or {}
-        except (OSError, ValueError):
-            return {}
-        return {int(g): int(s) for s, g in alias.items()}
+        def build():
+            read = _reader(self.spark, cur)
+            # rows are views of the memoized partition arrays, not copies
+            payload = {
+                i: row
+                for ids, emb, *_ in _vec_parts(read, dim, range(N_VEC_BUCKETS))
+                for i, row in zip(ids.tolist(), emb)
+            }
+            ids, mat = _vec_rows(read, dim, range(N_VEC_BUCKETS))
+            return graph_ann.build_graph(ids, mat), payload
 
-    @staticmethod
-    def _graph_edges(read, sbucket: int) -> tuple:
-        """({src: [nbr, ...]}, {nbr: embedding row}) of one edges
-        partition of a graph version (``read``); a null payload (an edge
-        whose neighbor has no vector) keeps its adjacency but no
-        embedding."""
-        import numpy as np
+        return files_memo(self.spark, "coll_graph", build, files)
 
-        def convert(t):
-            if t is None:
-                return {}, {}
-            nemb = t.column("nemb").combine_chunks()
-            ok = nemb.is_valid().to_numpy(zero_copy_only=False)
-            flat = nemb.flatten().to_numpy()
-            emb = flat.reshape(int(ok.sum()), -1) if ok.any() else flat
-            adj: dict = {}
-            pay: dict = {}
-            rows = iter(emb)
-            for s, n, has in zip(
-                t.column("src").to_pylist(), t.column("nbr").to_pylist(), ok
-            ):
-                adj.setdefault(s, []).append(n)
-                if has:
-                    pay[n] = next(rows)
-            return adj, pay
-
-        return read(f"edges/sbucket={sbucket}", ["src", "nbr", "nemb"], convert)
-
-    @staticmethod
-    def _graph_coarse(read) -> tuple:
-        """(entry hub, centroid rows sorted by cluster, {cluster: hub})
-        of a graph version (``read``) — the beam's seed doors."""
-
-        def entry(t):
-            return t.sort_by("rk").column("vec_id")[0].as_py()
-
-        def cents(t):
-            return sorted(
-                (
-                    {"cluster": c, "c": v}
-                    for c, v in zip(
-                        t.column("cluster").to_pylist(), t.column("c").to_pylist()
-                    )
-                ),
-                key=lambda r: r["cluster"],
-            )
-
-        def hubs(t):
-            return dict(
-                zip(t.column("cluster").to_pylist(), t.column("hub").to_pylist())
-            )
-
-        return (
-            read("entry", ["rk", "vec_id"], entry),
-            read("cents", ["cluster", "c"], cents),
-            read("cellhubs", ["cluster", "hub"], hubs),
-        )
-
-    def _graph_batch_state(self, gver: str, qvecs: list) -> tuple:
+    def _graph_batch_state(self, cur: str, qvecs: list) -> tuple:
         """The prologue shared by the blind and the ACORN beams: each
         query's seeds are the md5-min entry hub plus the hubs of its
         GRAPH_SEED_CELLS nearest cells (``_seed_hubs``), scored against
-        the seeds' vectors from the graph's ``vecs/`` (NO self-exclusion:
-        a stored vector identical to a query surfaces at distance 0,
-        Chroma semantics). Returns (fetch_adj, payload, visited): every
-        read goes through ``_read_partition``, so a warm beam runs no
-        Spark job."""
-        import numpy as np
-
+        the version's vectors (NO self-exclusion: a stored vector
+        identical to a query surfaces at distance 0, Chroma semantics).
+        Returns (fetch_adj, payload, visited); ``payload`` maps every
+        stored id to its vector."""
         from ..operators.graph_ann import _seed_hubs
 
-        read = _reader(self.spark, gver)
-        entry, cent_rows, hub_of = self._graph_coarse(read)
+        (adjacency, entry, cent_rows, hub_of), payload = self._graph(
+            cur, len(qvecs[0])
+        )
         seeds_per_q = [
-            {int(entry)} | {int(h) for h in _seed_hubs(cent_rows, hub_of, q)}
+            {int(h) for h in _seed_hubs(cent_rows, hub_of, q)}
+            | ({entry} if entry is not None else set())
             for q in qvecs
         ]
-        seeds = set().union(*seeds_per_q)
-        vids, vmat = _vec_rows(
-            read, len(qvecs[0]), {vec_bucket_py(s) for s in seeds}
-        )
-        hit = np.isin(vids, list(seeds))
-        first = {int(v): row for v, row in zip(vids[hit], vmat[hit])}
-        visited = [
-            _sims4(q, ss, first) for q, ss in zip(qvecs, seeds_per_q)
-        ]
-        # shared payload cache filled by fetch_adj from the edge rows'
-        # neighbor embeddings (GRAPH_EDGES_SCHEMA)
-        payload: dict = {}
+        visited = [_sims4(q, ss, payload) for q, ss in zip(qvecs, seeds_per_q)]
 
         def fetch_adj(srcs) -> dict:
-            """{src: {nbr, ...}} from the frontier's sbucket partitions;
-            the neighbors' embeddings land in ``payload``. NO
-            per-source expansion cap — a sim-ranked cap was measured to
-            sever hub star-doors into interleaved sub-clusters
-            (graph_ann.py GRAPH_SEED_CELLS doc); volume is already
-            bounded by the build's per-source reversal cap."""
-            adj: dict = {}
-            by_bucket: dict = {}
-            for s in srcs:
-                by_bucket.setdefault(vec_bucket_py(s), []).append(s)
-            for sb, ss in by_bucket.items():
-                padj, ppay = self._graph_edges(read, sb)
-                for s in ss:
-                    nbrs = padj.get(s, ())
-                    if nbrs:
-                        adj[s] = set(nbrs)
-                    for n in nbrs:
-                        if n not in payload and n in ppay:
-                            payload[n] = ppay[n]
-            return adj
+            """{src: {nbr, ...}} of the frontier. NO per-source
+            expansion cap — a sim-ranked cap was measured to sever hub
+            star-doors into interleaved sub-clusters (graph_ann.py
+            GRAPH_SEED_CELLS doc); volume is already bounded by the
+            build's per-source reversal cap."""
+            return {s: set(adjacency[s].tolist()) for s in srcs if s in adjacency}
 
         return fetch_adj, payload, visited
 
     def _graph_beam_batch(
-        self, gver: str, qvecs: list, beam: int, rounds: int
+        self, cur: str, qvecs: list, beam: int, rounds: int
     ) -> list:
-        """Beam searches for M RAW query vectors with FUSED IO: each
-        round reads the edges partitions of the union of all frontiers
-        once (candidate embeddings ride the edge rows). Per-query
-        visited state is untouched, so each query's evolution equals
-        its solo run. Returns one {graph id: 4-dp sim} per query, in
-        input order."""
-        fetch_adj, payload, visited = self._graph_batch_state(gver, qvecs)
+        """Beam searches for M RAW query vectors over the graph of the
+        version ``cur``, expanding the union of all frontiers once per
+        round. Per-query visited state is untouched, so each query's
+        evolution equals its solo run. Returns one {id: 4-dp sim} per
+        query, in input order."""
+        fetch_adj, payload, visited = self._graph_batch_state(cur, qvecs)
         frontier = [
             sorted(v, key=lambda x: (-v[x], x))[:beam] for v in visited
         ]
@@ -1069,7 +770,7 @@ class Collection:
         return visited
 
     def _graph_beam_batch_acorn(
-        self, gver: str, qvecs: list, beam: int, rounds: int, pass_of
+        self, cur: str, qvecs: list, beam: int, rounds: int, pass_of
     ) -> "tuple[list, set]":
         """Predicate-aware beams (after ACORN, SIGMOD'24): per query,
         the frontier ranks PASSING visited nodes first (failing ones
@@ -1077,11 +778,11 @@ class Collection:
         get their own neighbors expanded (hop 2) — so a selective
         ``where`` keeps recall instead of thinning an oblivious pool
         (BASELINE.md r12b: 0.15 at 10% selectivity). Per round: two
-        fused edges reads (frontiers; failing hop-1) plus two ``pass_of``
-        calls on the meta rows. ~2× the blind beam's reads, the
-        documented opt-in cost. Returns (visited list, passing graph id
+        fused expansions (frontiers; failing hop-1) plus two ``pass_of``
+        calls on the meta rows. ~2× the blind beam's work, the
+        documented opt-in cost. Returns (visited list, passing id
         set)."""
-        fetch_adj, payload, visited = self._graph_batch_state(gver, qvecs)
+        fetch_adj, payload, visited = self._graph_batch_state(cur, qvecs)
         passing: set = set(pass_of({s for v in visited for s in v}))
         for _ in range(rounds):
             frontier = [
@@ -1363,8 +1064,8 @@ class Collection:
                 f"surrogate {s} — shard into another collection"
             )
         # a NULL or non-finite embedding (a NULL element reads as NaN
-        # here) has no cosine and breaks the graph sidecar's centroid
-        # literals: rejected, with the dims checked, before any commit
+        # here) has no cosine and breaks the graph's centroid
+        # training: rejected, with the dims checked, before any commit
         embs = [None if r[1] is None else np.asarray(r[1], np.float64) for r in rows]
         bad = [i for i, e in zip(ids, embs) if e is None or not np.isfinite(e).all()]
         if bad:
@@ -2010,8 +1711,11 @@ class Collection:
         rows. 'auto' is OPT-IN so the default plan stays probe-pinned:
         a plan that silently depends on a cardinality is the wrong
         default for a reproducibility-first engine. 'graph' walks the
-        navigable-graph sidecar (``_graph_beam_batch``) and scores its pool
-        like any other candidates.
+        navigable graph of the version's vectors (``_graph_beam_batch``)
+        and scores its pool like any other candidates. The graph is
+        built on the driver by the version's first graph query and
+        memoized on its ``vecs/`` data files (``_graph``), so later
+        queries of the version reuse it; no Spark job either way.
 
         ``query_texts`` is the reference's primary entry
         (``semantic_search(query: str)``, vector_search_tool.py:33-46):
@@ -2124,8 +1828,9 @@ class Collection:
             cands = [sids] * len(mat)
         elif strategy == "graph":
             # the reference's ACTUAL serving structure: beam search over
-            # the navigable-graph sidecar built from this version's
-            # vectors. Candidates are each query's visited pool (the
+            # the navigable graph of this version's vectors (built on
+            # the first graph query of the version, ``_graph``).
+            # Candidates are each query's visited pool (the
             # hnswlib candidate set); the meta filter applies at
             # emission on the pool, never during traversal (the filter-
             # functor discipline — restricting the walk would
@@ -2183,12 +1888,6 @@ class Collection:
                 )
             if graph_rounds is None:
                 graph_rounds = GRAPH_ROUNDS
-            gver = self._graph_sidecar(cur)
-            # replaced vectors live in the graph under private rids —
-            # translate pool ids back to sids at emission (and dedup: a
-            # tombstoned sid surviving as a routing bridge and its rid
-            # twin both name the same document)
-            amap = self._graph_alias_map()
             qlist = [
                 [float(x) for x in mat[qi]] for qi in range(mat.shape[0])
             ]
@@ -2196,49 +1895,28 @@ class Collection:
                 # opt-in ACORN traversal: the where predicate steers the
                 # frontier and failing neighbors expand an extra hop
                 # (see _graph_beam_batch_acorn); a pass lookup masks the
-                # meta rows of the pool ids' mbuckets (by the ids' SID
-                # translation when rids exist)
+                # meta rows of the pool ids' mbuckets
                 def pass_of(ids) -> set:
                     if not ids:
                         return set()
-                    tr = {g: int(amap.get(g, g)) for g in ids}
-                    sids = sorted(set(tr.values()))
-                    meta = _meta_rows(read, info, {_mbucket_py(s) for s in sids})
+                    meta = _meta_rows(read, info, {_mbucket_py(s) for s in ids})
                     vid = meta.column("vec_id").to_numpy()
                     keep = _row_mask(meta, where, where_document)
-                    passing_sids = set(vid[keep & np.isin(vid, sids)].tolist())
-                    return {g for g, s in tr.items() if s in passing_sids}
+                    return set(vid[keep & np.isin(vid, list(ids))].tolist())
 
                 pools, passing = self._graph_beam_batch_acorn(
-                    gver,
+                    cur,
                     qlist,
                     beam=graph_beam,
                     rounds=graph_rounds,
                     pass_of=pass_of,
                 )
-                rows = sorted(
-                    {
-                        (qi, int(amap.get(gid, gid)))
-                        for qi, visited in enumerate(pools)
-                        for gid in visited
-                        if gid in passing
-                    }
-                )
+                pools = [passing.intersection(v) for v in pools]
             else:
                 pools = self._graph_beam_batch(
-                    gver, qlist, beam=graph_beam, rounds=graph_rounds
+                    cur, qlist, beam=graph_beam, rounds=graph_rounds
                 )
-                rows = sorted(
-                    {
-                        (qi, int(amap.get(gid, gid)))
-                        for qi, visited in enumerate(pools)
-                        for gid in visited
-                    }
-                )
-            cands = [
-                np.array([s for q, s in rows if q == qi], np.int64)
-                for qi in range(len(mat))
-            ]
+            cands = [np.array(sorted(v), np.int64) for v in pools]
             sids = np.unique(np.concatenate(cands))
             meta = _meta_rows(read, info, {_mbucket_py(int(s)) for s in sids})
             keep = _row_mask(meta, where, where_document)
@@ -2528,8 +2206,8 @@ def collection_query_topk(
 def collection_query_graph_topk(
     spark: SparkSession, sf_dir: str, query_vec_id: int = 0, k: int = 10
 ) -> DataFrame:
-    """``collection.query`` served by the navigable-graph sidecar —
-    the reference's ACTUAL index structure (ChromaDB's backend is
+    """``collection.query`` served by the navigable graph — the
+    reference's ACTUAL index structure (ChromaDB's backend is
     hnswlib; every other facade strategy approximates it with LSH):
     beam search over the graph built from the collection's own vectors,
     meta filter at emission (predicate-blind traversal), self-match
@@ -2647,38 +2325,25 @@ def collection_rollback_get(spark: SparkSession, sf_dir: str) -> DataFrame:
 def collection_replace_graph_topk(
     spark: SparkSession, sf_dir: str, k: int = 10
 ) -> DataFrame:
-    """Incremental vector REPLACE through the graph sidecar, end-to-end
-    as a driver key (r14 — VERDICT r13 next #4's oracle coverage):
-    v_000000 adds the whole demo corpus; a graph query stages the
-    sidecar at v_000000 (full build); v_000001 ``update``s doc-3's
-    embedding to embeddings[7]'s vector; the next graph query advances
-    the sidecar INCREMENTALLY — tombstone doc-3's old node, add the new
-    vector under the private rid = md5('rep|v_000001|<sid>'), alias-
-    translate at emission. Queried AT the new vector, both doc-7 and
-    the replaced doc-3 surface at distance 0.
+    """Vector REPLACE served by the graph strategy, end-to-end as a
+    driver key: v_000000 adds the whole demo corpus and serves a graph
+    query; v_000001 ``update``s doc-3's embedding to embeddings[7]'s
+    vector; the next graph query builds the graph of v_000001's vectors
+    and, queried AT the new vector, surfaces both doc-7 and the replaced
+    doc-3 at distance 0.
 
     Every run REPLAYS the lifecycle deterministically (the rollback
-    key's discipline): roll back to v_000000, wipe the sidecar lineage
-    (forces the staged-at-v_000000 state), query, update, query — so
-    the driver always exercises the replace path, never a cached
-    shortcut serving a differently-built graph. The oracle reconstructs
-    the v_000000 graph over the surrogate keyspace, applies the
-    update-path edge discipline for the rid (frozen-centroid top-2-cell
-    candidates, md5-capped union members, star bridge, reversals), runs
-    the beam over the UNION adjacency, translates rid->sid, and ranks
-    against the CURRENT (post-replace) vectors."""
-    import shutil
-
+    key's discipline): roll back to v_000000, query, update, query —
+    the recommit reuses the name v_000001 with new data files, so the
+    graph is built again for it. The oracle is the standard graph chain
+    over the demo corpus with doc-3's embedding swapped."""
     coll = _demo_root(spark, sf_dir, "collection_replace_graph_v1")
     base = _demo_batch(spark, sf_dir)
     if coll._cur() is None:
         coll.add(base.drop("par"))
     if os.path.basename(coll._cur()) != "v_000000":
         coll.rollback("v_000000")
-    shutil.rmtree(coll._graph_lineage_dir(), ignore_errors=True)
     qv = _demo_query(spark, sf_dir, 7)
-    # stage the sidecar at v_000000 (the lineage anchor the delta
-    # advances from)
     coll.query(qv, n_results=1, filter_strategy="graph").collect()
     coll.update(
         spark.createDataFrame([("doc-3", qv)], "id string, embedding array<double>")

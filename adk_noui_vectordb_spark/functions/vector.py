@@ -107,32 +107,34 @@ def np_scores(mat, qs, space: str):
     return acc / (np.sqrt(np_fold_sq(mat))[:, None] * np.sqrt(np_fold_sq(qs)))
 
 
-def round4(x: float) -> float:
-    """``F.round(x, 4)`` on a double: HALF_UP on the shortest decimal
-    of ``x`` (``Decimal(repr(x))``, the BigDecimal Spark rounds), zero
-    unsigned, NaN and infinities unchanged. Not ``round``/``np.round``,
-    which round half to even."""
+def round4(x: float, digits: int = 4) -> float:
+    """``F.round(x, digits)`` on a double: HALF_UP on the shortest
+    decimal of ``x`` (``Decimal(repr(x))``, the BigDecimal Spark
+    rounds), zero unsigned, NaN and infinities unchanged. Not
+    ``round``/``np.round``, which round half to even."""
     import math
     from decimal import ROUND_HALF_UP, Decimal
 
     if not math.isfinite(x):
         return x
-    return float(Decimal(repr(x)).quantize(Decimal("0.0001"), ROUND_HALF_UP)) + 0.0
+    q = Decimal(1).scaleb(-digits)
+    return float(Decimal(repr(x)).quantize(q, ROUND_HALF_UP)) + 0.0
 
 
-def np_round4(a):
+def np_round4(a, digits: int = 4):
     """``round4`` over an array. Away from a half-way point the nearest
-    multiple of 1e-4 is the same under every tie rule, so it is taken
-    in numpy; values whose scaled fraction lies near 0.5 (a decimal tie
-    or within float error of one) go through ``round4``."""
+    multiple of 10^-digits is the same under every tie rule, so it is
+    taken in numpy; values whose scaled fraction lies near 0.5 (a
+    decimal tie or within float error of one) go through ``round4``."""
     import numpy as np
 
     a = np.asarray(a, dtype=np.float64)
-    y = a * 1e4
+    scale = 10.0**digits
+    y = a * scale
     mag = np.abs(y)
     frac = mag - np.floor(mag)
-    out = np.copysign(np.floor(mag + 0.5), y) / 1e4 + 0.0
+    out = np.copysign(np.floor(mag + 0.5), y) / scale + 0.0
     near = ~np.isfinite(y) | (np.abs(frac - 0.5) < 1e-6 + mag * 1e-12)
     for i in np.flatnonzero(near):
-        out.flat[i] = round4(float(a.flat[i]))
+        out.flat[i] = round4(float(a.flat[i]), digits)
     return out

@@ -17,7 +17,7 @@ stale signatures/indexes. stat() over a few dozen files is microseconds,
 so the fingerprint is recomputed on every lookup rather than trusted.
 
 The same fingerprint feeds the ON-DISK index tags (``index_root``):
-an IVF/graph index built under /tmp by an earlier process against
+an IVF or text index built under /tmp by an earlier process against
 older testdata must not be served against regenerated data, so the
 directory tag hashes the fingerprint alongside the parameters.
 """
@@ -111,9 +111,14 @@ def session_memo(
 # cheap lazy handles can never FIFO-evict expensive built frames
 # (minhash/simhash/band signatures); LRU because ingest lifecycles mint
 # new version dirs all session long. Sized for the collection read path,
-# which memoizes one entry per partition dir (up to 96 band + 32 vecs +
-# 32 meta dirs per version): a few versions served side by side (an
-# at() view next to the live one) plus the graph sidecar's handles.
+# which memoizes one entry per partition dir (up to 32 vecs + 32 meta
+# dirs per version, shared by the versions that hardlink its files) and
+# one navigable graph per version a graph query served
+# (api/collection.py ``Collection._graph``): a few versions served side
+# by side (an at() view next to the live one). The bound counts
+# entries, not bytes: a graph holds its adjacency plus a view of every
+# vector, so a session that graph-queries many distinct versions keeps
+# up to this many graphs alive.
 VERSION_MEMO_MAX = 1024
 _VERSION_MEMO: "dict[tuple, Any]" = {}
 
@@ -185,8 +190,10 @@ def component_df(spark: SparkSession, ver_dir: str, comp: str, schema: str):
 
 def index_root(name: str, sf_dir: str, *params: Any) -> str:
     """Deterministic on-disk root for a train-once/serve-many index
-    (trained-IVF assignment, graph sidecar, text index): a tmpdir
-    path tagged by md5(name | sf_dir | params | dataset fingerprint).
+    built over a testdata dir (trained-IVF assignment, text, MinHash,
+    containment and late-interaction indexes, the demo collections): a
+    tmpdir path tagged by md5(name | sf_dir | params | dataset
+    fingerprint).
     Regenerated testdata changes the fingerprint, hence the tag, hence
     the directory — the old index is simply never consulted again."""
     import tempfile

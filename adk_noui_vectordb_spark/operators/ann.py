@@ -12,10 +12,11 @@ pieces here are (SURVEY.md section 4):
   index stores them (``rp_band_rows_for``).
 - the sample-trained IVF (``build_ivf_index_sampled``,
   ``ann_ivf_sampled_topk``): partition vectors by nearest centroid and
-  prune to the ``nprobe`` closest cells at query time. Its trainer, the
+  prune to the ``nprobe`` closest cells at query time, with the
   shuffle-free ``assign_*`` kernels and the cell-blocked
-  ``knn_join_ivf_topk`` are what the graph sidecar (graph_ann.py) is
-  built from.
+  ``knn_join_ivf_topk``. The Collection's navigable graph
+  (graph_ann.py) replays the same arithmetic on the driver through
+  ``nearest_centroids``.
 
 Both prune candidates BEFORE an exact rerank; recall is measured against
 brute force in tests.
@@ -209,10 +210,9 @@ def _sampled_centroid_rows(
     e: DataFrame, n_centroids: int, iters: int, train_per_cell: int
 ) -> list:
     """The sampled Lloyd's trainer on any (vec_id, emb) frame — the
-    md5-top-s rank-keyed sample + ``_lloyd`` chain shared by
-    ``build_ivf_index_sampled`` and the graph build's hub-level trainer
-    (graph_ann.py), so both train with byte-identical arithmetic.
-    Returns sorted centroid row dicts ({cluster, c})."""
+    md5-top-s rank-keyed sample + ``_lloyd`` chain of
+    ``build_ivf_index_sampled``. Returns sorted centroid row dicts
+    ({cluster, c})."""
     from pyspark.sql.window import Window
 
     s = n_centroids * train_per_cell
@@ -575,80 +575,98 @@ def _centroid_literal(rows) -> "F.Column":
 CENTROID_LITERAL_MAX_KDIM = 4_096
 
 
-def _assign_broadcast(e: DataFrame, rows, with_emb: bool) -> DataFrame:
-    """Broadcast + Arrow argmin twin of the literal-centroid assignment,
-    used above CENTROID_LITERAL_MAX_KDIM. The ranking contract is the
-    SAME as the literal path — argmin over (round(d2, 6), cluster)
-    lexicographic, where round is Spark's double round (HALF_UP on the
-    SHORTEST-REPR decimal, java.math.BigDecimal.valueOf semantics) and d2
-    folds left-to-right in double — reproduced exactly:
-
-    - the bulk argmin runs vectorized in numpy (raw doubles, no rounding);
-    - numpy's pairwise summation and the HOF fold differ only in the last
-      ulps (~1e-12 absolute here), and 6-dp rounding can only reorder two
-      distances within 1e-6 of each other, so ONLY rows whose top-2 raw
-      distances sit within a 1.5e-6 ambiguity window can possibly differ
-      from the literal path — for exactly those rows the kernel recomputes
-      the candidates with the exact left-to-right fold and
-      Decimal(repr(x)) HALF_UP rounding and applies the cluster tie-break.
-      Equality with the literal path is pinned in tests/test_ann.py.
-    """
+def centroid_arrays(rows) -> tuple:
+    """(k x dim centroids, cluster ids, dot(c, c) folded left to right)
+    of centroid rows ({cluster, c} mappings) — ``nearest_centroids``'s
+    inputs."""
     import numpy as np
-    import pandas as pd
 
     cmat = np.stack([np.asarray(r["c"], dtype=np.float64) for r in rows])
     clusters = np.array([int(r["cluster"]) for r in rows], dtype=np.int64)
     ccs = np.array([_seq_self_dot(r["c"]) for r in rows], dtype=np.float64)
-    bc = e.sparkSession.sparkContext.broadcast((cmat, clusters, ccs))
+    return cmat, clusters, ccs
+
+
+def nearest_centroids(mat, cmat, clusters, ccs, nprobe: int = 1):
+    """n x ``nprobe`` cluster ids: each row of ``mat``'s ``nprobe``
+    nearest centroids under the assignment contract — lexicographic
+    (round(d2, 6), cluster), where round is Spark's double round (HALF_UP
+    on the SHORTEST-REPR decimal, java.math.BigDecimal.valueOf
+    semantics) and d2 = dot(e,e) - 2 dot(e,c) + dot(c,c) folds left to
+    right in double. For nprobe = 1 the one column is the argmin; for
+    nprobe > 1 a row's ids are its nearest SET, in no fixed order (with
+    k <= nprobe centroids every row gets all of them). The one numpy
+    kernel of the literal-centroid ranking: the Spark broadcast
+    assignments run it per Arrow batch and the graph build
+    (graph_ann.py) on the driver.
+
+    - the bulk ranking runs vectorized in numpy (raw doubles, no
+      rounding), in row blocks of about 4M distances;
+    - numpy's BLAS/pairwise sums and the HOF fold differ only in the
+      last ulps (~1e-12 absolute here), and 6-dp rounding can only
+      reorder two distances within 1e-6 of each other, so ONLY rows
+      whose rank-(nprobe-1) and rank-nprobe raw distances sit within a
+      1.5e-6 ambiguity window can possibly differ from the literal
+      path — for exactly those rows every candidate inside the window
+      is re-ranked with the exact left-to-right fold and
+      Decimal(repr(x)) HALF_UP key. Equality with the literal path is
+      pinned in tests/test_ann.py."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    import numpy as np
+
+    n, k = len(mat), len(cmat)
+    if k <= nprobe:
+        return np.tile(np.sort(clusters), (n, 1))
+    six = Decimal("0.000001")
+
+    def exact_key(emb, j):
+        ee = _seq_self_dot(emb)
+        dot = 0.0
+        cj = cmat[j]
+        for i, x in enumerate(emb):
+            dot += float(x) * float(cj[i])
+        d2 = ee - 2 * dot + float(ccs[j])
+        return (
+            Decimal(repr(d2)).quantize(six, rounding=ROUND_HALF_UP),
+            int(clusters[j]),
+        )
+
+    out = np.empty((n, nprobe), np.int64)
+    step = max(1, (1 << 22) // k)
+    for lo in range(0, n, step):
+        blk = mat[lo : lo + step]
+        d2 = (blk * blk).sum(1)[:, None] - 2.0 * (blk @ cmat.T) + ccs[None, :]
+        part = np.partition(d2, nprobe, axis=1)
+        top = np.argpartition(d2, nprobe - 1, axis=1)[:, :nprobe]
+        out[lo : lo + len(blk)] = clusters[top]
+        for r in np.flatnonzero(part[:, nprobe] - part[:, nprobe - 1] < 1.5e-6):
+            cand = np.flatnonzero(d2[r] <= part[r, nprobe - 1] + 1.5e-6)
+            picked = sorted(exact_key(blk[r], j) for j in cand)[:nprobe]
+            out[lo + r] = [c for _d, c in picked]
+    return out
+
+
+def _assign_broadcast(e: DataFrame, rows, with_emb: bool) -> DataFrame:
+    """Broadcast + Arrow argmin twin of the literal-centroid assignment,
+    used above CENTROID_LITERAL_MAX_KDIM: ``nearest_centroids`` per
+    batch, under the SAME ranking contract as the literal path."""
+    import numpy as np
+    import pandas as pd
+
+    bc = e.sparkSession.sparkContext.broadcast(centroid_arrays(rows))
     schema = "vec_id bigint, cluster int" + (
         ", emb array<double>" if with_emb else ""
     )
 
     def kernel(batches):
-        from decimal import ROUND_HALF_UP, Decimal
-
-        six = Decimal("0.000001")
-        cmat, clusters, ccs = bc.value
-
-        def exact_key(emb, j):
-            ee = _seq_self_dot(emb)
-            dot = 0.0
-            cj = cmat[j]
-            for i, x in enumerate(emb):
-                dot += float(x) * float(cj[i])
-            d2 = ee - 2 * dot + float(ccs[j])
-            return (
-                Decimal(repr(d2)).quantize(six, rounding=ROUND_HALF_UP),
-                int(clusters[j]),
-            )
-
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["emb"]])
-            d2 = (
-                (mat * mat).sum(1)[:, None]
-                - 2.0 * (mat @ cmat.T)
-                + ccs[None, :]
-            )
-            # O(k) min + second-min per row (argsort would be O(k log k)
-            # per row — this path exists precisely for large k). argmin's
-            # lowest-index tie rule is irrelevant: raw ties have gap 0 and
-            # take the exact re-check branch below.
-            best = np.argmin(d2, axis=1)
-            if cmat.shape[0] > 1:
-                top2 = np.partition(d2, 1, axis=1)
-                gap = top2[:, 1] - top2[:, 0]
-            else:
-                gap = np.full(len(mat), np.inf)
-            out = clusters[best].copy()
-            for ridx in np.nonzero(gap < 1.5e-6)[0]:
-                cand = np.nonzero(d2[ridx] < d2[ridx].min() + 1.5e-6)[0]
-                emb = mat[ridx]
-                out[ridx] = min(exact_key(emb, j) for j in cand)[1]
             cols = {
                 "vec_id": pdf["vec_id"].to_numpy(),
-                "cluster": out.astype(np.int32),
+                "cluster": nearest_centroids(mat, *bc.value)[:, 0].astype(np.int32),
             }
             if with_emb:
                 cols["emb"] = pdf["emb"]
@@ -661,10 +679,10 @@ def _assign_broadcast(e: DataFrame, rows, with_emb: bool) -> DataFrame:
 def assign_to_centroids(e: DataFrame, rows, with_emb: bool = False) -> DataFrame:
     """Shuffle-free nearest-centroid assignment of any (vec_id, emb)
     frame against FROZEN centroid rows ({cluster, c} mappings) — the
-    Lloyd's-round kernel, exposed module-level so the graph index's
-    incremental insert (graph_ann.py) assigns a batch under the SAME 6-dp d2 /
-    cluster-tie-break contract as the original training run (identical
-    arithmetic => a re-assigned old vector lands in its original cell).
+    Lloyd's-round kernel, exposed module-level: any frame assigns
+    under the SAME 6-dp d2 / cluster-tie-break contract as the original
+    training run (identical arithmetic => a re-assigned old vector
+    lands in its original cell).
     Literal argmin below CENTROID_LITERAL_MAX_KDIM, Arrow broadcast
     kernel above — see ``_lloyd``'s docstring for the measured gate.
     """
@@ -693,8 +711,8 @@ def assign_topn_to_centroids(e: DataFrame, rows, nprobe: int) -> DataFrame:
     """(vec_id, cluster) rows for each vector's ``nprobe`` NEAREST frozen
     centroids — the multi-probe analog of ``assign_to_centroids`` under
     the identical 6-dp d2 / cluster-tie-break contract (nprobe=1 emits
-    exactly the argmin assignment). The graph build's edge-candidate
-    generator (graph_ann.py): a vector on a cell BOUNDARY has true
+    exactly the argmin assignment). ``knn_join_ivf_topk``'s multi-probe
+    source side: a vector on a cell BOUNDARY has true
     neighbors in the adjacent cell, and same-cell-only candidates make
     those edges unbuildable — probing the top-2 cells per SOURCE doubles
     candidate volume (still ~n x target_cell_size x nprobe, linear in n)
@@ -729,81 +747,23 @@ def assign_topn_to_centroids(e: DataFrame, rows, nprobe: int) -> DataFrame:
 
 def _assign_topn_broadcast(e: DataFrame, rows, nprobe: int) -> DataFrame:
     """Broadcast + Arrow top-``nprobe`` twin of the literal multi-probe
-    assignment (used above CENTROID_LITERAL_MAX_KDIM). Bulk selection is
-    a raw-double numpy partition; only rows whose rank-(nprobe-1) /
-    rank-nprobe raw distances sit within the 1.5e-6 ambiguity window (6-dp
-    rounding can only reorder distances closer than that) re-rank their
-    window candidates with the exact left-to-right fold + Decimal HALF_UP
-    key — the `_assign_broadcast` equality argument, applied to the top-n
-    BOUNDARY instead of the argmin."""
+    assignment (used above CENTROID_LITERAL_MAX_KDIM):
+    ``nearest_centroids`` per batch, one row per (vector, cluster)."""
     import numpy as np
     import pandas as pd
 
-    cmat = np.stack([np.asarray(r["c"], dtype=np.float64) for r in rows])
-    clusters = np.array([int(r["cluster"]) for r in rows], dtype=np.int64)
-    ccs = np.array([_seq_self_dot(r["c"]) for r in rows], dtype=np.float64)
-    if len(rows) <= nprobe:
-        # fewer centroids than probes: every (vec, cluster) pair
-        arr = "array({})".format(
-            ",".join(str(int(c)) for c in sorted(clusters))
-        )
-        return e.select(
-            "vec_id", F.explode(F.expr(arr)).cast("int").alias("cluster")
-        )
-    bc = e.sparkSession.sparkContext.broadcast((cmat, clusters, ccs))
+    bc = e.sparkSession.sparkContext.broadcast(centroid_arrays(rows))
 
     def kernel(batches):
-        from decimal import ROUND_HALF_UP, Decimal
-
-        six = Decimal("0.000001")
-        cmat, clusters, ccs = bc.value
-
-        def exact_key(emb, j):
-            ee = _seq_self_dot(emb)
-            dot = 0.0
-            cj = cmat[j]
-            for i, x in enumerate(emb):
-                dot += float(x) * float(cj[i])
-            d2 = ee - 2 * dot + float(ccs[j])
-            return (
-                Decimal(repr(d2)).quantize(six, rounding=ROUND_HALF_UP),
-                int(clusters[j]),
-            )
-
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["emb"]])
-            d2 = (
-                (mat * mat).sum(1)[:, None]
-                - 2.0 * (mat @ cmat.T)
-                + ccs[None, :]
-            )
-            part = np.partition(d2, nprobe, axis=1)
-            gap = part[:, nprobe] - part[:, nprobe - 1]
-            topn = np.argpartition(d2, nprobe - 1, axis=1)[:, :nprobe]
-            out_ids = []
-            out_cl = []
-            ids = pdf["vec_id"].to_numpy()
-            for ridx in range(len(mat)):
-                if gap[ridx] < 1.5e-6:
-                    # boundary ambiguity: exact-rank every candidate
-                    # within the window of the nprobe-th raw distance
-                    thresh = part[ridx, nprobe - 1] + 1.5e-6
-                    cand = np.nonzero(d2[ridx] <= thresh)[0]
-                    emb = mat[ridx]
-                    picked = sorted(
-                        ((exact_key(emb, j), j) for j in cand)
-                    )[:nprobe]
-                    cl = [int(clusters[j]) for _k, j in picked]
-                else:
-                    cl = [int(clusters[j]) for j in topn[ridx]]
-                out_ids.extend([ids[ridx]] * len(cl))
-                out_cl.extend(cl)
+            top = nearest_centroids(mat, *bc.value, nprobe)
             yield pd.DataFrame(
                 {
-                    "vec_id": np.array(out_ids, dtype=np.int64),
-                    "cluster": np.array(out_cl, dtype=np.int32),
+                    "vec_id": np.repeat(pdf["vec_id"].to_numpy(), top.shape[1]),
+                    "cluster": top.reshape(-1).astype(np.int32),
                 }
             )
 
@@ -925,9 +885,9 @@ def knn_join_ivf_topk(
     cell_cap: int = IVF_JOIN_CELL_CAP,
     src_nprobe: int = 1,
 ) -> DataFrame:
-    """Batch k-NN JOIN blocked by TRAINED IVF CELLS — the graph build's
-    edge-candidate join. Candidates are SAME-CELL pairs only: on
-    genuinely clustered data (the r10 fixture) a cell IS the
+    """Batch k-NN JOIN blocked by TRAINED IVF CELLS (the Spark form of
+    the graph's layer 0, graph_ann.py). Candidates are SAME-CELL pairs
+    only: on genuinely clustered data (the r10 fixture) a cell IS the
     neighborhood, so recall concentrates exactly where the candidates
     do. The trade is explicit and data-dependent: cross-cell neighbors
     are unreachable (SemDeDup makes the same within-cluster-only trade
@@ -982,7 +942,7 @@ def knn_join_ivf_topk(
 
     nz_assign = assign.join(nz, "vec_id")
     if src_nprobe > 1:
-        # multi-probe SOURCE side (the graph build's boundary fix): each
+        # multi-probe SOURCE side (the boundary fix): each
         # vector's candidates come from its src_nprobe nearest cells —
         # one extra shuffle-free projection pass under the frozen
         # centroids; the NEIGHBOR side stays the rn=1 membership, so a

@@ -786,11 +786,11 @@ def update_containment_index(
     )
 
 
-# Drift thresholds for the frozen-dfs admit path (the graph index's
-# discipline: DRIFT_RESIDUAL_THRESHOLD=1.5 growth / DRIFT_SKEW_THRESHOLD
-# =3.0 mass, graph_ann.py): probes serve from prefixes ranked by
-# BUILD-time dfs, so admitted mass fattens candidates invisibly — the
-# metrics below make it visible and point at the rebuild.
+# Drift thresholds for the frozen-dfs admit path (1.5x fan-out growth /
+# 3.0x mass, the frozen-structure advisory shape): probes serve from
+# prefixes ranked by BUILD-time dfs, so admitted mass fattens
+# candidates invisibly — the metrics below make it visible and point at
+# the rebuild.
 CONTAIN_DRIFT_FANOUT_THRESHOLD = 1.5  # mean prefix-row TRUE df vs build
 CONTAIN_DRIFT_MASS_THRESHOLD = 3.0  # indexed doc count vs build
 
@@ -2682,9 +2682,8 @@ def fsck_containment_index(
         out.append(
             ("prefix_flags_exact_bound", pf_bad == 0, f"bad_docs={pf_bad}")
         )
-        # drift advisory (VERDICT r15 next #3 — the fsck_graph_index
-        # coarse_drift discipline: a drifted index is not corrupt,
-        # the row's detail says what to run)
+        # drift advisory (VERDICT r15 next #3): a drifted index is not
+        # corrupt, the row's detail says what to run
         m = containment_drift_metrics(spark, sf_dir, tag)
         if m["drifted"] is None:
             out.append(

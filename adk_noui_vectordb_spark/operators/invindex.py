@@ -4,8 +4,8 @@ The reference serves every query from a persisted ChromaDB collection on
 disk (reference: coding_agent/tools/vector_search_tool.py:33-79 queries
 the index that indexing_agent.py built earlier) — build-once/serve-many
 is its core lifecycle. The vector side lives in ``Collection``
-(api/collection.py) and the IVF/graph sidecars (operators/ann.py,
-operators/graph_ann.py); this module is the LEXICAL twin: ``operators/hybrid.py`` ranks BM25 by re-scanning the
+(api/collection.py), the IVF index (operators/ann.py) and the
+navigable graph (operators/graph_ann.py); this module is the LEXICAL twin: ``operators/hybrid.py`` ranks BM25 by re-scanning the
 corpus per query, which is the right shape for one-off analytics but not
 for a query service over 100 TB. Here the corpus is scanned ONCE into an
 on-disk inverted index and every subsequent query touches only the

@@ -27,17 +27,8 @@ SLOW_TESTS = {
     "test_delete_by_ids_where_and_all",
     "test_delete_from_text_index_retracts_everything",
     "test_facade_filtered_recall_on_clustered_fixture",
-    "test_facade_graph_strategy_recall_on_clustered_fixture",
     "test_folded_analyzer_index_round_trips",
     "test_fsck_passes_on_healthy_indexes_and_flags_damage",
-    "test_graph_auto_expansion_reads_compound_where_tree",
-    "test_graph_delete_lifecycle",
-    "test_graph_drift_detection",
-    "test_graph_incremental_insert_serves_new_vectors",
-    "test_graph_predicate_expansion_recall_under_selective_filter",
-    "test_graph_recursive_mesh_has_no_large_allpairs_level",
-    "test_graph_sidecar_is_incremental_across_commits",
-    "test_graph_sidecar_replace_pays_batch_and_matches_fresh_rebuild",
     "test_incremental_update_equals_fresh_build",
     "test_li_index_update_replace_and_rebuild_equality",
     "test_partial_update_keeps_omitted_fields",

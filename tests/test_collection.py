@@ -2056,13 +2056,13 @@ def test_graph_strategy_serves_the_collection(spark, sf_dir):
 def test_graph_sidecar_fingerprint_is_memoized_and_tracks_recommit(
     spark, tmp_path, monkeypatch
 ):
-    """A warm graph query does not re-fingerprint the collection
-    version (a walk and stat of every file), yet after a rollback the commit that republishes the
-    abandoned version's name with new content still misses the stored
-    fingerprint: the sidecar rebuilds and serves the new vectors."""
+    """The graph is built once per version: a warm graph query calls
+    ``build_graph`` 0 times, yet after a rollback the commit that
+    republishes the abandoned version's name with new content builds
+    again (new data files) and serves the new vectors."""
     import os
 
-    from adk_noui_vectordb_spark import memo
+    from adk_noui_vectordb_spark.operators import graph_ann
 
     coll = Collection(spark, str(tmp_path / "fp"))
     mat = _vecs(41, 14)
@@ -2074,15 +2074,15 @@ def test_graph_sidecar_fingerprint_is_memoized_and_tracks_recommit(
     assert (top["id"], top["distance"]) == ("x", 0.0)
 
     calls = []
-    real = memo.dataset_fingerprint
+    real = graph_ann.build_graph
 
-    def counted(path):
-        calls.append(path)
-        return real(path)
+    def counted(ids, m):
+        calls.append(len(ids))
+        return real(ids, m)
 
-    monkeypatch.setattr(memo, "dataset_fingerprint", counted)
+    monkeypatch.setattr(graph_ann, "build_graph", counted)
     coll.query(qx, n_results=1, filter_strategy="graph").collect()
-    assert not [p for p in calls if p.startswith(coll.root)], calls
+    assert calls == [], calls
 
     abandoned = os.path.basename(coll._cur())
     coll.rollback()
@@ -2090,6 +2090,7 @@ def test_graph_sidecar_fingerprint_is_memoized_and_tracks_recommit(
     assert os.path.basename(coll._cur()) == abandoned
     qy = [float(x) for x in mat[13]]
     got = coll.query(qy, n_results=3, filter_strategy="graph").collect()
+    assert calls == [13], calls
     assert (got[0]["id"], got[0]["distance"]) == ("y", 0.0)
     assert "x" not in {r["id"] for r in got}
 
@@ -2146,60 +2147,49 @@ def test_facade_graph_strategy_recall_on_clustered_fixture(spark, tmp_path):
     assert hits / (8 * k) >= 0.9, hits / (8 * k)
 
 
+def _graph_top(coll, q, k: int) -> list:
+    return sorted(
+        (r["id"], r["distance"])
+        for r in coll.query(
+            [float(x) for x in q], n_results=k, filter_strategy="graph"
+        ).collect()
+    )
+
+
 def test_graph_sidecar_is_incremental_across_commits(spark, tmp_path):
-    """VERDICT r12 next #3: the facade graph sidecar advances by the
-    version DELTA — an upsert-then-graph-query pays one
-    ``update_graph_index`` commit on the SAME graph root (job count
-    pinned: every job is batch-sized or point-pruned, never a corpus
-    rebuild), a delete pays one tombstone commit, and only a changed
-    embedding (ADD-only family contract) falls back to the full
-    rebuild. Incremental serving quality is pinned against exact
-    cosine (0.8 measured on this seeded fixture vs the fresh build's
-    0.9 — the append-only edge-quality gap is the measured drift of
-    BASELINE.md's update-cadence row, not a bug)."""
-    import json
-    import os
-    import shutil
-
-    import adk_noui_vectordb_spark.sources.versioning as vn
-
+    """Each commit's first graph query builds the graph of the new
+    version on the driver: after an add it serves the added vectors and
+    runs 0 Spark jobs, after a delete the deleted ids never surface,
+    and after an upsert the replaced vector serves at its NEW position.
+    Serving quality is pinned against exact cosine, and the graph equals
+    the one a fresh collection over the same final rows serves."""
     coll = Collection(spark, str(tmp_path / "inc"))
     mat = _vecs(7, 40)
     coll.add(_batch(spark, [f"a{i}" for i in range(30)], mat[:30]))
     q = [float(x) for x in mat[0]]
     coll.query(q, n_results=5, filter_strategy="graph").collect()
-    lin = coll._graph_lineage_dir()
-    st1 = json.load(open(os.path.join(lin, "state.json")))
-    g1 = coll._graph_sidecar(vn.current_dir(coll.root))
 
-    # pure addition -> update_graph_index on the same root, one version
+    # pure addition: the next graph query serves the batch, no Spark job
     coll.add(_batch(spark, [f"b{i}" for i in range(10)], mat[30:40]))
     sc = spark.sparkContext
-    sc.setJobGroup("inc-sidecar", "delta apply")
+    sc.setJobGroup("inc-graph", "graph query after an add")
     got = coll.query(
         [float(x) for x in mat[35]], n_results=3, filter_strategy="graph"
     ).collect()
-    sc.setJobGroup("other", "")
+    sc.setJobGroup(None, None)
     assert (got[0]["id"], got[0]["distance"]) == ("b5", 0.0)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup("inc-sidecar"))
-    assert n_jobs <= 70, f"upsert-then-graph-query ran {n_jobs} jobs"
-    g2 = coll._graph_sidecar(vn.current_dir(coll.root))
-    st2 = json.load(open(os.path.join(lin, "state.json")))
-    assert os.path.dirname(g2) == os.path.dirname(g1)  # same graph root
-    assert os.path.basename(g2) > os.path.basename(g1)  # exactly advanced
-    assert st2["scratch"] == st1["scratch"]  # no re-staging
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("inc-graph"))
+    assert n_jobs == 0, f"add-then-graph-query ran {n_jobs} jobs"
 
-    # pure removal -> tombstone commit on the same root; gone at emission
+    # pure removal: gone at emission
     coll.delete(ids=["a3", "a4"])
     pool = {
         r["id"]
         for r in coll.query(q, n_results=30, filter_strategy="graph").collect()
     }
     assert "a3" not in pool and "a4" not in pool
-    g3 = coll._graph_sidecar(vn.current_dir(coll.root))
-    assert os.path.dirname(g3) == os.path.dirname(g1)
 
-    # serving quality: incremental pool vs exact cosine (deterministic)
+    # serving quality vs exact cosine (deterministic)
     live = [f"a{i}" for i in range(30) if i not in (3, 4)] + [
         f"b{i}" for i in range(10)
     ]
@@ -2214,84 +2204,57 @@ def test_graph_sidecar_is_incremental_across_commits(spark, tmp_path):
             ),
         )[:10]
     )
-    inc_top = {
-        r["id"]
-        for r in coll.query(q, n_results=10, filter_strategy="graph").collect()
-    }
+    inc_top = {i for i, _ in _graph_top(coll, q, 10)}
     assert len(inc_top & exact) / 10 >= 0.7, inc_top
-    # a wiped lineage forces the full-rebuild path; fresh quality >= 0.8
-    shutil.rmtree(lin)
-    fresh_top = {
-        r["id"]
-        for r in coll.query(q, n_results=10, filter_strategy="graph").collect()
-    }
+    fresh = Collection(spark, str(tmp_path / "inc_fresh"))
+    fresh.add(_batch(spark, live, np.array([emb[i] for i in live])))
+    fresh_top = {i for i, _ in _graph_top(fresh, q, 10)}
     assert len(fresh_top & exact) / 10 >= 0.8, fresh_top
+    assert inc_top == fresh_top
 
-    # changed embedding -> INCREMENTAL replace (r14, VERDICT r13 next
-    # #4): tombstone-old + add-under-fresh-surrogate on the SAME graph
-    # root — no re-staging; the sid->rid alias lands in the lineage and
-    # the replaced vector serves at its NEW position
-    st_before = json.load(open(os.path.join(lin, "state.json")))
+    # changed embedding: the replaced vector serves at its NEW position
     coll.upsert(_batch(spark, ["a0"], mat[5:6]))
     got = coll.query(
         [float(x) for x in mat[5]], n_results=3, filter_strategy="graph"
     ).collect()
     assert ("a0", 0.0) in {(r["id"], r["distance"]) for r in got}
-    st3 = json.load(open(os.path.join(lin, "state.json")))
-    assert st3["scratch"] == st_before["scratch"], "replace re-staged"
-    assert list(st3.get("alias", {})) == [str(_sid_py("a0"))]
 
 
 def test_graph_sidecar_replace_pays_batch_and_matches_fresh_rebuild(
     spark, tmp_path
 ):
-    """VERDICT r13 next #4 done-criteria: an update()-heavy commit on a
-    graph-served collection pays O(batch) (job budget pinned — no
-    corpus re-staging, no full rebuild), and the incrementally-replaced
-    sidecar serves query results HASH-EQUAL to a from-scratch rebuild
-    over the identical final vectors. Also pins the alias lifecycle: a
-    twice-replaced sid chains rids; deleting a replaced sid drops its
-    alias entry and the vector stops surfacing."""
-    import json
-    import os
-    import shutil
-
-    import adk_noui_vectordb_spark.sources.versioning as vn
-
+    """An update()-heavy lifecycle on a graph-served collection: the
+    graph query after a replace runs 0 Spark jobs and serves the new
+    vectors (twice-replaced too); a deleted replaced id stops
+    surfacing; and the results equal those of a fresh collection over
+    the identical final rows."""
     coll = Collection(spark, str(tmp_path / "rep"))
     mat = _vecs(11, 44)
-    coll.add(_batch(spark, [f"d{i}" for i in range(40)], mat[:40]))
+    ids = [f"d{i}" for i in range(40)]
+    coll.add(_batch(spark, ids, mat[:40]))
     q = [float(x) for x in mat[1]]
     coll.query(q, n_results=5, filter_strategy="graph").collect()
-    lin = coll._graph_lineage_dir()
-    st1 = json.load(open(os.path.join(lin, "state.json")))
 
-    # replace two vectors in one commit; O(batch) pinned by job count
+    # replace two vectors in one commit
     coll.update(_batch(spark, ["d3", "d7"], mat[40:42]))
     sc = spark.sparkContext
-    sc.setJobGroup("rep-sidecar", "replace delta")
+    sc.setJobGroup("rep-graph", "graph query after a replace")
     got = coll.query(
         [float(x) for x in mat[40]], n_results=3, filter_strategy="graph"
     ).collect()
-    sc.setJobGroup("other", "")
+    sc.setJobGroup(None, None)
     assert (got[0]["id"], got[0]["distance"]) == ("d3", 0.0)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup("rep-sidecar"))
-    assert n_jobs <= 80, f"replace-then-graph-query ran {n_jobs} jobs"
-    st2 = json.load(open(os.path.join(lin, "state.json")))
-    assert st2["scratch"] == st1["scratch"], "replace re-staged the corpus"
-    assert set(st2["alias"]) == {str(_sid_py("d3")), str(_sid_py("d7"))}
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("rep-graph"))
+    assert n_jobs == 0, f"replace-then-graph-query ran {n_jobs} jobs"
 
-    # chain: replace d3 AGAIN -> the rid advances, still incremental
+    # replace d3 AGAIN
     coll.update(_batch(spark, ["d3"], mat[42:43]))
     got2 = coll.query(
         [float(x) for x in mat[42]], n_results=3, filter_strategy="graph"
     ).collect()
     assert (got2[0]["id"], got2[0]["distance"]) == ("d3", 0.0)
-    st3 = json.load(open(os.path.join(lin, "state.json")))
-    assert st3["scratch"] == st1["scratch"]
-    assert st3["alias"][str(_sid_py("d3"))] != st2["alias"][str(_sid_py("d3"))]
 
-    # delete a replaced sid: alias entry drops, vector stops surfacing
+    # delete a replaced id: it stops surfacing
     coll.delete(ids=["d7"])
     pool = {
         r["id"]
@@ -2300,34 +2263,16 @@ def test_graph_sidecar_replace_pays_batch_and_matches_fresh_rebuild(
         ).collect()
     }
     assert "d7" not in pool
-    st4 = json.load(open(os.path.join(lin, "state.json")))
-    assert str(_sid_py("d7")) not in st4["alias"]
 
-    # hash-equality with a FRESH rebuild over the identical final
-    # vectors: capture incrementally-served results, wipe the lineage
-    # (forces the full-rebuild path, which also resets the alias), and
-    # compare row-for-row
-    queries = [q, [float(x) for x in mat[42]], [float(x) for x in mat[20]]]
-    inc = [
-        sorted(
-            (r["id"], r["distance"])
-            for r in coll.query(
-                qv, n_results=10, filter_strategy="graph"
-            ).collect()
-        )
-        for qv in queries
-    ]
-    shutil.rmtree(lin)
-    fresh = [
-        sorted(
-            (r["id"], r["distance"])
-            for r in coll.query(
-                qv, n_results=10, filter_strategy="graph"
-            ).collect()
-        )
-        for qv in queries
-    ]
-    assert inc == fresh, "incremental replace diverged from fresh rebuild"
+    # equal to a fresh collection over the identical final rows
+    final = {i: mat[j] for j, i in enumerate(ids)}
+    final["d3"] = mat[42]
+    del final["d7"]
+    fresh = Collection(spark, str(tmp_path / "rep_fresh"))
+    fresh.add(_batch(spark, list(final), np.array(list(final.values()))))
+    queries = [q, mat[42], mat[20]]
+    served = [_graph_top(coll, qv, 10) for qv in queries]
+    assert served == [_graph_top(fresh, qv, 10) for qv in queries]
 
 
 def test_graph_predicate_expansion_recall_under_selective_filter(

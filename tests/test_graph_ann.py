@@ -1,5 +1,6 @@
-"""Navigable-graph index (operators/graph_ann.py): build invariants,
-the insert/delete lifecycle and fsck. Walks use the Collection's graph
+"""Navigable graph (operators/graph_ann.py): ``build_graph``'s structural
+invariants over the sf0.001 vectors, and the graph a ``Collection``
+serves after add and delete commits. Walks use the Collection's graph
 beam (api/collection.py ``_graph_beam_batch``), the one graph server."""
 
 from __future__ import annotations
@@ -7,281 +8,156 @@ from __future__ import annotations
 import os
 
 import numpy as np
+import pyarrow.parquet as pq
 import pytest
-from pyspark.sql import functions as F
 
+from adk_noui_vectordb_spark.api.collection import Collection
 from adk_noui_vectordb_spark.operators import ann
 from adk_noui_vectordb_spark.operators import graph_ann as ga
 
 
+def _vectors(path: str) -> tuple:
+    """(vec_id, n x dim float64 embeddings) of an embeddings parquet."""
+    t = pq.read_table(path, columns=["vec_id", "embedding"])
+    emb = t.column("embedding").combine_chunks()
+    mat = emb.flatten().to_numpy().astype(np.float64).reshape(t.num_rows, -1)
+    return t.column("vec_id").to_numpy(), mat
+
+
 @pytest.fixture(scope="module")
-def tight(spark, tmp_path_factory):
+def sf_graph(sf_dir):
+    ids, mat = _vectors(os.path.join(sf_dir, "embeddings.parquet"))
+    return ids, mat, ga.build_graph(ids, mat)
+
+
+@pytest.fixture(scope="module")
+def tight(tmp_path_factory):
     from tools.make_clustered_embeddings import make
 
     base = str(tmp_path_factory.mktemp("gann") / "tight")
-    make(base, 1000, 10, 0.06)
-    emb = np.array(
-        spark.read.parquet(base + "/embeddings.parquet")
-        .orderBy("vec_id")
-        .select("embedding")
-        .toPandas()["embedding"]
-        .tolist(),
-        dtype=np.float64,
-    )
-    return base, emb
+    return _vectors(make(base, 1000, 10, 0.06))[1]
 
 
-def _pool(spark, root, cur, q, beam=ga.GRAPH_BEAM, rounds=ga.GRAPH_ROUNDS):
-    """{graph id: 4-dp sim}: the visited pool of the Collection's graph
-    beam over graph version ``cur`` for the raw query vector ``q``."""
-    from adk_noui_vectordb_spark.api.collection import Collection
-
+def _tight_collection(spark, root: str, emb) -> Collection:
     coll = Collection(spark, root)
-    return coll._graph_beam_batch(cur, [[float(x) for x in q]], beam, rounds)[0]
+    coll.add(
+        spark.createDataFrame(
+            [(f"v{i}", [float(x) for x in row]) for i, row in enumerate(emb)],
+            "id string, embedding array<double>",
+        )
+    )
+    return coll
 
 
-def _top10(pool, qid):
-    """Top-10 of a pool by (sim desc, id), the query's own id excluded."""
-    ranked = sorted(pool.items(), key=lambda kv: (-kv[1], kv[0]))
-    return set([v for v, _s in ranked if v != qid][:10])
+def _top10(coll, q) -> list:
+    return [
+        r["id"]
+        for r in coll.query(
+            [float(x) for x in q], n_results=10, filter_strategy="graph"
+        ).collect()
+    ]
 
 
-def _exact10(emb, qid):
-    q = emb[qid]
+def _exact10(emb, q, live) -> set:
     cos = (emb @ q) / (np.linalg.norm(emb, axis=1) * np.linalg.norm(q))
-    n = len(emb)
-    return set(
-        sorted(
-            (i for i in range(n) if i != qid),
-            key=lambda i: (-round(cos[i], 4), i),
-        )[:10]
-    )
+    return {f"v{i}" for i in sorted(live, key=lambda i: (-round(cos[i], 4), f"v{i}"))[:10]}
 
 
-def test_graph_recursive_mesh_has_no_large_allpairs_level(
-    spark, tight, tmp_path
-):
-    """VERDICT r12 next #1 done-criteria: forcing ``hub_allpairs_max``
-    below the hub count makes the mesh RECURSE through the cell-blocked
-    join (HNSW log-layering) instead of the all-pairs hub join. The
-    frozen ``hub_mesh_levels`` witness the invariant: every level that
-    exceeds the gate was cell-blocked (candidates ≤ c × CELL_CAP,
-    linear), only the final level — ≤ the gate by construction — is
-    all-pairs, and levels shrink strictly (termination). Recall on the
-    tight fixture is unchanged vs the all-pairs build (measured 1.00
-    over 8 queries; pinned at the same 0.95 floor as the r12 gate)."""
-    import json
-
-    base, emb = tight
-    apm = 4
-    cur = ga.build_graph_index(spark, base, hub_allpairs_max=apm)
-    stats = json.load(open(os.path.join(cur, "build_stats.json")))
-    levels = stats["hub_mesh_levels"]
-    assert stats["hub_allpairs_max"] == apm
-    assert len(levels) >= 2, levels  # the recursion actually fired
-    assert all(c > apm for c in levels[:-1]), levels
-    assert levels[-1] <= apm, levels
-    assert all(a > b for a, b in zip(levels, levels[1:])), levels
-    hits = tot = 0
-    for qid in range(8):
-        got = _top10(_pool(spark, str(tmp_path / "c"), cur, emb[qid]), qid)
-        hits += len(got & _exact10(emb, qid))
-        tot += 10
-    assert hits / tot >= 0.95, hits / tot
-
-
-def test_graph_default_build_stays_single_allpairs_level(spark, sf_dir):
-    """Default gate (4096) at test scale: ONE mesh level, all-pairs —
-    the historical behavior, byte-identical edge set (the r12 pins and
-    the oracle sweep depend on the default path not moving)."""
-    import json
-
-    cur = ga.build_graph_index(spark, sf_dir)
-    stats = json.load(open(os.path.join(cur, "build_stats.json")))
-    assert len(stats["hub_mesh_levels"]) == 1, stats["hub_mesh_levels"]
-    assert stats["hub_allpairs_max"] == ga.GRAPH_HUB_ALLPAIRS_MAX
-
-
-def test_graph_index_fsck_invariants(spark, sf_dir):
-    checks = ga.fsck_graph_index(spark, sf_dir)
-    bad = [c for c in checks if not c[1]]
-    assert not bad, bad
-
-
-def test_graph_edges_are_bidirectional_with_star_coverage(spark, sf_dir):
-    """Every nonzero vector must be REACHABLE: it has an outgoing star
-    bridge to its cell hub, and the reversal cap keeps the hub's way
-    back (structural connectivity per cell — the measured failure mode
-    was whole sub-clusters with inbound-only edges)."""
-    cur = ga.build_graph_index(spark, sf_dir)
-    edges = spark.read.schema(ga.GRAPH_EDGES_SCHEMA).parquet(
-        os.path.join(cur, "edges")
-    )
-    vecs = spark.read.schema(ann.VECS_SCHEMA).parquet(os.path.join(cur, "vecs"))
-    nz = vecs.filter(ann._nonzero_pred()).select("vec_id")
-    no_out = nz.join(
-        edges.select(F.col("src").alias("vec_id")).distinct(), "vec_id", "left_anti"
-    ).count()
+def test_graph_edges_are_bidirectional_with_star_coverage(sf_graph):
+    """Every nonzero vector must be REACHABLE: it has an out-edge, and
+    each non-hub member has exactly one star bridge to its cell's hub
+    (structural connectivity per cell — the measured failure mode was
+    whole sub-clusters with inbound-only edges); the reversal cap keeps
+    the hub's way back."""
+    ids, mat, (adj, _entry, cents, hub_of) = sf_graph
+    nz = ids[(mat != 0).any(axis=1)]
     # a singleton-cell hub has no same-cell partner and no star target,
     # but with derived c over the testdata corpora every cell has >= 2
     # nonzero members, so every vector is a source
-    assert no_out == 0, f"{no_out} nonzero vectors have no outgoing edge"
-    hubmap = spark.read.schema(ga.GRAPH_HUBMAP_SCHEMA).parquet(
-        os.path.join(cur, "hubmap")
-    )
-    stars = edges.join(
-        hubmap.select(
-            F.col("vec_id").alias("src"), F.col("hub").alias("nbr")
-        ).filter(F.col("src") != F.col("nbr")),
-        ["src", "nbr"],
-        "inner",
-    ).count()
-    expected = (
-        hubmap.filter(F.col("vec_id") != F.col("hub"))
-        .join(nz, "vec_id")
-        .count()
-    )
-    assert stars == expected, f"star bridges {stars} != nonzero non-hub rows {expected}"
+    no_out = [int(v) for v in nz if len(adj.get(int(v), ())) == 0]
+    assert not no_out, f"{len(no_out)} nonzero vectors have no outgoing edge"
+    cell = ann.nearest_centroids(mat, *ann.centroid_arrays(cents))[:, 0]
+    members = [
+        (int(v), hub_of[int(c)])
+        for v, c, ok in zip(ids, cell, (mat != 0).any(axis=1))
+        if ok and int(v) != hub_of[int(c)]
+    ]
+    stars = sum(int(h in adj[m].tolist()) for m, h in members)
+    assert stars == len(members), f"star bridges {stars} != non-hub members {len(members)}"
+    back = sum(int(m in adj[h].tolist()) for m, h in members)
+    assert back == len(members), f"hub links back {back} != {len(members)}"
+
+
+def test_graph_index_fsck_invariants(sf_graph):
+    """No dangling endpoint, no self-loop, out-degree within the
+    structural bound, and the entry is a hub that has out-edges."""
+    ids, _mat, (adj, entry, _cents, hub_of) = sf_graph
+    known = set(ids.tolist())
+    dangling = [s for s, nb in adj.items() if s not in known or not known.issuperset(nb.tolist())]
+    assert not dangling, dangling[:5]
+    loops = [s for s, nb in adj.items() if s in nb.tolist()]
+    assert not loops, loops[:5]
+    cap = ga.GRAPH_DEGREE + ga.GRAPH_HUB_DEGREE + 1 + ann.IVF_JOIN_CELL_CAP
+    over = {s: len(nb) for s, nb in adj.items() if len(nb) > cap}
+    assert not over, (over, cap)
+    assert all(len(set(nb.tolist())) == len(nb) for nb in adj.values())
+    assert entry in set(hub_of.values()) and len(adj[entry]) > 0
 
 
 def test_graph_incremental_insert_serves_new_vectors(spark, tight, tmp_path):
-    """update_graph_index (the HNSW add_items analog, frozen coarse
-    structure): inserted vectors become REACHABLE — a query near the
-    batch finds its batch neighbors — fsck stays green, the op is
-    ADD-only, and existing adjacency rows are never rewritten (their
-    partitions gain append files; reversals give old nodes doors to
-    the new vectors)."""
-    import os
-
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    base, emb = tight
-    # private copy: an update makes the root represent corpus ∪ batch
-    priv = str(tmp_path / "gupd")
-    os.makedirs(priv)
-    spark.read.parquet(base + "/embeddings.parquet").write.parquet(
-        os.path.join(priv, "embeddings.parquet")
-    )
-    cur0 = ga.build_graph_index(spark, priv)
-    # batch: 20 clones-with-noise of vector 3's neighborhood
+    """An add commit's vectors are REACHABLE by the next graph query: a
+    query at vector 3 ranks the batch's near-clones of it in its top-10,
+    and the version's graph has every new vector as a node."""
+    coll = _tight_collection(spark, str(tmp_path / "ins"), tight)
+    _top10(coll, tight[3])  # the first version's graph
     rng = np.random.default_rng(11)
-    v3 = emb[3]
-    rows = [
-        (50_000 + i, [float(x) for x in (v3 + rng.normal(scale=0.01, size=len(v3)))])
-        for i in range(20)
-    ]
-    batch = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-    cur1 = ga.update_graph_index(spark, priv, batch)
-    assert cur1 != cur0
-
-    # the query at vec 3 now ranks batch members in its top-10
-    got = _top10(_pool(spark, str(tmp_path / "c"), cur1, v3), 3)
-    assert any(v >= 50_000 for v in got), got
-
-    checks = {c[0]: (c[1], c[2]) for c in ga.fsck_graph_index(spark, priv)}
-    bad = {k: v for k, v in checks.items() if not v[0]}
-    assert not bad, bad
-
-    # replay idempotence: resubmitting the IDENTICAL batch is a no-op
-    # (the streaming crash-window contract) — same version, no commit
-    assert ga.update_graph_index(spark, priv, batch) == cur1
-    # but PARTIAL overlap is a real conflict: ADD-only raises
-    import pytest as _pt
-
-    mixed = spark.createDataFrame(
-        [(50_000, rows[0][1]), (60_000, rows[1][1])],
-        "vec_id bigint, embedding array<double>",
+    clones = tight[3] + rng.normal(scale=0.01, size=(20, tight.shape[1]))
+    coll.add(
+        spark.createDataFrame(
+            [(f"new{i}", [float(x) for x in row]) for i, row in enumerate(clones)],
+            "id string, embedding array<double>",
+        )
     )
-    with _pt.raises(ValueError, match="ADD-only"):
-        ga.update_graph_index(spark, priv, mixed)
+    got = _top10(coll, tight[3])
+    assert any(i.startswith("new") for i in got), got
+    (adj, *_), _payload = coll._graph(coll._cur(), tight.shape[1])
+    from adk_noui_vectordb_spark.api.collection import _sid_py
+
+    assert all(_sid_py(f"new{i}") in adj for i in range(20))
 
 
 def test_graph_delete_lifecycle(spark, tight, tmp_path):
-    """delete_from_graph_index on a private root: unknown ids raise,
-    identical-batch replay no-ops, partial overlap raises, deleting a
-    ROUTING-CRITICAL node (the query's own cell hub) leaves traversal
-    untouched (visited set identical — the reason mark-delete never
-    rips nodes out), an insert after a delete carries tombstones
-    through (no resurrection), and fsck's tombstone checks hold."""
-    base, _emb = tight
-    priv = str(tmp_path / "gdel")
-    os.makedirs(priv)
-    spark.read.parquet(base + "/embeddings.parquet").write.parquet(
-        os.path.join(priv, "embeddings.parquet")
+    """Deleting a ROUTING-CRITICAL node (the query's own cell hub) plus
+    another id: the next graph query never returns them, its top-10
+    still matches exact cosine over the live rows, the version's graph
+    no longer holds them (its cells get new hubs), and re-adding the
+    hub's vector under a new id serves it at distance 0."""
+    from adk_noui_vectordb_spark.api.collection import _sid_py
+
+    coll = _tight_collection(spark, str(tmp_path / "del"), tight)
+    dim = tight.shape[1]
+    before = _top10(coll, tight[7])
+    (adj0, _e, cents, hub_of), _ = coll._graph(coll._cur(), dim)
+    cell = ann.nearest_centroids(tight[7:8], *ann.centroid_arrays(cents))[0, 0]
+    hub = next(i for i in range(len(tight)) if _sid_py(f"v{i}") == hub_of[int(cell)])
+    assert _sid_py(f"v{hub}") in adj0
+    coll.delete(ids=[f"v{hub}", "v11"])
+    after = _top10(coll, tight[7])
+    assert f"v{hub}" not in after and "v11" not in after
+    live = [i for i in range(len(tight)) if i not in (hub, 11)]
+    assert len(set(after) & _exact10(tight, tight[7], live)) >= 9, (before, after)
+    (adj1, entry1, _c, hub_of1), _ = coll._graph(coll._cur(), dim)
+    gone = {_sid_py(f"v{hub}"), _sid_py("v11")}
+    assert not gone & set(adj1)
+    assert not any(gone & set(nb.tolist()) for nb in adj1.values())
+    assert entry1 not in gone and not gone & set(hub_of1.values())
+    coll.add(
+        spark.createDataFrame(
+            [("back", [float(x) for x in tight[hub]])],
+            "id string, embedding array<double>",
+        )
     )
-    cur0 = ga.build_graph_index(spark, priv)
-    with pytest.raises(ValueError, match="not in the index"):
-        ga.delete_from_graph_index(spark, priv, [999_999])
-
-    # the query's regional door — the worst node to lose
-    hub = (
-        spark.read.schema(ga.GRAPH_HUBMAP_SCHEMA)
-        .parquet(os.path.join(cur0, "hubmap"))
-        .filter(F.col("vec_id") == 7)
-        .head()["hub"]
-    )
-    root = str(tmp_path / "c")
-    before = _pool(spark, root, cur0, _emb[7], beam=8, rounds=3)
-    cur1 = ga.delete_from_graph_index(spark, priv, [hub, 11])
-    assert cur1 != cur0
-    after = _pool(spark, root, cur1, _emb[7], beam=8, rounds=3)
-    assert after == before  # tombstoned nodes still route
-    assert hub in before
-    assert ga._tombstoned_among(cur1, [hub, 11, 7]) == {hub, 11}
-
-    # replay no-op / partial overlap raises
-    assert ga.delete_from_graph_index(spark, priv, [hub, 11]) == cur1
-    with pytest.raises(ValueError, match="already tombstoned"):
-        ga.delete_from_graph_index(spark, priv, [11, 13])
-
-    # an insert commit must CARRY the tombstones (no resurrection)
-    batch = spark.createDataFrame(
-        [(70_000, [float(x) for x in _emb[3]])],
-        "vec_id bigint, embedding array<double>",
-    )
-    cur2 = ga.update_graph_index(spark, priv, batch)
-    assert ga._tombstoned_among(cur2, [hub, 11]) == {hub, 11}
-
-    checks = {c[0]: (c[1], c[2]) for c in ga.fsck_graph_index(spark, priv)}
-    assert checks["tombstones_name_indexed_vectors"][0], checks
-    assert checks["tombstone_fraction_bounded"][0], checks
-    bad = {k: v for k, v in checks.items() if not v[0]}
-    assert not bad, bad
-
-
-def test_graph_drift_detection(spark, tmp_path):
-    """The graph's drift advisory: streamed inserts of a far region
-    under the FROZEN coarse structure fire fsck's coarse-drift check,
-    whose detail names the remedy (a full rebuild, which the Collection
-    sidecar takes by staging a fresh scratch corpus)."""
-    import numpy as np
-
-    rng = np.random.default_rng(21)
-    dim = 8
-    centers = rng.normal(size=(4, dim))
-    rows_a = [
-        (i, [float(x) for x in (centers[i % 4] + rng.normal(scale=0.05, size=dim))])
-        for i in range(200)
-    ]
-    far = rng.normal(size=dim) * 10.0
-    rows_b = [
-        (1000 + i, [float(x) for x in (far + rng.normal(scale=0.05, size=dim))])
-        for i in range(100)
-    ]
-    base = str(tmp_path / "gdrift")
-    os.makedirs(base)
-    schema = "vec_id bigint, embedding array<double>"
-    spark.createDataFrame(rows_a, schema).write.parquet(
-        os.path.join(base, "embeddings.parquet")
-    )
-    ga.build_graph_index(spark, base)
-    checks0 = {c[0]: (c[1], c[2]) for c in ga.fsck_graph_index(spark, base)}
-    assert checks0["coarse_drift"][0] is True, checks0["coarse_drift"]
-
-    ga.update_graph_index(spark, base, spark.createDataFrame(rows_b, schema))
-    ga.delete_from_graph_index(spark, base, [7])
-    checks1 = {c[0]: (c[1], c[2]) for c in ga.fsck_graph_index(spark, base)}
-    assert checks1["coarse_drift"][0] is False, checks1["coarse_drift"]
-    assert "rebuild the graph" in checks1["coarse_drift"][1]
-    assert checks1["tombstones_name_indexed_vectors"][0], checks1
+    top = coll.query(
+        [float(x) for x in tight[hub]], n_results=1, filter_strategy="graph"
+    ).head()
+    assert (top["id"], top["distance"]) == ("back", 0.0)

@@ -426,6 +426,43 @@ def test_collection_reads_make_no_py4j_call(spark, sf_dir, py4j_calls):
     assert not failures, "; ".join(failures)
 
 
+def test_cold_graph_query_runs_no_spark_job(spark, tmp_path, py4j_calls):
+    """The graph is built on the driver: the first graph query of a
+    fresh version runs 0 Spark jobs and makes 0 py4j calls, and an
+    ``at(v)`` view's graph query ranks that version's vectors."""
+    import numpy as np
+    import pandas as pd
+
+    from adk_noui_vectordb_spark.api.collection import Collection
+
+    rng = np.random.default_rng(5)
+    mat = rng.normal(size=(300, 16))
+
+    def batch(ids, rows):
+        return spark.createDataFrame(
+            pd.DataFrame({"id": ids, "embedding": [list(r) for r in rows]})
+        )
+
+    coll = Collection(spark, str(tmp_path / "cold"))
+    v0 = coll.add(batch([f"r{i}" for i in range(300)], mat))
+    coll.update(batch(["r5"], -mat[5:6]))
+    q = [float(x) for x in mat[5]]
+    sc = spark.sparkContext
+    sc.setJobGroup("cold-graph", "first graph query of a version")
+    try:
+        with py4j_calls() as n:
+            got = coll.query(q, n_results=3, filter_strategy="graph").collect()
+    finally:
+        sc.setJobGroup(None, None)
+    assert n[0] == 0, f"{n[0]} py4j calls"
+    assert not sc.statusTracker().getJobIdsForGroup("cold-graph")
+    assert "r5" not in {r["id"] for r in got}
+    old = coll.at(os.path.basename(v0)).query(
+        q, n_results=3, filter_strategy="graph"
+    ).collect()
+    assert (old[0]["id"], old[0]["distance"]) == ("r5", 0.0)
+
+
 def test_sampled_ivf_probe_prunes_cells_and_takeordered(spark, sf_dir):
     """The sample-trained index serves with literal nprobe cell
     PartitionFilters on the assignment scan and TakeOrderedAndProject for

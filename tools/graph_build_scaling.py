@@ -1,79 +1,65 @@
-"""Graph BUILD wall-time scaling on corpora that trigger the hub-mesh
-recursion (VERDICT r12 next #8 done-criterion: exponent ≤ 0.6 measured
-on recursion-triggering builds).
+"""Wall time of the navigable-graph build (``graph_ann.build_graph``)
+against corpus size, on seeded clustered corpora
+(tools/make_clustered_embeddings.py, 64 dims, n/200 centers, σ 0.1).
 
-tools/scaling_exponents.py measures SERVING keys against the driver
-testdata, whose hub counts (8–40) never exceed the default all-pairs
-gate. This tool measures the BUILD on synthetic clustered corpora big
-enough that the recursion fires at every size (``hub_allpairs_max``
-pinned low so c = ceil(n/128) > gate everywhere), fits the log-log
-slope of cold build time vs n, and prints the level sizes so the run
-itself witnesses the no-large-all-pairs invariant.
+The build runs on the driver in numpy, so no Spark session is started.
+Each size is timed ``REPEATS`` times and the best is reported, with the
+graph's cell and edge counts; the log-log slope of time against n is
+printed last (≈1 for the cell-blocked layer 0, which dominates; the
+all-pairs hub mesh grows as (n/128)² and shows above ~500k rows).
 
-Every timed build runs against a FRESH corpus dir (content-addressed
-roots would otherwise serve the previous build). The slope understates
-the asymptote (fixed job-launch overhead flattens small points) — it is
-a quadratic-behavior detector: the r12 all-pairs hub mesh would read
-super-linear here as n grows c² = (n/128)² pairs.
-
-Usage: python tools/graph_build_scaling.py [sizes...]  default 4000 8000 16000
+Usage: python tools/graph_build_scaling.py [sizes...]  default 1000 20000 100000
 """
 
 from __future__ import annotations
 
-import json
 import math
 import os
-import shutil
 import sys
+import tempfile
 import time
-
-import numpy as np
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from pyspark.sql import SparkSession  # noqa: E402
-
 from tools.make_clustered_embeddings import make  # noqa: E402
 
-GATE = 16  # recursion fires whenever c = ceil(n/128) > 16, i.e. n > 2048
+REPEATS = 3
 
 
-def run(sizes=(4000, 8000, 16000)) -> None:
-    from adk_noui_vectordb_spark.operators import graph_ann as ga
+def run(sizes=(1000, 20000, 100000)) -> None:
+    import pyarrow.parquet as pq
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    from adk_noui_vectordb_spark.operators.graph_ann import build_graph
+
     pts = []
-    print("| n | hub levels | cold build s |")
-    print("|---|---|---|")
+    print("| n | cells | edges | build s (best of %d) |" % REPEATS)
+    print("|---|---|---|---|")
     for n in sizes:
-        base = f"/tmp/graph_build_scale_{n}"
-        shutil.rmtree(base, ignore_errors=True)
-        make(base, n, max(10, n // 200), 0.1)
-        t0 = time.perf_counter()
-        cur = ga.build_graph_index(spark, base, hub_allpairs_max=GATE)
-        dt = time.perf_counter() - t0
-        levels = json.load(open(os.path.join(cur, "build_stats.json")))[
-            "hub_mesh_levels"
-        ]
-        assert all(c > GATE for c in levels[:-1]) and levels[-1] <= GATE, levels
-        pts.append((n, dt))
-        print(f"| {n} | {levels} | {dt:.1f} |")
-    xs = [math.log(n) for n, _ in pts]
-    ys = [math.log(t) for _, t in pts]
-    mx, my = sum(xs) / len(xs), sum(ys) / len(ys)
-    slope = sum((x - mx) * (y - my) for x, y in zip(xs, ys)) / sum(
-        (x - mx) ** 2 for x in xs
-    )
-    print(f"\nbuild-time exponent: {slope:.2f}")
+        with tempfile.TemporaryDirectory() as d:
+            t = pq.read_table(make(d, n, max(10, n // 200), 0.1))
+        ids = t.column("vec_id").to_numpy()
+        mat = (
+            t.column("embedding").combine_chunks().flatten().to_numpy()
+            .astype("float64").reshape(n, -1)
+        )
+        best = math.inf
+        for _ in range(REPEATS):
+            t0 = time.perf_counter()
+            adj, _entry, cents, _hubs = build_graph(ids, mat)
+            best = min(best, time.perf_counter() - t0)
+        edges = sum(len(v) for v in adj.values())
+        pts.append((n, best))
+        print(f"| {n} | {len(cents)} | {edges} | {best:.2f} |", flush=True)
+    if len(pts) > 1:
+        xs = [math.log(n) for n, _ in pts]
+        ys = [math.log(t) for _, t in pts]
+        mx, my = sum(xs) / len(xs), sum(ys) / len(ys)
+        slope = sum((x - mx) * (y - my) for x, y in zip(xs, ys)) / sum(
+            (x - mx) ** 2 for x in xs
+        )
+        print(f"\nbuild-time exponent: {slope:.2f}")
 
 
 if __name__ == "__main__":
-    sizes = tuple(int(a) for a in sys.argv[1:]) or (4000, 8000, 16000)
-    run(sizes)
+    run(tuple(int(a) for a in sys.argv[1:]) or (1000, 20000, 100000))
