@@ -38,16 +38,18 @@ below holds its partitions there), so every commit and every read is
 planned on the driver too:
 - Writes (``add``, ``upsert``, ``update``, ``delete`` and a conflicted
   ``merge_from``) are driver COPY-ON-WRITE of the partitions they
-  touch: the batch is collected once (a pandas or Arrow batch is a
-  LocalRelation, so zero Spark jobs) and checked in numpy (a partial
-  ``update`` first fills its omitted columns from the stored rows);
-  the rows it replaces or deletes are found with the read path's
-  partition readers; and every touched vecs and meta partition is
-  rewritten as ONE pyarrow file of its surviving plus added rows.
-  Untouched partitions hardlink into the new version, so each
-  partition dir holds one data file (a disjoint ``merge_from`` links
-  the source's files beside it; ``compact`` folds those). Only
-  ``add_metadata_column`` and ``compact`` still run Spark.
+  touch: the batch is collected once, as it is (a pandas or Arrow
+  batch is a LocalRelation, so zero Spark jobs), and checked in numpy
+  (a partial ``update`` first fills its omitted columns from the
+  stored rows); the rows it replaces or deletes are found with the
+  read path's partition readers; and every touched vecs and meta
+  partition is rewritten as ONE pyarrow file of its surviving plus
+  added rows, which the commit hands, already decoded, to the read
+  memos of the version it publishes. Untouched partitions hardlink
+  into the new version, so each partition dir holds one data file (a
+  disjoint ``merge_from`` links the source's files beside it;
+  ``compact`` folds those). Only ``add_metadata_column`` and
+  ``compact`` still run Spark.
 - Reads (``query``, ``get``, ``count``, ``peek``) serve the resolved
   version on the DRIVER with zero Spark jobs and, warm, zero py4j
   calls: each version dir is listed once per session
@@ -61,9 +63,9 @@ planned on the driver too:
   builds the Spark DataFrame once. A probe ``query`` matches the
   query's band keys against the keys held with each vecs partition and
   opens the meta dirs of its candidates; ``count`` sums the meta
-  footers' row counts. Online top-k over one small snapshot does
-  not fit a job scheduler — each Spark job costs more than the whole
-  driver-side read.
+  partitions' footer row counts, memoized per partition. Online top-k
+  over one small snapshot does not fit a job scheduler — each Spark
+  job costs more than the whole driver-side read.
 - Readers never see a partial write: every mutation is one ``_CURRENT``
   swing; concurrent writers serialize on the root's writer lock and a
   stale plan raises ``ConcurrentWriterError`` instead of clobbering.
@@ -71,6 +73,7 @@ planned on the driver too:
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import hashlib
 import json
@@ -97,6 +100,8 @@ from ..sources import versioning as vn
 N_META_BUCKETS = 32
 VECS_SCHEMA = "vec_id bigint, emb array<double>, vbucket int"
 _RESERVED = ("id", "document", "embedding", "emb", "vec_id", "mbucket", "vbucket")
+# the types a write batch's reserved columns are stored in
+_STORED = {"id": "string", "embedding": "array<double>", "document": "string"}
 
 _COMPONENTS = [
     ("vecs", ["vbucket"]),
@@ -131,23 +136,11 @@ class SurrogateCollisionError(RuntimeError):
     """Two distinct string ids hashed to one 60-bit surrogate."""
 
 
-def _sid_expr(id_col) -> F.Column:
-    """60-bit md5 surrogate — the string-id analog of vec_bucket_expr's
-    md5 discipline; fits a BIGINT with headroom (no sign bit)."""
-    return F.conv(F.substring(F.md5(id_col), 1, 15), 16, 10).cast("bigint")
-
-
 def _sid_py(doc_id: str) -> int:
+    """60-bit md5 surrogate of a string id — the string-id analog of
+    vec_bucket_py's md5 discipline; fits a BIGINT with headroom (no sign
+    bit)."""
     return int(hashlib.md5(doc_id.encode()).hexdigest()[:15], 16)
-
-
-def _mbucket_expr(sid_col) -> F.Column:
-    return (
-        F.conv(F.substring(F.md5(sid_col.cast("string")), 1, 8), 16, 10).cast(
-            "bigint"
-        )
-        % N_META_BUCKETS
-    ).cast("int")
 
 
 def _mbucket_py(sid: int) -> int:
@@ -295,25 +288,33 @@ def _read_files(part: str, names, columns: list) -> pa.Table:
     return pa.concat_tables([read(f) for f in names])
 
 
+def _part_memo(spark: SparkSession, kind: str, rel: str, names: tuple, build, *extra):
+    """The ``kind`` memo entry of the partition dir ``rel`` whose data
+    files are ``names``, ``build()`` on a miss. Those names are unique
+    and a hardlink keeps them, so a partition a commit carried over
+    unchanged hits across versions, and a commit seeds the entries of
+    the partitions it wrote (``Collection._commit_rows``)."""
+    from ..memo import files_memo
+
+    return files_memo(spark, kind, build, rel, names, *extra)
+
+
 def _read_partition(
     spark: SparkSession, ver: str, rel: str, names: tuple, columns: list, convert
 ):
     """``convert`` of the pyarrow table of the partition dir ``rel`` of
     the published version dir ``ver``, whose data files are ``names``
     (from ``_version_parts``; ``convert(None)`` when there are none).
-    Every collection read goes through here. Memoized on ``rel`` plus
-    ``names``: those names are unique and a hardlink keeps them, so a
-    partition a commit carried over unchanged is not read again."""
-    from ..memo import files_memo
-
+    Every collection read goes through here, memoized by ``_part_memo``
+    on ``rel``, ``names`` and ``columns``."""
     if not names:
         return convert(None)
-    return files_memo(
+    return _part_memo(
         spark,
         "coll_partition",
-        lambda: convert(_read_files(os.path.join(ver, rel), names, columns)),
         rel,
         names,
+        lambda: convert(_read_files(os.path.join(ver, rel), names, columns)),
         tuple(columns),
     )
 
@@ -331,27 +332,36 @@ def _reader(spark: SparkSession, ver: "str | None"):
     return read
 
 
+_VEC_COLUMNS = ["vec_id", "emb"]
+
+
+def _vec_entry(ids, emb, dim: int) -> tuple:
+    """The decoded form of vecs rows, as read and as a commit writes
+    them: (vec_id, n x dim embeddings, n x RP_BANDS band keys, mbucket).
+    The band keys and mbuckets are derived from the stored rows, row by
+    row (integer arithmetic), so a commit derives them only for the rows
+    it adds; a zero vector's keys are -1 (it has none)."""
+    import numpy as np
+
+    mb = np.array([_mbucket_py(int(i)) for i in ids], np.int64)
+    return ids, emb, _band_keys(emb, dim), mb
+
+
 def _vec_parts(read, dim: int, vbuckets) -> list:
-    """(vec_id, n x dim embeddings, n x RP_BANDS band keys, mbucket) of
-    each of the ``vbuckets`` partitions, sorted. The band keys and
-    mbuckets are derived from the stored rows when the partition is
-    read, so they are memoized with its embeddings; a zero vector's
-    keys are -1 (it has none)."""
+    """``_vec_entry`` of each of the ``vbuckets`` partitions, sorted,
+    memoized with the partition's read."""
     import numpy as np
 
     def convert(t):
         if t is None:
-            ids, emb = np.empty(0, np.int64), np.empty((0, dim))
-        else:
-            ids = t.column("vec_id").to_numpy()
-            emb = t.column("emb").combine_chunks().flatten().to_numpy()
-            emb = emb.reshape(t.num_rows, dim)
-        mb = np.array([_mbucket_py(int(i)) for i in ids], np.int64)
-        return ids, emb, _band_keys(emb, dim), mb
+            return _vec_entry(np.empty(0, np.int64), np.empty((0, dim)), dim)
+        emb = t.column("emb").combine_chunks().flatten().to_numpy()
+        return _vec_entry(
+            t.column("vec_id").to_numpy(), emb.reshape(t.num_rows, dim), dim
+        )
 
     return [
-        read(f"vecs/vbucket={vb}", ["vec_id", "emb"], convert)
-        for vb in sorted(vbuckets)
+        read(f"vecs/vbucket={vb}", _VEC_COLUMNS, convert) for vb in sorted(vbuckets)
     ]
 
 
@@ -367,17 +377,20 @@ def _vec_rows(read, dim: int, vbuckets) -> tuple:
     )
 
 
+def _meta_entry(t, schema: pa.Schema) -> pa.Table:
+    """The decoded form of a meta partition's table ``t`` (None when
+    the partition is empty), as read and as a commit writes it: cast to
+    the collection's meta ``schema``."""
+    return schema.empty_table() if t is None else t.cast(schema)
+
+
 def _meta_rows(read, info: dict, mbuckets):
     """pyarrow table of the meta rows of the ``mbuckets`` partitions."""
     schema = _meta_arrow(info["meta_schema"])[1]
     return pa.concat_tables(
         [schema.empty_table()]
         + [
-            read(
-                f"meta/mbucket={mb}",
-                schema.names,
-                lambda t: schema.empty_table() if t is None else t.cast(schema),
-            )
+            read(f"meta/mbucket={mb}", schema.names, lambda t: _meta_entry(t, schema))
             for mb in sorted(mbuckets)
         ]
     )
@@ -841,33 +854,30 @@ class Collection:
     # other partition and publishes. A local batch runs no Spark job.
 
     @staticmethod
-    def _normalize(batch: DataFrame) -> tuple[DataFrame, list[str]]:
-        cols = batch.columns
-        if "id" not in cols or "embedding" not in cols:
-            raise ValueError("batch needs 'id' and 'embedding' columns")
-        meta_cols = [c for c in cols if c not in _RESERVED]
-        atomic = ("string", "bigint", "int", "smallint", "tinyint",
-                  "double", "float", "boolean", "date", "timestamp",
-                  "decimal")
-        for f in batch.schema.fields:
-            if f.name in meta_cols and not f.dataType.simpleString().startswith(atomic):
-                raise ValueError(
-                    f"metadata column {f.name!r} must be a scalar "
-                    f"(ChromaDB metadata values are str/int/float/bool), "
-                    f"got {f.dataType.simpleString()}"
-                )
-        doc = (
-            F.col("document").cast("string")
-            if "document" in cols
-            else F.lit(None).cast("string")
-        )
-        out = batch.select(
-            F.col("id").cast("string").alias("id"),
-            F.col("embedding").cast("array<double>").alias("emb"),
-            doc.alias("document"),
-            *[F.col(c) for c in meta_cols],
-        )
-        return out, meta_cols
+    def _intake(batch: DataFrame) -> tuple[list, dict]:
+        """(fields, {name: values}) of a write batch: its Spark fields
+        and each column's values as ``collect`` gives them, with ``id``,
+        ``embedding`` and ``document`` in the stored types. The batch is
+        collected as it is unless one of those columns needs a cast,
+        which a Spark ``select`` makes first (a pandas or Arrow batch is
+        a LocalRelation, which collects without a job; any other plan
+        runs its own job here, once)."""
+        fields = batch.schema.fields
+        if any(
+            f.name in _STORED and f.dataType.simpleString() != _STORED[f.name]
+            for f in fields
+        ):
+            batch = batch.select(
+                *[
+                    F.col(f.name).cast(_STORED[f.name]).alias(f.name)
+                    if f.name in _STORED
+                    else F.col(f.name)
+                    for f in fields
+                ]
+            )
+            fields = batch.schema.fields
+        rows = batch.collect()
+        return fields, {f.name: [r[j] for r in rows] for j, f in enumerate(fields)}
 
     def add(self, batch: DataFrame) -> str:
         """Insert-only (ChromaDB ``add``): any id already present
@@ -927,20 +937,15 @@ class Collection:
         if provided >= full:
             return self._write(batch, replace=True, require_present=True)
 
-        sel = batch.select(
-            F.col("id").cast("string").alias("id"),
-            *[F.col(c) for c in batch.columns if c != "id"],
-        )
-        # a pandas or Arrow batch is a LocalRelation: collected, no job
-        rows = sel.collect()
-        _check_ids([r["id"] for r in rows])
-        if not rows:
+        self._assert_writable()
+        fields, values = self._intake(batch)
+        _check_ids(values["id"])
+        if not values["id"]:
             return cur
-        fields = sel.schema.fields
         last = None
         for _ in range(3):
             try:
-                return self._update_partial(fields, rows, cur, info)
+                return self._update_partial(fields, values, cur, info)
             except vn.ConcurrentWriterError as ex:
                 last = ex
                 cur = self._cur()
@@ -949,20 +954,18 @@ class Collection:
                     raise
         raise last
 
-    def _update_partial(self, fields, rows, cur, info) -> str:
+    def _update_partial(self, fields, values, cur, info) -> str:
         """One partial-update attempt against the ``cur`` snapshot: the
-        columns the collected batch ``rows`` (Spark ``fields``) omit are
-        filled from ``cur``'s stored rows, and the completed batch
-        commits with the CAS expected pinned to ``cur`` (via
-        ``_write(expected_version=...)``) so a stale assembly loses
-        loudly, never silently."""
+        columns the collected batch (``_intake``'s ``fields`` and
+        ``values``) omits are filled from ``cur``'s stored rows, and the
+        completed batch commits with the CAS expected pinned to ``cur``
+        (``_commit_batch(expected_version=...)``) so a stale assembly
+        loses loudly, never silently."""
         import numpy as np
         import pandas as pd
-        from pyspark.sql.pandas.types import to_arrow_type
-        from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
         read = _reader(self.spark, cur)
-        ids = [r["id"] for r in rows]
+        ids = values["id"]
         sids = np.array([_sid_py(i) for i in ids], np.int64)
         old = _meta_rows(read, info, {_mbucket_py(int(s)) for s in sids})
         pos = pd.Index(old.column("vec_id").to_numpy()).get_indexer(sids)
@@ -981,25 +984,17 @@ class Collection:
             )
         old = old.take(pa.array(pos))
         stored = _meta_arrow(info["meta_schema"])[0]
-        # in the COLLECTION's column order: _write derives the meta
-        # schema from the batch's column order
-        out, arrays = [], []
-        for c in ["id", "embedding", "document"] + self._meta_cols(info):
-            if c in given:
-                f = given[c]
-                arrays.append(
-                    _arrow_column([r[c] for r in rows], to_arrow_type(f.dataType))
-                )
-            elif c == "embedding":
-                f = StructField(c, ArrayType(DoubleType()))
-                arrays.append(_list_array(vmat[vpos]))
-            else:
-                f = stored[c]
-                arrays.append(old.column(c))
-            out.append(f)
-        table = pa.Table.from_arrays(arrays, names=[f.name for f in out])
-        return self._write(
-            self.spark.createDataFrame(table, StructType(out)),
+
+        def column(c):
+            return values[c] if c in given else old.column(c).to_pylist()
+
+        # in the COLLECTION's column order: the commit derives the meta
+        # schema from the metadata columns' order
+        return self._commit_batch(
+            ids,
+            values["embedding"] if "embedding" in given else list(vmat[vpos]),
+            column("document"),
+            [(given.get(c, stored[c]), column(c)) for c in self._meta_cols(info)],
             replace=True,
             require_present=True,
             expected_version=os.path.basename(cur),
@@ -1012,22 +1007,9 @@ class Collection:
                 f"write through the unpinned Collection"
             )
 
-    def _write(
-        self,
-        batch: DataFrame,
-        replace: bool,
-        require_present: bool = False,
-        expected_version: "str | None" = None,
-    ) -> str:
-        """``expected_version`` (ADVICE r11): the version name the
-        caller's batch was ASSEMBLED against (partial update's
-        carried-forward old values). When set, the resolved current
-        version must still be it — and the commit CASes on it under the
-        lock — so a concurrent commit between assembly and here raises
-        ``ConcurrentWriterError`` instead of silently reverting the
-        interleaved writer's columns."""
-        import numpy as np
-
+    def _write(self, batch: DataFrame, replace: bool, require_present: bool = False) -> str:
+        """Commit a whole write batch: ``_intake`` collects it, then
+        ``_commit_batch`` checks and commits its rows."""
         self._assert_writable()
         if "embedding" not in batch.columns and "document" in batch.columns:
             # ChromaDB add(documents=...): embeddings computed by THE
@@ -1041,14 +1023,57 @@ class Collection:
                     F.col("document").cast("string")
                 ),
             )
-        b, meta_cols = self._normalize(batch)
-        # a pandas or Arrow batch is a LocalRelation, which collects
-        # without a job; any other plan runs its own job here, once
-        rows = b.collect()
-        if not rows:
+        if "id" not in batch.columns or "embedding" not in batch.columns:
+            raise ValueError("batch needs 'id' and 'embedding' columns")
+        atomic = ("string", "bigint", "int", "smallint", "tinyint",
+                  "double", "float", "boolean", "date", "timestamp",
+                  "decimal")
+        for f in batch.schema.fields:
+            if f.name not in _RESERVED and not f.dataType.simpleString().startswith(atomic):
+                raise ValueError(
+                    f"metadata column {f.name!r} must be a scalar "
+                    f"(ChromaDB metadata values are str/int/float/bool), "
+                    f"got {f.dataType.simpleString()}"
+                )
+        fields, values = self._intake(batch)
+        ids = values["id"]
+        return self._commit_batch(
+            ids,
+            values["embedding"],
+            values.get("document", [None] * len(ids)),
+            [(f, values[f.name]) for f in fields if f.name not in _RESERVED],
+            replace,
+            require_present,
+        )
+
+    def _commit_batch(
+        self,
+        ids: list,
+        embs: list,
+        docs: list,
+        meta: list,
+        replace: bool,
+        require_present: bool = False,
+        expected_version: "str | None" = None,
+    ) -> str:
+        """Check and commit the rows of a collected batch: their
+        ``ids``, ``embs`` (a sequence of floats or None each) and
+        ``docs``, and ``meta``, one (Spark field, values) pair per
+        metadata column, in the order that fixes the meta schema on the
+        first write.
+
+        ``expected_version`` (ADVICE r11): the version name the batch
+        was ASSEMBLED against (partial update's carried-forward old
+        values). When set, the resolved current version must still be
+        it — and the commit CASes on it under the lock — so a
+        concurrent commit between assembly and here raises
+        ``ConcurrentWriterError`` instead of silently reverting the
+        interleaved writer's columns."""
+        import numpy as np
+
+        if not ids:
             cur = self._cur()
             return cur if cur is not None else ""
-        ids = [r[0] for r in rows]
         _check_ids(ids)
         sids = [_sid_py(i) for i in ids]
         if len(set(sids)) != len(sids):
@@ -1066,7 +1091,7 @@ class Collection:
         # a NULL or non-finite embedding (a NULL element reads as NaN
         # here) has no cosine and breaks the graph's centroid
         # training: rejected, with the dims checked, before any commit
-        embs = [None if r[1] is None else np.asarray(r[1], np.float64) for r in rows]
+        embs = [None if e is None else np.asarray(e, np.float64) for e in embs]
         bad = [i for i, e in zip(ids, embs) if e is None or not np.isfinite(e).all()]
         if bad:
             raise ValueError(
@@ -1078,11 +1103,7 @@ class Collection:
             raise ValueError(f"mixed embedding dims {lo}..{hi}")
         meta_schema = ", ".join(
             ["vec_id bigint", "id string", "document string"]
-            + [
-                f"{f.name} {f.dataType.simpleString()}"
-                for f in b.schema.fields
-                if f.name in meta_cols
-            ]
+            + [f"{f.name} {f.dataType.simpleString()}" for f, _ in meta]
             + ["mbucket int"]
         )
         cur = self._cur()
@@ -1114,14 +1135,12 @@ class Collection:
             raise ValueError(f"dim mismatch: {info['dim']} != {lo}")
         extra = {"collection.json": json.dumps(info)}
         schema = _meta_arrow(meta_schema)[1]
-        # the meta fields after vec_id are the batch's id, document and
-        # metadata columns: every column but emb, in order
-        cols = [0] + list(range(2, len(b.columns)))
+        # the meta fields after vec_id: id, document, metadata columns
         add = pa.Table.from_arrays(
             [pa.array(sids, pa.int64())]
             + [
-                _arrow_column([r[j] for r in rows], f.type)
-                for j, f in zip(cols, list(schema)[1:])
+                _arrow_column(v, f.type)
+                for v, f in zip([ids, docs] + [v for _, v in meta], list(schema)[1:])
             ],
             schema=schema,
         )
@@ -1139,7 +1158,9 @@ class Collection:
                 # batch on top of theirs with the CALLER's semantics —
                 # a losing add() must still raise DuplicateIDError if the
                 # winner carried overlapping ids (VERDICT r10 next #4)
-                return self._write(batch, replace=replace, require_present=require_present)
+                return self._commit_batch(
+                    ids, embs, docs, meta, replace, require_present
+                )
         victims = self._stored_ids(cur, info, add, replace, require_present)
         return self._commit_rows(cur, info, victims, add, mat, extra)
 
@@ -1185,7 +1206,11 @@ class Collection:
         schema) with their ``mat`` embeddings. Every vecs and meta
         partition that holds a victim or receives a row becomes one new
         file of its surviving and added rows. The commit CASes on
-        ``cur``."""
+        ``cur``; once it has published, each file it wrote is seeded
+        into the read memos in the decoded form a read of it gives (the
+        kept rows' entries sliced from the old partition's, band keys
+        derived only for the added rows), so the reads that follow open
+        no file. A commit that raises seeds nothing."""
         import numpy as np
 
         dim = info["dim"]
@@ -1202,25 +1227,30 @@ class Collection:
         old_vb = {vec_bucket_py(int(v)) for v in gone}
         add_vb = np.array([vec_bucket_py(int(s)) for s in sids], np.int64)
         add_mb = np.array([_mbucket_py(int(s)) for s in sids], np.int64)
+        # {partition rel: (columns, decoded entry)} of every file written
+        seeds = {}
         vecs = {}
         for vb in sorted(old_vb | set(add_vb.tolist())):
-            ids, emb = _vec_rows(read, dim, [vb])
-            keep, new = survivors(ids), add_vb == vb
-            vecs[f"vbucket={vb}"] = pa.table(
-                {
-                    "vec_id": np.concatenate([ids[keep], sids[new]]),
-                    "emb": _list_array(np.concatenate([emb[keep], mat[new]])),
-                }
+            (old,) = _vec_parts(read, dim, [vb])
+            keep, new = survivors(old[0]), add_vb == vb
+            entry = tuple(
+                np.concatenate([o[keep], a])
+                for o, a in zip(old, _vec_entry(sids[new], mat[new], dim))
             )
+            spec = f"vbucket={vb}"
+            vecs[spec] = pa.table({"vec_id": entry[0], "emb": _list_array(entry[1])})
+            seeds[f"vecs/{spec}"] = (_VEC_COLUMNS, entry)
         meta = {}
         old_mb = {_mbucket_py(int(v)) for v in gone}
         for mb in sorted(old_mb | set(add_mb.tolist())):
             rows = _meta_rows(read, info, [mb])
             keep = survivors(rows.column("vec_id").to_numpy())
-            meta[f"mbucket={mb}"] = pa.concat_tables(
+            spec = f"mbucket={mb}"
+            meta[spec] = pa.concat_tables(
                 [rows.filter(pa.array(keep)), add.filter(pa.array(add_mb == mb))]
-            )
-        return vn.commit_version(
+            ).combine_chunks()
+            seeds[f"meta/{spec}"] = (schema.names, _meta_entry(meta[spec], schema))
+        new_ver = vn.commit_version(
             self.spark,
             self.root,
             [
@@ -1230,6 +1260,17 @@ class Collection:
             expected=None if cur is None else os.path.basename(cur),
             extra_files=extra,
         )
+        parts = _version_parts(self.spark, new_ver)
+        for rel, (columns, entry) in seeds.items():
+            names = parts.get(rel)
+            if not names:  # an emptied partition wrote no file
+                continue
+            _part_memo(
+                self.spark, "coll_partition", rel, names, lambda: entry, tuple(columns)
+            )
+            if rel.startswith("meta/"):
+                _part_memo(self.spark, "coll_count", rel, names, lambda: entry.num_rows)
+        return new_ver
 
     def delete(
         self,
@@ -1560,28 +1601,24 @@ class Collection:
 
     def count(self) -> int:
         """Row count of the resolved version, summed from the meta
-        files' parquet footers (no data page is read)."""
+        files' parquet footers (no data page is read), memoized per meta
+        partition (``_part_memo``): a commit seeds the counts of the
+        partitions it wrote, so the count after it reads no footer."""
         import pyarrow.parquet as pq
-
-        from ..memo import files_memo
 
         cur = self._cur()
         if cur is None or self._info(cur) is None:
             return 0
-        meta = tuple(
-            (rel, names)
+
+        def rows(rel: str, names: tuple) -> int:
+            return sum(
+                pq.read_metadata(os.path.join(cur, rel, f)).num_rows for f in names
+            )
+
+        return sum(
+            _part_memo(self.spark, "coll_count", rel, names, lambda: rows(rel, names))
             for rel, names in _version_parts(self.spark, cur).items()
             if rel.startswith("meta" + os.sep)
-        )
-        return files_memo(
-            self.spark,
-            "coll_count",
-            lambda: sum(
-                pq.read_metadata(os.path.join(cur, rel, f)).num_rows
-                for rel, names in meta
-                for f in names
-            ),
-            meta,
         )
 
     def peek(self, n: int = 10) -> LocalResult:
@@ -2296,61 +2333,67 @@ def collection_get_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@contextlib.contextmanager
+def _demo_fork(spark: SparkSession, sf_dir: str, tag: str, batch: DataFrame):
+    """A private ``fork`` of the demo collection root ``tag`` (which
+    holds ``batch``, committed on first use), in a temp dir removed on
+    exit. A key that rolls back or recommits replays on its own fork,
+    so replays in other threads or processes sharing the root never
+    meet; the shared root is written only by its first commit."""
+    import shutil
+    import tempfile
+
+    coll = _demo_root(spark, sf_dir, tag)
+    if coll._cur() is None:
+        # an upsert: a concurrent first use commits the same rows again
+        coll.upsert(batch)
+    tmp = tempfile.mkdtemp(prefix=f"adk_{tag}_")
+    try:
+        yield coll.fork(os.path.join(tmp, "fork"))
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
 def collection_rollback_get(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write-side time travel (r13 — ``rollback``'s pointer swing as a
     driver key, complementing ``collection_get_snapshot``'s read-side
-    pin): add even doc_ids (v_000000), add odd ones (v_000001), then
-    ``rollback('v_000000')`` — one atomic ``_CURRENT`` swing under the
-    writer lock — and serve ``get`` from the RESTORED state: rows are
-    exactly the first commit's filter survivors, the second commit's
-    rows gone without any data rewrite (the abandoned version is an
-    orphan the next commit sweeps). Replay-safe at every crash window:
-    whatever version ``_CURRENT`` names on entry, the key converges it
-    back to v_000000 before reading."""
-    coll = _demo_root(spark, sf_dir, "collection_rollback_v1")
+    pin): on a private fork of the even doc_ids (v_000000), add the odd
+    ones (v_000001), then ``rollback('v_000000')`` — one atomic
+    ``_CURRENT`` swing under the writer lock — and serve ``get`` from
+    the RESTORED state: rows are exactly the first commit's filter
+    survivors, the second commit's rows gone without any data rewrite
+    (the abandoned version is an orphan the next commit sweeps)."""
     base = _demo_batch(spark, sf_dir)
-    if coll._cur() is None:
-        coll.add(base.filter(F.col("par") == 0).drop("par"))
-    if os.path.basename(coll._cur()) == "v_000000" and not os.path.isdir(
-        os.path.join(coll.root, "v_000001")
-    ):
+    even = base.filter(F.col("par") == 0).drop("par")
+    with _demo_fork(spark, sf_dir, "collection_rollback_v2", even) as coll:
         coll.add(base.filter(F.col("par") == 1).drop("par"))
-    if os.path.basename(coll._cur()) != "v_000000":
         coll.rollback("v_000000")
-    return coll.get(where={"lang": {"$in": ["es", "zh"]}}, limit=20).select(
-        "id", "lang", "n_chars"
-    )
+        return coll.get(where={"lang": {"$in": ["es", "zh"]}}, limit=20).select(
+            "id", "lang", "n_chars"
+        )
 
 
 def collection_replace_graph_topk(
     spark: SparkSession, sf_dir: str, k: int = 10
 ) -> DataFrame:
     """Vector REPLACE served by the graph strategy, end-to-end as a
-    driver key: v_000000 adds the whole demo corpus and serves a graph
-    query; v_000001 ``update``s doc-3's embedding to embeddings[7]'s
-    vector; the next graph query builds the graph of v_000001's vectors
+    driver key: on a private fork of the whole demo corpus (v_000000),
+    a graph query serves the graph of v_000000's vectors; v_000001
+    ``update``s doc-3's embedding to embeddings[7]'s vector; the next
+    graph query builds the graph of v_000001's vectors (new data files)
     and, queried AT the new vector, surfaces both doc-7 and the replaced
-    doc-3 at distance 0.
-
-    Every run REPLAYS the lifecycle deterministically (the rollback
-    key's discipline): roll back to v_000000, query, update, query —
-    the recommit reuses the name v_000001 with new data files, so the
-    graph is built again for it. The oracle is the standard graph chain
-    over the demo corpus with doc-3's embedding swapped."""
-    coll = _demo_root(spark, sf_dir, "collection_replace_graph_v1")
-    base = _demo_batch(spark, sf_dir)
-    if coll._cur() is None:
-        coll.add(base.drop("par"))
-    if os.path.basename(coll._cur()) != "v_000000":
-        coll.rollback("v_000000")
-    qv = _demo_query(spark, sf_dir, 7)
-    coll.query(qv, n_results=1, filter_strategy="graph").collect()
-    coll.update(
-        spark.createDataFrame([("doc-3", qv)], "id string, embedding array<double>")
-    )
-    return coll.query(qv, n_results=k, filter_strategy="graph").select(
-        "id", "distance"
-    )
+    doc-3 at distance 0. The oracle is the standard graph chain over
+    the demo corpus with doc-3's embedding swapped."""
+    base = _demo_batch(spark, sf_dir).drop("par")
+    with _demo_fork(spark, sf_dir, "collection_replace_graph_v2", base) as coll:
+        qv = _demo_query(spark, sf_dir, 7)
+        coll.query(qv, n_results=1, filter_strategy="graph").collect()
+        coll.update(
+            spark.createDataFrame([("doc-3", qv)], "id string, embedding array<double>")
+        )
+        return coll.query(qv, n_results=k, filter_strategy="graph").select(
+            "id", "distance"
+        )
 
 
 def collection_get_page2(spark: SparkSession, sf_dir: str) -> DataFrame:

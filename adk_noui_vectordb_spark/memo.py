@@ -111,11 +111,13 @@ def session_memo(
 # cheap lazy handles can never FIFO-evict expensive built frames
 # (minhash/simhash/band signatures); LRU because ingest lifecycles mint
 # new version dirs all session long. Sized for the collection read path,
-# which memoizes one entry per partition dir (up to 32 vecs + 32 meta
-# dirs per version, shared by the versions that hardlink its files) and
-# one navigable graph per version a graph query served
-# (api/collection.py ``Collection._graph``): a few versions served side
-# by side (an at() view next to the live one). The bound counts
+# which memoizes one entry per partition dir, two for a meta dir (its
+# decoded rows and its row count; up to 32 vecs + 32 meta dirs per
+# version, shared by the versions that hardlink its files; a commit
+# seeds the entries of the partitions it wrote) and one navigable graph
+# per version a graph query served (api/collection.py
+# ``Collection._graph``): a few versions served side by side (an at()
+# view next to the live one). The bound counts
 # entries, not bytes: a graph holds its adjacency plus a view of every
 # vector, so a session that graph-queries many distinct versions keeps
 # up to this many graphs alive.

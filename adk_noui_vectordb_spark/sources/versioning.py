@@ -346,26 +346,28 @@ def link_partitions(src: str, dst: str, skip: frozenset = frozenset()) -> None:
     linked — Spark recreates them, and a linked inode must never be
     written through. Data files inside a partition are immutable (append
     jobs write fresh uniquely-named part files), so sharing inodes is
-    safe."""
+    safe. ``dst`` is new or empty, so every partition dir below it is
+    created with one ``mkdir``."""
     os.makedirs(dst, exist_ok=True)
-    for name in os.listdir(src):
-        sp = os.path.join(src, name)
-        if not os.path.isdir(sp) or name in skip:
-            continue
-        _link_level(sp, os.path.join(dst, name), name, skip)
+    with os.scandir(src) as entries:
+        for e in entries:
+            if e.is_dir() and e.name not in skip:
+                _link_level(e.path, os.path.join(dst, e.name), e.name, skip, os.mkdir)
 
 
-def _link_level(src: str, dst: str, rel: str, skip: frozenset) -> None:
-    os.makedirs(dst, exist_ok=True)
-    for name in os.listdir(src):
-        sp = os.path.join(src, name)
-        sub = f"{rel}/{name}"
-        if sub in skip:
-            continue
-        if os.path.isdir(sp):
-            _link_level(sp, os.path.join(dst, name), sub, skip)
-        else:
-            os.link(sp, os.path.join(dst, name))
+def _link_level(src: str, dst: str, rel: str, skip: frozenset, mkdir) -> None:
+    """Hardlink the tree ``src`` into ``dst`` (made with ``mkdir``),
+    listing each directory once."""
+    mkdir(dst)
+    with os.scandir(src) as entries:
+        for e in entries:
+            sub = f"{rel}/{e.name}"
+            if sub in skip:
+                continue
+            if e.is_dir():
+                _link_level(e.path, os.path.join(dst, e.name), sub, skip, mkdir)
+            else:
+                os.link(e.path, os.path.join(dst, e.name))
 
 
 def _merge_link_files(src_comp: str, dst_comp: str, prefix: str) -> None:
@@ -397,7 +399,9 @@ def link_component(src: str, dst: str) -> None:
     markers) into the new version — only safe when the new version
     never writes into it (unlike ``link_partitions``, whose target
     receives append jobs)."""
-    _link_level(src, dst, "", frozenset())
+    _link_level(
+        src, dst, "", frozenset(), lambda d: os.makedirs(d, exist_ok=True)
+    )
 
 
 def _carry_version_files(src_dir: str, tmp: str) -> None:
@@ -485,10 +489,10 @@ class Component:
     and the keys of ``tables``, then append each frame in ``writes`` —
     rewritten partitions get their anti-joined survivors plus the batch
     rows, untouched partitions get batch appends beside linked files.
-    ``tables`` maps a partition spec (``"vbucket=3"``,
-    ``"band=0/band_key=5"``) to the pyarrow table that becomes that
-    partition's one data file (none when the table is empty): the
-    driver-side copy-on-write of the partitions a commit touches.
+    ``tables`` maps a one-level partition spec (``"vbucket=3"``) to
+    the pyarrow table that becomes that partition's one data file
+    (none when the table is empty): the driver-side copy-on-write of
+    the partitions a commit touches.
     Unpartitioned sidecars (stats) overwrite single-file. ``link_from``
     links an entire immutable component (frozen cents) from an
     absolute path."""
@@ -511,7 +515,8 @@ def _write_partition_table(comp_dir: str, spec: str, table) -> None:
     """Write ``table`` as the one data file of partition ``spec`` under
     ``comp_dir``, with a Spark-style unique ``part-`` name (store
     accounting and compaction count ``part-*`` files, and read memos key
-    on the names); an empty table writes nothing."""
+    on the names); an empty table writes nothing. The partition dir is
+    new (``link_partitions`` skipped it), so one ``mkdir`` makes it."""
     import uuid
 
     import pyarrow.parquet as pq
@@ -519,7 +524,7 @@ def _write_partition_table(comp_dir: str, spec: str, table) -> None:
     if table.num_rows == 0:
         return
     d = os.path.join(comp_dir, spec)
-    os.makedirs(d, exist_ok=True)
+    os.mkdir(d)
     pq.write_table(table, os.path.join(d, f"part-{uuid.uuid4().hex}.parquet"))
 
 

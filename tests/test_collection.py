@@ -24,6 +24,27 @@ from adk_noui_vectordb_spark.operators.ann import (
 DIM = 8
 
 
+# The Spark twins of the driver writer's surrogate and meta-bucket hashes
+# (``_sid_py``, ``_mbucket_py``), which
+# test_driver_writer_matches_spark_hash_twins checks the stored rows
+# against.
+def _sid_expr(id_col):
+    """60-bit md5 surrogate of a string id column, as a BIGINT."""
+    return F.conv(F.substring(F.md5(id_col), 1, 15), 16, 10).cast("bigint")
+
+
+def _mbucket_expr(sid_col):
+    """The meta bucket of a surrogate column."""
+    from adk_noui_vectordb_spark.api.collection import N_META_BUCKETS
+
+    return (
+        F.conv(F.substring(F.md5(sid_col.cast("string")), 1, 8), 16, 10).cast(
+            "bigint"
+        )
+        % N_META_BUCKETS
+    ).cast("int")
+
+
 def _vecs(seed: int, n: int) -> np.ndarray:
     rng = np.random.default_rng(seed)
     return rng.normal(size=(n, DIM)).round(3)
@@ -616,8 +637,10 @@ def test_repeat_query_rereads_only_rewritten_partitions(
     spark, coll, opened_dirs, monkeypatch
 ):
     """Partition reads are memoized on their data files' names, which a
-    commit's hardlinks keep: after a 1-row upsert, a repeated query opens
-    parquet files only in the partitions the upsert rewrote."""
+    commit's hardlinks keep, and a commit seeds the memo with the
+    partitions it wrote: after a 1-row upsert, the committing session's
+    repeated query reads both rewritten and carried-over partitions and
+    opens no parquet file."""
     import os
 
     import pyarrow.parquet as pq
@@ -649,9 +672,7 @@ def test_repeat_query_rereads_only_rewritten_partitions(
     read = {os.path.relpath(p, cur) for p in opened_dirs if files(cur, os.path.relpath(p, cur))}
     rewritten = {r for r in read if files(cur, r) != files(old, r)}
     assert rewritten and read - rewritten
-    assert sorted(os.path.relpath(os.path.dirname(f), cur) for f in opened) == sorted(
-        rewritten
-    )
+    assert opened == []
 
 
 def test_driver_writer_matches_spark_hash_twins(spark, tmp_path):
@@ -669,9 +690,7 @@ def test_driver_writer_matches_spark_hash_twins(spark, tmp_path):
 
     from adk_noui_vectordb_spark.api.collection import (
         VECS_SCHEMA,
-        _mbucket_expr,
         _reader,
-        _sid_expr,
         _vec_parts,
     )
     from adk_noui_vectordb_spark.operators.ann import (
@@ -1875,19 +1894,19 @@ def test_partial_update_lost_update_fence(spark, tmp_path, monkeypatch):
     mat = _vecs(77, 3)
     coll.add(_batch(spark, ["a", "b", "c"], mat))
     other = Collection(spark, root)
-    real_write = Collection._write
+    real_commit = Collection._commit_batch
     fired = {"done": False}
 
-    def interfering(self, batch, replace, require_present=False, expected_version=None):
+    def interfering(self, *args, expected_version=None, **kwargs):
         if expected_version is not None and not fired["done"]:
             fired["done"] = True
             # interleaved writer changes the OMITTED column mid-flight
             other.update(
                 spark.createDataFrame([("a", 99)], "id string, stars int")
             )
-        return real_write(self, batch, replace, require_present, expected_version)
+        return real_commit(self, *args, expected_version=expected_version, **kwargs)
 
-    monkeypatch.setattr(Collection, "_write", interfering)
+    monkeypatch.setattr(Collection, "_commit_batch", interfering)
     # partial update provides lang only; stars is carried forward
     coll.update(spark.createDataFrame([("a", "fr")], "id string, lang string"))
     row = coll.get(ids=["a"]).head()
@@ -2485,3 +2504,208 @@ def test_graph_auto_expansion_reads_compound_where_tree(spark, tmp_path):
     auto_hi = ids(where=w_hi)
     forced_blind = ids(where=w_hi, graph_predicate_expansion=False)
     assert auto_hi == forced_blind, (auto_hi, forced_blind)
+
+
+def test_demo_replays_survive_a_concurrent_replay(spark, sf_dir):
+    """The catalogue keys that roll back and recommit a demo collection
+    replay on a private fork of its shared root: two threads running
+    them at once (as two processes sharing the temp dir do) both get
+    the answer a lone run gives."""
+    import threading
+
+    from adk_noui_vectordb_spark.api import collection as capi
+
+    keys = (capi.collection_rollback_get, capi.collection_replace_graph_topk)
+
+    def answer(key):
+        return sorted(tuple(r) for r in key(spark, sf_dir).collect())
+
+    want = {key: answer(key) for key in keys}
+    got, errors = [], []
+
+    def replay():
+        try:
+            for _ in range(3):
+                got.extend((key, answer(key)) for key in keys)
+        except Exception as ex:  # noqa: BLE001 — reported below
+            errors.append(f"{type(ex).__name__}: {ex}")
+
+    threads = [threading.Thread(target=replay) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert len(got) == 12
+    assert all(rows == want[key] for key, rows in got)
+
+
+def test_commit_seeds_reads_exactly(spark, tmp_path, monkeypatch):
+    """A commit seeds the read memos with the partitions it wrote, in
+    the exact form a read of their files gives: over every metadata
+    type the writer accepts (a zero vector and NULLs included), after
+    an add to an empty collection, an upsert, a partial update, a
+    delete and an overlapping ``merge_from``, the reads that follow
+    open no parquet file and return rows equal in value and type to
+    the same reads after the memos are cleared. A commit that raises
+    seeds nothing."""
+    import datetime
+    import decimal
+
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    from adk_noui_vectordb_spark import memo
+    from adk_noui_vectordb_spark.api.collection import (
+        N_META_BUCKETS,
+        _meta_rows,
+        _reader,
+        _vec_parts,
+    )
+    from adk_noui_vectordb_spark.operators.ann import N_VEC_BUCKETS
+    from adk_noui_vectordb_spark.sources import versioning as vn
+
+    ddl = (
+        "id string, embedding array<double>, document string, s string, "
+        "b bigint, i int, sm smallint, t tinyint, d double, f float, "
+        "ok boolean, day date, ts timestamp, amt decimal(10,2)"
+    )
+    dim = 16
+
+    def batch(ids, seed):
+        mat = np.random.default_rng(seed).normal(size=(len(ids), dim)).round(4)
+        rows = [
+            (
+                i,
+                [0.0] * dim if i == "zero" else [float(x) for x in mat[j]],
+                None if j % 7 == 2 else f"doc {i} {seed}",
+                None if j % 5 == 1 else f"s{j % 3}",
+                2**40 + j,
+                seed - j,
+                j * 100,
+                j % 100 - 50,
+                j / 3,
+                j * 0.5,
+                j % 2 == 0,
+                datetime.date(2020, 1, 1 + j % 28),
+                datetime.datetime(2021, 6, 1, 12, j % 60, 30, 250000),
+                decimal.Decimal(f"{j}.{seed % 10}5"),
+            )
+            for j, i in enumerate(ids)
+        ]
+        return spark.createDataFrame(rows, ddl)
+
+    coll = Collection(spark, str(tmp_path / "seeded"))
+    q = [float(x) for x in np.random.default_rng(3).normal(size=dim)]
+
+    def reads() -> dict:
+        results = {
+            "get": coll.get(include_embeddings=True),
+            "probe": coll.query(
+                q,
+                n_results=8,
+                include=["documents", "metadatas", "embeddings", "distances"],
+            ),
+            "filtered": coll.query(q, n_results=8, where={"ok": True}),
+            "graph": coll.query(q, n_results=8, filter_strategy="graph"),
+        }
+        out = {
+            k: (r.schema, r._table, [[(type(v), v) for v in row] for row in r.collect()])
+            for k, r in results.items()
+        }
+        out["count"] = coll.count()
+        # and the decoded partitions themselves, as the memo holds them
+        cur, info = coll._require()
+        read = _reader(spark, cur)
+        out["vecs"] = _vec_parts(read, dim, range(N_VEC_BUCKETS))
+        out["meta"] = [_meta_rows(read, info, [mb]) for mb in range(N_META_BUCKETS)]
+        return out
+
+    opened = []
+
+    class CountingParquetFile(pq.ParquetFile):
+        def __init__(self, source, *args, **kwargs):
+            opened.append(source)
+            super().__init__(source, *args, **kwargs)
+
+    def check(op: str) -> None:
+        opened.clear()
+        with monkeypatch.context() as m:
+            m.setattr(pq, "ParquetFile", CountingParquetFile)
+            warm = reads()
+        assert opened == [], f"{op}: the reads after the commit opened {opened}"
+        memo._VERSION_MEMO.clear()
+        cold = reads()
+        assert warm["count"] == cold["count"], op
+        for w, c in zip(warm["vecs"], cold["vecs"]):
+            assert [a.dtype for a in w] == [a.dtype for a in c], op
+            assert all(np.array_equal(a, b) for a, b in zip(w, c)), op
+        for w, c in zip(warm["meta"], cold["meta"]):
+            assert w.schema == c.schema and w.equals(c), op
+        for k in ("get", "probe", "filtered", "graph"):
+            (ws, wt, wrows), (cs, ct, crows) = warm[k], cold[k]
+            assert ws == cs, (op, k)
+            assert wt.equals(ct), (op, k)
+            assert wrows == crows, (op, k)
+
+    ids = [f"e{i:02d}" for i in range(40)] + ["zero"]
+    coll.add(batch(ids, 11))
+    check("add")
+    coll.upsert(batch(ids[:6] + [f"u{i}" for i in range(6)], 12))
+    check("upsert")
+    pdf = pd.DataFrame(
+        {
+            "id": ids[10:16],
+            "s": ["new"] * 6,
+            "ts": [datetime.datetime(2022, 3, 1, 9, k) for k in range(6)],
+        }
+    )
+    coll.update(spark.createDataFrame(pdf, "id string, s string, ts timestamp"))
+    check("partial update")
+    coll.delete(ids=ids[20:26])
+    check("delete")
+    other = Collection(spark, str(tmp_path / "other"))
+    other.add(batch(ids[30:36] + [f"m{i}" for i in range(6)], 13))
+    coll.merge_from(other, on_conflict="replace")
+    check("merge_from")
+    assert coll.count() == 41 + 6 - 6 + 6
+
+    # a commit that raises (here: it loses the CAS at publish) seeds
+    # nothing
+    def lose(*args, **kwargs):
+        raise vn.ConcurrentWriterError("lost the race")
+
+    held = set(memo._VERSION_MEMO)
+    with monkeypatch.context() as m:
+        m.setattr(vn, "_publish_tmp", lose)
+        with pytest.raises(vn.ConcurrentWriterError):
+            coll.upsert(batch(["u0", "fresh"], 14))
+    assert set(memo._VERSION_MEMO) == held
+
+
+def test_write_casts_batch_columns_to_stored_types(spark, coll):
+    """A batch whose ``id``, ``embedding`` or ``document`` is not yet
+    string, array<double>, string is cast with Spark's cast semantics
+    before it is checked and committed; a partial ``update`` casts the
+    columns it brings the same way."""
+    ddl = "id bigint, embedding array<float>, document int, n int"
+    rows = [(7, [0.1, 0.2, -0.3], 3, 1), (8, [1.5, 0.0, 2.25], None, 2)]
+    batch = spark.createDataFrame(rows, ddl)
+    coll.add(batch)
+    want = {
+        r["id"]: (list(r["embedding"]), r["document"])
+        for r in batch.select(
+            F.col("id").cast("string").alias("id"),
+            F.col("embedding").cast("array<double>").alias("embedding"),
+            F.col("document").cast("string").alias("document"),
+        ).collect()
+    }
+    got = coll.get(include_embeddings=True).collect()
+    assert {r["id"]: (list(r["embedding"]), r["document"]) for r in got} == want
+    assert coll._require()[1]["meta_schema"] == (
+        "vec_id bigint, id string, document string, n int, mbucket int"
+    )
+    coll.update(spark.createDataFrame([(7, 44)], "id bigint, document bigint"))
+    row = coll.get(ids=["7"]).head()
+    assert (row["document"], row["n"]) == ("44", 1)

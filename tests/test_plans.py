@@ -584,3 +584,53 @@ def test_serving_path_job_budgets(spark, sf_dir):
         if n > budget:
             failures.append(f"{key}: {n} jobs (budget {budget})")
     assert not failures, "; ".join(failures)
+
+
+def test_local_writes_make_only_intake_py4j_calls(spark, tmp_path, py4j_calls):
+    """An upsert of a pandas batch and a metadata-only partial update
+    commit on the driver: each makes exactly the py4j calls of its
+    batch's intake (``Collection._intake``: the schema and one
+    ``collect``), and none after it."""
+    import numpy as np
+    import pandas as pd
+
+    from adk_noui_vectordb_spark.api.collection import Collection
+
+    rng = np.random.default_rng(9)
+
+    def upsert_batch(ids):
+        pdf = pd.DataFrame(
+            {
+                "id": ids,
+                "embedding": [rng.normal(size=8) for _ in ids],
+                "document": [f"doc {i}" for i in ids],
+                "n": pd.array(range(len(ids)), dtype="int32"),
+            }
+        )
+        return spark.createDataFrame(
+            pdf, "id string, embedding array<double>, document string, n int"
+        )
+
+    def update_batch(ids):
+        pdf = pd.DataFrame({"id": ids, "n": pd.array([7] * len(ids), dtype="int32")})
+        return spark.createDataFrame(pdf, "id string, n int")
+
+    coll = Collection(spark, str(tmp_path / "w"))
+    coll.add(upsert_batch([f"r{i:02d}" for i in range(40)]))
+    ids = [f"r{i:02d}" for i in range(0, 40, 4)] + ["x1", "x2"]
+    calls = {}
+    for name, make, write in (
+        ("upsert", upsert_batch, coll.upsert),
+        ("update", update_batch, coll.update),
+    ):
+        rows = ids[:-2] if name == "update" else ids
+        alone, written = make(rows), make(rows)
+        with py4j_calls() as intake:
+            Collection._intake(alone)
+        with py4j_calls() as n:
+            write(written)
+        calls[name] = (n[0], intake[0])
+    assert calls["upsert"][0] == calls["upsert"][1], calls
+    assert calls["update"][0] == calls["update"][1], calls
+    got = {r["id"]: r["n"] for r in coll.get(ids=ids).collect()}
+    assert got == {i: 7 for i in ids[:-2]} | {"x1": 10, "x2": 11}
