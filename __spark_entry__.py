@@ -257,52 +257,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "index_pipeline": _idx.index_pipeline_q,
         # embedding stage (pandas_udf Arrow path, SURVEY.md §2.11)
         "embed_projection_rows": _embed.embed_projection_rows,
-        # r7: embedding-matrix diagnostics + axis-aligned dim reduction
-        "embed_dim_stats": _embed.embed_dim_stats,
-        "embed_topvar_project": _embed.embed_topvar_project,
         "knn_text_query": _embed.knn_text_query,
-        # r10c: multi-vector retrieval — chunk-granular embeddings,
-        # per-doc max-sim fold (the parent-document pattern over the
-        # reference's chunked collection)
-        "chunked_maxsim_topk": _embed.chunked_maxsim_topk,
-        # r15: TRUE late interaction (ColBERT SIGIR'20 scoring) — per
-        # query-TOKEN vectors, score = Σ_i max_chunks cos(q_i, chunk);
-        # the sum-of-MaxSim reduction, distinct from the parent-doc
-        # single-vector max above
-        "late_interaction_topk": _embed.late_interaction_topk,
-        # r16: index-served ColBERT (VERDICT r15 next #1) — chunk vectors
-        # persisted once in the versioned li_index (vecs/ + RP bands/),
-        # per-token Hamming-1 multiprobe candidate pools, the identical
-        # sum-of-MaxSim fold over candidates only; zero re-embeds at
-        # query time
-        "late_interaction_topk_served": _embed.late_interaction_topk_served,
-        # r16: M queries, ONE probe union + ONE rerank pass over the
-        # li_index (the bm25_batch_topk_served discipline)
-        "late_interaction_batch_topk_served": (
-            _embed.late_interaction_batch_topk_served
-        ),
-        # r16: metadata-filtered serve from the index's own lang fold
-        # (v3 vecs layout) — zero corpus reads under a filter
-        "late_interaction_filtered_topk_served": (
-            _embed.late_interaction_filtered_topk_served
-        ),
-        # r16: the FULL where-DSL over the LI rerank (compound
-        # $and/$or/$in/$gte tree, one definition for both engines via
-        # where_to_sql)
-        "late_interaction_where_topk_served": (
-            _embed.late_interaction_where_topk_served
-        ),
-        # r16: per-token MaxSim breakdown for the top-k served docs
-        # (the bm25_explain_served analog — contribs sum to the score)
-        "late_interaction_explain_served": (
-            _embed.late_interaction_explain_served
-        ),
-        # r16: the li_index ADMIT lifecycle — clone-slice batch into a
-        # tagged root via update_li_index (doc-level REPLACE), serve
-        # from the updated index; replay-idempotent
-        "late_interaction_topk_ingested": (
-            _embed.late_interaction_topk_ingested
-        ),
         "knn_file_summary_query": _embed.knn_file_summary_query,
         "file_context": _idx.file_context,
         # approximate ANN (SURVEY.md §4) — r11: the 100 TB IVF training path — Lloyd's on the md5-top-s
@@ -1428,13 +1383,7 @@ js_elements{sfx} AS (
 
 
 def oracle_sql() -> dict[str, str]:
-    from adk_noui_vectordb_spark.functions.where_dsl import where_to_sql
-    from adk_noui_vectordb_spark.operators.embed import LI_WHERE_DEMO
-
     cos_ab = _COS.format(a="a.embedding", b="b.embedding")
-    # the LI where twin embeds the SHARED demo tree rendered to SQL —
-    # one filter definition for both engines (never a drifting literal)
-    _li_where_pred = where_to_sql(LI_WHERE_DEMO)
     return {
         "knn_topk": _knn_sql(),
         "knn_topk_filtered": _knn_sql("AND e.label = 3"),
@@ -3306,707 +3255,6 @@ FROM n LEFT JOIN dots ON n.doc_id = dots.doc_id CROSS JOIN qn
 ORDER BY sim DESC, n.doc_id
 LIMIT 5
 """,
-        # Multi-vector twin: per-(doc, chunk) signed bucket sums computed
-        # straight from the tokens (embedding == f(tokens), so the chunk
-        # text never needs reassembly); chunk_id = floor((pos-1)/8)
-        # mirrors the chunker's 0-based floor(pos/8). Zero-norm chunks
-        # (sign-cancelled buckets) score 0 exactly as the Python
-        # encoder's norm>0 guard does.
-        "chunked_maxsim_topk": """
-WITH qtok AS (
-    SELECT unnest(['spark', 'query', 'filter', 'join']) AS w
-), qh AS (
-    SELECT CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) AS h FROM qtok
-), qb AS (
-    SELECT CAST(h % 64 AS INTEGER) AS bucket,
-           CASE WHEN (h >> 6) & 1 = 1 THEN 1 ELSE -1 END AS sign
-    FROM qh
-), qs AS (
-    SELECT bucket, CAST(sum(sign) AS DOUBLE) AS v FROM qb GROUP BY 1
-), qn AS (
-    SELECT sqrt(sum(v * v)) AS qnorm FROM qs
-), tok AS (
-    SELECT doc_id, unnest(string_split(text, ' ')) AS w,
-           generate_subscripts(string_split(text, ' '), 1) AS pos
-    FROM documents
-), ctok AS (
-    SELECT doc_id, CAST(floor((pos - 1) / 8) AS INTEGER) AS chunk_id, w
-    FROM tok
-), h AS (
-    SELECT doc_id, chunk_id,
-           CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) AS h
-    FROM ctok
-), b AS (
-    SELECT doc_id, chunk_id, CAST(h % 64 AS INTEGER) AS bucket,
-           CASE WHEN (h >> 6) & 1 = 1 THEN 1 ELSE -1 END AS sign
-    FROM h
-), s AS (
-    SELECT doc_id, chunk_id, bucket, CAST(sum(sign) AS DOUBLE) AS v
-    FROM b GROUP BY 1, 2, 3
-), n AS (
-    SELECT doc_id, chunk_id, sqrt(sum(v * v)) AS norm FROM s GROUP BY 1, 2
-), dots AS (
-    SELECT s.doc_id, s.chunk_id, sum(s.v * qs.v) AS draw
-    FROM s JOIN qs USING (bucket) GROUP BY 1, 2
-), csim AS (
-    SELECT n.doc_id,
-           CASE WHEN n.norm = 0 THEN 0.0
-                ELSE round(coalesce(d.draw, 0) / (n.norm * qn.qnorm), 4)
-           END AS sim
-    FROM n
-    LEFT JOIN dots d ON n.doc_id = d.doc_id AND n.chunk_id = d.chunk_id
-    CROSS JOIN qn
-)
-SELECT doc_id, max(sim) AS max_sim, count(*) AS n_chunks
-FROM csim GROUP BY 1
-ORDER BY max_sim DESC, doc_id
-LIMIT 5
-""",
-        # r15 TRUE late interaction (embed.py late_interaction_topk):
-        # each query TOKEN is one (bucket, sign) under the hash-projection
-        # embedder (single token -> one-hot signed, normalized to +-1), so
-        # cos(q_i, chunk) = sign_i * v_norm[bucket_i]; per-token MaxSim
-        # over the doc's chunks, summed as EXACT x10^4 integers (the
-        # 4-dp per-token rounds are tie-free: s/sqrt(S<=64) never lands
-        # on a half-tie) — no float-sum order can flip the final score
-        "late_interaction_topk": """
-WITH qtok AS (
-    SELECT * FROM (VALUES (0, 'spark'), (1, 'query'),
-                          (2, 'filter'), (3, 'join')) AS t(i, w)
-), qb AS (
-    SELECT i,
-           CAST(CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) % 64
-                AS INTEGER) AS bucket,
-           CASE WHEN (CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) >> 6)
-                     & 1 = 1
-                THEN 1.0 ELSE -1.0 END AS sign
-    FROM qtok
-), tok AS (
-    SELECT doc_id, unnest(string_split(text, ' ')) AS w,
-           generate_subscripts(string_split(text, ' '), 1) AS pos
-    FROM documents
-), ctok AS (
-    SELECT doc_id, CAST(floor((pos - 1) / 8) AS INTEGER) AS chunk_id, w
-    FROM tok
-), h AS (
-    SELECT doc_id, chunk_id,
-           CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) AS h
-    FROM ctok
-), b AS (
-    SELECT doc_id, chunk_id, CAST(h % 64 AS INTEGER) AS bucket,
-           CASE WHEN (h >> 6) & 1 = 1 THEN 1 ELSE -1 END AS sign
-    FROM h
-), s AS (
-    SELECT doc_id, chunk_id, bucket, CAST(sum(sign) AS DOUBLE) AS v
-    FROM b GROUP BY 1, 2, 3
-), n AS (
-    SELECT doc_id, chunk_id, sqrt(sum(v * v)) AS norm FROM s GROUP BY 1, 2
-), contrib AS (
-    SELECT n.doc_id, n.chunk_id, qb.i,
-           CASE WHEN n.norm > 0
-                THEN coalesce(qb.sign * s.v, 0.0) / n.norm
-                ELSE 0.0 END AS c
-    FROM n CROSS JOIN qb
-    LEFT JOIN s ON s.doc_id = n.doc_id AND s.chunk_id = n.chunk_id
-               AND s.bucket = qb.bucket
-), maxt AS (
-    SELECT doc_id, i, max(c) AS m FROM contrib GROUP BY 1, 2
-), sc AS (
-    SELECT doc_id,
-           sum(CAST(round(round(m, 4) * 10000) AS BIGINT)) AS s4
-    FROM maxt GROUP BY 1
-)
-SELECT doc_id, CAST(s4 AS DOUBLE) / 10000.0 AS score FROM sc
-ORDER BY score DESC, doc_id
-LIMIT 5
-""",
-        # Index-served ColBERT twin: re-derives the chunk vectors, their
-        # RP band keys (the _RP_BANDS_CTE arithmetic over NORMALIZED
-        # chunk components — micro-quantized integer dots against the
-        # md5-parity planes), the per-token Hamming-1 probe, and the
-        # sum-of-MaxSim fold over candidates only. A (doc, token) pair
-        # absent from the candidate set contributes nothing to the sum —
-        # the served key's documented approximation, mirrored exactly.
-        "late_interaction_topk_served": """
-WITH qtok AS (
-    SELECT * FROM (VALUES (0, 'spark'), (1, 'query'),
-                          (2, 'filter'), (3, 'join')) AS t(i, w)
-), qv AS (
-    SELECT i,
-           CAST(CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) % 64
-                AS INTEGER) AS bucket,
-           CASE WHEN (CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) >> 6)
-                     & 1 = 1
-                THEN 1 ELSE -1 END AS sign
-    FROM qtok
-), qbits AS (
-    SELECT qv.i, p.p,
-           CASE WHEN qv.sign *
-                (CASE WHEN CAST(('0x' || substr(
-                          md5('rp|' || p.p || '|' || (qv.bucket + 1)),
-                          1, 15)) AS BIGINT) % 2 = 0
-                      THEN 1 ELSE -1 END) >= 0 THEN 1 ELSE 0 END AS bit
-    FROM qv CROSS JOIN generate_series(0, 23) p(p)
-), qb AS (
-    SELECT i, CAST(p // 4 AS INTEGER) AS band,
-           CAST(sum(bit * (1 << CAST(p % 4 AS INTEGER))) AS INTEGER)
-               AS band_key
-    FROM qbits GROUP BY 1, 2
-), qexp AS (
-    SELECT i, band, band_key FROM qb
-    UNION
-    SELECT q.i, q.band, CAST(xor(q.band_key, (1 << t.b)) AS INTEGER)
-    FROM qb q CROSS JOIN (SELECT unnest(range(0, 4)) AS b) t
-), tok AS (
-    SELECT doc_id, unnest(string_split(text, ' ')) AS w,
-           generate_subscripts(string_split(text, ' '), 1) AS pos
-    FROM documents
-), ctok AS (
-    SELECT doc_id, CAST(floor((pos - 1) / 8) AS INTEGER) AS chunk_id, w
-    FROM tok
-), h AS (
-    SELECT doc_id, chunk_id,
-           CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) AS h
-    FROM ctok
-), b AS (
-    SELECT doc_id, chunk_id, CAST(h % 64 AS INTEGER) AS bucket,
-           CASE WHEN (h >> 6) & 1 = 1 THEN 1 ELSE -1 END AS sign
-    FROM h
-), s AS (
-    SELECT doc_id, chunk_id, bucket, CAST(sum(sign) AS DOUBLE) AS v
-    FROM b GROUP BY 1, 2, 3
-), n AS (
-    SELECT doc_id, chunk_id, sqrt(sum(v * v)) AS norm FROM s GROUP BY 1, 2
-), cq AS (
-    SELECT s.doc_id, s.chunk_id, s.bucket,
-           CAST(floor(s.v / n.norm * 1000000 + 0.5) AS BIGINT) AS qcomp
-    FROM s JOIN n USING (doc_id, chunk_id)
-    WHERE n.norm > 0
-), cbits AS (
-    SELECT cq.doc_id, cq.chunk_id, p.p,
-           CASE WHEN sum(cq.qcomp *
-                (CASE WHEN CAST(('0x' || substr(
-                          md5('rp|' || p.p || '|' || (cq.bucket + 1)),
-                          1, 15)) AS BIGINT) % 2 = 0
-                      THEN 1 ELSE -1 END)) >= 0 THEN 1 ELSE 0 END AS bit
-    FROM cq CROSS JOIN generate_series(0, 23) p(p)
-    GROUP BY 1, 2, 3
-), cbands AS (
-    SELECT doc_id, chunk_id, CAST(p // 4 AS INTEGER) AS band,
-           CAST(sum(bit * (1 << CAST(p % 4 AS INTEGER))) AS INTEGER)
-               AS band_key
-    FROM cbits GROUP BY 1, 2, 3
-), cand AS (
-    SELECT DISTINCT q.i, c.doc_id, c.chunk_id
-    FROM cbands c JOIN qexp q USING (band, band_key)
-), contrib AS (
-    SELECT cand.i, cand.doc_id, cand.chunk_id,
-           coalesce(qv.sign * s.v, 0.0) / n.norm AS c
-    FROM cand
-    JOIN n USING (doc_id, chunk_id)
-    JOIN qv ON qv.i = cand.i
-    LEFT JOIN s ON s.doc_id = cand.doc_id AND s.chunk_id = cand.chunk_id
-               AND s.bucket = qv.bucket
-), maxt AS (
-    SELECT doc_id, i, max(c) AS m FROM contrib GROUP BY 1, 2
-), sc AS (
-    SELECT doc_id,
-           sum(CAST(round(round(m, 4) * 10000) AS BIGINT)) AS s4
-    FROM maxt GROUP BY 1
-)
-SELECT doc_id, CAST(s4 AS DOUBLE) / 10000.0 AS score FROM sc
-ORDER BY score DESC, doc_id
-LIMIT 5
-""",
-        # Explain twin: the served twin's maxt arms joined to the
-        # top-k docs — the same values the score sums, unpivoted.
-"late_interaction_explain_served": """
-WITH qtok AS (
-    SELECT * FROM (VALUES (0, 'spark'), (1, 'query'),
-                          (2, 'filter'), (3, 'join')) AS t(i, w)
-), qv AS (
-    SELECT i,
-           CAST(CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) % 64
-                AS INTEGER) AS bucket,
-           CASE WHEN (CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) >> 6)
-                     & 1 = 1
-                THEN 1 ELSE -1 END AS sign
-    FROM qtok
-), qbits AS (
-    SELECT qv.i, p.p,
-           CASE WHEN qv.sign *
-                (CASE WHEN CAST(('0x' || substr(
-                          md5('rp|' || p.p || '|' || (qv.bucket + 1)),
-                          1, 15)) AS BIGINT) % 2 = 0
-                      THEN 1 ELSE -1 END) >= 0 THEN 1 ELSE 0 END AS bit
-    FROM qv CROSS JOIN generate_series(0, 23) p(p)
-), qb AS (
-    SELECT i, CAST(p // 4 AS INTEGER) AS band,
-           CAST(sum(bit * (1 << CAST(p % 4 AS INTEGER))) AS INTEGER)
-               AS band_key
-    FROM qbits GROUP BY 1, 2
-), qexp AS (
-    SELECT i, band, band_key FROM qb
-    UNION
-    SELECT q.i, q.band, CAST(xor(q.band_key, (1 << t.b)) AS INTEGER)
-    FROM qb q CROSS JOIN (SELECT unnest(range(0, 4)) AS b) t
-), tok AS (
-    SELECT doc_id, unnest(string_split(text, ' ')) AS w,
-           generate_subscripts(string_split(text, ' '), 1) AS pos
-    FROM documents
-), ctok AS (
-    SELECT doc_id, CAST(floor((pos - 1) / 8) AS INTEGER) AS chunk_id, w
-    FROM tok
-), h AS (
-    SELECT doc_id, chunk_id,
-           CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) AS h
-    FROM ctok
-), b AS (
-    SELECT doc_id, chunk_id, CAST(h % 64 AS INTEGER) AS bucket,
-           CASE WHEN (h >> 6) & 1 = 1 THEN 1 ELSE -1 END AS sign
-    FROM h
-), s AS (
-    SELECT doc_id, chunk_id, bucket, CAST(sum(sign) AS DOUBLE) AS v
-    FROM b GROUP BY 1, 2, 3
-), n AS (
-    SELECT doc_id, chunk_id, sqrt(sum(v * v)) AS norm FROM s GROUP BY 1, 2
-), cq AS (
-    SELECT s.doc_id, s.chunk_id, s.bucket,
-           CAST(floor(s.v / n.norm * 1000000 + 0.5) AS BIGINT) AS qcomp
-    FROM s JOIN n USING (doc_id, chunk_id)
-    WHERE n.norm > 0
-), cbits AS (
-    SELECT cq.doc_id, cq.chunk_id, p.p,
-           CASE WHEN sum(cq.qcomp *
-                (CASE WHEN CAST(('0x' || substr(
-                          md5('rp|' || p.p || '|' || (cq.bucket + 1)),
-                          1, 15)) AS BIGINT) % 2 = 0
-                      THEN 1 ELSE -1 END)) >= 0 THEN 1 ELSE 0 END AS bit
-    FROM cq CROSS JOIN generate_series(0, 23) p(p)
-    GROUP BY 1, 2, 3
-), cbands AS (
-    SELECT doc_id, chunk_id, CAST(p // 4 AS INTEGER) AS band,
-           CAST(sum(bit * (1 << CAST(p % 4 AS INTEGER))) AS INTEGER)
-               AS band_key
-    FROM cbits GROUP BY 1, 2, 3
-), cand AS (
-    SELECT DISTINCT q.i, c.doc_id, c.chunk_id
-    FROM cbands c JOIN qexp q USING (band, band_key)
-), contrib AS (
-    SELECT cand.i, cand.doc_id, cand.chunk_id,
-           coalesce(qv.sign * s.v, 0.0) / n.norm AS c
-    FROM cand
-    JOIN n USING (doc_id, chunk_id)
-    JOIN qv ON qv.i = cand.i
-    LEFT JOIN s ON s.doc_id = cand.doc_id AND s.chunk_id = cand.chunk_id
-               AND s.bucket = qv.bucket
-), maxt AS (
-    SELECT doc_id, i, max(c) AS m FROM contrib GROUP BY 1, 2
-), sc AS (
-    SELECT doc_id,
-           sum(CAST(round(round(m, 4) * 10000) AS BIGINT)) AS s4
-    FROM maxt GROUP BY 1
-)
-, top AS (
-    SELECT doc_id FROM sc ORDER BY s4 DESC, doc_id LIMIT 3
-)
-SELECT m.doc_id, m.i AS tok, q.w AS token, round(m.m, 4) AS contrib
-FROM maxt m JOIN top USING (doc_id) JOIN qtok q ON q.i = m.i
-""",
-        # Ingested-lifecycle twin: replays corpus UNION the %10==3 clone
-        # batch from scratch — equivalent to serve-after-admit because
-        # the li_index has no frozen coarse structure (band keys are
-        # pure per-vector functions), so update == fresh rebuild exactly
-        # (pinned in tests/test_retrieval.py).
-"late_interaction_topk_ingested": """
-WITH qtok AS (
-    SELECT * FROM (VALUES (0, 'spark'), (1, 'query'),
-                          (2, 'filter'), (3, 'join')) AS t(i, w)
-), qv AS (
-    SELECT i,
-           CAST(CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) % 64
-                AS INTEGER) AS bucket,
-           CASE WHEN (CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) >> 6)
-                     & 1 = 1
-                THEN 1 ELSE -1 END AS sign
-    FROM qtok
-), qbits AS (
-    SELECT qv.i, p.p,
-           CASE WHEN qv.sign *
-                (CASE WHEN CAST(('0x' || substr(
-                          md5('rp|' || p.p || '|' || (qv.bucket + 1)),
-                          1, 15)) AS BIGINT) % 2 = 0
-                      THEN 1 ELSE -1 END) >= 0 THEN 1 ELSE 0 END AS bit
-    FROM qv CROSS JOIN generate_series(0, 23) p(p)
-), qb AS (
-    SELECT i, CAST(p // 4 AS INTEGER) AS band,
-           CAST(sum(bit * (1 << CAST(p % 4 AS INTEGER))) AS INTEGER)
-               AS band_key
-    FROM qbits GROUP BY 1, 2
-), qexp AS (
-    SELECT i, band, band_key FROM qb
-    UNION
-    SELECT q.i, q.band, CAST(xor(q.band_key, (1 << t.b)) AS INTEGER)
-    FROM qb q CROSS JOIN (SELECT unnest(range(0, 4)) AS b) t
-), alldocs AS (
-    SELECT doc_id, text FROM documents
-    UNION ALL
-    SELECT doc_id + 4000000 AS doc_id, text FROM documents
-    WHERE doc_id % 10 = 3
-), tok AS (
-    SELECT doc_id, unnest(string_split(text, ' ')) AS w,
-           generate_subscripts(string_split(text, ' '), 1) AS pos
-    FROM alldocs
-), ctok AS (
-    SELECT doc_id, CAST(floor((pos - 1) / 8) AS INTEGER) AS chunk_id, w
-    FROM tok
-), h AS (
-    SELECT doc_id, chunk_id,
-           CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) AS h
-    FROM ctok
-), b AS (
-    SELECT doc_id, chunk_id, CAST(h % 64 AS INTEGER) AS bucket,
-           CASE WHEN (h >> 6) & 1 = 1 THEN 1 ELSE -1 END AS sign
-    FROM h
-), s AS (
-    SELECT doc_id, chunk_id, bucket, CAST(sum(sign) AS DOUBLE) AS v
-    FROM b GROUP BY 1, 2, 3
-), n AS (
-    SELECT doc_id, chunk_id, sqrt(sum(v * v)) AS norm FROM s GROUP BY 1, 2
-), cq AS (
-    SELECT s.doc_id, s.chunk_id, s.bucket,
-           CAST(floor(s.v / n.norm * 1000000 + 0.5) AS BIGINT) AS qcomp
-    FROM s JOIN n USING (doc_id, chunk_id)
-    WHERE n.norm > 0
-), cbits AS (
-    SELECT cq.doc_id, cq.chunk_id, p.p,
-           CASE WHEN sum(cq.qcomp *
-                (CASE WHEN CAST(('0x' || substr(
-                          md5('rp|' || p.p || '|' || (cq.bucket + 1)),
-                          1, 15)) AS BIGINT) % 2 = 0
-                      THEN 1 ELSE -1 END)) >= 0 THEN 1 ELSE 0 END AS bit
-    FROM cq CROSS JOIN generate_series(0, 23) p(p)
-    GROUP BY 1, 2, 3
-), cbands AS (
-    SELECT doc_id, chunk_id, CAST(p // 4 AS INTEGER) AS band,
-           CAST(sum(bit * (1 << CAST(p % 4 AS INTEGER))) AS INTEGER)
-               AS band_key
-    FROM cbits GROUP BY 1, 2, 3
-), cand AS (
-    SELECT DISTINCT q.i, c.doc_id, c.chunk_id
-    FROM cbands c JOIN qexp q USING (band, band_key)
-), contrib AS (
-    SELECT cand.i, cand.doc_id, cand.chunk_id,
-           coalesce(qv.sign * s.v, 0.0) / n.norm AS c
-    FROM cand
-    JOIN n USING (doc_id, chunk_id)
-    JOIN qv ON qv.i = cand.i
-    LEFT JOIN s ON s.doc_id = cand.doc_id AND s.chunk_id = cand.chunk_id
-               AND s.bucket = qv.bucket
-), maxt AS (
-    SELECT doc_id, i, max(c) AS m FROM contrib GROUP BY 1, 2
-), sc AS (
-    SELECT doc_id,
-           sum(CAST(round(round(m, 4) * 10000) AS BIGINT)) AS s4
-    FROM maxt GROUP BY 1
-)
-SELECT doc_id, CAST(s4 AS DOUBLE) / 10000.0 AS score FROM sc
-ORDER BY score DESC, doc_id
-LIMIT 5
-""",
-        # Filtered served ColBERT twin: identical probe+fold arithmetic
-        # with the chunk corpus restricted to the filter's survivors —
-        # equivalent to Spark's probe-all/filter-rerank (a non-matching
-        # chunk's candidacy cannot affect a matching doc's maxes).
-"late_interaction_filtered_topk_served": """
-WITH qtok AS (
-    SELECT * FROM (VALUES (0, 'spark'), (1, 'query'),
-                          (2, 'filter'), (3, 'join')) AS t(i, w)
-), qv AS (
-    SELECT i,
-           CAST(CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) % 64
-                AS INTEGER) AS bucket,
-           CASE WHEN (CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) >> 6)
-                     & 1 = 1
-                THEN 1 ELSE -1 END AS sign
-    FROM qtok
-), qbits AS (
-    SELECT qv.i, p.p,
-           CASE WHEN qv.sign *
-                (CASE WHEN CAST(('0x' || substr(
-                          md5('rp|' || p.p || '|' || (qv.bucket + 1)),
-                          1, 15)) AS BIGINT) % 2 = 0
-                      THEN 1 ELSE -1 END) >= 0 THEN 1 ELSE 0 END AS bit
-    FROM qv CROSS JOIN generate_series(0, 23) p(p)
-), qb AS (
-    SELECT i, CAST(p // 4 AS INTEGER) AS band,
-           CAST(sum(bit * (1 << CAST(p % 4 AS INTEGER))) AS INTEGER)
-               AS band_key
-    FROM qbits GROUP BY 1, 2
-), qexp AS (
-    SELECT i, band, band_key FROM qb
-    UNION
-    SELECT q.i, q.band, CAST(xor(q.band_key, (1 << t.b)) AS INTEGER)
-    FROM qb q CROSS JOIN (SELECT unnest(range(0, 4)) AS b) t
-), tok AS (
-    SELECT doc_id, unnest(string_split(text, ' ')) AS w,
-           generate_subscripts(string_split(text, ' '), 1) AS pos
-    FROM documents WHERE lang = 'en'
-), ctok AS (
-    SELECT doc_id, CAST(floor((pos - 1) / 8) AS INTEGER) AS chunk_id, w
-    FROM tok
-), h AS (
-    SELECT doc_id, chunk_id,
-           CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) AS h
-    FROM ctok
-), b AS (
-    SELECT doc_id, chunk_id, CAST(h % 64 AS INTEGER) AS bucket,
-           CASE WHEN (h >> 6) & 1 = 1 THEN 1 ELSE -1 END AS sign
-    FROM h
-), s AS (
-    SELECT doc_id, chunk_id, bucket, CAST(sum(sign) AS DOUBLE) AS v
-    FROM b GROUP BY 1, 2, 3
-), n AS (
-    SELECT doc_id, chunk_id, sqrt(sum(v * v)) AS norm FROM s GROUP BY 1, 2
-), cq AS (
-    SELECT s.doc_id, s.chunk_id, s.bucket,
-           CAST(floor(s.v / n.norm * 1000000 + 0.5) AS BIGINT) AS qcomp
-    FROM s JOIN n USING (doc_id, chunk_id)
-    WHERE n.norm > 0
-), cbits AS (
-    SELECT cq.doc_id, cq.chunk_id, p.p,
-           CASE WHEN sum(cq.qcomp *
-                (CASE WHEN CAST(('0x' || substr(
-                          md5('rp|' || p.p || '|' || (cq.bucket + 1)),
-                          1, 15)) AS BIGINT) % 2 = 0
-                      THEN 1 ELSE -1 END)) >= 0 THEN 1 ELSE 0 END AS bit
-    FROM cq CROSS JOIN generate_series(0, 23) p(p)
-    GROUP BY 1, 2, 3
-), cbands AS (
-    SELECT doc_id, chunk_id, CAST(p // 4 AS INTEGER) AS band,
-           CAST(sum(bit * (1 << CAST(p % 4 AS INTEGER))) AS INTEGER)
-               AS band_key
-    FROM cbits GROUP BY 1, 2, 3
-), cand AS (
-    SELECT DISTINCT q.i, c.doc_id, c.chunk_id
-    FROM cbands c JOIN qexp q USING (band, band_key)
-), contrib AS (
-    SELECT cand.i, cand.doc_id, cand.chunk_id,
-           coalesce(qv.sign * s.v, 0.0) / n.norm AS c
-    FROM cand
-    JOIN n USING (doc_id, chunk_id)
-    JOIN qv ON qv.i = cand.i
-    LEFT JOIN s ON s.doc_id = cand.doc_id AND s.chunk_id = cand.chunk_id
-               AND s.bucket = qv.bucket
-), maxt AS (
-    SELECT doc_id, i, max(c) AS m FROM contrib GROUP BY 1, 2
-), sc AS (
-    SELECT doc_id,
-           sum(CAST(round(round(m, 4) * 10000) AS BIGINT)) AS s4
-    FROM maxt GROUP BY 1
-)
-SELECT doc_id, CAST(s4 AS DOUBLE) / 10000.0 AS score FROM sc
-ORDER BY score DESC, doc_id
-LIMIT 5
-""",
-        # Where-DSL served ColBERT twin: same equivalence argument as
-        # the filtered twin, with the corpus restricted by the SHARED
-        # where tree rendered through where_to_sql (one filter
-        # definition, two engines).
-"late_interaction_where_topk_served": f"""
-WITH qtok AS (
-    SELECT * FROM (VALUES (0, 'spark'), (1, 'query'),
-                          (2, 'filter'), (3, 'join')) AS t(i, w)
-), qv AS (
-    SELECT i,
-           CAST(CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) % 64
-                AS INTEGER) AS bucket,
-           CASE WHEN (CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) >> 6)
-                     & 1 = 1
-                THEN 1 ELSE -1 END AS sign
-    FROM qtok
-), qbits AS (
-    SELECT qv.i, p.p,
-           CASE WHEN qv.sign *
-                (CASE WHEN CAST(('0x' || substr(
-                          md5('rp|' || p.p || '|' || (qv.bucket + 1)),
-                          1, 15)) AS BIGINT) % 2 = 0
-                      THEN 1 ELSE -1 END) >= 0 THEN 1 ELSE 0 END AS bit
-    FROM qv CROSS JOIN generate_series(0, 23) p(p)
-), qb AS (
-    SELECT i, CAST(p // 4 AS INTEGER) AS band,
-           CAST(sum(bit * (1 << CAST(p % 4 AS INTEGER))) AS INTEGER)
-               AS band_key
-    FROM qbits GROUP BY 1, 2
-), qexp AS (
-    SELECT i, band, band_key FROM qb
-    UNION
-    SELECT q.i, q.band, CAST(xor(q.band_key, (1 << t.b)) AS INTEGER)
-    FROM qb q CROSS JOIN (SELECT unnest(range(0, 4)) AS b) t
-), tok AS (
-    SELECT doc_id, unnest(string_split(text, ' ')) AS w,
-           generate_subscripts(string_split(text, ' '), 1) AS pos
-    FROM documents WHERE {_li_where_pred}
-), ctok AS (
-    SELECT doc_id, CAST(floor((pos - 1) / 8) AS INTEGER) AS chunk_id, w
-    FROM tok
-), h AS (
-    SELECT doc_id, chunk_id,
-           CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) AS h
-    FROM ctok
-), b AS (
-    SELECT doc_id, chunk_id, CAST(h % 64 AS INTEGER) AS bucket,
-           CASE WHEN (h >> 6) & 1 = 1 THEN 1 ELSE -1 END AS sign
-    FROM h
-), s AS (
-    SELECT doc_id, chunk_id, bucket, CAST(sum(sign) AS DOUBLE) AS v
-    FROM b GROUP BY 1, 2, 3
-), n AS (
-    SELECT doc_id, chunk_id, sqrt(sum(v * v)) AS norm FROM s GROUP BY 1, 2
-), cq AS (
-    SELECT s.doc_id, s.chunk_id, s.bucket,
-           CAST(floor(s.v / n.norm * 1000000 + 0.5) AS BIGINT) AS qcomp
-    FROM s JOIN n USING (doc_id, chunk_id)
-    WHERE n.norm > 0
-), cbits AS (
-    SELECT cq.doc_id, cq.chunk_id, p.p,
-           CASE WHEN sum(cq.qcomp *
-                (CASE WHEN CAST(('0x' || substr(
-                          md5('rp|' || p.p || '|' || (cq.bucket + 1)),
-                          1, 15)) AS BIGINT) % 2 = 0
-                      THEN 1 ELSE -1 END)) >= 0 THEN 1 ELSE 0 END AS bit
-    FROM cq CROSS JOIN generate_series(0, 23) p(p)
-    GROUP BY 1, 2, 3
-), cbands AS (
-    SELECT doc_id, chunk_id, CAST(p // 4 AS INTEGER) AS band,
-           CAST(sum(bit * (1 << CAST(p % 4 AS INTEGER))) AS INTEGER)
-               AS band_key
-    FROM cbits GROUP BY 1, 2, 3
-), cand AS (
-    SELECT DISTINCT q.i, c.doc_id, c.chunk_id
-    FROM cbands c JOIN qexp q USING (band, band_key)
-), contrib AS (
-    SELECT cand.i, cand.doc_id, cand.chunk_id,
-           coalesce(qv.sign * s.v, 0.0) / n.norm AS c
-    FROM cand
-    JOIN n USING (doc_id, chunk_id)
-    JOIN qv ON qv.i = cand.i
-    LEFT JOIN s ON s.doc_id = cand.doc_id AND s.chunk_id = cand.chunk_id
-               AND s.bucket = qv.bucket
-), maxt AS (
-    SELECT doc_id, i, max(c) AS m FROM contrib GROUP BY 1, 2
-), sc AS (
-    SELECT doc_id,
-           sum(CAST(round(round(m, 4) * 10000) AS BIGINT)) AS s4
-    FROM maxt GROUP BY 1
-)
-SELECT doc_id, CAST(s4 AS DOUBLE) / 10000.0 AS score FROM sc
-ORDER BY score DESC, doc_id
-LIMIT 5
-""",
-        # Batched served ColBERT twin: every (query, token) pair is a
-        # global token index j; one probe union, per-(doc, j) MaxSim,
-        # per-(query, doc) exact integer sum, rank window per query.
-        "late_interaction_batch_topk_served": """
-WITH qtok AS (
-    SELECT * FROM (VALUES
-        (0, 0, 'spark'), (0, 1, 'query'), (0, 2, 'filter'), (0, 3, 'join'),
-        (1, 4, 'data'), (1, 5, 'pipeline'), (1, 6, 'shuffle'),
-        (2, 7, 'aggregate'), (2, 8, 'window'), (2, 9, 'events')
-    ) AS t(qid, j, w)
-), qv AS (
-    SELECT qid, j,
-           CAST(CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) % 64
-                AS INTEGER) AS bucket,
-           CASE WHEN (CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) >> 6)
-                     & 1 = 1
-                THEN 1 ELSE -1 END AS sign
-    FROM qtok
-), qbits AS (
-    SELECT qv.j, p.p,
-           CASE WHEN qv.sign *
-                (CASE WHEN CAST(('0x' || substr(
-                          md5('rp|' || p.p || '|' || (qv.bucket + 1)),
-                          1, 15)) AS BIGINT) % 2 = 0
-                      THEN 1 ELSE -1 END) >= 0 THEN 1 ELSE 0 END AS bit
-    FROM qv CROSS JOIN generate_series(0, 23) p(p)
-), qb AS (
-    SELECT j, CAST(p // 4 AS INTEGER) AS band,
-           CAST(sum(bit * (1 << CAST(p % 4 AS INTEGER))) AS INTEGER)
-               AS band_key
-    FROM qbits GROUP BY 1, 2
-), qexp AS (
-    SELECT j, band, band_key FROM qb
-    UNION
-    SELECT q.j, q.band, CAST(xor(q.band_key, (1 << t.b)) AS INTEGER)
-    FROM qb q CROSS JOIN (SELECT unnest(range(0, 4)) AS b) t
-), tok AS (
-    SELECT doc_id, unnest(string_split(text, ' ')) AS w,
-           generate_subscripts(string_split(text, ' '), 1) AS pos
-    FROM documents
-), ctok AS (
-    SELECT doc_id, CAST(floor((pos - 1) / 8) AS INTEGER) AS chunk_id, w
-    FROM tok
-), h AS (
-    SELECT doc_id, chunk_id,
-           CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) AS h
-    FROM ctok
-), b AS (
-    SELECT doc_id, chunk_id, CAST(h % 64 AS INTEGER) AS bucket,
-           CASE WHEN (h >> 6) & 1 = 1 THEN 1 ELSE -1 END AS sign
-    FROM h
-), s AS (
-    SELECT doc_id, chunk_id, bucket, CAST(sum(sign) AS DOUBLE) AS v
-    FROM b GROUP BY 1, 2, 3
-), n AS (
-    SELECT doc_id, chunk_id, sqrt(sum(v * v)) AS norm FROM s GROUP BY 1, 2
-), cq AS (
-    SELECT s.doc_id, s.chunk_id, s.bucket,
-           CAST(floor(s.v / n.norm * 1000000 + 0.5) AS BIGINT) AS qcomp
-    FROM s JOIN n USING (doc_id, chunk_id)
-    WHERE n.norm > 0
-), cbits AS (
-    SELECT cq.doc_id, cq.chunk_id, p.p,
-           CASE WHEN sum(cq.qcomp *
-                (CASE WHEN CAST(('0x' || substr(
-                          md5('rp|' || p.p || '|' || (cq.bucket + 1)),
-                          1, 15)) AS BIGINT) % 2 = 0
-                      THEN 1 ELSE -1 END)) >= 0 THEN 1 ELSE 0 END AS bit
-    FROM cq CROSS JOIN generate_series(0, 23) p(p)
-    GROUP BY 1, 2, 3
-), cbands AS (
-    SELECT doc_id, chunk_id, CAST(p // 4 AS INTEGER) AS band,
-           CAST(sum(bit * (1 << CAST(p % 4 AS INTEGER))) AS INTEGER)
-               AS band_key
-    FROM cbits GROUP BY 1, 2, 3
-), cand AS (
-    SELECT DISTINCT q.j, c.doc_id, c.chunk_id
-    FROM cbands c JOIN qexp q USING (band, band_key)
-), contrib AS (
-    SELECT cand.j, cand.doc_id, cand.chunk_id,
-           coalesce(qv.sign * s.v, 0.0) / n.norm AS c
-    FROM cand
-    JOIN n USING (doc_id, chunk_id)
-    JOIN qv ON qv.j = cand.j
-    LEFT JOIN s ON s.doc_id = cand.doc_id AND s.chunk_id = cand.chunk_id
-               AND s.bucket = qv.bucket
-), maxt AS (
-    SELECT doc_id, j, max(c) AS m FROM contrib GROUP BY 1, 2
-), sc AS (
-    SELECT q.qid AS query_id, maxt.doc_id,
-           sum(CAST(round(round(maxt.m, 4) * 10000) AS BIGINT)) AS s4
-    FROM maxt JOIN (SELECT DISTINCT qid, j FROM qtok) q USING (j)
-    GROUP BY 1, 2
-)
-SELECT query_id, doc_id, score, rank FROM (
-    SELECT query_id, doc_id, CAST(s4 AS DOUBLE) / 10000.0 AS score,
-           CAST(row_number() OVER (
-               PARTITION BY query_id
-               ORDER BY CAST(s4 AS DOUBLE) / 10000.0 DESC, doc_id
-           ) AS INTEGER) AS rank
-    FROM sc
-) WHERE rank <= 5
-""",
         "knn_file_summary_query": f"""
 WITH {_ELEMENTS_CTE},
 summaries AS (
@@ -4083,43 +3331,6 @@ WITH tok AS (
 SELECT s.doc_id, s.bucket, round(s.v / n.norm, 4) AS weight
 FROM s JOIN n ON s.doc_id = n.doc_id
 WHERE s.v <> 0
-""",
-        "embed_dim_stats": """
-WITH x AS (
-    SELECT t.i - 1 AS pos, CAST(e.embedding[t.i] AS DOUBLE) AS val
-    FROM embeddings e,
-         LATERAL (SELECT unnest(generate_series(1, len(e.embedding))) AS i) t
-)
-SELECT CAST(pos AS INTEGER) AS pos,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(floor(avg(val) * 1000000.0::DOUBLE) AS BIGINT) AS mean_micro,
-       CAST(floor(var_pop(val) * 1000000.0::DOUBLE) AS BIGINT) AS var_micro
-FROM x GROUP BY 1
-""",
-        # Selection ranks by FLOORED micro-variance (deterministic); the
-        # projection is pure element extraction, so component doubles are
-        # bit-identical to the stored embeddings on both engines.  Output
-        # is scalar (vec_id, rank, component) rows — the r2/r7 lesson:
-        # the driver canonicalizer cannot hash array cells.
-        "embed_topvar_project": """
-WITH x AS (
-    SELECT t.i - 1 AS pos, CAST(e.embedding[t.i] AS DOUBLE) AS val
-    FROM embeddings e,
-         LATERAL (SELECT unnest(generate_series(1, len(e.embedding))) AS i) t
-),
-stats AS (
-    SELECT pos,
-           CAST(floor(var_pop(val) * 1000000.0::DOUBLE) AS BIGINT) AS var_micro
-    FROM x GROUP BY 1
-),
-top AS (
-    SELECT pos, row_number() OVER (ORDER BY var_micro DESC, pos) AS rank
-    FROM stats ORDER BY var_micro DESC, pos LIMIT 8
-)
-SELECT e.vec_id,
-       CAST(top.rank AS INTEGER) AS rank,
-       CAST(e.embedding[top.pos + 1] AS DOUBLE) AS component
-FROM embeddings e CROSS JOIN top
 """,
         "stratified_sample": """
 SELECT doc_id, lang, source, n_chars FROM (

@@ -48,8 +48,8 @@ planned on the driver too:
   memos of the version it publishes. Untouched partitions hardlink
   into the new version, so each partition dir holds one data file (a
   disjoint ``merge_from`` links the source's files beside it;
-  ``compact`` folds those). Only ``add_metadata_column`` and
-  ``compact`` still run Spark.
+  ``compact`` folds those). Only compaction still writes through
+  Spark.
 - Reads (``query``, ``get``, ``count``, ``peek``) serve the resolved
   version on the DRIVER with zero Spark jobs and, warm, zero py4j
   calls: each version dir is listed once per session
@@ -243,11 +243,12 @@ def _list_parts(ver: str) -> dict:
     for every dir below the version dir that holds a data file (a
     partition no row hashed to is never written)."""
     out = {}
+    skip = len(os.path.join(ver, ""))
     for d, _, files in os.walk(ver):
         # _SUCCESS markers, .crc files
         names = tuple(sorted(f for f in files if not f.startswith(("_", "."))))
         if names and d != ver:
-            out[os.path.relpath(d, ver)] = names
+            out[d[skip:]] = names
     return out
 
 
@@ -434,11 +435,15 @@ def _list_array(mat):
     return pa.ListArray.from_arrays(offsets, pa.array(mat.reshape(-1), pa.float64()))
 
 
+@functools.lru_cache(maxsize=None)
 def _signs_t(dim: int):
-    """The dim x RP_PLANES +-1 hyperplane matrix the band keys dot."""
+    """The dim x RP_PLANES +-1 hyperplane matrix the band keys dot
+    (shared, hence read-only)."""
     import numpy as np
 
-    return np.array(_rp_plane_signs(RP_PLANES, dim), np.int64).T
+    signs = np.array(_rp_plane_signs(RP_PLANES, dim), np.int64).T
+    signs.flags.writeable = False
+    return signs
 
 
 def _band_keys(mat, dim: int):
@@ -659,14 +664,6 @@ class Collection:
         if cur is None or info is None:
             raise ValueError(f"collection {self.root} is empty — add() first")
         return cur, info
-
-    def _meta(self, cur: str, info: dict) -> DataFrame:
-        return self.spark.read.schema(info["meta_schema"]).parquet(
-            os.path.join(cur, "meta")
-        )
-
-    def _vecs(self, cur: str) -> DataFrame:
-        return self.spark.read.schema(VECS_SCHEMA).parquet(os.path.join(cur, "vecs"))
 
     def _frame(self, info, inc, page, lead=(), embeddings=None) -> LocalResult:
         """The ``LocalResult`` a read returns: the ``lead`` (field,
@@ -1515,7 +1512,11 @@ class Collection:
 
         Cost shape: rewrites the META component only — the narrow
         sidecar table, never the vector store (it hardlinks through
-        unchanged); one atomic commit.
+        unchanged); one atomic commit, planned on the driver like every
+        other write: each meta partition is widened in pyarrow and
+        written as one file. Spark only casts ``default`` to
+        ``sql_type`` (one 1-row job, skipped for NULL), so the stored
+        value is Spark's cast (``1.5`` into an ``int`` column is 1).
         The new schema commits ATOMICALLY with the data — persisted
         inside the version dir (ADVICE r11: the old post-commit root
         sidecar swap left a window where a concurrent upsert normalized
@@ -1540,24 +1541,31 @@ class Collection:
         new_schema = old_schema.replace(
             ", mbucket int", f", {name} {sql_type}, mbucket int"
         )
-        meta = self._meta(cur, info)
-        widened = meta.select(
-            *[c for c in meta.columns if c != "mbucket"],
-            F.lit(default).cast(sql_type).alias(name),
-            "mbucket",
-        )
-        all_mb = frozenset(f"mbucket={i}" for i in range(N_META_BUCKETS))
+        value = None
+        if default is not None:
+            (value,) = (
+                self.spark.range(1, numPartitions=1)
+                .select(F.lit(default).cast(sql_type))
+                .collect()[0]
+            )
+        field = _meta_arrow(new_schema)[1].field(name)
+        read = _reader(self.spark, cur)
+        meta = {}
+        for mb in range(N_META_BUCKETS):
+            rows = _meta_rows(read, info, [mb])
+            meta[f"mbucket={mb}"] = rows.append_column(
+                field, _arrow_column([value] * rows.num_rows, field.type)
+            ).combine_chunks()
         new_info = dict(info)
         new_info["meta_schema"] = new_schema
         new = vn.commit_version(
             self.spark,
             self.root,
             [
-                vn.Component("meta", ("mbucket",), all_mb, (widened,)),
+                vn.Component("meta", ("mbucket",), tables=meta),
                 vn.Component("vecs", link_from=os.path.join(cur, "vecs")),
             ],
             expected=os.path.basename(cur),
-            compact=_COMPONENTS,
             extra_files={"collection.json": json.dumps(new_info)},
         )
         tmp = self._sidecar_path() + ".__tmp__"

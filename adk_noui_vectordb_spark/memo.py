@@ -192,8 +192,8 @@ def component_df(spark: SparkSession, ver_dir: str, comp: str, schema: str):
 
 def index_root(name: str, sf_dir: str, *params: Any) -> str:
     """Deterministic on-disk root for a train-once/serve-many index
-    built over a testdata dir (trained-IVF assignment, text, MinHash,
-    containment and late-interaction indexes, the demo collections): a
+    built over a testdata dir (trained-IVF assignment, text, MinHash
+    and containment indexes, the demo collections): a
     tmpdir path tagged by md5(name | sf_dir | params | dataset
     fingerprint).
     Regenerated testdata changes the fingerprint, hence the tag, hence

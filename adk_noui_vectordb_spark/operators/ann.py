@@ -8,8 +8,7 @@ pieces here are (SURVEY.md section 4):
 - the random-hyperplane LSH kernels (``_rp_plane_signs``,
   ``_rp_band_keys``): md5-seeded hyperplanes and integer-exact band
   keys. ``Collection.query`` probes the keys it derives from the
-  stored vectors before an exact rerank; ``embed``'s late-interaction
-  index stores them (``rp_band_rows_for``).
+  stored vectors before an exact rerank.
 - the sample-trained IVF (``build_ivf_index_sampled``,
   ``ann_ivf_sampled_topk``): partition vectors by nearest centroid and
   prune to the ``nprobe`` closest cells at query time, with the
@@ -113,8 +112,8 @@ def _rp_plane_signs(planes: int = RP_PLANES, dim: int = RP_DIM) -> tuple:
 def _rp_band_keys(mat, signs_t) -> "object":
     """n x RP_BANDS band keys from an n x dim float64 matrix: quantize to
     micro-units, integer dot against the +-1 planes, pack sign bits
-    little-endian within each band. Shared by the distributed kernel and
-    the driver-side query-signature path (identical arithmetic)."""
+    little-endian within each band. Shared by the stored rows' keys and
+    the query's (identical arithmetic)."""
     import numpy as np
 
     q = np.floor(mat * RP_SCALE + 0.5).astype(np.int64)
@@ -152,47 +151,6 @@ def vec_bucket_py(vec_id: int) -> int:
         int(hashlib.md5(str(vec_id).encode()).hexdigest()[:8], 16)
         % N_VEC_BUCKETS
     )
-
-
-def _nonzero_pred() -> F.Column:
-    """True iff the ``emb`` array has any nonzero element (norm > 0
-    without the sqrt/dot HOF — ``exists`` short-circuits)."""
-    return F.exists(F.col("emb"), lambda x: x != F.lit(0.0))
-
-
-def rp_band_rows_for(e: DataFrame) -> DataFrame:
-    """The banding kernel over ANY (vec_id, emb) frame at the engine
-    table's RP_DIM: (vec_id, band, band_key) rows in one narrow Arrow
-    pass. Shared by the late-interaction index's build and update
-    paths (embed.py), so batch signatures are byte-identical to
-    build-time signatures."""
-    import numpy as np
-    import pandas as pd
-
-    signs_t = np.array(_rp_plane_signs(), dtype=np.int64).T  # dim x planes
-
-    def batches(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["emb"]])
-            if mat.shape[1] != RP_DIM:
-                raise ValueError(
-                    f"rp_lsh expects dim={RP_DIM}, got {mat.shape[1]}"
-                )
-            keys = _rp_band_keys(mat, signs_t)  # n x bands
-            ids = pdf["vec_id"].to_numpy()
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(ids, RP_BANDS),
-                    "band": np.tile(
-                        np.arange(RP_BANDS, dtype=np.int32), len(ids)
-                    ),
-                    "band_key": keys.reshape(-1).astype(np.int32),
-                }
-            )
-
-    return e.mapInPandas(batches, "vec_id bigint, band int, band_key int")
 
 
 def ivf_sampled_root(

@@ -43,16 +43,7 @@ def chunk_fixed_words(
     testdata corpus is single-line, so words stand in for the reference's
     50-line chunks, indexing_agent.py:290-312; names follow its
     ``chunk_<i>`` convention)."""
-    return chunk_fixed_words_for(
-        load_table(spark, sf_dir, "documents"), chunk_size
-    )
-
-
-def chunk_fixed_words_for(d: DataFrame, chunk_size: int = 20) -> DataFrame:
-    """The word-chunking kernel over ANY (doc_id, text) frame — shared
-    by the corpus chunker and the li_index incremental admit path, so
-    batch chunks are byte-identical to build-time chunks (the
-    ``rp_band_rows_for`` discipline)."""
+    d = load_table(spark, sf_dir, "documents")
     tokens = d.select(
         "doc_id",
         F.posexplode(F.split(F.col("text"), " ")).alias("pos", "word"),

@@ -1392,7 +1392,7 @@ def dsir_importance_select(
     Cross-engine determinism: lr is computed ONCE PER BUCKET (≤ B rows),
     4-dp rounded, and frozen to a ×10⁴ BIGINT; document scores are then
     EXACT integer sums — no float accumulation order can flip the
-    ranking (the late_interaction_topk discipline). ln() may differ by
+    ranking. ln() may differ by
     an ulp across engines only within ~1e-12 of a rounding boundary,
     per-corpus deterministic, guarded by the 3-SF sweeps.
 

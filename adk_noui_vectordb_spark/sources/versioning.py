@@ -2,10 +2,9 @@
 
 Shared by the Collection (api/collection.py) and every build-once/
 serve-many index in operators/ (the lexical inverted index, the MinHash
-and containment indexes, the sample-trained IVF index and the
-late-interaction index): an index whose update rewrites SEVERAL parquet
-components (postings + termstats + stats; bands + vecs; assign + vecs)
-must never let a reader observe them out of sync. The Collection's
+and containment indexes and the sample-trained IVF index): an index
+whose update rewrites SEVERAL parquet components (postings + termstats
++ stats; vecs + meta; assign + vecs) must never let a reader observe them out of sync. The Collection's
 navigable graph is not stored at all: it is a function of a version's
 vecs/ files, built on the driver when a graph query first reads them
 (operators/graph_ann.py). POSIX offers no

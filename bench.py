@@ -41,13 +41,6 @@ BENCH_KEYS = [
     "chunk_fixed_words",
     "text_stats",
     "quality_score",
-    "late_interaction_topk",
-    "late_interaction_topk_served",
-    "late_interaction_batch_topk_served",
-    "late_interaction_filtered_topk_served",
-    "late_interaction_topk_ingested",
-    "late_interaction_where_topk_served",
-    "late_interaction_explain_served",
     "dsir_importance_select",
     "curate_corpus",
     "chunk_ast_python",
@@ -85,7 +78,6 @@ BENCH_KEYS = [
     # r10b: batch serving shapes (M queries, one probe + one pass)
     "bm25_batch_topk_served",
     "lm_bigram_score",
-    "embed_topvar_project",
     "normalize_text_corpus",
     # r10c: ChromaDB-compatible Collection facade + full where DSL
     "collection_query_topk",

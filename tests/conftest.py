@@ -7,34 +7,26 @@ from adk_noui_vectordb_spark.session import get_spark
 SF_SMALL = "/root/testdata/sf0.001"
 SF_MED = "/root/testdata/sf0.01"
 
-# Slow lifecycle/recall sweeps, opt-in via RUN_SLOW=1 (r17 — the full
-# 938-test suite outgrew the external test gate's wall-clock budget:
-# measured 42 min contended / ~31 min solo, with these 52 tests alone
-# accounting for ~22 min). Every test here exercises a multi-version
-# index LIFECYCLE (build → update/delete → vacuum/compact/fsck) or a
-# statistical RECALL sweep — coverage that does not change with the
-# serving-path code the fast tests pin, and that the per-key parity
-# sweeps (tools/sweep_parity.py, the oracle_parity tests, and the
-# driver's own correctness gate) re-verify end to end. The full suite
-# remains green: run `RUN_SLOW=1 python -m pytest tests/ -q` (done and
-# recorded in OPTIMIZATION_r17.md each round). Oracle-parity tests are
-# deliberately NOT in this list — correctness checks always run.
+# Slow lifecycle sweeps, opt-in via RUN_SLOW=1 (r17 — the full 938-test
+# suite outgrew the external test gate's wall-clock budget: measured 42
+# min contended / ~31 min solo). Every test here exercises a
+# multi-version Spark-written index LIFECYCLE (build → update/delete →
+# vacuum/compact/fsck) of the text index, the dedup containment index or
+# the versioning kernel. The Collection's lifecycle tests left this list
+# once its commits and reads ran on the driver: together they take about
+# 20 s. Run the rest with `RUN_SLOW=1 python -m pytest tests/ -q`.
+# Oracle-parity tests are deliberately NOT in this list — correctness
+# checks always run.
 SLOW_TESTS = {
     "test_auto_compaction_bounds_files_per_partition",
-    "test_collection_lifecycle_matches_model",
     "test_compact_text_index_preserves_content",
     "test_containment_index_admit_and_replace",
-    "test_delete_by_ids_where_and_all",
     "test_delete_from_text_index_retracts_everything",
-    "test_facade_filtered_recall_on_clustered_fixture",
     "test_folded_analyzer_index_round_trips",
     "test_fsck_passes_on_healthy_indexes_and_flags_damage",
     "test_incremental_update_equals_fresh_build",
-    "test_li_index_update_replace_and_rebuild_equality",
-    "test_partial_update_keeps_omitted_fields",
     "test_resubmitting_same_batch_is_a_noop",
     "test_text_index_lifecycle_matches_model",
-    "test_upsert_replaces_everything",
     "test_version_gc_keeps_current_and_previous",
 }
 
@@ -65,6 +57,26 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMALL
+
+
+@pytest.fixture()
+def stored(spark):
+    """Spark DataFrames over the files of a Collection version, for
+    tests that check with Spark what the driver writer stored:
+    ``stored.meta(cur, info)`` and ``stored.vecs(cur)``."""
+    from types import SimpleNamespace
+
+    from adk_noui_vectordb_spark.api.collection import VECS_SCHEMA
+
+    def meta(cur, info):
+        return spark.read.schema(info["meta_schema"]).parquet(
+            os.path.join(cur, "meta")
+        )
+
+    def vecs(cur):
+        return spark.read.schema(VECS_SCHEMA).parquet(os.path.join(cur, "vecs"))
+
+    return SimpleNamespace(meta=meta, vecs=vecs)
 
 
 @pytest.fixture()

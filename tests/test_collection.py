@@ -25,9 +25,11 @@ DIM = 8
 
 
 # The Spark twins of the driver writer's surrogate and meta-bucket hashes
-# (``_sid_py``, ``_mbucket_py``), which
+# (``_sid_py``, ``_mbucket_py``) and of the RP-LSH band keys the reads
+# derive (``_rp_band_keys``), which
 # test_driver_writer_matches_spark_hash_twins checks the stored rows
-# against.
+# against; test_legacy_band_store_is_ignored_then_dropped writes the old
+# ``bands/`` table with the band twin.
 def _sid_expr(id_col):
     """60-bit md5 surrogate of a string id column, as a BIGINT."""
     return F.conv(F.substring(F.md5(id_col), 1, 15), 16, 10).cast("bigint")
@@ -43,6 +45,41 @@ def _mbucket_expr(sid_col):
         )
         % N_META_BUCKETS
     ).cast("int")
+
+
+def _nonzero_pred():
+    """True iff the ``emb`` array has any nonzero element."""
+    return F.exists(F.col("emb"), lambda x: x != F.lit(0.0))
+
+
+def rp_band_rows_for(e):
+    """(vec_id, band, band_key) rows of a (vec_id, emb) frame at the
+    engine table's RP_DIM, in one Arrow pass."""
+    import pandas as pd
+
+    from adk_noui_vectordb_spark.operators.ann import RP_DIM
+
+    signs_t = np.array(_rp_plane_signs(), dtype=np.int64).T  # dim x planes
+
+    def batches(it):
+        for pdf in it:
+            if len(pdf) == 0:
+                continue
+            mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["emb"]])
+            assert mat.shape[1] == RP_DIM
+            keys = _rp_band_keys(mat, signs_t)  # n x bands
+            ids = pdf["vec_id"].to_numpy()
+            yield pd.DataFrame(
+                {
+                    "vec_id": np.repeat(ids, RP_BANDS),
+                    "band": np.tile(
+                        np.arange(RP_BANDS, dtype=np.int32), len(ids)
+                    ),
+                    "band_key": keys.reshape(-1).astype(np.int32),
+                }
+            )
+
+    return e.mapInPandas(batches, "vec_id bigint, band int, band_key int")
 
 
 def _vecs(seed: int, n: int) -> np.ndarray:
@@ -355,7 +392,7 @@ def test_schema_and_dim_are_enforced(spark, coll):
         coll.add(arr)
 
 
-def test_components_stay_consistent_across_lifecycle(spark, coll):
+def test_components_stay_consistent_across_lifecycle(spark, coll, stored):
     """Invariant fsck: meta count == vecs count; surrogates in every
     component agree."""
     mat = _vecs(15, 10)
@@ -365,8 +402,8 @@ def test_components_stay_consistent_across_lifecycle(spark, coll):
     coll.upsert(_batch(spark, ["k1", "k7"], _vecs(16, 2)))
     coll.delete(ids=["k2"])
     cur, info = coll._require()
-    meta = coll._meta(cur, info)
-    vecs = coll._vecs(cur)
+    meta = stored.meta(cur, info)
+    vecs = stored.vecs(cur)
     assert meta.count() == 9 and vecs.count() == 9
     assert (
         vecs.join(meta, "vec_id", "left_anti").count() == 0
@@ -696,7 +733,6 @@ def test_driver_writer_matches_spark_hash_twins(spark, tmp_path):
     from adk_noui_vectordb_spark.operators.ann import (
         N_VEC_BUCKETS,
         RP_DIM,
-        rp_band_rows_for,
         vec_bucket_expr,
     )
 
@@ -962,7 +998,7 @@ def test_rollback_undoes_a_bad_batch(spark, coll):
     assert coll.get(ids=["b"]).head()["lang"] == "en"
 
 
-def test_merge_disjoint_shards(spark, tmp_path):
+def test_merge_disjoint_shards(spark, tmp_path, stored):
     """The distributed-build pattern: two shards built independently,
     folded into one serving collection with zero recompute."""
     a = Collection(spark, str(tmp_path / "shard_a"))
@@ -980,10 +1016,10 @@ def test_merge_disjoint_shards(spark, tmp_path):
         assert top["id"] == f"{pre}2" and top["distance"] == 0.0
     # component invariants survive the merge
     cur, info = dst._require()
-    assert dst._vecs(cur).count() == 10
+    assert stored.vecs(cur).count() == 10
 
 
-def test_merge_conflict_modes(spark, tmp_path):
+def test_merge_conflict_modes(spark, tmp_path, stored):
     a = Collection(spark, str(tmp_path / "ca"))
     b = Collection(spark, str(tmp_path / "cb"))
     ma, mb = _vecs(32, 3), _vecs(33, 3)
@@ -1006,7 +1042,7 @@ def test_merge_conflict_modes(spark, tmp_path):
     top = a3.query([float(x) for x in mb[0]], n_results=1).head()
     assert top["id"] == "y" and top["distance"] == 0.0
     cur, info = a3._require()
-    assert a3._vecs(cur).count() == 5 and a3._meta(cur, info).count() == 5
+    assert stored.vecs(cur).count() == 5 and stored.meta(cur, info).count() == 5
 
 
 def test_merge_config_mismatch_raises(spark, tmp_path):
@@ -1199,18 +1235,14 @@ def test_commit_writes_one_file_per_touched_partition(spark, coll):
     assert [c for c, ok, _ in coll.fsck() if not ok] == []
 
 
-def test_legacy_band_store_is_ignored_then_dropped(spark, tmp_path):
+def test_legacy_band_store_is_ignored_then_dropped(spark, tmp_path, stored):
     """A version written by the old layout also holds a ``bands/``
     table: reads serve it exactly like the same rows without one, fsck
     is clean, and its next upsert and its next compaction each publish
     a version without ``bands/``."""
     import os
 
-    from adk_noui_vectordb_spark.operators.ann import (
-        RP_DIM,
-        _nonzero_pred,
-        rp_band_rows_for,
-    )
+    from adk_noui_vectordb_spark.operators.ann import RP_DIM
     from adk_noui_vectordb_spark.sources import versioning as vn
 
     mat = np.random.default_rng(56).normal(size=(40, RP_DIM)).round(3)
@@ -1224,7 +1256,7 @@ def test_legacy_band_store_is_ignored_then_dropped(spark, tmp_path):
         c.add(_local_batch(spark, ids[:20], mat[:20], langs[:20]))
         c.merge_from(shard)  # disjoint: two files per shared partition
     cur = legacy._cur()
-    vecs = legacy._vecs(cur).select("vec_id", "emb").filter(_nonzero_pred())
+    vecs = stored.vecs(cur).select("vec_id", "emb").filter(_nonzero_pred())
     vn.commit_version(
         spark,
         legacy.root,
@@ -1809,6 +1841,40 @@ def test_add_metadata_column_evolves_the_schema(spark, coll):
         coll.add_metadata_column("tier", "string")
     with pytest.raises(ValueError, match="unsupported"):
         coll.add_metadata_column("blob", "array<double>")
+
+
+def test_add_metadata_column_casts_default_in_one_job(spark, coll):
+    """The ALTER stores Spark's cast of ``default`` on every existing
+    row (1.5 into an ``int`` column is 1, where a pyarrow int32 array
+    of 1.5 raises), and runs no Spark job beyond that 1-row cast; a
+    NULL default runs none."""
+    import datetime
+
+    from pyspark.sql.types import IntegerType
+
+    ids = [f"a{i:02d}" for i in range(12)]
+    coll.add(_local_batch(spark, ids, _vecs(142, 12)))
+    sc = spark.sparkContext
+
+    def jobs(name, call):
+        group = f"alter-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            call()
+        finally:
+            sc.setJobGroup(None, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    seen = datetime.datetime(2021, 6, 1, 12, 30, 15, 250000)
+    assert jobs("n", lambda: coll.add_metadata_column("n", "int", default=1.5)) == 1
+    assert jobs("note", lambda: coll.add_metadata_column("note", "string")) == 0
+    assert jobs("seen", lambda: coll.add_metadata_column("seen", "timestamp", default=seen)) == 1
+    got = coll.get()
+    assert got.schema["n"].dataType == IntegerType()
+    rows = got.collect()
+    assert sorted(r["id"] for r in rows) == ids
+    assert {(r["n"], r["note"], r["seen"]) for r in rows} == {(1, None, seen)}
+    assert [c for c, ok, _ in coll.fsck() if not ok] == []
 
 
 def test_adaptive_prefilter_strategy(spark, tmp_path):

@@ -84,8 +84,8 @@ def test_no_nested_output_types(key, spark):
 
     The driver's canonicalizer sorts result frames via pandas, which
     throws ``TypeError: unhashable type`` on list/dict cells — the crash
-    that made ``embed_quantize_int8`` red in r2 and ``embed_topvar_project``
-    red in r7 (VERDICT r7 wrong #1 / next #2). Pinning the de-facto
+    that made two array-valued keys red in r2 and r7 (VERDICT r7 wrong
+    #1 / next #2). Pinning the de-facto
     contract registry-wide makes the class structurally impossible:
     emit exploded scalar rows and let consumers regroup.
     """

@@ -330,7 +330,7 @@ def test_collection_keyset_page_pushes_cursor_to_scan(spark, sf_dir, opened_dirs
     assert seen and not any("/vecs/" in p for p in seen), seen
 
 
-def test_collection_reads_run_no_spark_jobs(spark, sf_dir):
+def test_collection_reads_run_no_spark_jobs(spark, sf_dir, stored):
     """Warm serving reads run ZERO Spark jobs: query (probe, filtered,
     batch, and the graph strategy's blind, ACORN and batch walks), get
     by ids, keyset-paged get(where, after_id) and count read memoized
@@ -339,7 +339,7 @@ def test_collection_reads_run_no_spark_jobs(spark, sf_dir):
     from adk_noui_vectordb_spark.api.collection import demo_collection
 
     coll = demo_collection(spark, sf_dir)
-    q = [r["emb"] for r in coll._vecs(coll._cur()).limit(2).collect()]
+    q = [r["emb"] for r in stored.vecs(coll._cur()).limit(2).collect()]
     reads = {
         "query.probe": lambda: coll.query(q[0], n_results=5).collect(),
         "query.filtered": lambda: coll.query(
@@ -381,7 +381,7 @@ def test_collection_reads_run_no_spark_jobs(spark, sf_dir):
     assert not failures, "; ".join(failures)
 
 
-def test_collection_reads_make_no_py4j_call(spark, sf_dir, py4j_calls):
+def test_collection_reads_make_no_py4j_call(spark, sf_dir, py4j_calls, stored):
     """Warm serving reads — the read set of
     test_collection_reads_run_no_spark_jobs plus peek — make no py4j
     call, the result's collect() included: the rows come from the
@@ -389,7 +389,7 @@ def test_collection_reads_make_no_py4j_call(spark, sf_dir, py4j_calls):
     from adk_noui_vectordb_spark.api.collection import demo_collection
 
     coll = demo_collection(spark, sf_dir)
-    q = [r["emb"] for r in coll._vecs(coll._cur()).limit(2).collect()]
+    q = [r["emb"] for r in stored.vecs(coll._cur()).limit(2).collect()]
     reads = {
         "query.probe": lambda: coll.query(q[0], n_results=5).collect(),
         "query.filtered": lambda: coll.query(
@@ -476,88 +476,13 @@ def test_sampled_ivf_probe_prunes_cells_and_takeordered(spark, sf_dir):
     assert "TakeOrderedAndProject" in plan, plan
 
 
-def test_late_interaction_plan_partial_max_and_take_ordered(spark, sf_dir):
-    """The sum-of-MaxSim fold must stay map-side-combinable (partial max
-    aggregates before the doc_id exchange) and the final top-k must be
-    TakeOrderedAndProject, not a global sort."""
-    from adk_noui_vectordb_spark.operators.embed import late_interaction_topk
-
-    plan = explain_str(late_interaction_topk(spark, sf_dir))
-    assert "TakeOrderedAndProject" in plan, plan
-    # partial_max in the pre-shuffle HashAggregate (formatted plan shows
-    # partial aggregate functions on the map side)
-    assert "partial_max" in plan or "partial" in plan.lower(), plan
-
-
-def test_li_served_probe_prunes_and_take_ordered(spark, sf_dir):
-    """late_interaction_topk_served: the band-table probe must be
-    static PartitionFilters on (band, band_key) — the scan lists only
-    the probed bucket dirs, never the chunk corpus — and the final
-    top-k must stay TakeOrderedAndProject with map-side partial maxes
-    (the scan key's pinned shape, preserved by the served fold)."""
-    from adk_noui_vectordb_spark.operators.embed import (
-        late_interaction_topk_served,
-    )
-
-    df = late_interaction_topk_served(spark, sf_dir)
-    plan = explain_str(df)
-    seg = plan.split("PartitionFilters")
-    assert len(seg) > 1, plan
-    head = seg[1].split("\n")[0]
-    assert "band" in head and "band_key" in head, plan
-    assert "TakeOrderedAndProject" in plan, plan
-    assert "partial_max" in plan or "partial" in plan.lower(), plan
-
-
-def test_li_filtered_serve_pushes_lang_to_index_scan(spark, sf_dir):
-    """late_interaction_filtered_topk_served: the metadata predicate
-    must be PushedFilters on the index's own vecs/ scan (the v2 lang
-    fold) — a filtered query reads zero corpus rows."""
-    from adk_noui_vectordb_spark.operators.embed import (
-        late_interaction_filtered_topk_served,
-    )
-
-    df = late_interaction_filtered_topk_served(spark, sf_dir)
-    plan = explain_str(df)
-    assert_pushed_filters(df, "lang")
-    seg = plan.split("PartitionFilters")
-    assert len(seg) > 1, plan
-
-
-def test_li_where_serve_narrow_meta_and_semi_join(spark, sf_dir):
-    """late_interaction_where_topk_served: the compiled where tree must
-    push into the documents scan (PushedFilters mentions a referenced
-    field), the metadata projection must stay NARROW (ReadSchema carries
-    doc_id + the three referenced fields, never text), and the filter
-    enters the rerank as a semi join — non-matching docs never reach
-    the maxes."""
-    from adk_noui_vectordb_spark.operators.embed import (
-        late_interaction_where_topk_served,
-    )
-
-    df = late_interaction_where_topk_served(spark, sf_dir)
-    plan = explain_str(df)
-    # the $gte leaf is a deterministic single-field pushdown candidate
-    assert "n_chars" in plan, plan
-    doc_scans = [
-        seg.split("\n")[0]
-        for seg in plan.split("ReadSchema: ")[1:]
-        if "doc_id" in seg.split("\n")[0] and "n_chars" in seg.split("\n")[0]
-    ]
-    assert doc_scans, plan
-    assert all("text" not in s for s in doc_scans), doc_scans
-    assert "LeftSemi" in plan, plan
-    seg = plan.split("PartitionFilters")
-    assert len(seg) > 1, plan
-
-
 def test_serving_path_job_budgets(spark, sf_dir):
     """VERDICT r16 next #3: machine-independent pins for the multi-job
     serving families. Seconds are bench weather; Spark JOB counts are
     scheduler round-trips and reproduce anywhere — so each key's
     WARM-serve job count is pinned as a ceiling. Budgets: the
-    containment gate and served-LI are their measured warm counts + 2
-    slack (sf0.001: 15 and 4); the collection graph key is pinned at
+    containment gate is its measured warm count + 2 slack (sf0.001:
+    15); the collection graph key is pinned at
     its measured 2, both from reading the demo query vector
     (``_demo_query``'s head); the beam itself reads the graph version
     on the driver and runs none. A regression that re-adds a per-round
@@ -568,7 +493,6 @@ def test_serving_path_job_budgets(spark, sf_dir):
     budgets = {
         "collection_query_graph_topk": 2,
         "dedup_containment_gate": 17,
-        "late_interaction_topk_served": 6,
     }
     sc = spark.sparkContext
     failures = []

@@ -47,7 +47,6 @@ KEYS = {
     "bm25_topk_served": "documents",
     "bm25_folded_topk_served": "documents",
     "lm_bigram_score": "documents",
-    "embed_topvar_project": "embeddings",
     "normalize_text_corpus": "documents",
     "dedup_repeated_ngrams": "documents",
     # r7c additions
@@ -79,14 +78,6 @@ KEYS = {
     "collection_query_graph_batch_topk": "embeddings",
     "collection_get_where": "documents",
     "fuzzy_topk_served": "documents",
-    "chunked_maxsim_topk": "documents",
-    "late_interaction_topk": "documents",
-    "late_interaction_topk_served": "documents",
-    "late_interaction_batch_topk_served": "documents",
-    "late_interaction_filtered_topk_served": "documents",
-    "late_interaction_topk_ingested": "documents",
-    "late_interaction_where_topk_served": "documents",
-    "late_interaction_explain_served": "documents",
     "dedup_containment_gate_ingested": "documents",
     "dsir_importance_select": "documents",
     # r11 additions
