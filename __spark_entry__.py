@@ -151,23 +151,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "chunk_ast_python": _q_chunk_ast,
         "chunk_js_elements": _q_chunk_js,
         # text analysis (SURVEY.md §2.9 + north-star extensions)
-        "text_stats": _text.text_stats,
-        "token_count": _text.token_count,
-        "quality_score": _text.quality_score,
-        # r9: the named published curation batteries (Gopher Table A1
-        # rules in cross-multiplied integer arithmetic; the C4 §2.2
-        # line/page cleaning with a content hash of the cleaned doc)
-        "gopher_quality_flags": _text.gopher_quality_flags,
-        "c4_line_filter": _text.c4_line_filter,
-        "lang_id_ngram": _text.lang_id_ngram,
-        "doc_fingerprint": _text.doc_fingerprint,
-        "curate_corpus": _text.curate_corpus,
-        # r11: per-source frequency cap (the Gopher domain-cap step)
-        "cap_docs_per_source": _text.cap_docs_per_source,
-        "winnow_fingerprints": _text.winnow_fingerprints,
-        "tfidf_top_terms": _text.tfidf_top_terms,
-        "quality_repetition": _text.quality_repetition,
-        "decontaminate_corpus": _text.decontaminate_corpus,
         "line_dedup_corpus": _text.line_dedup_corpus,
         # r7: canonical normalization pass (lower/strip/collapse) —
         # pure codegen'd projection, no shuffle; idempotence unit-pinned
@@ -178,22 +161,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # r7: second-order LM scoring — word-order signal the unigram
         # key cannot see; capped broadcast bigram model, floor-micro-nats.
         "lm_bigram_score": _text.lm_bigram_score,
-        # r7: Shannon token-diversity quality signal, floor-micro-nats
-        "doc_token_entropy": _text.doc_token_entropy,
         "mixture_sample": _text.mixture_sample,
-        # r15: DSIR (Xie et al. NeurIPS 2023) — hashed-ngram importance
-        # resampling against a target slice; per-bucket 4-dp-frozen
-        # integer log-ratios, exact integer doc sums
-        "dsir_importance_select": _text.dsir_importance_select,
-        # r13: deterministic content-keyed train/holdout split audit
-        "split_train_holdout": _text.split_train_holdout,
         "bpe_pair_counts": _text.bpe_pair_counts,
         "tokenize_bpe_encode": _text.tokenize_bpe_encode,
-        "curate_corpus_full": _text.curate_corpus_full,
         "cluster_kmeans": _ann.cluster_kmeans,
-        "stratified_sample": _text.stratified_sample,
-        "split_assignment": _text.split_assignment,
-        "diag_generic": _text.diag_generic,
         "diag_python": _idx.diag_python,
         "diag_js_ts": _idx.diag_js_ts,
         "diag_python_syntax": _idx.diag_python_syntax,
@@ -1420,231 +1391,6 @@ SELECT doc_id, CAST(pos // 20 AS INTEGER) AS chunk_id,
        'chunk_' || CAST(pos // 20 AS INTEGER) AS chunk_name
 FROM w GROUP BY doc_id, CAST(pos // 20 AS INTEGER)
 """,
-        "text_stats": """
-SELECT doc_id,
-       CAST(length(text) AS INTEGER) AS n_chars_actual,
-       CAST(len(string_split(text, ' ')) AS INTEGER) AS n_words,
-       CAST(len(list_distinct(string_split(text, ' '))) AS INTEGER) AS n_distinct_words,
-       round(list_sum(list_transform(string_split(text, ' '), w -> CAST(length(w) AS DOUBLE)))
-             / len(string_split(text, ' ')), 4) AS avg_word_len
-FROM documents
-""",
-        "token_count": """
-SELECT doc_id,
-       CAST(len(string_split(text, ' ')) AS INTEGER) AS ws_tokens,
-       CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]')) AS INTEGER) AS regex_tokens
-FROM documents
-""",
-        "gopher_quality_flags": """
-WITH base AS (
-    SELECT doc_id,
-           string_split(text, ' ') AS words,
-           string_split(text, chr(10)) AS lines,
-           ' ' || lower(text) || ' ' AS low
-    FROM documents
-), m AS (
-    SELECT doc_id,
-           len(words) AS wc,
-           list_sum(list_transform(words, w -> len(w))) AS chars,
-           len(list_filter(words, w -> w LIKE '#%' OR w LIKE '%...%')) AS sym,
-           len(lines) AS nlines,
-           len(list_filter(lines,
-               l -> l LIKE '- %' OR l LIKE '* %' OR l LIKE '• %')) AS bullets,
-           len(list_filter(lines, l -> l LIKE '%...')) AS ell,
-           (CASE WHEN low LIKE '% the %' THEN 1 ELSE 0 END
-            + CASE WHEN low LIKE '% a %' THEN 1 ELSE 0 END
-            + CASE WHEN low LIKE '% be %' THEN 1 ELSE 0 END
-            + CASE WHEN low LIKE '% to %' THEN 1 ELSE 0 END
-            + CASE WHEN low LIKE '% of %' THEN 1 ELSE 0 END
-            + CASE WHEN low LIKE '% and %' THEN 1 ELSE 0 END
-            + CASE WHEN low LIKE '% that %' THEN 1 ELSE 0 END
-            + CASE WHEN low LIKE '% have %' THEN 1 ELSE 0 END
-            + CASE WHEN low LIKE '% with %' THEN 1 ELSE 0 END) AS stop_hits
-    FROM base
-)
-SELECT doc_id,
-       wc >= 50 AND wc <= 100000 AS wc_ok,
-       3 * wc <= chars AND chars <= 10 * wc AS mwl_ok,
-       10 * sym <= wc AS sym_ok,
-       10 * bullets <= 9 * nlines AS bullet_ok,
-       10 * ell <= 3 * nlines AS ellipsis_ok,
-       stop_hits >= 2 AS stop_ok,
-       (wc >= 50 AND wc <= 100000) AND (3 * wc <= chars AND chars <= 10 * wc)
-       AND (10 * sym <= wc) AND (10 * bullets <= 9 * nlines)
-       AND (10 * ell <= 3 * nlines) AND (stop_hits >= 2) AS keep
-FROM m
-""",
-        "c4_line_filter": f"""
-WITH {DERIVED_CORPUS_SQL},
-base AS (
-    SELECT path, content,
-           string_split(content, chr(10)) AS lines,
-           list_filter(string_split(content, chr(10)),
-               l -> regexp_matches(l, '[.!?"]$')
-                    AND len(string_split(trim(l), ' ')) >= 4) AS kept
-    FROM corpus
-)
-SELECT path,
-       NOT (lower(content) LIKE '%lorem ipsum%'
-            OR content LIKE '%{{%') AS page_kept,
-       CAST(len(lines) AS BIGINT) AS n_lines,
-       CAST(len(kept) AS BIGINT) AS n_kept,
-       CAST(len(list_filter(lines,
-           l -> len(string_split(trim(l), ' ')) < 4)) AS BIGINT) AS n_short,
-       CAST(len(list_filter(lines,
-           l -> NOT regexp_matches(l, '[.!?"]$'))) AS BIGINT) AS n_nopunct,
-       md5(coalesce(array_to_string(kept, chr(10)), '')) AS clean_md5
-FROM base
-""",
-        "quality_score": f"""
-WITH base AS (
-    SELECT doc_id, n_chars, text,
-           string_split(text, ' ') AS words,
-           string_split(lower(text), ' ') AS lwords
-    FROM documents
-), m AS (
-    SELECT doc_id, n_chars, text,
-           (length(text) - length(regexp_replace(text, '[^A-Za-z0-9 ]', '', 'g')))
-               / CAST(length(text) AS DOUBLE) AS praw,
-           len(list_filter(lwords, x -> x IN {_STOPWORDS_SQL})) / CAST(len(lwords) AS DOUBLE) AS sraw,
-           len(list_distinct(words)) / CAST(len(words) AS DOUBLE) AS draw
-    FROM base
-)
-SELECT doc_id,
-       round(praw, 4) AS punct_ratio,
-       round(sraw, 4) AS stopword_ratio,
-       round(draw, 4) AS distinct_word_ratio,
-       round(CASE WHEN n_chars BETWEEN 100 AND 5000 THEN 0.4 ELSE 0.0 END
-             + sraw * 0.3 + draw * 0.3, 4) AS quality
-FROM m
-""",
-        "cap_docs_per_source": """
-SELECT doc_id, source, CAST(keep_rank AS INTEGER) AS keep_rank FROM (
-    SELECT doc_id, source,
-           row_number() OVER (
-               PARTITION BY source
-               ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS keep_rank
-    FROM documents
-) WHERE keep_rank <= 30
-""",
-        "curate_corpus": f"""
-WITH base AS (
-    SELECT doc_id, text, string_split(lower(text), ' ') AS lwords,
-           string_split(text, ' ') AS words
-    FROM documents
-), m AS (
-    SELECT doc_id,
-           len(list_filter(lwords, x -> x IN {_STOPWORDS_SQL})) / CAST(len(lwords) AS DOUBLE) AS sraw,
-           len(list_distinct(words)) / CAST(len(words) AS DOUBLE) AS draw
-    FROM base
-), q AS (
-    SELECT d.doc_id, d.lang, d.source, d.n_chars,
-           round(CASE WHEN d.n_chars BETWEEN 100 AND 5000 THEN 0.4 ELSE 0.0 END
-                 + m.sraw * 0.3 + m.draw * 0.3, 4) AS quality
-    FROM documents d JOIN m ON d.doc_id = m.doc_id
-), keep AS (
-    SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)
-)
-SELECT q.doc_id, q.lang, q.source, q.n_chars, q.quality
-FROM q JOIN keep ON q.doc_id = keep.doc_id
-WHERE q.quality >= 0.5
-""",
-        "lang_id_ngram": """
-WITH letters AS (
-    SELECT doc_id, regexp_replace(lower(text), '[^a-z]', '', 'g') AS s FROM documents
-), grams AS (
-    SELECT doc_id, substr(s, t.i, 2) AS bigram
-    FROM letters, LATERAL (SELECT unnest(generate_series(1, greatest(length(s) - 1, 1))) AS i) t
-    WHERE length(substr(s, t.i, 2)) = 2
-), counts AS (
-    SELECT doc_id, bigram, count(*) AS c FROM grams GROUP BY 1, 2
-), ranked AS (
-    SELECT doc_id, bigram, c,
-           row_number() OVER (PARTITION BY doc_id ORDER BY c DESC, bigram) AS rn
-    FROM counts
-)
-SELECT doc_id, bigram AS top_bigram, c AS bigram_count FROM ranked WHERE rn = 1
-""",
-        "tfidf_top_terms": """
-WITH words AS (
-    SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
-),
-tf AS (SELECT doc_id, term, count(*) AS tf FROM words GROUP BY 1, 2),
-df AS (
-    SELECT term, count(*) AS df
-    FROM (SELECT DISTINCT doc_id, term FROM words) GROUP BY 1
-),
-n AS (SELECT count(*) AS n FROM documents),
-scored AS (
-    SELECT tf.doc_id, tf.term,
-           round(tf.tf * ln(CAST(n.n AS DOUBLE) / df.df), 4) AS tfidf
-    FROM tf JOIN df USING (term) CROSS JOIN n
-),
-ranked AS (
-    SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term) AS rank
-    FROM scored
-)
-SELECT doc_id, term, tfidf, CAST(rank AS INTEGER) AS rank
-FROM ranked WHERE rank <= 3
-""",
-        "winnow_fingerprints": """
-WITH g AS (
-    SELECT doc_id, t.i AS pos,
-           CAST(('0x' || substr(md5(substr(text, t.i, 5)), 1, 15)) AS BIGINT) AS h
-    FROM documents,
-         LATERAL (SELECT unnest(generate_series(1, greatest(length(text) - 4, 1))) AS i) t
-), w AS (
-    SELECT doc_id, pos,
-           min(h) OVER (PARTITION BY doc_id ORDER BY pos
-                        ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp,
-           count(*) OVER (PARTITION BY doc_id) AS n
-    FROM g
-)
-SELECT DISTINCT doc_id, fp AS fingerprint FROM w WHERE pos <= n - 3
-""",
-        "quality_repetition": """
-WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
-base AS (
-    SELECT doc_id,
-           1.0 - len(list_distinct(words)) / CAST(len(words) AS DOUBLE) AS dup_word_frac
-    FROM w
-),
-g3 AS (
-    SELECT doc_id,
-           1.0 - len(list_distinct(l)) / CAST(len(l) AS DOUBLE) AS dup_3gram_frac
-    FROM (
-        SELECT doc_id,
-               list_transform(generate_series(1, greatest(len(words) - 2, 1)),
-                              i -> array_to_string(words[i:i+2], ' ')) AS l
-        FROM w
-    )
-),
-g2 AS (
-    SELECT w.doc_id, array_to_string(w.words[t.i:t.i+1], ' ') AS gram
-    FROM w, LATERAL (SELECT unnest(generate_series(1, greatest(len(w.words) - 1, 1))) AS i) t
-),
-c2 AS (SELECT doc_id, gram, count(*) AS c FROM g2 GROUP BY 1, 2),
-t2 AS (
-    SELECT doc_id, max(c) / CAST(sum(c) AS DOUBLE) AS top_2gram_frac
-    FROM c2 GROUP BY doc_id
-)
-SELECT base.doc_id, base.dup_word_frac, t2.top_2gram_frac, g3.dup_3gram_frac
-FROM base JOIN t2 USING (doc_id) JOIN g3 USING (doc_id)
-""",
-        "decontaminate_corpus": """
-WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
-sh AS (
-    SELECT doc_id,
-           list_distinct(list_transform(generate_series(1, greatest(len(words) - 7, 1)),
-                                        i -> array_to_string(words[i:i+7], ' '))) AS shingles
-    FROM w
-),
-bench AS (SELECT DISTINCT unnest(shingles) AS shingle FROM sh WHERE doc_id % 50 = 0),
-cand AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh WHERE doc_id % 50 <> 0)
-SELECT c.doc_id, count(DISTINCT c.shingle) AS n_hits
-FROM cand c JOIN bench b ON c.shingle = b.shingle
-GROUP BY c.doc_id
-""",
         "line_dedup_corpus": f"""
 WITH {DERIVED_CORPUS_SQL},
 ld_lines AS (
@@ -1730,24 +1476,6 @@ FROM (
     GROUP BY 1
 )
 """,
-        "doc_token_entropy": """
-WITH words AS (
-    SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
-),
-counts AS (SELECT doc_id, term, count(*) AS c FROM words GROUP BY 1, 2),
-totals AS (
-    SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens,
-           CAST(count(*) AS BIGINT) AS n_distinct
-    FROM counts GROUP BY 1
-)
-SELECT c.doc_id, t.n_tokens, t.n_distinct,
-       CAST(sum(CAST(floor(
-           -(c.c / CAST(t.n_tokens AS DOUBLE))
-           * ln(c.c / CAST(t.n_tokens AS DOUBLE))
-           * 1000000.0::DOUBLE) AS BIGINT)) AS BIGINT) AS entropy_micro
-FROM counts c JOIN totals t USING (doc_id)
-GROUP BY 1, 2, 3
-""",
         "lm_bigram_score": """
 WITH parts AS (
     SELECT doc_id, string_split(text, ' ') AS p FROM documents
@@ -1781,66 +1509,6 @@ SELECT doc_id,
        CAST(-sum(lp) AS BIGINT) // CAST(count(*) AS BIGINT) AS nll2_micro,
        CAST(sum(CASE WHEN oov THEN 1 ELSE 0 END) AS BIGINT) AS n_oov
 FROM scored GROUP BY 1
-""",
-        "split_train_holdout": """
-WITH b AS (
-    SELECT CASE WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-                     AS BIGINT) % 100 < 10
-                THEN 'holdout' ELSE 'train' END AS split,
-           lang, n_chars
-    FROM documents
-)
-SELECT split, lang, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS total_chars
-FROM b GROUP BY split, lang ORDER BY split, lang
-""",
-        # r15 DSIR twin (textops.py dsir_importance_select): unigram +
-        # bigram features hashed to 8192 buckets, add-1 smoothed
-        # log-ratio per bucket frozen to a x10^4 BIGINT after a 4-dp
-        # round, document log-weight = exact integer sum / 10^4
-        "dsir_importance_select": """
-WITH tok AS (
-    SELECT doc_id, lang, w, pos FROM (
-        SELECT doc_id, lang,
-               unnest(string_split(text, ' ')) AS w,
-               generate_subscripts(string_split(text, ' '), 1) AS pos
-        FROM documents)
-), big AS (
-    SELECT doc_id, lang,
-           w || ' ' || lead(w) OVER (PARTITION BY doc_id ORDER BY pos) AS feat
-    FROM tok
-    QUALIFY lead(w) OVER (PARTITION BY doc_id ORDER BY pos) IS NOT NULL
-), feats AS (
-    SELECT doc_id, lang,
-           CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) % 8192 AS bucket
-    FROM tok
-    UNION ALL
-    SELECT doc_id, lang,
-           CAST(('0x' || substr(md5(feat), 1, 15)) AS BIGINT) % 8192 AS bucket
-    FROM big
-), rawc AS (
-    SELECT bucket, count(*) AS cr FROM feats GROUP BY 1
-), tgtc AS (
-    SELECT bucket, count(*) AS ct FROM feats WHERE lang = 'en' GROUP BY 1
-), tots AS (
-    SELECT (SELECT sum(cr) FROM rawc) AS r_tot,
-           (SELECT sum(ct) FROM tgtc) AS t_tot
-), lr AS (
-    SELECT r.bucket,
-           CAST(round(round(
-               ln(CAST(coalesce(t.ct, 0) + 1 AS DOUBLE)
-                  / CAST(tots.t_tot + 8192 AS DOUBLE))
-               - ln(CAST(r.cr + 1 AS DOUBLE)
-                    / CAST(tots.r_tot + 8192 AS DOUBLE)),
-               4) * 10000) AS BIGINT) AS lr_e4
-    FROM rawc r LEFT JOIN tgtc t USING (bucket) CROSS JOIN tots
-)
-SELECT f.doc_id,
-       CAST(sum(lr.lr_e4) AS DOUBLE) / 10000.0 AS log_weight,
-       count(*) AS n_feats
-FROM feats f JOIN lr USING (bucket)
-GROUP BY 1
-ORDER BY log_weight DESC, doc_id
-LIMIT 100
 """,
         "mixture_sample": """
 WITH d AS (
@@ -1935,70 +1603,8 @@ SELECT doc_id, CAST(n_words AS INTEGER) AS n_words,
        md5(enc) AS encoded_hash
 FROM bpe_rec WHERE step = 8
 """,
-        "curate_corpus_full": f"""
-WITH words AS (
-    SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
-),
-counts AS (SELECT term, count(*) AS cnt FROM words GROUP BY 1),
-tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS total_tokens FROM counts),
-vocab AS (
-    SELECT term,
-           CAST(floor(ln(cnt / total_tokens) * 1000000) AS BIGINT) AS logp_micro
-    FROM counts CROSS JOIN tot
-    ORDER BY cnt DESC, term
-    LIMIT 16
-),
-pplx AS (
-    SELECT doc_id, (-nll_sum) // n_tokens AS nll_micro
-    FROM (
-        SELECT w.doc_id,
-               CAST(count(*) AS BIGINT) AS n_tokens,
-               CAST(sum(coalesce(v.logp_micro,
-                    CAST(floor(ln(1.0 / t.total_tokens) * 1000000) AS BIGINT)))
-                    AS BIGINT) AS nll_sum
-        FROM words w
-        LEFT JOIN vocab v USING (term)
-        CROSS JOIN tot t
-        GROUP BY 1
-    )
-),
-q AS (
-    SELECT doc_id,
-           round(CASE WHEN n_chars BETWEEN 100 AND 5000 THEN 0.4 ELSE 0.0 END
-                 + len(list_filter(string_split(lower(text), ' '),
-                                   x -> x IN {_STOPWORDS_SQL}))
-                   / CAST(len(string_split(lower(text), ' ')) AS DOUBLE) * 0.3
-                 + len(list_distinct(string_split(text, ' ')))
-                   / CAST(len(string_split(text, ' ')) AS DOUBLE) * 0.3,
-                 4) AS quality
-    FROM documents
-),
-keep AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text))
-SELECT d.doc_id, d.lang, d.source, q.quality, pplx.nll_micro
-FROM documents d
-JOIN q USING (doc_id)
-JOIN pplx USING (doc_id)
-WHERE d.doc_id IN (SELECT doc_id FROM keep)
-  AND q.quality >= 0.5
-  AND pplx.nll_micro <= 9000000
-""",
         "cluster_kmeans": _kmeans_sql(),
         "semdedup_prune": _semdedup_sql(),
-        "doc_fingerprint": """
-SELECT doc_id, md5(text) AS content_hash,
-       md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')) AS vocab_hash
-FROM documents
-""",
-        "diag_generic": """
-SELECT doc_id, rule, 'warning' AS severity FROM (
-    SELECT doc_id, unnest(list_filter([
-        CASE WHEN length(text) > 500 THEN 'overlong' END,
-        CASE WHEN text <> rtrim(text) THEN 'trailing_ws' END,
-        CASE WHEN length(text) < 60 THEN 'too_short' END
-    ], x -> x IS NOT NULL)) AS rule
-    FROM documents
-)
-""",
         "dedup_exact": """
 SELECT md5(text) AS text_hash, min(doc_id) AS keep_id, count(*) AS dup_count
 FROM documents GROUP BY 1
@@ -3331,26 +2937,6 @@ WITH tok AS (
 SELECT s.doc_id, s.bucket, round(s.v / n.norm, 4) AS weight
 FROM s JOIN n ON s.doc_id = n.doc_id
 WHERE s.v <> 0
-""",
-        "stratified_sample": """
-SELECT doc_id, lang, source, n_chars FROM (
-    SELECT doc_id, lang, source, n_chars,
-           row_number() OVER (PARTITION BY lang ORDER BY doc_id) AS rn
-    FROM documents
-) WHERE (rn - 1) % 10 = 0
-""",
-        "split_assignment": """
-WITH b AS (
-    SELECT lang, n_chars,
-           CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100
-               AS bucket
-    FROM documents
-)
-SELECT CASE WHEN bucket < 90 THEN 'train'
-            WHEN bucket < 95 THEN 'val'
-            ELSE 'test' END AS split,
-       lang, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS total_chars
-FROM b GROUP BY 1, 2
 """,
         "normalize_text_corpus": """
 WITH n AS (

@@ -226,6 +226,7 @@ class LocalResult:
         return self._table.num_rows
 
     def take(self, num: int) -> list:
+        _require_int("num", num, 0)
         return LocalResult(self._spark, self._table.slice(0, num), self.schema).collect()
 
     def head(self, n: "int | None" = None):
@@ -1215,21 +1216,22 @@ class Collection:
         if add is None:
             add, mat = schema.empty_table(), np.empty((0, dim))
         sids = add.column("vec_id").to_numpy()
-        gone = np.asarray(victims, np.int64)
-
-        def survivors(ids):
-            return ~np.isin(ids, gone)
-
+        # the victims grouped by the partition that holds each: only
+        # those partitions mask, every other one keeps all its rows
+        gone_vb, gone_mb = {}, {}
+        for v in np.asarray(victims, np.int64).tolist():
+            gone_vb.setdefault(vec_bucket_py(v), []).append(v)
+            gone_mb.setdefault(_mbucket_py(v), []).append(v)
         read = _reader(self.spark, cur)
-        old_vb = {vec_bucket_py(int(v)) for v in gone}
         add_vb = np.array([vec_bucket_py(int(s)) for s in sids], np.int64)
         add_mb = np.array([_mbucket_py(int(s)) for s in sids], np.int64)
         # {partition rel: (columns, decoded entry)} of every file written
         seeds = {}
         vecs = {}
-        for vb in sorted(old_vb | set(add_vb.tolist())):
+        for vb in sorted(gone_vb.keys() | set(add_vb.tolist())):
             (old,) = _vec_parts(read, dim, [vb])
-            keep, new = survivors(old[0]), add_vb == vb
+            keep = ~np.isin(old[0], gone_vb[vb]) if vb in gone_vb else slice(None)
+            new = add_vb == vb
             entry = tuple(
                 np.concatenate([o[keep], a])
                 for o, a in zip(old, _vec_entry(sids[new], mat[new], dim))
@@ -1238,13 +1240,14 @@ class Collection:
             vecs[spec] = pa.table({"vec_id": entry[0], "emb": _list_array(entry[1])})
             seeds[f"vecs/{spec}"] = (_VEC_COLUMNS, entry)
         meta = {}
-        old_mb = {_mbucket_py(int(v)) for v in gone}
-        for mb in sorted(old_mb | set(add_mb.tolist())):
+        for mb in sorted(gone_mb.keys() | set(add_mb.tolist())):
             rows = _meta_rows(read, info, [mb])
-            keep = survivors(rows.column("vec_id").to_numpy())
+            if mb in gone_mb:
+                gone = np.isin(rows.column("vec_id").to_numpy(), gone_mb[mb])
+                rows = rows.filter(pa.array(~gone))
             spec = f"mbucket={mb}"
             meta[spec] = pa.concat_tables(
-                [rows.filter(pa.array(keep)), add.filter(pa.array(add_mb == mb))]
+                [rows, add.filter(pa.array(add_mb == mb))]
             ).combine_chunks()
             seeds[f"meta/{spec}"] = (schema.names, _meta_entry(meta[spec], schema))
         new_ver = vn.commit_version(

@@ -1,27 +1,18 @@
-from .vector import cosine_similarity, dot_product, l2_distance, l2_normalize
+from .vector import cosine_similarity, dot_product, l2_distance
 from .where_dsl import (
     compile_where,
     compile_where_document,
     where_document_to_sql,
     where_to_sql,
 )
-from .text import (
-    punct_ratio,
-    regex_token_count,
-    stopword_ratio,
-    whitespace_tokens,
-    word_count,
-)
+from .text import stopword_ratio, whitespace_tokens, word_count
 
 __all__ = [
     "cosine_similarity",
     "dot_product",
     "l2_distance",
-    "l2_normalize",
     "whitespace_tokens",
     "word_count",
-    "regex_token_count",
-    "punct_ratio",
     "stopword_ratio",
     "compile_where",
     "compile_where_document",

@@ -16,9 +16,6 @@ from pyspark.sql import functions as F
 # Deterministic small stopword list (shared verbatim with the DuckDB oracles).
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it")
 
-# BPE-ish tokenizer regex: word runs, digit runs, single non-space symbols.
-TOKEN_REGEX = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"
-
 
 def whitespace_tokens(text: Column) -> Column:
     return F.split(text, " ")
@@ -76,19 +73,6 @@ def analyze_terms_py(terms, analyzer: str = "raw") -> tuple:
 
 def word_count(text: Column) -> Column:
     return F.size(whitespace_tokens(text))
-
-
-def regex_token_count(text: Column) -> Column:
-    return F.regexp_count(text, F.lit(TOKEN_REGEX))
-
-
-def punct_ratio(text: Column) -> Column:
-    """Fraction of characters that are not alphanumeric/space."""
-    n = F.length(text)
-    stripped = F.regexp_replace(text, "[^A-Za-z0-9 ]", "")
-    return F.when(n > 0, (n - F.length(stripped)) / n.cast("double")).otherwise(
-        F.lit(0.0)
-    )
 
 
 def stopword_ratio(text: Column) -> Column:

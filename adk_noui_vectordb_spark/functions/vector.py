@@ -55,23 +55,6 @@ def l2_distance(a: Column, b: Column) -> Column:
     )
 
 
-def l2_normalize(a: Column, norm: Column | None = None) -> Column:
-    """Unit-normalize a vector column.
-
-    HOT-PATH CALLERS MUST PASS ``norm`` AS A PRE-PROJECTED COLUMN:
-    expressions inlined into a HOF lambda re-evaluate once per element
-    (SCALE.md r6), so the default single-expression form recomputes the
-    full dot product for every component — O(d^2) per row. Project
-    ``withColumn("norm", sqrt(dot_product(v, v)))`` first and pass
-    ``F.col("norm")``. The one-shot form is kept for interactive use.
-    """
-    ad = _as_double(a)
-    if norm is None:
-        norm = F.sqrt(dot_product(ad, ad))
-    return F.transform(ad, lambda x: x / norm)
-
-
-
 # ------------------------------------------------------------ driver twins
 # The serving path scores on the driver in numpy. These twins repeat the
 # Catalyst folds above operation for operation (one column at a time,

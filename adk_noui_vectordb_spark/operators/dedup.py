@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import whitespace_tokens
+from ..functions.text import stopword_ratio, whitespace_tokens
 from ..sources.tables import load_table
 
 # MinHash parameters: k universal-hash permutations h_i(x) = (a_i*x + b_i) mod p
@@ -101,7 +101,7 @@ def _shingles(words: Column, n: int = 3) -> Column:
     ``words`` must be a PRE-PROJECTED split-array COLUMN: an inline
     ``split(text)`` here would re-evaluate once per sequence element —
     expressions inlined into a HOF lambda are outside subexpression
-    elimination (the lang_id_ngram O(n^2) finding, SCALE.md r6)."""
+    elimination (the O(n^2) finding of SCALE.md r6)."""
     k = F.size(words) - (n - 1)
     grams = F.transform(
         F.sequence(F.lit(1), F.greatest(k, F.lit(1))),
@@ -1762,25 +1762,41 @@ def dedup_simhash_pairs(
     ).filter(F.col("hamming") <= max_hamming)
 
 
+def _quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, quality) — heuristic document quality: 0.4 for a length
+    of 100 to 5000 chars, plus 0.3 x the stopword ratio and 0.3 x the
+    distinct-word ratio, rounded to 4 dp in-query (oracle parity)."""
+    d = load_table(spark, sf_dir, "documents")
+    words = whitespace_tokens(F.col("text"))
+    distinct_ratio = F.size(F.array_distinct(words)) / F.size(words).cast(
+        "double"
+    )
+    len_ok = (F.col("n_chars") >= 100) & (F.col("n_chars") <= 5000)
+    score = (
+        F.when(len_ok, 0.4).otherwise(0.0)
+        + stopword_ratio(F.col("text")) * 0.3
+        + distinct_ratio * 0.3
+    )
+    return d.select("doc_id", F.round(score, 4).alias("quality"))
+
+
 def dedup_canonical_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end near-dup resolution: cluster with connected components
     over the MinHash candidate graph, then keep the HIGHEST-QUALITY
     member of each cluster (quality-ranked canonical selection — what a
     real pipeline keeps, rather than blindly taking min doc_id).
 
-    Composition of the engine's own operators: ``dedup_connected_components``
-    (Pregel min-label) |x| ``quality_score`` on doc_id, then one ranking
-    window per cluster. The rank and the member count share the SAME
-    cluster_id partitioning, so Catalyst reuses one shuffle for both
-    window functions. Ranking keys are the ROUNDED quality (already
+    ``dedup_connected_components`` (Pregel min-label) |x|
+    ``_quality_score`` on doc_id, then one ranking window per cluster.
+    The rank and the member count share the SAME cluster_id
+    partitioning, so Catalyst reuses one shuffle for both window
+    functions. Ranking keys are the ROUNDED quality (already
     oracle-stable) with doc_id tie-break — deterministic cross-engine.
     """
     from pyspark.sql.window import Window
 
-    from .textops import quality_score
-
     cc = dedup_connected_components(spark, sf_dir)
-    q = quality_score(spark, sf_dir).select("doc_id", "quality")
+    q = _quality_score(spark, sf_dir)
     wrank = Window.partitionBy("cluster_id").orderBy(
         F.desc("quality"), F.asc("doc_id")
     )
@@ -1887,9 +1903,8 @@ def dedup_substring_rewrite(
       text is the kept tokens rejoined in order.
 
     Returns (doc_id, n_tokens, n_removed, clean_md5) — the content hash
-    of the rewritten doc (the c4_line_filter discipline; emitting the
-    full rewritten text would make the correctness hash dominated by
-    one fat column).
+    of the rewritten doc (emitting the full rewritten text would make
+    the correctness hash dominated by one fat column).
 
     Scale shape (100 TB): windows explode map-side from the
     pre-projected split array; the duplicate detector is ONE hash
@@ -2770,7 +2785,7 @@ def fsck_gated_pair(spark: SparkSession, sf_dir: str) -> list:
     its detector. Returns (check, ok, detail); never raises."""
     import os
 
-    from .invindex import DOCS_SCHEMA, build_text_index
+    from .invindex import DOCS_SCHEMA, build_text_index, doc_term_counts
 
     cur_mh = build_minhash_index(spark, sf_dir)
     cur_tx = build_text_index(spark, sf_dir)
@@ -2791,8 +2806,6 @@ def fsck_gated_pair(spark: SparkSession, sf_dir: str) -> list:
         # tokenizes to zero terms (such docs legitimately index nowhere
         # in the lexical index while still carrying a signature) —
         # classified against the corpus; everything else is drift.
-        from .textops import doc_term_counts
-
         docs_src = load_table(spark, sf_dir, "documents").select(
             "doc_id", "text"
         )

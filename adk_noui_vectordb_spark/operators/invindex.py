@@ -143,15 +143,37 @@ POSITIONS_SCHEMA = "term string, doc_id bigint, pos int, tbucket int"
 DOCS_SCHEMA = "doc_id bigint, dl int, tbuckets array<int>, dbucket int"
 
 
+def doc_term_counts(
+    docs: DataFrame, with_dl: bool = False, analyzer: str = "raw"
+) -> DataFrame:
+    """(doc_id, term, tf[, dl]) — per-document term frequencies, the one
+    tokenization the index build, its incremental update and
+    ``dedup.fsck_gated_pair`` share, so their term universes cannot
+    drift apart. One explode + one map-side-combined groupBy; ``with_dl``
+    rides the doc length along (max of a per-doc constant) for
+    posting-row denormalization. ``analyzer`` selects the token
+    pipeline (functions/text.py analyzed_tokens — 'raw' splits on single
+    spaces)."""
+    from ..functions.text import analyzed_tokens
+
+    tokens = analyzed_tokens(F.col("text"), analyzer)
+    if with_dl:
+        base = docs.select(
+            "doc_id", F.size(tokens).alias("dl"), F.explode(tokens).alias("term")
+        )
+        return base.groupBy("doc_id", "term").agg(
+            F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl")
+        )
+    base = docs.select("doc_id", F.explode(tokens).alias("term"))
+    return base.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
+
+
 def postings_frame(
     spark: SparkSession, sf_dir: str, analyzer: str = "raw"
 ) -> DataFrame:
-    """(tbucket, term, doc_id, tf, dl) — the index kernel: the SHARED
-    ``doc_term_counts`` aggregation (one explode, one map-side-combined
-    groupBy; dl denormalized) plus the bucket projection. ``analyzer``
-    selects the token pipeline (r12)."""
-    from .textops import doc_term_counts
-
+    """(tbucket, term, doc_id, tf, dl) — the index kernel:
+    ``doc_term_counts`` with dl denormalized, plus the bucket
+    projection. ``analyzer`` selects the token pipeline (r12)."""
     docs = load_table(spark, sf_dir, "documents")
     return doc_term_counts(docs, with_dl=True, analyzer=analyzer).select(
         term_bucket_expr(F.col("term")).alias("tbucket"),
@@ -1009,7 +1031,7 @@ def update_text_index(
     partitions, "rewrite every bucket the batch's terms touch" would
     degenerate to rewriting the whole postings table for any diverse
     batch — tools/bench_incremental_updates.py):
-    1. batch postings via the shared ``doc_term_counts`` kernel;
+    1. batch postings via ``doc_term_counts``, the build's kernel;
     2. the ``docs/`` reverse map names, for every RE-submitted doc, the
        term buckets its OLD postings occupy (partition-pruned by the
        batch's literal dbucket set); a pure-ADD batch has none;
@@ -1037,8 +1059,6 @@ def update_text_index(
     as the corpus of record, exactly as the reference treats its
     ChromaDB collection.
     """
-    from .textops import doc_term_counts
-
     cur = build_text_index(spark, sf_dir, analyzer)
     root = os.path.dirname(cur)
     # the RECORDED analyzer is authoritative: an update tokenizing with

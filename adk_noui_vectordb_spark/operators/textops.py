@@ -1,8 +1,10 @@
-"""Text-analysis operators over the documents corpus.
+"""Text operators over the documents corpus: line dedup, sequence
+packing, PII redaction, unigram/bigram LM scoring, mixture sampling, BPE
+pair counts and encoding, and text normalization.
 
-Extended LLM-pipeline surface (north star) built on the same rule-pipeline
-style as the reference's diagnostics (lsp_tool.py:122-278): pure built-in
-string expressions, no Python in the row path.
+Built in the same rule-pipeline style as the reference's diagnostics
+(lsp_tool.py:122-278): pure built-in string expressions, no Python in the
+row path.
 
 Every numeric derived from float math is rounded in-query (oracle parity).
 """
@@ -12,551 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import (
-    TOKEN_REGEX,
-    punct_ratio,
-    stopword_ratio,
-    whitespace_tokens,
-    word_count,
-)
+from ..functions.text import whitespace_tokens, word_count
 from ..sources.tables import load_table
-
-
-def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document stats: chars, words, distinct words, avg word length."""
-    d = load_table(spark, sf_dir, "documents")
-    words = whitespace_tokens(F.col("text"))
-    total_word_len = F.aggregate(
-        F.transform(words, lambda w: F.length(w).cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return d.select(
-        "doc_id",
-        F.length("text").alias("n_chars_actual"),
-        word_count(F.col("text")).alias("n_words"),
-        F.size(F.array_distinct(words)).alias("n_distinct_words"),
-        F.round(total_word_len / F.size(words), 4).alias("avg_word_len"),
-    )
-
-
-def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Whitespace tokens + BPE-ish regex token count per document
-    (the intended-but-unused tiktoken budget, indexing_agent.py:76)."""
-    d = load_table(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        word_count(F.col("text")).alias("ws_tokens"),
-        F.regexp_count("text", F.lit(TOKEN_REGEX)).cast("int").alias("regex_tokens"),
-    )
-
-
-def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heuristic document quality: length band + stopword ratio + repetition.
-
-    The standard pre-training quality gates (length, symbol ratio, stopword
-    presence, dedup-within-doc) as one codegen'd projection.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    words = whitespace_tokens(F.col("text"))
-    n = F.size(words)
-    distinct_ratio = F.size(F.array_distinct(words)) / n.cast("double")
-    len_ok = (F.col("n_chars") >= 100) & (F.col("n_chars") <= 5000)
-    score = (
-        F.when(len_ok, 0.4).otherwise(0.0)
-        + stopword_ratio(F.col("text")) * 0.3
-        + distinct_ratio * 0.3
-    )
-    return d.select(
-        "doc_id",
-        F.round(punct_ratio(F.col("text")), 4).alias("punct_ratio"),
-        F.round(stopword_ratio(F.col("text")), 4).alias("stopword_ratio"),
-        F.round(distinct_ratio, 4).alias("distinct_word_ratio"),
-        F.round(score, 4).alias("quality"),
-    )
-
-
-def lang_id_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic character-bigram language fingerprint.
-
-    A real lang-ID model needs per-language n-gram profiles; the engine-side
-    shape is what matters here: lowercase, strip non-letters, explode char
-    bigrams, pick the modal bigram per document. Pure SQL in both engines.
-
-    Two measured plan fixes (r6, 9.3 s -> 0.46 s at sf0.1): the stripped
-    ``letters`` string is PROJECTED once per row before the HOF — inlined
-    into the lambda, the full-text regexp re-evaluated per sequence
-    element, turning an O(n) derivation into O(n^2) per document — and
-    the single-row-group scan is fan_out so the explode stage does not
-    serialize on one core.
-    """
-    from ..sources.tables import fan_out
-
-    d = fan_out(load_table(spark, sf_dir, "documents"))
-    d = d.select(
-        "doc_id",
-        F.regexp_replace(F.lower(F.col("text")), "[^a-z]", "").alias("letters"),
-    )
-    letters = F.col("letters")
-    bigrams = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(letters) - 1, F.lit(1))),
-        lambda i: letters.substr(i, F.lit(2)),
-    )
-    exploded = d.select("doc_id", F.explode(bigrams).alias("bigram")).filter(
-        F.length("bigram") == 2
-    )
-    counts = exploded.groupBy("doc_id", "bigram").agg(F.count(F.lit(1)).alias("c"))
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("doc_id").orderBy(F.desc("c"), F.asc("bigram"))
-    return (
-        counts.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", F.col("bigram").alias("top_bigram"), F.col("c").alias("bigram_count"))
-    )
-
-
-def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Content fingerprints: full-text md5 + sorted-vocabulary signature md5
-    (word-order-insensitive), the change-detection hash of the reference
-    (indexing_agent.py:28-31) plus a canonicalized variant."""
-    d = load_table(spark, sf_dir, "documents")
-    words = whitespace_tokens(F.col("text"))
-    vocab_sig = F.array_join(F.array_sort(F.array_distinct(words)), " ")
-    return d.select(
-        "doc_id",
-        F.md5("text").alias("content_hash"),
-        F.md5(vocab_sig).alias("vocab_hash"),
-    )
-
-
-def diag_generic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Generic text diagnostics (lsp_tool.py:243-278) over documents:
-    overlong doc, trailing whitespace, very short doc. One row per
-    (doc, rule) firing, built by stacking rule predicates."""
-    d = load_table(spark, sf_dir, "documents")
-    rules = d.select(
-        "doc_id",
-        F.when(F.length("text") > 500, F.lit("overlong")).alias("r1"),
-        F.when(F.col("text") != F.rtrim(F.col("text")), F.lit("trailing_ws")).alias(
-            "r2"
-        ),
-        F.when(F.length("text") < 60, F.lit("too_short")).alias("r3"),
-    )
-    stacked = rules.select(
-        "doc_id",
-        F.explode(F.array_compact(F.array("r1", "r2", "r3"))).alias("rule"),
-    )
-    return stacked.withColumn("severity", F.lit("warning"))
-
-
-def curate_corpus(
-    spark: SparkSession, sf_dir: str, min_quality: float = 0.5
-) -> DataFrame:
-    """End-to-end training-data curation: quality gate + exact dedup.
-
-    The composed flow every LLM-data pipeline runs before tokenization:
-
-        documents -> quality_score >= threshold        (signal filter)
-                  -> keep ONE doc per exact text hash  (dedup, min doc_id)
-
-    Built by composing the engine's own operators — quality_score and the
-    dedup keep-list are each one aggregation pass, joined on doc_id/hash.
-    At 100 TB both sides shuffle once; the keep-list join is a semi join on
-    the hash (no row multiplication).
-    """
-    q = quality_score(spark, sf_dir).select("doc_id", "quality")
-    d = load_table(spark, sf_dir, "documents")
-    keep = (
-        d.select(F.md5("text").alias("text_hash"), "doc_id")
-        .groupBy("text_hash")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    return (
-        d.join(q, "doc_id")
-        .join(keep, "doc_id", "left_semi")
-        .filter(F.col("quality") >= min_quality)
-        .select("doc_id", "lang", "source", "n_chars", "quality")
-    )
-
-
-def stratified_sample(
-    spark: SparkSession, sf_dir: str, keep_one_in: int = 10
-) -> DataFrame:
-    """Deterministic stratified downsampling: keep every Nth document per
-    language, by doc_id order within the stratum.
-
-    Training pipelines downsample over-represented strata; doing it by
-    ranked position (not rand()) keeps the sample reproducible across runs
-    and engines. One shuffle (the ranking window on lang).
-    """
-    from pyspark.sql.window import Window
-
-    d = load_table(spark, sf_dir, "documents")
-    w = Window.partitionBy("lang").orderBy("doc_id")
-    return (
-        d.withColumn("rank_in_lang", F.row_number().over(w))
-        .filter((F.col("rank_in_lang") - 1) % keep_one_in == 0)
-        .select("doc_id", "lang", "source", "n_chars")
-    )
-
-
-def split_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hash-based train/val/test split (90/5/5) with per-split stats.
-
-    The split key is md5(doc_id) — content-independent, stable under
-    re-partitioning and appends, the standard way to split at 100 TB (a
-    rand() split changes membership every run; a modulo-on-id split skews
-    if ids correlate with time/source).
-    """
-    d = load_table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint") % 100
-    )
-    split = (
-        F.when(bucket < 90, "train").when(bucket < 95, "val").otherwise("test")
-    )
-    return (
-        d.withColumn("split", split)
-        .groupBy("split", "lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").alias("total_chars"),
-        )
-    )
-
-
-def winnow_fingerprints(
-    spark: SparkSession, sf_dir: str, k: int = 5, window: int = 4
-) -> DataFrame:
-    """Winnowing document fingerprints (Schleimer et al., MOSS): hash every
-    char k-gram, keep the MINIMUM hash of each sliding window of `window`
-    consecutive positions, emit the distinct minima.
-
-    The classic formulation uses a sequential rolling (Rabin-Karp) hash;
-    the parallel-friendly equivalent hashes each k-gram directly (same
-    output set, no recurrence) so the whole op is explode + frame-min —
-    and integer MIN over a frame is association-free, hence bit-identical
-    in every engine. Guarantees: two documents sharing a substring of
-    length >= window+k-1 share at least one fingerprint.
-    """
-    from pyspark.sql.window import Window as W
-
-    from ..sources.tables import fan_out
-    from .dedup import md5_long
-
-    # ~1 md5 per character of corpus text on the pre-shuffle side of the
-    # frame-min — fan_out so the single-row-group scan does not serialize
-    # it on one core (measured 3.6 s -> 0.7 s at sf0.1, SCALE.md r6)
-    d = fan_out(load_table(spark, sf_dir, "documents"))
-    # (pos, gram) pairs via sequence+transform: gram i = text[i : i+k]
-    grams = d.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(
-                    F.lit(1), F.greatest(F.length("text") - (k - 1), F.lit(1))
-                ),
-                lambda i: F.struct(
-                    i.alias("pos"),
-                    F.col("text").substr(i, F.lit(k)).alias("gram"),
-                ),
-            )
-        ).alias("g"),
-    ).select("doc_id", F.col("g.pos").alias("pos"), md5_long(F.col("g.gram")).alias("h"))
-    w = (
-        W.partitionBy("doc_id")
-        .orderBy("pos")
-        .rowsBetween(W.currentRow, window - 1)
-    )
-    n = W.partitionBy("doc_id")
-    winnowed = grams.select(
-        "doc_id",
-        "pos",
-        F.min("h").over(w).alias("fp"),
-        F.count(F.lit(1)).over(n).alias("n"),
-    ).filter(F.col("pos") <= F.col("n") - (window - 1))
-    return winnowed.select("doc_id", F.col("fp").alias("fingerprint")).distinct()
-
-
-def doc_term_counts(
-    docs: DataFrame, with_dl: bool = False, analyzer: str = "raw"
-) -> DataFrame:
-    """THE shared per-document term-frequency kernel — every term-count
-    consumer (tfidf, token entropy, the inverted-index build AND its
-    incremental update) derives from this one function so their
-    tokenization can never drift apart (review r7: four hand-rolled
-    copies had to stay identical for the shared oracle tokenization to
-    hold). One explode + one map-side-combined groupBy; ``with_dl``
-    rides the doc length along (max of a per-doc constant) for
-    posting-row denormalization. ``analyzer`` selects the token
-    pipeline (functions/text.py analyzed_tokens — 'raw' is verbatim
-    the historical behavior)."""
-    from ..functions.text import analyzed_tokens
-
-    tokens = analyzed_tokens(F.col("text"), analyzer)
-    if with_dl:
-        base = docs.select(
-            "doc_id", F.size(tokens).alias("dl"), F.explode(tokens).alias("term")
-        )
-        return base.groupBy("doc_id", "term").agg(
-            F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl")
-        )
-    base = docs.select("doc_id", F.explode(tokens).alias("term"))
-    return base.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-
-
-def tfidf_top_terms(spark: SparkSession, sf_dir: str, top_n: int = 3) -> DataFrame:
-    """Top-N TF-IDF terms per document.
-
-    tf = term count in doc; idf = ln(N / df). Two aggregations (term
-    counts, document frequencies) + a broadcastable doc-count scalar + a
-    ranking window — the vocabulary side (df) is tiny relative to the
-    corpus and the tf aggregation is the only corpus-sized shuffle.
-    Ranking uses the ROUNDED score with a term tie-break so the top-N cut
-    is deterministic cross-engine.
-    """
-    from pyspark.sql.window import Window as W
-
-    d = load_table(spark, sf_dir, "documents")
-    tf = doc_term_counts(d)
-    # (doc, term) keys of the counts frame are distinct by construction,
-    # so df comes from the SAME aggregation — no second explode pass.
-    df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    n_docs = d.count()  # scalar; enters the plan as a literal
-    scored = tf.join(df_, "term").select(
-        "doc_id",
-        "term",
-        F.round(
-            F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df")), 4
-        ).alias("tfidf"),
-    )
-    w = W.partitionBy("doc_id").orderBy(F.desc("tfidf"), F.asc("term"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_n)
-        .select("doc_id", "term", "tfidf", F.col("rank").cast("int").alias("rank"))
-    )
-
-
-def quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style repetition quality gates (Rae et al. 2021 §A1.1):
-    duplicate-word fraction, most-frequent-2-gram fraction, duplicate-3-gram
-    fraction. Documents dominated by repeated n-grams are boilerplate /
-    spam and get filtered before pre-training.
-
-    Shapes: the two within-document fractions are pure array HOFs (no
-    shuffle); the top-2-gram mode is a single Arrow ``mapInPandas`` pass
-    (narrow, no shuffle) — the explode + two-groupBy formulation spent
-    ~1.6 s at sf0.1 just BUILDING the gram strings in interpreted HOF
-    lambdas (same finding as dedup._minhash_wide: Python-with-Arrow beats
-    interpreted expression trees for per-doc token kernels). Counts are
-    integers and the fraction is one int/int IEEE division, so the Arrow
-    kernel is value-identical to the SQL formulation the oracle runs.
-
-    Values are emitted as RAW doubles, deliberately unrounded: each is one
-    integer/integer division, which is bit-identical in every IEEE engine —
-    no float-order sensitivity, and rounding would only ADD the .xxx5
-    cross-engine tie hazard (SURVEY.md §5 rounding rules).
-    """
-    from .dedup import _shingles
-
-    # NOT fan_out here (measured r6): the two branches join on doc_id, so
-    # a repartition pushes the full text column through an extra exchange
-    # on BOTH sides — 0.52 s -> 0.61 s at sf0.1. The kernel is cheap
-    # enough that the single-task scan wins.
-    d = load_table(spark, sf_dir, "documents")
-    dw = d.select(
-        "doc_id", whitespace_tokens(F.col("text")).alias("w")
-    )
-    words = F.col("w")
-    n = F.size(words)
-    grams3 = _shingles(words, 3)
-    # _shingles dedups; the duplicate fraction needs the RAW total too —
-    # which is just the gram-window count greatest(n-2, 1): never build
-    # the raw 3-gram strings only to F.size them (an interpreted HOF over
-    # every row that measured ~0.3 s of the query at sf0.1).
-    n_raw3 = F.greatest(n - 2, F.lit(1))
-    within = dw.select(
-        "doc_id",
-        (F.lit(1.0) - F.size(F.array_distinct(words)) / n.cast("double")).alias(
-            "dup_word_frac"
-        ),
-        (
-            F.lit(1.0)
-            - F.size(grams3) / n_raw3.cast("double")
-        ).alias("dup_3gram_frac"),
-    )
-    def top2gram(batches):
-        from collections import Counter
-
-        import pandas as pd
-
-        for pdf in batches:
-            ids, fracs = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                # same token/gram construction as the HOF form: split on
-                # single spaces (empties kept), m = greatest(n-1, 1)
-                # windows, the n=1 window degenerating to the lone word
-                w = text.split(" ")
-                m = max(len(w) - 1, 1)
-                c = Counter(" ".join(w[i : i + 2]) for i in range(m))
-                ids.append(doc_id)
-                fracs.append(max(c.values()) / float(m))
-            yield pd.DataFrame({"doc_id": ids, "top_2gram_frac": fracs})
-
-    top2 = d.select("doc_id", "text").mapInPandas(
-        top2gram, "doc_id bigint, top_2gram_frac double"
-    )
-    return within.join(top2, "doc_id").select(
-        "doc_id", "dup_word_frac", "top_2gram_frac", "dup_3gram_frac"
-    )
-
-
-# Driver-side budget for the collected benchmark text. Real eval sets are
-# MBs, so the collect path is the default; but the TESTDATA parameterizes
-# the "benchmark" as 2% of the corpus, which grows linearly with SF — above
-# this budget the collect would become the one driver-side bottleneck in
-# the package (VERDICT r5 item 2), so the operator falls back to the fully
-# distributed join formulation instead of collecting.
-DECONTAM_COLLECT_BUDGET_BYTES = 64 * 1024 * 1024
-
-# The measured benchmark-slice byte size is memoized per
-# (session, dataset) via memo.session_memo: the gate decision is a
-# property of the dataset, not of the call, so repeated invocations
-# (bench best-of-N, the oracle sweep) should not re-run the measuring
-# aggregate every time — and the fingerprint in the memo key re-measures
-# if the testdata is regenerated in-session (ADVICE r6).
-
-
-def _shingle_array(words: "F.Column", shingle_words: int) -> "F.Column":
-    """Distinct ``shingle_words``-word shingles as an array column — the
-    exact SQL twin of the kernel's ``doc_shingles`` (split on single
-    spaces keeping empties, greatest(n-(k-1), 1) windows, short docs
-    degenerating to one whole-doc shingle; F.slice truncates at the end
-    exactly like a Python slice).
-
-    ``words`` must be a PRE-PROJECTED split array COLUMN, not an inline
-    ``F.split`` expression: expressions inlined into a HOF lambda
-    re-evaluate once PER SEQUENCE ELEMENT (subexpression elimination does
-    not cross the lambda boundary — the lang_id_ngram O(n^2) finding,
-    SCALE.md r6), which would make this quadratic in document length."""
-    k = F.greatest(F.size(words) - (shingle_words - 1), F.lit(1))
-    grams = F.transform(
-        F.sequence(F.lit(1), k),
-        lambda i: F.concat_ws(" ", F.slice(words, i, shingle_words)),
-    )
-    return F.array_distinct(grams)
-
-
-def decontaminate_corpus(
-    spark: SparkSession,
-    sf_dir: str,
-    shingle_words: int = 8,
-    collect_budget_bytes: int = DECONTAM_COLLECT_BUDGET_BYTES,
-) -> DataFrame:
-    """Benchmark decontamination: flag training documents sharing any
-    ``shingle_words``-word shingle with the held-out benchmark set — the
-    exact-substring-overlap rule GPT-3/The Pile used to decontaminate
-    training data against eval sets.
-
-    The benchmark slice here is doc_id % 50 == 0 (deterministic stand-in
-    for MMLU et al.). Scale shape, two regimes gated on the benchmark
-    slice's measured byte size (one cheap pushed-down aggregate):
-
-    - WITHIN ``collect_budget_bytes`` (the real-world case — eval sets
-      are MBs BY DEFINITION): the distinct benchmark shingle set is
-      collected once and broadcast; the candidate side is ONE narrow
-      Arrow pass computing per-doc overlap — ZERO shuffles anywhere
-      (the explode+join formulation spent ~1.5 s at sf0.1 building
-      shingle strings in interpreted HOF lambdas; same Arrow-beats-HOF
-      finding as dedup._minhash_wide).
-    - ABOVE the budget (testdata defines the benchmark as 2% of the
-      corpus, so at 100x the collect would grow linearly — VERDICT r5):
-      nothing is collected; benchmark shingles stay distributed, the
-      candidate side explodes its distinct shingles and joins (size-gated
-      broadcast via maybe_broadcast: hinted only if the benchmark slice
-      is provably small, else AQE picks shuffle-hash), then one groupBy
-      on doc_id over the hit rows only. Both regimes compute the same
-      integer overlap counts (pinned by a unit test).
-
-    Returns (doc_id, n_hits): contaminated docs with the number of
-    distinct overlapping shingles.
-    """
-    from ..memo import session_memo
-
-    d = load_table(spark, sf_dir, "documents")
-    bench_docs = d.filter(F.col("doc_id") % 50 == 0)
-    cand_docs = d.filter(F.col("doc_id") % 50 != 0).select("doc_id", "text")
-    bench_bytes = session_memo(
-        spark,
-        sf_dir,
-        "decontam_bench_bytes",
-        lambda: (
-            bench_docs.agg(F.sum(F.octet_length("text")).alias("b"))
-            .collect()[0]["b"]
-            or 0
-        ),
-    )
-
-    if bench_bytes > collect_budget_bytes:
-        from ..sources.tables import maybe_broadcast
-
-        sh = _shingle_array(F.col("w"), shingle_words)
-        bench_sh = (
-            bench_docs.select(F.split(F.col("text"), " ").alias("w"))
-            .select(F.explode(sh).alias("shingle"))
-            .distinct()
-        )
-        cand_sh = cand_docs.select(
-            "doc_id", F.split(F.col("text"), " ").alias("w")
-        ).select("doc_id", F.explode(sh).alias("shingle"))
-        # estimate of the distinct-shingle side's in-memory size: the raw
-        # slice bytes upper-bound the distinct shingle text (each word
-        # appears in <= shingle_words shingles, distinct removes repeats);
-        # gate the hint on that measurable proxy rather than hoping
-        return (
-            cand_sh.join(
-                maybe_broadcast(bench_sh, bench_bytes * shingle_words), "shingle"
-            )
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n_hits"))
-        )
-
-    def doc_shingles(text: str) -> set:
-        # same construction as _shingle_array: split on single spaces
-        # (empties kept), greatest(n - (k-1), 1) windows, short docs
-        # degenerating to one whole-doc shingle
-        w = text.split(" ")
-        m = max(len(w) - (shingle_words - 1), 1)
-        return {" ".join(w[i : i + shingle_words]) for i in range(m)}
-
-    bench: set = set()
-    for r in bench_docs.select("text").collect():
-        bench.update(doc_shingles(r["text"]))
-    bc = spark.sparkContext.broadcast(bench)
-
-    def hits(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            b = bc.value
-            ids, ns = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                k = len(doc_shingles(text) & b)
-                if k:
-                    ids.append(doc_id)
-                    ns.append(k)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "n_hits": pd.Series(ns, dtype="int64"),
-                }
-            )
-
-    return cand_docs.mapInPandas(hits, "doc_id bigint, n_hits bigint")
 
 
 def line_dedup_corpus(
@@ -636,7 +95,6 @@ def pack_sequences(
     arithmetic (exact cross-engine). Output is the per-sequence manifest
     (doc span + exact token total) a trainer's data loader consumes.
     """
-    from ..functions.text import word_count
     from pyspark.sql.window import Window
 
     d = load_table(spark, sf_dir, "documents").select(
@@ -862,43 +320,6 @@ def lm_bigram_score(
     )
 
 
-def split_train_holdout(
-    spark: SparkSession, sf_dir: str, holdout_pct: int = 10
-) -> DataFrame:
-    """Deterministic content-keyed train/holdout split — the
-    reproducibility primitive every evaluation pipeline needs BEFORE
-    decontamination means anything: a doc's split must be a pure
-    function of its identity (md5 bucket of doc_id, the house
-    md5-derived-constant discipline), never of sampling state, corpus
-    order, or partition layout — so re-runs, backfills, and incremental
-    ingests all route the same document to the same side. bucket =
-    md5_long(doc_id) % 100; bucket < holdout_pct → 'holdout'.
-
-    Returns per (split, lang) audit stats (n_docs, total_chars) — the
-    summary a split publishes so downstream consumers can verify the
-    holdout fraction landed where the hash says it must.
-
-    100 TB shape: one codegen'd projection + one map-side-combined
-    aggregate on a 2×|langs| key space; the split column itself is the
-    partition-pruning key a real deployment writes the corpus by."""
-    from .dedup import md5_long
-
-    d = load_table(spark, sf_dir, "documents")
-    bucket = md5_long(F.col("doc_id").cast("string")) % 100
-    split = F.when(bucket < holdout_pct, F.lit("holdout")).otherwise(
-        F.lit("train")
-    )
-    return (
-        d.select(split.alias("split"), "lang", "n_chars")
-        .groupBy("split", "lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").alias("total_chars"),
-        )
-        .orderBy("split", "lang")
-    )
-
-
 def mixture_sample(
     spark: SparkSession, sf_dir: str, token_budget: int = 5000
 ) -> DataFrame:
@@ -910,8 +331,8 @@ def mixture_sample(
     self-contained; a real recipe passes a weight table (it would enter
     the same broadcast path). Selection within a source is greedy by
     md5(doc_id) order — a content-independent deterministic shuffle that
-    is stable under repartitioning and appends (the split_assignment
-    convention) — overflowing the quota by at most one document.
+    is stable under repartitioning and appends — overflowing the quota
+    by at most one document.
 
     Scale shape: the quota table is #sources rows (broadcast); the
     cumulative-token window partitions BY SOURCE (parallel across
@@ -1057,46 +478,6 @@ def tokenize_bpe_encode(
     )
 
 
-def curate_corpus_full(
-    spark: SparkSession,
-    sf_dir: str,
-    min_quality: float = 0.5,
-    max_nll_micro: int = 9_000_000,
-) -> DataFrame:
-    """The assembled pre-training curation gate: heuristic quality AND
-    LM-perplexity AND exact-dedup canonicality, in one pass — the
-    three-filter pipeline (C4 heuristics -> CCNet LM filter -> dedup)
-    every production corpus runs, composed from this engine's own
-    operators.
-
-    Scale shape: three independent branches over the same scan (each
-    individually shuffle-light, see their own entries), joined on
-    doc_id — balanced keys, no fanout; the dedup keep-list enters as a
-    SEMI join. The perplexity threshold is in integer micro-nats
-    (tie-free, see lm_perplexity_score).
-    """
-    q = quality_score(spark, sf_dir).select("doc_id", "quality")
-    p = lm_perplexity_score(spark, sf_dir).select("doc_id", "nll_micro")
-    d = load_table(spark, sf_dir, "documents")
-    keep = (
-        d.select(F.md5("text").alias("text_hash"), "doc_id")
-        .groupBy("text_hash")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    return (
-        d.select("doc_id", "lang", "source")
-        .join(q, "doc_id")
-        .join(p, "doc_id")
-        .join(keep, "doc_id", "left_semi")
-        .filter(
-            (F.col("quality") >= min_quality)
-            & (F.col("nll_micro") <= max_nll_micro)
-        )
-        .select("doc_id", "lang", "source", "quality", "nll_micro")
-    )
-
-
 def normalize_text_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical text normalization — the pass every dedup/tokenize
     stage assumes has already happened (CCNet/Gopher preprocessing):
@@ -1121,381 +502,4 @@ def normalize_text_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         collapsed.alias("norm_text"),
         F.size(whitespace_tokens(F.col("text"))).alias("n_tokens_raw"),
         F.size(whitespace_tokens(collapsed)).alias("n_tokens_norm"),
-    )
-
-
-def doc_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document Shannon entropy of the token distribution — the
-    diversity quality signal (low entropy = repetitive/templated text,
-    high = diverse vocabulary) complementing quality_repetition's
-    max-frequency view with the full-distribution statistic.
-
-    Scale shape: one explode + ONE map-side-combined groupBy(doc, term)
-    for the within-doc counts, then a doc-level reduction sharing the
-    doc_id shuffle — no window, no self-join. Each term's contribution
-    ``-p*ln(p)`` (>= 0) is floor-scaled to integer micro-nats BEFORE
-    the sum (the lm_perplexity_score discipline: identical doubles
-    floor identically; integer sums are order-independent on any
-    engine), so ``entropy_micro`` is a deterministic floor
-    underestimate of H by < n_distinct micro-nats.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    counts = doc_term_counts(d).withColumnRenamed("tf", "c")
-    totals = counts.groupBy("doc_id").agg(
-        F.sum("c").alias("n_tokens"), F.count(F.lit(1)).alias("n_distinct")
-    )
-    p = F.col("c").cast("double") / F.col("n_tokens")
-    contrib = F.floor(-(p * F.log(p)) * 1e6).cast("bigint")
-    return (
-        counts.join(totals, "doc_id")
-        .select("doc_id", "n_tokens", "n_distinct", contrib.alias("tc"))
-        .groupBy("doc_id", "n_tokens", "n_distinct")
-        .agg(F.sum("tc").alias("entropy_micro"))
-        .select(
-            "doc_id",
-            "n_tokens",
-            F.col("n_distinct").cast("bigint").alias("n_distinct"),
-            "entropy_micro",
-        )
-    )
-
-
-def gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Gopher repetition/quality filter rules (Rae et al. 2021,
-    arXiv:2112.11446 Table A1) as one codegen'd projection — the named
-    heuristic battery production corpora are actually cleaned with,
-    complementing the generic ``quality_score``. Every rule is
-    evaluated in INTEGER arithmetic (cross-multiplied thresholds, no
-    float ratios), so the flags hash identically on any engine:
-
-    - ``wc_ok``: 50 <= word count <= 100000
-    - ``mwl_ok``: mean word length in [3, 10]  (3*wc <= chars <= 10*wc)
-    - ``sym_ok``: (# of '#' or ellipsis tokens) / wc <= 0.1
-    - ``bullet_ok``: lines starting with a bullet <= 90% of lines
-    - ``ellipsis_ok``: lines ending with '...' <= 30% of lines
-    - ``stop_ok``: contains >= 2 distinct common-stopword hits
-    - ``keep``: AND of all six (the Gopher page-level verdict)
-
-    Scale: one narrow projection over documents — no explode survives
-    the plan (HOF aggregates fold arrays in place), no shuffle at all.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    words = F.split(F.col("text"), " ")
-    wc = F.size(words)
-    chars = F.aggregate(
-        F.transform(words, lambda w: F.length(w)),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    sym = F.size(
-        F.filter(
-            words,
-            lambda w: w.startswith("#") | w.contains("..."),
-        )
-    )
-    lines = F.split(F.col("text"), "\n")
-    nlines = F.size(lines)
-    bullets = F.size(
-        F.filter(
-            lines,
-            lambda ln: ln.startswith("- ")
-            | ln.startswith("* ")
-            | ln.startswith("• "),
-        )
-    )
-    ell_lines = F.size(F.filter(lines, lambda ln: ln.endswith("...")))
-    low = F.concat(F.lit(" "), F.lower(F.col("text")), F.lit(" "))
-    stop_hits = None
-    for w in ("the", "a", "be", "to", "of", "and", "that", "have", "with"):
-        hit = F.when(low.contains(f" {w} "), 1).otherwise(0)
-        stop_hits = hit if stop_hits is None else stop_hits + hit
-    return d.select(
-        "doc_id",
-        ((wc >= 50) & (wc <= 100000)).alias("wc_ok"),
-        ((3 * wc <= chars) & (chars <= 10 * wc)).alias("mwl_ok"),
-        (10 * sym <= wc).alias("sym_ok"),
-        (10 * bullets <= 9 * nlines).alias("bullet_ok"),
-        (10 * ell_lines <= 3 * nlines).alias("ellipsis_ok"),
-        (stop_hits >= 2).alias("stop_ok"),
-    ).withColumn(
-        "keep",
-        F.col("wc_ok")
-        & F.col("mwl_ok")
-        & F.col("sym_ok")
-        & F.col("bullet_ok")
-        & F.col("ellipsis_ok")
-        & F.col("stop_ok"),
-    )
-
-
-def c4_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The C4 cleaning pass (Raffel et al. 2020, arXiv:1910.10683 §2.2)
-    as a per-FILE relational summary over the multi-line derived corpus:
-    lines are kept iff they end in terminal punctuation AND contain
-    >= 4 words; the PAGE is dropped iff it mentions 'lorem ipsum' or
-    contains a curly brace (the published javascript/boilerplate
-    heuristics). Alongside the keep verdicts the per-line rejection
-    DIAGNOSTICS ship as counts (``n_short``, ``n_nopunct``) — the
-    observability a pipeline needs to tune the rules, and, on this
-    synthetic prose-free corpus (few lines carry terminal punctuation),
-    the columns where the real per-document variance lives.
-    ``clean_md5`` is the md5 of the kept lines joined by newline — a
-    cross-engine content hash of the CLEANED document, so the oracle
-    checks the transformation itself, not just the counts.
-
-    Scale: one projection (array HOFs fold in place), no shuffle.
-    """
-    from ..sources.corpus import derived_corpus
-
-    c = derived_corpus(spark, sf_dir)
-    lines = F.split(F.col("content"), "\n")
-    is_kept = lambda ln: ln.rlike('[.!?"]$') & (
-        F.size(F.split(F.trim(ln), " ")) >= 4
-    )
-    kept = F.filter(lines, is_kept)
-    low = F.lower(F.col("content"))
-    page_kept = (~low.contains("lorem ipsum")) & (~low.contains("{"))
-    return c.select(
-        "path",
-        page_kept.alias("page_kept"),
-        F.size(lines).cast("bigint").alias("n_lines"),
-        F.size(kept).cast("bigint").alias("n_kept"),
-        F.size(
-            F.filter(
-                lines, lambda ln: F.size(F.split(F.trim(ln), " ")) < 4
-            )
-        ).cast("bigint").alias("n_short"),
-        F.size(F.filter(lines, lambda ln: ~ln.rlike('[.!?"]$')))
-        .cast("bigint")
-        .alias("n_nopunct"),
-        F.md5(F.array_join(kept, "\n")).alias("clean_md5"),
-    )
-
-
-def cap_docs_per_source(
-    spark: SparkSession, sf_dir: str, cap: int = 30
-) -> DataFrame:
-    """Per-source frequency cap — the domain-cap step of web-corpus
-    curation (Gopher §A.2 caps documents per domain so one crawl-happy
-    site cannot dominate the training mixture; the reference has no
-    curation at all): keep at most ``cap`` documents per ``source``,
-    selected by md5 of the doc id (deterministic, corpus-order-
-    independent — the house md5-selection discipline, so the kept set
-    is a stable uniform sample per source, not "whatever sorted
-    first"). Returns (doc_id, source, keep_rank) for the survivors.
-
-    Scale shape: ONE row_number window partitioned by source — a
-    single shuffle keyed on the cap dimension; skew-safe because the
-    window's per-partition state is O(1) (rank counter), not O(group).
-    """
-    from pyspark.sql.window import Window
-
-    from ..sources.tables import load_table
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    w = Window.partitionBy("source").orderBy(
-        F.md5(F.col("doc_id").cast("string")), F.asc("doc_id")
-    )
-    return (
-        d.withColumn("keep_rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("keep_rank") <= cap)
-        .select("doc_id", "source", "keep_rank")
-    )
-
-
-DSIR_BUCKETS = 8192
-
-
-def _dsir_features(d: DataFrame, carry: "tuple[str, ...]" = ()) -> DataFrame:
-    """(doc_id, *carry, bucket) — one row per hashed unigram/bigram
-    OCCURRENCE of a (doc_id, text[, *carry]) frame; the shared DSIR
-    featurizer, so an explicit target corpus counts through the SAME
-    arithmetic as the raw corpus (the published recipe's requirement:
-    both LMs live in the same hashed feature space).
-
-    r16 optimization (guide §2.4): bigrams are derived ARRAY-SIDE with
-    ``transform`` over the token array instead of posexplode + a
-    lead() window — the window forced a corpus-wide shuffle + sort by
-    doc_id per featurizer pass (two passes per DSIR run), and the
-    unigram/bigram union doubled the exploded row count crossing it.
-    The array form emits the identical feature multiset (each token,
-    plus each token⌢next pair) from a single narrow projection that
-    stays inside whole-stage codegen: zero exchanges in the featurizer.
-    """
-    from .dedup import md5_long
-
-    from ..sources.tables import fan_out
-
-    # Bind the token array ONCE per row before the lambda touches it:
-    # referencing split(text) inside transform's lambda would re-split
-    # the whole text for every element access (quadratic in tokens —
-    # measured 2.5x slower than the window it replaced). With `t` a
-    # materialized column, t[i + 1] is an O(1) array index.
-    # transform's lambda index is 0-based: element x of the first
-    # size-1 tokens paired with its successor t[i+1]. concat_ws(' ')
-    # matches the former lead()-window bigram spelling byte-for-byte.
-    #
-    # fan_out first (guide §2.5 input skew): the corpus parquet scans
-    # as ONE task below a row group, and md5-hashing ~2M exploded
-    # features single-threaded was the measured bottleneck of the whole
-    # DSIR key (the former window shape distributed the bigram branch
-    # only by accident of its shuffle). No-op on a real multi-split
-    # corpus — the minhash-kernel discipline.
-    feats = F.expr(
-        "concat(t, transform(slice(t, 1, size(t) - 1), "
-        "(x, i) -> concat_ws(' ', x, t[i + 1])))"
-    )
-    return (
-        fan_out(d)
-        .select(
-            "doc_id", *carry, whitespace_tokens(F.col("text")).alias("t")
-        )
-        .select("doc_id", *carry, F.explode(feats).alias("feat"))
-        .select(
-            "doc_id",
-            *carry,
-            (md5_long(F.col("feat")) % DSIR_BUCKETS).alias("bucket"),
-        )
-    )
-
-
-def dsir_importance_select(
-    spark: SparkSession,
-    sf_dir: str,
-    target_lang: str = "en",
-    k: int = 100,
-    target_docs: "DataFrame | None" = None,
-) -> DataFrame:
-    """DSIR — Data Selection via Importance Resampling (Xie et al.,
-    NeurIPS 2023): rank raw-corpus documents by their importance weight
-    under hashed n-gram bag-of-features language models of a TARGET
-    distribution vs the RAW distribution — the published recipe for
-    selecting pretraining data that "looks like" a high-quality target
-    set. Features are unigrams + word bigrams hashed into
-    ``DSIR_BUCKETS`` buckets (the paper's hashed n-gram parametrization);
-    the per-bucket log importance ratio with add-1 smoothing is
-
-        lr(b) = ln((c_t(b)+1)/(T+B)) − ln((c_r(b)+1)/(R+B))
-
-    and a document's log-weight is the sum of lr over its feature
-    OCCURRENCES. The target distribution is an EXPLICIT curated corpus
-    when ``target_docs`` (doc_id, text) is passed — the paper's actual
-    recipe, composing with ``curate_corpus``/``split_train_holdout``
-    outputs — and defaults to the ``lang == target_lang`` corpus slice
-    (the oracle-pinned configuration; byte-identical to the pre-r16
-    behavior). Either way the target counts flow through the SAME
-    featurizer (``_dsir_features``). Deterministic top-k by (weight
-    desc, doc_id) stands in for the paper's Gumbel-noise resampling
-    draw — the seedless-reproducibility convention every sampler in
-    this repo follows.
-
-    Cross-engine determinism: lr is computed ONCE PER BUCKET (≤ B rows),
-    4-dp rounded, and frozen to a ×10⁴ BIGINT; document scores are then
-    EXACT integer sums — no float accumulation order can flip the
-    ranking. ln() may differ by
-    an ulp across engines only within ~1e-12 of a rounding boundary,
-    per-corpus deterministic, guarded by the 3-SF sweeps.
-
-    Scale shape: two narrow feature-count aggregates (map-side partial),
-    an ≤8k-row broadcast ratio table, one groupBy(doc) integer sum,
-    TakeOrderedAndProject — no shuffle wider than the doc-id rollup.
-    """
-    d = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "lang", "text"
-    )
-    feats = _dsir_features(d, ("lang",))
-    if target_docs is not None:
-        # explicit curated target: a separate corpus, counted through
-        # the same featurizer, joined raw-anchored as before
-        raw_counts = feats.groupBy("bucket").agg(
-            F.count(F.lit(1)).alias("cr")
-        )
-        tgt_counts = (
-            _dsir_features(target_docs.select("doc_id", "text"))
-            .groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("ct"))
-        )
-        counts = raw_counts.join(tgt_counts, "bucket", "left").withColumn(
-            "ct", F.coalesce(F.col("ct"), F.lit(0))
-        )
-        # t_tot counts EVERY target feature — including ones hashing to
-        # buckets the raw corpus never populated, which the raw-anchored
-        # left join above drops — so it is summed from the pre-join
-        # target counts (the pre-r16 arithmetic, byte-identical).
-        totals = raw_counts.agg(F.sum("cr").alias("r_tot")).crossJoin(
-            tgt_counts.agg(F.sum("ct").alias("t_tot"))
-        )
-    else:
-        # default target = the lang slice of the SAME corpus: both
-        # per-bucket counts come from ONE conditional aggregate over a
-        # single featurizer pass (guide §2.3/§2.4 — the former shape
-        # ran the featurizer once per count and joined the results;
-        # count(when cond) ≡ counting the filtered slice, and every
-        # target bucket is a raw bucket by construction, so the fused
-        # frame is row-identical to the old raw-anchored left join)
-        from pyspark.sql.window import Window
-
-        # in the fused branch every target feature IS a raw feature, so
-        # both totals are sums over the fused frame itself — attached
-        # with a single-partition window over the ≤8,192 bucket rows
-        # (guide §2.4: a separate .agg() re-planned and re-ran the whole
-        # corpus-count subtree a second time just to produce two
-        # scalars; the window keeps ONE count pass in the plan, and an
-        # 8k-row single-partition exchange is noise)
-        wall = Window.partitionBy()
-        counts = (
-            feats.groupBy("bucket")
-            .agg(
-                F.count(F.lit(1)).alias("cr"),
-                F.count(
-                    F.when(F.col("lang") == target_lang, 1)
-                ).alias("ct"),
-            )
-            .select(
-                "bucket",
-                "cr",
-                "ct",
-                F.sum("cr").over(wall).alias("r_tot"),
-                F.sum("ct").over(wall).alias("t_tot"),
-            )
-        )
-        totals = None
-    # every doc feature's bucket appears in raw counts by construction,
-    # so the ratio table is raw-anchored; absent target buckets smooth
-    # to c_t = 0
-    lr = (
-        counts if totals is None
-        else counts.crossJoin(F.broadcast(totals))
-    )
-    lr = (
-        lr
-        .select(
-            "bucket",
-            F.round(
-                F.round(
-                    F.log(
-                        (F.col("ct") + 1).cast("double")
-                        / (F.col("t_tot") + DSIR_BUCKETS).cast("double")
-                    )
-                    - F.log(
-                        (F.col("cr") + 1).cast("double")
-                        / (F.col("r_tot") + DSIR_BUCKETS).cast("double")
-                    ),
-                    4,
-                )
-                * 10000
-            )
-            .cast("bigint")
-            .alias("lr_e4"),
-        )
-    )
-    return (
-        feats.join(F.broadcast(lr), "bucket")
-        .groupBy("doc_id")
-        .agg(
-            (F.sum("lr_e4") / F.lit(10000.0)).alias("log_weight"),
-            F.count(F.lit(1)).alias("n_feats"),
-        )
-        .orderBy(F.desc("log_weight"), F.asc("doc_id"))
-        .limit(k)
     )

@@ -39,14 +39,8 @@ BENCH_KEYS = [
     "dedup_embedding_cosine",
     "dedup_substring_rewrite",
     "chunk_fixed_words",
-    "text_stats",
-    "quality_score",
-    "dsir_importance_select",
-    "curate_corpus",
     "chunk_ast_python",
-    "quality_repetition",
     "hybrid_rrf_topk",
-    "decontaminate_corpus",
     "bm25_topk",
     "bm25_folded_topk_served",
     "chunk_js_elements",
@@ -60,10 +54,9 @@ BENCH_KEYS = [
     "hybrid_weighted_topk",
     # r14 (VERDICT r13 next #7): the r13 cost classes that were not yet
     # bench-visible — MVCC read-pin + rollback pointer swing (the
-    # versioning path), content-keyed split
+    # versioning path)
     "collection_get_snapshot",
     "collection_rollback_get",
-    "split_train_holdout",
     # r14 additions
     "dedup_containment_pairs",
     "dedup_containment_gate",

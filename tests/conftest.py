@@ -98,17 +98,22 @@ def opened_dirs(monkeypatch):
 
 @pytest.fixture()
 def py4j_calls(spark, monkeypatch):
-    """A context manager counting the py4j commands the driver sends to
-    the JVM inside its block: ``with py4j_calls() as n: ...``, then
-    ``n[0]`` is the count."""
+    """A context manager counting the py4j commands the test's thread
+    sends to the JVM inside its block: ``with py4j_calls() as n: ...``,
+    then ``n[0]`` is the count."""
     import contextlib
+    import threading
 
     client = type(spark.sparkContext._gateway._gateway_client)
     real = client.send_command
     sent = [0]
+    owner = threading.get_ident()
 
     def send(self, *args, **kwargs):
-        sent[0] += 1
+        # only the test's own thread counts: py4j's FinalizerWorker
+        # thread sends the JVM a delete for each JavaObject the Python
+        # GC freed whenever it drains its queue, inside a block or not
+        sent[0] += threading.get_ident() == owner
         return real(self, *args, **kwargs)
 
     monkeypatch.setattr(client, "send_command", send)

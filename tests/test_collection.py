@@ -917,6 +917,22 @@ def test_read_rows_equal_spark_collect(spark, tmp_path, monkeypatch):
     assert res.toPandas().equals(df.toPandas())
 
 
+def test_local_result_take_head_first_match_spark(spark, coll):
+    """``take``, ``head(n)`` and ``first`` return the rows Spark's own
+    DataFrame gives, and a negative count raises as Spark's does."""
+    mat = _vecs(8, 5)
+    coll.add(_local_batch(spark, [f"t{i}" for i in range(5)], mat))
+    res = coll.query([float(x) for x in mat[0]], n_results=4)
+    assert res.count() == 4
+    for n in (0, 1, 3, 9):
+        assert res.take(n) == res._df.take(n), n
+        assert res.head(n) == res._df.head(n), n
+    assert res.first() == res._df.first()
+    for read in (res.take, res.head):
+        with pytest.raises(ValueError, match="num must be an int >= 0"):
+            read(-1)
+
+
 def test_numpy_scorer_is_bit_exact_against_catalyst(spark, sf_dir):
     """The driver scorer equals the Catalyst expression the Spark plans
     use (functions/vector.py + F.round(..., 4)) bit for bit, raw and

@@ -167,14 +167,19 @@ def test_catalogue_key_lists_name_registered_keys():
     """Every key the timing tools iterate is a key ``queries()``
     registers, so deleting an operator cannot leave a stale name behind
     that fails only when the tool runs."""
-    registry = next(
-        node
-        for node in ast.parse((REPO / "__spark_entry__.py").read_text()).body
-        if isinstance(node, ast.FunctionDef) and node.name == "queries"
+    def registered(fn: str) -> set[str]:
+        body = next(
+            node
+            for node in ast.parse((REPO / "__spark_entry__.py").read_text()).body
+            if isinstance(node, ast.FunctionDef) and node.name == fn
+        )
+        returned = next(n.value for n in ast.walk(body) if isinstance(n, ast.Return))
+        return set(_string_keys(returned))
+
+    known = registered("queries")
+    assert known and known == registered("oracle_sql"), sorted(
+        known ^ registered("oracle_sql")
     )
-    returned = next(n.value for n in ast.walk(registry) if isinstance(n, ast.Return))
-    known = set(_string_keys(returned))
-    assert len(known) > 100, len(known)
     for path, name in (
         (REPO / "bench.py", "BENCH_KEYS"),
         (REPO / "tools" / "scaling_exponents.py", "KEYS"),

@@ -439,107 +439,6 @@ def test_cluster_size_histogram_conserves_docs(spark, sf_dir):
     assert all(r["cluster_size"] >= 1 and r["n_clusters"] >= 1 for r in rows)
 
 
-# ---------------------------------------------------------- token entropy
-
-def test_doc_token_entropy_bounds_and_extremes(spark, sf_dir):
-    """0 <= H <= ln(n_distinct) (uniform bound, micro units with floor
-    slack), single-token docs score 0, and a Python replay agrees."""
-    import math
-
-    rows = tx.doc_token_entropy(spark, sf_dir).collect()
-    assert rows
-    docs = {
-        r["doc_id"]: r["text"]
-        for r in spark.read.parquet(f"{sf_dir}/documents.parquet").collect()
-    }
-    for r in rows[:300]:
-        assert 0 <= r["entropy_micro"] <= math.ceil(
-            math.log(max(r["n_distinct"], 1)) * 1e6
-        )
-        toks = docs[r["doc_id"]].split(" ")
-        from collections import Counter
-
-        cnt = Counter(toks)
-        n = len(toks)
-        want = sum(
-            math.floor(-(c / n) * math.log(c / n) * 1e6)
-            for c in cnt.values()
-        )
-        assert r["entropy_micro"] == want
-        assert r["n_tokens"] == n and r["n_distinct"] == len(cnt)
-
-
-def test_gopher_rules_fire_on_constructed_docs(spark, tmp_path):
-    """Pin each Gopher rule's boundary on hand-built documents (the
-    integer cross-multiplied thresholds must match the published
-    ratios exactly)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from adk_noui_vectordb_spark.operators.textops import gopher_quality_flags
-
-    good = "the a " + " ".join(f"word{i}" for i in range(60))  # wc=62, stops
-    short = "the a tiny doc"  # wc < 50
-    symbolic = "the a " + " ".join("#tag" for _ in range(60))  # all-# words
-    bullety = "the a start\n" + "\n".join("- item line" for _ in range(30))
-    rows = [(1, good), (2, short), (3, symbolic), (4, bullety)]
-    base = str(tmp_path / "gopherdocs")
-    os.makedirs(base)
-    spark.createDataFrame(
-        [(i, t, "en", "unit", len(t)) for i, t in rows],
-        "doc_id bigint, text string, lang string, source string, n_chars int",
-    ).write.parquet(os.path.join(base, "documents.parquet"))
-
-    got = {r["doc_id"]: r for r in gopher_quality_flags(spark, base).collect()}
-    assert got[1]["keep"] is True
-    assert got[2]["wc_ok"] is False and got[2]["keep"] is False
-    assert got[3]["sym_ok"] is False  # 60/62 '#' words >> 10% budget
-    assert got[4]["bullet_ok"] is False  # 30/31 bullet lines > 90%
-    for flags in got.values():  # every doc carries the two stopwords
-        assert flags["stop_ok"] is True
-
-
-def test_c4_line_filter_keeps_and_hashes_cleaned_lines(spark, tmp_path):
-    """Pin the C4 line/page rules: terminal punctuation + >= 4 words
-    keeps a line; lorem-ipsum / brace pages are dropped; clean_md5 is
-    the md5 of exactly the kept lines."""
-    import hashlib
-    import os
-
-    from adk_noui_vectordb_spark.operators.textops import c4_line_filter
-
-    # ' the ' becomes a newline in the derived corpus (the established
-    # line-derivation convention), so doc 3 splits into two lines.
-    text = "this line is kept properly. the short one."
-    doc = "keep me now please.\nno punct line\ntiny.\nlorem free line stays fine!"
-    rows = [
-        (1, doc, "en", "unit"),
-        (2, "page has lorem ipsum inside. with words here.", "en", "unit"),
-        (3, text, "en", "unit"),
-    ]
-    base = str(tmp_path / "c4docs")
-    os.makedirs(base)
-    spark.createDataFrame(
-        [(i, t, lg, s, len(t)) for i, t, lg, s in rows],
-        "doc_id bigint, text string, lang string, source string, n_chars int",
-    ).write.parquet(os.path.join(base, "documents.parquet"))
-
-    got = {r["path"]: r for r in c4_line_filter(spark, base).collect()}
-    r1 = got["corpus/unit/doc_1.py"]
-    # derived corpus prepends 'import os' (no punct, 2 words -> rejected);
-    # doc 1 then keeps exactly its 1st and 4th own lines
-    kept = ["keep me now please.", "lorem free line stays fine!"]
-    assert r1["n_kept"] == 2
-    assert r1["clean_md5"] == hashlib.md5("\n".join(kept).encode()).hexdigest()
-    assert r1["page_kept"] is True
-    r2 = got["corpus/unit/doc_2.py"]
-    assert r2["page_kept"] is False  # lorem ipsum page rule
-    # doc 3: 'this line is kept properly.' survives; 'short one.' (2
-    # words after the ' the ' split) does not
-    assert got["corpus/unit/doc_3.py"]["n_kept"] == 1
-
-
 def test_minhash_index_update_equals_fresh_build(spark, sf_dir, tmp_path):
     """Incrementally signing a batch into the persisted MinHash index
     must equal a fresh build over the combined corpus (bands AND sigs —
@@ -987,60 +886,6 @@ def test_containment_index_admit_and_replace(spark, tmp_path):
     assert gate(t3) == {3, 100}
 
 
-def test_dsir_selects_target_like_documents(spark, sf_dir):
-    """dsir_importance_select: the importance ranking must concentrate
-    the target slice — documents of the target language dominate the
-    top-k (their hashed n-grams are exactly what the target LM upweights)
-    — and weights are finite with n_feats = 2·words − 1 per doc."""
-    from adk_noui_vectordb_spark.operators.textops import (
-        dsir_importance_select,
-    )
-
-    rows = dsir_importance_select(
-        spark, sf_dir, target_lang="en", k=100_000
-    ).collect()
-    langs = {
-        r["doc_id"]: r["lang"]
-        for r in load_table(spark, sf_dir, "documents")
-        .select("doc_id", "lang")
-        .collect()
-    }
-    assert len(rows) == len(langs)  # k past corpus size = full ranking
-    # the LM-affinity signal (per-feature mean ratio) must put the
-    # target language strictly above every other language's mean —
-    # the property DSIR's importance weights exist to capture; the raw
-    # sum additionally carries document length (as in the paper)
-    import collections
-
-    by_lang = collections.defaultdict(list)
-    for r in rows:
-        by_lang[langs[r["doc_id"]]].append(r["log_weight"] / r["n_feats"])
-    means = {l: sum(v) / len(v) for l, v in by_lang.items()}
-    assert all(means["en"] > m for l, m in means.items() if l != "en"), means
-    pernorm = sorted(
-        rows, key=lambda r: (-r["log_weight"] / r["n_feats"], r["doc_id"])
-    )[:50]
-    frac_en = sum(1 for r in pernorm if langs[r["doc_id"]] == "en") / 50
-    assert frac_en >= 0.8, frac_en
-    # the raw top-50 is still enriched over the corpus base rate
-    base = sum(1 for l in langs.values() if l == "en") / len(langs)
-    top_frac = sum(1 for r in rows[:50] if langs[r["doc_id"]] == "en") / 50
-    assert top_frac > base, (top_frac, base)
-    words = {
-        r["doc_id"]: r["n"]
-        for r in load_table(spark, sf_dir, "documents")
-        .select(
-            "doc_id", F.size(F.split(F.col("text"), " ")).alias("n")
-        )
-        .collect()
-    }
-    for r in rows:
-        assert r["n_feats"] == 2 * words[r["doc_id"]] - 1, r
-    # descending, deterministic tie-break
-    ws = [r["log_weight"] for r in rows]
-    assert ws == sorted(ws, reverse=True)
-
-
 def test_containment_fsck_green_after_build_and_admit(spark, tmp_path):
     """fsck_containment_index: all checks pass on a fresh build AND
     after an admit + doc-level replace (the write paths must preserve
@@ -1157,48 +1002,6 @@ def test_containment_drift_advisory_and_rebuild(spark, tmp_path):
             .collect()
         )
         assert a == b, comp
-
-
-def test_dsir_explicit_target_corpus_ranks_target_like_first(
-    spark, tmp_path
-):
-    """dsir_importance_select(target_docs=...): an explicit curated
-    target corpus (the paper's actual recipe) pulls corpus documents
-    that look like the TARGET to the top — independent of the lang
-    column — and the default lang-slice path is unaffected by the
-    refactor (same frame, same ranking)."""
-    import os
-
-    from adk_noui_vectordb_spark.operators.textops import (
-        dsir_importance_select,
-    )
-
-    corpus = [
-        (1, "en", "quantum physics lab entangled qubits decohere fast"),
-        (2, "en", "braised pork recipe simmer garlic onions slowly"),
-        (3, "en", "qubits entangled in the physics lab decohere"),
-        (4, "en", "recipe for garlic soup simmer onions and pork"),
-    ]
-    base = str(tmp_path / "dsirt")
-    os.makedirs(base, exist_ok=True)
-    spark.createDataFrame(
-        corpus, "doc_id bigint, lang string, text string"
-    ).write.parquet(os.path.join(base, "documents.parquet"))
-    target = spark.createDataFrame(
-        [
-            (900, "entangled qubits decohere in a quantum physics lab"),
-            (901, "physics lab measures entangled qubits"),
-        ],
-        "doc_id bigint, text string",
-    )
-    rows = dsir_importance_select(
-        spark, base, k=4, target_docs=target
-    ).collect()
-    order = [r["doc_id"] for r in rows]
-    assert set(order[:2]) == {1, 3}, order  # physics docs outrank cooking
-    # per-feature affinity strictly separates the classes
-    byid = {r["doc_id"]: r["log_weight"] / r["n_feats"] for r in rows}
-    assert min(byid[1], byid[3]) > max(byid[2], byid[4]), byid
 
 
 def test_containment_fsck_catches_zero_prefix_doc(spark, tmp_path):

@@ -112,49 +112,6 @@ def test_partitioned_write_prunes_partitions(spark, sf_dir, tmp_path):
     assert df.count() > 0
 
 
-def test_decontaminate_is_single_narrow_pass(spark, sf_dir):
-    """The benchmark shingle set (tiny by definition) is collected and
-    broadcast executor-side; the candidate side is ONE narrow Arrow pass —
-    no join, no shuffle, no sort anywhere in the plan (the previous
-    broadcast-join formulation was replaced in round 5; interpreted HOF
-    shingle construction dominated its runtime)."""
-    from adk_noui_vectordb_spark.operators import textops
-
-    df = textops.decontaminate_corpus(spark, sf_dir)
-    plan = explain_str(df, mode="simple")
-    for bad in ("Join", "Exchange", "Sort"):
-        assert bad not in plan, plan
-    assert "MapInPandas" in plan, plan
-    assert df.count() > 0
-
-
-def test_decontaminate_fallback_matches_collect_path(spark, sf_dir):
-    """Above the driver-collect byte budget the operator must switch to
-    the fully distributed join formulation (VERDICT r5 item 2) and
-    produce IDENTICAL (doc_id, n_hits) rows. Forcing the budget to 0
-    exercises the fallback on the same data the collect path runs."""
-    from adk_noui_vectordb_spark.operators import textops
-
-    collected = {
-        (r["doc_id"], r["n_hits"])
-        for r in textops.decontaminate_corpus(spark, sf_dir).collect()
-    }
-    distributed = {
-        (r["doc_id"], r["n_hits"])
-        for r in textops.decontaminate_corpus(
-            spark, sf_dir, collect_budget_bytes=0
-        ).collect()
-    }
-    assert collected == distributed
-    assert len(collected) > 0
-    # and the fallback plan must not collect: it is a join + one groupBy
-    plan = explain_str(
-        textops.decontaminate_corpus(spark, sf_dir, collect_budget_bytes=0),
-        mode="simple",
-    )
-    assert "Join" in plan, plan
-
-
 def test_text_index_probe_prunes_term_buckets(spark, sf_dir):
     """bm25_topk_served reads the on-disk postings partitioned by
     tbucket: the literal query-term buckets must be PartitionFilters on

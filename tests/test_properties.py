@@ -84,7 +84,6 @@ def test_upsert_idempotent_and_keyed(spark, batch, tmp_path_factory):
     [
         "collection_query_topk",   # md5-seeded hyperplanes + band probe
         "filter_by_element_type",  # ranked limit cut
-        "stratified_sample",       # ranked modulo sample
         "dedup_minhash_pairs",     # Arrow kernel + self-join
         "ngram_jaccard_pairs",     # applyInPandas blocked kernel
         "knn_topk",                # rounded-sim top-k cut

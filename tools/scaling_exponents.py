@@ -36,10 +36,6 @@ KEYS = {
     "semdedup_prune": "embeddings",
     "cluster_kmeans": "embeddings",
     "knn_topk": "embeddings",
-    "curate_corpus": "documents",
-    "winnow_fingerprints": "documents",
-    "decontaminate_corpus": "documents",
-    "lang_id_ngram": "documents",
     "tokenize_bpe_encode": "documents",
     "dedup_simhash_pairs": "documents",
     "dedup_substring_rewrite": "documents",
@@ -50,12 +46,9 @@ KEYS = {
     "normalize_text_corpus": "documents",
     "dedup_repeated_ngrams": "documents",
     # r7c additions
-    "doc_token_entropy": "documents",
     "dup_cluster_size_histogram": "documents",
     # r9 additions
     "text_index_doc_map": "documents",
-    "gopher_quality_flags": "documents",
-    "c4_line_filter": "documents",
     # r10 additions
     "dedup_gate_against_index": "documents",
     "dedup_gate_intra_batch": "documents",
@@ -64,7 +57,6 @@ KEYS = {
     "collection_query_graph_acorn_topk": "embeddings",
     "dedup_containment_pairs": "documents",
     "dedup_containment_gate": "documents",
-    "split_train_holdout": "documents",
     "hybrid_weighted_topk": "documents",
     # r10b additions (query-language + filtered-ANN serving layer)
     "boolean_and_topk": "documents",
@@ -79,7 +71,6 @@ KEYS = {
     "collection_get_where": "documents",
     "fuzzy_topk_served": "documents",
     "dedup_containment_gate_ingested": "documents",
-    "dsir_importance_select": "documents",
     # r11 additions
     "ann_ivf_sampled_topk": "embeddings",
     "collection_get_page2": "documents",
