@@ -41,7 +41,6 @@ from adk_noui_vectordb_spark.operators import hybrid as _hyb
 from adk_noui_vectordb_spark.operators import indexing as _idx
 from adk_noui_vectordb_spark.operators import invindex as _inv
 from adk_noui_vectordb_spark.operators import knn as _knn
-from adk_noui_vectordb_spark.operators import textops as _text
 from adk_noui_vectordb_spark.operators.chunking import (
     chunk_fixed_words,
     chunk_js_elements,
@@ -150,20 +149,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "chunk_markdown_sections": _idx.chunk_markdown_sections_q,
         "chunk_ast_python": _q_chunk_ast,
         "chunk_js_elements": _q_chunk_js,
-        # text analysis (SURVEY.md §2.9 + north-star extensions)
-        "line_dedup_corpus": _text.line_dedup_corpus,
-        # r7: canonical normalization pass (lower/strip/collapse) —
-        # pure codegen'd projection, no shuffle; idempotence unit-pinned
-        "normalize_text_corpus": _text.normalize_text_corpus,
-        "pack_sequences": _text.pack_sequences,
-        "redact_pii": _text.redact_pii,
-        "lm_perplexity_score": _text.lm_perplexity_score,
-        # r7: second-order LM scoring — word-order signal the unigram
-        # key cannot see; capped broadcast bigram model, floor-micro-nats.
-        "lm_bigram_score": _text.lm_bigram_score,
-        "mixture_sample": _text.mixture_sample,
-        "bpe_pair_counts": _text.bpe_pair_counts,
-        "tokenize_bpe_encode": _text.tokenize_bpe_encode,
+        # clustering and code diagnostics
         "cluster_kmeans": _ann.cluster_kmeans,
         "diag_python": _idx.diag_python,
         "diag_js_ts": _idx.diag_js_ts,
@@ -185,7 +171,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_connected_components": _dedup.dedup_connected_components,
         "dedup_canonical_selection": _dedup.dedup_canonical_selection,
         "minhash_jaccard_estimate": _dedup.minhash_jaccard_estimate,
-        "dedup_simhash_pairs": _dedup.dedup_simhash_pairs,
         "ngram_jaccard_pairs": _dedup.ngram_jaccard_pairs,
         # r14: asymmetric subset-duplication — word-set CONTAINMENT over
         # PPJoin prefix-filtered candidates (Xiao et al. WWW 2008); the
@@ -205,9 +190,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_containment_gate_ingested": (
             _dedup.dedup_containment_gate_ingested
         ),
-        "simhash_signatures": _dedup.simhash_signatures,
-        "dedup_embedding_cosine": _dedup.dedup_embedding_cosine,
-        "semdedup_prune": _dedup.semdedup_prune,
         # r7: n-gram-granularity exact-substring dedup analysis
         # (Lee et al. 2021, arXiv:2107.06499)
         "dedup_repeated_ngrams": _dedup.dedup_repeated_ngrams,
@@ -395,7 +377,7 @@ def _kmeans_ctes(
     operators/ann.py _lloyd exactly: 6-dp-rounded squared-L2 argmin with
     cluster tie-break, 6-dp-rounded per-dim centroid means. Returns
     (cte_list, final_assignment_select) so callers (``_kmeans_sql``,
-    ``_semdedup_sql``, ``_ivf_sampled_sql``) can extend the chain;
+    ``_ivf_sampled_sql``) can extend the chain;
     ``tag`` suffixes every CTE name and ``emb_sql`` is the vector
     expression."""
     dist = (
@@ -1089,30 +1071,6 @@ _GRAPH_MAT = {
     "ghubs", "ghv", "gstar", "ghedges", "gfwd", "grev", "gedges",
 }
 
-def _semdedup_sql(k: int = 8, iters: int = 2, thr: float = 0.35) -> str:
-    """SemDeDup oracle: extend the k-means CTE chain with a within-cluster
-    pairwise-cosine prune (operators/dedup.py semdedup_prune). A vector is
-    pruned when a lower-vec_id cluster-mate has round(cos, 4) >= thr."""
-    cos = _COS.format(a="va.emb", b="vb.emb")
-    ctes, final = _kmeans_ctes(k, iters)
-    ctes.append(f"asg AS (\n{final})")
-    ctes.append(
-        "v AS (SELECT a.vec_id, a.cluster, e.emb FROM asg a JOIN e USING (vec_id))"
-    )
-    ctes.append(
-        f"""pruned AS (
-  SELECT DISTINCT vb.vec_id FROM v va JOIN v vb
-  ON va.cluster = vb.cluster AND va.vec_id < vb.vec_id
-  WHERE {cos} >= {thr})"""
-    )
-    return (
-        "WITH " + ",\n".join(ctes) + """
-SELECT v.vec_id, v.cluster,
-       CASE WHEN p.vec_id IS NULL THEN 1 ELSE 0 END AS keep
-FROM v LEFT JOIN pruned p ON v.vec_id = p.vec_id
-"""
-    )
-
 
 def _knn_sql(extra_where: str = "") -> str:
     cos = _COS.format(a="e.embedding", b="q.q_emb")
@@ -1203,33 +1161,6 @@ bands AS (
 )
 """
 )
-
-
-def _simhash_sql() -> str:
-    bit_sums = ",\n        ".join(
-        f"sum(CASE WHEN (h >> {i}) & 1 = 1 THEN 1 ELSE -1 END) AS s{i}"
-        for i in range(_dedup.SIMHASH_BITS)
-    )
-    recompose = " + ".join(
-        f"CASE WHEN s{i} > 0 THEN {1 << i} ELSE 0 END"
-        for i in range(_dedup.SIMHASH_BITS)
-    )
-    return f"""
-WITH grams AS (
-    SELECT DISTINCT doc_id, g FROM (
-        SELECT d.doc_id, array_to_string(d.parts[t.i:t.i+1], ' ') AS g
-        FROM (SELECT doc_id, string_split(text, ' ') AS parts FROM documents) d,
-             LATERAL (SELECT unnest(generate_series(1, greatest(len(d.parts) - 1, 1))) AS i) t
-    )
-), h AS (
-    SELECT doc_id, CAST(('0x' || substr(md5(g), 1, 15)) AS BIGINT) AS h FROM grams
-), bits AS (
-    SELECT doc_id,
-        {bit_sums}
-    FROM h GROUP BY doc_id
-)
-SELECT doc_id, CAST({recompose} AS BIGINT) AS simhash FROM bits
-"""
 
 
 _ELEMENTS_CTE = (
@@ -1391,220 +1322,7 @@ SELECT doc_id, CAST(pos // 20 AS INTEGER) AS chunk_id,
        'chunk_' || CAST(pos // 20 AS INTEGER) AS chunk_name
 FROM w GROUP BY doc_id, CAST(pos // 20 AS INTEGER)
 """,
-        "line_dedup_corpus": f"""
-WITH {DERIVED_CORPUS_SQL},
-ld_lines AS (
-    SELECT c.path, t.i - 1 AS pos, c.parts[t.i] AS line
-    FROM (SELECT path, string_split(content, chr(10)) AS parts FROM corpus) c,
-         LATERAL (SELECT unnest(generate_series(1, len(c.parts))) AS i) t
-),
-ld_boiler AS (
-    SELECT line FROM ld_lines GROUP BY line HAVING count(DISTINCT path) >= 100
-),
-ld_flagged AS (
-    SELECT path, pos, line,
-           line IN (SELECT line FROM ld_boiler) AS is_boiler
-    FROM ld_lines
-)
-SELECT path,
-       CAST(sum(CASE WHEN is_boiler THEN 0 ELSE 1 END) AS BIGINT) AS n_kept,
-       CAST(sum(CASE WHEN is_boiler THEN 1 ELSE 0 END) AS BIGINT) AS n_removed,
-       md5(coalesce(string_agg(line, chr(10) ORDER BY pos)
-                    FILTER (WHERE NOT is_boiler), '')) AS clean_hash
-FROM ld_flagged GROUP BY path
-""",
-        "pack_sequences": """
-WITH toks AS (
-    SELECT source, doc_id, len(string_split(text, ' ')) AS n_tokens
-    FROM documents
-),
-cum AS (
-    SELECT source, doc_id, n_tokens,
-           sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-                               ROWS UNBOUNDED PRECEDING) AS c
-    FROM toks
-)
-SELECT source, CAST((c - n_tokens) // 512 AS INTEGER) AS seq_id,
-       count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS seq_tokens,
-       min(doc_id) AS first_doc, max(doc_id) AS last_doc
-FROM cum GROUP BY source, seq_id
-""",
-        "redact_pii": f"""
-WITH t AS (
-    SELECT doc_id,
-           text || ' contact_' || doc_id || '@example.com'
-           || CASE WHEN doc_id % 3 = 0 THEN ' call +1-555-0100' ELSE '' END
-           || CASE WHEN doc_id % 7 = 0 THEN ' host 192.168.1.42' ELSE '' END
-           AS t
-    FROM documents
-)
-SELECT doc_id,
-       CAST(len(regexp_extract_all(t, '{_text.PII_EMAIL}')) AS INTEGER) AS n_emails,
-       CAST(len(regexp_extract_all(t, '{_text.PII_PHONE}')) AS INTEGER) AS n_phones,
-       CAST(len(regexp_extract_all(t, '{_text.PII_IPV4}')) AS INTEGER) AS n_ips,
-       md5(regexp_replace(regexp_replace(regexp_replace(
-           t, '{_text.PII_EMAIL}', '<EMAIL>', 'g'),
-           '{_text.PII_PHONE}', '<PHONE>', 'g'),
-           '{_text.PII_IPV4}', '<IP>', 'g')) AS redacted_hash
-FROM t
-""",
-        "lm_perplexity_score": """
-WITH words AS (
-    SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
-),
-counts AS (SELECT term, count(*) AS cnt FROM words GROUP BY 1),
-tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS total_tokens FROM counts),
-vocab AS (
-    SELECT term,
-           CAST(floor(ln(cnt / total_tokens) * 1000000) AS BIGINT) AS logp_micro
-    FROM counts CROSS JOIN tot
-    ORDER BY cnt DESC, term
-    LIMIT 16
-)
-SELECT doc_id, n_tokens, (-nll_sum) // n_tokens AS nll_micro, n_oov
-FROM (
-    SELECT w.doc_id,
-           CAST(count(*) AS BIGINT) AS n_tokens,
-           CAST(sum(coalesce(v.logp_micro,
-                CAST(floor(ln(1.0 / t.total_tokens) * 1000000) AS BIGINT)))
-                AS BIGINT) AS nll_sum,
-           CAST(sum(CASE WHEN v.logp_micro IS NULL THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_oov
-    FROM words w
-    LEFT JOIN vocab v USING (term)
-    CROSS JOIN tot t
-    GROUP BY 1
-)
-""",
-        "lm_bigram_score": """
-WITH parts AS (
-    SELECT doc_id, string_split(text, ' ') AS p FROM documents
-),
-big AS (
-    SELECT d.doc_id, d.p[t.i] AS w1, d.p[t.i + 1] AS w2
-    FROM parts d,
-         LATERAL (SELECT unnest(generate_series(1, len(d.p) - 1)) AS i) t
-    WHERE len(d.p) >= 2
-),
-counts AS (SELECT w1, w2, count(*) AS c12 FROM big GROUP BY 1, 2),
-model AS (
-    SELECT w1, w2, c12 FROM counts ORDER BY c12 DESC, w1, w2 LIMIT 64
-),
-contexts AS (
-    SELECT w1, CAST(sum(c12) AS BIGINT) AS c1 FROM model GROUP BY 1
-),
-scored AS (
-    SELECT b.doc_id,
-           CAST(floor(ln(
-               (coalesce(m.c12, 0) + 0.5::DOUBLE)
-               / (coalesce(x.c1, 0) + 32.0::DOUBLE)
-           ) * 1000000.0::DOUBLE) AS BIGINT) AS lp,
-           (m.c12 IS NULL) AS oov
-    FROM big b
-    LEFT JOIN model m USING (w1, w2)
-    LEFT JOIN contexts x USING (w1)
-)
-SELECT doc_id,
-       CAST(count(*) AS BIGINT) AS n_bigrams,
-       CAST(-sum(lp) AS BIGINT) // CAST(count(*) AS BIGINT) AS nll2_micro,
-       CAST(sum(CASE WHEN oov THEN 1 ELSE 0 END) AS BIGINT) AS n_oov
-FROM scored GROUP BY 1
-""",
-        "mixture_sample": """
-WITH d AS (
-    SELECT source, doc_id, len(string_split(text, ' ')) AS n_tokens
-    FROM documents
-),
-sw AS (
-    SELECT DISTINCT source,
-           CAST(substr(source, 4) AS INTEGER) % 3 + 1 AS w
-    FROM d
-),
-tot AS (SELECT CAST(sum(w) AS BIGINT) AS tw FROM sw),
-b AS (
-    SELECT source, CAST(floor(5000 * w / tw) AS BIGINT) AS budget_tokens
-    FROM sw CROSS JOIN tot
-),
-cum AS (
-    SELECT source, doc_id, n_tokens,
-           sum(n_tokens) OVER (PARTITION BY source
-                               ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
-                               ROWS UNBOUNDED PRECEDING) AS c
-    FROM d
-)
-SELECT source, CAST(count(*) AS BIGINT) AS n_sel,
-       CAST(sum(n_tokens) AS BIGINT) AS tok_sel, budget_tokens
-FROM cum JOIN b USING (source)
-WHERE c - n_tokens < budget_tokens
-GROUP BY source, budget_tokens
-""",
-        "bpe_pair_counts": """
-WITH words AS (
-    SELECT unnest(string_split(text, ' ')) AS w FROM documents
-),
-wf AS (
-    SELECT w, count(*) AS f FROM words WHERE len(w) >= 2 GROUP BY 1
-),
-pairs AS (
-    SELECT substr(w, t.i, 2) AS pair, f
-    FROM wf,
-         LATERAL (SELECT unnest(generate_series(1, len(w) - 1)) AS i) t
-)
-SELECT pair, CAST(sum(f) AS BIGINT) AS cnt
-FROM pairs GROUP BY 1
-ORDER BY cnt DESC, pair
-LIMIT 50
-""",
-        "tokenize_bpe_encode": """
--- operators/textops.py tokenize_bpe_encode: the merge list is the
--- trainer's top-8 pairs; the recursive CTE applies merge rank r at step
--- r (replace() is non-overlapping left-to-right in both engines). Word
--- separators are newlines with no adjacent spaces, so merges cannot
--- cross word boundaries.
-WITH RECURSIVE
-bpe_words AS (
-    SELECT unnest(string_split(text, ' ')) AS w FROM documents
-),
-bpe_wf AS (
-    SELECT w, count(*) AS f FROM bpe_words WHERE len(w) >= 2 GROUP BY 1
-),
-bpe_pairs AS (
-    SELECT substr(w, t.i, 2) AS pair, f
-    FROM bpe_wf,
-         LATERAL (SELECT unnest(generate_series(1, len(w) - 1)) AS i) t
-),
-bpe_merges AS (
-    SELECT pair, row_number() OVER (ORDER BY sum(f) DESC, pair) AS rank
-    FROM bpe_pairs GROUP BY pair
-    QUALIFY rank <= 8
-),
-bpe_base AS (
-    SELECT doc_id,
-           array_to_string(
-               list_transform(string_split(text, ' '),
-                              w -> rtrim(regexp_replace(w, '(.)', '\\1 ', 'g'))),
-               chr(10)) AS enc,
-           len(string_split(text, ' ')) AS n_words
-    FROM documents
-),
-bpe_rec AS (
-    SELECT doc_id, enc, n_words, 0 AS step FROM bpe_base
-    UNION ALL
-    SELECT r.doc_id,
-           replace(r.enc,
-                   substr(m.pair, 1, 1) || ' ' || substr(m.pair, 2, 1),
-                   m.pair),
-           r.n_words, r.step + 1
-    FROM bpe_rec r JOIN bpe_merges m ON m.rank = r.step + 1
-)
-SELECT doc_id, CAST(n_words AS INTEGER) AS n_words,
-       CAST(len(enc) - len(replace(enc, ' ', '')) + n_words AS INTEGER)
-           AS n_symbols,
-       md5(enc) AS encoded_hash
-FROM bpe_rec WHERE step = 8
-""",
         "cluster_kmeans": _kmeans_sql(),
-        "semdedup_prune": _semdedup_sql(),
         "dedup_exact": """
 SELECT md5(text) AS text_hash, min(doc_id) AS keep_id, count(*) AS dup_count
 FROM documents GROUP BY 1
@@ -2059,7 +1777,6 @@ SELECT d.doc_id, CAST(len(d.w) AS INTEGER) AS n_tokens,
        coalesce(c.clean_md5, md5('')) AS clean_md5
 FROM d LEFT JOIN clean c USING (doc_id) LEFT JOIN rem r USING (doc_id)
 """,
-        "simhash_signatures": _simhash_sql(),
         "minhash_jaccard_estimate": f"""
 WITH {_MINHASH_BANDS_CTE},
 cand AS (
@@ -2074,31 +1791,6 @@ FROM cand c
 JOIN sigs sa ON sa.doc_id = c.doc_a
 JOIN sigs sb ON sb.doc_id = c.doc_b AND sb.hash_idx = sa.hash_idx
 GROUP BY c.doc_a, c.doc_b
-""",
-        "dedup_simhash_pairs": f"""
-WITH sig AS ({_simhash_sql()}),
-bands AS (
-    SELECT doc_id, simhash, t.band,
-           (simhash >> (t.band * {_dedup.SIMHASH_BAND_BITS})) & {_dedup.SIMHASH_BAND_MASK} AS band_val
-    FROM sig, LATERAL (SELECT unnest([{', '.join(str(b) for b in range(_dedup.SIMHASH_BANDS))}]) AS band) t
-),
-cand AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           a.simhash AS sig_a, b.simhash AS sig_b
-    FROM bands a JOIN bands b
-      ON a.band = b.band AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-)
-SELECT doc_a, doc_b, CAST(bit_count(xor(sig_a, sig_b)) AS INTEGER) AS hamming
-FROM cand WHERE bit_count(xor(sig_a, sig_b)) <= 3
-""",
-        "dedup_embedding_cosine": f"""
-WITH pairs AS (
-    SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-           {cos_ab} AS cosine
-    FROM embeddings a JOIN embeddings b
-      ON a.label = b.label AND a.vec_id < b.vec_id
-)
-SELECT vec_a, vec_b, cosine FROM pairs WHERE cosine >= 0.35
 """,
         "project_searchable_text": f"""
 WITH {_ELEMENTS_CTE}
@@ -2937,17 +2629,5 @@ WITH tok AS (
 SELECT s.doc_id, s.bucket, round(s.v / n.norm, 4) AS weight
 FROM s JOIN n ON s.doc_id = n.doc_id
 WHERE s.v <> 0
-""",
-        "normalize_text_corpus": """
-WITH n AS (
-    SELECT doc_id, text,
-           trim(regexp_replace(regexp_replace(lower(text),
-               '[^a-z0-9 ]', ' ', 'g'), '  +', ' ', 'g')) AS norm_text
-    FROM documents
-)
-SELECT doc_id, norm_text,
-       CAST(len(string_split(text, ' ')) AS INTEGER) AS n_tokens_raw,
-       CAST(len(string_split(norm_text, ' ')) AS INTEGER) AS n_tokens_norm
-FROM n
 """,
     }

@@ -78,6 +78,7 @@ import functools
 import hashlib
 import json
 import os
+import re
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -396,6 +397,18 @@ def _meta_rows(read, info: dict, mbuckets):
             for mb in sorted(mbuckets)
         ]
     )
+
+
+_PLAIN_NAME = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+
+
+def _ddl_name(name: str) -> str:
+    """A metadata column name as it is spliced into ``meta_schema``:
+    as is when it is a plain identifier (the string every stored root
+    holds), else backtick-quoted with any backtick in it doubled."""
+    if _PLAIN_NAME.fullmatch(name):
+        return name
+    return "`" + name.replace("`", "``") + "`"
 
 
 @functools.lru_cache(maxsize=64)
@@ -869,7 +882,7 @@ class Collection:
                 *[
                     F.col(f.name).cast(_STORED[f.name]).alias(f.name)
                     if f.name in _STORED
-                    else F.col(f.name)
+                    else F.col(_ddl_name(f.name))
                     for f in fields
                 ]
             )
@@ -1101,9 +1114,12 @@ class Collection:
             raise ValueError(f"mixed embedding dims {lo}..{hi}")
         meta_schema = ", ".join(
             ["vec_id bigint", "id string", "document string"]
-            + [f"{f.name} {f.dataType.simpleString()}" for f, _ in meta]
+            + [f"{_ddl_name(f.name)} {f.dataType.simpleString()}" for f, _ in meta]
             + ["mbucket int"]
         )
+        # parsed before the first batch saves it: a schema Spark cannot
+        # read back must never reach the sidecar
+        schema = _meta_arrow(meta_schema)[1]
         cur = self._cur()
         if expected_version is not None and (
             cur is None or os.path.basename(cur) != expected_version
@@ -1132,7 +1148,6 @@ class Collection:
         if info["dim"] != lo:
             raise ValueError(f"dim mismatch: {info['dim']} != {lo}")
         extra = {"collection.json": json.dumps(info)}
-        schema = _meta_arrow(meta_schema)[1]
         # the meta fields after vec_id: id, document, metadata columns
         add = pa.Table.from_arrays(
             [pa.array(sids, pa.int64())]
@@ -1542,7 +1557,7 @@ class Collection:
         old_schema = info["meta_schema"]
         assert old_schema.endswith(", mbucket int")
         new_schema = old_schema.replace(
-            ", mbucket int", f", {name} {sql_type}, mbucket int"
+            ", mbucket int", f", {_ddl_name(name)} {sql_type}, mbucket int"
         )
         value = None
         if default is not None:
@@ -1663,7 +1678,6 @@ class Collection:
         limit: "int | None" = None,
         offset: "int | None" = None,
         after_id: "str | None" = None,
-        include_embeddings: bool = False,
         include: "list[str] | None" = None,
     ) -> LocalResult:
         """ChromaDB ``get``, ordered by id: literal ids read only their
@@ -1678,9 +1692,8 @@ class Collection:
         ``include`` is ChromaDB's projection switch, any subset of
         {'documents', 'metadatas', 'embeddings'} (default: documents +
         metadatas, embeddings opt-in — the fat column never rides along
-        unasked, the docvalues split). ``include_embeddings=True`` is the
-        pre-r11 spelling of ``include=[..., 'embeddings']``; it reads
-        only the page's vbucket partitions.
+        unasked, the docvalues split). Asked, embeddings are read from
+        the page's vbucket partitions only.
 
         Returns a ``LocalResult``: its collect() runs on the driver with
         no Spark job and no py4j call, and it stays valid after gc
@@ -1700,8 +1713,6 @@ class Collection:
         unknown = inc - {"documents", "metadatas", "embeddings"}
         if unknown:
             raise ValueError(f"include: unknown items {sorted(unknown)}")
-        if include_embeddings:
-            inc.add("embeddings")
         meta, keep = self._selected(read, info, ids, where, where_document)
         if after_id is not None:
             keep &= pc.greater(meta.column("id"), after_id).to_numpy()

@@ -5,14 +5,13 @@ from .where_dsl import (
     where_document_to_sql,
     where_to_sql,
 )
-from .text import stopword_ratio, whitespace_tokens, word_count
+from .text import stopword_ratio, whitespace_tokens
 
 __all__ = [
     "cosine_similarity",
     "dot_product",
     "l2_distance",
     "whitespace_tokens",
-    "word_count",
     "stopword_ratio",
     "compile_where",
     "compile_where_document",

@@ -71,10 +71,6 @@ def analyze_terms_py(terms, analyzer: str = "raw") -> tuple:
     raise ValueError(f"unknown analyzer {analyzer!r} — expected {ANALYZERS}")
 
 
-def word_count(text: Column) -> Column:
-    return F.size(whitespace_tokens(text))
-
-
 def stopword_ratio(text: Column) -> Column:
     words = whitespace_tokens(F.lower(text))
     n_stop = F.size(F.filter(words, lambda w: w.isin(*STOPWORDS)))

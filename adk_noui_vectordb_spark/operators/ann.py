@@ -39,10 +39,10 @@ from ..sources.tables import load_table
 # component for dimension i is +1/-1 by the parity of the 60-bit md5
 # prefix of "rp|{p}|{i}" (the dedup.py:md5_long seeding pattern applied
 # to cosine LSH; Rademacher hyperplanes are a valid LSH family for
-# angular distance — Charikar, STOC 2002). Sign bits are banded
-# SIMHASH_BANDS-style: RP_PLANES sign bits -> RP_BANDS keys of
-# RP_BAND_BITS bits; two vectors are candidates iff they share a band
-# key with the query.
+# angular distance — Charikar, STOC 2002). The RP_PLANES sign bits are
+# cut into RP_BANDS consecutive bands of RP_BAND_BITS bits each, and each
+# band's bits form one integer key; two vectors are candidates iff they
+# share a band key with the query.
 #
 # Cross-engine exactness: the sign-determining dot product runs over
 # FLOOR-SCALED INTEGER MICRO-UNITS (floor(x*1e6 + 0.5)). Products of micro-unit ints against +-1 are
@@ -445,8 +445,7 @@ def cluster_kmeans(
     spark: SparkSession, sf_dir: str, k: int = 8, iters: int = 2
 ) -> DataFrame:
     """Lloyd's k-means over the embedding corpus — the clustering step of
-    SemDeDup-style curation (cluster, then dedup/select within clusters)
-    and of IVF index training.
+    IVF index training.
 
     Deterministic and oracle-checkable: centroids initialize from the
     first ``k`` vectors by vec_id, run ``iters`` fixed assignment/update

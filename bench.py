@@ -35,8 +35,6 @@ BENCH_KEYS = [
     "dedup_gate_intra_batch",
     "dedup_connected_components",
     "ngram_jaccard_pairs",
-    "simhash_signatures",
-    "dedup_embedding_cosine",
     "dedup_substring_rewrite",
     "chunk_fixed_words",
     "chunk_ast_python",
@@ -44,12 +42,7 @@ BENCH_KEYS = [
     "bm25_topk",
     "bm25_folded_topk_served",
     "chunk_js_elements",
-    "line_dedup_corpus",
-    "pack_sequences",
-    "redact_pii",
-    "lm_perplexity_score",
     "cluster_kmeans",
-    "semdedup_prune",
     "knn_join_ivf_topk",
     "hybrid_weighted_topk",
     # r14 (VERDICT r13 next #7): the r13 cost classes that were not yet
@@ -61,7 +54,6 @@ BENCH_KEYS = [
     "dedup_containment_pairs",
     "dedup_containment_gate",
     "dedup_containment_gate_ingested",
-    "tokenize_bpe_encode",
     # r7 additions
     "dedup_repeated_ngrams",
     "bm25_topk_served",
@@ -70,8 +62,6 @@ BENCH_KEYS = [
     "phrase_topk_served",
     # r10b: batch serving shapes (M queries, one probe + one pass)
     "bm25_batch_topk_served",
-    "lm_bigram_score",
-    "normalize_text_corpus",
     # r10c: ChromaDB-compatible Collection facade + full where DSL
     "collection_query_topk",
     "collection_query_graph_topk",

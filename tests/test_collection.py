@@ -500,7 +500,12 @@ def _reads(coll, q):
     query's scored top 5."""
     return (
         coll.count(),
-        [tuple(r) for r in coll.get(include_embeddings=True).collect()],
+        [
+            tuple(r)
+            for r in coll.get(
+                include=["documents", "metadatas", "embeddings"]
+            ).collect()
+        ],
         [tuple(r) for r in coll.query(q, n_results=5).collect()],
     )
 
@@ -657,7 +662,7 @@ def test_driver_writes_run_no_spark_job(spark, coll):
 
     got = {
         r["id"]: (list(r["embedding"]), r["document"], r["lang"], r["stars"])
-        for r in coll.get(include_embeddings=True).collect()
+        for r in coll.get(include=["documents", "metadatas", "embeddings"]).collect()
     }
     assert got == model
     assert coll.count() == len(model)
@@ -885,7 +890,9 @@ def test_read_rows_equal_spark_collect(spark, tmp_path, monkeypatch):
         "get.where_document": lambda: coll.get(where_document={"$contains": "1"}),
         "get.after_id": lambda: coll.get(where=where, after_id="t05", limit=6),
         "get.offset": lambda: coll.get(offset=3, limit=7),
-        "get.embeddings": lambda: coll.get(ids=["t02", "t07"], include_embeddings=True),
+        "get.embeddings": lambda: coll.get(
+            ids=["t02", "t07"], include=["documents", "metadatas", "embeddings"]
+        ),
         "peek": lambda: coll.peek(5),
     }
 
@@ -1123,7 +1130,7 @@ def test_fsck_and_include_embeddings(spark, coll):
     coll.delete(ids=["f4"])
     checks = coll.fsck()
     assert all(ok for _c, ok, _d in checks), checks
-    got = coll.get(ids=["f2"], include_embeddings=True).head()
+    got = coll.get(ids=["f2"], include=["documents", "metadatas", "embeddings"]).head()
     assert got["embedding"] == pytest.approx([float(x) for x in mat[2]])
     # default path carries no vector payload
     assert "embedding" not in coll.get(ids=["f2"]).columns
@@ -1857,6 +1864,108 @@ def test_add_metadata_column_evolves_the_schema(spark, coll):
         coll.add_metadata_column("tier", "string")
     with pytest.raises(ValueError, match="unsupported"):
         coll.add_metadata_column("blob", "array<double>")
+
+
+def test_metadata_names_need_not_be_identifiers(spark, tmp_path):
+    """A metadata column may be named by any string, as in ChromaDB:
+    ``file-path`` and ``file path`` are stored, reopened, filtered on,
+    upserted, partially updated, widened and compacted like any other
+    name. A root whose columns are plain names keeps the exact
+    ``meta_schema`` string it had, so it reopens and takes the same
+    batches."""
+    import pandas as pd
+    from pyspark.sql.types import (
+        ArrayType,
+        DoubleType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    from adk_noui_vectordb_spark.api.collection import Client
+
+    schema = StructType(
+        [
+            StructField("id", StringType()),
+            StructField("embedding", ArrayType(DoubleType())),
+            StructField("document", StringType()),
+            StructField("file-path", StringType()),
+            StructField("file path", StringType()),
+        ]
+    )
+
+    def batch(ids, mat, paths, spaced, fields=schema.fieldNames()):
+        cols = {
+            "id": ids,
+            "embedding": [np.asarray(v, np.float64) for v in mat],
+            "document": [f"text of {i}" for i in ids],
+            "file-path": paths,
+            "file path": spaced,
+        }
+        sch = StructType([f for f in schema.fields if f.name in fields])
+        return spark.createDataFrame(pd.DataFrame({k: cols[k] for k in fields}), sch)
+
+    cli = Client(spark, str(tmp_path / "names"))
+    mat = _vecs(150, 3)
+    cli.create_collection("odd").add(
+        batch(["a", "b", "c"], mat, ["src/a.py", "src/b.py", "src/c.py"],
+              ["x y", "x y", "z"])
+    )
+    coll = cli.get_collection("odd")
+    assert coll.count() == 3
+    got = coll.get(where={"file-path": "src/b.py"}).collect()
+    assert [r["id"] for r in got] == ["b"]
+    q = [float(x) for x in mat[0]]
+    top = coll.query(q, n_results=3, where={"file path": "x y"}).collect()
+    assert sorted(r["id"] for r in top) == ["a", "b"]
+
+    coll.upsert(batch(["b", "d"], _vecs(151, 2), ["src/b2.py", "src/d.py"], ["w", "z"]))
+    coll.update(batch(["c"], _vecs(152, 1), ["src/c2.py"], None,
+                      fields=["id", "file-path"]))
+    coll.add_metadata_column("start-line", "int", 3)
+    want = {
+        "a": ("src/a.py", "x y", 3),
+        "b": ("src/b2.py", "w", 3),
+        "c": ("src/c2.py", "z", 3),
+        "d": ("src/d.py", "z", 3),
+    }
+
+    def rows(c):
+        return {
+            r["id"]: (r["file-path"], r["file path"], r["start-line"])
+            for r in c.get().collect()
+        }
+
+    assert rows(coll) == want
+    got = coll.get(where={"start-line": 3, "file path": "w"}).collect()
+    assert [r["id"] for r in got] == ["b"]
+    before = _reads(coll, q)
+    coll.compact(threshold=0)
+    assert _reads(coll, q) == before
+    assert rows(cli.get_collection("odd")) == want
+    assert all(ok for _c, ok, _d in coll.fsck()), coll.fsck()
+
+    # a batch whose float embeddings are cast on intake selects its
+    # columns by name: a dotted name is one column, not a struct field
+    dotted = cli.create_collection("dotted")
+    dotted.add(
+        spark.createDataFrame(
+            [("e", [1.0, 2.0], "doc", "v")],
+            "id string, embedding array<float>, document string, `a.b` string",
+        )
+    )
+    assert [r["a.b"] for r in dotted.get().collect()] == ["v"]
+
+    # plain names: the stored schema string is the one roots already hold
+    plain = cli.create_collection("plain")
+    plain.add(_local_batch(spark, ["p0", "p1"], _vecs(153, 2)))
+    assert plain._load_sidecar()["meta_schema"] == (
+        "vec_id bigint, id string, document string, lang string, "
+        "stars int, mbucket int"
+    )
+    reopened = cli.get_collection("plain")
+    reopened.add(_local_batch(spark, ["p2"], _vecs(154, 1)))
+    assert reopened.count() == 3
 
 
 def test_add_metadata_column_casts_default_in_one_job(spark, coll):
@@ -2683,7 +2792,7 @@ def test_commit_seeds_reads_exactly(spark, tmp_path, monkeypatch):
 
     def reads() -> dict:
         results = {
-            "get": coll.get(include_embeddings=True),
+            "get": coll.get(include=["documents", "metadatas", "embeddings"]),
             "probe": coll.query(
                 q,
                 n_results=8,
@@ -2783,7 +2892,7 @@ def test_write_casts_batch_columns_to_stored_types(spark, coll):
             F.col("document").cast("string").alias("document"),
         ).collect()
     }
-    got = coll.get(include_embeddings=True).collect()
+    got = coll.get(include=["documents", "metadatas", "embeddings"]).collect()
     assert {r["id"]: (list(r["embedding"]), r["document"]) for r in got} == want
     assert coll._require()[1]["meta_schema"] == (
         "vec_id bigint, id string, document string, n int, mbucket int"

@@ -1,6 +1,6 @@
-"""Unit + plan tests for the round-3 training-pipeline operators
-(line dedup, sequence packing, PII redaction) and the analytics
-operators that rode along with them.
+"""Unit + plan tests for the dedup operators: canonical selection, the
+duplicate-cluster histogram, the MinHash and containment indexes and
+their ingest gates, and substring rewriting.
 
 Invariant style mirrors test_properties.py: check conservation laws and
 boundary behavior, not golden values (those are the oracle's job).
@@ -8,359 +8,7 @@ boundary behavior, not golden values (those are the oracle's job).
 
 from pyspark.sql import functions as F
 
-from adk_noui_vectordb_spark.operators import textops as tx
-from adk_noui_vectordb_spark.plans import explain_str
-from adk_noui_vectordb_spark.sources.corpus import derived_corpus
 from adk_noui_vectordb_spark.sources.tables import load_table
-
-
-# ---------------------------------------------------------------- line dedup
-
-def test_line_dedup_conserves_lines(spark, sf_dir):
-    """n_kept + n_removed must equal the document's line count exactly."""
-    got = tx.line_dedup_corpus(spark, sf_dir).alias("g")
-    lines = derived_corpus(spark, sf_dir).select(
-        "path", F.size(F.split("content", "\n")).alias("n_lines")
-    ).alias("l")
-    bad = (
-        got.join(lines, "path")
-        .filter(F.col("n_kept") + F.col("n_removed") != F.col("n_lines"))
-        .count()
-    )
-    assert bad == 0
-
-
-def test_line_dedup_identity_at_infinite_threshold(spark, sf_dir):
-    """With an unreachable doc-frequency threshold nothing is boilerplate:
-    every line survives and the cleaned hash equals md5(original)."""
-    got = tx.line_dedup_corpus(spark, sf_dir, min_docs=10**9)
-    assert got.filter(F.col("n_removed") != 0).count() == 0
-    orig = derived_corpus(spark, sf_dir).select(
-        "path", F.md5("content").alias("h")
-    )
-    diff = (
-        got.join(orig, "path")
-        .filter(F.col("clean_hash") != F.col("h"))
-        .count()
-    )
-    assert diff == 0
-
-
-def test_line_dedup_removes_injected_boilerplate(spark, sf_dir):
-    """The derived corpus injects shared header lines across .py files;
-    at the default threshold at least one document loses a line."""
-    got = tx.line_dedup_corpus(spark, sf_dir)
-    assert got.filter(F.col("n_removed") > 0).count() > 0
-
-
-def test_line_dedup_boiler_side_is_broadcast(spark, sf_dir):
-    """The boilerplate set re-enters via a broadcast hash join — the
-    corpus-side pass must never shuffle on the line text."""
-    plan = explain_str(tx.line_dedup_corpus(spark, sf_dir), mode="simple")
-    assert "BroadcastHashJoin" in plan, plan
-
-
-# ------------------------------------------------------------------ packing
-
-def test_pack_sequences_conserves_tokens_and_docs(spark, sf_dir):
-    """Per source: sum(seq_tokens) == total tokens, sum(n_docs) == total
-    docs — packing moves documents, never drops or splits them."""
-    from adk_noui_vectordb_spark.functions.text import word_count
-
-    got = (
-        tx.pack_sequences(spark, sf_dir)
-        .groupBy("source")
-        .agg(
-            F.sum("seq_tokens").alias("packed_tokens"),
-            F.sum("n_docs").alias("packed_docs"),
-        )
-    )
-    want = (
-        load_table(spark, sf_dir, "documents")
-        .groupBy("source")
-        .agg(
-            F.sum(word_count(F.col("text"))).alias("tot_tokens"),
-            F.count(F.lit(1)).alias("tot_docs"),
-        )
-    )
-    bad = (
-        got.join(want, "source")
-        .filter(
-            (F.col("packed_tokens") != F.col("tot_tokens"))
-            | (F.col("packed_docs") != F.col("tot_docs"))
-        )
-        .count()
-    )
-    assert bad == 0
-
-
-def test_pack_sequences_spans_are_disjoint_and_ordered(spark, sf_dir):
-    """Within a source, sequence doc-id spans must be non-overlapping and
-    ascending with seq_id (greedy packing preserves corpus order)."""
-    import pandas as pd  # noqa: F401
-
-    rows = (
-        tx.pack_sequences(spark, sf_dir)
-        .orderBy("source", "seq_id")
-        .collect()
-    )
-    by_source: dict[str, list] = {}
-    for r in rows:
-        by_source.setdefault(r["source"], []).append(r)
-    for seqs in by_source.values():
-        prev_last = None
-        for r in seqs:
-            assert r["first_doc"] <= r["last_doc"]
-            if prev_last is not None:
-                assert r["first_doc"] > prev_last
-            prev_last = r["last_doc"]
-
-
-def test_pack_sequences_budget_overflow_bound(spark, sf_dir):
-    """Every sequence except possibly the last per source must have
-    crossed the budget (greedy fill: a sequence closes only once its
-    cumulative tokens reach the budget boundary)."""
-    budget = 512
-    rows = (
-        tx.pack_sequences(spark, sf_dir, budget=budget)
-        .orderBy("source", "seq_id")
-        .collect()
-    )
-    by_source: dict[str, list] = {}
-    for r in rows:
-        by_source.setdefault(r["source"], []).append(r)
-    for seqs in by_source.values():
-        # cumulative boundary: sequence i starts at floor(cum/budget) == i,
-        # so all but the final sequence carry >= 1 token past their start
-        # boundary; the strong invariant is monotone seq_ids with no gaps
-        ids = [r["seq_id"] for r in seqs]
-        assert ids == sorted(ids)
-        assert ids[0] == 0
-
-
-def test_pack_sequences_window_is_per_source(spark, sf_dir):
-    """The running sum must partition by source — a global (empty
-    partition spec) window would funnel 100 TB through one task."""
-    plan = explain_str(tx.pack_sequences(spark, sf_dir), mode="extended")
-    assert "windowspecdefinition(source" in plan, plan
-
-
-# ---------------------------------------------------------------------- PII
-
-def test_pii_regexes_on_crafted_text(spark):
-    """The three patterns must hit the canonical shapes and nothing else."""
-    df = spark.createDataFrame(
-        [
-            ("a", "mail me at jane.doe@corp.example.org today", 1, 0, 0),
-            ("b", "call +1-555-0123 or +44-202-7946", 0, 2, 0),
-            ("c", "server 10.0.0.1 and 255.255.255.255", 0, 0, 2),
-            ("d", "no pii here, just text 3.14 and v1.2.3", 0, 0, 0),
-        ],
-        "id string, t string, e int, p int, i int",
-    )
-    got = df.select(
-        "id",
-        F.regexp_count("t", F.lit(tx.PII_EMAIL)).alias("ge"),
-        F.regexp_count("t", F.lit(tx.PII_PHONE)).alias("gp"),
-        F.regexp_count("t", F.lit(tx.PII_IPV4)).alias("gi"),
-        "e", "p", "i",
-    ).collect()
-    for r in got:
-        assert (r["ge"], r["gp"], r["gi"]) == (r["e"], r["p"], r["i"]), r
-
-
-def test_redact_pii_injection_counts(spark, sf_dir):
-    """The deterministic injection puts exactly one email in every doc,
-    a phone iff doc_id%3==0, an IP iff doc_id%7==0 (base text is clean)."""
-    got = tx.redact_pii(spark, sf_dir)
-    bad = got.filter(
-        (F.col("n_emails") != 1)
-        | (F.col("n_phones") != (F.col("doc_id") % 3 == 0).cast("int"))
-        | (F.col("n_ips") != (F.col("doc_id") % 7 == 0).cast("int"))
-    ).count()
-    assert bad == 0
-
-
-def test_redact_pii_is_shuffle_free(spark, sf_dir):
-    """Redaction is one narrow projection — no exchange in the plan."""
-    plan = explain_str(tx.redact_pii(spark, sf_dir), mode="simple")
-    assert "Exchange" not in plan, plan
-
-
-# ----------------------------------------------------------- LM perplexity
-
-def test_lm_perplexity_oov_path_exercised(spark, sf_dir):
-    """With the capped vocab some tokens must fall to the OOV floor, and
-    counts stay within bounds; nll is positive (probabilities < 1)."""
-    rows = tx.lm_perplexity_score(spark, sf_dir).collect()
-    assert rows
-    assert all(0 <= r["n_oov"] <= r["n_tokens"] for r in rows)
-    assert sum(r["n_oov"] for r in rows) > 0
-    assert all(r["nll_micro"] > 0 for r in rows)
-
-
-def test_lm_perplexity_full_vocab_has_no_oov(spark, sf_dir):
-    """A vocab cap above the corpus vocabulary means zero OOV tokens."""
-    rows = tx.lm_perplexity_score(spark, sf_dir, vocab_size=10**6).collect()
-    assert sum(r["n_oov"] for r in rows) == 0
-
-
-def test_lm_perplexity_model_is_broadcast(spark, sf_dir):
-    """The capped unigram model must re-enter as a broadcast join; the
-    vocabulary cut must be a TakeOrderedAndProject, not a global sort."""
-    plan = explain_str(tx.lm_perplexity_score(spark, sf_dir), mode="simple")
-    assert "BroadcastHashJoin" in plan, plan
-    assert "TakeOrderedAndProject" in plan, plan
-
-
-def test_lm_bigram_invariants(spark, sf_dir):
-    """Every doc with >= 2 tokens appears with n_bigrams = n_tokens - 1;
-    smoothed probabilities stay < 1 (nll positive) because capped-model
-    contexts are derived from the model itself (c12 <= c1 < c1 + V/2)."""
-    rows = tx.lm_bigram_score(spark, sf_dir).collect()
-    assert rows
-    assert all(r["nll2_micro"] > 0 for r in rows)
-    assert all(0 <= r["n_oov"] <= r["n_bigrams"] for r in rows)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").collect()
-    want = {
-        d["doc_id"]: len(d["text"].split(" ")) - 1
-        for d in docs
-        if len(d["text"].split(" ")) >= 2
-    }
-    assert {r["doc_id"]: r["n_bigrams"] for r in rows} == want
-
-
-def test_lm_bigram_detects_scrambled_word_order(spark, sf_dir):
-    """The bigram score's reason to exist: reversing every document's
-    word order preserves the unigram distribution exactly but breaks
-    transitions — the corpus-mean bigram nll must rise."""
-    from pyspark.sql import functions as F
-
-    import __spark_entry__ as entrymod
-
-    base = tx.lm_bigram_score(spark, sf_dir)
-    mean_orig = base.agg(F.avg("nll2_micro")).head()[0]
-
-    import os
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as tmp:
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        scrambled = docs.withColumn(
-            "text",
-            F.array_join(F.reverse(F.split(F.col("text"), " ")), " "),
-        )
-        scrambled.write.parquet(os.path.join(tmp, "documents.parquet"))
-        mean_scr = (
-            tx.lm_bigram_score(spark, tmp).agg(F.avg("nll2_micro")).head()[0]
-        )
-    assert mean_scr > mean_orig
-
-
-def test_lm_bigram_model_is_broadcast(spark, sf_dir):
-    """Both capped tables (bigram model, derived contexts) re-enter as
-    broadcast joins; the model cut is a TakeOrderedAndProject."""
-    plan = explain_str(tx.lm_bigram_score(spark, sf_dir), mode="simple")
-    assert "BroadcastHashJoin" in plan, plan
-    assert "TakeOrderedAndProject" in plan, plan
-
-
-# ------------------------------------------------------------ mixture sample
-
-def test_mixture_sample_quota_bounds(spark, sf_dir):
-    """Each source fills its quota: selected tokens reach the budget
-    (or the source ran dry) and overflow is at most one document."""
-    rows = tx.mixture_sample(spark, sf_dir).collect()
-    assert rows
-    src_tokens = {
-        r["source"]: r["tot"]
-        for r in load_table(spark, sf_dir, "documents")
-        .groupBy("source")
-        .agg(F.sum(F.size(F.split("text", " "))).alias("tot"))
-        .collect()
-    }
-    for r in rows:
-        exhausted = r["tok_sel"] == src_tokens[r["source"]]
-        assert r["tok_sel"] >= r["budget_tokens"] or exhausted, r
-        # greedy prefix: removing the last doc must drop below budget —
-        # equivalently the pre-final cumulative is < budget, so overflow
-        # is bounded by one document; n_sel is at least 1 given budget>0
-        assert r["n_sel"] >= 1
-
-
-def test_mixture_sample_weights_proportional(spark, sf_dir):
-    """Quota ratio between a weight-3 and a weight-1 source is 3x
-    (floor rounding aside)."""
-    rows = {r["source"]: r["budget_tokens"]
-            for r in tx.mixture_sample(spark, sf_dir).collect()}
-    # src2 -> 2%3+1 = 3; src0 -> 0%3+1 = 1
-    assert rows["src2"] == 3 * rows["src0"] or abs(
-        rows["src2"] - 3 * rows["src0"]) <= 2
-
-
-# ---------------------------------------------------------------- BPE pairs
-
-def test_bpe_pairs_are_two_chars_and_ranked(spark, sf_dir):
-    rows = tx.bpe_pair_counts(spark, sf_dir).collect()
-    assert rows
-    assert all(len(r["pair"]) == 2 for r in rows)
-    vals = [(-(r["cnt"]), r["pair"]) for r in rows]
-    assert vals == sorted(vals)
-
-
-def test_bpe_pair_expansion_runs_on_vocab_not_corpus(spark, sf_dir):
-    """The sequence/substr HOF must sit ABOVE the word-frequency
-    aggregate (distinct vocab), not on the exploded corpus tokens, and
-    the top-N must be a TakeOrderedAndProject."""
-    from adk_noui_vectordb_spark.plans import explain_str
-
-    plan = explain_str(tx.bpe_pair_counts(spark, sf_dir), mode="formatted")
-    assert "TakeOrderedAndProject" in plan, plan
-    # the explode of pairs appears after (above) the first HashAggregate
-    gen_pos = plan.find("Generate")
-    agg_pos = plan.find("HashAggregate")
-    assert gen_pos != -1 and agg_pos != -1
-
-
-def test_bpe_encode_matches_independent_python(spark, sf_dir):
-    """The chained-replace encoding must equal a from-scratch Python BPE
-    apply (word -> char sequence, merges in rank order, str.replace) on
-    every document — symbol counts AND the exact encoded text hash."""
-    import hashlib
-
-    from adk_noui_vectordb_spark.sources.tables import load_table
-
-    merges = [
-        r["pair"] for r in tx.bpe_pair_counts(spark, sf_dir, top_n=8).collect()
-    ]
-    got = {
-        r["doc_id"]: (r["n_words"], r["n_symbols"], r["encoded_hash"])
-        for r in tx.tokenize_bpe_encode(spark, sf_dir).collect()
-    }
-    docs = {
-        r["doc_id"]: r["text"]
-        for r in load_table(spark, sf_dir, "documents").collect()
-    }
-    assert set(got) == set(docs)
-    for doc_id, text in docs.items():
-        ws = text.split(" ")
-        enc = "\n".join(" ".join(w) for w in ws)
-        for p in merges:
-            enc = enc.replace(p[0] + " " + p[1], p)
-        n_symbols = enc.count(" ") + len(ws)
-        expect = (len(ws), n_symbols, hashlib.md5(enc.encode()).hexdigest())
-        assert got[doc_id] == expect, (doc_id, got[doc_id], expect)
-
-
-def test_bpe_encode_plan_is_shuffle_free_scan(spark, sf_dir):
-    """The encode pass itself must be a pure projection over the text
-    scan — the only shuffle in the WHOLE plan is the trainer's pair
-    aggregation, which runs once driver-side before the plan is built,
-    so the final encode plan has no Exchange at all."""
-    from adk_noui_vectordb_spark.plans import explain_str
-
-    plan = explain_str(tx.tokenize_bpe_encode(spark, sf_dir), mode="simple")
-    assert "Exchange" not in plan, plan
 
 
 # -------------------------------------------------------- canonical selection
@@ -392,35 +40,6 @@ def test_canonical_selection_windows_share_partitioning(spark, sf_dir):
     import re
     assert plan.count("Window") >= 1
     assert not re.search(r"Window[^\n]*\n[^\n]*Exchange[^\n]*\n[^\n]*Window", plan), plan
-
-
-# -------------------------------------------------------------- normalize
-
-def test_normalize_text_is_idempotent_and_clean(spark, sf_dir):
-    """normalize(normalize(x)) == normalize(x); the output contains only
-    [a-z0-9 ] single-spaced, and the reported token count matches the
-    normalized text. (Normalization CAN grow the token count — 'a.b'
-    becomes 'a b' — so no monotonicity is claimed.)"""
-    import re
-
-    rows = tx.normalize_text_corpus(spark, sf_dir).collect()
-    assert rows
-    pat = re.compile(r"^[a-z0-9]+( [a-z0-9]+)*$|^$")
-    for r in rows:
-        t = r["norm_text"]
-        assert pat.match(t), repr(t[:80])
-        # idempotence replayed in Python with the same semantics
-        again = re.sub(r"  +", " ", re.sub(r"[^a-z0-9 ]", " ", t.lower())).strip()
-        assert again == t
-        assert r["n_tokens_norm"] == len(t.split(" "))
-
-
-def test_normalize_text_plan_has_no_shuffle(spark, sf_dir):
-    """A normalization pass must be one narrow codegen'd projection —
-    any Exchange in this plan would shuffle the whole corpus for
-    nothing."""
-    plan = explain_str(tx.normalize_text_corpus(spark, sf_dir), mode="simple")
-    assert "Exchange" not in plan, plan
 
 
 # ------------------------------------------------------ cluster histogram

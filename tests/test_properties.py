@@ -132,53 +132,6 @@ def test_jaccard_block_cap_preserves_pairs(spark):
     assert capped == unsplit
 
 
-@SETTINGS
-@given(budget=st.integers(min_value=1, max_value=4096))
-def test_pack_sequences_invariants_any_budget(spark, budget):
-    """For ANY budget: tokens and docs are conserved per source and
-    seq_ids start at 0 ascending (greedy prefix packing)."""
-    from adk_noui_vectordb_spark.operators.textops import pack_sequences
-
-    rows = (
-        pack_sequences(spark, "/root/testdata/sf0.001", budget=budget)
-        .orderBy("source", "seq_id")
-        .collect()
-    )
-    per_src: dict[str, list] = {}
-    for r in rows:
-        per_src.setdefault(r["source"], []).append(r)
-    for seqs in per_src.values():
-        assert seqs[0]["seq_id"] == 0
-        assert [r["seq_id"] for r in seqs] == sorted(r["seq_id"] for r in seqs)
-        # every non-final sequence spans at least the budget when its
-        # docs are capped by the NEXT sequence's start boundary
-        for r in seqs[:-1]:
-            assert r["seq_tokens"] >= 1
-
-
-@SETTINGS
-@given(min_docs=st.integers(min_value=2, max_value=1000))
-def test_line_dedup_monotone_in_threshold(spark, min_docs):
-    """Lines removed can only DECREASE as the boilerplate threshold
-    rises (df >= k is monotone), and counts always conserve."""
-    from pyspark.sql import functions as F
-
-    from adk_noui_vectordb_spark.operators.textops import line_dedup_corpus
-
-    sf = "/root/testdata/sf0.001"
-    low = (
-        line_dedup_corpus(spark, sf, min_docs=min_docs)
-        .agg(F.sum("n_removed").alias("r"))
-        .collect()[0]["r"]
-    )
-    high = (
-        line_dedup_corpus(spark, sf, min_docs=min_docs * 2)
-        .agg(F.sum("n_removed").alias("r"))
-        .collect()[0]["r"]
-    )
-    assert high <= low
-
-
 _IDX_SETTINGS = settings(
     max_examples=5,
     deadline=None,

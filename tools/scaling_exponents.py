@@ -31,19 +31,12 @@ KEYS = {
     "dedup_minhash_pairs": "documents",
     "dedup_connected_components": "documents",
     "ngram_jaccard_pairs": "documents",
-    "simhash_signatures": "documents",
-    "dedup_embedding_cosine": "embeddings",
-    "semdedup_prune": "embeddings",
     "cluster_kmeans": "embeddings",
     "knn_topk": "embeddings",
-    "tokenize_bpe_encode": "documents",
-    "dedup_simhash_pairs": "documents",
     "dedup_substring_rewrite": "documents",
     # r7b additions
     "bm25_topk_served": "documents",
     "bm25_folded_topk_served": "documents",
-    "lm_bigram_score": "documents",
-    "normalize_text_corpus": "documents",
     "dedup_repeated_ngrams": "documents",
     # r7c additions
     "dup_cluster_size_histogram": "documents",
