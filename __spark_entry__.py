@@ -171,6 +171,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_connected_components": _dedup.dedup_connected_components,
         "dedup_canonical_selection": _dedup.dedup_canonical_selection,
         "minhash_jaccard_estimate": _dedup.minhash_jaccard_estimate,
+        "dedup_simhash_pairs": _dedup.dedup_simhash_pairs,
         "ngram_jaccard_pairs": _dedup.ngram_jaccard_pairs,
         # r14: asymmetric subset-duplication — word-set CONTAINMENT over
         # PPJoin prefix-filtered candidates (Xiao et al. WWW 2008); the
@@ -190,6 +191,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_containment_gate_ingested": (
             _dedup.dedup_containment_gate_ingested
         ),
+        "simhash_signatures": _dedup.simhash_signatures,
+        "dedup_embedding_cosine": _dedup.dedup_embedding_cosine,
+        "semdedup_prune": _dedup.semdedup_prune,
         # r7: n-gram-granularity exact-substring dedup analysis
         # (Lee et al. 2021, arXiv:2107.06499)
         "dedup_repeated_ngrams": _dedup.dedup_repeated_ngrams,
@@ -377,7 +381,7 @@ def _kmeans_ctes(
     operators/ann.py _lloyd exactly: 6-dp-rounded squared-L2 argmin with
     cluster tie-break, 6-dp-rounded per-dim centroid means. Returns
     (cte_list, final_assignment_select) so callers (``_kmeans_sql``,
-    ``_ivf_sampled_sql``) can extend the chain;
+    ``_semdedup_sql``, ``_ivf_sampled_sql``) can extend the chain;
     ``tag`` suffixes every CTE name and ``emb_sql`` is the vector
     expression."""
     dist = (
@@ -1071,6 +1075,30 @@ _GRAPH_MAT = {
     "ghubs", "ghv", "gstar", "ghedges", "gfwd", "grev", "gedges",
 }
 
+def _semdedup_sql(k: int = 8, iters: int = 2, thr: float = 0.35) -> str:
+    """SemDeDup oracle: extend the k-means CTE chain with a within-cluster
+    pairwise-cosine prune (operators/dedup.py semdedup_prune). A vector is
+    pruned when a lower-vec_id cluster-mate has round(cos, 4) >= thr."""
+    cos = _COS.format(a="va.emb", b="vb.emb")
+    ctes, final = _kmeans_ctes(k, iters)
+    ctes.append(f"asg AS (\n{final})")
+    ctes.append(
+        "v AS (SELECT a.vec_id, a.cluster, e.emb FROM asg a JOIN e USING (vec_id))"
+    )
+    ctes.append(
+        f"""pruned AS (
+  SELECT DISTINCT vb.vec_id FROM v va JOIN v vb
+  ON va.cluster = vb.cluster AND va.vec_id < vb.vec_id
+  WHERE {cos} >= {thr})"""
+    )
+    return (
+        "WITH " + ",\n".join(ctes) + """
+SELECT v.vec_id, v.cluster,
+       CASE WHEN p.vec_id IS NULL THEN 1 ELSE 0 END AS keep
+FROM v LEFT JOIN pruned p ON v.vec_id = p.vec_id
+"""
+    )
+
 
 def _knn_sql(extra_where: str = "") -> str:
     cos = _COS.format(a="e.embedding", b="q.q_emb")
@@ -1161,6 +1189,33 @@ bands AS (
 )
 """
 )
+
+
+def _simhash_sql() -> str:
+    bit_sums = ",\n        ".join(
+        f"sum(CASE WHEN (h >> {i}) & 1 = 1 THEN 1 ELSE -1 END) AS s{i}"
+        for i in range(_dedup.SIMHASH_BITS)
+    )
+    recompose = " + ".join(
+        f"CASE WHEN s{i} > 0 THEN {1 << i} ELSE 0 END"
+        for i in range(_dedup.SIMHASH_BITS)
+    )
+    return f"""
+WITH grams AS (
+    SELECT DISTINCT doc_id, g FROM (
+        SELECT d.doc_id, array_to_string(d.parts[t.i:t.i+1], ' ') AS g
+        FROM (SELECT doc_id, string_split(text, ' ') AS parts FROM documents) d,
+             LATERAL (SELECT unnest(generate_series(1, greatest(len(d.parts) - 1, 1))) AS i) t
+    )
+), h AS (
+    SELECT doc_id, CAST(('0x' || substr(md5(g), 1, 15)) AS BIGINT) AS h FROM grams
+), bits AS (
+    SELECT doc_id,
+        {bit_sums}
+    FROM h GROUP BY doc_id
+)
+SELECT doc_id, CAST({recompose} AS BIGINT) AS simhash FROM bits
+"""
 
 
 _ELEMENTS_CTE = (
@@ -1323,6 +1378,7 @@ SELECT doc_id, CAST(pos // 20 AS INTEGER) AS chunk_id,
 FROM w GROUP BY doc_id, CAST(pos // 20 AS INTEGER)
 """,
         "cluster_kmeans": _kmeans_sql(),
+        "semdedup_prune": _semdedup_sql(),
         "dedup_exact": """
 SELECT md5(text) AS text_hash, min(doc_id) AS keep_id, count(*) AS dup_count
 FROM documents GROUP BY 1
@@ -1777,6 +1833,7 @@ SELECT d.doc_id, CAST(len(d.w) AS INTEGER) AS n_tokens,
        coalesce(c.clean_md5, md5('')) AS clean_md5
 FROM d LEFT JOIN clean c USING (doc_id) LEFT JOIN rem r USING (doc_id)
 """,
+        "simhash_signatures": _simhash_sql(),
         "minhash_jaccard_estimate": f"""
 WITH {_MINHASH_BANDS_CTE},
 cand AS (
@@ -1791,6 +1848,31 @@ FROM cand c
 JOIN sigs sa ON sa.doc_id = c.doc_a
 JOIN sigs sb ON sb.doc_id = c.doc_b AND sb.hash_idx = sa.hash_idx
 GROUP BY c.doc_a, c.doc_b
+""",
+        "dedup_simhash_pairs": f"""
+WITH sig AS ({_simhash_sql()}),
+bands AS (
+    SELECT doc_id, simhash, t.band,
+           (simhash >> (t.band * {_dedup.SIMHASH_BAND_BITS})) & {_dedup.SIMHASH_BAND_MASK} AS band_val
+    FROM sig, LATERAL (SELECT unnest([{', '.join(str(b) for b in range(_dedup.SIMHASH_BANDS))}]) AS band) t
+),
+cand AS (
+    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
+           a.simhash AS sig_a, b.simhash AS sig_b
+    FROM bands a JOIN bands b
+      ON a.band = b.band AND a.band_val = b.band_val AND a.doc_id < b.doc_id
+)
+SELECT doc_a, doc_b, CAST(bit_count(xor(sig_a, sig_b)) AS INTEGER) AS hamming
+FROM cand WHERE bit_count(xor(sig_a, sig_b)) <= 3
+""",
+        "dedup_embedding_cosine": f"""
+WITH pairs AS (
+    SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
+           {cos_ab} AS cosine
+    FROM embeddings a JOIN embeddings b
+      ON a.label = b.label AND a.vec_id < b.vec_id
+)
+SELECT vec_a, vec_b, cosine FROM pairs WHERE cosine >= 0.35
 """,
         "project_searchable_text": f"""
 WITH {_ELEMENTS_CTE}

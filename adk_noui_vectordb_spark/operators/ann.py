@@ -445,7 +445,8 @@ def cluster_kmeans(
     spark: SparkSession, sf_dir: str, k: int = 8, iters: int = 2
 ) -> DataFrame:
     """Lloyd's k-means over the embedding corpus — the clustering step of
-    IVF index training.
+    SemDeDup-style curation (cluster, then dedup/select within clusters)
+    and of IVF index training.
 
     Deterministic and oracle-checkable: centroids initialize from the
     first ``k`` vectors by vec_id, run ``iters`` fixed assignment/update

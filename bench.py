@@ -35,6 +35,8 @@ BENCH_KEYS = [
     "dedup_gate_intra_batch",
     "dedup_connected_components",
     "ngram_jaccard_pairs",
+    "simhash_signatures",
+    "dedup_embedding_cosine",
     "dedup_substring_rewrite",
     "chunk_fixed_words",
     "chunk_ast_python",
@@ -43,6 +45,7 @@ BENCH_KEYS = [
     "bm25_folded_topk_served",
     "chunk_js_elements",
     "cluster_kmeans",
+    "semdedup_prune",
     "knn_join_ivf_topk",
     "hybrid_weighted_topk",
     # r14 (VERDICT r13 next #7): the r13 cost classes that were not yet

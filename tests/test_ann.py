@@ -31,6 +31,60 @@ def test_kmeans_k1_is_single_cluster(spark, sf_dir):
     assert got.filter(F.col("cluster") != 0).count() == 0
 
 
+def test_semdedup_keep_rule(spark, sf_dir):
+    """Brute-force re-check of the SemDeDup keep rule: a vector is pruned
+    iff a lower-vec_id vector in the SAME cluster has round(cos,4) >= thr."""
+    import numpy as np
+
+    from adk_noui_vectordb_spark.operators.dedup import semdedup_prune
+    from adk_noui_vectordb_spark.sources.tables import load_table
+
+    thr = 0.35
+    got = {
+        r["vec_id"]: (r["cluster"], r["keep"])
+        for r in semdedup_prune(spark, sf_dir, threshold=thr).collect()
+    }
+    emb = {
+        r["vec_id"]: np.asarray(r["embedding"], dtype=np.float64)
+        for r in load_table(spark, sf_dir, "embeddings").collect()
+    }
+    assert set(got) == set(emb)
+    for vid, (cluster, keep) in got.items():
+        mates = [
+            o
+            for o, (c, _) in got.items()
+            if c == cluster and o < vid
+        ]
+        v = emb[vid]
+        has_dup = any(
+            round(
+                float(np.dot(emb[o], v))
+                / (np.linalg.norm(emb[o]) * np.linalg.norm(v)),
+                4,
+            )
+            >= thr
+            for o in mates
+        )
+        assert keep == (0 if has_dup else 1), f"vec {vid}: keep={keep}"
+
+
+def test_semdedup_prunes_planted_dups(spark, sf_dir):
+    """The testdata plants near-dup embedding pairs (cosine >= 0.35);
+    SemDeDup must prune a non-trivial set while keeping every cluster's
+    canonical (minimum vec_id) member."""
+    from pyspark.sql import functions as F
+
+    from adk_noui_vectordb_spark.operators.dedup import semdedup_prune
+
+    df = semdedup_prune(spark, sf_dir)
+    pruned = df.filter(F.col("keep") == 0).count()
+    assert pruned > 0
+    # the lowest vec_id of every cluster is by construction never pruned
+    firsts = df.groupBy("cluster").agg(F.min("vec_id").alias("vec_id"))
+    bad = df.join(firsts, ["cluster", "vec_id"]).filter(F.col("keep") == 0)
+    assert bad.count() == 0
+
+
 def test_kmeans_broadcast_assignment_equals_literal(spark, sf_dir, monkeypatch):
     """Above CENTROID_LITERAL_MAX_KDIM the assignment switches to
     sparkContext.broadcast + Arrow argmin (VERDICT r5 item 3); the two

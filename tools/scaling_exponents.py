@@ -31,8 +31,12 @@ KEYS = {
     "dedup_minhash_pairs": "documents",
     "dedup_connected_components": "documents",
     "ngram_jaccard_pairs": "documents",
+    "simhash_signatures": "documents",
+    "dedup_embedding_cosine": "embeddings",
+    "semdedup_prune": "embeddings",
     "cluster_kmeans": "embeddings",
     "knn_topk": "embeddings",
+    "dedup_simhash_pairs": "documents",
     "dedup_substring_rewrite": "documents",
     # r7b additions
     "bm25_topk_served": "documents",
